@@ -107,10 +107,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # small, an executor/driver OOM once it is not (e.g. customer at sf100+).
 # 256 MB of compressed parquet ≈ 1-2 GB hashed relation: inside Spark's
 # 8 GB broadcast cap with headroom, and past it AQE/autoBroadcastThreshold
-# make the call from runtime sizes instead. Env-tunable for clusters.
-BROADCAST_HINT_CAP_BYTES = int(
-    os.environ.get("SPARK_GRAFT_BROADCAST_HINT_CAP_BYTES", str(256 << 20))
-)
+# make the call from runtime sizes instead.
+BROADCAST_HINT_CAP_BYTES = 256 << 20
 
 
 def source_bytes(sf_dir: str, name: str) -> int:

@@ -55,27 +55,19 @@ _TABLE: dict[str, _TableMacro] = {}
 
 def _subst(body: str, params: list[str], args: list[str], defaults: dict[str, str]) -> str:
     """Substitute parameter names with argument text, whole-token only,
-    outside string literals (the reference binder substitutes expression
-    trees — whole-token textual substitution is the text-level analog)."""
+    outside string literals and comments (the reference binder substitutes
+    expression trees — whole-token textual substitution is the text-level
+    analog)."""
     if len(args) < len([p for p in params if p not in defaults]) or len(args) > len(params):
         raise ValueError(f"macro expects {len(params)} args, got {len(args)}")
+    from myduckdb_spark.sql import _sub_code
+
     binding = dict(defaults)
     binding.update(dict(zip(params, args)))
-    # mask literals so 'text with param name' survives
-    lit = re.compile(r"'(?:[^']|'')*'")
-    masked: list[str] = []
-
-    def _mask(m: re.Match) -> str:
-        masked.append(m.group(0))
-        return f"\x00{len(masked) - 1}\x00"
-
-    out = lit.sub(_mask, body)
     # single simultaneous pass: sequential per-param substitution would
     # re-substitute a parameter name appearing inside another argument's text
-    alt = re.compile(r"\b(" + "|".join(re.escape(p) for p in binding) + r")\b")
-    out = alt.sub(lambda m: f"({binding[m.group(1)]})", out)
-    out = re.sub(r"\x00(\d+)\x00", lambda m: masked[int(m.group(1))], out)
-    return out
+    alt = r"\b(" + "|".join(re.escape(p) for p in binding) + r")\b"
+    return _sub_code(alt, lambda m: f"({binding[m.group(1)]})", body)
 
 
 def create_macro(name: str, params: list[str], body: str, **defaults: str) -> Callable[..., Column]:

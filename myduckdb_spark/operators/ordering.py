@@ -26,8 +26,6 @@ the physical partitioning differs.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
 # One task sorts at most this many (narrow) rows on the small-sort path.
@@ -36,9 +34,7 @@ from pyspark.sql import DataFrame
 # (1.86s vs 1.48s) — funnelling 1.5M rows through one reducer costs more
 # than the range sort's sampling pass saves. 500k splits the measured
 # points with margin and keeps the single task's sort buffer ≪ memory.
-SMALL_SORT_MAX_ROWS = int(
-    os.environ.get("SPARK_GRAFT_SMALL_SORT_MAX_ROWS", str(500_000))
-)
+SMALL_SORT_MAX_ROWS = 500_000
 
 
 def sorted_tiny(df: DataFrame, *cols) -> DataFrame:

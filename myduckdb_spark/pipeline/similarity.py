@@ -50,9 +50,7 @@ def dot_scaled_long_expr(a: str, b: str) -> F.Column:
 # to the driver and broadcast as one float64 matrix (cap·dim·8 bytes —
 # 64 dims → 32 MB at the cap). Above it (or on an exotic corpus the
 # vectorized kernel cannot score bit-exactly) the pure-JVM HOF path runs.
-_NUMPY_SCORE_MAX_PROBES = int(
-    __import__("os").environ.get("SPARK_GRAFT_TOPK_NUMPY_MAX_PROBES", "65536")
-)
+_NUMPY_SCORE_MAX_PROBES = 65536
 # ... and a FLOOR on the expected pair count: the numpy path pays a fixed
 # ~0.3-0.5s (probe-collect job + Python worker spin-up + Arrow traffic),
 # so tiny workloads keep the JVM HOF (measured at dim 64: 80k pairs →
@@ -60,42 +58,29 @@ _NUMPY_SCORE_MAX_PROBES = int(
 # compute crossover is ~200k pairs — 500k adds margin for cold workers).
 # Callers pass the corpus row count from parquet footers; without a hint
 # the pair count is unknown and the JVM path (prior behaviour) runs.
-_NUMPY_SCORE_MIN_PAIRS = int(
-    __import__("os").environ.get("SPARK_GRAFT_TOPK_NUMPY_MIN_PAIRS", "500000")
-)
-
-
-def _round_half_up_i64(t):
-    """Vectorized replica of Spark's round(double) → BIGINT.
-
-    Spark's Round is HALF_UP on BigDecimal(Double.toString(t)). For
-    |t| < 2^52 every half-integer X.5 is exactly representable as a
-    double, so the shortest decimal repr of t crosses an X.5 boundary iff
-    t itself does — HALF_UP on the string equals HALF_UP on the true
-    binary value, which this computes exactly: frac = t - floor(t) is an
-    exact float op, and the away-from-zero tie goes up on frac >= 0.5."""
-    import numpy as np
-
-    a = np.abs(t)
-    fl = np.floor(a)
-    r = fl + (a - fl >= 0.5)
-    return (np.sign(t) * r).astype(np.int64)
+_NUMPY_SCORE_MIN_PAIRS = 500_000
 
 
 def _numpy_pair_dots(c: DataFrame, probe_rows, dim: int) -> DataFrame:
     """All (corpus row × probe) scaled-integer dot products, computed by
     numpy on whole Arrow batches (guide §4.2) — BIT-IDENTICAL to
     `dot_scaled_long_expr`: per element, (x·y) then ·1e15 are the same
-    two IEEE float64 ops; the HALF_UP rounding matches Spark's (see
-    `_round_half_up_i64`); the int64 per-pair sum is the same exact long
+    two IEEE float64 ops; the int64 per-pair sum is the same exact long
     arithmetic. Division by the norms and the final round(·, 6) stay in
-    the JVM so every downstream float op is byte-for-byte the old plan."""
+    the JVM so every downstream float op is byte-for-byte the old plan.
+
+    The HALF_UP rounding matches Spark's round(double) → BIGINT, which is
+    HALF_UP on BigDecimal(Double.toString(t)). For |t| < 2^52 every
+    half-integer X.5 is exactly representable as a double, so the
+    shortest decimal repr of t crosses an X.5 boundary iff t itself does —
+    HALF_UP on the string equals HALF_UP on the true binary value, which
+    the kernel computes exactly: frac = |t| - floor(|t|) is an exact float
+    op, and the away-from-zero tie goes up on frac >= 0.5."""
     import numpy as np
 
     pid = np.asarray([r["probe_id"] for r in probe_rows], dtype=np.int64)
     pm = np.asarray([r["pv"] for r in probe_rows], dtype=np.float64)
     pn = np.asarray([r["p_norm"] for r in probe_rows], dtype=np.float64)
-    npr = len(pid)
     bc = c.sparkSession.sparkContext.broadcast((pid, pm, pn))
 
     def score(batches):

@@ -127,132 +127,6 @@ R10_PRIORITY = (
     "fn_timetz_battery", "fn_union_battery", "dml_roundtrip",
 )
 
-R09_PRIORITY = (
-    # the 51 queries OUTSIDE the r8 driver window lead this round, so no
-    # query's last driver row is older than two rounds. The 5 whose last
-    # row was r6 go first.
-    "join_cross_product", "limit_offset_page", "sample_deterministic",
-    "unpivot_part_measures", "win_ranking",
-    # r7-window queries (r8 skipped them), incl. every path touched this
-    # round: fn_struct_map_battery (map-subscript list semantics),
-    # fn_blob_battery (BLOB \xNN ingest/compare), dedup_minhash_lsh
-    # (conditional verify broadcast), plus the TPC-H/window/join set.
-    "agg_distinct_and_filter", "agg_rollup", "agg_cube",
-    "agg_grouping_sets", "agg_min_max_by", "agg_string_agg_ordered",
-    "agg_stats_exact", "agg_median_quantile", "agg_mode_deterministic",
-    "agg_bool_bit", "agg_collect_histogram", "agg_regression",
-    "agg_mad_topk",
-    "q01_pricing_summary", "q03_top_revenue_orders",
-    "q05_local_supplier_volume", "q06_forecast_revenue",
-    "q10_returned_items", "groupjoin_order_items", "amus_theta_join",
-    "fn_string_battery", "fn_math_battery", "fn_struct_map_battery",
-    "fn_blob_battery",
-    "join_left_outer_counts", "join_full_outer", "join_semi", "join_anti",
-    "join_mark_in_subquery", "join_single_scalar_subquery",
-    "join_positional", "join_range_theta",
-    "dedup_minhash_lsh", "sim_topk_bruteforce", "text_token_stats",
-    "tableinout_normalize", "stream_window_counts_batch",
-    "order_nulls_parity", "q12_priority_shipping",
-    "win_lead_lag", "win_running_frames", "win_range_frame",
-    "win_qualify_topk", "win_exclude_current_row",
-    "win_exclude_group_ties", "win_share_of_group",
-)
-
-R07_PRIORITY = (
-    # code paths TOUCHED this round: registry epoch() now returns DOUBLE
-    # seconds (fractional) and epoch_ns exists — re-prove the datetime
-    # battery; percentile/median SQL rewrite changed — re-prove the
-    # median/quantile battery
-    "fn_datetime_battery", "agg_median_quantile",
-    # stale: every query whose latest green driver row is r5 (r6
-    # verified the other 50) — rotates the full registry through the
-    # window every two rounds
-    "fn_list_battery", "fn_json_battery",
-    "win_lead_lag", "win_running_frames", "win_range_frame",
-    "win_qualify_topk", "win_exclude_current_row", "win_exclude_group_ties",
-    "win_share_of_group", "agg_distinct_and_filter", "agg_rollup",
-    "agg_cube", "agg_grouping_sets", "agg_min_max_by",
-    "agg_string_agg_ordered", "agg_stats_exact",
-    "agg_mode_deterministic", "agg_bool_bit", "agg_collect_histogram",
-    "agg_regression", "agg_mad_topk", "q01_pricing_summary",
-    "q03_top_revenue_orders", "q05_local_supplier_volume",
-    "q06_forecast_revenue", "q10_returned_items", "groupjoin_order_items",
-    "amus_theta_join", "fn_string_battery", "fn_math_battery",
-    "fn_struct_map_battery", "fn_union_battery",
-    "fn_blob_battery", "join_left_outer_counts", "join_full_outer",
-    "join_semi", "join_anti", "join_mark_in_subquery",
-    "join_single_scalar_subquery", "join_positional", "join_range_theta",
-    "dedup_minhash_lsh", "sim_topk_bruteforce", "text_token_stats",
-    "tableinout_normalize", "stream_window_counts_batch",
-    "order_nulls_parity", "q12_priority_shipping",
-    # 51st slot — overflows the 50-query window; r4-green ranking query
-    # judge-strict-verified in r6, its code path unchanged this round
-    "win_ranking",
-)
-
-R06_PRIORITY = (
-    # code paths TOUCHED this round (ADVICE r5 fixes: collate-in-call,
-    # asof no-key persist, UPDATE...FROM scratch cleanup, array_agg
-    # ORDER BY comparator) — must re-prove green
-    # (agg_string_agg_ordered / agg_collect_histogram are native
-    # DataFrame builders — the array_agg SQL-front-door fix doesn't
-    # touch them, and they greened in r5)
-    "collate_nocase_noaccent", "join_asof_purchase_click",
-    "dml_roundtrip", "upsert_on_conflict",
-    # stale: every other query whose latest green driver row is r4 or
-    # older (r5 verified the other 50) — rotates the full registry
-    # through the window every two rounds
-    "join_cross_product", "agg_approx", "fn_timetz_battery",
-    "dedup_exact", "dedup_ngram_jaccard", "dedup_simhash",
-    "dedup_embedding_cosine", "sim_topk_lsh", "sim_topk_ivf",
-    "sim_lsh_recall", "text_quality_scores", "text_lang_id_confusion",
-    "text_fingerprint", "multimodal_features", "decontam_ngram_overlap",
-    "pii_scrub_counts", "text_repetition_stats", "setop_union_distinct",
-    "setop_except_intersect", "setop_all_variants", "sample_deterministic",
-    "limit_offset_page", "pivot_status_counts", "unpivot_part_measures",
-    "unnest_tokens", "values_and_series", "date_series_buckets",
-    "recursive_cte_series", "interval_arithmetic", "seq_bulk_ids",
-    "q02_best_supplier_per_nation", "q04_order_priority_check",
-    "q07_volume_shipping", "q08_market_share", "q09_product_type_profit",
-    "q11_important_parts", "q13_customer_order_distribution",
-    "q14_promo_effect", "q15_top_supplier", "q16_supplier_part_counts",
-    "q17_small_quantity_revenue", "q18_large_volume_customers",
-    "q19_discounted_revenue", "q20_excess_inventory_suppliers",
-    "q21_waiting_suppliers", "q22_global_sales_opportunity",
-    # 51st slot — overflows the 50-query window; r4-green ranking-window
-    # query on an unchanged code path, safe to age one more round
-    "win_ranking",
-)
-
-R05_PRIORITY = (
-    # implementation/oracle TOUCHED this round (list_sum type dispatch,
-    # json_transform) — must re-prove green
-    "fn_list_battery", "fn_json_battery",
-    # stale: last driver-verified in r2/r3 (green then; judge strict
-    # re-verified 30 of them in r4) — rotating every registered query
-    # through the 50-slot window so no green row ages past two rounds
-    "win_lead_lag", "win_running_frames", "win_range_frame",
-    "win_qualify_topk", "win_exclude_current_row", "win_exclude_group_ties",
-    "win_share_of_group", "agg_distinct_and_filter", "agg_rollup",
-    "agg_cube", "agg_grouping_sets", "agg_min_max_by",
-    "agg_string_agg_ordered", "agg_stats_exact", "agg_median_quantile",
-    "agg_mode_deterministic", "agg_bool_bit", "agg_collect_histogram",
-    "agg_regression", "agg_mad_topk", "q01_pricing_summary",
-    "q03_top_revenue_orders", "q05_local_supplier_volume",
-    "q06_forecast_revenue", "q10_returned_items", "groupjoin_order_items",
-    "amus_theta_join", "fn_string_battery", "fn_math_battery",
-    "fn_datetime_battery", "fn_struct_map_battery", "fn_union_battery",
-    "fn_blob_battery", "join_left_outer_counts", "join_full_outer",
-    "join_semi", "join_anti", "join_mark_in_subquery",
-    "join_single_scalar_subquery", "join_positional", "join_range_theta",
-    "dedup_minhash_lsh", "sim_topk_bruteforce", "text_token_stats",
-    "tableinout_normalize", "stream_window_counts_batch",
-    "order_nulls_parity", "q12_priority_shipping",
-    # 51st slot — overflows the 50-query window; trivial CROSS JOIN the
-    # judge strict-re-verified in r4, safe to age one more round
-    "join_cross_product",
-)
-
 
 def _ordered_names() -> list[str]:
     names = list(REGISTRY)

@@ -2,23 +2,31 @@
 SURVEY.md §3 — all replaced by spark.sql).
 
 ``sql()`` registers the catalog views and runs the text through Spark SQL
-after a dialect-translation pass for the DuckDB-isms that appear in the
-reference's test corpus (reference parser surface: src/parser/parser.cpp:190,
-transformer under src/parser/transform/).
+after a dialect-translation pass, ``translate()``, for the DuckDB-isms that
+appear in the reference's test corpus (reference parser surface:
+src/parser/parser.cpp:190, transformer under src/parser/transform/).
 
-The translator is intentionally small but *token-aware*, not blind regex:
+The translator is text-level but *token-aware*, not blind regex. Every
+pass rests on the lexer section at the top of this module, the one place
+that knows where string literals and comments are:
 
-* string literals and comments are masked first — nothing inside them is
+* ``_code_mask(text)`` — one ``_LITERAL`` scan per text, giving an O(1)
+  "is this position code?" lookup; nothing inside a literal or comment is
   ever rewritten;
-* function-name rewrites fire only on call sites (``name(``) outside
-  literals;
-* argument-sensitive forms (``len``, ``list_sort`` comparators,
-  ``list_reverse_sort``) are rewritten with a balanced-paren argument
-  parser, so nested calls and commas in subexpressions are handled;
-* the JSON arrow rewrite distinguishes ``j -> '$.k'`` from a lambda arrow
-  (``x -> 'y'`` inside transform/filter/...) by locating lambda-header
-  arrows inside higher-order-function arguments and leaving exactly those
-  alone — Spark SQL itself accepts ``->`` lambdas.
+* ``_code_matches(pattern, text)`` / ``_sub_code(pattern, repl, text)`` —
+  ``re.finditer`` / ``re.sub`` restricted to matches that start in code;
+* ``_matching(text, i)`` — the balanced ``()`` / ``[]`` / ``{}`` scanner,
+  forward from an opener or backward from a closer;
+* ``_split_args(text, sep, nest)`` — split on a separator at bracket
+  depth 0; ``_depth_profile(text)`` — paren depth before each character;
+* ``_rewrite_calls(text, name, fn)`` — rewrite each call site
+  ``name(args)`` from its parsed argument list, so nested calls and commas
+  in subexpressions are handled.
+
+The JSON arrow rewrite distinguishes ``j -> '$.k'`` from a lambda arrow
+(``x -> 'y'`` inside transform/filter/...) by locating lambda-header
+arrows inside higher-order-function arguments and leaving exactly those
+alone — Spark SQL itself accepts ``->`` lambdas.
 """
 
 from __future__ import annotations
@@ -30,59 +38,114 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from myduckdb_spark.catalog import register_views
 
-# ---------------------------------------------------------------- masking
+# ------------------------------------------------------------------ lexer
+#
+# Every pass asks two questions of a statement: is this position code, or
+# inside a string literal or comment? And where does this bracket close?
+# Both are answered here, from one literal scan per text.
 
 _LITERAL = re.compile(r"'(?:[^']|'')*'|--[^\n]*|/\*.*?\*/", re.S)
 
 
-def _literal_spans(text: str) -> list[tuple[int, int]]:
-    return [m.span() for m in _LITERAL.finditer(text)]
+def _code_mask(text: str) -> bytearray:
+    """One byte per position of ``text``, plus a trailing 0 for
+    ``len(text)``: 0 in code, 2 at the first character of a string literal
+    or comment, 1 inside the rest of it."""
+    mask = bytearray(len(text) + 1)
+    for m in _LITERAL.finditer(text):
+        a, b = m.span()
+        mask[a:b] = b"\x02" + b"\x01" * (b - a - 1)
+    return mask
 
 
-def _in_spans(pos: int, spans: list[tuple[int, int]]) -> bool:
-    return any(a <= pos < b for a, b in spans)
+def _code_matches(pattern, text: str, flags: int = 0, pos: int = 0,
+                  endpos: int | None = None, mask: bytearray | None = None):
+    """Matches of ``pattern`` in ``text[pos:endpos]`` that start in code."""
+    if mask is None:
+        mask = _code_mask(text)
+    rx = re.compile(pattern, flags)
+    for m in rx.finditer(text, pos, len(text) if endpos is None else endpos):
+        if not mask[m.start()]:
+            yield m
 
 
-# ------------------------------------------------- balanced-paren helpers
+def _sub_code(pattern, repl, text: str, flags: int = 0) -> str:
+    """``re.sub`` over the matches that start in code; matches inside
+    literals and comments are kept as they are."""
+    mask = _code_mask(text)
+
+    def sub(m: re.Match) -> str:
+        if mask[m.start()]:
+            return m.group(0)
+        return repl(m) if callable(repl) else m.expand(repl)
+
+    return re.compile(pattern, flags).sub(sub, text)
 
 
-def _matching_paren(text: str, open_idx: int) -> int:
-    """Index of the ')' closing the '(' at open_idx (literal-blind callers
-    should mask first). Returns -1 if unbalanced."""
+_BRACKETS = {
+    "(": ("(", ")", 1), "[": ("[", "]", 1), "{": ("{", "}", 1),
+    ")": (")", "(", -1), "]": ("]", "[", -1), "}": ("}", "{", -1),
+}
+
+
+def _matching(text: str, i: int, mask: bytearray | None = None) -> int:
+    """Index of the bracket balancing the one at ``text[i]``: scans forward
+    from an opener ``( [ {``, backward from a closer ``) ] }``, counting
+    only that bracket kind and skipping literals and comments. -1 if
+    unbalanced."""
+    opener, closer, step = _BRACKETS[text[i]]
+    if mask is None:
+        mask = _code_mask(text)
     depth = 0
-    i = open_idx
-    spans = _literal_spans(text)
-    while i < len(text):
-        if _in_spans(i, spans):
-            i += 1
-            continue
-        c = text[i]
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-            if depth == 0:
-                return i
-        i += 1
+    while 0 <= i < len(text):
+        if not mask[i]:
+            c = text[i]
+            if c == opener:
+                depth += 1
+            elif c == closer:
+                depth -= 1
+                if depth == 0:
+                    return i
+        i += step
     return -1
 
 
-def _split_args(argtext: str) -> list[str]:
-    """Split a call's argument text on top-level commas (literal-aware)."""
-    spans = _literal_spans(argtext)
-    args, depth, start = [], 0, 0
-    for i, c in enumerate(argtext):
-        if _in_spans(i, spans):
+def _split_args(text: str, sep: str = ",", nest: str = "([",
+                mask: bytearray | None = None) -> list[str]:
+    """Split ``text`` on ``sep`` where no bracket of ``nest`` is open,
+    outside literals and comments. ``mask`` is ``_code_mask(text)``."""
+    if mask is None:
+        mask = _code_mask(text)
+    closers = "".join(_BRACKETS[c][1] for c in nest)
+    parts, depth, start = [], 0, 0
+    for i, c in enumerate(text):
+        if mask[i]:
             continue
-        if c in "([":
+        if c in nest:
             depth += 1
-        elif c in ")]":
+        elif c in closers:
             depth -= 1
-        elif c == "," and depth == 0:
-            args.append(argtext[start:i])
+        elif c == sep and depth == 0:
+            parts.append(text[start:i])
             start = i + 1
-    args.append(argtext[start:])
-    return args
+    parts.append(text[start:])
+    return parts
+
+
+def _depth_profile(text: str, mask: bytearray | None = None) -> list[int]:
+    """Paren depth BEFORE each character, literals and comments skipped."""
+    if mask is None:
+        mask = _code_mask(text)
+    depths, d = [], 0
+    for i, c in enumerate(text):
+        depths.append(d)
+        if mask[i]:
+            continue
+        if c == "(":
+            d += 1
+        elif c == ")":
+            d -= 1
+    return depths
 
 
 def _rewrite_calls(text: str, name: str, fn) -> str:
@@ -90,25 +153,28 @@ def _rewrite_calls(text: str, name: str, fn) -> str:
     replacement_text``. Processes right-to-left so positions stay valid;
     re-runs until fixpoint to catch calls revealed by inner rewrites."""
     pat = re.compile(rf"\b{name}\s*\(", re.I)
-    while True:
-        spans = _literal_spans(text)
-        sites = [m for m in pat.finditer(text) if not _in_spans(m.start(), spans)]
+    while pat.search(text):
+        mask = _code_mask(text)
+        sites = list(_code_matches(pat, text, mask=mask))
         if not sites:
             return text
         changed = False
         for m in reversed(sites):
             open_idx = m.end() - 1
-            close_idx = _matching_paren(text, open_idx)
+            close_idx = _matching(text, open_idx, mask)
             if close_idx < 0:
                 continue
-            args = _split_args(text[open_idx + 1 : close_idx])
+            args = _split_args(text[open_idx + 1 : close_idx],
+                               mask=mask[open_idx + 1 : close_idx])
             rep = fn([a.strip() for a in args])
             if rep is None:
                 continue
             text = text[: m.start()] + rep + text[close_idx + 1 :]
+            mask = _code_mask(text)
             changed = True
         if not changed:
             return text
+    return text
 
 
 _NUMERIC_TYPE_RE = (
@@ -146,37 +212,22 @@ _HOF_CALL = re.compile(rf"\b(?:{_HOFS})\s*\(", re.I)
 _LAMBDA_HEADER = re.compile(r"^\s*(?:\(\s*\w+(?:\s*,\s*\w+)*\s*\)|\w+)\s*(->)")
 
 
-def _lambda_arrow_positions(text: str) -> set[int]:
+def _lambda_arrow_positions(text: str, mask: bytearray) -> set[int]:
     """Positions of arrows that introduce a lambda body inside a known
     higher-order function's argument — the only arrows that must survive
     the JSON-operator rewrite."""
-    spans = _literal_spans(text)
     banned: set[int] = set()
-    for m in _HOF_CALL.finditer(text):
-        if _in_spans(m.start(), spans):
-            continue
+    for m in _code_matches(_HOF_CALL, text, mask=mask):
         open_idx = m.end() - 1
-        close_idx = _matching_paren(text, open_idx)
+        close_idx = _matching(text, open_idx, mask)
         if close_idx < 0:
             continue
-        # argument start offsets at top level of this call
-        arg_start = open_idx + 1
-        depth = 0
-        starts = [arg_start]
-        for i in range(arg_start, close_idx):
-            if _in_spans(i, spans):
-                continue
-            c = text[i]
-            if c in "([":
-                depth += 1
-            elif c in ")]":
-                depth -= 1
-            elif c == "," and depth == 0:
-                starts.append(i + 1)
-        for s in starts:
+        s = open_idx + 1  # start offset of each top-level argument
+        for arg in _split_args(text[s:close_idx], mask=mask[s:close_idx]):
             hm = _LAMBDA_HEADER.match(text[s:close_idx])
             if hm:
                 banned.add(s + hm.start(1))
+            s += len(arg) + 1
     return banned
 
 
@@ -190,12 +241,11 @@ def _rewrite_json_arrows(text: str) -> str:
     ``'{...}'::JSON -> '/a/0' ->> 'b'``. Iterates until no eligible
     arrow remains, collapsing chains left to right."""
     while True:
-        banned = _lambda_arrow_positions(text)
-        spans = _literal_spans(text)
+        mask = _code_mask(text)
+        banned = _lambda_arrow_positions(text, mask)
         replaced = False
-        for m in re.finditer(r"->>|->", text):
-            # skip arrows inside string literals AND comments
-            if m.start() in banned or _in_spans(m.start(), spans):
+        for m in _code_matches(r"->>|->", text, mask=mask):
+            if m.start() in banned:
                 continue
             # quoted path, or integer RHS = 0-based array index with
             # negatives from the end ('[1,2,3]'::JSON -> 1 = 2)
@@ -218,14 +268,14 @@ def _rewrite_json_arrows(text: str) -> str:
                     continue
                 dyn = rm.group(1)
             try:
-                st = _operand_start(text, m.start(), spans)
+                st = _operand_start(text, m.start(), mask)
                 # walk back over ::TYPE cast suffixes to the real operand
                 # ('{...}'::JSON -> 'a' casts the literal, not "JSON")
                 while True:
                     head = text[:st].rstrip()
                     if not head.endswith("::"):
                         break
-                    st = _operand_start(text, len(head) - 2, spans)
+                    st = _operand_start(text, len(head) - 2, mask)
             except ValueError:
                 continue
             lhs = text[st:m.start()].strip()
@@ -357,23 +407,36 @@ def _escape_literal_backslashes(text: str) -> str:
     return "".join(out)
 
 
-_NAME_RULES: list[tuple[str, str]] = [
-    ("list_transform", "transform"),
-    ("list_filter", "filter"),
-    ("list_reduce", "reduce"),
-    ("list_concat", "concat"),
-    ("list_cat", "concat"),
-    ("list_value", "array"),
-    ("list_pack", "array"),
-    ("list_reverse", "reverse"),
-    ("list_min", "array_min"),
-    ("list_max", "array_max"),
-    ("array_length", "size"),
-    ("list_has_any", "arrays_overlap"),
-    ("array_to_string", "array_join"),
-    ("json_extract_string", "get_json_object"),
-    ("regexp_matches", "rlike"),
-]
+_NAME_RULES = {
+    "list_transform": "transform",
+    "list_filter": "filter",
+    "list_reduce": "reduce",
+    "list_concat": "concat",
+    "list_cat": "concat",
+    "list_value": "array",
+    "list_pack": "array",
+    "list_reverse": "reverse",
+    "list_min": "array_min",
+    "list_max": "array_max",
+    "array_length": "size",
+    "list_has_any": "arrays_overlap",
+    "array_to_string": "array_join",
+    "json_extract_string": "get_json_object",
+    "regexp_matches": "rlike",
+}
+
+# type aliases renamed by translate(). 128-bit widths widen to the
+# engine's carriers (SURVEY §3 type map). Unsigned types are handled
+# inside the cast rewrite with RANGE GUARDS — a bare rename would silently
+# accept out-of-range values; TIMESTAMP_NS/_MS/_S stay unmapped (their
+# precision semantics aren't a rename).
+_TYPE_ALIASES = {
+    "int1": "tinyint", "int2": "smallint", "int4": "int",
+    "int8": "bigint", "float4": "float", "float8": "double",
+    "logical": "boolean", "bytea": "binary", "blob": "binary",
+    "varbinary": "binary",
+    "hugeint": "decimal(38,0)", "uhugeint": "decimal(38,0)",
+}
 
 _LISTY = re.compile(
     r"^\s*\[|\b(split|string_split\w*|string_to_array|regexp_extract_all|sequence|"
@@ -393,21 +456,6 @@ _AS_ALIAS = re.compile(r"\bAS\s+([A-Za-z_]\w*)\s*$", re.I)
 _BARE_COL = re.compile(r"^[A-Za-z_][\w.]*$")
 
 
-def _depth_profile(text: str) -> list[int]:
-    """Paren depth BEFORE each character (literal-blind)."""
-    spans = _literal_spans(text)
-    depths, d = [], 0
-    for i, c in enumerate(text):
-        depths.append(d)
-        if _in_spans(i, spans):
-            continue
-        if c == "(":
-            d += 1
-        elif c == ")":
-            d -= 1
-    return depths
-
-
 def _rewrite_qualify(text: str) -> str:
     """Hoist ``QUALIFY <pred>`` (reference binder
     src/planner/binder/query_node/bind_select_node.cpp) into
@@ -417,36 +465,36 @@ def _rewrite_qualify(text: str) -> str:
     on it. Requires every select-list item to be a bare column or carry an
     ``AS`` alias — the shape of the reference's QUALIFY corpus."""
     while True:
-        spans = _literal_spans(text)
-        depths = _depth_profile(text)
-        qm = next((m for m in _QUALIFY.finditer(text) if not _in_spans(m.start(), spans)), None)
+        mask = _code_mask(text)
+        depths = _depth_profile(text, mask)
+        qm = next(_code_matches(_QUALIFY, text, mask=mask), None)
         if qm is None:
             return text
         qd = depths[qm.start()]
         sel = None
-        for sm in _SELECT.finditer(text):
-            if sm.start() < qm.start() and not _in_spans(sm.start(), spans) and depths[sm.start()] == qd:
+        for sm in _code_matches(_SELECT, text, mask=mask):
+            if sm.start() < qm.start() and depths[sm.start()] == qd:
                 sel = sm
         if sel is None:
             raise ValueError("QUALIFY without owning SELECT")
         # end of this query block: first ')' dropping below qd, else EOS
         end = len(text)
         for i in range(qm.end(), len(text)):
-            if not _in_spans(i, spans) and text[i] == ")" and depths[i] == qd:
+            if not mask[i] and text[i] == ")" and depths[i] == qd:
                 end = i
                 break
         # predicate runs to the first same-depth terminator clause
         pred_end = end
-        for tm in _Q_TERM.finditer(text, qm.end(), end):
-            if not _in_spans(tm.start(), spans) and depths[tm.start()] == qd:
+        for tm in _code_matches(_Q_TERM, text, pos=qm.end(), endpos=end, mask=mask):
+            if depths[tm.start()] == qd:
                 pred_end = tm.start()
                 break
         pred = text[qm.end() : pred_end].strip()
         tail = text[pred_end:end]
         # select list spans from after SELECT [DISTINCT] to the same-depth FROM
         from_m = None
-        for fm in re.finditer(r"\bFROM\b", text, re.I):
-            if sel.end() < fm.start() < qm.start() and not _in_spans(fm.start(), spans) and depths[fm.start()] == qd:
+        for fm in _code_matches(r"\bFROM\b", text, re.I, mask=mask):
+            if sel.end() < fm.start() < qm.start() and depths[fm.start()] == qd:
                 from_m = fm
                 break
         if from_m is None:
@@ -499,27 +547,27 @@ def _rewrite_distinct_on(text: str) -> str:
     reference builds. Select-list items must be bare columns or aliased
     (as with QUALIFY)."""
     while True:
-        spans = _literal_spans(text)
+        mask = _code_mask(text)
         # rewrite the RIGHTMOST occurrence first: a DISTINCT ON nested in
         # a select-item subquery must be expanded before the outer one
         # splices that item's text into its PARTITION BY
-        ms = [m for m in _DISTINCT_ON.finditer(text) if not _in_spans(m.start(), spans)]
+        ms = list(_code_matches(_DISTINCT_ON, text, mask=mask))
         m = ms[-1] if ms else None
         if m is None:
             return text
-        depths = _depth_profile(text)
-        keys_close = _matching_paren(text, m.end() - 1)
+        depths = _depth_profile(text, mask)
+        keys_close = _matching(text, m.end() - 1, mask)
         keys = text[m.end() : keys_close].strip()
         qd = depths[m.start()]
         end = len(text)
         for i in range(keys_close, len(text)):
-            if not _in_spans(i, spans) and text[i] == ")" and depths[i] == qd:
+            if not mask[i] and text[i] == ")" and depths[i] == qd:
                 end = i
                 break
         # FROM at the same depth bounds the select list
         from_m = None
-        for fm in re.finditer(r"\bFROM\b", text, re.I):
-            if keys_close < fm.start() < end and not _in_spans(fm.start(), spans) and depths[fm.start()] == qd:
+        for fm in _code_matches(r"\bFROM\b", text, re.I, mask=mask):
+            if keys_close < fm.start() < end and depths[fm.start()] == qd:
                 from_m = fm
                 break
         if from_m is None:
@@ -554,18 +602,16 @@ def _rewrite_distinct_on(text: str) -> str:
         )
         # optional same-depth ORDER BY orders within each key partition
         ob = None
-        for om in re.finditer(r"\bORDER\s+BY\b", text, re.I):
-            if from_m.end() < om.start() < end and not _in_spans(om.start(), spans) and depths[om.start()] == qd:
+        for om in _code_matches(r"\bORDER\s+BY\b", text, re.I, mask=mask):
+            if from_m.end() < om.start() < end and depths[om.start()] == qd:
                 ob = om
                 break
         if ob is not None:
             lim = next(
                 (
                     lm
-                    for lm in re.finditer(r"\bLIMIT\b", text, re.I)
-                    if ob.end() < lm.start() < end
-                    and not _in_spans(lm.start(), spans)
-                    and depths[lm.start()] == qd
+                    for lm in _code_matches(r"\bLIMIT\b", text, re.I, mask=mask)
+                    if ob.end() < lm.start() < end and depths[lm.start()] == qd
                 ),
                 None,
             )
@@ -592,8 +638,8 @@ def _rewrite_distinct_on(text: str) -> str:
         # DISTINCT ON token (case-insensitive — rfind("SELECT") missed
         # lowercase sources and then spliced at -1, looping forever)
         sel_start = None
-        for sm in re.finditer(r"\bSELECT\b", text, re.I):
-            if sm.start() < m.start() and not _in_spans(sm.start(), spans) and depths[sm.start()] == qd:
+        for sm in _code_matches(r"\bSELECT\b", text, re.I, mask=mask):
+            if sm.start() < m.start() and depths[sm.start()] == qd:
                 sel_start = sm.start()
         if sel_start is None:
             raise ValueError("DISTINCT ON without owning SELECT")
@@ -710,25 +756,16 @@ def _exclude_expansion(fn: str, arg: str, spec: str, mode: str) -> str:
 _ANYALL = re.compile(r"(=|<>|!=|<=|>=|<|>)\s*(ANY|SOME|ALL)\s*\(", re.I)
 
 
-def _operand_start(text: str, end: int, spans) -> int:
+def _operand_start(text: str, end: int, mask: bytearray) -> int:
     """Start offset of the simple operand ending at ``end`` (exclusive):
     a parenthesized expression (with optional function name), a possibly
-    qualified identifier, a number, or a string literal."""
+    qualified identifier, a number, or a string literal. ``mask`` is
+    ``_code_mask(text)``."""
     i = end
     while i > 0 and text[i - 1].isspace():
         i -= 1
     if i > 0 and text[i - 1] == ")":
-        d = 0
-        j = i - 1
-        while j >= 0:
-            if not _in_spans(j, spans):
-                if text[j] == ")":
-                    d += 1
-                elif text[j] == "(":
-                    d -= 1
-                    if d == 0:
-                        break
-            j -= 1
+        j = _matching(text, i - 1, mask)
         fm = re.search(r"([A-Za-z_]\w*)\s*$", text[:j])
         # a preceding word is a function name unless it's a keyword
         # (`SELECT (1+1)^2` — the paren expression stands alone)
@@ -749,9 +786,8 @@ def _operand_start(text: str, end: int, spans) -> int:
     if m.group(1).upper() == "END":
         # operand is a CASE expression — walk back to its matching CASE
         depth_case = 1
-        for km in reversed(list(re.finditer(r"\b(CASE|END)\b", text[: m.start(1)], re.I))):
-            if _in_spans(km.start(), spans):
-                continue
+        for km in reversed(list(_code_matches(
+                r"\b(CASE|END)\b", text[: m.start(1)], re.I, mask=mask))):
             depth_case += 1 if km.group(1).upper() == "END" else -1
             if depth_case == 0:
                 return km.start()
@@ -759,10 +795,11 @@ def _operand_start(text: str, end: int, spans) -> int:
     return m.start(1)
 
 
-def _operand_end(text: str, start: int, spans) -> int:
+def _operand_end(text: str, start: int, mask: bytearray) -> int:
     """End offset (exclusive) of the simple operand starting at ``start``:
     optional unary sign, then a call/identifier/number/literal/paren
-    expression, then optional ::type cast suffixes."""
+    expression, then optional ::type cast suffixes. ``mask`` is
+    ``_code_mask(text)``."""
     i = start
     n = len(text)
     while i < n and text[i].isspace():
@@ -772,7 +809,7 @@ def _operand_end(text: str, start: int, spans) -> int:
         while i < n and text[i].isspace():
             i += 1
     if i < n and text[i] == "(":
-        i = _matching_paren(text, i) + 1
+        i = _matching(text, i, mask) + 1
     else:
         m = re.match(r"[A-Za-z_]\w*(?:\.[A-Za-z_]\w*)*|\d+(?:\.\d+)?(?:[eE][+-]?\d+)?|'[^']*'", text[i:])
         if m is None:
@@ -782,7 +819,7 @@ def _operand_end(text: str, start: int, spans) -> int:
         while j < n and text[j].isspace():
             j += 1
         if j < n and text[j] == "(":  # function call
-            i = _matching_paren(text, j) + 1
+            i = _matching(text, j, mask) + 1
     # ::type suffix binds tighter than the power operator (ARRAY<...>
     # forms appear once _rewrite_array_types has run)
     while True:
@@ -832,15 +869,11 @@ def _rewrite_union_casts(text: str) -> str:
     query, so the CASE dispatch collapses statically, mirroring the
     reference's bind-time member resolution."""
     while True:
-        spans = _literal_spans(text)
-        m = None
-        for mm in re.finditer(r"(::\s*|\bAS\s+)UNION\s*\(", text, re.I):
-            if not _in_spans(mm.start(), spans):
-                m = mm
-                break
+        mask = _code_mask(text)
+        m = next(_code_matches(r"(::\s*|\bAS\s+)UNION\s*\(", text, re.I, mask=mask), None)
         if m is None:
             return text
-        close = _matching_paren(text, m.end() - 1)
+        close = _matching(text, m.end() - 1, mask)
         members = []
         ok = True
         for part in _split_args(text[m.end():close]):
@@ -853,7 +886,7 @@ def _rewrite_union_casts(text: str) -> str:
         if not ok or not members:
             return text  # not a UNION type spec after all
         if m.group(1).strip() == "::":
-            op_start = _operand_start(text, m.start(), spans)
+            op_start = _operand_start(text, m.start(), mask)
             operand = text[op_start:m.start()].strip()
             lo, hi = op_start, close + 1
         else:
@@ -862,7 +895,7 @@ def _rewrite_union_casts(text: str) -> str:
             depth = 0
             while j > 0:
                 j -= 1
-                if _in_spans(j, spans):
+                if mask[j]:
                     continue
                 if text[j] == ")":
                     depth += 1
@@ -935,42 +968,6 @@ def _union_cast_expr(operand: str, members: list[tuple[str, str]]) -> str:
     return f"named_struct('tag', {tag}, {', '.join(fields)})"
 
 
-def _matching_delim(text: str, open_idx: int, open_ch: str, close_ch: str) -> int:
-    """Like _matching_paren but for []/{} (literal-aware)."""
-    depth = 0
-    spans = _literal_spans(text)
-    i = open_idx
-    while i < len(text):
-        if not _in_spans(i, spans):
-            c = text[i]
-            if c == open_ch:
-                depth += 1
-            elif c == close_ch:
-                depth -= 1
-                if depth == 0:
-                    return i
-        i += 1
-    return -1
-
-
-def _split_top(argtext: str, sep: str) -> list[str]:
-    """Split on a top-level separator char (outside literals/parens/brackets/braces)."""
-    spans = _literal_spans(argtext)
-    out, depth, start = [], 0, 0
-    for i, c in enumerate(argtext):
-        if _in_spans(i, spans):
-            continue
-        if c in "([{":
-            depth += 1
-        elif c in ")]}":
-            depth -= 1
-        elif c == sep and depth == 0:
-            out.append(argtext[start:i])
-            start = i + 1
-    out.append(argtext[start:])
-    return out
-
-
 def _bracket_is_index(text: str, i: int) -> bool:
     """True when the ``[`` at i follows an operand (indexing/slicing),
     False when it opens a list literal (follows a keyword, operator,
@@ -1024,7 +1021,6 @@ def _rewrite_array_types(text: str) -> str:
     position — after ``::``, after ``AS`` (CAST), or after a plain
     identifier (a column name in DDL / RETURNS position). Empty ``[]`` is
     never valid indexing, so it rewrites anywhere except after ``.``."""
-    spans = _literal_spans(text)
 
     # keywords that put the NEXT token in expression (operand) position —
     # a type word after one of these followed by [digits] is indexing
@@ -1056,8 +1052,6 @@ def _rewrite_array_types(text: str) -> str:
         return word not in _EXPR_KEYWORDS
 
     def repl(m: re.Match) -> str:
-        if _in_spans(m.start(), spans):
-            return m.group(0)
         fixed = bool(re.search(r"\[\s*\d", m.group(2)))
         if not _type_position(m.start(), fixed):
             return m.group(0)
@@ -1066,7 +1060,7 @@ def _rewrite_array_types(text: str) -> str:
             out = f"ARRAY<{out}>"
         return out
 
-    out = _ARRAY_TYPE.sub(repl, text)
+    out = _sub_code(_ARRAY_TYPE, repl, text)
     if out == text:
         return text
 
@@ -1081,20 +1075,20 @@ def _rewrite_array_types(text: str) -> str:
         # knows lowercase null
         return re.sub(r"\bNULL\b", "null", lit, flags=re.I)
 
-    spans = _literal_spans(out)
+    mask = _code_mask(out)
     out = re.sub(
         rf"('(?:[^']|'')*')\s*::\s*({angle})",
         lambda m: m.group(0)
-        if _in_spans(m.start(2), spans)
+        if mask[m.start(2)]
         else f"from_json({_jsonify(m.group(1))}, '{m.group(2)}')",
         out,
         flags=re.I,
     )
-    spans = _literal_spans(out)
+    mask = _code_mask(out)
     out = re.sub(
         rf"\bCAST\s*\(\s*('(?:[^']|'')*')\s+AS\s+({angle})\s*\)",
         lambda m: m.group(0)
-        if _in_spans(m.start(2), spans)
+        if mask[m.start(2)]
         else f"from_json({_jsonify(m.group(1))}, '{m.group(2)}')",
         out,
         flags=re.I,
@@ -1107,18 +1101,13 @@ def _rewrite_bracket_lists(text: str) -> str:
     bracket literal). A ``[`` preceded by an operand is INDEXING and is
     left for _rewrite_index_brackets."""
     while True:
-        spans = _literal_spans(text)
-        site = -1
-        for i, ch in enumerate(text):
-            if ch != "[" or _in_spans(i, spans):
-                continue
-            if _bracket_is_index(text, i):
-                continue  # indexing, not a literal
-            site = i
-            break
+        mask = _code_mask(text)
+        # a '[' after an operand is indexing, not a list literal
+        site = next((b.start() for b in _code_matches(r"\[", text, mask=mask)
+                     if not _bracket_is_index(text, b.start())), -1)
         if site < 0:
             return text
-        close = _matching_delim(text, site, "[", "]")
+        close = _matching(text, site, mask)
         if close < 0:
             return text
         inner = text[site + 1 : close]
@@ -1128,11 +1117,10 @@ def _rewrite_bracket_lists(text: str) -> str:
 def _rewrite_struct_braces(text: str) -> str:
     """DuckDB ``{'k': v, ...}`` struct literals → named_struct('k', v, ...);
     ``MAP {'k': v}`` → map('k', v, ...)."""
-    spans = _literal_spans(text)
-    for i, ch in enumerate(text):
-        if ch != "{" or _in_spans(i, spans):
-            continue
-        close = _matching_delim(text, i, "{", "}")
+    mask = _code_mask(text)
+    for b in _code_matches(r"\{", text, mask=mask):
+        i = b.start()
+        close = _matching(text, i, mask)
         if close < 0:
             continue
         inner = _rewrite_struct_braces(text[i + 1 : close])
@@ -1142,7 +1130,7 @@ def _rewrite_struct_braces(text: str) -> str:
         if is_map:
             head = re.sub(r"\bMAP\s*$", "", head, flags=re.I)
         pairs = []
-        for part in _split_top(inner, ","):
+        for part in _split_args(inner, nest="([{"):
             km = re.match(r"^\s*('(?:[^']|'')*'|\"[^\"]*\"|\w+)\s*:\s*(.+)$", part, re.S)
             if not km:
                 return text[:i] + "{" + inner + "}" + rest  # not a struct literal
@@ -1169,15 +1157,15 @@ def _rewrite_json_dot_syntax(text: str) -> str:
     the later cast rewrites."""
     scan = 0
     while True:
+        mask = _code_mask(text)
         m = next(
-            (c for c in re.compile(r"\bjson\s*\(", re.I).finditer(text, scan)
-             if not _in_spans(c.start(), _literal_spans(text))
-             and not re.search(r"[.$]$|::\s*$", text[: c.start()])),
+            (c for c in _code_matches(r"\bjson\s*\(", text, re.I, pos=scan, mask=mask)
+             if not re.search(r"[.$]$|::\s*$", text[: c.start()])),
             None,
         )
         if m is None:
             break
-        close = _matching_paren(text, m.end() - 1)
+        close = _matching(text, m.end() - 1, mask)
         if close < 0:
             break
         dm = re.match(_DOT_CHAIN, text[close + 1:])
@@ -1192,11 +1180,9 @@ def _rewrite_json_dot_syntax(text: str) -> str:
             + text[close + 1 + dm.end():]
         )
     while True:
-        spans = _literal_spans(text)
+        mask = _code_mask(text)
         hit = None
-        for mm in re.finditer(r"::\s*JSON\b", text, re.I):
-            if _in_spans(mm.start(), spans):
-                continue
+        for mm in _code_matches(r"::\s*JSON\b", text, re.I, mask=mask):
             after = text[mm.end():]
             pm = re.match(r"\s*\)", after)
             wrapped = False
@@ -1215,7 +1201,7 @@ def _rewrite_json_dot_syntax(text: str) -> str:
             return text
         mm, dm, chain_off, wrapped = hit
         try:
-            st = _operand_start(text, mm.start(), spans)
+            st = _operand_start(text, mm.start(), mask)
         except ValueError:
             return text
         lo = st
@@ -1239,23 +1225,18 @@ def _rewrite_index_brackets(text: str) -> str:
     try_element_at (1-based, NULL out of bounds — Spark's bare ``a[i]``
     is 0-based) and ``a[i:j]`` → slice(a, i, j-i+1)."""
     while True:
-        spans = _literal_spans(text)
-        found = -1
-        for i, ch in enumerate(text):
-            if ch != "[" or _in_spans(i, spans):
-                continue
-            if _bracket_is_index(text, i):
-                found = i
-                break
+        mask = _code_mask(text)
+        found = next((b.start() for b in _code_matches(r"\[", text, mask=mask)
+                      if _bracket_is_index(text, b.start())), -1)
         if found < 0:
             return text
-        close = _matching_delim(text, found, "[", "]")
+        close = _matching(text, found, mask)
         if close < 0:
             return text
         inner = text[found + 1 : close]
-        start = _operand_start(text, found, spans)
+        start = _operand_start(text, found, mask)
         operand = text[start:found].strip()
-        parts = _split_top(inner, ":")
+        parts = _split_args(inner, ":", "([{")
         if len(parts) == 1:
             idx = inner.strip()
             if re.fullmatch(r"'(?:[^']|'')*'", idx):
@@ -1307,29 +1288,18 @@ def _rewrite_table_functions(text: str) -> str:
     # absorb a second select-list UNNEST into a correlated subquery
     text = _rewrite_multi_unnest(text)
 
-    def tvf(m: re.Match) -> str:
-        kw, fn = m.group(1), m.group(2).lower()
-        open_idx = m.end() - 1
-        close = _matching_paren(text, open_idx)
-        return kw, fn, open_idx, close
-
     scan_from = 0
     while True:
-        spans = _literal_spans(text)
-        m = next(
-            (
-                c
-                for c in re.compile(
-                    r"\b(FROM|JOIN|,)\s*(generate_series|unnest|range)\s*\(",
-                    re.I,
-                ).finditer(text, scan_from)
-                if not _in_spans(c.start(), spans)
-            ),
-            None,
-        )
+        mask = _code_mask(text)
+        m = next(_code_matches(
+            r"\b(FROM|JOIN|,)\s*(generate_series|unnest|range)\s*\(",
+            text, re.I, pos=scan_from, mask=mask,
+        ), None)
         if m is None:
             break
-        kw, fn, open_idx, close = tvf(m)
+        kw, fn = m.group(1), m.group(2).lower()
+        open_idx = m.end() - 1
+        close = _matching(text, open_idx, mask)
         if close < 0:
             break
         if kw == ",":
@@ -1337,11 +1307,11 @@ def _rewrite_table_functions(text: str) -> str:
             # select-list `, UNNEST(x) alias` stays a generator item.
             # Clause test: the nearest preceding SELECT/FROM keyword at
             # this paren depth decides.
-            depths = _depth_profile(text)
+            depths = _depth_profile(text, mask)
             d = depths[m.start()]
             last_kw = None
-            for km in re.finditer(r"\b(SELECT|FROM)\b", text[: m.start()], re.I):
-                if not _in_spans(km.start(), spans) and depths[km.start()] == d:
+            for km in _code_matches(r"\b(SELECT|FROM)\b", text[: m.start()], re.I, mask=mask):
+                if depths[km.start()] == d:
                     last_kw = km.group(1).upper()
             if last_kw != "FROM":
                 scan_from = m.end()
@@ -1410,23 +1380,19 @@ def _rewrite_multi_unnest(text: str) -> str:
     sel_m = re.match(r"^\s*SELECT\s+", text, re.I)
     if sel_m is None:
         return text
-    spans = _literal_spans(text)
-    depths = _depth_profile(text)
-    fm = None
-    for f in re.finditer(r"\bFROM\b", text, re.I):
-        if not _in_spans(f.start(), spans) and depths[f.start()] == 0:
-            fm = f
-            break
+    mask = _code_mask(text)
+    depths = _depth_profile(text, mask)
+    fm = next((f for f in _code_matches(r"\bFROM\b", text, re.I, mask=mask)
+               if depths[f.start()] == 0), None)
     if fm:
         sel_end = fm.start()
     else:
         # no FROM: the select list still ends where a top-level
         # ORDER BY / LIMIT / OFFSET tail begins
         sel_end = next(
-            (c.start() for c in re.finditer(
-                r"\b(ORDER\s+BY|LIMIT|OFFSET)\b", text, re.I)
-             if not _in_spans(c.start(), spans)
-             and depths[c.start()] == 0),
+            (c.start() for c in _code_matches(
+                r"\b(ORDER\s+BY|LIMIT|OFFSET)\b", text, re.I, mask=mask)
+             if depths[c.start()] == 0),
             len(text),
         )
     items = [a.strip() for a in _split_args(text[sel_m.end(): sel_end])]
@@ -1476,12 +1442,12 @@ def _rewrite_multi_unnest(text: str) -> str:
     # reference's LIMIT bounds rows after the unnest, and ordering after
     # explode is not preserved) — split them off to the outer SELECT
     outer_tail = ""
-    t_spans = _literal_spans(tail)
-    t_depths = _depth_profile(tail)
+    t_mask = _code_mask(tail)
+    t_depths = _depth_profile(tail, t_mask)
     cut = next(
-        (c.start() for c in re.finditer(
-            r"\b(ORDER\s+BY|LIMIT|OFFSET)\b", tail, re.I)
-         if not _in_spans(c.start(), t_spans) and t_depths[c.start()] == 0),
+        (c.start() for c in _code_matches(
+            r"\b(ORDER\s+BY|LIMIT|OFFSET)\b", tail, re.I, mask=t_mask)
+         if t_depths[c.start()] == 0),
         None,
     )
     if cut is not None:
@@ -1504,11 +1470,7 @@ def _rewrite_positional_join(text: str) -> str:
     Row order = scan order (monotonically_increasing_id), the same
     table-order contract the reference relies on."""
     while True:
-        spans = _literal_spans(text)
-        m = next(
-            (c for c in _POSITIONAL_JOIN.finditer(text) if not _in_spans(c.start(), spans)),
-            None,
-        )
+        m = next(_code_matches(_POSITIONAL_JOIN, text), None)
         if m is None:
             return text
         a, b = m.group(1), m.group(2)
@@ -1528,20 +1490,18 @@ def _rewrite_distinct_window(text: str) -> str:
     sum/avg → fold of collect_set() OVER w (DECIMAL accumulation so
     integer sums render like DuckDB's); min/max → DISTINCT dropped."""
     while True:
-        spans = _literal_spans(text)
+        mask = _code_mask(text)
         m = None
-        for cand in re.finditer(r"\b(\w+)\s*\(\s*DISTINCT\b", text, re.I):
-            if _in_spans(cand.start(), spans):
-                continue
+        for cand in _code_matches(r"\b(\w+)\s*\(\s*DISTINCT\b", text, re.I, mask=mask):
             open_idx = text.index("(", cand.end(1))
-            close = _matching_paren(text, open_idx)
+            close = _matching(text, open_idx, mask)
             if close < 0:
                 continue
             om = re.match(r"\s*OVER\s*\(", text[close + 1 :], re.I)
             if not om:
                 continue
             over_open = close + 1 + om.end() - 1
-            over_close = _matching_paren(text, over_open)
+            over_close = _matching(text, over_open, mask)
             if over_close < 0:
                 continue
             m = (cand, open_idx, close, over_open, over_close)
@@ -1579,13 +1539,11 @@ def _rewrite_window_filter(text: str) -> str:
     window aggregates; the reference evaluates both
     (bound_window_expression.hpp filter_expr)."""
     while True:
-        spans = _literal_spans(text)
+        mask = _code_mask(text)
         m = None
-        for cand in re.finditer(r"\bFILTER\s*\(\s*WHERE\b", text, re.I):
-            if _in_spans(cand.start(), spans):
-                continue
+        for cand in _code_matches(r"\bFILTER\s*\(\s*WHERE\b", text, re.I, mask=mask):
             f_open = text.index("(", cand.start())
-            f_close = _matching_paren(text, f_open)
+            f_close = _matching(text, f_open, mask)
             if f_close < 0 or not re.match(r"\s*OVER\b", text[f_close + 1 :], re.I):
                 continue
             m = (cand, f_open, f_close)
@@ -1595,7 +1553,7 @@ def _rewrite_window_filter(text: str) -> str:
         cand, f_open, f_close = m
         pred = text[f_open + 1 : f_close]
         pred = re.sub(r"^\s*WHERE\b", "", pred, flags=re.I).strip()
-        call_start = _operand_start(text, cand.start(), spans)
+        call_start = _operand_start(text, cand.start(), mask)
         call = text[call_start : cand.start()].strip()
         cm = re.match(r"(?s)^(\w+)\s*\((.*)\)$", call)
         if cm is None:
@@ -1661,12 +1619,10 @@ def _round_cast(expr: str, typ: str, kw: str) -> str:
 def _rewrite_int_casts(text: str) -> str:
     """Apply _round_cast to every CAST/TRY_CAST(... AS <inttype>) site.
     Single descending pass (never rescans its own output)."""
-    spans = _literal_spans(text)
-    for m in re.finditer(r"\b(TRY_)?CAST\s*\(", text, flags=re.I):
-        if _in_spans(m.start(), spans):
-            continue
+    mask = _code_mask(text)
+    for m in _code_matches(r"\b(TRY_)?CAST\s*\(", text, re.I, mask=mask):
         open_idx = m.end() - 1
-        close_idx = _matching_paren(text, open_idx)
+        close_idx = _matching(text, open_idx, mask)
         if close_idx < 0:
             continue
         inner = _rewrite_int_casts(text[open_idx + 1 : close_idx])
@@ -1848,15 +1804,14 @@ def _rewrite_postfix_int_casts(text: str) -> str:
     (``::VARCHAR`` etc.) go through the same CAST form so the cast pass
     can apply Spark's STRING type and year-rendering fix."""
     while True:
-        spans = _literal_spans(text)
+        mask = _code_mask(text)
         m = next(
             (
                 c
-                for c in _COLON_INT.finditer(text)
-                if not _in_spans(c.start(), spans)
+                for c in _code_matches(_COLON_INT, text, mask=mask)
                 # leave `5::int8` (pure integer literal) as a postfix cast:
                 # rounding is identity and frame bounds need bare literals
-                and not (
+                if not (
                     c.group(1).lower() in _INT_CAST_TYPES
                     and c.group(1).lower() not in _UNSIGNED_RANGES
                     and re.search(r"(?<![\w.])\d+\s*$", text[: c.start()])
@@ -1866,12 +1821,12 @@ def _rewrite_postfix_int_casts(text: str) -> str:
         )
         if m is None:
             return text
-        start = _operand_start(text, m.start(), spans)
+        start = _operand_start(text, m.start(), mask)
         while True:
             pm = re.search(r"::\s*$", text[:start])
             if pm is None:
                 break
-            start = _operand_start(text, pm.start(), spans)
+            start = _operand_start(text, pm.start(), mask)
         expr = text[start : m.start()].strip()
         text = text[:start] + f"CAST({expr} AS {m.group(1)})" + text[m.end():]
 
@@ -1935,19 +1890,10 @@ def _rewrite_blob_literals(text: str) -> str:
     through to the generic BLOB→BINARY type rename."""
     for pat in (_BLOB_POSTFIX, _BLOB_CAST):
         while True:
-            spans = _literal_spans(text)
-            m = next(
-                (
-                    c
-                    for c in pat.finditer(text)
-                    # the literal itself IS a span — require the match to
-                    # start exactly at a span boundary (or at CAST, which
-                    # is outside every span)
-                    if not _in_spans(c.start(), spans)
-                    or any(s == c.start() for s, _e in spans)
-                ),
-                None,
-            )
+            mask = _code_mask(text)
+            # the literal itself is masked — require the match to start in
+            # code (CAST) or exactly at the literal's first quote (mask 2)
+            m = next((c for c in pat.finditer(text) if mask[c.start()] != 1), None)
             if m is None:
                 break
             text = (
@@ -1965,20 +1911,17 @@ def _rewrite_blob_literals(text: str) -> str:
         colpat = "|".join(re.escape(c) for c in sorted(_BLOB_COLS[0]))
         qcol = rf"(?:\w+\s*\.\s*)?(?:{colpat})"
         _op = r"(?:==|!=|<>|<=|>=|=|<|>)"
-        spans_b = _literal_spans(text)
-        text = re.sub(
+        text = _sub_code(
             rf"(?<![\w.'\"])({qcol})\s*({_op})\s*'((?:[^']|'')*)'",
-            lambda mm: mm.group(0)
-            if _in_spans(mm.start(), spans_b)
-            else (f"{mm.group(1)} {mm.group(2)} "
-                  f"unhex('{_blob_hex(mm.group(3))}')"),
-            text, flags=re.I,
+            lambda mm: (f"{mm.group(1)} {mm.group(2)} "
+                        f"unhex('{_blob_hex(mm.group(3))}')"),
+            text, re.I,
         )
-        spans_b = _literal_spans(text)
+        mask = _code_mask(text)
         text = re.sub(
             rf"'((?:[^']|'')*)'\s*({_op})\s*((?:\w+\s*\.\s*)?(?:{colpat}))(?![\w.])",
             lambda mm: mm.group(0)
-            if not any(s == mm.start() for s, _e in spans_b)
+            if mask[mm.start()] != 2
             else (f"unhex('{_blob_hex(mm.group(1))}') "
                   f"{mm.group(2)} {mm.group(3)}"),
             text, flags=re.I,
@@ -1987,16 +1930,12 @@ def _rewrite_blob_literals(text: str) -> str:
         # non-literal VARCHAR -> BLOB casts decode \xNN escapes at
         # runtime (blob.cpp TryCastToBlob); binary inputs pass through
         while True:
-            spans = _literal_spans(text)
-            m = next(
-                (c for c in re.finditer(rf"::\s*{_BLOB_T}\b", text, re.I)
-                 if not _in_spans(c.start(), spans)),
-                None,
-            )
+            mask = _code_mask(text)
+            m = next(_code_matches(rf"::\s*{_BLOB_T}\b", text, re.I, mask=mask), None)
             if m is None:
                 break
             try:
-                start = _operand_start(text, m.start(), spans)
+                start = _operand_start(text, m.start(), mask)
             except ValueError:
                 break
             expr = text[start: m.start()].strip()
@@ -2043,18 +1982,11 @@ def _rewrite_dynamic_interval(text: str) -> str:
         text, flags=re.I,
     )
     while True:
-        spans = _literal_spans(text)
-        m = next(
-            (
-                c
-                for c in _DYN_INTERVAL.finditer(text)
-                if not _in_spans(c.start(), spans)
-            ),
-            None,
-        )
+        mask = _code_mask(text)
+        m = next(_code_matches(_DYN_INTERVAL, text, mask=mask), None)
         if m is None:
             return text
-        close = _matching_paren(text, m.end() - 1)
+        close = _matching(text, m.end() - 1, mask)
         if close < 0:
             return text
         um = re.match(r"\s*([A-Za-z]+)", text[close + 1 :])
@@ -2096,20 +2028,17 @@ def _rewrite_at_time_zone(text: str) -> str:
     (the engine's session default timestamp type is NTZ)."""
     pat = re.compile(r"\sAT\s+TIME\s+ZONE\s+('(?:[^']|'')*'|NULL\b)", re.I)
     while True:
-        spans = _literal_spans(text)
-        m = next(
-            (c for c in pat.finditer(text) if not _in_spans(c.start(), spans)),
-            None,
-        )
+        mask = _code_mask(text)
+        m = next(_code_matches(pat, text, mask=mask), None)
         if m is None:
             return text
-        start = _operand_start(text, m.start(), spans)
+        start = _operand_start(text, m.start(), mask)
         while True:  # extend over postfix-cast chains ('…'::TIMESTAMP)
             j = start
             while j > 0 and text[j - 1].isspace():
                 j -= 1
             if j >= 2 and text[j - 2: j] == "::":
-                start = _operand_start(text, j - 2, spans)
+                start = _operand_start(text, j - 2, mask)
             else:
                 break
         left = text[start: m.start()].strip()
@@ -2167,14 +2096,11 @@ def _rewrite_power_operator(text: str) -> str:
     third_party/libpg_query); Spark's ``^`` is bitwise XOR. Rewrite
     ``a ^ b`` → ``power(a, b)`` operand-by-operand."""
     while True:
-        spans = _literal_spans(text)
-        m = next(
-            (c for c in _POWER_OP.finditer(text) if not _in_spans(c.start(), spans)),
-            None,
-        )
+        mask = _code_mask(text)
+        m = next(_code_matches(_POWER_OP, text, mask=mask), None)
         if m is None:
             return text
-        left_start = _operand_start(text, m.start(), spans)
+        left_start = _operand_start(text, m.start(), mask)
         # a UNARY sign binds tighter than ^ (postgres precedence:
         # -2^2 = (-2)^2 = 4, but 3-2^2 = 3-(2^2) — binary minus looser)
         j = left_start
@@ -2193,7 +2119,7 @@ def _rewrite_power_operator(text: str) -> str:
             )
             if unary:
                 left_start = j - 1
-        right_end = _operand_end(text, m.end(), spans)
+        right_end = _operand_end(text, m.end(), mask)
         lhs = text[left_start : m.start()].strip()
         rhs = text[m.end() : right_end].strip()
         text = text[:left_start] + f"power({lhs}, {rhs})" + text[right_end:]
@@ -2230,17 +2156,15 @@ def _rewrite_in_subquery(text: str) -> str:
     CASE; a plain WHERE/HAVING conjunct keeps Spark's native in-subquery
     plan (semi join), which filters identically and scales better."""
     while True:
-        spans = _literal_spans(text)
-        depths = _depth_profile(text)
+        mask = _code_mask(text)
+        depths = _depth_profile(text, mask)
         m = None
-        for cand in _IN_SUBQ.finditer(text):
-            if _in_spans(cand.start(), spans):
-                continue
+        for cand in _code_matches(_IN_SUBQ, text, mask=mask):
             open_idx = cand.end() - 1
             inner = text[cand.end():].lstrip()
             if not re.match(r"(SELECT|WITH|VALUES)\b", inner, re.I):
                 continue
-            close_idx = _matching_paren(text, open_idx)
+            close_idx = _matching(text, open_idx, mask)
             # observable-as-value context 1: ... ) IS [NOT] NULL
             after = text[close_idx + 1 :]
             adjacency = re.match(r"\s*\)?\s*IS\s+(NOT\s+)?NULL", after, re.I)
@@ -2248,8 +2172,9 @@ def _rewrite_in_subquery(text: str) -> str:
             # before the site with no intervening same-depth FROM/WHERE
             d = depths[cand.start()]
             in_select_list = False
-            for kw in re.finditer(r"\b(SELECT|FROM|WHERE|HAVING|ON|WHEN|QUALIFY)\b", text[: cand.start()], re.I):
-                if _in_spans(kw.start(), spans) or depths[kw.start()] != d:
+            for kw in _code_matches(r"\b(SELECT|FROM|WHERE|HAVING|ON|WHEN|QUALIFY)\b",
+                                    text[: cand.start()], re.I, mask=mask):
+                if depths[kw.start()] != d:
                     continue
                 in_select_list = kw.group(1).upper() == "SELECT"
             if adjacency or in_select_list:
@@ -2260,7 +2185,7 @@ def _rewrite_in_subquery(text: str) -> str:
         cand, open_idx, close_idx = m
         sub = text[open_idx + 1 : close_idx].strip()
         negated = bool(cand.group(1))
-        left_start = _operand_start(text, cand.start(), spans)
+        left_start = _operand_start(text, cand.start(), mask)
         lhs = text[left_start : cand.start()].strip()
         repl = (
             _quantified_case(lhs, "<>", "ALL", sub)
@@ -2277,23 +2202,18 @@ def _rewrite_any_all(text: str) -> str:
     ALL dually — the reference binder's semantics
     (src/planner/binder/expression/bind_comparison_expression.cpp)."""
     while True:
-        spans = _literal_spans(text)
-        m = None
-        for cand in _ANYALL.finditer(text):
-            if _in_spans(cand.start(), spans):
-                continue
-            inner = text[cand.end() :].lstrip()
-            if re.match(r"(SELECT|WITH|VALUES)\b", inner, re.I):
-                m = cand
-                break
+        mask = _code_mask(text)
+        m = next((c for c in _code_matches(_ANYALL, text, mask=mask)
+                  if re.match(r"(SELECT|WITH|VALUES)\b", text[c.end():].lstrip(), re.I)),
+                 None)
         if m is None:
             return text
         open_idx = m.end() - 1
-        close_idx = _matching_paren(text, open_idx)
+        close_idx = _matching(text, open_idx, mask)
         sub = text[open_idx + 1 : close_idx].strip()
         op = m.group(1)
         kind = m.group(2).upper()
-        left_start = _operand_start(text, m.start(), spans)
+        left_start = _operand_start(text, m.start(), mask)
         lhs = text[left_start : m.start()].strip()
         repl = _quantified_case(lhs, op, kind, sub)
         text = text[:left_start] + repl + text[close_idx + 1 :]
@@ -2308,41 +2228,33 @@ def _rewrite_setop_order_alias(text: str) -> str:
     branch's output names. Items naming a later branch's alias, or
     repeating a branch's select expression verbatim, become 1-based
     ordinals (valid in both engines)."""
-    spans = _literal_spans(text)
-    depths = _depth_profile(text)
-    setops = [
-        m for m in _SETOP.finditer(text)
-        if not _in_spans(m.start(), spans) and depths[m.start()] == 0
-    ]
+    mask = _code_mask(text)
+    depths = _depth_profile(text, mask)
+
+    def top_level(pattern, flags=re.I):
+        return [m for m in _code_matches(pattern, text, flags, mask=mask)
+                if depths[m.start()] == 0]
+
+    setops = top_level(_SETOP, 0)
     if not setops:
         return text
     ob = None
-    for om in re.finditer(r"\bORDER\s+BY\s+", text, re.I):
-        if not _in_spans(om.start(), spans) and depths[om.start()] == 0 and om.start() > setops[-1].end():
+    for om in top_level(r"\bORDER\s+BY\s+"):
+        if om.start() > setops[-1].end():
             ob = om
     if ob is None:
         return text
     o_end = next(
-        (
-            t.start()
-            for t in re.finditer(r"\b(LIMIT|OFFSET)\b|;", text, re.I)
-            if t.start() > ob.end() and not _in_spans(t.start(), spans) and depths[t.start()] == 0
-        ),
+        (t.start() for t in top_level(r"\b(LIMIT|OFFSET)\b|;") if t.start() > ob.end()),
         len(text),
     )
     # per-branch select lists: SELECT .. FROM|setop boundary, depth 0
     branch_aliases: list[list[str]] = []
     branch_exprs: list[list[str]] = []
-    sels = [
-        s for s in re.finditer(r"\bSELECT\b(\s+DISTINCT\b)?", text, re.I)
-        if not _in_spans(s.start(), spans) and depths[s.start()] == 0 and s.start() < ob.start()
-    ]
+    sels = [s for s in top_level(r"\bSELECT\b(\s+DISTINCT\b)?") if s.start() < ob.start()]
+    froms = top_level(r"\bFROM\b")
     for s in sels:
-        stop = len(text)
-        for t in re.finditer(r"\bFROM\b", text, re.I):
-            if t.start() > s.end() and not _in_spans(t.start(), spans) and depths[t.start()] == 0:
-                stop = t.start()
-                break
+        stop = next((t.start() for t in froms if t.start() > s.end()), len(text))
         for t in setops + [ob]:
             if s.end() < t.start() < stop:
                 stop = t.start()
@@ -2402,39 +2314,31 @@ def _pin_window_null_order(text: str) -> str:
         if SETTINGS.get("default_null_order", "nulls_last") == "nulls_first"
         else "NULLS LAST"
     )
-    spans = _literal_spans(text)
+    mask = _code_mask(text)
     edits = []
     done_until = -1  # skip OVER sites nested inside an already-collected
     # spec — the recursion below pins those within the outer edit
-    for m in re.finditer(r"\bOVER\s*\(", text, re.I):
-        if _in_spans(m.start(), spans) or m.start() <= done_until:
+    for m in _code_matches(r"\bOVER\s*\(", text, re.I, mask=mask):
+        if m.start() <= done_until:
             continue
         open_idx = m.end() - 1
-        close = _matching_paren(text, open_idx)
+        close = _matching(text, open_idx, mask)
         if close < 0:
             continue
         done_until = close
         spec = _pin_window_null_order(text[open_idx + 1 : close])
-        sdepth = _depth_profile(spec)
-        sspans = _literal_spans(spec)
+        smask = _code_mask(spec)
+        sdepth = _depth_profile(spec, smask)
         om = next(
-            (
-                x
-                for x in re.finditer(r"\bORDER\s+BY\s+", spec, re.I)
-                if sdepth[x.start()] == 0 and not _in_spans(x.start(), sspans)
-            ),
+            (x for x in _code_matches(r"\bORDER\s+BY\s+", spec, re.I, mask=smask)
+             if sdepth[x.start()] == 0),
             None,
         )
         if om is None:
             continue
         fm = next(
-            (
-                x
-                for x in re.finditer(r"\b(ROWS|RANGE|GROUPS)\b", spec, re.I)
-                if x.start() > om.end()
-                and sdepth[x.start()] == 0
-                and not _in_spans(x.start(), sspans)
-            ),
+            (x for x in _code_matches(r"\b(ROWS|RANGE|GROUPS)\b", spec, re.I, mask=smask)
+             if x.start() > om.end() and sdepth[x.start()] == 0),
             None,
         )
         o_end = fm.start() if fm else len(spec)
@@ -2461,11 +2365,8 @@ def _inline_named_windows(text: str) -> str:
     the EXCLUDE expansion needs the full inlined spec to derive peer keys
     — so both forms are substituted and the WINDOW clause removed."""
     while True:
-        spans = _literal_spans(text)
-        m = next(
-            (m for m in _WINDOW_CLAUSE.finditer(text) if not _in_spans(m.start(), spans)),
-            None,
-        )
+        mask = _code_mask(text)
+        m = next(_code_matches(_WINDOW_CLAUSE, text, mask=mask), None)
         if m is None:
             return text
         # parse the comma-separated definition list: name AS (spec) [, ...]
@@ -2474,7 +2375,7 @@ def _inline_named_windows(text: str) -> str:
         pos = m.end() - 1  # at the '(' of the first definition
         name = m.group(1)
         while True:
-            close = _matching_paren(text, pos)
+            close = _matching(text, pos, mask)
             defs[name] = text[pos + 1 : close].strip()
             nxt = re.match(
                 r"\s*,\s*([A-Za-z_]\w*)\s+AS\s*\(", text[close + 1 :], re.I
@@ -2508,16 +2409,12 @@ def _rewrite_window_mode(text: str) -> str:
     pat = re.compile(r"\bmode\s*\(", re.I)
     pos = 0
     while True:
-        spans = _literal_spans(text)
-        m = None
-        for c in pat.finditer(text, pos):
-            if not _in_spans(c.start(), spans):
-                m = c
-                break
+        mask = _code_mask(text)
+        m = next(_code_matches(pat, text, pos=pos, mask=mask), None)
         if m is None:
             return text
         open_idx = m.end() - 1
-        close_idx = _matching_paren(text, open_idx)
+        close_idx = _matching(text, open_idx, mask)
         if close_idx < 0:
             pos = m.end()
             continue
@@ -2531,7 +2428,7 @@ def _rewrite_window_mode(text: str) -> str:
             continue
         if om.group(1) == "(":
             spec_open = close_idx + 1 + om.end() - 1
-            oc = _matching_paren(text, spec_open)
+            oc = _matching(text, spec_open, mask)
             if oc < 0:
                 pos = close_idx + 1
                 continue
@@ -2561,16 +2458,12 @@ def _rewrite_window_nth(text: str) -> str:
     pat = re.compile(r"\bnth_value\s*\(", re.I)
     pos = 0
     while True:
-        spans = _literal_spans(text)
-        m = None
-        for c in pat.finditer(text, pos):
-            if not _in_spans(c.start(), spans):
-                m = c
-                break
+        mask = _code_mask(text)
+        m = next(_code_matches(pat, text, pos=pos, mask=mask), None)
         if m is None:
             return text
         open_idx = m.end() - 1
-        close_idx = _matching_paren(text, open_idx)
+        close_idx = _matching(text, open_idx, mask)
         if close_idx < 0:
             pos = m.end()
             continue
@@ -2580,7 +2473,7 @@ def _rewrite_window_nth(text: str) -> str:
             pos = close_idx + 1
             continue
         if om.group(1) == "(":
-            oc = _matching_paren(text, close_idx + 1 + om.end() - 1)
+            oc = _matching(text, close_idx + 1 + om.end() - 1, mask)
             if oc < 0:
                 pos = close_idx + 1
                 continue
@@ -2602,18 +2495,15 @@ def _rewrite_window_exclude(text: str) -> str:
     """``agg(v) OVER (... EXCLUDE mode)`` → subtraction-pattern expansion
     (Spark has no EXCLUDE frame option)."""
     while True:
-        spans = _literal_spans(text)
-        m = next(
-            (m for m in _W_EXCLUDE.finditer(text) if not _in_spans(m.start(), spans)),
-            None,
-        )
+        mask = _code_mask(text)
+        m = next(_code_matches(_W_EXCLUDE, text, mask=mask), None)
         if m is None:
             return text
         mode = re.sub(r"\s+", " ", m.group(1).lower())
         # innermost '(' containing the EXCLUDE token
         depth, open_idx = 0, None
         for i in range(m.start() - 1, -1, -1):
-            if _in_spans(i, spans):
+            if mask[i]:
                 continue
             if text[i] == ")":
                 depth += 1
@@ -2624,7 +2514,7 @@ def _rewrite_window_exclude(text: str) -> str:
                 depth -= 1
         if open_idx is None:
             raise ValueError("EXCLUDE outside a window specification")
-        close_idx = _matching_paren(text, open_idx)
+        close_idx = _matching(text, open_idx, mask)
         pre = text[:open_idx].rstrip()
         if not pre.upper().endswith("OVER"):
             raise ValueError("EXCLUDE in a non-window parenthesis")
@@ -2636,17 +2526,9 @@ def _rewrite_window_exclude(text: str) -> str:
             e = len(text[:end].rstrip())
             if e == 0 or text[e - 1] != ")":
                 return None
-            d, a_open = 0, None
-            for i in range(e - 1, -1, -1):
-                if _in_spans(i, spans):
-                    continue
-                if text[i] == ")":
-                    d += 1
-                elif text[i] == "(":
-                    d -= 1
-                    if d == 0:
-                        a_open = i
-                        break
+            a_open = _matching(text, e - 1, mask)
+            if a_open < 0:
+                return None
             fmx = re.search(r"([A-Za-z_]\w*)\s*$", text[:a_open])
             if fmx is None:
                 return None
@@ -2721,19 +2603,12 @@ def _rewrite_glob_similar(text: str) -> str:
     regexp_full_match). Operands are resolved with the shared
     operand-span helpers, so arbitrary expressions work on both sides."""
     while True:
-        spans = _literal_spans(text)
-        m = next(
-            (
-                g
-                for g in _GLOB_OP.finditer(text)
-                if not _in_spans(g.start(), spans)
-            ),
-            None,
-        )
+        mask = _code_mask(text)
+        m = next(_code_matches(_GLOB_OP, text, mask=mask), None)
         if m is None:
             return text
-        lhs_start = _operand_start(text, m.start(), spans)
-        rhs_end = _operand_end(text, m.end(), spans)
+        lhs_start = _operand_start(text, m.start(), mask)
+        rhs_end = _operand_end(text, m.end(), mask)
         lhs = text[lhs_start : m.start()].strip()
         rhs = text[m.end() : rhs_end].strip()
         if not lhs or not rhs:
@@ -2763,15 +2638,8 @@ def _rewrite_collate_expr(text: str) -> str:
     _CMP = r"(=|<>|!=|<=|>=|<|>)"
 
     while True:
-        spans = _literal_spans(text)
-        m = next(
-            (
-                c
-                for c in _COLLATE_EXPR.finditer(text)
-                if not _in_spans(c.start(), spans)
-            ),
-            None,
-        )
+        mask = _code_mask(text)
+        m = next(_code_matches(_COLLATE_EXPR, text, mask=mask), None)
         if m is None:
             return text
         parts = m.group(1).lower().split(".")
@@ -2786,7 +2654,7 @@ def _rewrite_collate_expr(text: str) -> str:
                     e = f"translate({e}, '{_ACCENT_SRC}', '{_ACCENT_DST}')"
             return e
 
-        lhs_start = _operand_start(text, m.start(), spans)
+        lhs_start = _operand_start(text, m.start(), mask)
         expr = text[lhs_start : m.start()].strip()
         if not expr:
             return text
@@ -2814,7 +2682,7 @@ def _rewrite_collate_expr(text: str) -> str:
 
         def _operand_after(pos: int) -> tuple[int, int] | None:
             ws = re.match(r"\s*", text[pos:]).end()
-            end = _operand_end(text, pos + ws, spans)
+            end = _operand_end(text, pos + ws, mask)
             return (pos + ws, end) if end > pos + ws else None
 
         tail = text[region_end:]
@@ -2836,7 +2704,7 @@ def _rewrite_collate_expr(text: str) -> str:
                     if o2:
                         extra.append(o2)
         elif pm:  # lhs2 OP folded
-            s2 = _operand_start(text, pm.start(), spans)
+            s2 = _operand_start(text, pm.start(), mask)
             if s2 < pm.start():
                 extra.append((s2, pm.start()))
         else:
@@ -2844,7 +2712,7 @@ def _rewrite_collate_expr(text: str) -> str:
             btm = re.search(r"\b(NOT\s+)?BETWEEN\s*$", before, re.I)
             anm = re.search(r"\bAND\s*$", before, re.I)
             if btm:
-                xs = _operand_start(text, btm.start(), spans)
+                xs = _operand_start(text, btm.start(), mask)
                 if xs < btm.start():
                     extra.append((xs, btm.start()))
                 am = re.match(r"\s*AND\b", tail, re.I)
@@ -2853,11 +2721,11 @@ def _rewrite_collate_expr(text: str) -> str:
                     if o:
                         extra.append(o)
             elif anm:
-                los = _operand_start(text, anm.start(), spans)
+                los = _operand_start(text, anm.start(), mask)
                 b2 = re.search(r"\b(NOT\s+)?BETWEEN\s*$", text[:los], re.I)
                 if b2 and los < anm.start():
                     extra.append((los, anm.start()))
-                    xs = _operand_start(text, b2.start(), spans)
+                    xs = _operand_start(text, b2.start(), mask)
                     if xs < b2.start():
                         extra.append((xs, b2.start()))
 
@@ -2895,12 +2763,11 @@ def _decorrelate_ordered_subqueries(text: str) -> str:
         if SETTINGS.get("default_null_order", "nulls_last") == "nulls_first"
         else "NULLS LAST"
     )
-    spans = _literal_spans(text)
+    mask = _code_mask(text)
+    depths = _depth_profile(text, mask)
     sites = []
-    for m in re.finditer(r"\(\s*SELECT\b", text, re.I):
-        if _in_spans(m.start(), spans):
-            continue
-        close = _matching_paren(text, m.start())
+    for m in _code_matches(r"\(\s*SELECT\b", text, re.I, mask=mask):
+        close = _matching(text, m.start(), mask)
         if close < 0:
             continue
         j = m.start() - 1
@@ -2912,14 +2779,12 @@ def _decorrelate_ordered_subqueries(text: str) -> str:
             # a comma separates EITHER select-list items (rewrite ok)
             # or FROM-list sources (derived table — skip): classify by
             # the nearest same-depth clause keyword before the comma
-            depths_t = _depth_profile(text)
-            d = depths_t[j]
+            d = depths[j]
             kw = None
-            for x in re.finditer(r"\b(SELECT|FROM|WHERE|GROUP|ORDER|"
-                                 r"HAVING|SET|VALUES|RETURNING)\b",
-                                 text[:j], re.I):
-                if depths_t[x.start()] == d \
-                        and not _in_spans(x.start(), spans):
+            for x in _code_matches(r"\b(SELECT|FROM|WHERE|GROUP|ORDER|"
+                                   r"HAVING|SET|VALUES|RETURNING)\b",
+                                   text[:j], re.I, mask=mask):
+                if depths[x.start()] == d:
                     kw = x.group(1).upper()
             if kw != "SELECT":
                 continue
@@ -2952,12 +2817,12 @@ def _decorrelate_ordered_subqueries(text: str) -> str:
 
 
 def _dsq_rewrite_one(sub: str, null_kw: str) -> str | None:
-    depths = _depth_profile(sub)
-    spans = _literal_spans(sub)
+    mask = _code_mask(sub)
+    depths = _depth_profile(sub, mask)
 
     def _top(pat: str) -> list["re.Match[str]"]:
-        return [x for x in re.finditer(pat, sub, re.I)
-                if depths[x.start()] == 0 and not _in_spans(x.start(), spans)]
+        return [x for x in _code_matches(pat, sub, re.I, mask=mask)
+                if depths[x.start()] == 0]
 
     if _top(r"\b(GROUP\s+BY|HAVING|DISTINCT|UNION|INTERSECT|EXCEPT|"
             r"WINDOW|QUALIFY)\b"):
@@ -3031,12 +2896,10 @@ def _dsq_rewrite_one(sub: str, null_kw: str) -> str | None:
     inner_words = {w.lower() for w in re.findall(r"\w+", from_seg)}
 
     def _outer_quals(seg: str) -> set[str]:
-        sspans = _literal_spans(seg)
         return {
             mm.group(1).lower()
-            for mm in re.finditer(r"\b(\w+)\s*\.\s*\w", seg)
-            if not _in_spans(mm.start(), sspans)
-            and mm.group(1).lower() not in inner_words
+            for mm in _code_matches(r"\b(\w+)\s*\.\s*\w", seg)
+            if mm.group(1).lower() not in inner_words
         }
 
     if not _outer_quals(sel):
@@ -3210,13 +3073,7 @@ def translate(text: str) -> str:
 
     out = _rewrite_calls(out, "median", _median_discrete)
     # DuckDB tolerates a trailing comma in the SELECT list
-    spans0 = _literal_spans(out)
-    out = re.sub(
-        r",(\s*FROM\b)",
-        lambda mm: mm.group(0) if _in_spans(mm.start(), spans0) else mm.group(1),
-        out,
-        flags=re.I,
-    )
+    out = _sub_code(r",(\s*FROM\b)", r"\1", out, re.I)
     out = _rewrite_qualify(out)
     out = _rewrite_distinct_on(out)
     out = _inline_named_windows(out)
@@ -3228,12 +3085,9 @@ def translate(text: str) -> str:
     # GROUP and let the EXCLUDE expansion subtract the peer group — exact
     # whenever the order key is unique (ties are input-order-dependent in
     # the reference itself).
-    spans_rp = _literal_spans(out)
-    out = re.sub(
+    out = _sub_code(
         r"(\bRANGE\s+BETWEEN\s+(?:[^()]|\([^()]*\))+?\s+AND\s+)0\s+PRECEDING\b",
-        lambda mm: mm.group(0) if _in_spans(mm.start(), spans_rp)
-        else mm.group(1) + "CURRENT ROW EXCLUDE GROUP",
-        out, flags=re.I,
+        r"\1CURRENT ROW EXCLUDE GROUP", out, re.I,
     )
     out = _rewrite_window_mode(out)
     out = _rewrite_window_nth(out)
@@ -3247,13 +3101,7 @@ def translate(text: str) -> str:
     # operands the reference's `//` degenerates to plain division — a
     # surface this text-level rewrite doesn't carry; sweeps gate any
     # mismatch before corpus promotion.)
-    spans_fd = _literal_spans(out)
-    out = re.sub(
-        r"(?<![/:])//(?!/)",
-        lambda mm: mm.group(0) if _in_spans(mm.start(), spans_fd)
-        else " div ",
-        out,
-    )
+    out = _sub_code(r"(?<![/:])//(?!/)", " div ", out)
 
     # (set shared by the registry bind below and the COPY TO parquet
     # metadata writer — duck types whose Spark carrier loses the name)
@@ -3387,13 +3235,8 @@ def translate(text: str) -> str:
     # HUGEINT — carry them exactly as DECIMAL(38,0). A UNARY minus is
     # absorbed into the literal: Spark coerces `-CASE …` (the cast
     # rewrite's later expansion) through DOUBLE, losing the digits again.
-    spans_big = _literal_spans(out)
-
     def _wrap_big(mm: "re.Match[str]") -> str:
-        if (
-            _in_spans(mm.start(), spans_big)
-            or int(mm.group(2)) <= 9223372036854775807
-        ):
+        if int(mm.group(2)) <= 9223372036854775807:
             return mm.group(0)
         neg = ""
         if mm.group(1):
@@ -3420,9 +3263,7 @@ def translate(text: str) -> str:
         body = f"CAST('{neg}{mm.group(2)}' AS DECIMAL(38,0))"
         return body if neg else (mm.group(1) or "") + body
 
-    out = re.sub(
-        r"(-\s*)?(?<![\w.'\"])(\d{19,38})(?![\w.])", _wrap_big, out
-    )
+    out = _sub_code(r"(-\s*)?(?<![\w.'\"])(\d{19,38})(?![\w.])", _wrap_big, out)
     _CAST_BLOB_HINT[0] = _statement_touches_blobs(out)
     out = _rewrite_blob_literals(out)
     # ±infinity temporal literals in postfix-cast spelling: the reference
@@ -3479,13 +3320,7 @@ def translate(text: str) -> str:
     # TIMESTAMP_LTZ — rename at every type position (::casts, CAST AS,
     # typed literals); runs after AT TIME ZONE whose dispatch reads the
     # original spelling
-    spans_tz = _literal_spans(out)
-    out = re.sub(
-        r"\bTIMESTAMPTZ\b",
-        lambda mm: mm.group(0) if _in_spans(mm.start(), spans_tz)
-        else "TIMESTAMP_LTZ",
-        out, flags=re.I,
-    )
+    out = _sub_code(r"\bTIMESTAMPTZ\b", "TIMESTAMP_LTZ", out, re.I)
     out = _rewrite_dynamic_interval(out)
     # unary minus on an UNSIGNED-cast chain wraps modulo 2^N (verified
     # live: -42::TINYINT::UTINYINT = 214, -1::INTEGER::UINTEGER =
@@ -3501,8 +3336,6 @@ def translate(text: str) -> str:
                 f"AS {carrier})")
 
     def _neg_dispatch(mm: "re.Match[str]") -> str:
-        if _in_spans(mm.start(), spans_nu):
-            return mm.group(0)
         # unary only: the previous non-space token must open an operand
         # position (start, '(', ',', an operator, or a keyword) — after
         # an identifier/number/')' the '-' is binary subtraction
@@ -3523,13 +3356,11 @@ def translate(text: str) -> str:
                     return mm.group(0)
         return _neg_unsigned(mm)
 
-    spans_nu = _literal_spans(out)
-    out = re.sub(
+    out = _sub_code(
         r"(?<![\w)'\"])-\s*("
         r"(?:\w+|'(?:[^']|'')*'|\([^()]*\))(?:\s*::\s*\w+)*\s*::\s*"
         r"(UTINYINT|USMALLINT|UINTEGER|UBIGINT))\b(?!\s*::)",
-        _neg_dispatch,
-        out, flags=re.I,
+        _neg_dispatch, out, re.I,
     )
     out = _rewrite_postfix_int_casts(out)
     out = _rewrite_int_casts(out)
@@ -3543,14 +3374,10 @@ def translate(text: str) -> str:
         if SETTINGS.get("default_null_order", "nulls_last") == "nulls_first"
         else "NULLS LAST"
     )
-    spans_oba = _literal_spans(out)
-    out = re.sub(
+    out = _sub_code(
         r"(\bORDER\s+BY\s+ALL\b)(\s+(?:ASC|DESC)\b)?(?!\s*NULLS)",
-        lambda m: m.group(0)
-        if _in_spans(m.start(), spans_oba)
-        else f"{m.group(1)}{m.group(2) or ''} {null_kw}",
-        out,
-        flags=re.I,
+        lambda m: f"{m.group(1)}{m.group(2) or ''} {null_kw}",
+        out, re.I,
     )
     # star modifiers: DuckDB `* EXCLUDE (cols)` == Spark 4 `* EXCEPT (cols)`
     out = re.sub(r"(\*\s*)EXCLUDE\b", r"\1EXCEPT", out)
@@ -3875,21 +3702,13 @@ def translate(text: str) -> str:
         return fn
 
     # typed literal: JSON '...' is a cast of the string literal
-    spans_jl = _literal_spans(out)
-    out = re.sub(
-        r"\bJSON\s+('(?:[^']|'')*')",
-        lambda mm: mm.group(0) if _in_spans(mm.start(), spans_jl)
-        else f"{mm.group(1)}::JSON",
-        out, flags=re.I,
-    )
-    spans_jc = _literal_spans(out)
-    jc_hits = []
-    for mm in re.finditer(r"::\s*JSON\b", out, re.I):
-        if not _in_spans(mm.start(), spans_jc):
-            jc_hits.append(mm)
-    for mm in reversed(jc_hits):
+    out = _sub_code(r"\bJSON\s+('(?:[^']|'')*')", r"\1::JSON", out, re.I)
+    # right to left: each operand lies left of its cast, in text that the
+    # rewrites of later casts have not touched, so one mask serves all
+    mask_jc = _code_mask(out)
+    for mm in reversed(list(_code_matches(r"::\s*JSON\b", out, re.I, mask=mask_jc))):
         try:
-            st = _operand_start(out, mm.start(), spans_jc)
+            st = _operand_start(out, mm.start(), mask_jc)
         except ValueError:
             continue
         operand = out[st:mm.start()].strip()
@@ -3929,16 +3748,15 @@ def translate(text: str) -> str:
     # DuckDB's dot-syntax extraction over the JSON value
     # (json_functions.cpp dot operator / json minify)
     while True:
-        spans_j = _literal_spans(out)
+        mask_j = _code_mask(out)
         mj = next(
-            (c for c in re.finditer(r"\bjson\s*\(", out, re.I)
-             if not _in_spans(c.start(), spans_j)
-             and not re.search(r"[.$]$|::\s*$", out[: c.start()])),
+            (c for c in _code_matches(r"\bjson\s*\(", out, re.I, mask=mask_j)
+             if not re.search(r"[.$]$|::\s*$", out[: c.start()])),
             None,
         )
         if mj is None:
             break
-        close_j = _matching_paren(out, mj.end() - 1)
+        close_j = _matching(out, mj.end() - 1, mask_j)
         if close_j < 0:
             break
         inner_j = out[mj.end():close_j]
@@ -4322,7 +4140,6 @@ def translate(text: str) -> str:
     )
     # CURRENT_USER/SESSION_USER/CURRENT_ROLE/USER value functions ->
     # 'duckdb'; CURRENT_CATALOG -> 'memory' (pg_catalog system_functions)
-    spans_vf = _literal_spans(out)
     # bare USER is the value function ONLY when no relation/alias named
     # `user` appears in the statement (the binder prefers the relation:
     # parser/test_value_functions.test aliases VALUES as user(x))
@@ -4332,29 +4149,15 @@ def translate(text: str) -> str:
                          out, re.I)
         else ""
     )
-    out = re.sub(
+    out = _sub_code(
         rf"(?<![.\w])(current_user|session_user|current_role{user_alt})\b"
         r"(?!\s*\(|\s*\.)",
-        lambda m: m.group(0) if _in_spans(m.start(), spans_vf) else "'duckdb'",
-        out,
-        flags=re.I,
+        "'duckdb'", out, re.I,
     )
-    spans_vf = _literal_spans(out)
-    out = re.sub(
-        r"\bcurrent_catalog\b(?!\s*\()",
-        lambda m: m.group(0) if _in_spans(m.start(), spans_vf) else "'memory'",
-        out,
-        flags=re.I,
-    )
+    out = _sub_code(r"\bcurrent_catalog\b(?!\s*\()", "'memory'", out, re.I)
     # pg_catalog-qualified function calls resolve like unqualified ones
     # (the pg_catalog VIEWS were bound before translate)
-    spans_pgq = _literal_spans(out)
-    out = re.sub(
-        r"\bpg_catalog\s*\.\s*(\w+\s*\()",
-        lambda m: m.group(0) if _in_spans(m.start(), spans_pgq)
-        else m.group(1),
-        out, flags=re.I,
-    )
+    out = _sub_code(r"\bpg_catalog\s*\.\s*(\w+\s*\()", r"\1", out, re.I)
     out = _rewrite_calls(
         out, "current_database",
         lambda a: f"'{SETTINGS.get('current_database', 'memory')}'"
@@ -4877,19 +4680,12 @@ def translate(text: str) -> str:
     # EXTRACT(dow ...) / date_part('dow', ...): Sunday=0 in the
     # reference (date_part.cpp); Spark's DOW is Sunday=1
     while True:
-        spans_dw = _literal_spans(out)
-        dm = next(
-            (
-                c
-                for c in re.finditer(r"\bEXTRACT\s*\(\s*dow\s+FROM\b", out, re.I)
-                if not _in_spans(c.start(), spans_dw)
-            ),
-            None,
-        )
+        mask_dw = _code_mask(out)
+        dm = next(_code_matches(r"\bEXTRACT\s*\(\s*dow\s+FROM\b", out, re.I, mask=mask_dw), None)
         if dm is None:
             break
         open_dw = out.index("(", dm.start())
-        close_dw = _matching_paren(out, open_dw)
+        close_dw = _matching(out, open_dw, mask_dw)
         inner_expr = out[dm.end():close_dw]
         out = out[: dm.start()] + f"(dayofweek({inner_expr}) - 1)" + out[close_dw + 1 :]
 
@@ -4911,24 +4707,16 @@ def translate(text: str) -> str:
         return f"CAST(FLOOR({inner} * {mult}) AS BIGINT)"
 
     while True:
-        spans_ss = _literal_spans(out)
-        sm = next(
-            (
-                c
-                for c in re.finditer(
-                    r"\bEXTRACT\s*\(\s*(second|seconds|millisecond|milliseconds|"
-                    r"microsecond|microseconds)\s+FROM\b",
-                    out,
-                    re.I,
-                )
-                if not _in_spans(c.start(), spans_ss)
-            ),
-            None,
-        )
+        mask_ss = _code_mask(out)
+        sm = next(_code_matches(
+            r"\bEXTRACT\s*\(\s*(second|seconds|millisecond|milliseconds|"
+            r"microsecond|microseconds)\s+FROM\b",
+            out, re.I, mask=mask_ss,
+        ), None)
         if sm is None:
             break
         open_ss = out.index("(", sm.start())
-        close_ss = _matching_paren(out, open_ss)
+        close_ss = _matching(out, open_ss, mask_ss)
         inner_expr = out[sm.end():close_ss]
         out = (
             out[: sm.start()]
@@ -5740,14 +5528,7 @@ def translate(text: str) -> str:
             if not lm:
                 return None
             v, idx, body = lm.groups()
-            spans_b = _literal_spans(body)
-            body2 = re.sub(
-                rf"\b{re.escape(idx)}\b",
-                lambda m: m.group(0)
-                if _in_spans(m.start(), spans_b)
-                else f"({idx} + 1)",
-                body,
-            )
+            body2 = _sub_code(rf"\b{re.escape(idx)}\b", lambda m: f"({idx} + 1)", body)
             return f"__lam1b_{fn_name}({a[0]}, ({v}, {idx}) -> {body2})"
 
         return _fix
@@ -5788,10 +5569,11 @@ def translate(text: str) -> str:
         lambda a: _list_sum_sql(a[0]) if len(a) == 1 else None,
     )
 
-    spans_free_sub = _make_call_renamer(out)
-    for old, new in _NAME_RULES:
-        out = spans_free_sub(out, old, new)
-        spans_free_sub = _make_call_renamer(out)
+    # one pass suffices for each rename table below: no target is a source
+    out = _sub_code(
+        rf"\b({'|'.join(_NAME_RULES)})\s*\(",
+        lambda mm: _NAME_RULES[mm.group(1).lower()] + "(", out, re.I,
+    )
 
     # USING SAMPLE n% (bernoulli) → TABLESAMPLE
     out = re.sub(r"\bUSING\s+SAMPLE\s+(\d+)\s*%", r"TABLESAMPLE (\1 PERCENT)", out, flags=re.I)
@@ -5819,36 +5601,25 @@ def translate(text: str) -> str:
 
     # DuckDB numeric type aliases Spark's parser rejects (postgres-style
     # intN/floatN names) — applies to both ::casts and CAST(... AS t)
-    for duck_t, spark_t in (
-        ("int1", "tinyint"), ("int2", "smallint"), ("int4", "int"),
-        ("int8", "bigint"), ("float4", "float"), ("float8", "double"),
-        ("logical", "boolean"), ("bytea", "binary"), ("blob", "binary"),
-        ("varbinary", "binary"),
-        # 128-bit widths widen to the engine's carriers (SURVEY §3 type
-        # map). Unsigned types are handled inside the cast rewrite with
-        # RANGE GUARDS (below) — a bare rename would silently accept
-        # out-of-range values; TIMESTAMP_NS/_MS/_S stay unmapped (their
-        # precision semantics aren't a rename).
-        ("hugeint", "decimal(38,0)"), ("uhugeint", "decimal(38,0)"),
-    ):
-        spans_t = _literal_spans(out)
-        pat_t = re.compile(rf"\b{duck_t}\b(?!\s*\()", re.I)
-        out = pat_t.sub(
-            lambda mm: mm.group(0) if _in_spans(mm.start(), spans_t) else spark_t, out
-        )
+    out = _sub_code(
+        rf"\b({'|'.join(_TYPE_ALIASES)})\b(?!\s*\()",
+        lambda mm: _TYPE_ALIASES[mm.group(1).lower()], out, re.I,
+    )
 
     # attached-catalog qualification: `alias.table` → the `alias__table`
     # view ATTACH registered (storage.attach; Spark temp views are
     # single-part names)
     from myduckdb_spark.storage import attached_aliases
 
+    views: dict[str, str] = {}
     for alias, tables in attached_aliases().items():
         for tbl, view in tables.items():
-            spans_a = _literal_spans(out)
-            pat_a = re.compile(rf"\b{alias}\.{tbl}\b", re.I)
-            out = pat_a.sub(
-                lambda mm: mm.group(0) if _in_spans(mm.start(), spans_a) else view, out
-            )
+            views.setdefault(f"{alias}.{tbl}".lower(), view)
+    if views:
+        out = _sub_code(
+            r"\b(" + "|".join(re.escape(q) for q in views) + r")\b",
+            lambda mm: views[mm.group(1).lower()], out, re.I,
+        )
     out = re.sub(r"\b__tof\s*\(", "typeof(", out)
     out = re.sub(r"\b__rawabs\s*\(", "abs(", out)
     # to_json options maps emitted by the union-carrier rewrite, shielded
@@ -5898,17 +5669,6 @@ def _list_sum_sql(l: str, exact_floats: bool = False) -> str:
         f"WHEN typeof(element_at({nn}, 1)) LIKE 'decimal%' THEN {dec} "
         f"ELSE {exact} END"
     )
-
-
-def _make_call_renamer(current: str):
-    def rename(text: str, old: str, new: str) -> str:
-        spans = _literal_spans(text)
-        pat = re.compile(rf"\b{old}\s*\(", re.I)
-        return pat.sub(
-            lambda m: m.group(0) if _in_spans(m.start(), spans) else f"{new}(", text
-        )
-
-    return rename
 
 
 # ---------------------------------------------------------------------------
@@ -6210,12 +5970,11 @@ def _parse_column_defs(
 
 def _split_off_on_conflict(source: str) -> tuple[str, str | None]:
     """Split `VALUES ... ON CONFLICT ...` at depth 0 outside literals."""
-    spans = _literal_spans(source)
-    depth = _depth_profile(source)
-    for m in re.finditer(r"\bON\s+CONFLICT\b", source, re.I):
-        if _in_spans(m.start(), spans) or depth[m.start()] != 0:
-            continue
-        return source[: m.start()], source[m.end():]
+    mask = _code_mask(source)
+    depth = _depth_profile(source, mask)
+    for m in _code_matches(r"\bON\s+CONFLICT\b", source, re.I, mask=mask):
+        if depth[m.start()] == 0:
+            return source[: m.start()], source[m.end():]
     return source, None
 
 
@@ -6226,21 +5985,9 @@ def _qualify_excluded(
     row's `excluded.c` → `__exc_c`; the stored row's `t.c` / `alias.c`
     (or unqualified `c`, the reference's binding) stays the plain
     column."""
-    spans = _literal_spans(expr)
-    out = re.sub(
-        r"\bexcluded\.(\w+)",
-        lambda m: m.group(0) if _in_spans(m.start(), spans) else f"__exc_{m.group(1)}",
-        expr,
-        flags=re.I,
-    )
+    out = _sub_code(r"\bexcluded\.(\w+)", r"__exc_\1", expr, re.I)
     for qual in filter(None, {table, alias}):
-        spans = _literal_spans(out)
-        out = re.sub(
-            rf"\b{re.escape(qual)}\.(\w+)",
-            lambda m: m.group(0) if _in_spans(m.start(), spans) else m.group(1),
-            out,
-            flags=re.I,
-        )
+        out = _sub_code(rf"\b{re.escape(qual)}\.(\w+)", r"\1", out, re.I)
     return out
 # Session settings the dialect layer honors (reference: config settings,
 # src/main/config.cpp). Updated by the SET front door and the corpus
@@ -6299,41 +6046,25 @@ def _inject_column_collations(text: str) -> str:
     for col, coll in cols.items():
         c = re.escape(col)
         # lhs: col OP ...  /  col [NOT] BETWEEN ...
-        spans = _literal_spans(text)
-        pat = re.compile(
+        text = _sub_code(
             rf"(?<![\w.'\"])((?:\w+\.)?{c})\s*(?:{_CMP}|((?:NOT\s+)?BETWEEN\b))",
-            re.I,
-        )
-        text = pat.sub(
-            lambda m: m.group(0)
-            if _in_spans(m.start(), spans)
-            else f"{m.group(1)} COLLATE {coll} {m.group(2) or m.group(3)}",
-            text,
+            lambda m: f"{m.group(1)} COLLATE {coll} {m.group(2) or m.group(3)}",
+            text, re.I,
         )
         # rhs: OP col — only when the lhs operand didn't already collate
-        spans = _literal_spans(text)
-        pat2 = re.compile(
-            rf"{_CMP}\s*((?:\w+\.)?{c})(?![\w.(])(?!\s+COLLATE\b)", re.I
-        )
-
         def _rhs(m: re.Match) -> str:
-            if _in_spans(m.start(), spans):
-                return m.group(0)
             if re.search(r"COLLATE\s+[\w.]+\s*$", m.string[: m.start()], re.I):
                 return m.group(0)
             return f"{m.group(1)} {m.group(2)} COLLATE {coll}"
 
-        text = pat2.sub(_rhs, text)
-        # ORDER BY col [ASC|DESC]
-        spans = _literal_spans(text)
-        pat3 = re.compile(
-            rf"(\bORDER\s+BY\s+)((?:\w+\.)?{c})(?![\w.(])(?!\s+COLLATE\b)", re.I
+        text = _sub_code(
+            rf"{_CMP}\s*((?:\w+\.)?{c})(?![\w.(])(?!\s+COLLATE\b)", _rhs, text, re.I
         )
-        text = pat3.sub(
-            lambda m: m.group(0)
-            if _in_spans(m.start(), spans)
-            else f"{m.group(1)}{m.group(2)} COLLATE {coll}",
-            text,
+        # ORDER BY col [ASC|DESC]
+        text = _sub_code(
+            rf"(\bORDER\s+BY\s+)((?:\w+\.)?{c})(?![\w.(])(?!\s+COLLATE\b)",
+            lambda m: f"{m.group(1)}{m.group(2)} COLLATE {coll}",
+            text, re.I,
         )
     return text
 
@@ -7151,13 +6882,10 @@ def _bind_prepared(text: str, argtext: str | None) -> str:
             named[m.group(1).lower()] = m.group(2).strip()
         else:
             positional.append(a.strip())
-    spans = _literal_spans(text)
-    out: list[str] = []
-    last = 0
     next_pos = 0
-    for m in re.finditer(r"\?|\$(\w+)", text):
-        if _in_spans(m.start(), spans):
-            continue
+
+    def bind(m: re.Match) -> str:
+        nonlocal next_pos
         name = m.group(1)
         if name is None:  # `?` — next positional
             if next_pos >= len(positional):
@@ -7173,11 +6901,9 @@ def _bind_prepared(text: str, argtext: str | None) -> str:
             if name.lower() not in named:
                 raise ValueError(f"EXECUTE: missing named parameter ${name}")
             val = named[name.lower()]
-        out.append(text[last:m.start()])
-        out.append(f"({val})")
-        last = m.end()
-    out.append(text[last:])
-    return "".join(out)
+        return f"({val})"
+
+    return _sub_code(r"\?|\$(\w+)", bind, text)
 
 
 def _expand_tuple_assignment(settext: str) -> dict[str, str]:
@@ -7190,7 +6916,7 @@ def _expand_tuple_assignment(settext: str) -> dict[str, str]:
         return _split_assignments(settext)
     cols = [c.strip().strip('"') for c in m.group(1).split(",")]
     rhs = m.group(2).strip()
-    if not (rhs.startswith("(") and _matching_paren(rhs, 0) == len(rhs) - 1):
+    if not (rhs.startswith("(") and _matching(rhs, 0) == len(rhs) - 1):
         raise ValueError(
             "Binder Error: multiple assignment needs a row value on the right side"
         )
@@ -7205,21 +6931,8 @@ def _expand_tuple_assignment(settext: str) -> dict[str, str]:
 
 def _split_assignments(settext: str) -> dict[str, str]:
     """Split `a = expr, b = expr` at depth 0 outside literals."""
-    spans = _literal_spans(settext)
-    depth, start, parts = 0, 0, []
-    for i, ch in enumerate(settext):
-        if _in_spans(i, spans):
-            continue
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            parts.append(settext[start:i])
-            start = i + 1
-    parts.append(settext[start:])
     out = {}
-    for p in parts:
+    for p in _split_args(settext):
         col, _, expr = p.partition("=")
         out[col.strip()] = expr.strip()
     return out
@@ -7287,11 +7000,7 @@ def _flatten_schema_refs(text: str) -> str:
     }
 
     def _strip_qualifier(text: str, q: str) -> str:
-        spans = _literal_spans(text)
-
         def _sub(mm: "re.Match[str]") -> str:
-            if _in_spans(mm.start(), spans):
-                return mm.group(0)
             # schema-qualified call: main.my_macro( → my_macro(
             if re.match(r"\w+\s*\(", text[mm.end():]):
                 return ""
@@ -7304,9 +7013,7 @@ def _flatten_schema_refs(text: str) -> str:
             prev = text[k + 1: j + 1].upper()
             return "" if prev in _TABLE_POS_KW else mm.group(0)
 
-        return re.sub(
-            rf"(?<![\w.\"]){q}\s*\.\s*(?=\w)", _sub, text, flags=re.I
-        )
+        return _sub_code(rf"(?<![\w.\"]){q}\s*\.\s*(?=\w)", _sub, text, re.I)
 
     text = _strip_qualifier(text, "main")
     if not re.match(r"\s*CREATE\b", text, re.I):
@@ -7316,7 +7023,6 @@ def _flatten_schema_refs(text: str) -> str:
     atts = _attached_lower()
     if not ischema.SCHEMAS and not atts:
         return text
-    spans = _literal_spans(text)
     _inner_counts: dict[str, int] = {}
     for s in ischema.SCHEMAS:
         if "__" in s:
@@ -7337,13 +7043,7 @@ def _flatten_schema_refs(text: str) -> str:
             } and (cur.lower() == db.lower()
                    or _inner_counts[inner.lower()] == 1):
                 alt = rf"(?:{alt}|{re.escape(inner)})"
-        pat = re.compile(rf"\b{alt}\s*\.\s*(\w+)", re.I)
-        text = pat.sub(
-            lambda mm: mm.group(0)
-            if _in_spans(mm.start(), spans) else f"{s}__{mm.group(1)}",
-            text,
-        )
-        spans = _literal_spans(text)
+        text = _sub_code(rf"\b{alt}\s*\.\s*(\w+)", rf"{s}__\1", text, re.I)
     if atts:
         # two-part `alias.obj` of an attached catalog: resolve through
         # the alias's schemas (reference binder catalog search,
@@ -7355,8 +7055,6 @@ def _flatten_schema_refs(text: str) -> str:
         sp = [e for e in SETTINGS.get("search_path", "").split(",") if e]
 
         def _alias_sub(mm: "re.Match[str]") -> str:
-            if _in_spans(mm.start(), spans):
-                return mm.group(0)
             alias, obj = mm.group(1), mm.group(2)
             if re.match(r"\s*\(", text[mm.end():]):
                 return mm.group(0)  # alias.fn(...) call, not a table
@@ -7384,28 +7082,24 @@ def _flatten_schema_refs(text: str) -> str:
                     return f"{s}__{obj}"
             return flat
 
-        alias_pat = re.compile(
+        text = _sub_code(
             rf"(?<![\w.\"])({'|'.join(re.escape(a) for a in amap)})"
             rf"\s*\.\s*(\w+)",
-            re.I,
+            _alias_sub, text, re.I,
         )
-        text = alias_pat.sub(_alias_sub, text)
-        spans = _literal_spans(text)
     sp = SETTINGS.get("search_path", "")
     if sp:
         order = [s for s in sp.split(",") if s and s != "main"]
 
         def _bare(mm: "re.Match[str]") -> str:
-            if _in_spans(mm.start(), spans):
-                return mm.group(0)
             for s in order:
                 if f"{s}__{mm.group(2)}".lower() in ischema.TABLE_META:
                     return f"{mm.group(1)}{s}__{mm.group(2)}"
             return mm.group(0)
 
-        text = re.sub(
+        text = _sub_code(
             r"\b(FROM\s+|JOIN\s+|INTO\s+|UPDATE\s+)(\w+)(?![\w]|\s*[.(])",
-            _bare, text, flags=re.I,
+            _bare, text, re.I,
         )
     return text
 
@@ -7801,9 +7495,9 @@ def _dml_statement(spark: SparkSession, text: str) -> DataFrame | None:
                     "Binder Error: window functions are not allowed in "
                     "DEFAULT expressions"
                 )
-            _span = _literal_spans(_dx)
+            _span = _code_mask(_dx)
             for im in re.finditer(r"[A-Za-z_]\w*", _dx):
-                if _in_spans(im.start(), _span):
+                if _span[im.start()]:
                     continue
                 word = im.group(0).lower()
                 called = re.match(r"\s*\(", _dx[im.end():]) is not None
@@ -8832,10 +8526,7 @@ def _bind_duckdb_tvfs(spark: SparkSession, text: str) -> str:
                   "pg_description", text, flags=re.I)
     used = {
         m.group(1).lower()
-        for m in re.finditer(
-            rf"(?<![\w.])({_DUCK_TVFS})\b(?!\s*\.)", text, re.I
-        )
-        if not _in_spans(m.start(), _literal_spans(text))
+        for m in _code_matches(rf"(?<![\w.])({_DUCK_TVFS})\b(?!\s*\.)", text, re.I)
     }
     if not used:
         return text
@@ -9097,12 +8788,9 @@ def _bind_duckdb_tvfs(spark: SparkSession, text: str) -> str:
             "objoid bigint, classoid bigint, objsubid int, "
             "description string",
         )
-    spans_tvf = _literal_spans(text)
-    return re.sub(
+    return _sub_code(
         rf"\b({_DUCK_TVFS})\b(\s*\(\s*\))?",
-        lambda m: m.group(0)
-        if _in_spans(m.start(), spans_tvf)
-        else f"__{m.group(1).lower()}", text, flags=re.I,
+        lambda m: f"__{m.group(1).lower()}", text, re.I,
     )
 
 
@@ -9116,15 +8804,11 @@ def _bind_describe_subqueries(spark: SparkSession, text: str) -> str:
     pat = re.compile(r"\(\s*(DESCRIBE|SHOW|SUMMARIZE)\b", re.I)
     pos = 0
     while True:
-        spans = _literal_spans(text)
-        m = next(
-            (c for c in pat.finditer(text, pos)
-             if not _in_spans(c.start(), spans)),
-            None,
-        )
+        mask = _code_mask(text)
+        m = next(_code_matches(pat, text, pos=pos, mask=mask), None)
         if m is None:
             return text
-        close = _matching_paren(text, m.start())
+        close = _matching(text, m.start(), mask)
         if close < 0:
             return text
         inner = text[m.start() + 1: close].strip()
@@ -9287,7 +8971,7 @@ def _fix_unpivot_case(spark: SparkSession, text: str) -> str:
     except Exception:
         return text
     open_idx = m.start(1)
-    close = _matching_paren(text, open_idx)
+    close = _matching(text, open_idx)
     if close < 0:
         return text
     body = text[open_idx + 1 : close]
@@ -9332,15 +9016,12 @@ def _expand_columns_star(spark: SparkSession, text: str) -> str:
     except Exception:
         return text
     while True:
-        spans = _literal_spans(text)
-        m = next(
-            (c for c in _COLUMNS_STAR.finditer(text) if not _in_spans(c.start(), spans)),
-            None,
-        )
+        mask = _code_mask(text)
+        m = next(_code_matches(_COLUMNS_STAR, text, mask=mask), None)
         if m is None:
             return text
         open_idx = m.end() - 1
-        close = _matching_paren(text, open_idx)
+        close = _matching(text, open_idx, mask)
         arg = text[open_idx + 1 : close].strip()
         if arg == "*":
             matched = cols
@@ -9355,15 +9036,12 @@ def _expand_columns_star(spark: SparkSession, text: str) -> str:
         # `min(COLUMNS(*))` → `min(i), min(j)`. Find the enclosing item's
         # boundaries: nearest same-depth ',' / SELECT before, ',' / FROM
         # after.
-        depth = _depth_profile(text)
-        spans2 = _literal_spans(text)
+        depth = _depth_profile(text, mask)
         # enclosing SELECT = last one before the call whose depth equals
         # the minimum depth on the path back from the call (i.e. no paren
         # closes between it and the COLUMNS token)
         sm2 = None
-        for c2 in re.finditer(r"\bSELECT\b(\s+DISTINCT\b)?", text[:m.start()], re.I):
-            if _in_spans(c2.start(), spans2):
-                continue
+        for c2 in _code_matches(r"\bSELECT\b(\s+DISTINCT\b)?", text[:m.start()], re.I, mask=mask):
             if depth[c2.start()] == min(depth[c2.start() : m.start() + 1]):
                 sm2 = c2
         if sm2 is None:
@@ -9376,18 +9054,16 @@ def _expand_columns_star(spark: SparkSession, text: str) -> str:
         # is the call in the SELECT list, or in a later clause (ORDER BY
         # COLUMNS('re') — expands to bare per-column sort keys)?
         clause_kw = None
-        for c3 in re.finditer(
+        for c3 in _code_matches(
             r"\b(FROM|WHERE|GROUP\s+BY|HAVING|QUALIFY|WINDOW|ORDER\s+BY)\b",
-            text[sm2.end() : m.start()],
-            re.I,
+            text[sm2.end() : m.start()], re.I, mask=mask[sm2.end():],
         ):
-            pos3 = sm2.end() + c3.start()
-            if not _in_spans(pos3, spans2) and depth[pos3] == d0:
+            if depth[sm2.end() + c3.start()] == d0:
                 clause_kw = c3
         in_select_list = clause_kw is None
         start = sm2.end() if in_select_list else sm2.end() + clause_kw.end()
         for p in range(m.start() - 1, start - 1, -1):
-            if not _in_spans(p, spans2) and text[p] == "," and depth[p] == d0:
+            if not mask[p] and text[p] == "," and depth[p] == d0:
                 start = p + 1
                 break
         end = len(text)
@@ -9398,7 +9074,7 @@ def _expand_columns_star(spark: SparkSession, text: str) -> str:
         )
         p = close + 1
         while p < len(text):
-            if not _in_spans(p, spans2) and depth[p] == d0:
+            if not mask[p] and depth[p] == d0:
                 if text[p] == ",":
                     end = p
                     break
@@ -9435,21 +9111,18 @@ def _recursive_union_distinct(spark: SparkSession, text: str):
     if m is None:
         return None
     open_idx = m.start(3)
-    close = _matching_paren(text, open_idx)
+    close = _matching(text, open_idx)
     if close < 0:
         return None
     rest = text[close + 1 :].strip()
     if rest.startswith(","):  # multiple CTEs — out of this path's scope
         return None
     body = text[open_idx + 1 : close]
-    spans = _literal_spans(body)
-    depths = _depth_profile(body)
+    mask = _code_mask(body)
+    depths = _depth_profile(body, mask)
     um = next(
-        (
-            u
-            for u in re.finditer(r"\bUNION\b(\s+ALL\b)?", body, re.I)
-            if not _in_spans(u.start(), spans) and depths[u.start()] == 0
-        ),
+        (u for u in _code_matches(r"\bUNION\b(\s+ALL\b)?", body, re.I, mask=mask)
+         if depths[u.start()] == 0),
         None,
     )
     if um is None or um.group(1):  # no UNION, or UNION ALL → native
@@ -9478,18 +9151,11 @@ def _split_statements(text: str) -> list[str]:
     hold only whitespace/comments (trailing ``; -- note``) are dropped."""
 
     def _blank(p: str) -> bool:
-        return not re.sub(r"--[^\n]*", "", p).strip()
+        return not _LITERAL.sub(
+            lambda m: "" if m.group(0).startswith("--") else m.group(0), p
+        ).strip()
 
-    spans = _literal_spans(text)
-    parts, start = [], 0
-    for i, ch in enumerate(text):
-        if ch == ";" and not _in_spans(i, spans):
-            if not _blank(text[start:i]):
-                parts.append(text[start:i])
-            start = i + 1
-    if not _blank(text[start:]):
-        parts.append(text[start:])
-    return parts or [text]
+    return [p for p in _split_args(text, ";", nest="") if not _blank(p)] or [text]
 
 
 _FILE_FROM = re.compile(
@@ -9659,11 +9325,7 @@ def _bind_file_scans(spark: SparkSession, text: str) -> str:
         return view
 
     while True:
-        spans = _literal_spans(text)
-        fm = next(
-            (c for c in _FILE_FROM.finditer(text) if not _in_spans(c.start(), spans)),
-            None,
-        )
+        fm = next(_code_matches(_FILE_FROM, text), None)
         if fm is None:
             break
         view = bind(fm.group(2), None, {})
@@ -9671,18 +9333,11 @@ def _bind_file_scans(spark: SparkSession, text: str) -> str:
             break
         text = text[: fm.start()] + f"{fm.group(1)} {view}" + text[fm.end():]
     while True:
-        spans = _literal_spans(text)
-        rm = next(
-            (
-                c
-                for c in _READ_FN_FROM.finditer(text)
-                if not _in_spans(c.start(), spans)
-            ),
-            None,
-        )
+        mask = _code_mask(text)
+        rm = next(_code_matches(_READ_FN_FROM, text, mask=mask), None)
         if rm is None:
             break
-        close = _matching_paren(text, rm.end() - 1)
+        close = _matching(text, rm.end() - 1, mask)
         if close < 0:
             break
         args = [a.strip() for a in _split_args(text[rm.end() : close])]
@@ -9799,30 +9454,19 @@ def _inline_select_aliases(text: str) -> str:
     """Substitute top-level SELECT-list aliases referenced in WHERE /
     HAVING with their expressions (the reference's lateral alias binding;
     only used as an error-driven retry so working queries never change)."""
-    depth = _depth_profile(text)
-    spans = _literal_spans(text)
+    mask = _code_mask(text)
+    depth = _depth_profile(text, mask)
     sm = re.search(r"\bSELECT\b(\s+DISTINCT\b)?", text, re.I)
     if sm is None or depth[sm.start()] != 0:
         return text
     fm = next(
-        (
-            c
-            for c in re.finditer(r"\bFROM\b", text, re.I)
-            if c.start() > sm.end()
-            and depth[c.start()] == 0
-            and not _in_spans(c.start(), spans)
-        ),
+        (c for c in _code_matches(r"\bFROM\b", text, re.I, mask=mask)
+         if c.start() > sm.end() and depth[c.start()] == 0),
         None,
     )
     if fm is None:
         return text
-    # select items: depth-0 comma split
-    items, start = [], sm.end()
-    for p in range(sm.end(), fm.start()):
-        if text[p] == "," and depth[p] == 0 and not _in_spans(p, spans):
-            items.append(text[start:p])
-            start = p + 1
-    items.append(text[start : fm.start()])
+    items = _split_args(text[sm.end() : fm.start()], nest="(")
     aliases: dict[str, str] = {}
     for it in items:
         am = re.fullmatch(r"(?s)\s*(.+?)\s+AS\s+([A-Za-z_]\w*)\s*", it, re.I)
@@ -9832,46 +9476,32 @@ def _inline_select_aliases(text: str) -> str:
         return text
     for kw in ("WHERE", "HAVING"):
         cm = next(
-            (
-                c
-                for c in re.finditer(rf"\b{kw}\b", text, re.I)
-                if c.start() > fm.end()
-                and depth[c.start()] == 0
-                and not _in_spans(c.start(), spans)
-            ),
+            (c for c in _code_matches(rf"\b{kw}\b", text, re.I, mask=mask)
+             if c.start() > fm.end() and depth[c.start()] == 0),
             None,
         )
         if cm is None:
             continue
         em = next(
-            (
-                c
-                for c in _CLAUSE_AFTER_WHERE.finditer(text, cm.end())
-                if depth[c.start()] == 0 and not _in_spans(c.start(), spans)
-            ),
+            (c for c in _code_matches(_CLAUSE_AFTER_WHERE, text, pos=cm.end(), mask=mask)
+             if depth[c.start()] == 0),
             None,
         )
         end = em.start() if em else len(text)
         clause = text[cm.end() : end]
-        cspans = _literal_spans(clause)
         for al, ex in aliases.items():
 
             def _sub(mm):
-                if _in_spans(mm.start(), cspans):
-                    return mm.group(0)
                 before = clause[: mm.start()].rstrip()
                 if before.endswith("."):
                     return mm.group(0)  # qualified name, not the alias
                 return f"({ex})"
 
-            clause = re.sub(
-                rf"\b{re.escape(al)}\b(?!\s*\()", _sub, clause, flags=re.I
-            )
-            cspans = _literal_spans(clause)
+            clause = _sub_code(rf"\b{re.escape(al)}\b(?!\s*\()", _sub, clause, re.I)
         text = text[: cm.end()] + clause + text[end:]
         # positions shifted — recompute for the next clause keyword
-        depth = _depth_profile(text)
-        spans = _literal_spans(text)
+        mask = _code_mask(text)
+        depth = _depth_profile(text, mask)
     return text
 
 
@@ -9882,13 +9512,8 @@ def _insert_join_lateral(text: str) -> str:
     Spark requires the explicit keyword. Error-driven retry only: insert
     LATERAL after JOIN when the operand is a parenthesized subquery, so
     working queries never change."""
-    spans = _literal_spans(text)
-    return re.sub(
-        r"\b(JOIN)(\s*)\((?=\s*(?:SELECT|WITH|VALUES)\b)",
-        lambda m: m.group(0) if _in_spans(m.start(), spans)
-        else f"{m.group(1)} LATERAL (",
-        text,
-        flags=re.I,
+    return _sub_code(
+        r"\b(JOIN)(\s*)\((?=\s*(?:SELECT|WITH|VALUES)\b)", r"\1 LATERAL (", text, re.I
     )
 
 
@@ -9964,12 +9589,7 @@ def _bind_natural_joins(spark: SparkSession, text: str) -> str:
         return " ".join(parts)
 
     for _ in range(8):  # innermost-out passes over nested chains
-        spans = _literal_spans(text)
-        new = _NATURAL_CHAIN.sub(
-            lambda m: m.group(0) if _in_spans(m.start(), spans)
-            else repl(m),
-            text,
-        )
+        new = _sub_code(_NATURAL_CHAIN, repl, text)
         if new == text:
             return text
         text = new
@@ -10092,15 +9712,13 @@ def sql(
                 return spark.sql(lateral)
             except Exception:
                 raise e
-    spans = _literal_spans(out)
-    dollars = [m for m in re.finditer(r"\$([A-Za-z_]\w*|\d+)", out) if not _in_spans(m.start(), spans)]
-    if dollars:
-        out = re.sub(
-            r"\$([A-Za-z_]\w*|\d+)",
-            lambda m: m.group(0) if _in_spans(m.start(), spans) else
-            (f":p{m.group(1)}" if m.group(1).isdigit() else f":{m.group(1)}"),
-            out,
-        )
+    bound = _sub_code(
+        r"\$([A-Za-z_]\w*|\d+)",
+        lambda m: f":p{m.group(1)}" if m.group(1).isdigit() else f":{m.group(1)}",
+        out,
+    )
+    if bound != out:
+        out = bound
         if isinstance(args, (list, tuple)):
             args = {f"p{i}": v for i, v in enumerate(args, 1)}
     return spark.sql(out, args=args)

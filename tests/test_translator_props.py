@@ -62,3 +62,14 @@ def test_qualify_hoist_preserves_alias(alias):
 def test_doubled_quote_literal():
     out = translate("SELECT 'it''s len(x)' AS c, len(xs) AS n FROM t")
     assert "'it''s len(x)'" in out
+
+
+def test_macro_body_comments_are_not_substituted():
+    # a quote inside a comment must not shift the literal mask: the
+    # parameter name stays untouched in the comment AND in the literal
+    macros.create_macro("cmt_m", ["x"], "x /* it's x */ + length('x') -- x\n")
+    try:
+        out = macros.expand_macros("SELECT cmt_m(a) FROM t")
+        assert "(a) /* it's x */ + length('x') -- x\n" in out
+    finally:
+        macros.drop_macro("cmt_m")

@@ -293,17 +293,17 @@ def _approx_positions(sql: str) -> list[int] | None:
     resolved (nested SELECT, ``*`` items), caller falls back to the
     whole-row tolerance."""
     from myduckdb_spark.sql import (
-        _depth_profile, _in_spans, _literal_spans, _split_args,
+        _code_mask, _code_matches, _depth_profile, _split_args,
     )
 
     m = re.match(r"\s*SELECT\s+(DISTINCT\s+)?", sql, re.I)
     if not m:
         return None
-    spans = _literal_spans(sql)
-    depths = _depth_profile(sql)
+    mask = _code_mask(sql)
+    depths = _depth_profile(sql, mask)
     end = next(
-        (f.start() for f in re.finditer(r"\bFROM\b", sql, re.I)
-         if not _in_spans(f.start(), spans) and depths[f.start()] == 0),
+        (f.start() for f in _code_matches(r"\bFROM\b", sql, re.I, mask=mask)
+         if depths[f.start()] == 0),
         len(sql),
     )
     try:
