@@ -19,8 +19,10 @@ Two registration surfaces per macro kind:
   call sites in the query text before handing it to spark.sql — same
   bind-time-expansion semantics as the reference binder.
 
-Macros expand recursively (a macro body may call other macros); expansion
-is iterated to fixpoint with a depth guard against cycles.
+Macros expand recursively (a macro body may call other macros): one pass
+rewrites each call site once, and ``expand_macros`` repeats on a changed
+text up to 16 levels deep, so a cycle — a macro calling itself included —
+raises RecursionError.
 """
 
 from __future__ import annotations

@@ -20,8 +20,21 @@ that knows where string literals and comments are:
 * ``_split_args(text, sep, nest)`` — split on a separator at bracket
   depth 0; ``_depth_profile(text)`` — paren depth before each character;
 * ``_rewrite_calls(text, name, fn)`` — rewrite each call site
-  ``name(args)`` from its parsed argument list, so nested calls and commas
-  in subexpressions are handled.
+  ``name(args)`` once from its parsed argument list, right to left, so
+  nested calls and commas in subexpressions are handled.
+
+``translate()`` expands macros and then runs ``_PASSES``, one ordered
+table. An entry is either a text step, a function ``text -> text``, or a
+call rule, a ``(call name, handler)`` pair. A call rule rewrites each site
+once and never rescans its own output, so a handler may emit a call of its
+own name (``any_value(x)`` → ``any_value(x, true)``). The loop skips a call
+rule whose name is not among the text's call tokens.
+
+Order is the one contract between entries: a rule sees every earlier
+rule's output. Where a rule emits a call that a *later* rule would rewrite
+again, it emits a placeholder name instead (``__rr_all``, ``__substr``,
+``__isnan``, ``__tjm``), and a ``_sub_code`` step right after that later
+rule renames it back, in code only.
 
 The JSON arrow rewrite distinguishes ``j -> '$.k'`` from a lambda arrow
 (``x -> 'y'`` inside transform/filter/...) by locating lambda-header
@@ -33,6 +46,7 @@ from __future__ import annotations
 
 import os
 import re
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -149,31 +163,25 @@ def _depth_profile(text: str, mask: bytearray | None = None) -> list[int]:
 
 
 def _rewrite_calls(text: str, name: str, fn) -> str:
-    """Rewrite every call site ``name(args...)`` via ``fn(list_of_args) ->
-    replacement_text``. Processes right-to-left so positions stay valid;
-    re-runs until fixpoint to catch calls revealed by inner rewrites."""
-    pat = re.compile(rf"\b{name}\s*\(", re.I)
-    while pat.search(text):
+    """Rewrite each call site ``name(args...)`` once, to ``fn(args)``; a
+    site where ``fn`` returns None stays. Sites are taken right to left,
+    so an inner call is rewritten before the call around it and every
+    site still to do keeps its position. The replacement text is never
+    scanned again, so ``fn`` may emit a ``name(...)`` call itself."""
+    mask = _code_mask(text)
+    sites = list(_code_matches(rf"\b{name}\s*\(", text, re.I, mask=mask))
+    for m in reversed(sites):
+        open_idx = m.end() - 1
+        close_idx = _matching(text, open_idx, mask)
+        if close_idx < 0:
+            continue
+        args = _split_args(text[open_idx + 1 : close_idx],
+                           mask=mask[open_idx + 1 : close_idx])
+        rep = fn([a.strip() for a in args])
+        if rep is None:
+            continue
+        text = text[: m.start()] + rep + text[close_idx + 1 :]
         mask = _code_mask(text)
-        sites = list(_code_matches(pat, text, mask=mask))
-        if not sites:
-            return text
-        changed = False
-        for m in reversed(sites):
-            open_idx = m.end() - 1
-            close_idx = _matching(text, open_idx, mask)
-            if close_idx < 0:
-                continue
-            args = _split_args(text[open_idx + 1 : close_idx],
-                               mask=mask[open_idx + 1 : close_idx])
-            rep = fn([a.strip() for a in args])
-            if rep is None:
-                continue
-            text = text[: m.start()] + rep + text[close_idx + 1 :]
-            mask = _code_mask(text)
-            changed = True
-        if not changed:
-            return text
     return text
 
 
@@ -229,9 +237,6 @@ def _lambda_arrow_positions(text: str, mask: bytearray) -> set[int]:
                 banned.add(s + hm.start(1))
             s += len(arg) + 1
     return banned
-
-
-_ARROW = re.compile(r"([A-Za-z_][\w.]*(?:\([^()]*\))?)\s*(->>|->)\s*'([^']+)'")
 
 
 def _rewrite_json_arrows(text: str) -> str:
@@ -1736,9 +1741,10 @@ def _rewrite_int_casts(text: str) -> str:
         if am and am.group(2).lower() in ("decimal", "numeric"):
             return head + f"{kw}({am.group(1)} AS DECIMAL(18,3))" + rest
         if am and am.group(2).lower() in ("varchar", "text", "bpchar"):
-            # __rr_all = Spark-native regexp_replace sentinel (renamed at
-            # the end of translate; the DuckDB-dialect regexp_replace
-            # rewrite must not reinterpret this generated call).
+            # __rr_all = Spark-native regexp_replace placeholder: it
+            # shields this generated call from the DuckDB-dialect
+            # regexp_replace rule, which runs later
+            # (_PASSES renames it right after that rule).
             # Float specials render as nan/inf/-inf in the reference
             # (float→string cast, fmt grammar) vs Spark's NaN/Infinity —
             # exact-match CASE so ordinary strings pass through.
@@ -1752,7 +1758,7 @@ def _rewrite_int_casts(text: str) -> str:
                 # eagerly, so this branch only exists when needed)
                 return (
                     head
-                    + f"(CASE WHEN __tof(({am.group(1)})) = 'binary' "
+                    + f"(CASE WHEN typeof(({am.group(1)})) = 'binary' "
                     f"THEN __blob_str({am.group(1)}) "
                     f"WHEN {s} = 'NaN' THEN 'nan' "
                     f"WHEN {s} = 'Infinity' THEN 'inf' "
@@ -2948,364 +2954,358 @@ def _dsq_rewrite_one(sub: str, null_kw: str) -> str | None:
     return f"SELECT {sel.strip()} FROM ({inner}) {alias}"
 
 
-def translate(text: str) -> str:
-    """DuckDB dialect → Spark SQL dialect (token-aware, conservative)."""
-    from myduckdb_spark.functions.macros import expand_macros
+# ------------------------------------------------------------ translate
+#
+# ``translate()`` runs one ordered table, ``_PASSES``. A text step is a
+# function ``text -> text``; a call rule is a ``(call name, handler)`` pair
+# that ``_rewrite_calls`` applies once to every call site of that name. The
+# steps and handlers below appear in table order. A later entry sees every
+# earlier entry's output, so the order matters wherever one rule emits a
+# call that another rule rewrites.
 
-    # current_query() returns the statement text AS SENT (pg_catalog
-    # system functions) — capture before any rewrite touches it
-    if re.search(r"\bcurrent_query\s*\(", text, re.I):
-        _raw_q = text.strip().replace("'", "''")
-        text = re.sub(r"\bpg_catalog\s*\.\s*(?=current_query\s*\()", "",
-                      text, flags=re.I)
-        text = _rewrite_calls(
-            text, "current_query",
-            lambda a, _q=_raw_q: f"'{_q}'" if not a or not a[0] else None,
-        )
 
-    out = expand_macros(text)  # bind-time macro expansion, before all rules
-    # CREATE TYPE aliases (reference type_catalog_entry): resolve
-    # ::alias / CAST(x AS alias) to the base type spelling BEFORE the
-    # generic type rules, so e.g. `1::test_type` with test_type AS int32
-    # binds like `1::INT32` (catalog/comment_on.test)
-    try:
-        from myduckdb_spark import infoschema as _isch_ta
-
-        for _al, _base in _isch_ta.TYPE_ALIASES.items():
-            if not re.search(rf"\b{re.escape(_al)}\b", out, re.I):
-                continue
-            out = re.sub(rf"(::\s*){re.escape(_al)}\b", rf"\g<1>{_base}",
-                         out, flags=re.I)
-            out = re.sub(rf"(\bAS\s+){re.escape(_al)}\b(\s*\))",
-                         rf"\g<1>{_base}\g<2>", out, flags=re.I)
-    except Exception:
-        pass
-    # DuckDB string literals are standard SQL (backslash is an ordinary
-    # character); Spark C-escapes them. Double every backslash INSIDE
-    # '-literals first, so the original literal reaches the engine
-    # byte-identical. Every later rewrite writes Spark-style literals.
-    out = _escape_literal_backslashes(out)
-    out = _rewrite_array_types(out)
-    out = _rewrite_bracket_lists(out)
-    out = _rewrite_struct_braces(out)
-    out = _rewrite_json_dot_syntax(out)
-    out = _rewrite_index_brackets(out)
-    out = _decorrelate_ordered_subqueries(out)
-    out = _rewrite_table_functions(out)
-    out = _rewrite_positional_join(out)
-    out = _rewrite_window_filter(out)
-    # quantile family (reference quantile.cpp): quantile_cont
-    # interpolates (DOUBLE) = Spark's exact percentile; quantile_disc /
-    # quantile return the INPUT type — route through the WITHIN GROUP
-    # machinery below (which preserves the element type)
-    out = _rewrite_calls(
-        out, "quantile_cont",
-        lambda a: f"percentile({a[0]}, {a[1]})" if len(a) == 2 else (
-            f"percentile({a[0]}, 0.5)" if len(a) == 1 else None
-        ),
+def _bind_current_query(text: str) -> str:
+    """current_query() returns the statement text AS SENT (pg_catalog
+    system functions) — bound before macro expansion touches it."""
+    raw = text.strip().replace("'", "''")
+    text = re.sub(r"\bpg_catalog\s*\.\s*(?=current_query\s*\()", "", text,
+                  flags=re.I)
+    return _rewrite_calls(
+        text, "current_query",
+        lambda a: f"'{raw}'" if not a or not a[0] else None,
     )
-    for _qd in ("quantile_disc", "quantile"):
-        out = _rewrite_calls(
-            out, _qd,
-            lambda a: (
-                f"percentile_disc({a[1]}) WITHIN GROUP (ORDER BY {a[0]})"
-                if len(a) == 2 else
-                f"percentile_disc(0.5) WITHIN GROUP (ORDER BY {a[0]})"
-                if len(a) == 1 else None
-            ),
-        )
-    # percentile_disc(p) WITHIN GROUP (ORDER BY e [DESC]) — Spark's
-    # builtin returns DOUBLE; the reference returns the INPUT type
-    # (ordered_aggregates.test: percentile_disc over ints = int).
-    # Collect-sort-index preserves the element type; index = smallest k
-    # with cum_dist >= p, i.e. ceil(p*n) (1-based, floor 1).
-    def _pdisc(mt: "re.Match[str]") -> str:
-        p, e, direc = mt.group(1), mt.group(2).strip(), (mt.group(3) or "")
-        asc = "false" if re.search(r"\bDESC\b", direc, re.I) else "true"
-        srt = f"sort_array(collect_list({e}), {asc})"
 
-        def pick(frac: str) -> str:
-            # negative fractions count from the TOP (quantile.cpp:
-            # disc(-0.5) over 6 = the 4th ascending = n + floor(p·n) + 1)
-            idx = (
-                f"CASE WHEN ({frac}) < 0 THEN size({srt}) + "
-                f"CAST(floor(({frac}) * size({srt})) AS INT) + 1 "
-                f"ELSE greatest(CAST(ceil(({frac}) * size({srt})) AS INT), "
-                f"1) END"
-            )
-            return f"try_element_at({srt}, {idx})"
 
-        if re.match(r"\s*(\[|array\s*\()", p, re.I):
-            return f"transform({p}, __pq -> {pick('__pq')})"
-        return pick(p)
+def _bind_type_aliases(text: str) -> str:
+    """CREATE TYPE aliases (reference type_catalog_entry): resolve
+    ::alias / CAST(x AS alias) to the base type spelling BEFORE the
+    generic type rules, so e.g. `1::test_type` with test_type AS int32
+    binds like `1::INT32` (catalog/comment_on.test). Reads the session's
+    aliases each time it runs."""
+    from myduckdb_spark import infoschema
 
-    # direction group also absorbs a NULLS FIRST/LAST modifier (nulls are
-    # dropped by collect_list, so placement never affects the result —
-    # but leaving it in the expression text broke the Spark parse) and
-    # the expression group tolerates one paren-nesting level.
-    out = re.sub(
+    for alias, base in infoschema.TYPE_ALIASES.items():
+        al = re.escape(alias)
+        if not re.search(rf"\b{al}\b", text, re.I):
+            continue
+        text = re.sub(rf"(::\s*){al}\b", lambda m: m.group(1) + base,
+                      text, flags=re.I)
+        text = re.sub(rf"(\bAS\s+){al}\b(\s*\))",
+                      lambda m: m.group(1) + base + m.group(2),
+                      text, flags=re.I)
+    return text
+
+
+# quantile family (reference quantile.cpp): quantile_cont interpolates
+# (DOUBLE) = Spark's exact percentile; quantile_disc / quantile return the
+# INPUT type — routed through the percentile_disc WITHIN GROUP step below
+# (which preserves the element type)
+def _quantile_cont(a: list[str]) -> str | None:
+    if len(a) == 2:
+        return f"percentile({a[0]}, {a[1]})"
+    return f"percentile({a[0]}, 0.5)" if len(a) == 1 else None
+
+
+def _quantile_disc(a: list[str]) -> str | None:
+    if len(a) == 2:
+        return f"percentile_disc({a[1]}) WITHIN GROUP (ORDER BY {a[0]})"
+    if len(a) == 1:
+        return f"percentile_disc(0.5) WITHIN GROUP (ORDER BY {a[0]})"
+    return None
+
+
+def _pdisc_pick(srt: str, frac: str) -> str:
+    # negative fractions count from the TOP (quantile.cpp: disc(-0.5)
+    # over 6 = the 4th ascending = n + floor(p·n) + 1)
+    idx = (
+        f"CASE WHEN ({frac}) < 0 THEN size({srt}) + "
+        f"CAST(floor(({frac}) * size({srt})) AS INT) + 1 "
+        f"ELSE greatest(CAST(ceil(({frac}) * size({srt})) AS INT), "
+        f"1) END"
+    )
+    return f"try_element_at({srt}, {idx})"
+
+
+def _pdisc(mt: "re.Match[str]") -> str:
+    p, e, direc = mt.group(1), mt.group(2).strip(), (mt.group(3) or "")
+    asc = "false" if re.search(r"\bDESC\b", direc, re.I) else "true"
+    srt = f"sort_array(collect_list({e}), {asc})"
+    if re.match(r"\s*(\[|array\s*\()", p, re.I):
+        return f"transform({p}, __pq -> {_pdisc_pick(srt, '__pq')})"
+    return _pdisc_pick(srt, p)
+
+
+def _rewrite_percentile_disc(text: str) -> str:
+    """percentile_disc(p) WITHIN GROUP (ORDER BY e [DESC]) — Spark's
+    builtin returns DOUBLE; the reference returns the INPUT type
+    (ordered_aggregates.test: percentile_disc over ints = int).
+    Collect-sort-index preserves the element type; index = smallest k
+    with cum_dist >= p, i.e. ceil(p*n) (1-based, floor 1).
+
+    The direction group also absorbs a NULLS FIRST/LAST modifier (nulls
+    are dropped by collect_list, so placement never affects the result —
+    but leaving it in the expression text broke the Spark parse) and the
+    expression group tolerates one paren-nesting level."""
+    return re.sub(
         r"\bpercentile_disc\s*\(((?:[^()]|\([^()]*\))+)\)\s+WITHIN\s+GROUP\s*\(\s*"
         r"ORDER\s+BY\s+((?:[^()]|\([^()]*\))+?)"
         r"(\s+DESC|\s+ASC)?(?:\s+NULLS\s+(?:FIRST|LAST))?\s*\)",
-        _pdisc, out, flags=re.I,
+        _pdisc, text, flags=re.I,
     )
 
-    # median over VARCHAR / DECIMAL is DISCRETE (lower middle) in the
-    # reference — only plain numerics interpolate (verified live:
-    # median(r::decimal(10,2)) over 0..9999 = 4999.00; median(d::VARCHAR)
-    # over 0..99 = '53'). Detect the typed-cast argument shape.
-    def _median_discrete(a: list[str]) -> str | None:
-        if len(a) != 1:
-            return None
-        arg = a[0].strip()
-        if not re.search(
-            r"::\s*(VARCHAR|STRING|TEXT|CHAR|BPCHAR|DECIMAL|NUMERIC)\b"
-            r"|\bAS\s+(VARCHAR|STRING|TEXT|CHAR|BPCHAR|DECIMAL|NUMERIC)\b",
-            arg, re.I,
-        ):
-            return None
-        srt = f"array_sort(collect_list({arg}))"
-        # lower middle: floor((n+1)/2), 1-based (int CAST would ROUND)
-        return (
-            f"try_element_at({srt}, "
-            f"CAST(floor((size({srt}) + 1) / 2) AS INT))"
-        )
 
-    out = _rewrite_calls(out, "median", _median_discrete)
-    # DuckDB tolerates a trailing comma in the SELECT list
-    out = _sub_code(r",(\s*FROM\b)", r"\1", out, re.I)
-    out = _rewrite_qualify(out)
-    out = _rewrite_distinct_on(out)
-    out = _inline_named_windows(out)
-    out = _rewrite_distinct_window(out)
-    # RANGE frame end bound `0 PRECEDING`: the reference ends the frame
-    # BEFORE the current row (window_boundaries_state.cpp caps the end at
-    # the current position), where Spark's rangeBetween(…, 0) includes
-    # the current row and all its peers. Rewrite to CURRENT ROW EXCLUDE
-    # GROUP and let the EXCLUDE expansion subtract the peer group — exact
-    # whenever the order key is unique (ties are input-order-dependent in
-    # the reference itself).
-    out = _sub_code(
+def _median_discrete(a: list[str]) -> str | None:
+    """median over VARCHAR / DECIMAL is DISCRETE (lower middle) in the
+    reference — only plain numerics interpolate (verified live:
+    median(r::decimal(10,2)) over 0..9999 = 4999.00; median(d::VARCHAR)
+    over 0..99 = '53'). Detect the typed-cast argument shape."""
+    if len(a) != 1:
+        return None
+    arg = a[0].strip()
+    if not re.search(
+        r"::\s*(VARCHAR|STRING|TEXT|CHAR|BPCHAR|DECIMAL|NUMERIC)\b"
+        r"|\bAS\s+(VARCHAR|STRING|TEXT|CHAR|BPCHAR|DECIMAL|NUMERIC)\b",
+        arg, re.I,
+    ):
+        return None
+    srt = f"array_sort(collect_list({arg}))"
+    # lower middle: floor((n+1)/2), 1-based (int CAST would ROUND)
+    return (
+        f"try_element_at({srt}, "
+        f"CAST(floor((size({srt}) + 1) / 2) AS INT))"
+    )
+
+
+def _drop_trailing_select_comma(text: str) -> str:
+    """DuckDB tolerates a trailing comma in the SELECT list."""
+    return _sub_code(r",(\s*FROM\b)", r"\1", text, re.I)
+
+
+def _rewrite_range_zero_preceding(text: str) -> str:
+    """RANGE frame end bound `0 PRECEDING`: the reference ends the frame
+    BEFORE the current row (window_boundaries_state.cpp caps the end at
+    the current position), where Spark's rangeBetween(…, 0) includes the
+    current row and all its peers. Rewrite to CURRENT ROW EXCLUDE GROUP
+    and let the EXCLUDE expansion subtract the peer group — exact
+    whenever the order key is unique (ties are input-order-dependent in
+    the reference itself)."""
+    return _sub_code(
         r"(\bRANGE\s+BETWEEN\s+(?:[^()]|\([^()]*\))+?\s+AND\s+)0\s+PRECEDING\b",
-        r"\1CURRENT ROW EXCLUDE GROUP", out, re.I,
+        r"\1CURRENT ROW EXCLUDE GROUP", text, re.I,
     )
-    out = _rewrite_window_mode(out)
-    out = _rewrite_window_nth(out)
-    out = _rewrite_window_exclude(out)
-    out = _pin_window_null_order(out)
-    out = _rewrite_in_subquery(out)
-    out = _rewrite_any_all(out)
-    out = _rewrite_power_operator(out)
-    # DuckDB's `//` is integer division on integral operands — Spark's
-    # `div` truncates identically (both: -7//2 = -3). (On FLOAT/DECIMAL
-    # operands the reference's `//` degenerates to plain division — a
-    # surface this text-level rewrite doesn't carry; sweeps gate any
-    # mismatch before corpus promotion.)
-    out = _sub_code(r"(?<![/:])//(?!/)", " div ", out)
 
-    # (set shared by the registry bind below and the COPY TO parquet
-    # metadata writer — duck types whose Spark carrier loses the name)
-    # typeof(): DuckDB type NAMES (catalog type ids, type.cpp ToString)
-    # differ from Spark's — map the scalar names, upper-case the rest.
-    # Runs BEFORE the cast/list rewrites so their INTERNAL typeof()
-    # dispatch emissions are never re-mapped; __tof renames at the end.
-    def _typeof_names(a: list[str]) -> str | None:
-        if len(a) != 1:
-            return None
-        t = f"__tof({a[0]})"
-        m = (
-            "map('int','INTEGER','bigint','BIGINT','smallint','SMALLINT',"
-            "'tinyint','TINYINT','string','VARCHAR','double','DOUBLE',"
-            "'float','FLOAT','boolean','BOOLEAN','date','DATE',"
-            # session timestampType=NTZ: naive values are timestamp_ntz
-            # (duck TIMESTAMP); Spark's instant kind only arises from
-            # tz-aware sources = duck TIMESTAMP WITH TIME ZONE
-            "'timestamp_ntz','TIMESTAMP',"
-            "'timestamp','TIMESTAMP WITH TIME ZONE',"
-            "'binary','BLOB','void','\"NULL\"','variant','JSON')"
-        )
-        # compound names (struct/map/array/decimal) need the recursive
-        # DuckDB rendering (STRUCT(k1 VARCHAR, ...), VARCHAR[], ...) —
-        # routed through the __duck_typename helper (functions/typenames.py)
-        return (
-            f"CASE WHEN {t} LIKE '%<%' THEN __duck_typename({t}) "
-            # Spark TIME carries precision (time(6)); DuckDB prints TIME
-            f"WHEN {t} LIKE 'time(%' THEN 'TIME' "
-            f"ELSE coalesce(element_at({m}, {t}), upper({t})) END"
-        )
 
-    # pg_typeof = typeof in lowercase postgres spelling (pg_catalog)
-    out = _rewrite_calls(
-        out, "pg_typeof",
-        lambda a: f"lower(typeof({a[0]}))" if len(a) == 1 else None,
-    )
-    # logical types whose Spark CARRIER erases the duck type name (JSON →
-    # STRING, unsigned ints → wider signed, HUGEINT → DECIMAL(38,0)):
-    # typeof(col) on a declared column of a FROM table resolves from the
-    # catalog registry at translate time (json/test_json_persistence,
-    # copy/parquet/writer/parquet_write_unsigned). Narrow bind:
-    # bare-identifier argument, no same-named differently-typed column
-    # in scope.
-    try:
-        from myduckdb_spark import infoschema as _isch
+def _rewrite_integer_division(text: str) -> str:
+    """DuckDB's `//` is integer division on integral operands — Spark's
+    `div` truncates identically (both: -7//2 = -3). (On FLOAT/DECIMAL
+    operands the reference's `//` degenerates to plain division — a
+    surface this text-level rewrite doesn't carry; sweeps gate any
+    mismatch before corpus promotion.)"""
+    return _sub_code(r"(?<![/:])//(?!/)", " div ", text)
 
-        _jc: dict[str, str] = {}
-        _nj: set[str] = set()
-        for t in re.findall(r"\bFROM\s+\"?([A-Za-z_]\w*)\"?", out, re.I):
-            for c in _isch.COLUMN_META.get(t.lower(), []):
-                nm = c["name"].lower()
-                if c["dtype"] in _SCAN_REGISTRY_DTYPES:
-                    if nm in _jc and _jc[nm] != c["dtype"]:
-                        _nj.add(nm)
-                    _jc[nm] = c["dtype"]
-                else:
-                    _nj.add(nm)
-        for nm in _nj:
-            _jc.pop(nm, None)
-        if _jc:
-            out = _rewrite_calls(
-                out, "typeof",
-                lambda a: (
-                    f"'{_jc[a[0].strip().strip(chr(34)).split('.')[-1].strip(chr(34)).lower()]}'"
-                    if len(a) == 1 and a[0].strip().strip('"')
-                    .split(".")[-1].strip('"').lower() in _jc
-                    else None
-                ),
-            )
-    except Exception:
-        pass
-    out = _rewrite_calls(out, "typeof", _typeof_names)
 
-    # abs()/unary negate on wide DECIMALs (the HUGEINT carrier): Spark's
-    # UnaryMinus/Abs round near the 38-digit edge, but decimal multiply
-    # by -1 is exact — dispatch on the static type
-    def _abs_fn(a: list[str]) -> str | None:
-        if len(a) != 1:
-            return None
-        x = a[0]
-        return (
-            f"CASE WHEN __tof(({x})) LIKE 'decimal%' THEN "
-            f"(CASE WHEN ({x}) < 0 THEN ({x}) * -1 ELSE ({x}) END) "
-            f"ELSE __rawabs(({x})) END"
-        )
+def _bind_registry_typeof(text: str) -> str:
+    """Logical types whose Spark CARRIER erases the duck type name (JSON →
+    STRING, unsigned ints → wider signed, HUGEINT → DECIMAL(38,0)):
+    typeof(col) on a declared column of a FROM table resolves from the
+    catalog registry at translate time (json/test_json_persistence,
+    copy/parquet/writer/parquet_write_unsigned). Narrow bind:
+    bare-identifier argument, no same-named differently-typed column in
+    scope. Reads the session's column registry each time it runs."""
+    from myduckdb_spark import infoschema
 
-    out = _rewrite_calls(out, "abs", _abs_fn)
-
-    # ceil/ceiling/floor: the reference returns DOUBLE for every
-    # non-DECIMAL argument (FLOAT for FLOAT) and passes NaN/±inf through
-    # (function/scalar/math — ceil/floor templates); Spark's return
-    # BIGINT and ANSI-overflow on huge/±inf doubles. Emit a pure-double
-    # form (no BIGINT round-trip, so |x| >= 2^63 survives). Bare numeric
-    # literals stay on Spark's DECIMAL path — both engines type those
-    # DECIMAL and agree.
-    def _ceil_floor(which: str):
-        def rw(a: list[str]) -> str | None:
-            if len(a) != 1:
-                return None
-            x = a[0]
-            if re.fullmatch(r"\s*[+-]?\d+(\.\d+)?\s*", x):
-                return None
-            # explicitly DECIMAL-typed args keep Spark's DECIMAL ceil —
-            # the reference returns DECIMAL(p,0) there, not DOUBLE
-            if re.search(
-                r"(::\s*|\bAS\s+)(DECIMAL|NUMERIC)(\s*\(\s*\d+\s*(,\s*\d+\s*)?\))?\s*\)*\s*$",
-                x,
-                re.I,
-            ):
-                return None
-            d = f"CAST(({x}) AS DOUBLE)"
-            t = f"({d} - ({d} % 1.0))"  # truncation toward zero
-            if which == "ceil":
-                adj = f"CASE WHEN {t} = {d} OR {d} < 0 THEN {t} ELSE {t} + 1 END"
+    declared: dict[str, str] = {}
+    ambiguous: set[str] = set()
+    for t in re.findall(r"\bFROM\s+\"?([A-Za-z_]\w*)\"?", text, re.I):
+        for c in infoschema.COLUMN_META.get(t.lower(), []):
+            nm = c["name"].lower()
+            if c["dtype"] in _SCAN_REGISTRY_DTYPES:
+                if nm in declared and declared[nm] != c["dtype"]:
+                    ambiguous.add(nm)
+                declared[nm] = c["dtype"]
             else:
-                adj = f"CASE WHEN {t} = {d} OR {d} > 0 THEN {t} ELSE {t} - 1 END"
-            return (
-                f"(CASE WHEN isnan({d}) OR abs({d}) = CAST('inf' AS DOUBLE) "
-                f"THEN {d} ELSE {adj} END)"
-            )
+                ambiguous.add(nm)
+    for nm in ambiguous:
+        declared.pop(nm, None)
+    if not declared:
+        return text
+    return _rewrite_calls(text, "typeof", partial(_declared_typeof, declared))
 
-        return rw
 
-    out = _rewrite_calls(out, "ceil", _ceil_floor("ceil"))
-    out = _rewrite_calls(out, "ceiling", _ceil_floor("ceil"))
-    out = _rewrite_calls(out, "floor", _ceil_floor("floor"))
+def _declared_typeof(declared: dict[str, str], a: list[str]) -> str | None:
+    col = a[0].strip().strip('"').split(".")[-1].strip('"').lower()
+    return f"'{declared[col]}'" if len(a) == 1 and col in declared else None
 
-    # bare integer literals beyond BIGINT parse as DOUBLE in Spark
-    # (silent precision loss at digit 16); the reference parses them as
-    # HUGEINT — carry them exactly as DECIMAL(38,0). A UNARY minus is
-    # absorbed into the literal: Spark coerces `-CASE …` (the cast
-    # rewrite's later expansion) through DOUBLE, losing the digits again.
-    def _wrap_big(mm: "re.Match[str]") -> str:
-        if int(mm.group(2)) <= 9223372036854775807:
-            return mm.group(0)
-        neg = ""
-        if mm.group(1):
-            j = mm.start() - 1
-            while j >= 0 and out[j].isspace():
-                j -= 1
-            prev = out[j] if j >= 0 else ""
-            wm = re.search(r"([A-Za-z_]\w*)\s*$", out[: j + 1])
-            unary = (
-                j < 0
-                or prev in "(,=<>+-*/%"
-                or (wm and wm.group(1).upper() in (
-                    "SELECT", "WHEN", "THEN", "ELSE", "AND", "OR", "NOT",
-                    "BY", "VALUES", "IN", "RETURN", "AS", "WHERE", "ON",
-                ))
-            )
-            if unary:
-                neg = "-"
-        # -9223372036854775808 is a valid BIGINT even though its digits
-        # alone overflow; keep it integral so sequence()/range() bounds
-        # stay BIGINT-typed (table_function/test_range_function.test)
-        if neg and int(mm.group(2)) <= 9223372036854775808:
-            return f"CAST('-{mm.group(2)}' AS BIGINT)"
-        body = f"CAST('{neg}{mm.group(2)}' AS DECIMAL(38,0))"
-        return body if neg else (mm.group(1) or "") + body
 
-    out = _sub_code(r"(-\s*)?(?<![\w.'\"])(\d{19,38})(?![\w.])", _wrap_big, out)
-    _CAST_BLOB_HINT[0] = _statement_touches_blobs(out)
-    out = _rewrite_blob_literals(out)
-    # ±infinity temporal literals in postfix-cast spelling: the reference
-    # pins them to the type's range ends (timestamp.cpp); the CAST(...)
-    # spelling is handled inside _rewrite_int_casts, this is the ::form
-    def _inf_postfix(mm: "re.Match[str]") -> str:
-        neg = mm.group(1).startswith("-")
-        typ = mm.group(2).upper()
-        if typ == "DATE":
-            v = "'0001-01-01'" if neg else "'9999-12-31'"
-        elif typ == "TIMESTAMPTZ":
-            # the infinite INSTANT is zone-independent — anchor the pin
-            # to UTC so a SET TimeZone session parses the same instant
-            v = ("'0001-01-01 00:00:00+00:00'" if neg
-                 else "'9999-12-31 23:59:59.999999+00:00'")
-        else:
-            v = ("'0001-01-01 00:00:00'" if neg
-                 else "'9999-12-31 23:59:59.999999'")
-        return f"{v}::{mm.group(2)}"
+def _typeof_names(a: list[str]) -> str | None:
+    """typeof(): DuckDB type NAMES (catalog type ids, type.cpp ToString)
+    differ from Spark's — map the scalar names, upper-case the rest. Runs
+    BEFORE the cast/list rewrites so their INTERNAL typeof() dispatch
+    emissions are never re-mapped."""
+    if len(a) != 1:
+        return None
+    t = f"typeof({a[0]})"
+    m = (
+        "map('int','INTEGER','bigint','BIGINT','smallint','SMALLINT',"
+        "'tinyint','TINYINT','string','VARCHAR','double','DOUBLE',"
+        "'float','FLOAT','boolean','BOOLEAN','date','DATE',"
+        # session timestampType=NTZ: naive values are timestamp_ntz
+        # (duck TIMESTAMP); Spark's instant kind only arises from
+        # tz-aware sources = duck TIMESTAMP WITH TIME ZONE
+        "'timestamp_ntz','TIMESTAMP',"
+        "'timestamp','TIMESTAMP WITH TIME ZONE',"
+        "'binary','BLOB','void','\"NULL\"','variant','JSON')"
+    )
+    # compound names (struct/map/array/decimal) need the recursive
+    # DuckDB rendering (STRUCT(k1 VARCHAR, ...), VARCHAR[], ...) —
+    # routed through the __duck_typename helper (functions/typenames.py)
+    return (
+        f"CASE WHEN {t} LIKE '%<%' THEN __duck_typename({t}) "
+        # Spark TIME carries precision (time(6)); DuckDB prints TIME
+        f"WHEN {t} LIKE 'time(%' THEN 'TIME' "
+        f"ELSE coalesce(element_at({m}, {t}), upper({t})) END"
+    )
 
-    # infinity ABSORBS interval arithmetic (interval.cpp: ±infinity ± x =
-    # ±infinity; an infinite DATE promotes to the infinite TIMESTAMP) —
-    # collapse to the final cast type and drop the interval op before the
-    # literal pin applies
-    out = re.sub(
+
+def _abs_fn(a: list[str]) -> str | None:
+    """abs()/unary negate on wide DECIMALs (the HUGEINT carrier): Spark's
+    UnaryMinus/Abs round near the 38-digit edge, but decimal multiply by
+    -1 is exact — dispatch on the static type."""
+    if len(a) != 1:
+        return None
+    x = a[0]
+    return (
+        f"CASE WHEN typeof(({x})) LIKE 'decimal%' THEN "
+        f"(CASE WHEN ({x}) < 0 THEN ({x}) * -1 ELSE ({x}) END) "
+        f"ELSE abs(({x})) END"
+    )
+
+
+def _ceil_floor(which: str, a: list[str]) -> str | None:
+    """ceil/ceiling/floor: the reference returns DOUBLE for every
+    non-DECIMAL argument (FLOAT for FLOAT) and passes NaN/±inf through
+    (function/scalar/math — ceil/floor templates); Spark's return BIGINT
+    and ANSI-overflow on huge/±inf doubles. Emit a pure-double form (no
+    BIGINT round-trip, so |x| >= 2^63 survives). Bare numeric literals
+    stay on Spark's DECIMAL path — both engines type those DECIMAL and
+    agree."""
+    if len(a) != 1:
+        return None
+    x = a[0]
+    if re.fullmatch(r"\s*[+-]?\d+(\.\d+)?\s*", x):
+        return None
+    # explicitly DECIMAL-typed args keep Spark's DECIMAL ceil — the
+    # reference returns DECIMAL(p,0) there, not DOUBLE
+    if re.search(
+        r"(::\s*|\bAS\s+)(DECIMAL|NUMERIC)(\s*\(\s*\d+\s*(,\s*\d+\s*)?\))?\s*\)*\s*$",
+        x,
+        re.I,
+    ):
+        return None
+    d = f"CAST(({x}) AS DOUBLE)"
+    t = f"({d} - ({d} % 1.0))"  # truncation toward zero
+    if which == "ceil":
+        adj = f"CASE WHEN {t} = {d} OR {d} < 0 THEN {t} ELSE {t} + 1 END"
+    else:
+        adj = f"CASE WHEN {t} = {d} OR {d} > 0 THEN {t} ELSE {t} - 1 END"
+    return (
+        f"(CASE WHEN isnan({d}) OR abs({d}) = CAST('inf' AS DOUBLE) "
+        f"THEN {d} ELSE {adj} END)"
+    )
+
+
+def _wrap_big(text: str, mm: "re.Match[str]") -> str:
+    if int(mm.group(2)) <= 9223372036854775807:
+        return mm.group(0)
+    neg = ""
+    if mm.group(1):
+        j = mm.start() - 1
+        while j >= 0 and text[j].isspace():
+            j -= 1
+        prev = text[j] if j >= 0 else ""
+        wm = re.search(r"([A-Za-z_]\w*)\s*$", text[: j + 1])
+        unary = (
+            j < 0
+            or prev in "(,=<>+-*/%"
+            or (wm and wm.group(1).upper() in (
+                "SELECT", "WHEN", "THEN", "ELSE", "AND", "OR", "NOT",
+                "BY", "VALUES", "IN", "RETURN", "AS", "WHERE", "ON",
+            ))
+        )
+        if unary:
+            neg = "-"
+    # -9223372036854775808 is a valid BIGINT even though its digits alone
+    # overflow; keep it integral so sequence()/range() bounds stay
+    # BIGINT-typed (table_function/test_range_function.test)
+    if neg and int(mm.group(2)) <= 9223372036854775808:
+        return f"CAST('-{mm.group(2)}' AS BIGINT)"
+    body = f"CAST('{neg}{mm.group(2)}' AS DECIMAL(38,0))"
+    return body if neg else (mm.group(1) or "") + body
+
+
+def _rewrite_big_int_literals(text: str) -> str:
+    """Bare integer literals beyond BIGINT parse as DOUBLE in Spark
+    (silent precision loss at digit 16); the reference parses them as
+    HUGEINT — carry them exactly as DECIMAL(38,0). A UNARY minus is
+    absorbed into the literal: Spark coerces `-CASE …` (the cast
+    rewrite's later expansion) through DOUBLE, losing the digits
+    again."""
+    return _sub_code(r"(-\s*)?(?<![\w.'\"])(\d{19,38})(?![\w.])",
+                     lambda mm: _wrap_big(text, mm), text)
+
+
+def _rewrite_blobs(text: str) -> str:
+    """BLOB literals; also records whether the statement touches blobs,
+    which the cast rewrite reads (``_CAST_BLOB_HINT``)."""
+    _CAST_BLOB_HINT[0] = _statement_touches_blobs(text)
+    return _rewrite_blob_literals(text)
+
+
+def _inf_postfix(mm: "re.Match[str]") -> str:
+    neg = mm.group(1).startswith("-")
+    typ = mm.group(2).upper()
+    if typ == "DATE":
+        v = "'0001-01-01'" if neg else "'9999-12-31'"
+    elif typ == "TIMESTAMPTZ":
+        # the infinite INSTANT is zone-independent — anchor the pin to UTC
+        # so a SET TimeZone session parses the same instant
+        v = ("'0001-01-01 00:00:00+00:00'" if neg
+             else "'9999-12-31 23:59:59.999999+00:00'")
+    else:
+        v = ("'0001-01-01 00:00:00'" if neg
+             else "'9999-12-31 23:59:59.999999'")
+    return f"{v}::{mm.group(2)}"
+
+
+def _rewrite_infinity_literals(text: str) -> str:
+    """±infinity temporal literals in postfix-cast spelling: the reference
+    pins them to the type's range ends (timestamp.cpp); the CAST(...)
+    spelling is handled inside _rewrite_int_casts, this is the ::form.
+    Infinity ABSORBS interval arithmetic first (interval.cpp: ±infinity ±
+    x = ±infinity; an infinite DATE promotes to the infinite TIMESTAMP) —
+    collapse to the final cast type and drop the interval op before the
+    literal pin applies."""
+    text = re.sub(
         r"('[+-]?infinity')(?:\s*::\s*(?:TIMESTAMPTZ|TIMESTAMP|DATE|"
         r"DATETIME))*\s*::\s*(TIMESTAMPTZ|TIMESTAMP|DATE|DATETIME)"
         r"\s*[+-]\s*INTERVAL\s*(?:\([^()]*\)|'[^']*')?\s*\w*",
         lambda mm: f"{mm.group(1)}::TIMESTAMP"
         if mm.group(2).upper() in ("DATE", "DATETIME")
         else f"{mm.group(1)}::{mm.group(2)}",
-        out, flags=re.I,
+        text, flags=re.I,
     )
-    out = re.sub(
+    return re.sub(
         r"'([+-]?infinity)'\s*::\s*(TIMESTAMPTZ|TIMESTAMP|DATE|DATETIME)\b",
-        _inf_postfix, out, flags=re.I,
+        _inf_postfix, text, flags=re.I,
     )
-    # offset-bearing string → naive TIMESTAMP: the reference normalizes
-    # the instant to UTC (timestamp.cpp TryConvertTimestampTZ — verified
-    # live, session-independent); Spark's NTZ cast silently DROPS the
-    # offset. Parse as instant and rebuild the UTC wall.
-    out = re.sub(
+
+
+def _rewrite_offset_timestamp_literals(text: str) -> str:
+    """Offset-bearing string → naive TIMESTAMP: the reference normalizes
+    the instant to UTC (timestamp.cpp TryConvertTimestampTZ — verified
+    live, session-independent); Spark's NTZ cast silently DROPS the
+    offset. Parse as instant and rebuild the UTC wall."""
+    return re.sub(
         r"'(\d{4}-\d{2}-\d{2}[ T]\d{1,2}:\d{2}[0-9:.]*\s*[+-]\d{1,2}"
         r"(?::\d{2})?)'\s*::\s*TIMESTAMP\b(?!\s*(?:_|TZ|\w))"
         r"|\bTIMESTAMP\s+'(\d{4}-\d{2}-\d{2}[ T]\d{1,2}:\d{2}[0-9:.]*\s*"
@@ -3313,2318 +3313,2202 @@ def translate(text: str) -> str:
         lambda mm: _tz_instant_to_wall(
             f"'{mm.group(1) or mm.group(2)}'", "'UTC'"
         ),
-        out, flags=re.I,
+        text, flags=re.I,
     )
-    out = _rewrite_at_time_zone(out)
-    # the reference's TIMESTAMPTZ type name (instant kind) is Spark's
-    # TIMESTAMP_LTZ — rename at every type position (::casts, CAST AS,
-    # typed literals); runs after AT TIME ZONE whose dispatch reads the
-    # original spelling
-    out = _sub_code(r"\bTIMESTAMPTZ\b", "TIMESTAMP_LTZ", out, re.I)
-    out = _rewrite_dynamic_interval(out)
-    # unary minus on an UNSIGNED-cast chain wraps modulo 2^N (verified
-    # live: -42::TINYINT::UTINYINT = 214, -1::INTEGER::UINTEGER =
-    # 4294967295 — modular negate, numeric_cast semantics)
-    _UMOD = {"UTINYINT": ("256", "SMALLINT"),
-             "USMALLINT": ("65536", "INT"),
-             "UINTEGER": ("4294967296", "BIGINT"),
-             "UBIGINT": ("18446744073709551616", "DECIMAL(20,0)")}
 
-    def _neg_unsigned(mm: "re.Match[str]") -> str:
-        pow2, carrier = _UMOD[mm.group(2).upper()]
-        return (f"CAST(({pow2} - ({mm.group(1)})) % {pow2} "
-                f"AS {carrier})")
 
-    def _neg_dispatch(mm: "re.Match[str]") -> str:
-        # unary only: the previous non-space token must open an operand
-        # position (start, '(', ',', an operator, or a keyword) — after
-        # an identifier/number/')' the '-' is binary subtraction
-        j = mm.start()
-        while j > 0 and out[j - 1].isspace():
-            j -= 1
-        if j > 0:
-            prev = out[j - 1]
-            if prev not in "(,=<>+-*/%|&":
-                km = re.search(r"([A-Za-z_]\w*)$", out[:j])
-                if not km or km.group(1).upper() in (
-                    "TRUE", "FALSE", "NULL", "END",
-                ) or km.group(1).upper() not in (
-                    "SELECT", "WHERE", "AND", "OR", "THEN", "WHEN",
-                    "ELSE", "BY", "RETURN", "SET", "HAVING", "ON",
-                    "VALUES", "AS", "IN", "CASE", "DISTINCT",
-                ):
-                    return mm.group(0)
-        return _neg_unsigned(mm)
+def _rename_timestamptz(text: str) -> str:
+    """The reference's TIMESTAMPTZ type name (instant kind) is Spark's
+    TIMESTAMP_LTZ — rename at every type position (::casts, CAST AS,
+    typed literals); runs after AT TIME ZONE whose dispatch reads the
+    original spelling."""
+    return _sub_code(r"\bTIMESTAMPTZ\b", "TIMESTAMP_LTZ", text, re.I)
 
-    out = _sub_code(
+
+# unary minus on an UNSIGNED-cast chain wraps modulo 2^N (verified live:
+# -42::TINYINT::UTINYINT = 214, -1::INTEGER::UINTEGER = 4294967295 —
+# modular negate, numeric_cast semantics)
+_UMOD = {"UTINYINT": ("256", "SMALLINT"),
+         "USMALLINT": ("65536", "INT"),
+         "UINTEGER": ("4294967296", "BIGINT"),
+         "UBIGINT": ("18446744073709551616", "DECIMAL(20,0)")}
+
+
+def _neg_dispatch(text: str, mm: "re.Match[str]") -> str:
+    # unary only: the previous non-space token must open an operand
+    # position (start, '(', ',', an operator, or a keyword) — after an
+    # identifier/number/')' the '-' is binary subtraction
+    j = mm.start()
+    while j > 0 and text[j - 1].isspace():
+        j -= 1
+    if j > 0:
+        prev = text[j - 1]
+        if prev not in "(,=<>+-*/%|&":
+            km = re.search(r"([A-Za-z_]\w*)$", text[:j])
+            if not km or km.group(1).upper() in (
+                "TRUE", "FALSE", "NULL", "END",
+            ) or km.group(1).upper() not in (
+                "SELECT", "WHERE", "AND", "OR", "THEN", "WHEN",
+                "ELSE", "BY", "RETURN", "SET", "HAVING", "ON",
+                "VALUES", "AS", "IN", "CASE", "DISTINCT",
+            ):
+                return mm.group(0)
+    pow2, carrier = _UMOD[mm.group(2).upper()]
+    return f"CAST(({pow2} - ({mm.group(1)})) % {pow2} AS {carrier})"
+
+
+def _rewrite_negated_unsigned(text: str) -> str:
+    return _sub_code(
         r"(?<![\w)'\"])-\s*("
         r"(?:\w+|'(?:[^']|'')*'|\([^()]*\))(?:\s*::\s*\w+)*\s*::\s*"
         r"(UTINYINT|USMALLINT|UINTEGER|UBIGINT))\b(?!\s*::)",
-        _neg_dispatch, out, re.I,
+        lambda mm: _neg_dispatch(text, mm), text, re.I,
     )
-    out = _rewrite_postfix_int_casts(out)
-    out = _rewrite_int_casts(out)
-    out = _rewrite_setop_order_alias(out)
-    # ORDER BY ALL: DuckDB's default null order is NULLS LAST for both
-    # directions (order_binder.cpp) unless the session overrides it via
-    # SET default_null_order (the reference's own test harness sets
-    # 'nulls_first'); Spark's ASC default is NULLS FIRST.
+
+
+def _pin_order_by_all_nulls(text: str) -> str:
+    """ORDER BY ALL: DuckDB's default null order is NULLS LAST for both
+    directions (order_binder.cpp) unless the session overrides it via SET
+    default_null_order (the reference's own test harness sets
+    'nulls_first'); Spark's ASC default is NULLS FIRST. Reads the
+    session setting each time it runs."""
     null_kw = (
         "NULLS FIRST"
         if SETTINGS.get("default_null_order", "nulls_last") == "nulls_first"
         else "NULLS LAST"
     )
-    out = _sub_code(
+    return _sub_code(
         r"(\bORDER\s+BY\s+ALL\b)(\s+(?:ASC|DESC)\b)?(?!\s*NULLS)",
         lambda m: f"{m.group(1)}{m.group(2) or ''} {null_kw}",
-        out, re.I,
+        text, re.I,
     )
-    # star modifiers: DuckDB `* EXCLUDE (cols)` == Spark 4 `* EXCEPT (cols)`
-    out = re.sub(r"(\*\s*)EXCLUDE\b", r"\1EXCEPT", out)
-    out = _rewrite_json_arrows(out)
 
-    # chr: full Unicode codepoints (Spark char() wraps at 256) — decode
-    # the codepoint as a single UTF-32BE unit. Constant arguments fold to
-    # a \uXXXX string literal so chr() stays usable inside inline VALUES
-    # tables (Spark rejects non-foldable expressions there, e.g. the
-    # reference's `INSERT ... VALUES ('hello' || chr(0))`,
-    # test/sql/index/art/scan/test_art_null_bytes.test).
-    def _fold_chr(a):
-        s = a[0].strip()
-        if re.fullmatch(r"\d+", s) and int(s) <= 0x10FFFF:
-            units = chr(int(s)).encode("utf-16-be")
-            esc = "".join(
-                "\\u%04X" % int.from_bytes(units[i: i + 2], "big")
-                for i in range(0, len(units), 2)
-            )
-            return f"'{esc}'"
-        return f"decode(to_binary(lpad(hex({a[0]}), 8, '0'), 'hex'), 'UTF-32')"
 
-    out = _rewrite_calls(out, "chr", _fold_chr)
+def _rewrite_star_exclude(text: str) -> str:
+    """Star modifiers: DuckDB `* EXCLUDE (cols)` == Spark 4 `* EXCEPT
+    (cols)`."""
+    return re.sub(r"(\*\s*)EXCLUDE\b", r"\1EXCEPT", text)
 
-    # regexp_replace: DuckDB's 3-arg form replaces the FIRST match only;
-    # 'g' flag = replace all (Spark's only behavior), 'i' = case-fold.
-    # Emits a __rr_all sentinel (renamed back below) because the 3-arg
-    # expansion itself contains a replace-all call and _rewrite_calls
-    # re-runs to fixpoint.
-    def _re_replace(args: list[str]):
-        if len(args) == 4:
-            flags = args[3].strip().strip("'\"")
-            pat = args[1]
-            pm = re.match(r"^'(.*)'$", pat.strip(), re.S)
-            if "l" in flags and pm:  # RE2 literal flag → \Q...\E quoting
-                pat = f"'\\\\Q{pm.group(1)}\\\\E'"
-                pm = re.match(r"^'(.*)'$", pat, re.S)
-            inline = "".join(f for f in "ism" if f in flags)
-            if inline and pm:
-                pat = f"'(?{inline}){pm.group(1)}'"
-            if "g" in flags:
-                return f"__rr_all({args[0]}, {pat}, {args[2]})"
-            args = [args[0], pat, args[2]]
-        if len(args) != 3:
-            return None
-        s, p, r = args
-        rm = re.match(r"^'(.*)'$", r.strip(), re.S)
-        if rm:  # DuckDB backrefs \1 → Spark/Java $1
-            r = "'" + re.sub(r"\\(\d)", r"$\1", rm.group(1)) + "'"
+
+def _fold_chr(a: list[str]) -> str:
+    """chr: full Unicode codepoints (Spark char() wraps at 256) — decode
+    the codepoint as a single UTF-32BE unit. Constant arguments fold to a
+    \\uXXXX string literal so chr() stays usable inside inline VALUES
+    tables (Spark rejects non-foldable expressions there, e.g. the
+    reference's `INSERT ... VALUES ('hello' || chr(0))`,
+    test/sql/index/art/scan/test_art_null_bytes.test)."""
+    s = a[0].strip()
+    if re.fullmatch(r"\d+", s) and int(s) <= 0x10FFFF:
+        units = chr(int(s)).encode("utf-16-be")
+        esc = "".join(
+            "\\u%04X" % int.from_bytes(units[i: i + 2], "big")
+            for i in range(0, len(units), 2)
+        )
+        return f"'{esc}'"
+    return f"decode(to_binary(lpad(hex({a[0]}), 8, '0'), 'hex'), 'UTF-32')"
+
+
+def _re_replace(args: list[str]) -> str | None:
+    """regexp_replace: DuckDB's 3-arg form replaces the FIRST match only;
+    'g' flag = replace all (Spark's only behavior), 'i' = case-fold."""
+    if len(args) == 4:
+        flags = args[3].strip().strip("'\"")
+        pat = args[1]
+        pm = re.match(r"^'(.*)'$", pat.strip(), re.S)
+        if "l" in flags and pm:  # RE2 literal flag → \Q...\E quoting
+            pat = f"'\\\\Q{pm.group(1)}\\\\E'"
+            pm = re.match(r"^'(.*)'$", pat, re.S)
+        inline = "".join(f for f in "ism" if f in flags)
+        if inline and pm:
+            pat = f"'(?{inline}){pm.group(1)}'"
+        if "g" in flags:
+            return f"regexp_replace({args[0]}, {pat}, {args[2]})"
+        args = [args[0], pat, args[2]]
+    if len(args) != 3:
+        return None
+    s, p, r = args
+    rm = re.match(r"^'(.*)'$", r.strip(), re.S)
+    if rm:  # DuckDB backrefs \1 → Spark/Java $1
+        r = "'" + re.sub(r"\\(\d)", r"$\1", rm.group(1)) + "'"
+    return (
+        f"CASE WHEN regexp_instr({s}, {p}) = 0 THEN {s} ELSE "
+        f"substr({s}, 1, regexp_instr({s}, {p}) - 1) || "
+        f"regexp_replace(regexp_extract({s}, {p}, 0), {p}, {r}) || "
+        f"substr({s}, regexp_instr({s}, {p}) + length(regexp_extract({s}, {p}, 0))) END"
+    )
+
+
+def _unshield(placeholder: str, name: str, text: str) -> str:
+    """Rename each ``placeholder(`` call in code to ``name(``, once the
+    later rule it shields that call from has run."""
+    return _sub_code(rf"\b{placeholder}\s*\(", f"{name}(", text)
+
+
+def _skewness(args: list[str]) -> str | None:
+    """skewness/kurtosis: DuckDB reports the bias-corrected SAMPLE
+    statistics (skew.cpp: g1·sqrt(n(n-1))/(n-2); kurtosis.cpp:
+    ((n-1)/((n-2)(n-3)))·((n+1)(m4/m2²−3)+6), NULL below the minimum n);
+    Spark's built-ins are the population g1/g2. Expand to central moments
+    from raw power averages. Group contexts only — a window use becomes a
+    parse error rather than a silently-different value."""
+    if len(args) != 1:
+        return None
+    x = f"CAST(({args[0]}) AS DOUBLE)"
+    n, mu = f"count({x})", f"avg({x})"
+    m2 = f"(avg({x}*{x}) - {mu}*{mu})"
+    m3 = f"(avg({x}*{x}*{x}) - 3*{mu}*avg({x}*{x}) + 2*{mu}*{mu}*{mu})"
+    return (
+        f"CASE WHEN {n} > 2 AND {m2} > 0 THEN "
+        f"({m3} / power({m2}, 1.5)) * sqrt({n} * ({n} - 1.0)) / ({n} - 2) "
+        f"ELSE NULL END"
+    )
+
+
+def _kurtosis(args: list[str]) -> str | None:
+    if len(args) != 1:
+        return None
+    x = f"CAST(({args[0]}) AS DOUBLE)"
+    n, mu = f"count({x})", f"avg({x})"
+    m2 = f"(avg({x}*{x}) - {mu}*{mu})"
+    m4 = (
+        f"(avg({x}*{x}*{x}*{x}) - 4*{mu}*avg({x}*{x}*{x}) "
+        f"+ 6*{mu}*{mu}*avg({x}*{x}) - 3*{mu}*{mu}*{mu}*{mu})"
+    )
+    return (
+        f"CASE WHEN {n} > 3 AND {m2} > 0 THEN "
+        f"(({n} - 1.0) / (({n} - 2) * ({n} - 3))) * "
+        f"(({n} + 1) * ({m4} / ({m2}*{m2}) - 3) + 6) "
+        f"ELSE NULL END"
+    )
+
+
+def _json_array_length(a: list[str]) -> str | None:
+    """json_array_length: DuckDB yields 0 for non-array JSON, NULL only
+    for NULL input (json_array_length.cpp); Spark yields NULL for both."""
+    if len(a) != 1:
+        return None
+    return (
+        f"CASE WHEN ({a[0]}) IS NULL THEN NULL "
+        f"ELSE coalesce(json_array_length({a[0]}), 0) END"
+    )
+
+
+def _json_transform_sql(strict: bool, a: list[str]) -> str | None:
+    """json_transform(j, 'structure') / json_transform_strict /
+    from_json(_strict): the structure is a query constant (DuckDB's
+    json_transform.cpp binds it constant too), so each distinct structure
+    compiles to a SPECIALIZED Arrow-batched UDF implementing the
+    reference's element-wise lenient-cast semantics — from_json can't
+    express per-element NULL on mismatch, bool->int coercion,
+    round-half-even number->int, or unsigned range guards
+    (test_json_transform.test). Non-literal structures stay untouched
+    (and fail loudly), matching the reference's bind requirement."""
+    if len(a) != 2:
+        return None
+    lit = a[1].strip()
+    if not (lit.startswith("'") and lit.endswith("'")):
+        return None
+    from myduckdb_spark.functions.jsonx import make_transform_spec
+
+    try:
+        name, ddl, root_struct = make_transform_spec(
+            lit[1:-1].replace("''", "'"), strict
+        )
+    except (ValueError, TypeError):
+        return None
+    if root_struct:
+        # a pandas-UDF DataFrame row can't be a NULL struct: NULL and
+        # JSON-null inputs short-circuit to a typed NULL here
         return (
-            f"CASE WHEN regexp_instr({s}, {p}) = 0 THEN {s} ELSE "
-            f"substr({s}, 1, regexp_instr({s}, {p}) - 1) || "
-            f"__rr_all(regexp_extract({s}, {p}, 0), {p}, {r}) || "
-            f"substr({s}, regexp_instr({s}, {p}) + length(regexp_extract({s}, {p}, 0))) END"
+            f"CASE WHEN ({a[0]}) IS NULL OR trim({a[0]}) = 'null' "
+            f"THEN CAST(NULL AS {ddl}) ELSE {name}({a[0]}) END"
         )
+    return f"{name}({a[0]})"
 
-    out = _rewrite_calls(out, "regexp_replace", _re_replace)
-    out = re.sub(r"\b__rr_all\s*\(", "regexp_replace(", out)
 
-    # skewness/kurtosis: DuckDB reports the bias-corrected SAMPLE
-    # statistics (skew.cpp: g1·sqrt(n(n-1))/(n-2); kurtosis.cpp:
-    # ((n-1)/((n-2)(n-3)))·((n+1)(m4/m2²−3)+6), NULL below the minimum
-    # n); Spark's built-ins are the population g1/g2. Expand to central
-    # moments from raw power averages. Group contexts only — a window
-    # use becomes a parse error rather than a silently-different value.
-    def _skewness(args: list[str]):
-        if len(args) != 1:
-            return None
-        x = f"CAST(({args[0]}) AS DOUBLE)"
-        n, mu = f"count({x})", f"avg({x})"
-        m2 = f"(avg({x}*{x}) - {mu}*{mu})"
-        m3 = f"(avg({x}*{x}*{x}) - 3*{mu}*avg({x}*{x}) + 2*{mu}*{mu}*{mu})"
-        return (
-            f"CASE WHEN {n} > 2 AND {m2} > 0 THEN "
-            f"({m3} / power({m2}, 1.5)) * sqrt({n} * ({n} - 1.0)) / ({n} - 2) "
-            f"ELSE NULL END"
-        )
+def _from_json_structure(a: list[str]) -> str | None:
+    # only rewrite when the 2nd arg is a literal that parses as a JSON
+    # structure document; Spark-style DDL strings pass through
+    if len(a) != 2:
+        return None
+    lit = a[1].strip()
+    if not (lit.startswith("'") and lit.endswith("'")):
+        return None
+    body = lit[1:-1].replace("''", "'").lstrip()
+    if not body[:1] in ("{", "[", '"'):
+        return None
+    return _json_transform_sql(False, a)
 
-    def _kurtosis(args: list[str]):
-        if len(args) != 1:
-            return None
-        x = f"CAST(({args[0]}) AS DOUBLE)"
-        n, mu = f"count({x})", f"avg({x})"
-        m2 = f"(avg({x}*{x}) - {mu}*{mu})"
-        m4 = (
-            f"(avg({x}*{x}*{x}*{x}) - 4*{mu}*avg({x}*{x}*{x}) "
-            f"+ 6*{mu}*{mu}*avg({x}*{x}) - 3*{mu}*{mu}*{mu}*{mu})"
-        )
-        return (
-            f"CASE WHEN {n} > 3 AND {m2} > 0 THEN "
-            f"(({n} - 1.0) / (({n} - 2) * ({n} - 3))) * "
-            f"(({n} + 1) * ({m4} / ({m2}*{m2}) - 3) + 6) "
-            f"ELSE NULL END"
-        )
 
-    out = _rewrite_calls(out, "skewness", _skewness)
-    out = _rewrite_calls(out, "kurtosis", _kurtosis)
-    # DuckDB log(x) is BASE-10 (math.cpp: Log10Fun aliases log); Spark's
-    # 1-arg log is natural. 2-arg log(b, x) agrees between engines.
-    out = _rewrite_calls(
-        out, "log", lambda a: f"log10({a[0]})" if len(a) == 1 else None
-    )
-    # any_value skips NULLs in the reference (first.cpp FirstFunGetter
-    # skip_nulls); Spark's 1-arg form doesn't
-    out = _rewrite_calls(
-        out, "any_value", lambda a: f"any_value({a[0]}, true)" if len(a) == 1 else None
-    )
-    # json_array_length: DuckDB yields 0 for non-array JSON, NULL only
-    # for NULL input (json_array_length.cpp); Spark yields NULL for both
-    out = _rewrite_calls(
-        out,
-        "json_array_length",
-        lambda a: (
-            f"CASE WHEN ({a[0]}) IS NULL THEN NULL "
-            f"ELSE coalesce(__jal({a[0]}), 0) END"
-        )
-        if len(a) == 1
-        else None,
-    )
-    out = re.sub(r"\b__jal\s*\(", "json_array_length(", out)
+# --- JSON constructors (json_create.cpp): json_object / json_array /
+# json_quote / to_json over scalars. Spark's to_json only accepts
+# containers, so a scalar value renders through to_json(array(v)) with the
+# brackets stripped — uniform for every type including NULL ('null'), bool
+# ('true'), strings (quoted+escaped), nested structs.
+def _jfrag(v: str) -> str:
+    v = v.strip()
+    # JSON-typed args splice raw (their text IS the JSON); SQL NULL of
+    # JSON type renders as 'null' inside constructors
+    if re.search(r"::\s*JSON\s*$", v, re.I) or re.match(
+        r"(to_json|json_object|json_array|json_quote|json_merge_patch|"
+        r"json_extract(?!_string)|row_to_json|"
+        r"array_to_json|__jt_[0-9a-f]+)\s*\(", v, re.I
+    ):
+        # nested JSON values are MINIFIED inside constructors
+        # (json_create.cpp re-serializes, key order preserved — Spark's
+        # variant round-trip would alphabetize keys)
+        return f"coalesce(__json_minify({v}), 'null')"
+    t = f"to_json(array({v}))"
+    return f"substring({t}, 2, length({t}) - 2)"
 
-    # json_transform(j, 'structure') / json_transform_strict /
-    # from_json(_strict): the structure is a query constant (DuckDB's
-    # json_transform.cpp binds it constant too), so each distinct
-    # structure compiles to a SPECIALIZED Arrow-batched UDF implementing
-    # the reference's element-wise lenient-cast semantics — from_json
-    # can't express per-element NULL on mismatch, bool->int coercion,
-    # round-half-even number->int, or unsigned range guards
-    # (test_json_transform.test). Non-literal structures stay untouched
-    # (and fail loudly), matching the reference's bind requirement.
-    def _json_transform_sql(strict: bool):
-        def fn(a: list[str]) -> str | None:
-            if len(a) != 2:
-                return None
-            lit = a[1].strip()
-            if not (lit.startswith("'") and lit.endswith("'")):
-                return None
-            from myduckdb_spark.functions.jsonx import make_transform_spec
 
-            try:
-                name, ddl, root_struct = make_transform_spec(
-                    lit[1:-1].replace("''", "'"), strict
-                )
-            except (ValueError, TypeError):
-                return None
-            if root_struct:
-                # a pandas-UDF DataFrame row can't be a NULL struct: NULL
-                # and JSON-null inputs short-circuit to a typed NULL here
-                return (
-                    f"CASE WHEN ({a[0]}) IS NULL OR trim({a[0]}) = 'null' "
-                    f"THEN CAST(NULL AS {ddl}) ELSE {name}({a[0]}) END"
-                )
-            return f"{name}({a[0]})"
+def _jfrag_key(k: str) -> str:
+    m = re.fullmatch(r"\s*'((?:[^']|'')*)'\s*", k)
+    if m:
+        body = m.group(1).replace('"', '\\"')
+        return f"'\"{body}\":'"
+    return f"{_jfrag(f'CAST({k} AS STRING)')} || ':'"
 
-        return fn
 
-    out = _rewrite_calls(out, "json_transform", _json_transform_sql(False))
-    out = _rewrite_calls(
-        out, "json_transform_strict", _json_transform_sql(True)
-    )
-    out = _rewrite_calls(out, "from_json_strict", _json_transform_sql(True))
+def _json_object(a: list[str]) -> str | None:
+    if len(a) == 1 and not a[0].strip():
+        a = []
+    if len(a) % 2:
+        return None
+    if not a:
+        return "'{}'"
+    pieces = []
+    for i in range(0, len(a), 2):
+        if pieces:
+            pieces.append("','")
+        pieces.append(_jfrag_key(a[i]))
+        pieces.append(_jfrag(a[i + 1]))
+    return f"concat('{{', {', '.join(pieces)}, '}}')"
 
-    def _from_json_structure(a: list[str]) -> str | None:
-        # only rewrite when the 2nd arg is a literal that parses as a
-        # JSON structure document; Spark-style DDL strings pass through
-        if len(a) != 2:
-            return None
-        lit = a[1].strip()
-        if not (lit.startswith("'") and lit.endswith("'")):
-            return None
-        body = lit[1:-1].replace("''", "'").lstrip()
-        if not body[:1] in ("{", "[", '"'):
-            return None
-        return _json_transform_sql(False)(a)
 
-    out = _rewrite_calls(out, "from_json", _from_json_structure)
+def _json_array(a: list[str]) -> str:
+    if len(a) == 1 and not a[0].strip():
+        a = []
+    if not a:
+        return "'[]'"
+    pieces: list[str] = []
+    for v in a:
+        if pieces:
+            pieces.append("','")
+        pieces.append(_jfrag(v))
+    return f"concat('[', {', '.join(pieces)}, ']')"
 
-    # --- JSON constructors (json_create.cpp): json_object / json_array /
-    # json_quote / to_json over scalars. Spark's to_json only accepts
-    # containers, so a scalar value renders through to_json(array(v))
-    # with the brackets stripped — uniform for every type including NULL
-    # ('null'), bool ('true'), strings (quoted+escaped), nested structs.
-    def _jfrag(v: str) -> str:
-        v = v.strip()
-        # JSON-typed args splice raw (their text IS the JSON); SQL NULL
-        # of JSON type renders as 'null' inside constructors
-        if re.search(r"::\s*JSON\s*$", v, re.I) or re.match(
-            r"(to_json|json_object|json_array|json_quote|json_merge_patch|"
-            r"json_extract(?!_string)|row_to_json|"
-            r"array_to_json|__jt_[0-9a-f]+)\s*\(", v, re.I
-        ):
-            # nested JSON values are MINIFIED inside constructors
-            # (json_create.cpp re-serializes, key order preserved —
-            # Spark's variant round-trip would alphabetize keys)
-            return f"coalesce(__json_minify({v}), 'null')"
-        t = f"to_json(array({v}))"
-        return f"substring({t}, 2, length({t}) - 2)"
 
-    def _jfrag_key(k: str) -> str:
-        m = re.fullmatch(r"\s*'((?:[^']|'')*)'\s*", k)
-        if m:
-            body = m.group(1).replace('"', '\\"')
-            return f"'\"{body}\":'"
-        return f"{_jfrag(f'CAST({k} AS STRING)')} || ':'"
+def _json_keys(a: list[str]) -> str | None:
+    if len(a) == 1:
+        return f"__json_keys({a[0]}, '$')"
+    if len(a) != 2:
+        return None
+    p1 = a[1].strip()
+    if p1.startswith("[") or re.match(
+        r"(array|list_value|list_pack)\s*\(", p1, re.I
+    ):
+        return f"__json_keys_multi({a[0]}, {a[1]})"
+    return f"__json_keys({a[0]}, {a[1]})"
 
-    def _json_object(a: list[str]) -> str | None:
-        if len(a) == 1 and not a[0].strip():
-            a = []
-        if len(a) % 2:
-            return None
-        if not a:
-            return "'{}'"
-        pieces = []
-        for i in range(0, len(a), 2):
-            if pieces:
-                pieces.append("','")
-            pieces.append(_jfrag_key(a[i]))
-            pieces.append(_jfrag(a[i + 1]))
-        return f"concat('{{', {', '.join(pieces)}, '}}')"
 
-    out = _rewrite_calls(out, "json_object", _json_object)
+def _json_merge(a: list[str]) -> str | None:
+    if len(a) < 2:
+        return None
+    expr = a[0]
+    for nxt in a[1:]:
+        expr = f"__json_merge2({expr}, {nxt})"
+    return expr
 
-    def _json_array(a: list[str]) -> str:
-        if len(a) == 1 and not a[0].strip():
-            a = []
-        if not a:
-            return "'[]'"
-        pieces: list[str] = []
-        for v in a:
-            if pieces:
-                pieces.append("','")
-            pieces.append(_jfrag(v))
-        return f"concat('[', {', '.join(pieces)}, ']')"
 
-    out = _rewrite_calls(out, "json_array", _json_array)
-    # containment / keys / merge-patch: recursive tree semantics with no
-    # Spark expression form — Arrow-batched UDFs (jsonx.py)
-    out = _rewrite_calls(
-        out, "json_contains",
-        lambda a: f"__json_contains({a[0]}, {a[1]})"
-        if len(a) == 2 else None,
-    )
-    def _json_keys(a: list[str]) -> str | None:
-        if len(a) == 1:
-            return f"__json_keys({a[0]}, '$')"
-        if len(a) != 2:
-            return None
-        p1 = a[1].strip()
-        if p1.startswith("[") or re.match(
-            r"(array|list_value|list_pack)\s*\(", p1, re.I
-        ):
-            return f"__json_keys_multi({a[0]}, {a[1]})"
-        return f"__json_keys({a[0]}, {a[1]})"
+def _json_cast(try_form: bool, x: str) -> str:
+    """JSON type casts: the JSON carrier is STRING. VARCHAR input
+    VALIDATES but preserves the original text (CastVarcharToJSON);
+    containers/scalars re-serialize compactly ([1,2,3]::JSON ->
+    '[1,2,3]'). TRY_CAST yields NULL on malformed input, CAST raises.
+    String literals validate at translate time (the common test form);
+    everything else dispatches on the runtime value in the __json_cast
+    UDF — a STRING column passes through, an ARRAY column serializes."""
+    xs = x.strip()
+    m = re.fullmatch(r"'((?:[^']|'')*)'", xs)
+    if m:
+        from myduckdb_spark.functions.jsonx import _loads
 
-    out = _rewrite_calls(out, "json_keys", _json_keys)
-
-    def _json_merge(a: list[str]) -> str | None:
-        if len(a) < 2:
-            return None
-        expr = a[0]
-        for nxt in a[1:]:
-            expr = f"__json_merge2({expr}, {nxt})"
-        return expr
-
-    out = _rewrite_calls(out, "json_merge_patch", _json_merge)
-    # group aggregates (json_aggregates.cpp): array/object keep input
-    # NULLs as JSON null; structure merges the group's inferred shapes
-    out = _rewrite_calls(
-        out, "json_group_array",
-        lambda a: (
-            f"concat('[', coalesce(array_join(collect_list("
-            f"{_jfrag(a[0])}), ','), ''), ']')"
-        ) if len(a) == 1 else None,
-    )
-    out = _rewrite_calls(
-        out, "json_group_object",
-        lambda a: (
-            f"concat('{{', coalesce(array_join(collect_list(concat("
-            f"{_jfrag_key(a[0])}, {_jfrag(a[1])})), ','), ''), '}}')"
-        ) if len(a) == 2 else None,
-    )
-    out = _rewrite_calls(
-        out, "json_group_structure",
-        lambda a: f"__json_group_structure({a[0]})"
-        if len(a) == 1 else None,
-    )
-    # json_quote(NULL) is SQL NULL (unlike inside constructors)
-    out = _rewrite_calls(
-        out, "json_quote",
-        lambda a: (
-            f"CASE WHEN ({a[0]}) IS NULL THEN NULL ELSE {_jfrag(a[0])} END"
-            if len(a) == 1 else None
-        ),
-    )
-
-    # --- JSON type casts: the JSON carrier is STRING. VARCHAR input
-    # VALIDATES but preserves the original text (CastVarcharToJSON);
-    # containers/scalars re-serialize compactly ([1,2,3]::JSON ->
-    # '[1,2,3]'). TRY_CAST yields NULL on malformed input, CAST raises.
-    # String literals validate at translate time (the common test form);
-    # everything else dispatches on the runtime value in the __json_cast
-    # UDF — a STRING column passes through, an ARRAY column serializes.
-    def _json_cast(try_form: bool):
-        def fn(x: str) -> str:
-            xs = x.strip()
-            m = re.fullmatch(r"'((?:[^']|'')*)'", xs)
-            if m:
-                from myduckdb_spark.functions.jsonx import _loads
-
-                try:
-                    _loads(m.group(1).replace("''", "'"))
-                    return xs
-                except (ValueError, TypeError):
-                    if try_form:
-                        return "CAST(NULL AS STRING)"
-                    return ("CAST(raise_error('malformed JSON') "
-                            "AS STRING)")
-            if re.fullmatch(r"NULL", xs, re.I):
-                return "CAST(NULL AS STRING)"
-            return f"__json_cast{'_try' if try_form else ''}({x})"
-
-        return fn
-
-    # typed literal: JSON '...' is a cast of the string literal
-    out = _sub_code(r"\bJSON\s+('(?:[^']|'')*')", r"\1::JSON", out, re.I)
-    # right to left: each operand lies left of its cast, in text that the
-    # rewrites of later casts have not touched, so one mask serves all
-    mask_jc = _code_mask(out)
-    for mm in reversed(list(_code_matches(r"::\s*JSON\b", out, re.I, mask=mask_jc))):
         try:
-            st = _operand_start(out, mm.start(), mask_jc)
+            _loads(m.group(1).replace("''", "'"))
+            return xs
+        except (ValueError, TypeError):
+            if try_form:
+                return "CAST(NULL AS STRING)"
+            return ("CAST(raise_error('malformed JSON') "
+                    "AS STRING)")
+    if re.fullmatch(r"NULL", xs, re.I):
+        return "CAST(NULL AS STRING)"
+    return f"__json_cast{'_try' if try_form else ''}({x})"
+
+
+def _rewrite_typed_json_literals(text: str) -> str:
+    """Typed literal: JSON '...' is a cast of the string literal."""
+    return _sub_code(r"\bJSON\s+('(?:[^']|'')*')", r"\1::JSON", text, re.I)
+
+
+def _rewrite_json_postfix_casts(text: str) -> str:
+    """``x::JSON`` (see ``_json_cast``). Right to left: each operand lies
+    left of its cast, in text that the rewrites of later casts have not
+    touched, so one mask serves all."""
+    mask = _code_mask(text)
+    for mm in reversed(list(_code_matches(r"::\s*JSON\b", text, re.I, mask=mask))):
+        try:
+            st = _operand_start(text, mm.start(), mask)
         except ValueError:
             continue
-        operand = out[st:mm.start()].strip()
-        repl_jc = _json_cast(False)(operand)
-        # (x::JSON).key[0]."q key"… — dot-syntax extraction over the
-        # cast; the parenthesized form consumes its wrapping parens
-        end_jc = mm.end()
-        lo_jc = st
-        if re.search(r"\(\s*$", out[:st]) and re.match(
-            r"\s*\)", out[end_jc:]
-        ):
-            pm = re.match(r"\s*\)", out[end_jc:])
-            chain = re.match(_DOT_CHAIN, out[end_jc + pm.end():])
+        repl = _json_cast(False, text[st:mm.start()].strip())
+        # (x::JSON).key[0]."q key"… — dot-syntax extraction over the cast;
+        # the parenthesized form consumes its wrapping parens
+        end = mm.end()
+        lo = st
+        if re.search(r"\(\s*$", text[:st]) and re.match(r"\s*\)", text[end:]):
+            pm = re.match(r"\s*\)", text[end:])
+            chain = re.match(_DOT_CHAIN, text[end + pm.end():])
             if chain:
-                lo_jc = out[:st].rindex("(")
-                end_jc = end_jc + pm.end()
-        dmc = re.match(_DOT_CHAIN, out[end_jc:])
+                lo = text[:st].rindex("(")
+                end = end + pm.end()
+        dmc = re.match(_DOT_CHAIN, text[end:])
         if dmc:
-            pathc = "$" + re.sub(r'\s*([.\[\]])\s*', r"\1", dmc.group(1))
-            repl_jc = f"__jx_one({repl_jc}, '{pathc}')"
-            out = out[:lo_jc] + repl_jc + out[end_jc + dmc.end():]
+            path = "$" + re.sub(r'\s*([.\[\]])\s*', r"\1", dmc.group(1))
+            text = text[:lo] + f"__jx_one({repl}, '{path}')" + text[end + dmc.end():]
         else:
-            out = out[:lo_jc] + repl_jc + out[end_jc:]
-    for cast_kw, try_form in (("TRY_CAST", True), ("CAST", False)):
-        def _cast_json(a: list[str], try_form=try_form) -> str | None:
-            if len(a) != 1:
-                return None
-            m = re.fullmatch(r"(.+)\s+AS\s+JSON\s*", a[0], re.I | re.S)
-            if not m:
-                return None
-            return _json_cast(try_form)(m.group(1))
+            text = text[:lo] + repl + text[end:]
+    return text
 
-        out = _rewrite_calls(out, cast_kw, _cast_json)
 
-    # json(x) MINIFIES (unlike the text-preserving ::JSON cast) and a
-    # JSON null input yields SQL NULL; a trailing .key[.key…] chain is
-    # DuckDB's dot-syntax extraction over the JSON value
-    # (json_functions.cpp dot operator / json minify)
+def _cast_json(try_form: bool, a: list[str]) -> str | None:
+    """CAST(x AS JSON) / TRY_CAST(x AS JSON) (see ``_json_cast``)."""
+    if len(a) != 1:
+        return None
+    m = re.fullmatch(r"(.+)\s+AS\s+JSON\s*", a[0], re.I | re.S)
+    if not m:
+        return None
+    return _json_cast(try_form, m.group(1))
+
+
+def _rewrite_json_minify(text: str) -> str:
+    """json(x) MINIFIES (unlike the text-preserving ::JSON cast) and a
+    JSON null input yields SQL NULL; a trailing .key[.key…] chain is
+    DuckDB's dot-syntax extraction over the JSON value
+    (json_functions.cpp dot operator / json minify)."""
     while True:
-        mask_j = _code_mask(out)
+        mask = _code_mask(text)
         mj = next(
-            (c for c in _code_matches(r"\bjson\s*\(", out, re.I, mask=mask_j)
-             if not re.search(r"[.$]$|::\s*$", out[: c.start()])),
+            (c for c in _code_matches(r"\bjson\s*\(", text, re.I, mask=mask)
+             if not re.search(r"[.$]$|::\s*$", text[: c.start()])),
             None,
         )
         if mj is None:
-            break
-        close_j = _matching(out, mj.end() - 1, mask_j)
-        if close_j < 0:
-            break
-        inner_j = out[mj.end():close_j]
-        cast_expr = f"__json_minify({inner_j})"
-        dm = re.match(_DOT_CHAIN, out[close_j + 1:])
+            return text
+        close = _matching(text, mj.end() - 1, mask)
+        if close < 0:
+            return text
+        cast_expr = f"__json_minify({text[mj.end():close]})"
+        dm = re.match(_DOT_CHAIN, text[close + 1:])
         if dm:
             path = "$" + re.sub(r'\s*([.\[\]])\s*', r"\1", dm.group(1))
             repl = f"__jx_one({cast_expr}, '{path}')"
-            out = out[: mj.start()] + repl + out[close_j + 1 + dm.end():]
+            text = text[: mj.start()] + repl + text[close + 1 + dm.end():]
         else:
-            out = out[: mj.start()] + cast_expr + out[close_j + 1:]
+            text = text[: mj.start()] + cast_expr + text[close + 1:]
 
-    # json_type 1-arg form -> 2-arg UDF signature; json_typeof alias
-    out = _rewrite_calls(
-        out,
-        "json_typeof",
-        lambda a: f"json_type({', '.join(a)})" if len(a) in (1, 2) else None,
-    )
-    out = _rewrite_calls(
-        out,
-        "json_type",
-        # '$' = whole-document type; an actual NULL path returns NULL
-        lambda a: f"json_type({a[0]}, '$')" if len(a) == 1 else None,
-    )
 
-    # json_structure/json_type are string-input pandas UDFs; a JSON-typed
-    # (VARIANT) column must be serialized back to JSON text first
-    def _json_in_cast(a: list[str]) -> str | None:
-        if not a:
-            return None
-        head = a[0].strip()
-        if re.fullmatch(r"'(?:[^']|'')*'", head):  # literal: already text
-            return None
-        return None if head.upper().startswith("CAST(") else (
-            f"__jx0(CAST({a[0]} AS STRING)"
-            + ("".join(f", {x}" for x in a[1:])) + ")"
-        )
-
-    for _jfn in ("json_structure", "json_type"):
-        out = _rewrite_calls(out, _jfn, _json_in_cast)
-        out = out.replace("__jx0(", f"{_jfn}(")
-
-    # Spark's base64 MIME-chunks at 76 chars; the reference emits one
-    # unbroken string (blob/base64.test)
-    for _b64 in ("base64", "to_base64"):
-        out = _rewrite_calls(
-            out, _b64,
-            lambda a: (
-                f"replace(__b64({a[0]}), '\\r\\n', '')"
-                if len(a) == 1 else None
-            ),
-        )
-    out = out.replace("__b64(", "base64(")
-    # regr_avgx/avgy always return DOUBLE in the reference (regr_avg.cpp);
-    # Spark preserves DECIMAL inputs. Equivalent both-non-null average.
-    out = _rewrite_calls(
-        out,
-        "regr_avgy",
-        lambda a: (
-            f"CAST(avg(CASE WHEN ({a[0]}) IS NOT NULL AND ({a[1]}) IS NOT NULL "
-            f"THEN ({a[0]}) END) AS DOUBLE)"
-        )
-        if len(a) == 2
-        else None,
-    )
-    out = _rewrite_calls(
-        out,
-        "regr_avgx",
-        lambda a: (
-            f"CAST(avg(CASE WHEN ({a[0]}) IS NOT NULL AND ({a[1]}) IS NOT NULL "
-            f"THEN ({a[1]}) END) AS DOUBLE)"
-        )
-        if len(a) == 2
-        else None,
-    )
-
-    # len(x): DuckDB len() is list-or-string; Spark splits that into
-    # size() (arrays/maps) vs length() (strings). Choose by argument shape.
-    out = _rewrite_calls(
-        out, "len", lambda a: f"size({a[0]})" if _LISTY.search(a[0]) else f"length({a[0]})"
-    )
-    # DuckDB's length() is list-or-string too (length.cpp overload set);
-    # dispatch only on a list-producing OUTERMOST expression (match, not
-    # search — length(to_json(array(x))) is a string length)
-    out = _rewrite_calls(
-        out, "length",
-        lambda a: f"size({a[0]})"
-        if len(a) == 1 and _LISTY.match(a[0].lstrip()) else None,
-    )
-    # list_sort comparator/order forms (DuckDB: list_sort(l [, 'ASC'|'DESC' [, nulls]]))
-    def _list_sort(args: list[str]):
-        """DuckDB default null order is NULLS LAST for ASC, and the
-        optional third argument overrides it (list_sort.cpp); Spark's
-        sort_array(asc) is NULLS FIRST, array_sort() NULLS LAST."""
-        if len(args) == 1:
-            return f"array_sort({args[0]})"
-        order = args[1].strip().strip("'\"").upper()
-        nulls = args[2].strip().strip("'\"").upper() if len(args) == 3 else ""
-        if order == "ASC":
-            if "FIRST" in nulls:
-                return f"sort_array({args[0]}, true)"
-            return f"array_sort({args[0]})"
-        if "FIRST" in nulls:
-            return f"reverse(array_sort({args[0]}))"
-        return f"sort_array({args[0]}, false)"
-
-    # strftime/strptime: convert the C %-format literal to Spark's
-    # DateTimeFormatter pattern (reference strftime_format.cpp); calls
-    # with unmappable codes are left as-is (error/skip beats a silently
-    # different string)
-    def _strftime(args: list[str]):
-        if len(args) != 2:
-            return None
-        m_fmt = re.fullmatch(r"\s*'((?:[^']|'')*)'\s*", args[1])
-        if not m_fmt:
-            return None
-        fmt = m_fmt.group(1).replace("''", "'")
-        if fmt == "%-y":  # unpadded 2-digit year: no Java pattern exists
-            return f"CAST(year({args[0]}) % 100 AS STRING)"
-        j = _strf_literal_to_java(fmt)
-        if j is None:
-            return None
-        out_expr = f"date_format({args[0]}, '{j.replace(chr(39), chr(39)*2)}')"
-        if "yyyy" in j:
-            # Java prints years > 9999 as '+99999'; DuckDB has no sign
-            out_expr = f"regexp_replace({out_expr}, '^\\\\+', '')"
-        return out_expr
-
-    def _java_parse_lenient(j: str) -> str:
-        """Parse-mode pattern: single-letter numeric fields accept 1-N
-        digits (DuckDB's strptime is non-strict about zero padding);
-        strftime keeps the padded multi-letter forms. Quoted literal
-        sections pass through untouched."""
-        out_parts = []
-        for i, seg in enumerate(re.split(r"('(?:[^']|'')*')", j)):
-            if i % 2 == 0:
-                # adjacent numeric fields ('%Y%d%m') NEED fixed widths to
-                # parse unambiguously — keep those padded
-                blk = r"(?:yyyy|yy|MM|dd|HH|hh|mm|ss|DDD)"
-                if re.search(blk + blk, seg):
-                    out_parts.append(seg)
-                    continue
-                # exact-length runs only — MMMM (month name) must survive
-                for ch in "DMdHhms":
-                    n = 3 if ch == "D" else 2
-                    seg = re.sub(
-                        f"(?<!{ch}){ch}{{{n}}}(?!{ch})", ch, seg
-                    )
-            out_parts.append(seg)
-        return "".join(out_parts)
-
-    def _strptime(args: list[str], fn: str = "to_timestamp"):
-        if len(args) != 2:
-            return None
-        m_fmt = re.fullmatch(r"\s*'((?:[^']|'')*)'\s*", args[1])
-        if not m_fmt:
-            return None
-        fmt = m_fmt.group(1).replace("''", "'")
-        j = _strf_literal_to_java(fmt)
-        if j is None:
-            return None
-        j = _java_parse_lenient(j)
-        if not re.search(r"%[-]?[YyG]", fmt):
-            # no year directive: DuckDB defaults to 1900, Spark to 1970
-            # (strptime.cpp StrTimeFormat defaults)
-            return (
-                f"{fn}(concat('1900 ', {args[0]}), "
-                f"'yyyy {j.replace(chr(39), chr(39)*2)}')"
-            )
-        return f"{fn}({args[0]}, '{j.replace(chr(39), chr(39)*2)}')"
-
-    out = _rewrite_calls(out, "strftime", _strftime)
-    out = _rewrite_calls(out, "strptime", _strptime)
-
-    # ---- string-function edge parity (reference test/sql/function/string) --
-    # LEFT/RIGHT with negative counts drop from the other end
-    # (left_right.cpp); Spark returns '' for negatives
-    out = _rewrite_calls(
-        out,
-        "left",
-        lambda a: (
-            f"CASE WHEN ({a[1]}) IS NULL THEN CAST(NULL AS STRING) "
-            f"WHEN ({a[1]}) >= 0 THEN __left({a[0]}, {a[1]}) "
-            f"ELSE __substr({a[0]}, 1, greatest(length({a[0]}) + ({a[1]}), 0)) END"
-        )
-        if len(a) == 2
-        else None,
-    )
-    out = _rewrite_calls(
-        out,
-        "right",
-        lambda a: (
-            f"CASE WHEN ({a[1]}) >= 0 THEN __right({a[0]}, {a[1]}) "
-            f"ELSE __substr({a[0]}, 1 - ({a[1]})) END"
-        )
-        if len(a) == 2
-        else None,
-    )
-
-    # 3-arg substring: DuckDB resolves a negative start from the string's
-    # end, then takes the window [min(start, start+len), max(...)) clamped
-    # to position 1 — so start 0 eats one of the length and a negative
-    # length takes characters BEFORE the start (substring.cpp; verified
-    # live: substring('hello',0,5)='hell', ('hello',2,-2)='h')
-    def _substring3(a: list[str]) -> str | None:
-        if len(a) != 3:
-            return None
-        s, st, ln = a
-        rs = (
-            f"(CASE WHEN ({st}) < 0 THEN length({s}) + ({st}) + 1 "
-            f"ELSE ({st}) END)"
-        )
-        lo = f"greatest(least({rs}, {rs} + ({ln})), 1)"
-        hi = f"greatest({rs}, {rs} + ({ln}))"
-        return (
-            f"CASE WHEN ({st}) IS NULL OR ({ln}) IS NULL THEN CAST(NULL AS STRING) "
-            f"ELSE __substr({s}, {lo}, {hi} - {lo}) END"
-        )
-
-    # SQL-standard `substring(x FROM a [FOR b])` → comma form first
-    def _substr_fromfor(a: list[str]) -> str | None:
-        if len(a) != 1:
-            return None
-        m = re.match(
-            r"^(.*?)\s+FROM\s+(.+?)(?:\s+FOR\s+(.+?))?$", a[0].strip(), re.I | re.S
-        )
-        if not m:
-            return None
-        if m.group(3) is not None:
-            return _substring3([m.group(1), m.group(2), m.group(3)])
-        return f"__substr({m.group(1)}, {m.group(2)})"
-
-    out = _rewrite_calls(out, "substring", _substr_fromfor)
-    out = _rewrite_calls(out, "substr", _substr_fromfor)
-    out = _rewrite_calls(out, "substring", _substring3)
-    out = _rewrite_calls(out, "substr", _substring3)
-
-    # split_part with '' separator splits into single characters
-    # (string_split.cpp empty-delimiter path)
-    out = _rewrite_calls(
-        out,
-        "split_part",
-        lambda a: (
-            # NEVER returns NULL ('' for NULL inputs); a NULL separator
-            # doesn't split (part 1 = the whole string); '' separator
-            # splits into characters (verified live)
-            f"coalesce(CASE "
-            f"WHEN ({a[1]}) IS NULL THEN "
-            f"CASE WHEN CAST({a[2]} AS INT) = 1 THEN ({a[0]}) ELSE '' END "
-            f"WHEN ({a[1]}) = '' "
-            f"THEN try_element_at(split({a[0]}, ''), CAST({a[2]} AS INT)) "
-            f"ELSE __split_part({a[0]}, {a[1]}, {a[2]}) END, '')"
-        )
-        if len(a) == 3
-        else None,
-    )
-    for sentinel, real in (
-        ("__left", "left"), ("__right", "right"),
-        ("__substr", "substring"), ("__split_part", "split_part"),
-    ):
-        out = re.sub(rf"\b{sentinel}\s*\(", f"{real}(", out)
-
-    # string_agg with a NULL separator returns NULL (DuckDB binds the
-    # separator eagerly; verified live); the 1-arg form defaults to ','
-    # (string_agg.cpp) while Spark's listagg default is ''
-    def _string_agg_null_sep(a: list[str]) -> str | None:
-        if len(a) == 1 and not re.match(r"\s*DISTINCT\b", a[0], re.I):
-            if re.search(r"\bORDER\s+BY\b", a[0], re.I):
-                return None  # ordered form handled elsewhere
-            return f"__stragg({a[0]}, ',')"
-        if len(a) != 2:
-            return None
-        if a[1].strip().upper() != "NULL":
-            return None
-        return "CAST(NULL AS STRING)"
-
-    out = _rewrite_calls(out, "string_agg", _string_agg_null_sep)
-    out = re.sub(r"\b__stragg\s*\(", "string_agg(", out)
-
-    # printf/format: any NULL argument makes the result NULL (DuckDB
-    # fmt semantics; Spark renders nulls as the string 'null')
-    def _printf_nulls(a: list[str]) -> str | None:
-        if len(a) < 2:
-            return None
-        args = list(a)
-        fmt = args[0].strip()
-        if re.fullmatch(r"'(?:[^']|'')*'", fmt):
-            # %s arguments format through the SQL text rendering (the
-            # reference prints DATE/TIMESTAMP as their SQL text; Spark's
-            # %s of a DATE prints the raw epoch-days int)
-            convs = re.findall(
-                r"%[-+ #0]*\d*(?:\.\d+)?([sdioxXeEfgGc%])", fmt
-            )
-            convs = [c for c in convs if c != "%"]
-            for i, conv in enumerate(convs):
-                if conv == "s" and i + 1 < len(args):
-                    args[i + 1] = f"CAST({args[i + 1]} AS STRING)"
-        guard = " OR ".join(f"({x}) IS NULL" for x in a)
-        return (
-            f"CASE WHEN {guard} THEN CAST(NULL AS STRING) "
-            f"ELSE __printf({', '.join(args)}) END"
-        )
-
-    out = _rewrite_calls(out, "printf", _printf_nulls)
-    out = re.sub(r"\b__printf\s*\(", "printf(", out)
-
-    # regexp_extract: DuckDB's default group is 0 (the whole match);
-    # Spark's is 1. A NULL group yields '' (verified live).
-    def _regexp_extract(a: list[str]) -> str | None:
-        if len(a) == 2:
-            return f"regexp_extract({a[0]}, {a[1]}, 0)"
-        if len(a) == 3 and a[2].strip().upper() == "NULL":
-            return "''"
+def _json_in_cast(fn: str, a: list[str]) -> str | None:
+    """json_structure/json_type are string-input pandas UDFs; a JSON-typed
+    (VARIANT) column must be serialized back to JSON text first."""
+    if not a:
         return None
+    head = a[0].strip()
+    if re.fullmatch(r"'(?:[^']|'')*'", head):  # literal: already text
+        return None
+    return None if head.upper().startswith("CAST(") else (
+        f"{fn}(CAST({a[0]} AS STRING)"
+        + ("".join(f", {x}" for x in a[1:])) + ")"
+    )
 
-    out = _rewrite_calls(out, "regexp_extract", _regexp_extract)
 
-    # ---- list-function edge parity (reference test/sql/function/list) -----
-    # flatten skips NULL sublists but keeps NULL elements (flatten.cpp;
-    # Spark's flatten returns NULL when any sublist is NULL)
-    out = _rewrite_calls(
-        out,
-        "flatten",
-        lambda a: f"__flat(filter({a[0]}, __x -> __x IS NOT NULL))"
-        if len(a) == 1
-        else None,
-    )
-    out = re.sub(r"\b__flat\s*\(", "flatten(", out)
-    # list_has_any ignores NULL elements and never returns NULL for
-    # non-NULL inputs (verified live: ([1,NULL],[NULL,3]) = false)
-    out = _rewrite_calls(
-        out,
-        "list_has_any",
-        lambda a: (
-            f"CASE WHEN ({a[0]}) IS NULL OR ({a[1]}) IS NULL THEN NULL "
-            f"ELSE coalesce(arrays_overlap("
-            f"filter({a[0]}, __x -> __x IS NOT NULL), "
-            f"filter({a[1]}, __x -> __x IS NOT NULL)), false) END"
+def _list_sort(args: list[str]) -> str:
+    """list_sort(l [, 'ASC'|'DESC' [, nulls]]): DuckDB default null order
+    is NULLS LAST for ASC, and the optional third argument overrides it
+    (list_sort.cpp); Spark's sort_array(asc) is NULLS FIRST, array_sort()
+    NULLS LAST."""
+    if len(args) == 1:
+        return f"array_sort({args[0]})"
+    order = args[1].strip().strip("'\"").upper()
+    nulls = args[2].strip().strip("'\"").upper() if len(args) == 3 else ""
+    if order == "ASC":
+        if "FIRST" in nulls:
+            return f"sort_array({args[0]}, true)"
+        return f"array_sort({args[0]})"
+    if "FIRST" in nulls:
+        return f"reverse(array_sort({args[0]}))"
+    return f"sort_array({args[0]}, false)"
+
+
+def _strftime(args: list[str]) -> str | None:
+    """strftime/strptime: convert the C %-format literal to Spark's
+    DateTimeFormatter pattern (reference strftime_format.cpp); calls with
+    unmappable codes are left as-is (error/skip beats a silently
+    different string)."""
+    if len(args) != 2:
+        return None
+    m_fmt = re.fullmatch(r"\s*'((?:[^']|'')*)'\s*", args[1])
+    if not m_fmt:
+        return None
+    fmt = m_fmt.group(1).replace("''", "'")
+    if fmt == "%-y":  # unpadded 2-digit year: no Java pattern exists
+        return f"CAST(year({args[0]}) % 100 AS STRING)"
+    j = _strf_literal_to_java(fmt)
+    if j is None:
+        return None
+    out_expr = f"date_format({args[0]}, '{j.replace(chr(39), chr(39)*2)}')"
+    if "yyyy" in j:
+        # Java prints years > 9999 as '+99999'; DuckDB has no sign
+        out_expr = f"regexp_replace({out_expr}, '^\\\\+', '')"
+    return out_expr
+
+
+def _java_parse_lenient(j: str) -> str:
+    """Parse-mode pattern: single-letter numeric fields accept 1-N digits
+    (DuckDB's strptime is non-strict about zero padding); strftime keeps
+    the padded multi-letter forms. Quoted literal sections pass through
+    untouched."""
+    out_parts = []
+    for i, seg in enumerate(re.split(r"('(?:[^']|'')*')", j)):
+        if i % 2 == 0:
+            # adjacent numeric fields ('%Y%d%m') NEED fixed widths to
+            # parse unambiguously — keep those padded
+            blk = r"(?:yyyy|yy|MM|dd|HH|hh|mm|ss|DDD)"
+            if re.search(blk + blk, seg):
+                out_parts.append(seg)
+                continue
+            # exact-length runs only — MMMM (month name) must survive
+            for ch in "DMdHhms":
+                n = 3 if ch == "D" else 2
+                seg = re.sub(f"(?<!{ch}){ch}{{{n}}}(?!{ch})", ch, seg)
+        out_parts.append(seg)
+    return "".join(out_parts)
+
+
+def _strptime(args: list[str], fn: str = "to_timestamp") -> str | None:
+    if len(args) != 2:
+        return None
+    m_fmt = re.fullmatch(r"\s*'((?:[^']|'')*)'\s*", args[1])
+    if not m_fmt:
+        return None
+    fmt = m_fmt.group(1).replace("''", "'")
+    j = _strf_literal_to_java(fmt)
+    if j is None:
+        return None
+    j = _java_parse_lenient(j)
+    if not re.search(r"%[-]?[YyG]", fmt):
+        # no year directive: DuckDB defaults to 1900, Spark to 1970
+        # (strptime.cpp StrTimeFormat defaults)
+        return (
+            f"{fn}(concat('1900 ', {args[0]}), "
+            f"'yyyy {j.replace(chr(39), chr(39)*2)}')"
         )
-        if len(a) == 2
-        else None,
+    return f"{fn}({args[0]}, '{j.replace(chr(39), chr(39)*2)}')"
+
+
+# ---- string-function edge parity (reference test/sql/function/string) ----
+#
+# ``__substr`` is Spark's substring over arguments already in Spark's
+# convention. LEFT/RIGHT and `substring(x FROM a FOR b)` emit it to shield
+# their output from the 3-arg substring/substr rules, which run later;
+# ``_PASSES`` renames it right after those rules.
+
+def _left(a: list[str]) -> str | None:
+    """LEFT/RIGHT with negative counts drop from the other end
+    (left_right.cpp); Spark returns '' for negatives."""
+    if len(a) != 2:
+        return None
+    return (
+        f"CASE WHEN ({a[1]}) IS NULL THEN CAST(NULL AS STRING) "
+        f"WHEN ({a[1]}) >= 0 THEN left({a[0]}, {a[1]}) "
+        f"ELSE __substr({a[0]}, 1, greatest(length({a[0]}) + ({a[1]}), 0)) END"
     )
-    # list_intersect dedups and drops NULLs; NULL first arg -> NULL but
-    # NULL second arg -> [] (verified live, asymmetric)
-    out = _rewrite_calls(
-        out,
-        "list_intersect",
-        lambda a: (
-            f"CASE WHEN ({a[0]}) IS NULL THEN NULL "
-            f"WHEN ({a[1]}) IS NULL THEN filter({a[0]}, __x -> false) "
-            f"ELSE array_intersect(filter({a[0]}, __x -> __x IS NOT NULL), "
-            f"filter({a[1]}, __x -> __x IS NOT NULL)) END"
+
+
+def _right(a: list[str]) -> str | None:
+    if len(a) != 2:
+        return None
+    return (
+        f"CASE WHEN ({a[1]}) >= 0 THEN right({a[0]}, {a[1]}) "
+        f"ELSE __substr({a[0]}, 1 - ({a[1]})) END"
+    )
+
+
+def _substring3(a: list[str], fn: str = "substring") -> str | None:
+    """3-arg substring: DuckDB resolves a negative start from the
+    string's end, then takes the window [min(start, start+len),
+    max(...)) clamped to position 1 — so start 0 eats one of the length
+    and a negative length takes characters BEFORE the start
+    (substring.cpp; verified live: substring('hello',0,5)='hell',
+    ('hello',2,-2)='h')."""
+    if len(a) != 3:
+        return None
+    s, st, ln = a
+    rs = (
+        f"(CASE WHEN ({st}) < 0 THEN length({s}) + ({st}) + 1 "
+        f"ELSE ({st}) END)"
+    )
+    lo = f"greatest(least({rs}, {rs} + ({ln})), 1)"
+    hi = f"greatest({rs}, {rs} + ({ln}))"
+    return (
+        f"CASE WHEN ({st}) IS NULL OR ({ln}) IS NULL THEN CAST(NULL AS STRING) "
+        f"ELSE {fn}({s}, {lo}, {hi} - {lo}) END"
+    )
+
+
+def _substr_fromfor(a: list[str]) -> str | None:
+    """SQL-standard `substring(x FROM a [FOR b])` → comma form first."""
+    if len(a) != 1:
+        return None
+    m = re.match(
+        r"^(.*?)\s+FROM\s+(.+?)(?:\s+FOR\s+(.+?))?$", a[0].strip(), re.I | re.S
+    )
+    if not m:
+        return None
+    if m.group(3) is not None:
+        return _substring3([m.group(1), m.group(2), m.group(3)], "__substr")
+    return f"__substr({m.group(1)}, {m.group(2)})"
+
+
+def _split_part(a: list[str]) -> str | None:
+    """split_part NEVER returns NULL ('' for NULL inputs); a NULL
+    separator doesn't split (part 1 = the whole string); '' separator
+    splits into characters (string_split.cpp empty-delimiter path;
+    verified live)."""
+    if len(a) != 3:
+        return None
+    return (
+        f"coalesce(CASE "
+        f"WHEN ({a[1]}) IS NULL THEN "
+        f"CASE WHEN CAST({a[2]} AS INT) = 1 THEN ({a[0]}) ELSE '' END "
+        f"WHEN ({a[1]}) = '' "
+        f"THEN try_element_at(split({a[0]}, ''), CAST({a[2]} AS INT)) "
+        f"ELSE split_part({a[0]}, {a[1]}, {a[2]}) END, '')"
+    )
+
+
+def _string_agg_null_sep(a: list[str]) -> str | None:
+    """string_agg with a NULL separator returns NULL (DuckDB binds the
+    separator eagerly; verified live); the 1-arg form defaults to ','
+    (string_agg.cpp) while Spark's listagg default is ''."""
+    if len(a) == 1 and not re.match(r"\s*DISTINCT\b", a[0], re.I):
+        if re.search(r"\bORDER\s+BY\b", a[0], re.I):
+            return None  # ordered form handled elsewhere
+        return f"string_agg({a[0]}, ',')"
+    if len(a) != 2:
+        return None
+    if a[1].strip().upper() != "NULL":
+        return None
+    return "CAST(NULL AS STRING)"
+
+
+def _printf_nulls(a: list[str]) -> str | None:
+    """printf/format: any NULL argument makes the result NULL (DuckDB fmt
+    semantics; Spark renders nulls as the string 'null')."""
+    if len(a) < 2:
+        return None
+    args = list(a)
+    fmt = args[0].strip()
+    if re.fullmatch(r"'(?:[^']|'')*'", fmt):
+        # %s arguments format through the SQL text rendering (the
+        # reference prints DATE/TIMESTAMP as their SQL text; Spark's %s of
+        # a DATE prints the raw epoch-days int)
+        convs = re.findall(
+            r"%[-+ #0]*\d*(?:\.\d+)?([sdioxXeEfgGc%])", fmt
         )
-        if len(a) == 2
-        else None,
+        convs = [c for c in convs if c != "%"]
+        for i, conv in enumerate(convs):
+            if conv == "s" and i + 1 < len(args):
+                args[i + 1] = f"CAST({args[i + 1]} AS STRING)"
+    guard = " OR ".join(f"({x}) IS NULL" for x in a)
+    return (
+        f"CASE WHEN {guard} THEN CAST(NULL AS STRING) "
+        f"ELSE printf({', '.join(args)}) END"
     )
-    out = re.sub(r"\barray_intersect\s*\(", "__ai(", out)
-    out = _rewrite_calls(
-        out,
-        "__ai",
-        lambda a: (
-            f"CASE WHEN ({a[0]}) IS NULL THEN NULL "
-            f"WHEN ({a[1]}) IS NULL THEN filter({a[0]}, __x -> false) "
-            f"ELSE array_intersect(filter({a[0]}, __x -> __x IS NOT NULL), "
-            f"filter({a[1]}, __x -> __x IS NOT NULL)) END"
-        )
-        if len(a) == 2
-        else f"array_intersect({', '.join(a)})",
+
+
+def _regexp_extract(a: list[str]) -> str | None:
+    """regexp_extract: DuckDB's default group is 0 (the whole match);
+    Spark's is 1. A NULL group yields '' (verified live)."""
+    if len(a) == 2:
+        return f"regexp_extract({a[0]}, {a[1]}, 0)"
+    if len(a) == 3 and a[2].strip().upper() == "NULL":
+        return "''"
+    return None
+
+
+def _null_dropping_intersect(a: list[str]) -> str:
+    """list_intersect / array_intersect dedup and drop NULLs; NULL first
+    arg -> NULL but NULL second arg -> [] (verified live,
+    asymmetric)."""
+    return (
+        f"CASE WHEN ({a[0]}) IS NULL THEN NULL "
+        f"WHEN ({a[1]}) IS NULL THEN filter({a[0]}, __x -> false) "
+        f"ELSE array_intersect(filter({a[0]}, __x -> __x IS NOT NULL), "
+        f"filter({a[1]}, __x -> __x IS NOT NULL)) END"
     )
-    # array_to_string: empty list -> NULL, NULL separator behaves as ','
-    # (verified live)
-    out = _rewrite_calls(
-        out,
-        "array_to_string",
-        lambda a: (
-            f"CASE WHEN size({a[0]}) = 0 THEN NULL "
-            f"ELSE array_join({a[0]}, coalesce({a[1]}, ',')) END"
-        )
-        if len(a) == 2
-        else None,
-    )
-    # CURRENT_USER/SESSION_USER/CURRENT_ROLE/USER value functions ->
-    # 'duckdb'; CURRENT_CATALOG -> 'memory' (pg_catalog system_functions)
-    # bare USER is the value function ONLY when no relation/alias named
-    # `user` appears in the statement (the binder prefers the relation:
-    # parser/test_value_functions.test aliases VALUES as user(x))
+
+
+def _bind_user_value_functions(text: str) -> str:
+    """CURRENT_USER/SESSION_USER/CURRENT_ROLE/USER value functions ->
+    'duckdb'; CURRENT_CATALOG -> 'memory' (pg_catalog system_functions).
+    Bare USER is the value function ONLY when no relation/alias named
+    `user` appears in the statement (the binder prefers the relation:
+    parser/test_value_functions.test aliases VALUES as user(x)).
+    pg_catalog-qualified function calls then resolve like unqualified
+    ones (the pg_catalog VIEWS were bound before translate)."""
     user_alt = (
         "|user"
         if not re.search(r"\buser\s*\(|\b(FROM|JOIN|TABLE)\s+user\b",
-                         out, re.I)
+                         text, re.I)
         else ""
     )
-    out = _sub_code(
+    text = _sub_code(
         rf"(?<![.\w])(current_user|session_user|current_role{user_alt})\b"
         r"(?!\s*\(|\s*\.)",
-        "'duckdb'", out, re.I,
+        "'duckdb'", text, re.I,
     )
-    out = _sub_code(r"\bcurrent_catalog\b(?!\s*\()", "'memory'", out, re.I)
-    # pg_catalog-qualified function calls resolve like unqualified ones
-    # (the pg_catalog VIEWS were bound before translate)
-    out = _sub_code(r"\bpg_catalog\s*\.\s*(\w+\s*\()", r"\1", out, re.I)
-    out = _rewrite_calls(
-        out, "current_database",
-        lambda a: f"'{SETTINGS.get('current_database', 'memory')}'"
-        if not a or not a[0] else None,
-    )
-    # SET search_path drives current_schema/current_schemas/
-    # current_setting (values resolve at translate time — session state)
-    out = re.sub(
+    text = _sub_code(r"\bcurrent_catalog\b(?!\s*\()", "'memory'", text, re.I)
+    return _sub_code(r"\bpg_catalog\s*\.\s*(\w+\s*\()", r"\1", text, re.I)
+
+
+def _strip_pg_catalog_settings(text: str) -> str:
+    """SET search_path drives current_schema/current_schemas/
+    current_setting (values resolve at translate time — session
+    state)."""
+    return re.sub(
         r"\bpg_catalog\s*\.\s*"
         r"(current_schemas?|current_setting|current_database)\b",
-        r"\1", out, flags=re.I,
+        r"\1", text, flags=re.I,
     )
-    _sp = [s for s in SETTINGS.get("search_path", "").split(",") if s]
-    # an attached-catalog schema's flat name ('db1__s1') reports its
-    # inner name ('s1') — the catalog half lives in current_database()
-    _sp_disp = [
-        (s.partition("__")[2]
-         if s.partition("__")[0].lower() in _attached_lower() else s)
-        or s
-        for s in _sp
-    ]
-    out = _rewrite_calls(
-        out, "current_schema",
-        lambda a: (f"'{_sp_disp[0]}'" if _sp_disp else "'main'")
-        if not a or not a[0] else None,
+
+
+def _search_path() -> list[str]:
+    return [s for s in SETTINGS.get("search_path", "").split(",") if s]
+
+
+def _current_schema(a: list[str]) -> str | None:
+    if a and a[0]:
+        return None
+    # an attached-catalog schema's flat name ('db1__s1') reports its inner
+    # name ('s1') — the catalog half lives in current_database()
+    path = _search_path()
+    if not path:
+        return "'main'"
+    s = path[0]
+    head, _, inner = s.partition("__")
+    return f"'{(inner if head.lower() in _attached_lower() else s) or s}'"
+
+
+def _cur_schemas(a: list[str]) -> str | None:
+    if len(a) != 1 or a[0].strip().lower() not in ("true", "false"):
+        return None
+    path = _search_path()
+    if a[0].strip().lower() == "false":
+        # explicit search path only (verified live)
+        return ("array(" + ", ".join(f"'{s}'" for s in path) + ")"
+                if path else "array()")
+    # implicit: main + path + main,main,pg_catalog (verified live: empty
+    # path [main,main,main,pg_catalog]; path=test inserts it)
+    full = ["main"] + path + ["main", "main", "pg_catalog"]
+    return "array(" + ", ".join(f"'{s}'" for s in full) + ")"
+
+
+# ---- missing scalar functions (SQL front door; Column forms live in
+# functions/registry.py) ----------------------------------------------------
+# epoch family (reference src/core_functions/scalar/date/epoch.cpp):
+# extraction direction (temporal -> number) AND the construction overloads
+# epoch_ms(BIGINT) -> TIMESTAMP / to_timestamp(numeric) -> TIMESTAMPTZ.
+# Dispatch is syntactic (literal/explicit-numeric-cast => construction;
+# anything else => extraction, the common column case).
+def _epoch_guard(a: str, fn: str) -> str:
+    # the extraction direction was chosen SYNTACTICALLY; a numeric COLUMN
+    # slipping through would silently extract (col*1000) instead of
+    # constructing a TIMESTAMP — raise instead of returning a wrong
+    # value/type. typeof() is static per query, so the guard
+    # constant-folds for correctly-typed arguments.
+    return (
+        f"(CASE WHEN typeof(({a})) RLIKE "
+        f"'^(u?(tiny|small|big)?int|decimal|double|float)' THEN "
+        f"raise_error('{fn}: numeric argument requires the "
+        f"construction overload - cast the argument explicitly "
+        f"(e.g. {fn}(col::BIGINT))') ELSE ({a}) END)"
     )
-    out = _rewrite_calls(
-        out, "current_setting",
-        lambda a: f"'{SETTINGS.get('search_path', '')}'"
-        if len(a) == 1 and re.fullmatch(
-            r"'(search_path|schema)'", a[0].strip(), re.I
-        ) else None,
-    )
-    # postgres-compat stub system functions (pg_catalog
-    # system_functions.test; values verified live)
-    for _pgfn, _pgval in (
-        ("inet_client_addr", "CAST(NULL AS STRING)"),
-        ("inet_client_port", "CAST(NULL AS INT)"),
-        ("inet_server_addr", "CAST(NULL AS STRING)"),
-        ("inet_server_port", "CAST(NULL AS INT)"),
-        ("pg_my_temp_schema", "CAST(0 AS BIGINT)"),
+
+
+def _epoch_ms(a: list[str]) -> str | None:
+    if len(a) != 1:
+        return None
+    if _is_numeric_arg(a[0]):
+        return f"CAST(timestamp_millis(CAST(({a[0]}) AS BIGINT)) AS TIMESTAMP_NTZ)"
+    return f"unix_millis(CAST({_epoch_guard(a[0], 'epoch_ms')} AS TIMESTAMP_LTZ))"
+
+
+def _timezone_fn(a: list[str]) -> str | None:
+    if not a or (len(a) == 1 and not a[0]):
+        return "current_timezone()"
+    if len(a) != 2:
+        return None
+    z, ts = a
+    if re.search(r"::\s*TIMESTAMPTZ\s*$", ts, re.I) or re.match(
+        r"TIMESTAMPTZ\b", ts, re.I
     ):
-        out = _rewrite_calls(
-            out, _pgfn,
-            lambda a, _v=_pgval: _v if not a or not a[0] else None,
-        )
-    out = _rewrite_calls(
-        out, "pg_is_other_temp_schema",
-        lambda a: "false" if len(a) == 1 else None,
-    )
-    for _pgfn in ("col_description", "obj_description", "shobj_description"):
-        out = _rewrite_calls(
-            out, _pgfn,
-            lambda a: "CAST(NULL AS STRING)" if len(a) == 2 else None,
-        )
-    def _cur_schemas(a: list[str]) -> str | None:
-        if len(a) != 1 or a[0].strip().lower() not in ("true", "false"):
-            return None
-        if a[0].strip().lower() == "false":
-            # explicit search path only (verified live)
-            return ("array(" + ", ".join(f"'{s}'" for s in _sp) + ")"
-                    if _sp else "array()")
-        # implicit: main + path + main,main,pg_catalog (verified live:
-        # empty path [main,main,main,pg_catalog]; path=test inserts it)
-        full = ["main"] + _sp + ["main", "main", "pg_catalog"]
-        return "array(" + ", ".join(f"'{s}'" for s in full) + ")"
+        return _tz_instant_to_wall(ts, z)
+    return _tz_wall_to_instant(ts, z)
 
-    out = _rewrite_calls(out, "current_schemas", _cur_schemas)
 
-    # ---- missing scalar functions (SQL front door; Column forms live in
-    # functions/registry.py) ------------------------------------------------
-    # epoch family (reference src/core_functions/scalar/date/epoch.cpp):
-    # extraction direction (temporal -> number) AND the construction
-    # overloads epoch_ms(BIGINT) -> TIMESTAMP / to_timestamp(numeric) ->
-    # TIMESTAMPTZ. Dispatch is syntactic (literal/explicit-numeric-cast =>
-    # construction; anything else => extraction, the common column case).
-    def _epoch_guard(a: str, fn: str) -> str:
-        # the extraction direction was chosen SYNTACTICALLY; a numeric
-        # COLUMN slipping through would silently extract (col*1000)
-        # instead of constructing a TIMESTAMP — raise instead of
-        # returning a wrong value/type. typeof() is static per query, so
-        # the guard constant-folds for correctly-typed arguments.
-        return (
-            f"(CASE WHEN typeof(({a})) RLIKE "
-            f"'^(u?(tiny|small|big)?int|decimal|double|float)' THEN "
-            f"raise_error('{fn}: numeric argument requires the "
-            f"construction overload - cast the argument explicitly "
-            f"(e.g. {fn}(col::BIGINT))') ELSE ({a}) END)"
-        )
+def _nextafter(a: list[str]) -> str | None:
+    """nextafter: NULL args → NULL, NaN args → NaN (the pandas UDF can't
+    tell them apart in a float64 batch — guard at the SQL level where
+    isnull() is NaN-exact). ``__isnan`` is Spark's isnan, shielded from
+    the isnan rule, which runs later."""
+    if len(a) != 2:
+        return None
+    return (
+        f"(CASE WHEN ({a[0]}) IS NULL OR ({a[1]}) IS NULL THEN NULL "
+        f"WHEN __isnan(CAST(({a[0]}) AS DOUBLE)) "
+        f"OR __isnan(CAST(({a[1]}) AS DOUBLE)) "
+        f"THEN CAST('NaN' AS DOUBLE) "
+        f"ELSE nextafter({a[0]}, {a[1]}) END)"
+    )
 
-    out = _rewrite_calls(
-        out, "epoch_ms",
-        lambda a: None if len(a) != 1 else (
-            f"CAST(timestamp_millis(CAST(({a[0]}) AS BIGINT)) AS TIMESTAMP_NTZ)"
-            if _is_numeric_arg(a[0])
-            else f"unix_millis(CAST({_epoch_guard(a[0], 'epoch_ms')} AS TIMESTAMP_LTZ))"
-        ),
-    )
-    out = _rewrite_calls(
-        out, "epoch_us",
-        lambda a: f"unix_micros(CAST({_epoch_guard(a[0], 'epoch_us')} AS TIMESTAMP_LTZ))"
-        if len(a) == 1 and not _is_numeric_arg(a[0]) else None,
-    )
-    out = _rewrite_calls(
-        out, "epoch_ns",
-        lambda a: (
-            f"(unix_micros(CAST({_epoch_guard(a[0], 'epoch_ns')} AS "
-            f"TIMESTAMP_LTZ)) * CAST(1000 AS BIGINT))"
-        ) if len(a) == 1 and not _is_numeric_arg(a[0]) else None,
-    )
-    out = _rewrite_calls(
-        out, "epoch",
-        lambda a: (
-            f"(CAST(unix_micros(CAST({_epoch_guard(a[0], 'epoch')} AS "
-            f"TIMESTAMP_LTZ)) AS DOUBLE) / 1000000)"
-        ) if len(a) == 1 and not _is_numeric_arg(a[0]) else None,
-    )
-    out = _rewrite_calls(
-        out, "to_timestamp",
-        lambda a: (
-            f"timestamp_seconds(CAST(({a[0]}) AS DECIMAL(20,6)))"
-        ) if len(a) == 1 and _is_numeric_arg(a[0]) else None,
-    )
-    def _timezone_fn(a: list[str]) -> str | None:
-        if not a or (len(a) == 1 and not a[0]):
-            return "current_timezone()"
-        if len(a) != 2:
-            return None
-        z, ts = a
-        if re.search(r"::\s*TIMESTAMPTZ\s*$", ts, re.I) or re.match(
-            r"TIMESTAMPTZ\b", ts, re.I
-        ):
-            return _tz_instant_to_wall(ts, z)
-        return _tz_wall_to_instant(ts, z)
 
-    out = _rewrite_calls(out, "timezone", _timezone_fn)
-    # weekday/dayofweek: Sunday=0..Saturday=6 in the reference
-    # (date_part.cpp); Spark's weekday() builtin is Monday=0 and its
-    # dayofweek() is Sunday=1
-    for _wd in ("weekday", "dayofweek"):
-        out = _rewrite_calls(
-            out, _wd,
-            lambda a: f"(__dow({a[0]}) - 1)" if len(a) == 1 else None,
-        )
-    out = out.replace("__dow(", "dayofweek(")
-    # nextafter: NULL args → NULL, NaN args → NaN (the pandas UDF can't
-    # tell them apart in a float64 batch — guard at the SQL level where
-    # isnull() is NaN-exact)
-    out = _rewrite_calls(
-        out, "nextafter",
-        lambda a: (
-            f"(CASE WHEN ({a[0]}) IS NULL OR ({a[1]}) IS NULL THEN NULL "
-            f"WHEN __isnan(CAST(({a[0]}) AS DOUBLE)) "
-            f"OR __isnan(CAST(({a[1]}) AS DOUBLE)) "
-            f"THEN CAST('NaN' AS DOUBLE) "
-            f"ELSE __naf({a[0]}, {a[1]}) END)"
-        ) if len(a) == 2 else None,
-    )
-    out = out.replace("__naf(", "nextafter(")
-    out = _rewrite_calls(
-        out, "starts_with", lambda a: f"startswith({', '.join(a)})" if a else None
-    )
-    out = _rewrite_calls(
-        out, "sha256", lambda a: f"sha2({a[0]}, 256)" if len(a) == 1 else None
-    )
-    out = _rewrite_calls(
-        out,
-        "to_base",
-        lambda a: (
-            f"conv(CAST({a[0]} AS BIGINT), 10, {a[1]})" if len(a) == 2
-            else f"lpad(conv(CAST({a[0]} AS BIGINT), 10, {a[1]}), {a[2]}, '0')"
-            if len(a) == 3
-            else None
-        ),
-    )
-    out = _rewrite_calls(
-        out, "error", lambda a: f"raise_error({a[0]})" if len(a) == 1 else None
-    )
-    out = _rewrite_calls(
-        out, "encode", lambda a: f"encode({a[0]}, 'UTF-8')" if len(a) == 1 else None
-    )
-    out = _rewrite_calls(
-        out, "decode", lambda a: f"decode({a[0]}, 'UTF-8')" if len(a) == 1 else None
-    )
-    # regexp_escape: RE2 QuoteMeta — every non-word character gets a
-    # backslash (verified live: ':' and '/' are escaped too)
-    out = _rewrite_calls(
-        out,
-        "regexp_escape",
-        lambda a: (
-            f"regexp_replace({a[0]}, '([^A-Za-z0-9_])', '\\\\\\\\$1')"
-        )
-        if len(a) == 1
-        else None,
-    )
+def _strip_accents(a: list[str]) -> str | None:
+    if len(a) != 1:
+        return None
     from myduckdb_spark.operators.collation import _ACCENT_DST, _ACCENT_SRC
 
-    out = _rewrite_calls(
-        out,
-        "strip_accents",
-        lambda a: f"translate({a[0]}, '{_ACCENT_SRC}', '{_ACCENT_DST}')"
-        if len(a) == 1
-        else None,
-    )
-    out = _rewrite_calls(
-        out,
-        "jaccard",
-        lambda a: (
-            f"CAST(size(array_intersect(array_distinct(split({a[0]}, '')), "
-            f"array_distinct(split({a[1]}, '')))) AS DOUBLE) / "
-            f"size(array_union(array_distinct(split({a[0]}, '')), "
-            f"array_distinct(split({a[1]}, ''))))"
-        )
-        if len(a) == 2
-        else None,
-    )
-    # list_zip: DuckDB pads to the LONGEST list (truncate flag → shortest)
-    # and yields UNNAMED structs (list_zip.cpp; the Python client renders
-    # them as tuples). Fields here are named list_N — the canon renders
-    # that convention positionally to match.
-    def _list_zip(a: list[str]) -> str | None:
-        args = list(a)
-        truncate = False
-        if args and args[-1].strip().lower() in ("true", "false"):
-            truncate = args.pop().strip().lower() == "true"
-        if not 1 <= len(args) <= 4:
-            return None
+    return f"translate({a[0]}, '{_ACCENT_SRC}', '{_ACCENT_DST}')"
 
-        def zip_expr(xs: list[str], base: int) -> str:
-            if len(xs) == 1:
-                return (
-                    f"transform({xs[0]}, __x{base} -> "
-                    f"named_struct('list_{base}', __x{base}))"
-                )
-            inner = zip_expr(xs[1:], base + 1)
-            fields = [f"'list_{base}', __x{base}"] + [
-                f"'list_{i}', __s{base}.list_{i}"
-                for i in range(base + 1, base + len(xs))
-            ]
-            return (
-                f"zip_with({xs[0]}, {inner}, (__x{base}, __s{base}) -> "
-                f"named_struct({', '.join(fields)}))"
-            )
 
-        expr = zip_expr(args, 1)
-        if truncate and len(args) > 1:
-            least = ", ".join(f"size({x})" for x in args)
-            expr = f"slice({expr}, 1, least({least}))"
-        return expr
+def _list_zip(a: list[str]) -> str | None:
+    """list_zip: DuckDB pads to the LONGEST list (truncate flag →
+    shortest) and yields UNNAMED structs (list_zip.cpp; the Python client
+    renders them as tuples). Fields here are named list_N — the canon
+    renders that convention positionally to match."""
+    args = list(a)
+    truncate = False
+    if args and args[-1].strip().lower() in ("true", "false"):
+        truncate = args.pop().strip().lower() == "true"
+    if not 1 <= len(args) <= 4:
+        return None
+    expr = _zip_expr(args, 1)
+    if truncate and len(args) > 1:
+        least = ", ".join(f"size({x})" for x in args)
+        expr = f"slice({expr}, 1, least({least}))"
+    return expr
 
-    out = _rewrite_calls(out, "list_zip", _list_zip)
-    # list_histogram routes through _list_aggregate's histogram fold (the
-    # alias loop below) — one NULL/empty-semantics implementation, not two.
-    # vector distance family over list columns (reference array_distance /
-    # list_distance; fixed-size bounds already dropped by the type rewrite)
-    def _vec_dist(a: list[str]) -> str | None:
-        if len(a) != 2:
-            return None
+
+def _zip_expr(xs: list[str], base: int) -> str:
+    if len(xs) == 1:
         return (
-            f"sqrt(aggregate(zip_with({a[0]}, {a[1]}, "
-            f"(__x, __y) -> (CAST(__x AS DOUBLE) - __y) * (CAST(__x AS DOUBLE) - __y)), "
-            f"CAST(0 AS DOUBLE), (__acc, __v) -> __acc + __v))"
+            f"transform({xs[0]}, __x{base} -> "
+            f"named_struct('list_{base}', __x{base}))"
         )
-
-    out = _rewrite_calls(out, "array_distance", _vec_dist)
-    out = _rewrite_calls(out, "list_distance", _vec_dist)
-
-    def _vec_dot(a: list[str]) -> str | None:
-        if len(a) != 2:
-            return None
-        return (
-            f"aggregate(zip_with({a[0]}, {a[1]}, "
-            f"(__x, __y) -> CAST(__x AS DOUBLE) * __y), "
-            f"CAST(0 AS DOUBLE), (__acc, __v) -> __acc + __v)"
-        )
-
-    out = _rewrite_calls(out, "array_inner_product", _vec_dot)
-    out = _rewrite_calls(out, "list_inner_product", _vec_dot)
-
-    out = _rewrite_calls(
-        out, "try_strptime", lambda a: _strptime(a, fn="try_to_timestamp")
+    inner = _zip_expr(xs[1:], base + 1)
+    fields = [f"'list_{base}', __x{base}"] + [
+        f"'list_{i}', __s{base}.list_{i}"
+        for i in range(base + 1, base + len(xs))
+    ]
+    return (
+        f"zip_with({xs[0]}, {inner}, (__x{base}, __s{base}) -> "
+        f"named_struct({', '.join(fields)}))"
     )
-    # array_agg / list KEEP NULL elements (reference list.cpp; Spark's
-    # array_agg drops them) — wrap in a non-null struct during collection
-    def _array_agg_nulls(a: list[str]) -> str | None:
-        if len(a) != 1 or re.match(r"\s*DISTINCT\b", a[0], re.I):
-            return None
-        arg = a[0]
-        om = re.search(r"\bORDER\s+BY\b", arg, re.I)
-        if om and _depth_profile(arg)[om.start()] == 0:
-            # ordered form: Spark's array_agg takes no ORDER BY — sort a
-            # (key, value) struct array instead (single sort key only)
-            km = re.fullmatch(
-                r"(.+?)\s*(ASC|DESC)?\s*", arg[om.end():].strip(), re.I | re.S
-            )
-            key, direction = km.group(1), (km.group(2) or "ASC").upper()
-            val = arg[: om.start()].rstrip()
-            # explicit comparator over k ONLY: DuckDB's default null order
-            # is NULLS LAST for both ASC and DESC (reverse(array_sort(..))
-            # would put NULL keys first on DESC), and comparing the whole
-            # struct would fail for non-comparable payloads (e.g. MAP)
-            lt, gt = ("-1", "1") if direction == "ASC" else ("1", "-1")
-            cmp = (
-                "(__l, __r) -> CASE "
-                "WHEN __l.k IS NULL AND __r.k IS NULL THEN 0 "
-                "WHEN __l.k IS NULL THEN 1 WHEN __r.k IS NULL THEN -1 "
-                f"WHEN __l.k < __r.k THEN {lt} "
-                f"WHEN __l.k > __r.k THEN {gt} ELSE 0 END"
-            )
-            agg = (
-                f"array_sort(__arragg(named_struct('k', {key}, 'v', {val})), "
-                f"{cmp})"
-            )
-            return (
-                f"CASE WHEN size({agg}) = 0 THEN NULL "
-                f"ELSE transform({agg}, __s -> __s.v) END"
-            )
-        agg = f"__arragg(named_struct('v', {arg}))"
-        # empty input -> NULL (DuckDB; Spark's array_agg gives [])
+
+
+def _vec_dist(a: list[str]) -> str | None:
+    """Vector distance family over list columns (reference array_distance
+    / list_distance; fixed-size bounds already dropped by the type
+    rewrite)."""
+    if len(a) != 2:
+        return None
+    return (
+        f"sqrt(aggregate(zip_with({a[0]}, {a[1]}, "
+        f"(__x, __y) -> (CAST(__x AS DOUBLE) - __y) * (CAST(__x AS DOUBLE) - __y)), "
+        f"CAST(0 AS DOUBLE), (__acc, __v) -> __acc + __v))"
+    )
+
+
+def _vec_dot(a: list[str]) -> str | None:
+    if len(a) != 2:
+        return None
+    return (
+        f"aggregate(zip_with({a[0]}, {a[1]}, "
+        f"(__x, __y) -> CAST(__x AS DOUBLE) * __y), "
+        f"CAST(0 AS DOUBLE), (__acc, __v) -> __acc + __v)"
+    )
+
+
+def _array_agg_nulls(a: list[str]) -> str | None:
+    """array_agg / list KEEP NULL elements (reference list.cpp; Spark's
+    array_agg drops them) — wrap in a non-null struct during
+    collection."""
+    if len(a) != 1 or re.match(r"\s*DISTINCT\b", a[0], re.I):
+        return None
+    arg = a[0]
+    om = re.search(r"\bORDER\s+BY\b", arg, re.I)
+    if om and _depth_profile(arg)[om.start()] == 0:
+        # ordered form: Spark's array_agg takes no ORDER BY — sort a
+        # (key, value) struct array instead (single sort key only)
+        km = re.fullmatch(
+            r"(.+?)\s*(ASC|DESC)?\s*", arg[om.end():].strip(), re.I | re.S
+        )
+        key, direction = km.group(1), (km.group(2) or "ASC").upper()
+        val = arg[: om.start()].rstrip()
+        # explicit comparator over k ONLY: DuckDB's default null order is
+        # NULLS LAST for both ASC and DESC (reverse(array_sort(..)) would
+        # put NULL keys first on DESC), and comparing the whole struct
+        # would fail for non-comparable payloads (e.g. MAP)
+        lt, gt = ("-1", "1") if direction == "ASC" else ("1", "-1")
+        cmp = (
+            "(__l, __r) -> CASE "
+            "WHEN __l.k IS NULL AND __r.k IS NULL THEN 0 "
+            "WHEN __l.k IS NULL THEN 1 WHEN __r.k IS NULL THEN -1 "
+            f"WHEN __l.k < __r.k THEN {lt} "
+            f"WHEN __l.k > __r.k THEN {gt} ELSE 0 END"
+        )
+        agg = (
+            f"array_sort(array_agg(named_struct('k', {key}, 'v', {val})), "
+            f"{cmp})"
+        )
         return (
             f"CASE WHEN size({agg}) = 0 THEN NULL "
             f"ELSE transform({agg}, __s -> __s.v) END"
         )
-
-    out = _rewrite_calls(out, "array_agg", _array_agg_nulls)
-    out = _rewrite_calls(out, "list", _array_agg_nulls)
-    out = re.sub(r"\b__arragg\s*\(", "array_agg(", out)
-
-    # map_concat treats NULL maps as empty, unless ALL are NULL -> NULL
-    # (verified live)
-    out = _rewrite_calls(
-        out,
-        "map_concat",
-        lambda a: (
-            "CASE WHEN "
-            + " AND ".join(f"({x}) IS NULL" for x in a)
-            + " THEN NULL ELSE __mapcat("
-            + ", ".join(f"coalesce({x}, map())" for x in a)
-            + ") END"
-        )
-        if len(a) >= 2
-        else None,
+    agg = f"array_agg(named_struct('v', {arg}))"
+    # empty input -> NULL (DuckDB; Spark's array_agg gives [])
+    return (
+        f"CASE WHEN size({agg}) = 0 THEN NULL "
+        f"ELSE transform({agg}, __s -> __s.v) END"
     )
-    out = re.sub(r"\b__mapcat\s*\(", "map_concat(", out)
 
-    # ---- infix GLOB / SIMILAR TO / COLLATE --------------------------------
-    out = _rewrite_glob_similar(out)
-    out = _rewrite_collate_expr(out)
-    # list_distinct DROPS NULL elements in the reference (list_distinct.cpp)
-    out = _rewrite_calls(
-        out,
-        "list_distinct",
-        lambda a: f"__adist(filter({a[0]}, __x -> __x IS NOT NULL))"
-        if len(a) == 1
-        else None,
-    )
-    # array_distinct alias shares the NULL-dropping semantics
-    out = _rewrite_calls(
-        out,
-        "array_distinct",
-        lambda a: f"__adist(filter({a[0]}, __x -> __x IS NOT NULL))"
-        if len(a) == 1
-        else None,
-    )
-    out = re.sub(r"\b__adist\s*\(", "array_distinct(", out)
-    # list_contains: two-valued (FALSE even when the list holds NULLs),
-    # NULL only for NULL list/needle (contains_or_position.cpp)
-    out = _rewrite_calls(
-        out,
-        "list_contains",
-        lambda a: (
-            f"CASE WHEN ({a[0]}) IS NULL OR ({a[1]}) IS NULL THEN NULL "
-            f"ELSE coalesce(array_contains({a[0]}, {a[1]}), false) END"
-        )
-        if len(a) == 2
-        else None,
-    )
-    # string_split: LITERAL separator (Spark split takes a regex);
-    # NULL separator keeps the whole string (string_split.cpp)
-    def _string_split(args: list[str]):
-        if len(args) != 2:
-            return None
-        s_, sep = args
-        return (
-            f"CASE WHEN ({s_}) IS NULL THEN NULL "
-            f"WHEN ({sep}) IS NULL THEN array({s_}) "
-            f"WHEN ({sep}) = '' THEN split({s_}, '') "
-            f"ELSE split({s_}, concat('\\\\Q', {sep}, '\\\\E'), -1) END"
-        )
 
-    out = _rewrite_calls(out, "string_split", _string_split)
-    out = _rewrite_calls(out, "str_split", _string_split)
-    out = _rewrite_calls(out, "string_to_array", _string_split)
-    # ltrim/rtrim 2-arg: Spark's argument order is (trimStr, str) —
-    # reversed from the reference's (string, characters)
-    out = _rewrite_calls(
-        out, "ltrim", lambda a: f"__lt2({a[1]}, {a[0]})" if len(a) == 2 else None
-    )
-    out = _rewrite_calls(
-        out, "rtrim", lambda a: f"__rt2({a[1]}, {a[0]})" if len(a) == 2 else None
-    )
-    out = re.sub(r"\b__lt2\s*\(", "ltrim(", out)
-    out = re.sub(r"\b__rt2\s*\(", "rtrim(", out)
-    out = _rewrite_calls(
-        out, "trim", lambda a: f"btrim({a[0]}, {a[1]})" if len(a) == 2 else None
-    )
-    # concat treats NULL arguments as '' in the reference (concat.cpp);
-    # Spark's concat is NULL-propagating. concat_ws('') has the skip
-    # semantics — applied only when no argument looks list-typed (concat
-    # over arrays must stay Spark's array concat).
-    out = _rewrite_calls(
-        out,
-        "concat",
-        lambda a: f"concat_ws('', {', '.join(a)})"
-        if len(a) >= 1 and not any(_LISTY.search(x) for x in a)
-        else None,
-    )
-    # date_trunc to a day-or-coarser literal part returns DATE
-    # (date_trunc.cpp); Spark always returns TIMESTAMP
-    _DATE_PARTS = (
-        "day", "week", "month", "quarter", "year", "decade", "century",
-        "millennium", "isoyear",
-    )
-    # day-equivalent part names truncate to day (date_trunc.cpp)
-    _DAY_ALIASES = ("doy", "dow", "isodow", "weekday", "dayofyear",
-                    "dayofweek", "julian", "jd")
-
-    # reference date_part_specifier synonyms (date_part.cpp GetDatePartSpecifier)
-    _PART_NORM = {
-        "y": "year", "yr": "year", "yrs": "year", "years": "year",
-        "mon": "month", "mons": "month", "months": "month",
-        "days": "day", "d": "day", "dayofmonth": "day",
-        "h": "hour", "hr": "hour", "hrs": "hour", "hours": "hour",
-        "min": "minute", "mins": "minute", "minutes": "minute", "n": "minute",
-        "s": "second", "sec": "second", "secs": "second", "seconds": "second",
-        "ms": "millisecond", "msec": "millisecond", "msecs": "millisecond",
-        "milliseconds": "millisecond",
-        "us": "microsecond", "usec": "microsecond", "usecs": "microsecond",
-        "microseconds": "microsecond",
-        "w": "week", "weeks": "week",
-        "quarters": "quarter", "qtr": "quarter",
-        "decades": "decade", "dec": "decade", "decs": "decade",
-        "centuries": "century", "cent": "century",
-        "millenniums": "millennium", "millennia": "millennium",
-        "mil": "millennium", "mils": "millennium",
-    }
-
-    def _isoyear_start(x: str) -> str:
-        j4 = f"make_date(extract(YEAROFWEEK FROM {x}), 1, 4)"
-        return f"date_sub({j4}, (dayofweek({j4}) + 5) % 7)"
-
-    def _era_start(x: str, unit: int, offset: int = 0) -> str:
-        # all eras anchor at year 0 (verified live: century(1996)=1900,
-        # millennium(1996)=1000, decade(1996)=1990)
-        y = f"CAST(year({x}) AS INT)"
-        return f"make_date(CAST(floor({y} / {unit}) AS INT) * {unit}, 1, 1)"
-
-    def _date_trunc(args: list[str]):
-        if len(args) != 2:
-            return None
-        raw = args[0].strip()
-        x = args[1]
-        # TIMESTAMPTZ input keeps TIMESTAMPTZ output (date_trunc.cpp icu
-        # overload truncates in session tz) — day-or-coarser parts return
-        # DATE only for DATE/TIMESTAMP inputs
-        ltz = bool(
-            re.search(r"::\s*TIMESTAMP_?(LTZ|TZ)\s*$", x, re.I)
-            or re.match(r"\s*TIMESTAMP_?(LTZ|TZ)\b", x, re.I)
-        )
-        if re.fullmatch(r"'[^']*'", raw):
-            part = raw.strip("'").lower()
-            part = _PART_NORM.get(part, part)
-            raw = f"'{part}'"
-            if part in _DAY_ALIASES:
-                return (f"__dtr('day', {x})" if ltz
-                        else f"CAST(__dtr('day', {x}) AS DATE)")
-            if part == "yearweek":
-                return (f"__dtr('week', {x})" if ltz
-                        else f"CAST(__dtr('week', {x}) AS DATE)")
-            if part == "isoyear":
-                return (f"CAST({_isoyear_start(x)} AS TIMESTAMP_LTZ)"
-                        if ltz else _isoyear_start(x))
-            if part == "decade":
-                return (f"CAST({_era_start(x, 10)} AS TIMESTAMP_LTZ)"
-                        if ltz else _era_start(x, 10))
-            if part == "century":
-                return (f"CAST({_era_start(x, 100)} AS TIMESTAMP_LTZ)"
-                        if ltz else _era_start(x, 100))
-            if part == "millennium":
-                return (f"CAST({_era_start(x, 1000)} AS TIMESTAMP_LTZ)"
-                        if ltz else _era_start(x, 1000))
-            if part in _DATE_PARTS:
-                return (f"__dtr({raw}, {x})" if ltz
-                        else f"CAST(__dtr({raw}, {x}) AS DATE)")
-            if part == "epoch":
-                return f"__dtr('second', {x})"
-            if part in ("hour", "minute", "second", "millisecond",
-                        "microsecond"):
-                return f"__dtr({raw}, {x})"
-            return None
-        # dynamic part (a column): CASE over the special parts, Spark's
-        # builtin for the rest — always TIMESTAMP, like the reference's
-        # dynamic dispatch
-        p = f"lower({raw})"
-        return (
-            f"CASE WHEN {p} = 'isoyear' THEN "
-            f"CAST({_isoyear_start(x)} AS TIMESTAMP) "
-            f"WHEN {p} = 'decade' THEN CAST({_era_start(x, 10)} AS TIMESTAMP) "
-            f"WHEN {p} = 'century' THEN CAST({_era_start(x, 100)} AS TIMESTAMP) "
-            f"WHEN {p} = 'millennium' THEN CAST({_era_start(x, 1000)} AS TIMESTAMP) "
-            f"WHEN {p} IN ('doy', 'dow', 'isodow', 'weekday', 'dayofyear', "
-            f"'dayofweek', 'julian', 'jd') THEN __dtr('day', {x}) "
-            f"WHEN {p} = 'yearweek' THEN __dtr('week', {x}) "
-            f"WHEN {p} = 'epoch' THEN __dtr('second', {x}) "
-            f"ELSE __dtr(CASE {p} WHEN 'years' THEN 'year' WHEN 'months' THEN 'month' WHEN 'days' THEN 'day' WHEN 'hours' THEN 'hour' WHEN 'minutes' THEN 'minute' WHEN 'seconds' THEN 'second' WHEN 'milliseconds' THEN 'millisecond' WHEN 'microseconds' THEN 'microsecond' WHEN 'weeks' THEN 'week' WHEN 'quarters' THEN 'quarter' ELSE {p} END, {x}) END"
-        )
-
-    out = _rewrite_calls(out, "date_trunc", _date_trunc)
-    out = re.sub(r"\b__dtr\s*\(", "date_trunc(", out)
-    # EXTRACT(dow ...) / date_part('dow', ...): Sunday=0 in the
-    # reference (date_part.cpp); Spark's DOW is Sunday=1
-    while True:
-        mask_dw = _code_mask(out)
-        dm = next(_code_matches(r"\bEXTRACT\s*\(\s*dow\s+FROM\b", out, re.I, mask=mask_dw), None)
-        if dm is None:
-            break
-        open_dw = out.index("(", dm.start())
-        close_dw = _matching(out, open_dw, mask_dw)
-        inner_expr = out[dm.end():close_dw]
-        out = out[: dm.start()] + f"(dayofweek({inner_expr}) - 1)" + out[close_dw + 1 :]
-
-    # second/millisecond/microsecond parts are INTEGERS in the reference
-    # (date_part.cpp: seconds truncate; msec/usec include the seconds) —
-    # Spark's EXTRACT(SECOND ...) is a fractional DECIMAL
-    _SUBSEC = {
-        "second": ("1", ""), "seconds": ("1", ""),
-        "millisecond": ("1000", ""), "milliseconds": ("1000", ""),
-        "microsecond": ("1000000", ""), "microseconds": ("1000000", ""),
-    }
-
-    def _subsec_expr(part: str, x: str) -> str:
-        # __XTRCT sentinel: the emitted text must not re-match the loop
-        mult = _SUBSEC[part][0]
-        inner = f"__XTRCT(SECOND FROM {x})"
-        if mult == "1":
-            return f"CAST(FLOOR({inner}) AS BIGINT)"
-        return f"CAST(FLOOR({inner} * {mult}) AS BIGINT)"
-
-    while True:
-        mask_ss = _code_mask(out)
-        sm = next(_code_matches(
-            r"\bEXTRACT\s*\(\s*(second|seconds|millisecond|milliseconds|"
-            r"microsecond|microseconds)\s+FROM\b",
-            out, re.I, mask=mask_ss,
-        ), None)
-        if sm is None:
-            break
-        open_ss = out.index("(", sm.start())
-        close_ss = _matching(out, open_ss, mask_ss)
-        inner_expr = out[sm.end():close_ss]
-        out = (
-            out[: sm.start()]
-            + _subsec_expr(sm.group(1).lower(), inner_expr)
-            + out[close_ss + 1 :]
-        )
-
-    def _date_part(args: list[str]):
-        if len(args) != 2:
-            return None
-        part = args[0].strip().strip("'\"").lower()
-        if part in ("dow", "weekday"):
-            return f"(dayofweek({args[1]}) - 1)"
-        if part in _SUBSEC:
-            return _subsec_expr(part, args[1])
-        # list-of-parts form DATE_PART(['year','month'], x) → STRUCT of
-        # the parts (date_part.cpp struct variant); the bracket-list pass
-        # has already turned the literal into array('year', ...)
-        lm = re.fullmatch(
-            r"\s*array\s*\((\s*'[a-z]+'\s*(?:,\s*'[a-z]+'\s*)*)\)\s*",
-            args[0],
-            re.I,
-        )
-        if lm:
-            fields = []
-            for nm in re.findall(r"'([a-z]+)'", lm.group(1), re.I):
-                e = _date_part([f"'{nm}'", args[1]]) or (
-                    f"date_part('{nm}', {args[1]})"
-                )
-                fields.append(f"'{nm}', {e}")
-            return f"named_struct({', '.join(fields)})"
+def _map_concat(a: list[str]) -> str | None:
+    """map_concat treats NULL maps as empty, unless ALL are NULL -> NULL
+    (verified live)."""
+    if len(a) < 2:
         return None
-
-    out = _rewrite_calls(out, "date_part", _date_part)
-    out = _rewrite_calls(out, "datepart", _date_part)
-    out = re.sub(r"\b__XTRCT\(", "EXTRACT(", out)
-    out = _rewrite_calls(out, "list_sort", _list_sort)
-
-    def _list_rsort(a: list[str]) -> str | None:
-        # default DESC null order is NULLS LAST; optional arg overrides
-        if len(a) == 2 and "FIRST" in a[1].strip().strip("'\"").upper():
-            return f"reverse(array_sort({a[0]}))"
-        return f"sort_array({a[0]}, false)"
-
-    out = _rewrite_calls(out, "list_reverse_sort", _list_rsort)
-
-    # json_extract* with a literal JSON-pointer path ('/a/b/0'): numeric
-    # segments index arrays (json pointer syntax, json_common.hpp)
-    def _json_pointer(text_form: bool):
-        def fn(a: list[str]) -> str | None:
-            if len(a) != 2:
-                return None
-            m = re.fullmatch(r"\s*'/((?:[^']|'')*)'\s*", a[1])
-            if not m:
-                return None
-            conv = "$" + "".join(
-                f"[{s}]" if s.isdigit() else f".{s}" for s in m.group(1).split("/")
-            )
-            if text_form:
-                return f"get_json_object({a[0]}, '{conv}')"
-            return (
-                f"nullif(to_json(try_variant_get(try_parse_json({a[0]}), "
-                f"'{conv}')), 'null')"
-            )
-
-        return fn
-
-    for jf in ("json_extract_string", "json_extract_path_text"):
-        out = _rewrite_calls(out, jf, _json_pointer(text_form=True))
-    # json_extract / json_extract_path return JSON — quoted strings
-    # (json_functions.cpp); VARIANT extraction preserves that exactly
-    for jf in ("json_extract", "json_extract_path"):
-        out = _rewrite_calls(out, jf, _json_pointer(text_form=False))
-
-    def _json_extract_dollar(text_form: bool):
-        suffix = "_text" if text_form else ""
-
-        def fn(a: list[str]) -> str | None:
-            if len(a) != 2:
-                return None
-            m = re.fullmatch(r"\s*'((?:[^']|'')*)'\s*", a[1])
-            if not m:
-                p1 = a[1].strip()
-                if p1.startswith("[") or re.match(
-                    r"(array|list_value|list_pack)\s*\(", p1, re.I
-                ):
-                    # list-of-paths form: LIST(JSON), one slot per path
-                    # (json_extract.cpp many-path bind)
-                    return f"__jx_list{suffix}({a[0]}, {a[1]})"
-                # non-constant path: runtime resolution in the extract UDF
-                # (DuckDB json_extract(j, q) with a column path —
-                # test_json_path.test)
-                return f"__jx_one{suffix}({a[0]}, {a[1]})"
-            path = m.group(1)
-            path = path if path.startswith("$") else f"$.{path}"
-            from myduckdb_spark.functions.jsonx import path_has_wildcard
-
-            if path_has_wildcard(path):
-                # wildcard paths return LIST(JSON) — one element per match
-                return f"__jx_multi{suffix}({a[0]}, '{path}')"
-            if re.search(r"\[\s*(#|-)", path) or re.search(r'\."', path):
-                # from-the-end indexes and quoted keys (escapes, brackets,
-                # spaces inside the key) aren't variant-get/get_json_object
-                # paths — resolve in the python extractor
-                return f"__jx_one{suffix}({a[0]}, '{path}')"
-            if text_form:
-                return f"get_json_object({a[0]}, '{path}')"
-            # DuckDB quotes odd keys as $."a.b"; Spark's variant path wants
-            # bracket form $['a.b']
-            path = re.sub(r'\."((?:[^"])*)"', lambda q: f"['{q.group(1)}']", path)
-            return (
-                f"nullif(to_json(try_variant_get(try_parse_json({a[0]}), "
-                f"'{path}')), 'null')"
-            )
-
-        return fn
-
-    for jf in ("json_extract", "json_extract_path"):
-        out = _rewrite_calls(out, jf, _json_extract_dollar(False))
-    for jf in ("json_extract_string", "json_extract_path_text"):
-        out = _rewrite_calls(out, jf, _json_extract_dollar(True))
-    # list_extract/list_element: 1-based, NULL at 0/out-of-bounds
-    def _list_extract(args: list[str]):
-        if len(args) != 2:
-            return None
-        l, i = args
-        return (
-            f"CASE WHEN TRY_CAST(({i}) AS BIGINT) = 0 THEN NULL "
-            f"ELSE try_element_at({l}, {i}) END"
-        )
-
-    out = _rewrite_calls(out, "list_extract", _list_extract)
-    out = _rewrite_calls(out, "list_element", _list_extract)
-    # list_position: 0 when absent (live DuckDB), 1-based otherwise
-    out = _rewrite_calls(
-        out,
-        "list_position",
-        lambda a: f"array_position({a[0]}, {a[1]})" if len(a) == 2 else None,
-    )
-    out = _rewrite_calls(out, "list_indexof", lambda a: f"array_position({a[0]}, {a[1]})" if len(a) == 2 else None)
-    out = _rewrite_calls(
-        out, "list_append", lambda a: f"concat({a[0]}, array({a[1]}))" if len(a) == 2 else None
-    )
-    out = _rewrite_calls(
-        out, "list_prepend", lambda a: f"concat(array({a[0]}), {a[1]})" if len(a) == 2 else None
-    )
-    # list_resize(l, n [, pad]): truncate or pad to n elements
-    def _list_resize(args: list[str]):
-        if len(args) not in (2, 3):
-            return None
-        l, n = args[0], args[1]
-        pad = args[2] if len(args) == 3 else "NULL"
-        return (
-            f"CASE WHEN size({l}) >= ({n}) THEN slice({l}, 1, {n}) "
-            f"ELSE concat({l}, array_repeat({pad}, CAST(({n}) - size({l}) AS INT))) END"
-        )
-
-    out = _rewrite_calls(out, "list_resize", _list_resize)
-    out = _rewrite_calls(
-        out,
-        "list_has_all",
-        # NULL needle elements are ignored (DuckDB: list_has_all([1,2,3],
-        # [1,NULL]) = true) and the haystack check is TWO-valued — NULLs
-        # in the haystack never match, so strip them before
-        # array_contains (verified live: has_all([1,2,NULL],[2,3]) =
-        # false, not NULL)
-        lambda a: (
-            f"CASE WHEN ({a[0]}) IS NULL OR ({a[1]}) IS NULL THEN NULL "
-            f"ELSE forall(filter({a[1]}, __x -> __x IS NOT NULL), "
-            f"__x -> array_contains(filter({a[0]}, __y -> __y IS NOT NULL), __x)) END"
-        )
-        if len(a) == 2
-        else None,
-    )
-    out = _rewrite_calls(
-        out,
-        "list_unique",
-        lambda a: f"size(array_distinct(filter({a[0]}, __x -> __x IS NOT NULL)))"
-        if len(a) == 1
-        else None,
-    )
-    out = _rewrite_calls(
-        out,
-        "list_count",
-        lambda a: f"size(filter({a[0]}, __x -> __x IS NOT NULL))" if len(a) == 1 else None,
-    )
-    # list_slice: DuckDB 1-based inclusive bounds
-    out = _rewrite_calls(
-        out,
-        "list_slice",
-        lambda a: f"slice({a[0]}, {a[1]}, ({a[2]}) - ({a[1]}) + 1)" if len(a) == 3 else None,
-    )
-    out = _rewrite_calls(
-        out,
-        "array_pop_back",
-        lambda a: f"slice({a[0]}, 1, size({a[0]}) - 1)" if len(a) == 1 else None,
-    )
-    out = _rewrite_calls(
-        out,
-        "array_pop_front",
-        lambda a: f"slice({a[0]}, 2, size({a[0]}) - 1)" if len(a) == 1 else None,
-    )
-    out = _rewrite_calls(
-        out,
-        "list_any_value",
-        lambda a: f"try_element_at(filter({a[0]}, __x -> __x IS NOT NULL), 1)"
-        if len(a) == 1
-        else None,
+    return (
+        "CASE WHEN "
+        + " AND ".join(f"({x}) IS NULL" for x in a)
+        + " THEN NULL ELSE map_concat("
+        + ", ".join(f"coalesce({x}, map())" for x in a)
+        + ") END"
     )
 
-    # list_aggregate(l, 'name'[, params]): literal-name dispatch onto HOF
-    # folds (reference list_aggregates.cpp; param-taking names verified
-    # live: quantile = disc at ceil(p*n), median interpolates, mad =
-    # median absolute deviation, mode breaks ties on the smaller value,
-    # string_agg default separator ',')
-    def _list_aggregate(args: list[str]):
-        if len(args) < 2:
-            return None
-        l, name = args[0], args[1].strip().strip("'\"").lower()
-        params = args[2:]
-        nn = f"filter({l}, __x -> __x IS NOT NULL)"
-        srt = f"array_sort({nn})"
-        n = f"size({nn})"
 
-        def q_disc(p: str) -> str:
-            # index = max(1, ceil(p * n)) into the non-null sorted list
-            return (
-                f"try_element_at({srt}, greatest(CAST(ceil(({p}) * {n}) "
-                f"AS INT), 1))"
-            )
-
-        med = (
-            f"CASE WHEN {n} = 0 THEN NULL ELSE "
-            f"(CAST(element_at({srt}, CAST(({n} + 1) / 2 AS INT)) AS DOUBLE)"
-            f" + CAST(element_at({srt}, CAST(({n} + 2) / 2 AS INT)) AS DOUBLE)"
-            f") / 2.0 END"
-        )
-        if name in ("quantile", "quantile_disc") and len(params) == 1:
-            p = params[0]
-            if re.match(r"\s*(array\s*\(|\[)", p, re.I):
-                return f"transform({p}, __qp -> {q_disc('__qp')})"
-            return q_disc(p)
-        if name == "string_agg" and len(params) <= 1:
-            sep = params[0] if params else "','"
-            return (
-                f"CASE WHEN size({nn}) = 0 THEN NULL ELSE "
-                f"array_join(transform({nn}, __x -> CAST(__x AS STRING)), {sep}) END"
-            )
-        if params:
-            return None
-        # mad = median(|x - median|), always DOUBLE
-        dev = f"transform({nn}, __x -> abs(CAST(__x AS DOUBLE) - ({med})))"
-        dsrt = f"array_sort({dev})"
-        mad = (
-            f"CASE WHEN {n} = 0 THEN NULL ELSE "
-            f"(element_at({dsrt}, CAST(({n} + 1) / 2 AS INT))"
-            f" + element_at({dsrt}, CAST(({n} + 2) / 2 AS INT))) / 2.0 END"
-        )
-        mode = (
-            f"try_element_at(array_sort(transform(array_distinct({nn}), "
-            f"__v -> named_struct('c', -size(filter({nn}, __y -> __y = __v)), "
-            f"'v', __v))), 1).v"
-        )
-        return {
-            "count": f"size({nn})",
-            "sum": _list_sum_sql(l),
-            # Kahan/exact float summation (reference list_aggregates.cpp
-            # 'fsum'): exact decimal accumulation reproduces Kahan's
-            # compensated result for double inputs
-            # fsum/kahan always return DOUBLE, even for integer lists
-            # (verified live: list_aggr([1::tinyint],'fsum') = 1.0)
-            "fsum": f"CAST(({_list_sum_sql(l, exact_floats=True)}) AS DOUBLE)",
-            "sumkahan": f"CAST(({_list_sum_sql(l, exact_floats=True)}) AS DOUBLE)",
-            "kahan_sum": f"CAST(({_list_sum_sql(l, exact_floats=True)}) AS DOUBLE)",
-            "avg": (
-                f"CASE WHEN size({nn}) = 0 THEN NULL "
-                f"ELSE CAST(({_list_sum_sql(l)}) / size({nn}) AS DOUBLE) END"
-            ),
-            "min": f"array_min({l})",
-            "max": f"array_max({l})",
-            "first": f"try_element_at({l}, 1)",
-            "last": f"try_element_at({l}, -1)",
-            "any_value": f"try_element_at({nn}, 1)",
-            "median": med,
-            "quantile": q_disc("0.5"),
-            "quantile_disc": q_disc("0.5"),
-            "mad": mad,
-            "mode": mode,
-            "product": (
-                f"CASE WHEN size({nn}) = 0 THEN NULL ELSE "
-                f"aggregate({nn}, CAST(1 AS DOUBLE), (__a, __x) -> __a * __x) END"
-            ),
-            "string_agg": (
-                f"CASE WHEN size({nn}) = 0 THEN NULL ELSE "
-                f"array_join(transform({nn}, __x -> CAST(__x AS STRING)), ',') END"
-            ),
-            "bool_and": f"CASE WHEN {n} = 0 THEN NULL ELSE forall({nn}, __x -> __x) END",
-            "bool_or": f"CASE WHEN {n} = 0 THEN NULL ELSE exists({nn}, __x -> __x) END",
-            "entropy": (
-                f"(CASE WHEN ({l}) IS NULL THEN NULL "
-                f"WHEN size({nn}) = 0 THEN CAST(0 AS DOUBLE) ELSE "
-                f"aggregate(transform(array_distinct({nn}), "
-                f"__ev -> size(filter({nn}, __ey -> __ey = __ev))), "
-                f"CAST(0 AS DOUBLE), (__ea, __ec) -> __ea - "
-                f"(__ec / size({nn})) * log2(__ec / size({nn}))) END)"
-            ),
-            # NULL for NULL / empty / all-NULL input (null_or_empty.test:
-            # histogram sits in the NULL-result foreach, unlike entropy)
-            "histogram": (
-                f"CASE WHEN size({nn}) = 0 THEN NULL ELSE "
-                f"map_from_entries(transform("
-                f"array_sort(array_distinct({nn})), "
-                f"__hv -> struct(__hv, CAST(size(filter({nn}, "
-                f"__hy -> __hy = __hv)) AS BIGINT)))) END"
-            ),
-            # HLL is exact at list cardinalities; corpus compares approx_*
-            # under a relative-error canon anyway
-            "approx_count_distinct": f"size(array_distinct({nn}))",
-        }.get(name)
-
-    # NULL-propagation parity: Spark's isnan(NULL)=false, the reference
-    # returns NULL; factorial of a negative is 1 (empty product loop)
-    out = _rewrite_calls(
-        out, "isnan",
-        lambda a: (
-            f"CASE WHEN ({a[0]}) IS NULL THEN NULL "
-            f"ELSE __isnan({a[0]}) END"
-        ) if len(a) == 1 else None,
-    )
-    out = out.replace("__isnan(", "isnan(")
-    # factorial returns HUGEINT in the reference (up to 33!); Spark's
-    # builtin overflows LONG at 21!. DECIMAL(38,0) product matches the
-    # HUGEINT range; negatives/0 are the empty product = 1
-    out = _rewrite_calls(
-        out, "factorial",
-        lambda a: (
-            f"CASE WHEN ({a[0]}) < 1 THEN CAST(1 AS DECIMAL(38,0)) "
-            f"ELSE aggregate(sequence(1, CAST({a[0]} AS INT)), "
-            f"CAST(1 AS DECIMAL(38,0)), "
-            f"(__fa, __fi) -> __fa * __fi) END"
-        ) if len(a) == 1 else None,
-    )
-
-    out = _rewrite_calls(out, "list_aggregate", _list_aggregate)
-    out = _rewrite_calls(out, "list_aggr", _list_aggregate)
-
-    # every aggregate name above also has a list_<name>(l, params...)
-    # rewrite alias (function/list/list_aggregates.cpp registration loop)
-    for _agg in (
-        "median", "mad", "mode", "product", "string_agg", "bool_and",
-        "bool_or", "quantile", "quantile_disc", "first", "last",
-        "entropy", "histogram", "approx_count_distinct",
-    ):
-        out = _rewrite_calls(
-            out,
-            f"list_{_agg}",
-            lambda a, _agg=_agg: _list_aggregate([a[0], f"'{_agg}'", *a[1:]]),
-        )
-
-    # plain-aggregate forms over a collected group (reference
-    # core_functions/aggregate/holistic + algebraic/fsum.cpp): mad /
-    # product / the Kahan-sum family fold the group list through the
-    # SAME lattice as their list_* forms
-    for _agg in ("mad", "product", "fsum", "sumkahan", "kahan_sum"):
-        out = _rewrite_calls(
-            out, _agg,
-            lambda a, _agg=_agg: _list_aggregate(
-                [f"collect_list({a[0]})", f"'{_agg}'"]
-            ) if len(a) == 1 else None,
-        )
-    # entropy: -Σ (c/n)·log2(c/n) over value frequencies (NULLs ignored)
-    def _entropy(a: list[str]) -> str | None:
-        if len(a) != 1:
-            return None
-        l = f"collect_list({a[0]})"
-        return (
-            f"(CASE WHEN size({l}) = 0 THEN CAST(0 AS DOUBLE) ELSE "
-            f"aggregate(transform(array_distinct({l}), "
-            f"__ev -> size(filter({l}, __ey -> __ey = __ev))), "
-            f"CAST(0 AS DOUBLE), (__ea, __ec) -> __ea - "
-            f"(__ec / size({l})) * log2(__ec / size({l}))) END)"
-        )
-
-    out = _rewrite_calls(out, "entropy", _entropy)
-    # histogram: MAP value → count, keys sorted; NULL (not {}) for an
-    # empty/all-NULL group (histogram.cpp finalize)
-    def _histogram(a: list[str]) -> str | None:
-        if len(a) != 1:
-            return None
-        l = f"collect_list({a[0]})"
-        return (
-            f"CASE WHEN size({l}) = 0 THEN NULL ELSE "
-            f"map_from_entries(transform(array_sort(array_distinct({l})), "
-            f"__hv -> struct(__hv, CAST(size(filter({l}, "
-            f"__hy -> __hy = __hv)) AS BIGINT)))) END"
-        )
-
-    out = _rewrite_calls(out, "histogram", _histogram)
-    # sem = population stddev / sqrt(n) (sem.cpp)
-    out = _rewrite_calls(
-        out, "sem",
-        lambda a: (
-            f"(stddev_pop({a[0]}) / sqrt(count({a[0]})))"
-        ) if len(a) == 1 else None,
-    )
-    def _arg_minmax(a: list[str], sp: str) -> str | None:
-        if len(a) == 2:
-            return f"{sp}({a[0]}, {a[1]})"
-        if len(a) == 3:
-            # arg_min(v, k, n): the v's of the n smallest k's, in k order
-            # (arg_min_max.cpp N-ary form; NULL k's excluded)
-            srt = (
-                f"array_sort(collect_list(CASE WHEN ({a[1]}) IS NOT NULL "
-                f"THEN struct(({a[1]}) AS k, ({a[0]}) AS v) END))"
-            )
-            if sp == "max_by":
-                srt = f"reverse({srt})"
-            return f"slice(transform({srt}, __am -> __am.v), 1, {a[2]})"
+def _string_split(args: list[str]) -> str | None:
+    """string_split: LITERAL separator (Spark split takes a regex); NULL
+    separator keeps the whole string (string_split.cpp)."""
+    if len(args) != 2:
         return None
-
-    for _nm, _sp in (
-        ("arg_min", "min_by"), ("argmin", "min_by"),
-        ("arg_min_null", "min_by"),
-        ("arg_max", "max_by"), ("argmax", "max_by"),
-        ("arg_max_null", "max_by"),
-    ):
-        out = _rewrite_calls(
-            out, _nm, lambda a, _sp=_sp: _arg_minmax(a, _sp)
-        )
-    out = _rewrite_calls(
-        out, "min_by",
-        lambda a: _arg_minmax(a, "min_by") if len(a) == 3 else None,
-    )
-    out = _rewrite_calls(
-        out, "max_by",
-        lambda a: _arg_minmax(a, "max_by") if len(a) == 3 else None,
-    )
-    out = _rewrite_calls(
-        out, "approx_quantile",
-        lambda a: f"approx_percentile({', '.join(a)})"
-        if len(a) == 2 else None,
+    s_, sep = args
+    return (
+        f"CASE WHEN ({s_}) IS NULL THEN NULL "
+        f"WHEN ({sep}) IS NULL THEN array({s_}) "
+        f"WHEN ({sep}) = '' THEN split({s_}, '') "
+        f"ELSE split({s_}, concat('\\\\Q', {sep}, '\\\\E'), -1) END"
     )
 
-    # time_bucket(INTERVAL w, ts) — epoch-aligned buckets anchored at the
-    # reference's origins (time_bucket.cpp: 2000-01-03 for sub-month
-    # widths — a Monday, so week buckets start Mondays; 2000-01-01 for
-    # month-or-coarser). Literal intervals only; the optional
-    # origin/offset forms stay unrewritten (recorded as skips).
-    _TB_US = {
-        "microsecond": 1, "millisecond": 1000, "second": 1_000_000,
-        "minute": 60_000_000, "hour": 3_600_000_000,
-        "day": 86_400_000_000, "week": 604_800_000_000,
-    }
 
-    def _time_bucket(a: list[str]) -> str | None:
-        if len(a) != 2:
-            return None
-        im = re.fullmatch(
-            r"INTERVAL\s*(?:'\s*(\d+)\s*(\w+?)s?\s*'|\(?\s*(\d+)\s*\)?\s*(\w+?)s?)",
-            a[0].strip(), re.I,
-        )
-        if not im:
-            return None
-        n = int(im.group(1) or im.group(3))
-        unit = (im.group(2) or im.group(4)).lower()
-        unit = {"min": "minute", "sec": "second", "hr": "hour",
-                "mon": "month", "yr": "year"}.get(unit, unit)
-        x = a[1]
-        is_date = bool(
-            re.search(r"::\s*DATE\s*$", x, re.I)
-            or re.match(r"\s*DATE\b", x, re.I)
-        )
-        if unit in _TB_US:
-            w = n * _TB_US[unit]
-            o = 946_857_600_000_000  # 2000-01-03 00:00:00 UTC in µs
-            us = f"unix_micros(CAST(({x}) AS TIMESTAMP_LTZ))"
-            b = f"({us} - pmod({us} - {o}, {w}))"
-            expr = (
-                f"(TIMESTAMP_NTZ '1970-01-01 00:00:00' + make_dt_interval("
-                f"0, 0, 0, CAST({b} AS DECIMAL(26,6)) / 1000000))"
-            )
-        elif unit in ("month", "quarter", "year", "decade", "century"):
-            w = n * {"month": 1, "quarter": 3, "year": 12,
-                     "decade": 120, "century": 1200}[unit]
-            mo = f"((year({x}) - 2000) * 12 + month({x}) - 1)"
-            bm = f"({mo} - pmod({mo}, {w}))"
-            expr = (
-                f"CAST(make_date(2000 + CAST(floor(({bm}) / 12) AS INT), "
-                f"pmod({bm}, 12) + 1, 1) AS TIMESTAMP_NTZ)"
-            )
-        else:
-            return None
-        return f"CAST({expr} AS DATE)" if is_date else expr
+# date_trunc to a day-or-coarser literal part returns DATE (date_trunc.cpp);
+# Spark always returns TIMESTAMP
+_DATE_PARTS = (
+    "day", "week", "month", "quarter", "year", "decade", "century",
+    "millennium", "isoyear",
+)
+# day-equivalent part names truncate to day (date_trunc.cpp)
+_DAY_ALIASES = ("doy", "dow", "isodow", "weekday", "dayofyear",
+                "dayofweek", "julian", "jd")
 
-    out = _rewrite_calls(out, "time_bucket", _time_bucket)
-    # union_value(tag := v) / union_tag / union_extract — the engine's
-    # UNION carrier is STRUCT{tag, <member fields>} (SURVEY §3 type map;
-    # Column forms in functions/registry.py)
-    def _union_value(a: list[str]) -> str | None:
-        if len(a) != 1:
-            return None
-        m = re.match(r"^\s*(\w+)\s*:=\s*(.+)$", a[0], re.S)
-        if not m:
-            return None
-        return (
-            f"named_struct('tag', '{m.group(1)}', "
-            f"'{m.group(1)}', ({m.group(2)}))"
-        )
+# reference date_part_specifier synonyms (date_part.cpp GetDatePartSpecifier)
+_PART_NORM = {
+    "y": "year", "yr": "year", "yrs": "year", "years": "year",
+    "mon": "month", "mons": "month", "months": "month",
+    "days": "day", "d": "day", "dayofmonth": "day",
+    "h": "hour", "hr": "hour", "hrs": "hour", "hours": "hour",
+    "min": "minute", "mins": "minute", "minutes": "minute", "n": "minute",
+    "s": "second", "sec": "second", "secs": "second", "seconds": "second",
+    "ms": "millisecond", "msec": "millisecond", "msecs": "millisecond",
+    "milliseconds": "millisecond",
+    "us": "microsecond", "usec": "microsecond", "usecs": "microsecond",
+    "microseconds": "microsecond",
+    "w": "week", "weeks": "week",
+    "quarters": "quarter", "qtr": "quarter",
+    "decades": "decade", "dec": "decade", "decs": "decade",
+    "centuries": "century", "cent": "century",
+    "millenniums": "millennium", "millennia": "millennium",
+    "mil": "millennium", "mils": "millennium",
+}
 
-    out = _rewrite_calls(out, "union_value", _union_value)
-    out = _rewrite_calls(
-        out, "union_tag",
-        lambda a: f"({a[0]}).tag" if len(a) == 1 else None,
-    )
-    out = _rewrite_calls(
-        out, "union_extract",
-        lambda a: f"({a[0]})[{a[1]}]"
-        if len(a) == 2 and not a[1].startswith("'")
-        else (f"({a[0]}).{a[1][1:-1]}" if len(a) == 2 else None),
-    )
-    out = _rewrite_union_casts(out)
 
-    # to_json over the union carrier: the reference renders {member:
-    # value} (json_create.cpp CreateValues for UNION), never the tag
-    # field. The carrier is named_struct('tag', <tag>, <m1>, v1, ...) —
-    # rebuild as a tag-dispatched single-member object.
-    def _to_json_union(a: list[str]) -> str | None:
-        if not a:
-            return None
-        arg = a[0].strip()
-        m = re.match(r"named_struct\s*\(\s*'tag'\s*,", arg, re.I)
-        if not m or not arg.endswith(")"):
-            return None
-        inner = _split_args(arg[arg.index("(") + 1 : -1])
-        if len(inner) < 4 or len(inner) % 2:
-            return None
-        tag_expr = inner[1].strip()
-        members = []
-        for i in range(2, len(inner), 2):
-            km = re.fullmatch(r"\s*'(\w+)'\s*", inner[i])
-            if not km:
-                return None
-            members.append((km.group(1), inner[i + 1]))
-        # __tjm is swapped back to Spark's map() at the end of
-        # translate, out of reach of the duck map([k],[v]) rewrite
-        opts = ", __tjm('ignoreNullFields', 'false')"
-        mt = re.fullmatch(r"'(\w+)'", tag_expr)
-        if mt and len(members) == 1 and members[0][0] == mt.group(1):
-            return (f"to_json(named_struct('{mt.group(1)}', "
-                    f"{members[0][1]}){opts})")
-        whens = " ".join(
-            f"WHEN ({arg}).tag = '{name}' THEN "
-            f"to_json(named_struct('{name}', ({arg}).{name}){opts})"
-            for name, _ in members
-        )
-        return f"(CASE WHEN ({arg}) IS NULL THEN NULL {whens} END)"
+def _isoyear_start(x: str) -> str:
+    j4 = f"make_date(extract(YEAROFWEEK FROM {x}), 1, 4)"
+    return f"date_sub({j4}, (dayofweek({j4}) + 5) % 7)"
 
-    out = _rewrite_calls(out, "to_json", _to_json_union)
 
-    # prefix/suffix (reference string functions) → Spark predicates
-    out = _rewrite_calls(
-        out, "prefix",
-        lambda a: f"startswith({a[0]}, {a[1]})" if len(a) == 2 else None,
-    )
-    out = _rewrite_calls(
-        out, "suffix",
-        lambda a: f"endswith({a[0]}, {a[1]})" if len(a) == 2 else None,
-    )
-    # array_value = ARRAY constructor (fixed-size array type; Spark has
-    # only variable lists — same values)
-    out = _rewrite_calls(out, "array_value", lambda a: f"array({', '.join(a)})")
-    # list_where(l, mask): keep elements whose mask is true
-    out = _rewrite_calls(
-        out,
-        "list_where",
-        lambda a: (
-            f"transform(filter(zip_with({a[0]}, {a[1]}, "
-            f"(__lv, __lm) -> named_struct('v', __lv, 'm', __lm)), "
-            f"__s -> __s.m), __s -> __s.v)"
-        )
-        if len(a) == 2
-        else None,
-    )
-    # list_reduce/reduce: DuckDB's 2-arg form seeds the fold with the
-    # first element (list_reduce.cpp); the optional 3rd arg is the
-    # initial value. Spark's reduce(arr, init, merge) needs both.
-    def _list_reduce(a: list[str]) -> str | None:
-        if len(a) == 2:
-            return (
-                f"reduce(slice({a[0]}, 2, size({a[0]}) - 1), "
-                f"element_at({a[0]}, 1), {a[1]})"
-            )
-        if len(a) == 3:
-            return f"reduce({a[0]}, {a[2]}, {a[1]})"
+def _era_start(x: str, unit: int) -> str:
+    # all eras anchor at year 0 (verified live: century(1996)=1900,
+    # millennium(1996)=1000, decade(1996)=1990)
+    y = f"CAST(year({x}) AS INT)"
+    return f"make_date(CAST(floor({y} / {unit}) AS INT) * {unit}, 1, 1)"
+
+
+def _date_trunc(args: list[str]) -> str | None:
+    if len(args) != 2:
         return None
-
-    out = _rewrite_calls(out, "list_reduce", _list_reduce)
-    # bare `reduce` alias: only the 2-arg DuckDB form (the 3-arg form is
-    # Spark's own signature — and our emission above — leave it alone)
-    out = _rewrite_calls(
-        out, "reduce", lambda a: _list_reduce(a) if len(a) == 2 else None
+    raw = args[0].strip()
+    x = args[1]
+    # TIMESTAMPTZ input keeps TIMESTAMPTZ output (date_trunc.cpp icu
+    # overload truncates in session tz) — day-or-coarser parts return DATE
+    # only for DATE/TIMESTAMP inputs
+    ltz = bool(
+        re.search(r"::\s*TIMESTAMP_?(LTZ|TZ)\s*$", x, re.I)
+        or re.match(r"\s*TIMESTAMP_?(LTZ|TZ)\b", x, re.I)
     )
-    # regexp_extract_all: DuckDB's default group is 0 (whole match);
-    # Spark's is 1 and errors when the pattern has no groups
-    out = _rewrite_calls(
-        out,
-        "regexp_extract_all",
-        lambda a: f"regexp_extract_all({a[0]}, {a[1]}, 0)" if len(a) == 2 else None,
+    if re.fullmatch(r"'[^']*'", raw):
+        part = raw.strip("'").lower()
+        part = _PART_NORM.get(part, part)
+        raw = f"'{part}'"
+        if part in _DAY_ALIASES:
+            return (f"date_trunc('day', {x})" if ltz
+                    else f"CAST(date_trunc('day', {x}) AS DATE)")
+        if part == "yearweek":
+            return (f"date_trunc('week', {x})" if ltz
+                    else f"CAST(date_trunc('week', {x}) AS DATE)")
+        if part == "isoyear":
+            return (f"CAST({_isoyear_start(x)} AS TIMESTAMP_LTZ)"
+                    if ltz else _isoyear_start(x))
+        if part == "decade":
+            return (f"CAST({_era_start(x, 10)} AS TIMESTAMP_LTZ)"
+                    if ltz else _era_start(x, 10))
+        if part == "century":
+            return (f"CAST({_era_start(x, 100)} AS TIMESTAMP_LTZ)"
+                    if ltz else _era_start(x, 100))
+        if part == "millennium":
+            return (f"CAST({_era_start(x, 1000)} AS TIMESTAMP_LTZ)"
+                    if ltz else _era_start(x, 1000))
+        if part in _DATE_PARTS:
+            return (f"date_trunc({raw}, {x})" if ltz
+                    else f"CAST(date_trunc({raw}, {x}) AS DATE)")
+        if part == "epoch":
+            return f"date_trunc('second', {x})"
+        if part in ("hour", "minute", "second", "millisecond",
+                    "microsecond"):
+            return f"date_trunc({raw}, {x})"
+        return None
+    # dynamic part (a column): CASE over the special parts, Spark's builtin
+    # for the rest — always TIMESTAMP, like the reference's dynamic dispatch
+    p = f"lower({raw})"
+    return (
+        f"CASE WHEN {p} = 'isoyear' THEN "
+        f"CAST({_isoyear_start(x)} AS TIMESTAMP) "
+        f"WHEN {p} = 'decade' THEN CAST({_era_start(x, 10)} AS TIMESTAMP) "
+        f"WHEN {p} = 'century' THEN CAST({_era_start(x, 100)} AS TIMESTAMP) "
+        f"WHEN {p} = 'millennium' THEN CAST({_era_start(x, 1000)} AS TIMESTAMP) "
+        f"WHEN {p} IN ('doy', 'dow', 'isodow', 'weekday', 'dayofyear', "
+        f"'dayofweek', 'julian', 'jd') THEN date_trunc('day', {x}) "
+        f"WHEN {p} = 'yearweek' THEN date_trunc('week', {x}) "
+        f"WHEN {p} = 'epoch' THEN date_trunc('second', {x}) "
+        f"ELSE date_trunc(CASE {p} WHEN 'years' THEN 'year' WHEN 'months' THEN 'month' WHEN 'days' THEN 'day' WHEN 'hours' THEN 'hour' WHEN 'minutes' THEN 'minute' WHEN 'seconds' THEN 'second' WHEN 'milliseconds' THEN 'millisecond' WHEN 'microseconds' THEN 'microsecond' WHEN 'weeks' THEN 'week' WHEN 'quarters' THEN 'quarter' ELSE {p} END, {x}) END"
     )
 
-    # string_split_regex / regexp_split_to_array: Java's split and the
-    # reference's split loop (string_split.cpp StringSplitter::Split)
-    # agree whenever the pattern cannot match "" — but every zero-width
-    # edge differs (the reference consumes one character per zero-width
-    # match; Java emits leading/trailing empties). Literal patterns that
-    # CAN match empty route through the exact-algorithm UDF; everything
-    # else keeps the native JVM split.
-    def _split_regex(a: list[str]) -> str | None:
-        if len(a) != 2:
-            return None
-        pm = re.match(r"^\s*'((?:[^']|'')*)'\s*$", a[1], re.S)
-        if pm:
-            pat = pm.group(1).replace("''", "'").replace("\\\\", "\\")
-            try:
-                empty_ok = re.compile(pat).search("") is not None
-            except re.error:
-                empty_ok = False
-            if empty_ok:
-                return f"__duck_split_regex({a[0]}, {a[1]})"
-        return f"split({a[0]}, {a[1]})"
 
-    for _ssr in ("string_split_regex", "str_split_regex",
-                 "regexp_split_to_array"):
-        out = _rewrite_calls(out, _ssr, _split_regex)
-    # RE2 POSIX character classes -> Java \p{...} spellings (patterns
-    # live in string literals, so the backslash doubles)
-    if "[:" in out:
-        _POSIX2J = {
-            "alpha": "Alpha", "digit": "Digit", "lower": "Lower",
-            "upper": "Upper", "alnum": "Alnum", "space": "Space",
-            "blank": "Blank", "punct": "Punct", "xdigit": "XDigit",
-            "cntrl": "Cntrl", "graph": "Graph", "print": "Print",
-        }
+def _rewrite_extract(text: str, parts: str, build) -> str:
+    """Each ``EXTRACT(<part> FROM x)`` whose part matches ``parts``
+    becomes ``build(part, x)``. Sites are taken right to left, like
+    ``_rewrite_calls``, so an inner EXTRACT is rewritten first and the
+    replacement text is never re-scanned."""
+    mask = _code_mask(text)
+    sites = list(_code_matches(rf"\bEXTRACT\s*\(\s*({parts})\s+FROM\b",
+                               text, re.I, mask=mask))
+    for m in reversed(sites):
+        close = _matching(text, text.index("(", m.start()), mask)
+        if close < 0:
+            continue
+        text = text[: m.start()] + build(m.group(1).lower(), text[m.end():close]) + text[close + 1:]
+        mask = _code_mask(text)
+    return text
 
-        def _posix(mm: "re.Match[str]") -> str:
-            j = _POSIX2J.get(mm.group(1).lower())
-            if j is None:
-                return mm.group(0)
-            # surrounding class brackets stay — [[:lower:]] becomes
-            # [\p{Lower}], composing inside larger classes too
-            return "\\\\p{" + j + "}"
 
-        out = re.sub(r"\[:(\w+):\]", _posix, out)
-    # 1-arg numeric trunc (math.cpp): truncate toward zero, DOUBLE
-    # result, NaN/±inf pass through; Spark's trunc is the 2-arg date
-    # function. DECIMAL-typed args keep Spark's semantics via CAST.
-    def _trunc1(a: list[str]) -> str | None:
-        if len(a) != 1:
-            return None
-        x = a[0]
-        if re.fullmatch(r"\s*[+-]?\d+(\.\d+)?\s*", x) or re.search(
-            r"(::\s*|\bAS\s+)(DECIMAL|NUMERIC)(\s*\(\s*\d+\s*(,\s*\d+\s*)?\))?\s*\)*\s*$",
-            x,
-            re.I,
+def _rewrite_extract_dow(text: str) -> str:
+    """EXTRACT(dow ...): Sunday=0 in the reference (date_part.cpp);
+    Spark's DOW is Sunday=1."""
+    return _rewrite_extract(text, "dow",
+                            lambda part, x: f"(dayofweek({x}) - 1)")
+
+
+# second/millisecond/microsecond parts are INTEGERS in the reference
+# (date_part.cpp: seconds truncate; msec/usec include the seconds) —
+# Spark's EXTRACT(SECOND ...) is a fractional DECIMAL
+_SUBSEC = {
+    "second": "1", "seconds": "1",
+    "millisecond": "1000", "milliseconds": "1000",
+    "microsecond": "1000000", "microseconds": "1000000",
+}
+
+
+def _subsec_expr(part: str, x: str) -> str:
+    inner = f"EXTRACT(SECOND FROM {x})"
+    mult = _SUBSEC[part]
+    if mult == "1":
+        return f"CAST(FLOOR({inner}) AS BIGINT)"
+    return f"CAST(FLOOR({inner} * {mult}) AS BIGINT)"
+
+
+def _rewrite_extract_subsec(text: str) -> str:
+    return _rewrite_extract(text, "|".join(_SUBSEC), _subsec_expr)
+
+
+def _date_part(args: list[str]) -> str | None:
+    if len(args) != 2:
+        return None
+    part = args[0].strip().strip("'\"").lower()
+    if part in ("dow", "weekday"):
+        return f"(dayofweek({args[1]}) - 1)"
+    if part in _SUBSEC:
+        return _subsec_expr(part, args[1])
+    # list-of-parts form DATE_PART(['year','month'], x) → STRUCT of the
+    # parts (date_part.cpp struct variant); the bracket-list pass has
+    # already turned the literal into array('year', ...)
+    lm = re.fullmatch(
+        r"\s*array\s*\((\s*'[a-z]+'\s*(?:,\s*'[a-z]+'\s*)*)\)\s*",
+        args[0],
+        re.I,
+    )
+    if lm:
+        fields = []
+        for nm in re.findall(r"'([a-z]+)'", lm.group(1), re.I):
+            e = _date_part([f"'{nm}'", args[1]]) or (
+                f"date_part('{nm}', {args[1]})"
+            )
+            fields.append(f"'{nm}', {e}")
+        return f"named_struct({', '.join(fields)})"
+    return None
+
+
+def _list_rsort(a: list[str]) -> str:
+    # default DESC null order is NULLS LAST; optional arg overrides
+    if len(a) == 2 and "FIRST" in a[1].strip().strip("'\"").upper():
+        return f"reverse(array_sort({a[0]}))"
+    return f"sort_array({a[0]}, false)"
+
+
+def _json_pointer(text_form: bool, a: list[str]) -> str | None:
+    """json_extract* with a literal JSON-pointer path ('/a/b/0'): numeric
+    segments index arrays (json pointer syntax, json_common.hpp)."""
+    if len(a) != 2:
+        return None
+    m = re.fullmatch(r"\s*'/((?:[^']|'')*)'\s*", a[1])
+    if not m:
+        return None
+    conv = "$" + "".join(
+        f"[{s}]" if s.isdigit() else f".{s}" for s in m.group(1).split("/")
+    )
+    if text_form:
+        return f"get_json_object({a[0]}, '{conv}')"
+    return (
+        f"nullif(to_json(try_variant_get(try_parse_json({a[0]}), "
+        f"'{conv}')), 'null')"
+    )
+
+
+def _json_extract_dollar(text_form: bool, a: list[str]) -> str | None:
+    """json_extract / json_extract_path return JSON — quoted strings
+    (json_functions.cpp); VARIANT extraction preserves that exactly. The
+    _string / _path_text forms return text."""
+    suffix = "_text" if text_form else ""
+    if len(a) != 2:
+        return None
+    m = re.fullmatch(r"\s*'((?:[^']|'')*)'\s*", a[1])
+    if not m:
+        p1 = a[1].strip()
+        if p1.startswith("[") or re.match(
+            r"(array|list_value|list_pack)\s*\(", p1, re.I
         ):
-            # DECIMAL stays DECIMAL(p,0): strip the fraction first so the
-            # final cast can't round half-up
-            return f"CAST(({x}) - (({x}) % 1) AS DECIMAL(38,0))"
-        d = f"CAST(({x}) AS DOUBLE)"
+            # list-of-paths form: LIST(JSON), one slot per path
+            # (json_extract.cpp many-path bind)
+            return f"__jx_list{suffix}({a[0]}, {a[1]})"
+        # non-constant path: runtime resolution in the extract UDF (DuckDB
+        # json_extract(j, q) with a column path — test_json_path.test)
+        return f"__jx_one{suffix}({a[0]}, {a[1]})"
+    path = m.group(1)
+    path = path if path.startswith("$") else f"$.{path}"
+    from myduckdb_spark.functions.jsonx import path_has_wildcard
+
+    if path_has_wildcard(path):
+        # wildcard paths return LIST(JSON) — one element per match
+        return f"__jx_multi{suffix}({a[0]}, '{path}')"
+    if re.search(r"\[\s*(#|-)", path) or re.search(r'\."', path):
+        # from-the-end indexes and quoted keys (escapes, brackets, spaces
+        # inside the key) aren't variant-get/get_json_object paths —
+        # resolve in the python extractor
+        return f"__jx_one{suffix}({a[0]}, '{path}')"
+    if text_form:
+        return f"get_json_object({a[0]}, '{path}')"
+    # DuckDB quotes odd keys as $."a.b"; Spark's variant path wants bracket
+    # form $['a.b']
+    path = re.sub(r'\."((?:[^"])*)"', lambda q: f"['{q.group(1)}']", path)
+    return (
+        f"nullif(to_json(try_variant_get(try_parse_json({a[0]}), "
+        f"'{path}')), 'null')"
+    )
+
+
+def _list_extract(args: list[str]) -> str | None:
+    """list_extract/list_element: 1-based, NULL at 0/out-of-bounds."""
+    if len(args) != 2:
+        return None
+    l, i = args
+    return (
+        f"CASE WHEN TRY_CAST(({i}) AS BIGINT) = 0 THEN NULL "
+        f"ELSE try_element_at({l}, {i}) END"
+    )
+
+
+def _list_resize(args: list[str]) -> str | None:
+    """list_resize(l, n [, pad]): truncate or pad to n elements."""
+    if len(args) not in (2, 3):
+        return None
+    l, n = args[0], args[1]
+    pad = args[2] if len(args) == 3 else "NULL"
+    return (
+        f"CASE WHEN size({l}) >= ({n}) THEN slice({l}, 1, {n}) "
+        f"ELSE concat({l}, array_repeat({pad}, CAST(({n}) - size({l}) AS INT))) END"
+    )
+
+
+def _q_disc(srt: str, n: str, p: str) -> str:
+    # index = max(1, ceil(p * n)) into the non-null sorted list
+    return (
+        f"try_element_at({srt}, greatest(CAST(ceil(({p}) * {n}) "
+        f"AS INT), 1))"
+    )
+
+
+def _list_aggregate(args: list[str]) -> str | None:
+    """list_aggregate(l, 'name'[, params]): literal-name dispatch onto HOF
+    folds (reference list_aggregates.cpp; param-taking names verified
+    live: quantile = disc at ceil(p*n), median interpolates, mad = median
+    absolute deviation, mode breaks ties on the smaller value, string_agg
+    default separator ',')."""
+    if len(args) < 2:
+        return None
+    l, name = args[0], args[1].strip().strip("'\"").lower()
+    params = args[2:]
+    nn = f"filter({l}, __x -> __x IS NOT NULL)"
+    srt = f"array_sort({nn})"
+    n = f"size({nn})"
+    med = (
+        f"CASE WHEN {n} = 0 THEN NULL ELSE "
+        f"(CAST(element_at({srt}, CAST(({n} + 1) / 2 AS INT)) AS DOUBLE)"
+        f" + CAST(element_at({srt}, CAST(({n} + 2) / 2 AS INT)) AS DOUBLE)"
+        f") / 2.0 END"
+    )
+    if name in ("quantile", "quantile_disc") and len(params) == 1:
+        p = params[0]
+        if re.match(r"\s*(array\s*\(|\[)", p, re.I):
+            return f"transform({p}, __qp -> {_q_disc(srt, n, '__qp')})"
+        return _q_disc(srt, n, p)
+    if name == "string_agg" and len(params) <= 1:
+        sep = params[0] if params else "','"
         return (
-            f"(CASE WHEN isnan({d}) OR abs({d}) = CAST('inf' AS DOUBLE) "
-            f"THEN {d} ELSE {d} - ({d} % 1.0) END)"
+            f"CASE WHEN size({nn}) = 0 THEN NULL ELSE "
+            f"array_join(transform({nn}, __x -> CAST(__x AS STRING)), {sep}) END"
         )
+    if params:
+        return None
+    # mad = median(|x - median|), always DOUBLE
+    dev = f"transform({nn}, __x -> abs(CAST(__x AS DOUBLE) - ({med})))"
+    dsrt = f"array_sort({dev})"
+    mad = (
+        f"CASE WHEN {n} = 0 THEN NULL ELSE "
+        f"(element_at({dsrt}, CAST(({n} + 1) / 2 AS INT))"
+        f" + element_at({dsrt}, CAST(({n} + 2) / 2 AS INT))) / 2.0 END"
+    )
+    mode = (
+        f"try_element_at(array_sort(transform(array_distinct({nn}), "
+        f"__v -> named_struct('c', -size(filter({nn}, __y -> __y = __v)), "
+        f"'v', __v))), 1).v"
+    )
+    return {
+        "count": f"size({nn})",
+        "sum": _list_sum_sql(l),
+        # Kahan/exact float summation (reference list_aggregates.cpp
+        # 'fsum'): exact decimal accumulation reproduces Kahan's
+        # compensated result for double inputs
+        # fsum/kahan always return DOUBLE, even for integer lists
+        # (verified live: list_aggr([1::tinyint],'fsum') = 1.0)
+        "fsum": f"CAST(({_list_sum_sql(l, exact_floats=True)}) AS DOUBLE)",
+        "sumkahan": f"CAST(({_list_sum_sql(l, exact_floats=True)}) AS DOUBLE)",
+        "kahan_sum": f"CAST(({_list_sum_sql(l, exact_floats=True)}) AS DOUBLE)",
+        "avg": (
+            f"CASE WHEN size({nn}) = 0 THEN NULL "
+            f"ELSE CAST(({_list_sum_sql(l)}) / size({nn}) AS DOUBLE) END"
+        ),
+        "min": f"array_min({l})",
+        "max": f"array_max({l})",
+        "first": f"try_element_at({l}, 1)",
+        "last": f"try_element_at({l}, -1)",
+        "any_value": f"try_element_at({nn}, 1)",
+        "median": med,
+        "quantile": _q_disc(srt, n, "0.5"),
+        "quantile_disc": _q_disc(srt, n, "0.5"),
+        "mad": mad,
+        "mode": mode,
+        "product": (
+            f"CASE WHEN size({nn}) = 0 THEN NULL ELSE "
+            f"aggregate({nn}, CAST(1 AS DOUBLE), (__a, __x) -> __a * __x) END"
+        ),
+        "string_agg": (
+            f"CASE WHEN size({nn}) = 0 THEN NULL ELSE "
+            f"array_join(transform({nn}, __x -> CAST(__x AS STRING)), ',') END"
+        ),
+        "bool_and": f"CASE WHEN {n} = 0 THEN NULL ELSE forall({nn}, __x -> __x) END",
+        "bool_or": f"CASE WHEN {n} = 0 THEN NULL ELSE exists({nn}, __x -> __x) END",
+        "entropy": (
+            f"(CASE WHEN ({l}) IS NULL THEN NULL "
+            f"WHEN size({nn}) = 0 THEN CAST(0 AS DOUBLE) ELSE "
+            f"aggregate(transform(array_distinct({nn}), "
+            f"__ev -> size(filter({nn}, __ey -> __ey = __ev))), "
+            f"CAST(0 AS DOUBLE), (__ea, __ec) -> __ea - "
+            f"(__ec / size({nn})) * log2(__ec / size({nn}))) END)"
+        ),
+        # NULL for NULL / empty / all-NULL input (null_or_empty.test:
+        # histogram sits in the NULL-result foreach, unlike entropy)
+        "histogram": (
+            f"CASE WHEN size({nn}) = 0 THEN NULL ELSE "
+            f"map_from_entries(transform("
+            f"array_sort(array_distinct({nn})), "
+            f"__hv -> struct(__hv, CAST(size(filter({nn}, "
+            f"__hy -> __hy = __hv)) AS BIGINT)))) END"
+        ),
+        # HLL is exact at list cardinalities; corpus compares approx_*
+        # under a relative-error canon anyway
+        "approx_count_distinct": f"size(array_distinct({nn}))",
+    }.get(name)
 
-    out = _rewrite_calls(out, "trunc", _trunc1)
-    # parse_path family (reference parse_path.cpp). The optional
-    # separator argument picks the split class: 'forward_slash' (/ only),
-    # 'backslash' (\\ only), 'system' (platform = / here), default
-    # 'both_slash' (verified live). A leading separator is its own
-    # component.
-    _SEP_BOTH = r"[/\\\\\\\\]"
 
-    def _sep_class(argtext: str | None) -> str:
-        v = (argtext or "").strip().strip("'\"").lower()
-        if v == "forward_slash" or v == "system":
-            return r"[/]"
-        if v == "backslash":
-            return r"[\\\\\\\\]"
-        return _SEP_BOTH
+def _list_agg_alias(agg: str, a: list[str]) -> str | None:
+    """list_<name>(l, params...) is list_aggregate(l, '<name>', params...)
+    (function/list/list_aggregates.cpp registration loop)."""
+    return _list_aggregate([a[0], f"'{agg}'", *a[1:]])
 
-    def _path_components(s: str, sep: str) -> str:
-        f = f"filter(split({s}, '{sep}'), __pc -> __pc <> '')"
+
+def _group_list_agg(agg: str, a: list[str]) -> str | None:
+    """Plain-aggregate forms over a collected group (reference
+    core_functions/aggregate/holistic + algebraic/fsum.cpp): mad / product
+    / the Kahan-sum family fold the group list through the SAME lattice
+    as their list_* forms."""
+    if len(a) != 1:
+        return None
+    return _list_aggregate([f"collect_list({a[0]})", f"'{agg}'"])
+
+
+def _entropy(a: list[str]) -> str | None:
+    """entropy: -Σ (c/n)·log2(c/n) over value frequencies (NULLs
+    ignored)."""
+    if len(a) != 1:
+        return None
+    l = f"collect_list({a[0]})"
+    return (
+        f"(CASE WHEN size({l}) = 0 THEN CAST(0 AS DOUBLE) ELSE "
+        f"aggregate(transform(array_distinct({l}), "
+        f"__ev -> size(filter({l}, __ey -> __ey = __ev))), "
+        f"CAST(0 AS DOUBLE), (__ea, __ec) -> __ea - "
+        f"(__ec / size({l})) * log2(__ec / size({l}))) END)"
+    )
+
+
+def _histogram(a: list[str]) -> str | None:
+    """histogram: MAP value → count, keys sorted; NULL (not {}) for an
+    empty/all-NULL group (histogram.cpp finalize)."""
+    if len(a) != 1:
+        return None
+    l = f"collect_list({a[0]})"
+    return (
+        f"CASE WHEN size({l}) = 0 THEN NULL ELSE "
+        f"map_from_entries(transform(array_sort(array_distinct({l})), "
+        f"__hv -> struct(__hv, CAST(size(filter({l}, "
+        f"__hy -> __hy = __hv)) AS BIGINT)))) END"
+    )
+
+
+def _arg_minmax(sp: str, a: list[str]) -> str | None:
+    if len(a) == 2:
+        return f"{sp}({a[0]}, {a[1]})"
+    if len(a) == 3:
+        # arg_min(v, k, n): the v's of the n smallest k's, in k order
+        # (arg_min_max.cpp N-ary form; NULL k's excluded)
+        srt = (
+            f"array_sort(collect_list(CASE WHEN ({a[1]}) IS NOT NULL "
+            f"THEN struct(({a[1]}) AS k, ({a[0]}) AS v) END))"
+        )
+        if sp == "max_by":
+            srt = f"reverse({srt})"
+        return f"slice(transform({srt}, __am -> __am.v), 1, {a[2]})"
+    return None
+
+
+# time_bucket(INTERVAL w, ts) — epoch-aligned buckets anchored at the
+# reference's origins (time_bucket.cpp: 2000-01-03 for sub-month widths — a
+# Monday, so week buckets start Mondays; 2000-01-01 for month-or-coarser).
+# Literal intervals only; the optional origin/offset forms stay unrewritten
+# (recorded as skips).
+_TB_US = {
+    "microsecond": 1, "millisecond": 1000, "second": 1_000_000,
+    "minute": 60_000_000, "hour": 3_600_000_000,
+    "day": 86_400_000_000, "week": 604_800_000_000,
+}
+
+
+def _time_bucket(a: list[str]) -> str | None:
+    if len(a) != 2:
+        return None
+    im = re.fullmatch(
+        r"INTERVAL\s*(?:'\s*(\d+)\s*(\w+?)s?\s*'|\(?\s*(\d+)\s*\)?\s*(\w+?)s?)",
+        a[0].strip(), re.I,
+    )
+    if not im:
+        return None
+    n = int(im.group(1) or im.group(3))
+    unit = (im.group(2) or im.group(4)).lower()
+    unit = {"min": "minute", "sec": "second", "hr": "hour",
+            "mon": "month", "yr": "year"}.get(unit, unit)
+    x = a[1]
+    is_date = bool(
+        re.search(r"::\s*DATE\s*$", x, re.I)
+        or re.match(r"\s*DATE\b", x, re.I)
+    )
+    if unit in _TB_US:
+        w = n * _TB_US[unit]
+        o = 946_857_600_000_000  # 2000-01-03 00:00:00 UTC in µs
+        us = f"unix_micros(CAST(({x}) AS TIMESTAMP_LTZ))"
+        b = f"({us} - pmod({us} - {o}, {w}))"
+        expr = (
+            f"(TIMESTAMP_NTZ '1970-01-01 00:00:00' + make_dt_interval("
+            f"0, 0, 0, CAST({b} AS DECIMAL(26,6)) / 1000000))"
+        )
+    elif unit in ("month", "quarter", "year", "decade", "century"):
+        w = n * {"month": 1, "quarter": 3, "year": 12,
+                 "decade": 120, "century": 1200}[unit]
+        mo = f"((year({x}) - 2000) * 12 + month({x}) - 1)"
+        bm = f"({mo} - pmod({mo}, {w}))"
+        expr = (
+            f"CAST(make_date(2000 + CAST(floor(({bm}) / 12) AS INT), "
+            f"pmod({bm}, 12) + 1, 1) AS TIMESTAMP_NTZ)"
+        )
+    else:
+        return None
+    return f"CAST({expr} AS DATE)" if is_date else expr
+
+
+def _union_value(a: list[str]) -> str | None:
+    """union_value(tag := v) / union_tag / union_extract — the engine's
+    UNION carrier is STRUCT{tag, <member fields>} (SURVEY §3 type map;
+    Column forms in functions/registry.py)."""
+    if len(a) != 1:
+        return None
+    m = re.match(r"^\s*(\w+)\s*:=\s*(.+)$", a[0], re.S)
+    if not m:
+        return None
+    return (
+        f"named_struct('tag', '{m.group(1)}', "
+        f"'{m.group(1)}', ({m.group(2)}))"
+    )
+
+
+def _union_extract(a: list[str]) -> str | None:
+    if len(a) != 2:
+        return None
+    if not a[1].startswith("'"):
+        return f"({a[0]})[{a[1]}]"
+    return f"({a[0]}).{a[1][1:-1]}"
+
+
+def _to_json_union(a: list[str]) -> str | None:
+    """to_json over the union carrier: the reference renders {member:
+    value} (json_create.cpp CreateValues for UNION), never the tag field.
+    The carrier is named_struct('tag', <tag>, <m1>, v1, ...) — rebuild as
+    a tag-dispatched single-member object. Its options map is written
+    ``__tjm(...)``: Spark's map(), shielded from the duck map(keys,
+    values) rule, which runs later."""
+    if not a:
+        return None
+    arg = a[0].strip()
+    m = re.match(r"named_struct\s*\(\s*'tag'\s*,", arg, re.I)
+    if not m or not arg.endswith(")"):
+        return None
+    inner = _split_args(arg[arg.index("(") + 1 : -1])
+    if len(inner) < 4 or len(inner) % 2:
+        return None
+    tag_expr = inner[1].strip()
+    members = []
+    for i in range(2, len(inner), 2):
+        km = re.fullmatch(r"\s*'(\w+)'\s*", inner[i])
+        if not km:
+            return None
+        members.append((km.group(1), inner[i + 1]))
+    opts = ", __tjm('ignoreNullFields', 'false')"
+    mt = re.fullmatch(r"'(\w+)'", tag_expr)
+    if mt and len(members) == 1 and members[0][0] == mt.group(1):
+        return (f"to_json(named_struct('{mt.group(1)}', "
+                f"{members[0][1]}){opts})")
+    whens = " ".join(
+        f"WHEN ({arg}).tag = '{name}' THEN "
+        f"to_json(named_struct('{name}', ({arg}).{name}){opts})"
+        for name, _ in members
+    )
+    return f"(CASE WHEN ({arg}) IS NULL THEN NULL {whens} END)"
+
+
+def _list_where(a: list[str]) -> str | None:
+    """list_where(l, mask): keep elements whose mask is true."""
+    if len(a) != 2:
+        return None
+    return (
+        f"transform(filter(zip_with({a[0]}, {a[1]}, "
+        f"(__lv, __lm) -> named_struct('v', __lv, 'm', __lm)), "
+        f"__s -> __s.m), __s -> __s.v)"
+    )
+
+
+def _list_reduce(a: list[str]) -> str | None:
+    """list_reduce/reduce: DuckDB's 2-arg form seeds the fold with the
+    first element (list_reduce.cpp); the optional 3rd arg is the initial
+    value. Spark's reduce(arr, init, merge) needs both."""
+    if len(a) == 2:
         return (
-            f"CASE WHEN {s} RLIKE '^{sep}' "
-            f"THEN concat(array(substring({s}, 1, 1)), {f}) ELSE {f} END"
+            f"reduce(slice({a[0]}, 2, size({a[0]}) - 1), "
+            f"element_at({a[0]}, 1), {a[1]})"
         )
+    if len(a) == 3:
+        return f"reduce({a[0]}, {a[2]}, {a[1]})"
+    return None
 
-    def _parse_path(a: list[str]) -> str | None:
-        if not a:
-            return None
-        return _path_components(a[0], _sep_class(a[1] if len(a) > 1 else None))
 
-    def _parse_filename(a: list[str]) -> str | None:
-        if not a:
-            return None
-        # parse_filename(path[, trim_extension][, separator]) — the 2-arg
-        # form takes EITHER a trim flag or a separator name
-        rest = [x.strip() for x in a[1:]]
-        sepname = next(
-            (x for x in rest
-             if x.strip("'\"").lower() in
-             ("system", "forward_slash", "backslash", "both_slash")),
-            None,
-        )
-        sep = _sep_class(sepname)
-        fname = f"regexp_extract({a[0]}, '({sep.replace('[', '[^')}*)$', 1)"
-        if len(a) >= 2 and a[1].strip().strip("'\"").lower() == "true":
-            return f"regexp_replace({fname}, '\\\\.[^.]*$', '')"
-        return fname
+def _split_regex(a: list[str]) -> str | None:
+    """string_split_regex / regexp_split_to_array: Java's split and the
+    reference's split loop (string_split.cpp StringSplitter::Split) agree
+    whenever the pattern cannot match "" — but every zero-width edge
+    differs (the reference consumes one character per zero-width match;
+    Java emits leading/trailing empties). Literal patterns that CAN match
+    empty route through the exact-algorithm UDF; everything else keeps
+    the native JVM split."""
+    if len(a) != 2:
+        return None
+    pm = re.match(r"^\s*'((?:[^']|'')*)'\s*$", a[1], re.S)
+    if pm:
+        pat = pm.group(1).replace("''", "'").replace("\\\\", "\\")
+        try:
+            empty_ok = re.compile(pat).search("") is not None
+        except re.error:
+            empty_ok = False
+        if empty_ok:
+            return f"__duck_split_regex({a[0]}, {a[1]})"
+    return f"split({a[0]}, {a[1]})"
 
-    def _parse_dirpath(a: list[str]) -> str | None:
-        if not a:
-            return None
-        s = a[0]
-        sep = _sep_class(a[1] if len(a) > 1 else None)
-        return (
-            f"CASE WHEN ({s}) IS NULL THEN NULL "
-            # a pure-separator path is its own dirpath ('/' -> '/')
-            f"WHEN {s} RLIKE '^{sep}+$' THEN {s} "
-            f"WHEN {s} RLIKE '{sep}' "
-            f"THEN regexp_replace({s}, '{sep}{sep.replace('[', '[^')}*$', '') "
-            f"ELSE '' END"
-        )
 
-    def _parse_dirname(a: list[str]) -> str | None:
-        if not a:
-            return None
-        comps = _path_components(
-            a[0], _sep_class(a[1] if len(a) > 1 else None)
-        )
-        sep = _sep_class(a[1] if len(a) > 1 else None)
-        return (
-            f"CASE WHEN ({a[0]}) IS NULL THEN NULL "
-            f"WHEN size({comps}) > 1 THEN element_at({comps}, 1) "
-            # a bare leading separator IS the dirname ('\\' -> '\\')
-            f"WHEN size({comps}) = 1 AND {a[0]} RLIKE '^{sep}' "
-            f"THEN element_at({comps}, 1) "
-            f"ELSE '' END"
-        )
+_POSIX2J = {
+    "alpha": "Alpha", "digit": "Digit", "lower": "Lower",
+    "upper": "Upper", "alnum": "Alnum", "space": "Space",
+    "blank": "Blank", "punct": "Punct", "xdigit": "XDigit",
+    "cntrl": "Cntrl", "graph": "Graph", "print": "Print",
+}
 
-    out = _rewrite_calls(out, "parse_path", _parse_path)
-    out = _rewrite_calls(out, "parse_filename", _parse_filename)
-    out = _rewrite_calls(out, "parse_dirpath", _parse_dirpath)
-    out = _rewrite_calls(out, "parse_dirname", _parse_dirname)
-    # bar(x, min, max[, width=80]) — unicode bar with eighth-block
-    # remainder (function/scalar/string/bar.cpp), clamped to [0, width]
-    def _bar(a: list[str]) -> str | None:
-        if len(a) not in (3, 4):
-            return None
-        w = a[3] if len(a) == 4 else "80"
-        # fraction = (x - min) / ABS(max - min), clamped to [0, 1]
-        # (verified live: bar(40, 20, 0) is FULL, bar(10, 20, 0) empty —
-        # a reversed range keeps min as the zero point)
-        # reference clamp order (bar.cpp; verified live incl. reversed
-        # ranges and infinities): x <= min -> 0, else x >= max -> 1,
-        # else (x-min)/(max-min); NaN fraction -> 0
-        xd = f"CAST({a[0]} AS DOUBLE)"
-        mn = f"CAST({a[1]} AS DOUBLE)"
-        mx = f"CAST({a[2]} AS DOUBLE)"
-        u = (
-            # Spark orders NaN above everything; C++ comparisons with
-            # NaN are false -> the NaN case must short-circuit first
-            f"(CASE WHEN isnan({xd}) THEN CAST(0 AS DOUBLE) "
-            f"WHEN {xd} <= {mn} THEN CAST(0 AS DOUBLE) "
-            f"WHEN {xd} >= {mx} THEN CAST(1 AS DOUBLE) "
-            f"ELSE nanvl(({xd} - {mn}) / ({mx} - {mn}), CAST(0 AS DOUBLE)) "
-            f"END) * ({w})"
-        )
-        full = f"CAST({u} - ({u} % 1.0) AS INT)"
-        rem8 = f"CAST((({u}) - ({u} - ({u} % 1.0))) * 8 AS INT)"
-        body = (
-            f"concat(repeat('█', {full}), "
-            f"element_at(array('', '▏', '▎', '▍', '▌', '▋', '▊', '▉'), {rem8} + 1))"
-        )
-        # the reference pads with spaces until the string reaches `width`
-        # BYTES (bar.cpp targets a byte budget; each block glyph is 3
-        # UTF-8 bytes) — verified live: bar(25,0,100,80) = 20 blocks +
-        # 20 spaces (80 bytes, 40 chars)
-        nblock = f"({full} + CASE WHEN {rem8} > 0 THEN 1 ELSE 0 END)"
-        return (
-            f"CASE WHEN ({a[0]}) IS NULL OR ({a[1]}) IS NULL "
-            f"OR ({a[2]}) IS NULL THEN NULL ELSE "
-            f"concat({body}, repeat(' ', "
-            f"greatest(CAST({w} AS INT) - 3 * {nblock}, 0))) END"
-        )
 
-    out = _rewrite_calls(out, "bar", _bar)
+def _posix(mm: "re.Match[str]") -> str:
+    j = _POSIX2J.get(mm.group(1).lower())
+    if j is None:
+        return mm.group(0)
+    # surrounding class brackets stay — [[:lower:]] becomes [\p{Lower}],
+    # composing inside larger classes too
+    return "\\\\p{" + j + "}"
 
-    # two-parameter lambdas in transform/filter get a 1-BASED index in the
-    # reference (lambda_functions.cpp); Spark's second lambda arg is
-    # 0-based — shift every body reference of the index parameter
-    def _lambda_1based(fn_name: str):
-        def _fix(a: list[str]) -> str | None:
-            if len(a) != 2:
-                return None
-            lm = re.match(
-                r"^\s*\(\s*(\w+)\s*,\s*(\w+)\s*\)\s*->\s*(.+)$", a[1], re.S
-            )
-            if not lm:
-                return None
-            v, idx, body = lm.groups()
-            body2 = _sub_code(rf"\b{re.escape(idx)}\b", lambda m: f"({idx} + 1)", body)
-            return f"__lam1b_{fn_name}({a[0]}, ({v}, {idx}) -> {body2})"
 
-        return _fix
+def _rewrite_posix_classes(text: str) -> str:
+    """RE2 POSIX character classes -> Java \\p{...} spellings (patterns
+    live in string literals, so the backslash doubles)."""
+    if "[:" not in text:
+        return text
+    return re.sub(r"\[:(\w+):\]", _posix, text)
 
-    for _fn, _alias in (
-        ("transform", "transform"), ("list_transform", "transform"),
-        ("array_transform", "transform"), ("apply", "transform"),
-        ("list_apply", "transform"), ("filter", "filter"),
-        ("list_filter", "filter"), ("array_filter", "filter"),
+
+def _trunc1(a: list[str]) -> str | None:
+    """1-arg numeric trunc (math.cpp): truncate toward zero, DOUBLE
+    result, NaN/±inf pass through; Spark's trunc is the 2-arg date
+    function. DECIMAL-typed args keep Spark's semantics via CAST."""
+    if len(a) != 1:
+        return None
+    x = a[0]
+    if re.fullmatch(r"\s*[+-]?\d+(\.\d+)?\s*", x) or re.search(
+        r"(::\s*|\bAS\s+)(DECIMAL|NUMERIC)(\s*\(\s*\d+\s*(,\s*\d+\s*)?\))?\s*\)*\s*$",
+        x,
+        re.I,
     ):
-        out = _rewrite_calls(out, _fn, _lambda_1based(_alias))
-    out = re.sub(r"\b__lam1b_(transform|filter)\s*\(", r"\1(", out)
-    # sign(): TINYINT result, NaN → 0 (reference numeric.cpp SignFun);
-    # Spark returns DOUBLE and propagates NaN. __sig sentinel avoids the
-    # fixpoint re-match.
-    out = _rewrite_calls(
-        out,
-        "sign",
-        lambda a: (
-            f"CASE WHEN isnan(TRY_CAST(({a[0]}) AS DOUBLE)) THEN CAST(0 AS TINYINT) "
-            f"ELSE CAST(__sig({a[0]}) AS TINYINT) END"
-        )
-        if len(a) == 1
-        else None,
-    )
-    out = re.sub(r"\b__sig\s*\(", "sign(", out)
-    # MAP(keys_list, values_list) — the reference's two-list constructor
-    # (map.cpp); Spark's map() is pairwise key,value arguments
-    out = _rewrite_calls(
-        out,
-        "map",
-        lambda a: f"map_from_arrays({a[0]}, {a[1]})" if len(a) == 2 else None,
-    )
-    # list_sum(l): element-type-dispatched fold (see _list_sum_sql)
-    out = _rewrite_calls(
-        out,
-        "list_sum",
-        lambda a: _list_sum_sql(a[0]) if len(a) == 1 else None,
+        # DECIMAL stays DECIMAL(p,0): strip the fraction first so the
+        # final cast can't round half-up
+        return f"CAST(({x}) - (({x}) % 1) AS DECIMAL(38,0))"
+    d = f"CAST(({x}) AS DOUBLE)"
+    return (
+        f"(CASE WHEN isnan({d}) OR abs({d}) = CAST('inf' AS DOUBLE) "
+        f"THEN {d} ELSE {d} - ({d} % 1.0) END)"
     )
 
-    # one pass suffices for each rename table below: no target is a source
-    out = _sub_code(
+
+# parse_path family (reference parse_path.cpp). The optional separator
+# argument picks the split class: 'forward_slash' (/ only), 'backslash'
+# (\\ only), 'system' (platform = / here), default 'both_slash' (verified
+# live). A leading separator is its own component.
+_SEP_BOTH = r"[/\\\\\\\\]"
+
+
+def _sep_class(argtext: str | None) -> str:
+    v = (argtext or "").strip().strip("'\"").lower()
+    if v == "forward_slash" or v == "system":
+        return r"[/]"
+    if v == "backslash":
+        return r"[\\\\\\\\]"
+    return _SEP_BOTH
+
+
+def _path_components(s: str, sep: str) -> str:
+    f = f"filter(split({s}, '{sep}'), __pc -> __pc <> '')"
+    return (
+        f"CASE WHEN {s} RLIKE '^{sep}' "
+        f"THEN concat(array(substring({s}, 1, 1)), {f}) ELSE {f} END"
+    )
+
+
+def _parse_path(a: list[str]) -> str | None:
+    if not a:
+        return None
+    return _path_components(a[0], _sep_class(a[1] if len(a) > 1 else None))
+
+
+def _parse_filename(a: list[str]) -> str | None:
+    if not a:
+        return None
+    # parse_filename(path[, trim_extension][, separator]) — the 2-arg form
+    # takes EITHER a trim flag or a separator name
+    rest = [x.strip() for x in a[1:]]
+    sepname = next(
+        (x for x in rest
+         if x.strip("'\"").lower() in
+         ("system", "forward_slash", "backslash", "both_slash")),
+        None,
+    )
+    sep = _sep_class(sepname)
+    fname = f"regexp_extract({a[0]}, '({sep.replace('[', '[^')}*)$', 1)"
+    if len(a) >= 2 and a[1].strip().strip("'\"").lower() == "true":
+        return f"regexp_replace({fname}, '\\\\.[^.]*$', '')"
+    return fname
+
+
+def _parse_dirpath(a: list[str]) -> str | None:
+    if not a:
+        return None
+    s = a[0]
+    sep = _sep_class(a[1] if len(a) > 1 else None)
+    return (
+        f"CASE WHEN ({s}) IS NULL THEN NULL "
+        # a pure-separator path is its own dirpath ('/' -> '/')
+        f"WHEN {s} RLIKE '^{sep}+$' THEN {s} "
+        f"WHEN {s} RLIKE '{sep}' "
+        f"THEN regexp_replace({s}, '{sep}{sep.replace('[', '[^')}*$', '') "
+        f"ELSE '' END"
+    )
+
+
+def _parse_dirname(a: list[str]) -> str | None:
+    if not a:
+        return None
+    sep = _sep_class(a[1] if len(a) > 1 else None)
+    comps = _path_components(a[0], sep)
+    return (
+        f"CASE WHEN ({a[0]}) IS NULL THEN NULL "
+        f"WHEN size({comps}) > 1 THEN element_at({comps}, 1) "
+        # a bare leading separator IS the dirname ('\\' -> '\\')
+        f"WHEN size({comps}) = 1 AND {a[0]} RLIKE '^{sep}' "
+        f"THEN element_at({comps}, 1) "
+        f"ELSE '' END"
+    )
+
+
+def _bar(a: list[str]) -> str | None:
+    """bar(x, min, max[, width=80]) — unicode bar with eighth-block
+    remainder (function/scalar/string/bar.cpp), clamped to [0, width]."""
+    if len(a) not in (3, 4):
+        return None
+    w = a[3] if len(a) == 4 else "80"
+    # fraction = (x - min) / ABS(max - min), clamped to [0, 1] (verified
+    # live: bar(40, 20, 0) is FULL, bar(10, 20, 0) empty — a reversed
+    # range keeps min as the zero point)
+    # reference clamp order (bar.cpp; verified live incl. reversed ranges
+    # and infinities): x <= min -> 0, else x >= max -> 1, else
+    # (x-min)/(max-min); NaN fraction -> 0
+    xd = f"CAST({a[0]} AS DOUBLE)"
+    mn = f"CAST({a[1]} AS DOUBLE)"
+    mx = f"CAST({a[2]} AS DOUBLE)"
+    u = (
+        # Spark orders NaN above everything; C++ comparisons with NaN are
+        # false -> the NaN case must short-circuit first
+        f"(CASE WHEN isnan({xd}) THEN CAST(0 AS DOUBLE) "
+        f"WHEN {xd} <= {mn} THEN CAST(0 AS DOUBLE) "
+        f"WHEN {xd} >= {mx} THEN CAST(1 AS DOUBLE) "
+        f"ELSE nanvl(({xd} - {mn}) / ({mx} - {mn}), CAST(0 AS DOUBLE)) "
+        f"END) * ({w})"
+    )
+    full = f"CAST({u} - ({u} % 1.0) AS INT)"
+    rem8 = f"CAST((({u}) - ({u} - ({u} % 1.0))) * 8 AS INT)"
+    body = (
+        f"concat(repeat('█', {full}), "
+        f"element_at(array('', '▏', '▎', '▍', '▌', '▋', '▊', '▉'), {rem8} + 1))"
+    )
+    # the reference pads with spaces until the string reaches `width`
+    # BYTES (bar.cpp targets a byte budget; each block glyph is 3 UTF-8
+    # bytes) — verified live: bar(25,0,100,80) = 20 blocks + 20 spaces (80
+    # bytes, 40 chars)
+    nblock = f"({full} + CASE WHEN {rem8} > 0 THEN 1 ELSE 0 END)"
+    return (
+        f"CASE WHEN ({a[0]}) IS NULL OR ({a[1]}) IS NULL "
+        f"OR ({a[2]}) IS NULL THEN NULL ELSE "
+        f"concat({body}, repeat(' ', "
+        f"greatest(CAST({w} AS INT) - 3 * {nblock}, 0))) END"
+    )
+
+
+def _lambda_1based(fn: str, a: list[str]) -> str | None:
+    """Two-parameter lambdas in transform/filter get a 1-BASED index in
+    the reference (lambda_functions.cpp); Spark's second lambda arg is
+    0-based — shift every body reference of the index parameter."""
+    if len(a) != 2:
+        return None
+    lm = re.match(
+        r"^\s*\(\s*(\w+)\s*,\s*(\w+)\s*\)\s*->\s*(.+)$", a[1], re.S
+    )
+    if not lm:
+        return None
+    v, idx, body = lm.groups()
+    body2 = _sub_code(rf"\b{re.escape(idx)}\b", lambda m: f"({idx} + 1)", body)
+    return f"{fn}({a[0]}, ({v}, {idx}) -> {body2})"
+
+
+def _sign(a: list[str]) -> str | None:
+    """sign(): TINYINT result, NaN → 0 (reference numeric.cpp SignFun);
+    Spark returns DOUBLE and propagates NaN."""
+    if len(a) != 1:
+        return None
+    return (
+        f"CASE WHEN isnan(TRY_CAST(({a[0]}) AS DOUBLE)) THEN CAST(0 AS TINYINT) "
+        f"ELSE CAST(sign({a[0]}) AS TINYINT) END"
+    )
+
+
+def _apply_name_rules(text: str) -> str:
+    """Plain name→name renames (``_NAME_RULES``); one pass suffices, as
+    no target is a source."""
+    return _sub_code(
         rf"\b({'|'.join(_NAME_RULES)})\s*\(",
-        lambda mm: _NAME_RULES[mm.group(1).lower()] + "(", out, re.I,
+        lambda mm: _NAME_RULES[mm.group(1).lower()] + "(", text, re.I,
     )
 
-    # USING SAMPLE n% (bernoulli) → TABLESAMPLE
-    out = re.sub(r"\bUSING\s+SAMPLE\s+(\d+)\s*%", r"TABLESAMPLE (\1 PERCENT)", out, flags=re.I)
 
-    # join USING lists bind case-insensitively: USING (hello, "HELLO")
-    # names ONE column in the reference — dedupe (Spark joins twice)
-    def _dedupe_using(mm: "re.Match[str]") -> str:
-        items = [c.strip() for c in mm.group(1).split(",")]
-        seen: set[str] = set()
-        kept = []
-        for c in items:
-            key = c.strip().strip('"').lower()
-            if key not in seen:
-                seen.add(key)
-                kept.append(c)
-        return f"USING ({', '.join(kept)})"
+def _rewrite_using_sample(text: str) -> str:
+    """USING SAMPLE n% (bernoulli) → TABLESAMPLE."""
+    return re.sub(r"\bUSING\s+SAMPLE\s+(\d+)\s*%",
+                  r"TABLESAMPLE (\1 PERCENT)", text, flags=re.I)
 
-    out = re.sub(
-        r"\bUSING\s*\(([^()]*)\)",
-        lambda mm: mm.group(0)
-        if re.search(r"\bSAMPLE\b", mm.group(1), re.I)
-        else _dedupe_using(mm),
-        out, flags=re.I,
-    )
 
-    # DuckDB numeric type aliases Spark's parser rejects (postgres-style
-    # intN/floatN names) — applies to both ::casts and CAST(... AS t)
-    out = _sub_code(
+def _dedupe_using(mm: "re.Match[str]") -> str:
+    if re.search(r"\bSAMPLE\b", mm.group(1), re.I):
+        return mm.group(0)
+    seen: set[str] = set()
+    kept = []
+    for c in (c.strip() for c in mm.group(1).split(",")):
+        key = c.strip().strip('"').lower()
+        if key not in seen:
+            seen.add(key)
+            kept.append(c)
+    return f"USING ({', '.join(kept)})"
+
+
+def _dedupe_using_lists(text: str) -> str:
+    """Join USING lists bind case-insensitively: USING (hello, "HELLO")
+    names ONE column in the reference — dedupe (Spark joins twice)."""
+    return re.sub(r"\bUSING\s*\(([^()]*)\)", _dedupe_using, text, flags=re.I)
+
+
+def _rename_type_aliases(text: str) -> str:
+    """DuckDB numeric type aliases Spark's parser rejects (postgres-style
+    intN/floatN names) — applies to both ::casts and CAST(... AS t)."""
+    return _sub_code(
         rf"\b({'|'.join(_TYPE_ALIASES)})\b(?!\s*\()",
-        lambda mm: _TYPE_ALIASES[mm.group(1).lower()], out, re.I,
+        lambda mm: _TYPE_ALIASES[mm.group(1).lower()], text, re.I,
     )
 
-    # attached-catalog qualification: `alias.table` → the `alias__table`
-    # view ATTACH registered (storage.attach; Spark temp views are
-    # single-part names)
+
+def _qualify_attached_tables(text: str) -> str:
+    """Attached-catalog qualification: `alias.table` → the `alias__table`
+    view ATTACH registered (storage.attach; Spark temp views are
+    single-part names). Reads the session's attachments each time it
+    runs."""
     from myduckdb_spark.storage import attached_aliases
 
     views: dict[str, str] = {}
     for alias, tables in attached_aliases().items():
         for tbl, view in tables.items():
             views.setdefault(f"{alias}.{tbl}".lower(), view)
-    if views:
-        out = _sub_code(
-            r"\b(" + "|".join(re.escape(q) for q in views) + r")\b",
-            lambda mm: views[mm.group(1).lower()], out, re.I,
-        )
-    out = re.sub(r"\b__tof\s*\(", "typeof(", out)
-    out = re.sub(r"\b__rawabs\s*\(", "abs(", out)
-    # to_json options maps emitted by the union-carrier rewrite, shielded
-    # from the duck map([k],[v]) rewrite until every pass has run
-    out = re.sub(r"\b__tjm\s*\(", "map(", out)
+    if not views:
+        return text
+    return _sub_code(
+        r"\b(" + "|".join(re.escape(q) for q in views) + r")\b",
+        lambda mm: views[mm.group(1).lower()], text, re.I,
+    )
+
+
+def _if_arity(n: int, fn):
+    """``fn`` for a call with exactly ``n`` arguments; other calls stay."""
+    return lambda a: fn(a) if len(a) == n else None
+
+
+_PASSES = (
+    _bind_type_aliases,
+    # DuckDB string literals are standard SQL (backslash is an ordinary
+    # character); Spark C-escapes them. Double every backslash INSIDE
+    # '-literals first, so the original literal reaches the engine
+    # byte-identical. Every later rewrite writes Spark-style literals.
+    _escape_literal_backslashes,
+    _rewrite_array_types,
+    _rewrite_bracket_lists,
+    _rewrite_struct_braces,
+    _rewrite_json_dot_syntax,
+    _rewrite_index_brackets,
+    _decorrelate_ordered_subqueries,
+    _rewrite_table_functions,
+    _rewrite_positional_join,
+    _rewrite_window_filter,
+    ("quantile_cont", _quantile_cont),
+    ("quantile_disc", _quantile_disc),
+    ("quantile", _quantile_disc),
+    _rewrite_percentile_disc,
+    ("median", _median_discrete),
+    _drop_trailing_select_comma,
+    _rewrite_qualify,
+    _rewrite_distinct_on,
+    _inline_named_windows,
+    _rewrite_distinct_window,
+    _rewrite_range_zero_preceding,
+    _rewrite_window_mode,
+    _rewrite_window_nth,
+    _rewrite_window_exclude,
+    _pin_window_null_order,
+    _rewrite_in_subquery,
+    _rewrite_any_all,
+    _rewrite_power_operator,
+    _rewrite_integer_division,
+    # pg_typeof = typeof in lowercase postgres spelling (pg_catalog)
+    ("pg_typeof", _if_arity(1, lambda a: f"lower(typeof({a[0]}))")),
+    _bind_registry_typeof,
+    ("typeof", _typeof_names),
+    ("abs", _abs_fn),
+    ("ceil", partial(_ceil_floor, "ceil")),
+    ("ceiling", partial(_ceil_floor, "ceil")),
+    ("floor", partial(_ceil_floor, "floor")),
+    _rewrite_big_int_literals,
+    _rewrite_blobs,
+    _rewrite_infinity_literals,
+    _rewrite_offset_timestamp_literals,
+    _rewrite_at_time_zone,
+    _rename_timestamptz,
+    _rewrite_dynamic_interval,
+    _rewrite_negated_unsigned,
+    _rewrite_postfix_int_casts,
+    _rewrite_int_casts,
+    _rewrite_setop_order_alias,
+    _pin_order_by_all_nulls,
+    _rewrite_star_exclude,
+    _rewrite_json_arrows,
+    ("chr", _fold_chr),
+    ("regexp_replace", _re_replace),
+    # __rr_all: the VARCHAR cast rewrite's Spark-native regexp_replace
+    partial(_unshield, "__rr_all", "regexp_replace"),
+    ("skewness", _skewness),
+    ("kurtosis", _kurtosis),
+    # DuckDB log(x) is BASE-10 (math.cpp: Log10Fun aliases log); Spark's
+    # 1-arg log is natural. 2-arg log(b, x) agrees between engines.
+    ("log", _if_arity(1, lambda a: f"log10({a[0]})")),
+    # any_value skips NULLs in the reference (first.cpp FirstFunGetter
+    # skip_nulls); Spark's 1-arg form doesn't
+    ("any_value", _if_arity(1, lambda a: f"any_value({a[0]}, true)")),
+    ("json_array_length", _json_array_length),
+    ("json_transform", partial(_json_transform_sql, False)),
+    ("json_transform_strict", partial(_json_transform_sql, True)),
+    ("from_json_strict", partial(_json_transform_sql, True)),
+    ("from_json", _from_json_structure),
+    ("json_object", _json_object),
+    ("json_array", _json_array),
+    # containment / keys / merge-patch: recursive tree semantics with no
+    # Spark expression form — Arrow-batched UDFs (jsonx.py)
+    ("json_contains", _if_arity(2, lambda a: f"__json_contains({a[0]}, {a[1]})")),
+    ("json_keys", _json_keys),
+    ("json_merge_patch", _json_merge),
+    # group aggregates (json_aggregates.cpp): array/object keep input NULLs
+    # as JSON null; structure merges the group's inferred shapes
+    ("json_group_array", _if_arity(1, lambda a: (
+        f"concat('[', coalesce(array_join(collect_list("
+        f"{_jfrag(a[0])}), ','), ''), ']')"
+    ))),
+    ("json_group_object", _if_arity(2, lambda a: (
+        f"concat('{{', coalesce(array_join(collect_list(concat("
+        f"{_jfrag_key(a[0])}, {_jfrag(a[1])})), ','), ''), '}}')"
+    ))),
+    ("json_group_structure",
+     _if_arity(1, lambda a: f"__json_group_structure({a[0]})")),
+    # json_quote(NULL) is SQL NULL (unlike inside constructors)
+    ("json_quote", _if_arity(1, lambda a: (
+        f"CASE WHEN ({a[0]}) IS NULL THEN NULL ELSE {_jfrag(a[0])} END"
+    ))),
+    _rewrite_typed_json_literals,
+    _rewrite_json_postfix_casts,
+    ("try_cast", partial(_cast_json, True)),
+    ("cast", partial(_cast_json, False)),
+    _rewrite_json_minify,
+    # json_type 1-arg form -> 2-arg UDF signature; json_typeof alias
+    ("json_typeof", lambda a: f"json_type({', '.join(a)})" if len(a) in (1, 2) else None),
+    # '$' = whole-document type; an actual NULL path returns NULL
+    ("json_type", _if_arity(1, lambda a: f"json_type({a[0]}, '$')")),
+    ("json_structure", partial(_json_in_cast, "json_structure")),
+    ("json_type", partial(_json_in_cast, "json_type")),
+    # Spark's base64 MIME-chunks at 76 chars; the reference emits one
+    # unbroken string (blob/base64.test)
+    ("base64", _if_arity(1, lambda a: f"replace(base64({a[0]}), '\\r\\n', '')")),
+    ("to_base64", _if_arity(1, lambda a: f"replace(base64({a[0]}), '\\r\\n', '')")),
+    # regr_avgx/avgy always return DOUBLE in the reference (regr_avg.cpp);
+    # Spark preserves DECIMAL inputs. Equivalent both-non-null average.
+    ("regr_avgy", _if_arity(2, lambda a: (
+        f"CAST(avg(CASE WHEN ({a[0]}) IS NOT NULL AND ({a[1]}) IS NOT NULL "
+        f"THEN ({a[0]}) END) AS DOUBLE)"
+    ))),
+    ("regr_avgx", _if_arity(2, lambda a: (
+        f"CAST(avg(CASE WHEN ({a[0]}) IS NOT NULL AND ({a[1]}) IS NOT NULL "
+        f"THEN ({a[1]}) END) AS DOUBLE)"
+    ))),
+    # len(x): DuckDB len() is list-or-string; Spark splits that into size()
+    # (arrays/maps) vs length() (strings). Choose by argument shape.
+    ("len", lambda a: f"size({a[0]})" if _LISTY.search(a[0]) else f"length({a[0]})"),
+    # DuckDB's length() is list-or-string too (length.cpp overload set);
+    # dispatch only on a list-producing OUTERMOST expression (match, not
+    # search — length(to_json(array(x))) is a string length)
+    ("length", lambda a: f"size({a[0]})"
+     if len(a) == 1 and _LISTY.match(a[0].lstrip()) else None),
+    ("strftime", _strftime),
+    ("strptime", _strptime),
+    ("left", _left),
+    ("right", _right),
+    ("substring", _substr_fromfor),
+    ("substr", _substr_fromfor),
+    ("substring", _substring3),
+    ("substr", _substring3),
+    partial(_unshield, "__substr", "substring"),
+    ("split_part", _split_part),
+    ("string_agg", _string_agg_null_sep),
+    ("printf", _printf_nulls),
+    ("regexp_extract", _regexp_extract),
+    # ---- list-function edge parity (reference test/sql/function/list) ----
+    # flatten skips NULL sublists but keeps NULL elements (flatten.cpp;
+    # Spark's flatten returns NULL when any sublist is NULL)
+    ("flatten", _if_arity(1, lambda a: (
+        f"flatten(filter({a[0]}, __x -> __x IS NOT NULL))"
+    ))),
+    # list_has_any ignores NULL elements and never returns NULL for
+    # non-NULL inputs (verified live: ([1,NULL],[NULL,3]) = false)
+    ("list_has_any", _if_arity(2, lambda a: (
+        f"CASE WHEN ({a[0]}) IS NULL OR ({a[1]}) IS NULL THEN NULL "
+        f"ELSE coalesce(arrays_overlap("
+        f"filter({a[0]}, __x -> __x IS NOT NULL), "
+        f"filter({a[1]}, __x -> __x IS NOT NULL)), false) END"
+    ))),
+    ("list_intersect", _if_arity(2, _null_dropping_intersect)),
+    ("array_intersect", lambda a: _null_dropping_intersect(a)
+     if len(a) == 2 else f"array_intersect({', '.join(a)})"),
+    # array_to_string: empty list -> NULL, NULL separator behaves as ','
+    # (verified live)
+    ("array_to_string", _if_arity(2, lambda a: (
+        f"CASE WHEN size({a[0]}) = 0 THEN NULL "
+        f"ELSE array_join({a[0]}, coalesce({a[1]}, ',')) END"
+    ))),
+    _bind_user_value_functions,
+    ("current_database", lambda a: f"'{SETTINGS.get('current_database', 'memory')}'"
+     if not a or not a[0] else None),
+    _strip_pg_catalog_settings,
+    ("current_schema", _current_schema),
+    ("current_setting", lambda a: f"'{SETTINGS.get('search_path', '')}'"
+     if len(a) == 1 and re.fullmatch(r"'(search_path|schema)'", a[0].strip(), re.I)
+     else None),
+    # postgres-compat stub system functions (pg_catalog
+    # system_functions.test; values verified live)
+    ("inet_client_addr", lambda a: "CAST(NULL AS STRING)" if not a or not a[0] else None),
+    ("inet_client_port", lambda a: "CAST(NULL AS INT)" if not a or not a[0] else None),
+    ("inet_server_addr", lambda a: "CAST(NULL AS STRING)" if not a or not a[0] else None),
+    ("inet_server_port", lambda a: "CAST(NULL AS INT)" if not a or not a[0] else None),
+    ("pg_my_temp_schema", lambda a: "CAST(0 AS BIGINT)" if not a or not a[0] else None),
+    ("pg_is_other_temp_schema", _if_arity(1, lambda a: "false")),
+    ("col_description", _if_arity(2, lambda a: "CAST(NULL AS STRING)")),
+    ("obj_description", _if_arity(2, lambda a: "CAST(NULL AS STRING)")),
+    ("shobj_description", _if_arity(2, lambda a: "CAST(NULL AS STRING)")),
+    ("current_schemas", _cur_schemas),
+    ("epoch_ms", _epoch_ms),
+    ("epoch_us", lambda a: (
+        f"unix_micros(CAST({_epoch_guard(a[0], 'epoch_us')} AS TIMESTAMP_LTZ))"
+    ) if len(a) == 1 and not _is_numeric_arg(a[0]) else None),
+    ("epoch_ns", lambda a: (
+        f"(unix_micros(CAST({_epoch_guard(a[0], 'epoch_ns')} AS "
+        f"TIMESTAMP_LTZ)) * CAST(1000 AS BIGINT))"
+    ) if len(a) == 1 and not _is_numeric_arg(a[0]) else None),
+    ("epoch", lambda a: (
+        f"(CAST(unix_micros(CAST({_epoch_guard(a[0], 'epoch')} AS "
+        f"TIMESTAMP_LTZ)) AS DOUBLE) / 1000000)"
+    ) if len(a) == 1 and not _is_numeric_arg(a[0]) else None),
+    ("to_timestamp", lambda a: (
+        f"timestamp_seconds(CAST(({a[0]}) AS DECIMAL(20,6)))"
+    ) if len(a) == 1 and _is_numeric_arg(a[0]) else None),
+    ("timezone", _timezone_fn),
+    # weekday/dayofweek: Sunday=0 in the reference (date_part.cpp); Spark's
+    # weekday() builtin is Monday=0 and its dayofweek() is Sunday=1. The
+    # dayofweek rule runs first, so weekday's dayofweek() output stays.
+    ("dayofweek", _if_arity(1, lambda a: f"(dayofweek({a[0]}) - 1)")),
+    ("weekday", _if_arity(1, lambda a: f"(dayofweek({a[0]}) - 1)")),
+    ("nextafter", _nextafter),
+    ("starts_with", lambda a: f"startswith({', '.join(a)})" if a else None),
+    ("sha256", _if_arity(1, lambda a: f"sha2({a[0]}, 256)")),
+    ("to_base", lambda a: (
+        f"conv(CAST({a[0]} AS BIGINT), 10, {a[1]})" if len(a) == 2
+        else f"lpad(conv(CAST({a[0]} AS BIGINT), 10, {a[1]}), {a[2]}, '0')"
+        if len(a) == 3
+        else None
+    )),
+    ("error", _if_arity(1, lambda a: f"raise_error({a[0]})")),
+    ("encode", _if_arity(1, lambda a: f"encode({a[0]}, 'UTF-8')")),
+    ("decode", _if_arity(1, lambda a: f"decode({a[0]}, 'UTF-8')")),
+    # regexp_escape: RE2 QuoteMeta — every non-word character gets a
+    # backslash (verified live: ':' and '/' are escaped too)
+    ("regexp_escape", _if_arity(1, lambda a: (
+        f"regexp_replace({a[0]}, '([^A-Za-z0-9_])', '\\\\\\\\$1')"
+    ))),
+    ("strip_accents", _strip_accents),
+    ("jaccard", _if_arity(2, lambda a: (
+        f"CAST(size(array_intersect(array_distinct(split({a[0]}, '')), "
+        f"array_distinct(split({a[1]}, '')))) AS DOUBLE) / "
+        f"size(array_union(array_distinct(split({a[0]}, '')), "
+        f"array_distinct(split({a[1]}, ''))))"
+    ))),
+    ("list_zip", _list_zip),
+    # list_histogram routes through _list_aggregate's histogram fold (the
+    # list_<name> aliases below) — one NULL/empty-semantics implementation
+    ("array_distance", _vec_dist),
+    ("list_distance", _vec_dist),
+    ("array_inner_product", _vec_dot),
+    ("list_inner_product", _vec_dot),
+    ("try_strptime", partial(_strptime, fn="try_to_timestamp")),
+    ("array_agg", _array_agg_nulls),
+    ("list", _array_agg_nulls),
+    ("map_concat", _map_concat),
+    # ---- infix GLOB / SIMILAR TO / COLLATE ----
+    _rewrite_glob_similar,
+    _rewrite_collate_expr,
+    # list_distinct DROPS NULL elements in the reference (list_distinct.cpp);
+    # the array_distinct alias shares the semantics. array_distinct runs
+    # first, so list_distinct's array_distinct() output stays.
+    ("array_distinct", _if_arity(1, lambda a: (
+        f"array_distinct(filter({a[0]}, __x -> __x IS NOT NULL))"
+    ))),
+    ("list_distinct", _if_arity(1, lambda a: (
+        f"array_distinct(filter({a[0]}, __x -> __x IS NOT NULL))"
+    ))),
+    # list_contains: two-valued (FALSE even when the list holds NULLs),
+    # NULL only for NULL list/needle (contains_or_position.cpp)
+    ("list_contains", _if_arity(2, lambda a: (
+        f"CASE WHEN ({a[0]}) IS NULL OR ({a[1]}) IS NULL THEN NULL "
+        f"ELSE coalesce(array_contains({a[0]}, {a[1]}), false) END"
+    ))),
+    ("string_split", _string_split),
+    ("str_split", _string_split),
+    ("string_to_array", _string_split),
+    # ltrim/rtrim 2-arg: Spark's argument order is (trimStr, str) —
+    # reversed from the reference's (string, characters)
+    ("ltrim", _if_arity(2, lambda a: f"ltrim({a[1]}, {a[0]})")),
+    ("rtrim", _if_arity(2, lambda a: f"rtrim({a[1]}, {a[0]})")),
+    ("trim", _if_arity(2, lambda a: f"btrim({a[0]}, {a[1]})")),
+    # concat treats NULL arguments as '' in the reference (concat.cpp);
+    # Spark's concat is NULL-propagating. concat_ws('') has the skip
+    # semantics — applied only when no argument looks list-typed (concat
+    # over arrays must stay Spark's array concat).
+    ("concat", lambda a: f"concat_ws('', {', '.join(a)})"
+     if len(a) >= 1 and not any(_LISTY.search(x) for x in a) else None),
+    ("date_trunc", _date_trunc),
+    _rewrite_extract_dow,
+    _rewrite_extract_subsec,
+    ("date_part", _date_part),
+    ("datepart", _date_part),
+    ("list_sort", _list_sort),
+    ("list_reverse_sort", _list_rsort),
+    ("json_extract_string", partial(_json_pointer, True)),
+    ("json_extract_path_text", partial(_json_pointer, True)),
+    ("json_extract", partial(_json_pointer, False)),
+    ("json_extract_path", partial(_json_pointer, False)),
+    ("json_extract", partial(_json_extract_dollar, False)),
+    ("json_extract_path", partial(_json_extract_dollar, False)),
+    ("json_extract_string", partial(_json_extract_dollar, True)),
+    ("json_extract_path_text", partial(_json_extract_dollar, True)),
+    ("list_extract", _list_extract),
+    ("list_element", _list_extract),
+    # list_position: 0 when absent (live DuckDB), 1-based otherwise
+    ("list_position", _if_arity(2, lambda a: f"array_position({a[0]}, {a[1]})")),
+    ("list_indexof", _if_arity(2, lambda a: f"array_position({a[0]}, {a[1]})")),
+    ("list_append", _if_arity(2, lambda a: f"concat({a[0]}, array({a[1]}))")),
+    ("list_prepend", _if_arity(2, lambda a: f"concat(array({a[0]}), {a[1]})")),
+    ("list_resize", _list_resize),
+    # NULL needle elements are ignored (DuckDB: list_has_all([1,2,3],
+    # [1,NULL]) = true) and the haystack check is TWO-valued — NULLs in the
+    # haystack never match, so strip them before array_contains (verified
+    # live: has_all([1,2,NULL],[2,3]) = false, not NULL)
+    ("list_has_all", _if_arity(2, lambda a: (
+        f"CASE WHEN ({a[0]}) IS NULL OR ({a[1]}) IS NULL THEN NULL "
+        f"ELSE forall(filter({a[1]}, __x -> __x IS NOT NULL), "
+        f"__x -> array_contains(filter({a[0]}, __y -> __y IS NOT NULL), __x)) END"
+    ))),
+    ("list_unique", _if_arity(1, lambda a: (
+        f"size(array_distinct(filter({a[0]}, __x -> __x IS NOT NULL)))"
+    ))),
+    ("list_count", _if_arity(1, lambda a: f"size(filter({a[0]}, __x -> __x IS NOT NULL))")),
+    # list_slice: DuckDB 1-based inclusive bounds
+    ("list_slice", _if_arity(3, lambda a: f"slice({a[0]}, {a[1]}, ({a[2]}) - ({a[1]}) + 1)")),
+    ("array_pop_back", _if_arity(1, lambda a: f"slice({a[0]}, 1, size({a[0]}) - 1)")),
+    ("array_pop_front", _if_arity(1, lambda a: f"slice({a[0]}, 2, size({a[0]}) - 1)")),
+    ("list_any_value", _if_arity(1, lambda a: (
+        f"try_element_at(filter({a[0]}, __x -> __x IS NOT NULL), 1)"
+    ))),
+    # NULL-propagation parity: Spark's isnan(NULL)=false, the reference
+    # returns NULL
+    ("isnan", _if_arity(1, lambda a: (
+        f"CASE WHEN ({a[0]}) IS NULL THEN NULL ELSE isnan({a[0]}) END"
+    ))),
+    # __isnan: nextafter's Spark-native isnan
+    partial(_unshield, "__isnan", "isnan"),
+    # factorial returns HUGEINT in the reference (up to 33!); Spark's
+    # builtin overflows LONG at 21!. DECIMAL(38,0) product matches the
+    # HUGEINT range; negatives/0 are the empty product = 1
+    ("factorial", _if_arity(1, lambda a: (
+        f"CASE WHEN ({a[0]}) < 1 THEN CAST(1 AS DECIMAL(38,0)) "
+        f"ELSE aggregate(sequence(1, CAST({a[0]} AS INT)), "
+        f"CAST(1 AS DECIMAL(38,0)), "
+        f"(__fa, __fi) -> __fa * __fi) END"
+    ))),
+    ("list_aggregate", _list_aggregate),
+    ("list_aggr", _list_aggregate),
+    *((f"list_{agg}", partial(_list_agg_alias, agg)) for agg in (
+        "median", "mad", "mode", "product", "string_agg", "bool_and",
+        "bool_or", "quantile", "quantile_disc", "first", "last",
+        "entropy", "histogram", "approx_count_distinct",
+    )),
+    *((agg, partial(_group_list_agg, agg))
+      for agg in ("mad", "product", "fsum", "sumkahan", "kahan_sum")),
+    ("entropy", _entropy),
+    ("histogram", _histogram),
+    # sem = population stddev / sqrt(n) (sem.cpp)
+    ("sem", _if_arity(1, lambda a: f"(stddev_pop({a[0]}) / sqrt(count({a[0]})))")),
+    *((name, partial(_arg_minmax, sp)) for name, sp in (
+        ("arg_min", "min_by"), ("argmin", "min_by"), ("arg_min_null", "min_by"),
+        ("arg_max", "max_by"), ("argmax", "max_by"), ("arg_max_null", "max_by"),
+    )),
+    ("min_by", _if_arity(3, partial(_arg_minmax, "min_by"))),
+    ("max_by", _if_arity(3, partial(_arg_minmax, "max_by"))),
+    ("approx_quantile", _if_arity(2, lambda a: f"approx_percentile({', '.join(a)})")),
+    ("time_bucket", _time_bucket),
+    ("union_value", _union_value),
+    ("union_tag", _if_arity(1, lambda a: f"({a[0]}).tag")),
+    ("union_extract", _union_extract),
+    _rewrite_union_casts,
+    ("to_json", _to_json_union),
+    # prefix/suffix (reference string functions) → Spark predicates
+    ("prefix", _if_arity(2, lambda a: f"startswith({a[0]}, {a[1]})")),
+    ("suffix", _if_arity(2, lambda a: f"endswith({a[0]}, {a[1]})")),
+    # array_value = ARRAY constructor (fixed-size array type; Spark has
+    # only variable lists — same values)
+    ("array_value", lambda a: f"array({', '.join(a)})"),
+    ("list_where", _list_where),
+    ("list_reduce", _list_reduce),
+    # bare `reduce` alias: only the 2-arg DuckDB form (the 3-arg form is
+    # Spark's own signature — and list_reduce's emission — leave it alone)
+    ("reduce", _if_arity(2, _list_reduce)),
+    # regexp_extract_all: DuckDB's default group is 0 (whole match); Spark's
+    # is 1 and errors when the pattern has no groups
+    ("regexp_extract_all", _if_arity(2, lambda a: f"regexp_extract_all({a[0]}, {a[1]}, 0)")),
+    ("string_split_regex", _split_regex),
+    ("str_split_regex", _split_regex),
+    ("regexp_split_to_array", _split_regex),
+    _rewrite_posix_classes,
+    ("trunc", _trunc1),
+    ("parse_path", _parse_path),
+    ("parse_filename", _parse_filename),
+    ("parse_dirpath", _parse_dirpath),
+    ("parse_dirname", _parse_dirname),
+    ("bar", _bar),
+    *((name, partial(_lambda_1based, fn)) for name, fn in (
+        ("transform", "transform"), ("list_transform", "transform"),
+        ("array_transform", "transform"), ("apply", "transform"),
+        ("list_apply", "transform"), ("filter", "filter"),
+        ("list_filter", "filter"), ("array_filter", "filter"),
+    )),
+    ("sign", _sign),
+    # MAP(keys_list, values_list) — the reference's two-list constructor
+    # (map.cpp); Spark's map() is pairwise key,value arguments
+    ("map", _if_arity(2, lambda a: f"map_from_arrays({a[0]}, {a[1]})")),
+    # __tjm: the to_json union rewrite's options map
+    partial(_unshield, "__tjm", "map"),
+    # list_sum(l): element-type-dispatched fold (see _list_sum_sql)
+    ("list_sum", _if_arity(1, lambda a: _list_sum_sql(a[0]))),
+    _apply_name_rules,
+    _rewrite_using_sample,
+    _dedupe_using_lists,
+    _rename_type_aliases,
+    _qualify_attached_tables,
+)
+
+_CALL_TOKEN = re.compile(r"\b(\w+)\s*\(")
+
+
+def translate(text: str) -> str:
+    """DuckDB dialect → Spark SQL dialect (token-aware, conservative):
+    macro expansion, then every entry of ``_PASSES`` in order. A call
+    rule whose name is not among the text's call tokens is skipped
+    without a scan."""
+    from myduckdb_spark.functions.macros import expand_macros
+
+    if re.search(r"\bcurrent_query\s*\(", text, re.I):
+        text = _bind_current_query(text)
+    out = expand_macros(text)  # bind-time macro expansion, before all rules
+    scanned, calls = None, set()
+    for step in _PASSES:
+        if callable(step):
+            out = step(out)
+            continue
+        if out != scanned:
+            scanned, calls = out, {t.lower() for t in _CALL_TOKEN.findall(out)}
+        if step[0] in calls:
+            out = _rewrite_calls(out, *step)
     return out
 
 

@@ -3,6 +3,10 @@ table_macro_function.hpp:21) + SQL front-door QUALIFY rewrite (reference
 bind_select_node.cpp) + prepared-statement parameters (reference EP2,
 src/main/prepared_statement.cpp)."""
 
+import subprocess
+import sys
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -46,6 +50,25 @@ def test_macro_cycle_raises():
     macros.create_macro("b_cyc", ["x"], "a_cyc(x)")
     with pytest.raises(RecursionError):
         macros.expand_macros("SELECT a_cyc(1)")
+
+
+def test_self_recursive_macro_raises():
+    # a macro whose body calls itself hits expand_macros' depth cap; it
+    # must not loop inside one call rewrite. A subprocess with a timeout
+    # turns a hang into a failure instead of a stalled suite.
+    code = (
+        "from myduckdb_spark.functions import macros\n"
+        "macros.create_macro('rec', ['x'], 'rec(x) + 1')\n"
+        "try:\n"
+        "    macros.expand_macros('SELECT rec(1)')\n"
+        "except RecursionError:\n"
+        "    print('RecursionError')\n"
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True,
+        cwd=Path(__file__).resolve().parents[1], timeout=60,
+    )
+    assert proc.stdout.strip() == "RecursionError", proc.stderr
 
 
 def test_table_macro_sql_body(spark):

@@ -2,13 +2,19 @@
 byte-identical to the recorded output (or raises the recorded exception
 class) for every entry of ``translate_golden.json``.
 
-The corpus holds every registered oracle string, the frozen front-door
-benchmark statements (``perfbench/frontdoor_sql.py``: ``SELECTS`` plus the
-DML chain for seeds 0-2), the SQL that ``translate()`` receives while the
-dialect, macro, streaming and JSON test files run, and 40 hand-written
-statements for rewrite passes those sources never reach (BLOB literals,
-GLOB, AT TIME ZONE, type aliases, comments holding quotes and brackets).
-All outputs were recorded before the translator's lexer was rewritten.
+The first 300 entries hold every registered oracle string, the frozen
+front-door benchmark statements (``perfbench/frontdoor_sql.py``:
+``SELECTS`` plus the DML chain for seeds 0-2), the SQL that
+``translate()`` receives while the dialect, macro, streaming and JSON test
+files run, and 40 hand-written statements for rewrite passes those sources
+never reach (BLOB literals, GLOB, AT TIME ZONE, type aliases, comments
+holding quotes and brackets); their outputs were recorded before the
+translator's lexer was rewritten. The rest make every call rule fire:
+arity probes ``SELECT <name>(<args>) FROM t`` for each call-rule name,
+with the argument lists none, ``c1``, ``c1, c2``, ``c1, c2, c3``, ``'a'``,
+``'a', 'b'`` and ``[1, 2], 1`` (a probe is kept when translate changes
+it), plus hand-written calls for the names no probe reaches; their
+outputs were recorded before call rules stopped iterating to a fixpoint.
 Inputs whose output depends on session state (registered macros,
 ``CREATE TYPE`` aliases, ATTACH, statement order) were left out; their
 own tests cover them.

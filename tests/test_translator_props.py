@@ -4,6 +4,9 @@ literal text, and the QUALIFY hoist must keep the predicate intact.
 Pure-Python (no SparkSession) — fast.
 """
 
+import re
+
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -73,3 +76,18 @@ def test_macro_body_comments_are_not_substituted():
         assert "(a) /* it's x */ + length('x') -- x\n" in out
     finally:
         macros.drop_macro("cmt_m")
+
+
+@pytest.mark.parametrize("text", [
+    "SELECT '__tof(x)' AS s",
+    "SELECT '__rr_all(s, p, r)', '__isnan(x)', '__substr(s, 1)', '__tjm(k, v)' AS s",
+    "SELECT 'array_intersect(a, b)' AS s",
+    "SELECT sign(x) -- __sig(1)\nFROM t",
+    "SELECT 1 /* __printf('%d', 1) __dtr('day', d) */ AS one",
+])
+def test_placeholder_names_in_literals_and_comments_survive(text):
+    # a name that translate() uses internally for an emitted call is only
+    # ever renamed in code, never inside a string literal or a comment
+    out = translate(text)
+    for m in re.finditer(r"'[^']*'|--[^\n]*|/\*.*?\*/", text, re.S):
+        assert m.group(0) in out
