@@ -67,6 +67,23 @@ def _table_schema(spark: SparkSession, path: str):
     return sch
 
 
+# Zone set through the front door's ``SET TimeZone``; None pins UTC.
+# ``sql.reset_dml_state`` clears it.
+FRONT_DOOR_ZONE: str | None = None
+
+
+def _pin_session(spark: SparkSession, events: bool) -> None:
+    """Session-proofing (callers may bring a vanilla SparkSession — e.g.
+    the correctness driver): timestamp LITERALS in queries parse in the
+    session timezone, and the DuckDB oracle is timezone-naive, so a
+    non-UTC session would shift every TIMESTAMP '...' comparison. Pin UTC,
+    or the zone a front-door ``SET TimeZone`` chose, at the same choke
+    point as the nanosAsLong conf that reading ``events`` needs."""
+    spark.conf.set("spark.sql.session.timeZone", FRONT_DOOR_ZONE or "UTC")
+    if events:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one star-schema table (parquet; pushdown-capable).
 
@@ -80,14 +97,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     vanilla SparkSession, which would otherwise fail the read outright with
     PARQUET_TYPE_ILLEGAL on TIMESTAMP(NANOS).
     """
-    # Session-proofing (callers may bring a vanilla SparkSession — e.g. the
-    # correctness driver): timestamp LITERALS in queries parse in the
-    # session timezone, and the DuckDB oracle is timezone-naive, so a
-    # non-UTC session would shift every TIMESTAMP '...' comparison. Pin
-    # UTC here, at the same choke point as the nanosAsLong conf.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    _pin_session(spark, name == "events")
     p = f"{sf_dir}/{name}.parquet"
     df = spark.read.schema(_table_schema(spark, p)).parquet(p)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
@@ -189,8 +199,40 @@ def maybe_broadcast(df: DataFrame, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+# (session, sf_dir, name) → (_table_mtime, the JVM temp-view relation
+# register_views created for that name).
+_REGISTERED: dict = {}
+
+
 def register_views(spark: SparkSession, sf_dir: str, tables: list[str] | None = None) -> None:
     """Register every table as a temp view so ``spark.sql`` queries see the
-    same names the DuckDB oracle uses."""
-    for name in tables or TABLES:
+    same names the DuckDB oracle uses.
+
+    Memoised per session and ``sf_dir``: a name is registered again only
+    when its parquet changed (``_table_mtime``), its view is missing, or
+    its view is no longer the relation this function registered. One JVM
+    lookup per name decides that, with no analysis and no file listing, so
+    a warm call costs milliseconds, not a rebuild of every view.
+
+    Shadowing rule: every name in ``tables`` that is not this function's
+    view is re-pointed at the catalog parquet, so a user's
+    ``createOrReplaceTempView("orders")`` is replaced on the next call.
+    The SQL front door (``sql.sql``) leaves out the names it holds itself:
+    a front-door table or view named like a catalog table (``CREATE TABLE
+    orders AS ...``) shadows the parquet until it is dropped, and the next
+    call after ``DROP TABLE orders`` brings the parquet back.
+    """
+    names = TABLES if tables is None else tables
+    _pin_session(spark, "events" in names)
+    jcat = spark._jsparkSession.sessionState().catalog()
+    for name in names:
+        try:
+            mtime = _table_mtime(f"{sf_dir}/{name}.parquet")
+        except OSError:
+            mtime = None  # load_table raises the missing path
+        key = (spark, sf_dir, name)
+        hit = _REGISTERED.get(key)
+        if hit and hit[0] == mtime and jcat.getRawTempView(name).equals(hit[1]):
+            continue
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
+        _REGISTERED[key] = (mtime, jcat.getRawTempView(name))

@@ -50,7 +50,7 @@ from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from myduckdb_spark.catalog import register_views
+from myduckdb_spark.catalog import TABLES, register_views
 
 # ------------------------------------------------------------------ lexer
 #
@@ -2171,6 +2171,8 @@ def _rewrite_in_subquery(text: str) -> str:
             if not re.match(r"(SELECT|WITH|VALUES)\b", inner, re.I):
                 continue
             close_idx = _matching(text, open_idx, mask)
+            if close_idx < 0:  # unbalanced: leave the site alone
+                continue
             # observable-as-value context 1: ... ) IS [NOT] NULL
             after = text[close_idx + 1 :]
             adjacency = re.match(r"\s*\)?\s*IS\s+(NOT\s+)?NULL", after, re.I)
@@ -2210,7 +2212,8 @@ def _rewrite_any_all(text: str) -> str:
     while True:
         mask = _code_mask(text)
         m = next((c for c in _code_matches(_ANYALL, text, mask=mask)
-                  if re.match(r"(SELECT|WITH|VALUES)\b", text[c.end():].lstrip(), re.I)),
+                  if re.match(r"(SELECT|WITH|VALUES)\b", text[c.end():].lstrip(), re.I)
+                  and _matching(text, c.end() - 1, mask) >= 0),
                  None)
         if m is None:
             return text
@@ -2370,9 +2373,10 @@ def _inline_named_windows(text: str) -> str:
     the extension form (inheriting a named window inside a new spec), and
     the EXCLUDE expansion needs the full inlined spec to derive peer keys
     — so both forms are substituted and the WINDOW clause removed."""
+    start = 0
     while True:
         mask = _code_mask(text)
-        m = next(_code_matches(_WINDOW_CLAUSE, text, mask=mask), None)
+        m = next(_code_matches(_WINDOW_CLAUSE, text, pos=start, mask=mask), None)
         if m is None:
             return text
         # parse the comma-separated definition list: name AS (spec) [, ...]
@@ -2382,16 +2386,21 @@ def _inline_named_windows(text: str) -> str:
         name = m.group(1)
         while True:
             close = _matching(text, pos, mask)
+            if close < 0:
+                break
             defs[name] = text[pos + 1 : close].strip()
             nxt = re.match(
                 r"\s*,\s*([A-Za-z_]\w*)\s+AS\s*\(", text[close + 1 :], re.I
             )
             if not nxt:
-                clause_end = close + 1
                 break
             name = nxt.group(1)
             pos = close + 1 + nxt.end() - 1
-        text = text[:i] + text[clause_end:]
+        if close < 0:  # an unbalanced definition: leave the clause alone
+            start = m.end()
+            continue
+        start = 0
+        text = text[:i] + text[close + 1:]
         for nm, spec in defs.items():
             # extension form: OVER (w <more>) — splice the spec in front
             text = re.sub(
@@ -5612,6 +5621,9 @@ def reset_dml_state(spark: SparkSession) -> None:
 
     for n in _macros.macro_names():
         _macros.drop_macro(n)
+    from myduckdb_spark import catalog
+
+    catalog.FRONT_DOOR_ZONE = None
     try:  # a corpus file's SET TimeZone must not leak into the next file
         spark.conf.set("spark.sql.session.timeZone", "UTC")
     except Exception:
@@ -5674,9 +5686,29 @@ def _txn_rollback(spark: SparkSession) -> None:
     _PREPARED.update(txn["prepared"])
 
 
+def _rows_df(spark: SparkSession, rows: list[tuple], schema) -> DataFrame:
+    """A command's result rows (``schema``: a StructType or DDL string) as
+    a JVM-local relation. The rows travel to the JVM as one Arrow batch, so
+    running the result starts no Python worker; a list of Python rows
+    would become a Python RDD that starts one. Same schema, nullability
+    included."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
+
+
 def _count_df(spark: SparkSession, n: int) -> DataFrame:
     # DuckDB DML returns a single-column `Count` result
-    return spark.createDataFrame([(n,)], "Count bigint")
+    return _rows_df(spark, [(n,)], "Count bigint")
 
 
 # name → (duckdb-dialect SELECT text, optional column aliases). Views
@@ -8014,7 +8046,7 @@ def _dml_statement(spark: SparkSession, text: str) -> DataFrame | None:
             seq = _seq_store().get(sname)
             vals.append(seq.nextval() if kind == "next" else seq.currval())
             cols.append(alias or f"{kind}val('{sname}')")
-        return spark.createDataFrame([tuple(vals)], ", ".join(f"`{c}` bigint" for c in cols))
+        return _rows_df(spark, [tuple(vals)], ", ".join(f"`{c}` bigint" for c in cols))
     m = _EXPORT_DB.match(text)
     if m:
         if not _MANAGED:
@@ -8100,13 +8132,15 @@ def _describe_statement(spark: SparkSession, text: str) -> DataFrame | None:
     from pyspark.sql import types as T
 
     if _SHOW_TABLES.match(text):
-        return spark.createDataFrame(
+        return _rows_df(
+            spark,
             [(n,) for n in _catalog_names(spark)], "name string"
         )
     if re.match(r"^\s*SHOW\s+DATABASES\s*;?\s*$", text, re.I):
         from myduckdb_spark import infoschema as ischema
 
-        return spark.createDataFrame(
+        return _rows_df(
+            spark,
             sorted((r[0],) for r in ischema.database_rows() if not r[1]),
             "database_name string",
         )
@@ -8128,7 +8162,8 @@ def _describe_statement(spark: SparkSession, text: str) -> DataFrame | None:
                     False,
                 )
             )
-        return spark.createDataFrame(
+        return _rows_df(
+            spark,
             rows,
             T.StructType(
                 [
@@ -8152,7 +8187,7 @@ def _describe_statement(spark: SparkSession, text: str) -> DataFrame | None:
             (f.name, _duck_field_type(f), "YES", None, None, None)
             for f in df.schema.fields
         ]
-        return spark.createDataFrame(rows, _DESCRIBE_SCHEMA)
+        return _rows_df(spark, rows, _DESCRIBE_SCHEMA)
     m = _DESCRIBE_TBL.match(text)
     if m and not re.match(
         r"\s*SHOW\s+(TABLES|DATABASES|SCHEMAS|FUNCTIONS|VARIABLES|ALL)\b",
@@ -8179,7 +8214,7 @@ def _describe_statement(spark: SparkSession, text: str) -> DataFrame | None:
                 (f.name, _duck_field_type(f), null, key,
                  str(dflt) if dflt is not None else None, None)
             )
-        return spark.createDataFrame(rows, _DESCRIBE_SCHEMA)
+        return _rows_df(spark, rows, _DESCRIBE_SCHEMA)
     return None
 
 
@@ -8218,7 +8253,8 @@ def _bind_information_schema(spark: SparkSession, text: str) -> str:
     if not used and not has_dc and not has_db:
         return text
     if has_dc:
-        spark.createDataFrame(
+        _rows_df(
+            spark,
             ischema.duckdb_constraints_rows(),
             ischema.DUCKDB_CONSTRAINTS_DDL,
         ).createOrReplaceTempView("__duckdb_constraints")
@@ -8227,7 +8263,8 @@ def _bind_information_schema(spark: SparkSession, text: str) -> str:
             "__duckdb_constraints", text, flags=re.I,
         )
     if has_db:
-        spark.createDataFrame(
+        _rows_df(
+            spark,
             ischema.database_rows(), ischema.DUCKDB_DATABASES_DDL,
         ).createOrReplaceTempView("__duckdb_databases_all")
         # the bare name is the system VIEW (default_views.cpp):
@@ -8262,7 +8299,8 @@ def _bind_information_schema(spark: SparkSession, text: str) -> str:
                  else "BASE TABLE",
                  None, None, None, None, None, "YES", "NO", None)
             )
-        spark.createDataFrame(
+        _rows_df(
+            spark,
             rows,
             "table_catalog string, table_schema string, table_name string,"
             " table_type string, self_referencing_column_name string, "
@@ -8309,7 +8347,8 @@ def _bind_information_schema(spark: SparkSession, text: str) -> str:
                      str(dflt) if dflt is not None else None,
                      "YES" if f.nullable else "NO", dt, p, s)
                 )
-        spark.createDataFrame(
+        _rows_df(
+            spark,
             crows,
             "table_catalog string, table_schema string, table_name string, "
             "column_name string, ordinal_position int, column_default "
@@ -8342,7 +8381,7 @@ def _bind_information_schema(spark: SparkSession, text: str) -> str:
     }
     for name, (rows, ddl) in static_views.items():
         if name in used:
-            spark.createDataFrame(rows, ddl).createOrReplaceTempView(
+            _rows_df(spark, rows, ddl).createOrReplaceTempView(
                 f"__is_{name}"
             )
     return re.sub(
@@ -8379,7 +8418,7 @@ def _bind_pg_catalog(spark: SparkSession, text: str) -> str:
     }
     for name in used:
         rows, ddl = builders[name]
-        spark.createDataFrame(rows, ddl).createOrReplaceTempView(
+        _rows_df(spark, rows, ddl).createOrReplaceTempView(
             f"__pg_{name}"
         )
     return re.sub(
@@ -8453,7 +8492,7 @@ def _bind_duckdb_tvfs(spark: SparkSession, text: str) -> str:
         )
 
     def _reg_view(name: str, rows: list[tuple], ddl: str) -> None:
-        spark.createDataFrame(rows, ddl).createOrReplaceTempView(
+        _rows_df(spark, rows, ddl).createOrReplaceTempView(
             f"__{name}"
         )
 
@@ -8754,7 +8793,8 @@ def _statement_command(spark: SparkSession, text: str) -> DataFrame | None:
             # session ordering defaults live in SETTINGS (translate()
             # consults them for ORDER BY ALL and window null pinning)
             SETTINGS[name.lower()] = raw.lower()
-            return spark.createDataFrame(
+            return _rows_df(
+                spark,
                 [(name, raw)], "name string, value string"
             )
         if name.lower() in ("search_path", "schema"):
@@ -8785,15 +8825,21 @@ def _statement_command(spark: SparkSession, text: str) -> DataFrame | None:
                         f'named "{e}" found.'
                     )
             SETTINGS["search_path"] = ",".join(entries)
-            return spark.createDataFrame(
+            return _rows_df(
+                spark,
                 [(name, ",".join(entries))], "name string, value string"
             )
         if name.lower() == "timezone":
             # the reference's SET TimeZone drives naive<->instant casts;
-            # Spark's session timeZone is the same knob (reset_dml_state
-            # restores the UTC default between corpus files)
+            # Spark's session timeZone is the same knob. The catalog's
+            # session pin keeps it (reset_dml_state restores the UTC
+            # default between corpus files)
+            from myduckdb_spark import catalog
+
             spark.conf.set("spark.sql.session.timeZone", raw)
-            return spark.createDataFrame(
+            catalog.FRONT_DOOR_ZONE = raw
+            return _rows_df(
+                spark,
                 [(name, raw)], "name string, value string"
             )
         if "." in name:  # dotted → Spark conf (e.g. spark.sql.shuffle.partitions)
@@ -8802,7 +8848,7 @@ def _statement_command(spark: SparkSession, text: str) -> DataFrame | None:
             from myduckdb_spark.config import set_option
 
             set_option(name, raw)
-        return spark.createDataFrame([(name, raw)], "name string, value string")
+        return _rows_df(spark, [(name, raw)], "name string, value string")
     d = _describe_statement(spark, text)
     if d is not None:
         return d
@@ -8813,7 +8859,8 @@ def _statement_command(spark: SparkSession, text: str) -> DataFrame | None:
             (i, f.name, f.dataType.simpleString(), not f.nullable, None, False)
             for i, f in enumerate(fields)
         ]
-        return spark.createDataFrame(
+        return _rows_df(
+            spark,
             rows, "cid int, name string, type string, notnull boolean, "
             "dflt_value string, pk boolean"
         )
@@ -8827,7 +8874,8 @@ def _statement_command(spark: SparkSession, text: str) -> DataFrame | None:
             ._jdf.queryExecution()
             .explainString(spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
         )
-        return spark.createDataFrame(
+        return _rows_df(
+            spark,
             [("physical_plan", plan)], "explain_key string, explain_value string"
         )
     return None
@@ -9499,7 +9547,10 @@ def sql(
     plan is rebuilt per call — Spark has no plan cache to reuse, which is
     acceptable (Catalyst re-optimization is cheap relative to execution)."""
     if sf_dir:
-        register_views(spark, sf_dir)
+        # front-door tables and views shadow catalog names of the same
+        # spelling (the rule is documented in catalog.register_views)
+        held = {n.lower() for n in (*_MANAGED, *_VIEWS)}
+        register_views(spark, sf_dir, [t for t in TABLES if t not in held])
     parts = _split_statements(text)
     if len(parts) > 1:
         # multi-statement script (DuckDB executes these in one call;

@@ -19,10 +19,10 @@ manifest naming the live files (with row counts). DML never mutates a
 file — the copy-on-write pattern used by Delta Lake / Iceberg:
 
 1. *Touched-file discovery is a distributed job*: scan the live files
-   with the predicate and project only ``input_file_name()``. Predicate
-   pushdown + parquet zone maps prune row groups JVM-side; the driver
-   receives at most one row per touched file (bounded by #files, never
-   by #rows).
+   with the predicate and count matches per ``input_file_name()``.
+   Predicate pushdown + parquet zone maps prune row groups JVM-side; the
+   driver receives at most one row per touched file (bounded by #files,
+   never by #rows), and UPDATE takes its row count from the same rows.
 2. Only touched files are rewritten (DELETE: ``filter(NOT pred)``;
    UPDATE: ``CASE WHEN pred THEN expr ELSE col END`` per assignment,
    cast back to the column's original type so the schema never drifts).
@@ -31,6 +31,12 @@ file — the copy-on-write pattern used by Delta Lake / Iceberg:
 3. The manifest swap is atomic (write-new + ``os.replace``), and prior
    manifests are retained (``manifest.v{N}.json``) so earlier versions
    remain scannable — snapshot reads fall out of copy-on-write for free.
+4. Every read of a table's files pins the schema of its probe file (the
+   first file written with the table's current physical schema), taken
+   from ``catalog._table_schema``'s (path, mtime) cache. Files are
+   immutable, so the schema is inferred once per probe instead of by a
+   Spark job on every scan, and the field order cannot drift between
+   reads. Commits keep the probe until a schema change rewrites the data.
 
 Sequences are driver-side counters persisted with the same atomic-swap
 discipline — exactly the single point of serialization the reference
@@ -54,6 +60,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from myduckdb_spark.catalog import _table_schema
 from myduckdb_spark.operators.joins import _number_rows
 
 _MANIFEST = "manifest.json"
@@ -118,26 +125,27 @@ class ManagedTable:
     def version(self) -> int:
         return self._manifest()["version"]
 
-    def scan(self, version: int | None = None) -> DataFrame:
-        """DataFrame over the live files (or a retained prior version).
+    def _reader(self):
+        """A parquet reader of the table's files with the probe file's
+        schema pinned: no inference job, and multi-file reads cannot infer
+        the schema from a nondeterministically-sampled file (field order
+        must never drift across scans — DML rewrites re-read these files
+        and write new ones, so drift would compound)."""
+        probe = self._manifest().get("schema_probe")
+        if not probe:
+            raise ValueError("empty table with no schema probe")
+        return self.spark.read.schema(_table_schema(self.spark, probe))
 
-        The read pins an EXPLICIT schema (from the schema probe file):
-        multi-file parquet unions otherwise infer/merge the schema from a
-        nondeterministically-sampled file, and the resulting field order
-        must never drift across scans (DML rewrites re-read these files
-        and write new ones — order drift would compound)."""
+    def scan(self, version: int | None = None) -> DataFrame:
+        """DataFrame over the live files (or a retained prior version)."""
         m = self._manifest(version)
         files = m["files"]
-        probe = self._manifest().get("schema_probe")
+        read = self._reader()
         if not files:
-            # empty table: scan any known snapshot for schema, keep 0 rows
-            if probe:
-                df = self.spark.read.parquet(probe).limit(0)
-            else:
-                raise ValueError("empty table with no schema probe")
+            # empty table: read the probe for its schema, keep 0 rows
+            df = read.parquet(self._manifest()["schema_probe"]).limit(0)
         else:
             paths = [f["path"] for f in files]
-            schema = self.spark.read.parquet(probe or paths[0]).schema
             if len(paths) <= 64:
                 # manifest-ordered scan: Spark's multi-path read packs
                 # splits LARGEST-FIRST, so row order would drift from
@@ -150,13 +158,9 @@ class ManagedTable:
                 # scan (scale path) takes over.
                 from functools import reduce
 
-                df = reduce(
-                    DataFrame.union,
-                    [self.spark.read.schema(schema).parquet(p)
-                     for p in paths],
-                )
+                df = reduce(DataFrame.union, [read.parquet(p) for p in paths])
             else:
-                df = self.spark.read.schema(schema).parquet(*paths)
+                df = read.parquet(*paths)
         # pending ALTER stages (metadata-only schema evolution) apply as
         # projections over the pinned-schema file read
         for stage in m.get("projections", []):
@@ -180,7 +184,7 @@ class ManagedTable:
 
     def _commit(self, version: int, files: list[dict]) -> None:
         cur = self._manifest() if os.path.exists(self._manifest_path()) else {}
-        probe = files[0]["path"] if files else cur.get("schema_probe")
+        probe = cur.get("schema_probe") or (files[0]["path"] if files else None)
         m = {"version": version, "files": files, "schema_probe": probe}
         if cur.get("key"):
             m["key"] = cur["key"]
@@ -438,7 +442,7 @@ class ManagedTable:
                 self._commit(cur["version"] + 1, cur["files"] + new_files)
                 return n_fresh
             keep = [f for f in cur["files"] if f["path"] not in touched]
-            src = self.spark.read.parquet(*sorted(touched))
+            src = self._reader().parquet(*sorted(touched))
             types = dict(src.dtypes)
             exc = df.select(
                 *[F.col(c).alias(f"__exc_{c}") for c in df.columns],
@@ -470,20 +474,22 @@ class ManagedTable:
 
     # -- DML ----------------------------------------------------------------
 
-    def _touched_files(self, pred: str, alias: str | None = None) -> set[str]:
+    def _touched_files(self, pred: str, alias: str | None = None) -> dict[str, int]:
         """Distributed touched-file discovery: pushdown scan projecting
-        only input_file_name(); driver receives ≤ one row per file."""
+        only input_file_name(), one aggregate counting the matching rows
+        per file; the driver receives ≤ one row per file."""
         scan = self.scan()
         if alias:
             scan = scan.alias(alias)
         rows = (
             scan.filter(F.expr(pred))
             .select(F.input_file_name().alias("f"))
-            .distinct()
+            .groupBy("f")
+            .count()
             .collect()
         )
         # input_file_name returns a URI (file:///...); manifest holds paths
-        return {re.sub(r"^file:/+", "/", r["f"]) for r in rows}
+        return {re.sub(r"^file:/+", "/", r["f"]): r["count"] for r in rows}
 
     def delete(self, pred: str, alias: str | None = None) -> int:
         """DELETE FROM t WHERE pred. Returns #rows deleted. Only files
@@ -497,7 +503,7 @@ class ManagedTable:
             return 0
         keep = [f for f in cur["files"] if f["path"] not in touched]
         touched_rows = sum(f["rows"] for f in cur["files"] if f["path"] in touched)
-        survivors = self.spark.read.parquet(*sorted(touched))
+        survivors = self._reader().parquet(*sorted(touched))
         if alias:
             survivors = survivors.alias(alias)
         # DELETE removes rows where pred is TRUE; a NULL predicate keeps
@@ -535,7 +541,7 @@ class ManagedTable:
         if not touched:
             return 0
         keep = [f for f in cur["files"] if f["path"] not in touched]
-        src = self.spark.read.parquet(*sorted(touched))
+        src = self._reader().parquet(*sorted(touched))
         types = dict(src.dtypes)
         unknown = set(assignments) - set(types)
         if unknown:
@@ -551,10 +557,9 @@ class ManagedTable:
                 for c in src.columns
             ]
         )
-        n_updated = src.filter(F.expr(pred)).count()
         new = self._write_snapshot(updated)
         self._commit(cur["version"] + 1, keep + new)
-        return n_updated
+        return sum(touched.values())
 
     def update_from(
         self,

@@ -1,0 +1,247 @@
+"""Fixed per-statement costs of the SQL front door, and the session state
+that makes them one-off.
+
+* ``catalog.register_views`` is memoised per session: a warm statement
+  starts no Spark job and loads no table, while a changed parquet file, a
+  dropped view or a user's re-pointed view is registered again.
+* Shadowing: a front-door table or view named like a catalog table
+  shadows the parquet until it is dropped.
+* ``SET TimeZone`` through the front door survives later statements.
+* Command results (DML counts, SET, PRAGMA, DESCRIBE, EXPLAIN,
+  information_schema rows) are JVM-local relations with the schema and
+  rows the Python-row path gave.
+* Copy-on-write DML pins the probe schema and finds UPDATE's touched
+  files and row count in one aggregate.
+"""
+
+import contextlib
+import os
+import re
+import shutil
+import uuid
+
+import duckdb
+import pyarrow.parquet as pq
+import pytest
+
+from myduckdb_spark import catalog
+from myduckdb_spark import sql as S
+
+
+def _rows(spark, q, sf_dir=None):
+    return [tuple(r) for r in S.sql(spark, q, sf_dir).collect()]
+
+
+@contextlib.contextmanager
+def _jobs(spark):
+    """Collect the ids of the Spark jobs started inside the block."""
+    sc = spark.sparkContext
+    gid = f"test-{uuid.uuid4().hex}"
+    sc.setJobGroup(gid, gid)
+    ids: list[int] = []
+    try:
+        yield ids
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        ids.extend(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+def _parquet_rows(sf_dir, name):
+    return pq.ParquetFile(f"{sf_dir}/{name}.parquet").metadata.num_rows
+
+
+# ------------------------------------------------------------ view memo
+
+
+def test_warm_statement_starts_no_job_and_loads_no_table(spark, sf_dir, monkeypatch):
+    S.sql(spark, "SELECT 1 AS x", sf_dir)
+    loads = []
+    real = catalog.load_table
+    monkeypatch.setattr(
+        catalog, "load_table", lambda *a: loads.append(a[2]) or real(*a)
+    )
+    with _jobs(spark) as ids:
+        S.sql(spark, "SELECT 1 AS x", sf_dir)
+    assert ids == []
+    assert loads == []
+
+
+def test_user_temp_view_is_repointed(spark, sf_dir):
+    S.sql(spark, "SELECT 1 AS x", sf_dir)
+    spark.range(3).toDF("r_regionkey").createOrReplaceTempView("region")
+    got = _rows(spark, "SELECT count(*) FROM region", sf_dir)
+    assert got == [(_parquet_rows(sf_dir, "region"),)]
+
+
+def test_dropped_catalog_view_is_registered_again(spark, sf_dir):
+    S.sql(spark, "SELECT 1 AS x", sf_dir)
+    spark.catalog.dropTempView("nation")
+    got = _rows(spark, "SELECT count(*) FROM nation", sf_dir)
+    assert got == [(_parquet_rows(sf_dir, "nation"),)]
+
+
+def test_rewritten_parquet_is_picked_up(spark, sf_dir, tmp_path):
+    d = str(tmp_path / "sf")
+    shutil.copytree(sf_dir, d)
+    try:
+        n = _parquet_rows(d, "region")
+        assert _rows(spark, "SELECT count(*) FROM region", d) == [(n,)]
+        p = f"{d}/region.parquet"
+        pq.write_table(pq.read_table(p).slice(0, 2), p)
+        st = os.stat(p)
+        os.utime(p, (st.st_atime, st.st_mtime + 10))
+        assert _rows(spark, "SELECT count(*) FROM region", d) == [(2,)]
+    finally:
+        catalog.register_views(spark, sf_dir)
+
+
+# ------------------------------------------------------------ shadowing
+
+
+def test_ctas_of_catalog_name_shadows_until_dropped(spark, sf_dir):
+    try:
+        S.sql(spark, "CREATE TABLE orders AS SELECT 42 AS o_orderkey", sf_dir)
+        assert _rows(spark, "SELECT o_orderkey FROM orders", sf_dir) == [(42,)]
+        S.sql(spark, "INSERT INTO orders VALUES (43)", sf_dir)
+        got = _rows(spark, "SELECT o_orderkey FROM orders ORDER BY 1", sf_dir)
+        assert got == [(42,), (43,)]
+        assert _rows(spark, "SELECT count(*) FROM orders") == [(2,)]
+    finally:
+        S.sql(spark, "DROP TABLE IF EXISTS orders")
+    got = _rows(spark, "SELECT count(*) FROM orders", sf_dir)
+    assert got == [(_parquet_rows(sf_dir, "orders"),)]
+
+
+def test_front_door_view_of_catalog_name_shadows_until_dropped(spark, sf_dir):
+    try:
+        S.sql(spark, "CREATE VIEW region AS SELECT 7 AS r_regionkey", sf_dir)
+        assert _rows(spark, "SELECT r_regionkey FROM region", sf_dir) == [(7,)]
+    finally:
+        S.sql(spark, "DROP VIEW IF EXISTS region")
+    got = _rows(spark, "SELECT count(*) FROM region", sf_dir)
+    assert got == [(_parquet_rows(sf_dir, "region"),)]
+
+
+# ------------------------------------------------------------ time zone
+
+
+def test_set_timezone_survives_next_statement(spark, sf_dir):
+    try:
+        S.sql(spark, "SET TimeZone = 'America/New_York'", sf_dir)
+        S.sql(spark, "SELECT 1 AS x", sf_dir)
+        assert spark.conf.get("spark.sql.session.timeZone") == "America/New_York"
+    finally:
+        S.reset_dml_state(spark)
+    assert catalog.FRONT_DOOR_ZONE is None
+    S.sql(spark, "SELECT 1 AS x", sf_dir)
+    assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+
+
+# ------------------------------------------------------------ command results
+
+
+@pytest.fixture()
+def parity_state(spark, sf_dir, monkeypatch):
+    monkeypatch.setattr(catalog, "FRONT_DOOR_ZONE", None)
+    S.sql(spark, "CREATE OR REPLACE TABLE pt_t (k INTEGER PRIMARY KEY, s VARCHAR, d DATE)", sf_dir)
+    S.sql(spark, "CREATE OR REPLACE SEQUENCE pt_seq START 3")
+    S.sql(spark, "SELECT nextval('pt_seq') AS v")
+    yield
+    S.sql(spark, "DROP TABLE IF EXISTS pt_t")
+    S.sql(spark, "DROP TABLE IF EXISTS pt_c")
+    S.sql(spark, "DROP SEQUENCE pt_seq")
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+
+@pytest.mark.parametrize("stmt", [
+    "CREATE OR REPLACE TABLE pt_c AS SELECT 1 AS a",
+    "SET TimeZone = 'UTC'",
+    "SET spark.sql.shuffle.partitions = 8",
+    "PRAGMA table_info('region')",
+    "DESCRIBE SELECT 1 AS a, 'x' AS b",
+    "DESCRIBE pt_t",
+    "DESCRIBE",
+    "SHOW TABLES",
+    "SHOW DATABASES",
+    "EXPLAIN SELECT 1 AS a",
+    "SELECT currval('pt_seq') AS c",
+    "SELECT table_name, table_type FROM information_schema.tables ORDER BY 1",
+    "SELECT column_name, data_type, is_nullable FROM information_schema.columns "
+    "WHERE table_name = 'pt_t' ORDER BY ordinal_position",
+    "SELECT table_name, column_count, tags FROM duckdb_tables() ORDER BY 1",
+    "SELECT * FROM duckdb_constraints() ORDER BY constraint_index",
+])
+def test_command_result_is_jvm_local_with_unchanged_schema(spark, sf_dir, parity_state,
+                                                           monkeypatch, stmt):
+    def collected(df):
+        rows = [tuple(r) for r in df.collect()]
+        return [tuple(re.sub(r"#\d+L?", "#", v) if isinstance(v, str) else v
+                      for v in r) for r in rows]
+
+    new = S.sql(spark, stmt, sf_dir)
+    new_schema, new_rows = new.schema, collected(new)
+    with monkeypatch.context() as m:
+        m.setattr(S, "_rows_df", lambda sp, rows, schema: sp.createDataFrame(rows, schema))
+        old = S.sql(spark, stmt, sf_dir)
+        old_schema, old_rows = old.schema, collected(old)
+    assert new_schema == old_schema  # names, types, nullability, metadata
+    assert new_rows == old_rows
+    assert "ExistingRDD" not in new._jdf.queryExecution().executedPlan().toString()
+
+
+# ------------------------------------------------------------ DML
+
+
+def test_dml_result_runs_one_job_without_python_rdd(spark, sf_dir):
+    try:
+        S.sql(spark, "CREATE OR REPLACE TABLE jr_t AS SELECT n_nationkey FROM nation", sf_dir)
+        res = S.sql(spark, "INSERT INTO jr_t VALUES (90), (91)", sf_dir)
+        plan = res._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+        with _jobs(spark) as ids:
+            res.write.mode("overwrite").format("noop").save()
+        assert len(ids) == 1
+        assert res.collect()[0]["Count"] == 2
+    finally:
+        S.sql(spark, "DROP TABLE IF EXISTS jr_t")
+
+
+def test_update_on_one_file_table_starts_at_most_three_jobs(spark, sf_dir):
+    try:
+        S.sql(spark, "CREATE OR REPLACE TABLE up_t AS "
+                     "SELECT o_orderkey, o_totalprice FROM orders", sf_dir)
+        assert len(S._MANAGED["up_t"]._manifest()["files"]) == 1
+        with _jobs(spark) as ids:
+            res = S.sql(spark, "UPDATE up_t SET o_totalprice = 0 "
+                               "WHERE o_orderkey % 3 = 1", sf_dir)
+        assert len(ids) <= 3
+        assert len(S._MANAGED["up_t"]._manifest()["files"]) == 1
+        want = _rows(spark, "SELECT count(*) FROM orders WHERE o_orderkey % 3 = 1", sf_dir)
+        assert [(res.collect()[0]["Count"],)] == want
+    finally:
+        S.sql(spark, "DROP TABLE IF EXISTS up_t")
+
+
+def test_dml_counts_match_duckdb(spark, sf_dir):
+    con = duckdb.connect()
+    con.sql(f"CREATE TABLE src AS SELECT * FROM '{sf_dir}/orders.parquet'")
+    stmts = [
+        "CREATE OR REPLACE TABLE cnt_t AS SELECT o_orderkey, o_totalprice, "
+        "o_orderpriority FROM {src} WHERE o_orderkey % 3 = 0",
+        "INSERT INTO cnt_t VALUES (900001, 1.5, '2-HIGH'), (900002, 2.5, '1-URGENT')",
+        "UPDATE cnt_t SET o_totalprice = o_totalprice + 1, o_orderpriority = '3-MEDIUM' "
+        "WHERE o_orderkey % 7 = 2",
+        "DELETE FROM cnt_t WHERE o_orderkey % 5 = 1",
+        "UPDATE cnt_t SET o_totalprice = 0 WHERE o_orderkey < 0",
+        "DELETE FROM cnt_t WHERE o_orderkey < 0",
+    ]
+    try:
+        for st in stmts:
+            got = S.sql(spark, st.format(src="orders"), sf_dir).collect()[0]["Count"]
+            want = con.execute(st.format(src="src")).fetchall()[0][0]
+            assert got == want, st
+        q = "SELECT count(*), CAST(sum(o_totalprice * 100) AS BIGINT) FROM cnt_t"
+        assert _rows(spark, q, sf_dir) == con.sql(q).fetchall()
+    finally:
+        S.sql(spark, "DROP TABLE IF EXISTS cnt_t")

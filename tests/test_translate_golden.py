@@ -15,7 +15,10 @@ with the argument lists none, ``c1``, ``c1, c2``, ``c1, c2, c3``, ``'a'``,
 ``'a', 'b'`` and ``[1, 2], 1`` (a probe is kept when translate changes
 it), plus hand-written calls for the names no probe reaches; their
 outputs were recorded before call rules stopped iterating to a fixpoint.
-Inputs whose output depends on session state (registered macros,
+The last three are truncated statements with an unclosed bracket at an
+IN-subquery, a quantified comparison and a WINDOW definition; they hung
+until those passes learned to skip an unbalanced site, and their outputs
+(the input unchanged) were recorded then. Inputs whose output depends on session state (registered macros,
 ``CREATE TYPE`` aliases, ATTACH, statement order) were left out; their
 own tests cover them.
 

@@ -5,6 +5,9 @@ Pure-Python (no SparkSession) — fast.
 """
 
 import re
+import subprocess
+import sys
+from pathlib import Path
 
 import pytest
 from hypothesis import given, settings
@@ -91,3 +94,26 @@ def test_placeholder_names_in_literals_and_comments_survive(text):
     out = translate(text)
     for m in re.finditer(r"'[^']*'|--[^\n]*|/\*.*?\*/", text, re.S):
         assert m.group(0) in out
+
+
+@pytest.mark.parametrize("text", [
+    "SELECT 1 NOT IN (SELECT i FROM in",
+    "SELECT sum(x) OVER w FROM t WINDOW w AS (PARTITION BY g ORDER BY ",
+    "SELECT 1 = ANY (SELECT i FROM t",
+])
+def test_unbalanced_subquery_and_window_sites_return(text):
+    # an unclosed bracket at an IN-subquery, quantified comparison or
+    # WINDOW definition leaves that site alone instead of re-inserting the
+    # text forever. A subprocess with a timeout turns a hang into a
+    # failure instead of a stalled suite.
+    code = (
+        "import sys\n"
+        "from myduckdb_spark.sql import translate\n"
+        "sys.stdout.write(translate(sys.stdin.read()))\n"
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", code], input=text, capture_output=True,
+        text=True, cwd=Path(__file__).resolve().parents[1], timeout=60,
+    )
+    assert proc.returncode == 0, proc.stderr
+    assert proc.stdout == text
