@@ -56,11 +56,11 @@ def main() -> None:
     from myduckdb_spark.session import get_spark
 
     spark = get_spark("bench")
-    # bench variants: identical query shapes with plain-double float
-    # aggregation on BOTH engines (the registered builders decimal-cast
-    # those aggregates solely for the driver's exact hash-compare —
+    # derived float variants: identical query shapes with plain-double
+    # float aggregation on BOTH engines (the registered builders decimal-
+    # cast those aggregates solely for the driver's exact hash-compare —
     # ~4x slower and not what a user of either engine writes; see
-    # queries/bench_variants.py). Correctness always runs the exact pair.
+    # queries.bench_queries). Correctness always runs the exact pair.
     bq = q.bench_queries()
     all_q = {n: b for n, (b, _o) in bq.items()}
     oracles = {n: o for n, (_b, o) in bq.items() if o is not None}

@@ -48,8 +48,8 @@ def dot_scaled_long_expr(a: str, b: str) -> F.Column:
 
 # Probe-count cap for the Arrow/numpy scoring path: probes are collected
 # to the driver and broadcast as one float64 matrix (cap·dim·8 bytes —
-# 64 dims → 32 MB at the cap). Above it (or on an exotic corpus the
-# vectorized kernel cannot score bit-exactly) the pure-JVM HOF path runs.
+# 64 dims → 32 MB at the cap). Above it (or on probes without one shared
+# dimension) the pure-JVM HOF path runs.
 _NUMPY_SCORE_MAX_PROBES = 65536
 # ... and a FLOOR on the expected pair count: the numpy path pays a fixed
 # ~0.3-0.5s (probe-collect job + Python worker spin-up + Arrow traffic),
@@ -99,14 +99,22 @@ def _numpy_pair_dots(c: DataFrame, probe_rows, dim: int) -> DataFrame:
             nid = batch.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
             emb = batch.column(1)
             cn = batch.column(2).to_numpy(zero_copy_only=False).astype(np.float64)
-            lens = np.diff(emb.offsets.to_numpy(zero_copy_only=False))
-            if emb.null_count or (lens != d).any():
-                # ragged/null vectors: zip_with would NULL-pad → NULL dot;
-                # such corpora take the JVM path (builders gate on shape),
-                # so refuse loudly rather than silently diverge
-                raise ValueError("numpy scoring path requires dense fixed-dim vectors")
-            cm = np.asarray(emb.flatten().to_numpy(zero_copy_only=False),
-                            dtype=np.float64).reshape(len(nid), d)
+            offs = emb.offsets.to_numpy(zero_copy_only=False)
+            lens = np.diff(offs)
+            ok = None
+            if emb.null_count or emb.values.null_count or (lens != d).any():
+                # null, ragged or null-element vectors: zip_with NULL-pads
+                # or meets a NULL element → the JVM dot is NULL. Score the
+                # well-formed rows and mask the rest to a NULL dot.
+                ok = ~emb.is_null().to_numpy(zero_copy_only=False) & (lens == d)
+                idx = offs[:-1][:, None] + np.arange(d)
+                vals = emb.values
+                ok[ok] = ~vals.is_null().to_numpy(zero_copy_only=False)[idx[ok]].any(axis=1)
+                cm = np.zeros((len(nid), d), dtype=np.float64)
+                cm[ok] = vals.to_numpy(zero_copy_only=False)[idx[ok]]
+            else:
+                cm = np.asarray(emb.flatten().to_numpy(zero_copy_only=False),
+                                dtype=np.float64).reshape(len(nid), d)
             for lo in range(0, len(nid), chunk):
                 cc = cm[lo:lo + chunk]
                 b = len(cc)
@@ -128,7 +136,10 @@ def _numpy_pair_dots(c: DataFrame, probe_rows, dim: int) -> DataFrame:
                     [
                         pa.array(np.tile(b_pid, b), type=pa.int64()),
                         pa.array(np.repeat(nid[lo:lo + chunk], p_cnt), type=pa.int64()),
-                        pa.array(dots.reshape(-1), type=pa.int64()),
+                        pa.array(
+                            dots.reshape(-1), type=pa.int64(),
+                            mask=None if ok is None else np.repeat(~ok[lo:lo + chunk], p_cnt),
+                        ),
                         pa.array(np.tile(b_pn, b), type=pa.float64()),
                         pa.array(np.repeat(cn[lo:lo + chunk], p_cnt), type=pa.float64()),
                     ],

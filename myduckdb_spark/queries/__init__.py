@@ -20,6 +20,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from myduckdb_spark.cacheutil import release_tracked
+from myduckdb_spark.functions.compat import float_mode, float_sql
 
 Builder = Callable[[SparkSession, str], DataFrame]
 
@@ -44,14 +45,6 @@ class QueryDef:
     builder: Builder
     oracle: str | None  # DuckDB SQL; None → driver runs rows-only check
     tags: tuple[str, ...] = ()
-    # production-realistic variant for BENCHMARKING only: identical query
-    # semantics, but float aggregates sum plain doubles on BOTH engines.
-    # The registered builder/oracle decimal-cast those aggregates purely
-    # so the driver's exact hash-compare is order-independent — a cost a
-    # real user never pays (and the reference's own users don't write).
-    # Correctness always runs the exact builder; bench.py prefers these.
-    bench_builder: Builder | None = None
-    bench_oracle: str | None = None
 
 
 REGISTRY: dict[str, QueryDef] = {}
@@ -67,28 +60,30 @@ def register(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
     return deco
 
 
-def register_bench(name: str, oracle: str | None = None):
-    """Attach a double-aggregation bench variant to a registered query."""
-    def deco(fn: Builder) -> Builder:
-        q = REGISTRY[name]
-        q.bench_builder = _scoped(fn)
-        q.bench_oracle = oracle
-        return fn
+def _float_builder(fn: Builder) -> Builder:
+    @functools.wraps(fn)
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        with float_mode():
+            return fn(spark, sf_dir)
 
-    return deco
+    return build
 
 
 def bench_queries() -> dict[str, tuple[Builder, str | None]]:
-    """(builder, duckdb oracle) per query for bench.py — the bench
-    variant when one exists, else the registered exact pair."""
+    """(builder, duckdb oracle) per query for bench.py. A query tagged
+    ``float_bench`` comes back as its float variant: the builder run under
+    compat.float_mode() and the oracle through compat.float_sql(), so both
+    engines sum plain doubles — what a user writes. Every other query is
+    its registered exact pair. Correctness always runs the exact pair."""
     _load_all()
-    return {
-        n: (
-            q.bench_builder or q.builder,
-            q.bench_oracle if q.bench_builder is not None else q.oracle,
-        )
-        for n, q in ((n, REGISTRY[n]) for n in _ordered_names())
-    }
+    out = {}
+    for n in _ordered_names():
+        q = REGISTRY[n]
+        if "float_bench" in q.tags:
+            out[n] = (_float_builder(q.builder), float_sql(q.oracle))
+        else:
+            out[n] = (q.builder, q.oracle)
+    return out
 
 
 # The correctness driver verifies a 50-query window of the registry in
@@ -163,7 +158,5 @@ def _load_all() -> None:
         tpch_full,
         windows,
     )
-    # bench variants attach to already-registered entries — import last
-    from myduckdb_spark.queries import bench_variants  # noqa: F401
 
     _LOADED = True

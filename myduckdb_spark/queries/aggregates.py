@@ -56,7 +56,7 @@ def agg_distinct_and_filter(spark, sf_dir):
     GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
     ORDER BY gid, o_orderstatus, o_orderpriority
     """,
-    tags=("aggregate", "groupingsets"),
+    tags=("aggregate", "groupingsets", "float_bench"),
 )
 def agg_rollup(spark, sf_dir):
     """ROLLUP with grouping_id (reference plans GROUPING SETS as multiple

@@ -14,15 +14,7 @@ from pyspark.sql import functions as F
 
 from myduckdb_spark.catalog import load_table
 from myduckdb_spark.catalog import maybe_broadcast as _mb
-from myduckdb_spark.functions.compat import (
-    DEC,
-    REVENUE_SQL,
-    davg,
-    davg_sql,
-    dsum,
-    dsum_sql,
-    revenue_col,
-)
+from myduckdb_spark.functions.compat import davg, davg_sql, dsum, dsum_sql, revenue_col
 from myduckdb_spark.catalog import table_row_count
 from myduckdb_spark.operators.groupjoin import group_join
 from myduckdb_spark.operators.joins import amus_join
@@ -47,27 +39,23 @@ from myduckdb_spark.queries import register
     GROUP BY l_returnflag, l_linestatus
     ORDER BY l_returnflag, l_linestatus
     """,
-    tags=("aggregate", "tpch"),
+    tags=("aggregate", "tpch", "float_bench"),
 )
 def q01_pricing_summary(spark, sf_dir):
     """TPC-H Q1: wide groupBy aggregation. Reference plans this as
     HASH_GROUP_BY (physical_hash_aggregate.cpp); Spark runs partial+final
     hash agg with the filter pushed to the parquet scan."""
     li = load_table(spark, sf_dir, "lineitem")
-    disc_price = (F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))).cast(DEC)
-    charge = (
-        F.col("l_extendedprice")
-        * (F.lit(1.0) - F.col("l_discount"))
-        * (F.lit(1.0) + F.col("l_tax"))
-    ).cast(DEC)
+    disc_price = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
+    charge = disc_price * (F.lit(1.0) + F.col("l_tax"))
     return (
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
             dsum("l_quantity", "sum_qty"),
             dsum("l_extendedprice", "sum_base_price"),
-            F.sum(disc_price).cast("double").alias("sum_disc_price"),
-            F.sum(charge).cast("double").alias("sum_charge"),
+            dsum(disc_price, "sum_disc_price"),
+            dsum(charge, "sum_charge"),
             davg("l_quantity", "avg_qty"),
             davg("l_extendedprice", "avg_price"),
             davg("l_discount", "avg_disc"),
@@ -95,7 +83,7 @@ def q01_pricing_summary(spark, sf_dir):
     ORDER BY revenue DESC, l_orderkey
     LIMIT 10
     """,
-    tags=("join", "aggregate", "tpch"),
+    tags=("join", "aggregate", "tpch", "float_bench"),
 )
 def q03_top_revenue_orders(spark, sf_dir):
     """TPC-H Q3 shape: 3-way join → agg → top-k. The customer dim filter
@@ -132,7 +120,7 @@ def q03_top_revenue_orders(spark, sf_dir):
     GROUP BY n_name
     ORDER BY revenue DESC, n_name
     """,
-    tags=("join", "aggregate", "tpch"),
+    tags=("join", "aggregate", "tpch", "float_bench"),
 )
 def q05_local_supplier_volume(spark, sf_dir):
     """TPC-H Q5 shape: 6-way snowflake join. Dims (region/nation/supplier/
@@ -166,8 +154,8 @@ def q05_local_supplier_volume(spark, sf_dir):
 
 @register(
     "q06_forecast_revenue",
-    oracle="""
-    SELECT CAST(SUM(CAST(l_extendedprice * l_discount AS DECIMAL(18,6))) AS DOUBLE) AS revenue,
+    oracle=f"""
+    SELECT {dsum_sql('l_extendedprice * l_discount', 'revenue')},
            COUNT(*) AS n_rows
     FROM lineitem
     WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
@@ -175,7 +163,7 @@ def q05_local_supplier_volume(spark, sf_dir):
       AND l_discount BETWEEN 0.05 AND 0.07
       AND l_quantity < 24
     """,
-    tags=("aggregate", "filter", "tpch"),
+    tags=("aggregate", "filter", "tpch", "float_bench"),
 )
 def q06_forecast_revenue(spark, sf_dir):
     """TPC-H Q6: pure filter + ungrouped aggregate (reference
@@ -189,9 +177,7 @@ def q06_forecast_revenue(spark, sf_dir):
         & (F.col("l_discount") <= 0.07)
         & (F.col("l_quantity") < 24)
     ).agg(
-        F.sum((F.col("l_extendedprice") * F.col("l_discount")).cast(DEC))
-        .cast("double")
-        .alias("revenue"),
+        dsum(F.col("l_extendedprice") * F.col("l_discount"), "revenue"),
         F.count(F.lit(1)).alias("n_rows"),
     )
 
@@ -211,7 +197,7 @@ def q06_forecast_revenue(spark, sf_dir):
     ORDER BY revenue DESC, c_custkey
     LIMIT 20
     """,
-    tags=("join", "aggregate", "tpch"),
+    tags=("join", "aggregate", "tpch", "float_bench"),
 )
 def q10_returned_items(spark, sf_dir):
     """TPC-H Q10 shape: fact-fact join + dim broadcast + grouped top-k."""
@@ -236,17 +222,17 @@ def q10_returned_items(spark, sf_dir):
 
 @register(
     "groupjoin_order_items",
-    oracle="""
+    oracle=f"""
     SELECT o.o_orderkey, o.o_totalprice, agg.n_items, agg.total_qty
     FROM orders o
     JOIN (
       SELECT l_orderkey, COUNT(*) AS n_items,
-             CAST(SUM(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) AS total_qty
+             {dsum_sql('l_quantity', 'total_qty')}
       FROM lineitem GROUP BY l_orderkey
     ) agg ON o.o_orderkey = agg.l_orderkey
     ORDER BY o.o_orderkey
     """,
-    tags=("groupjoin", "fork"),
+    tags=("groupjoin", "fork", "float_bench"),
 )
 def groupjoin_order_items(spark, sf_dir):
     """The fork's GroupJoin motivating shape (sql_files/sml.sql query 03:

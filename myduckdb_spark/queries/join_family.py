@@ -204,7 +204,7 @@ def join_positional(spark, sf_dir):
     GROUP BY o.o_orderstatus
     ORDER BY o.o_orderstatus
     """,
-    tags=("join", "range"),
+    tags=("join", "range", "float_bench"),
 )
 def join_range_theta(spark, sf_dir):
     """Equi + range predicates — the reference's PIECEWISE_MERGE_JOIN /

@@ -199,6 +199,32 @@ def test_brute_force_numpy_path_bit_exact(spark, sf_dir, monkeypatch):
     assert via_numpy == via_hof and via_numpy
 
 
+def test_brute_force_numpy_path_null_and_ragged_vectors(spark):
+    """A null, short or null-element corpus vector gets a NULL dot from the
+    JVM zip_with kernel; the numpy kernel must give the same NULL instead
+    of failing."""
+    import random
+
+    random.seed(11)
+    rows = [(i, [random.uniform(-1, 1) for _ in range(8)]) for i in range(10)]
+    rows += [(10, None), (11, [0.5, -0.25, 0.125]), (12, [0.5] * 7 + [None])]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    probes = emb.filter(F.col("vec_id") < 3)
+    # hints promise 3 × 1M pairs: over the numpy gate, whatever the real size
+    via_numpy_df = brute_force_topk(
+        probes, emb, k=20, n_corpus_hint=1_000_000, n_probes_hint=3
+    )
+    assert "MapInArrow" in (  # prove the numpy path actually ran
+        via_numpy_df._jdf.queryExecution().executedPlan().toString()
+    )
+    via_hof = brute_force_topk(probes, emb, k=20)
+    got = sorted(map(tuple, via_numpy_df.collect()), key=lambda r: r[:2])
+    want = sorted(map(tuple, via_hof.collect()), key=lambda r: r[:2])
+    assert got == want
+    nulls = {r[1] for r in got if r[2] is None}
+    assert nulls == {10, 11, 12}
+
+
 def test_text_stats_and_quality(docs):
     s = text_stats(docs).filter(F.col("doc_id") == 1).collect()[0]
     assert s["n_tokens"] == 9 and s["n_distinct_tokens"] == 8

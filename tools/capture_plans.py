@@ -3,9 +3,9 @@
 Writes plans/<tag>/<query>_<suffix>.txt (default suffix from argv).
 Usage: python tools/capture_plans.py before|after [query ...]
 
-Captures the BENCH variant plan (what bench.py times); queries without a
-bench variant fall back to the registered builder — the same thing
-bench.py executes either way.
+Captures the plan bench.py times: the derived float variant for queries
+tagged ``float_bench`` (queries.bench_queries), the registered builder
+for every other query.
 """
 
 from __future__ import annotations

@@ -8,7 +8,8 @@ plan for scale anti-patterns:
 * CartesianProduct           — accidental cross product (guide §3.4)
 * BroadcastNestedLoopJoin    — flagged for review (legit for small-side
                                theta joins; fatal when both sides scale)
-* Exchange count             — shuffles per query (guide §2.1)
+* Shuffle-exchange count     — shuffles per query (guide §2.1), counted
+                               on the executed plan by ``shuffle_exchanges``
 * scans without ReadSchema pruning (heuristic: scan emits >24 columns)
 
 Output: one JSON line per query on stdout; human summary on stderr.
@@ -27,6 +28,17 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SWEEP_DIR", "/root/testdata/sf0.01")
 
+# a shuffle is an Exchange with a partitioning; BroadcastExchange never
+# matches (the same pattern the perfbench trace counts)
+SHUFFLE_RE = re.compile(
+    r"\bExchange (hashpartitioning|rangepartitioning|SinglePartition|RoundRobinPartitioning)"
+)
+
+
+def shuffle_exchanges(executed_plan: str) -> int:
+    """Shuffle exchanges in ``executedPlan().toString()`` text."""
+    return len(SHUFFLE_RE.findall(executed_plan))
+
 
 def main() -> None:
     from myduckdb_spark import queries as q
@@ -43,14 +55,14 @@ def main() -> None:
         try:
             df = builder(spark, SF_DIR)
             plan = df._jdf.queryExecution().explainString(mode)
+            executed = df._jdf.queryExecution().executedPlan().toString()
         except Exception as e:  # builder needs fixtures the sweep lacks
             results.append({"name": name, "error": str(e)[:200]})
             print(f"ERR  {name}: {str(e)[:120]}", file=sys.stderr, flush=True)
             continue
         rec = {
             "name": name,
-            "exchanges": len(re.findall(r"\bExchange\b", plan.split("==", 2)[-1]))
-            - len(re.findall(r"BroadcastExchange", plan)),
+            "exchanges": shuffle_exchanges(executed),
             "broadcast_exchanges": len(re.findall(r"BroadcastExchange", plan)),
             "batch_eval_python": len(re.findall(r"BatchEvalPython", plan)),
             "arrow_eval_python": len(re.findall(r"ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas", plan)),
