@@ -30,6 +30,8 @@ from __future__ import annotations
 import json
 import re
 
+from myduckdb_spark.functions import typenames
+
 _NUMERIC = {"UBIGINT", "BIGINT", "DOUBLE"}
 
 
@@ -180,34 +182,15 @@ def json_type_py(s: str | None, path: str | None = "$") -> str | None:
 
 # ------------------------------------------------------------------ DDL
 
-# DuckDB type-name -> Spark DDL (transform_typename.cpp name set). TIME /
-# INTERVAL have no Spark column type -> STRING (documented divergence);
-# UBIGINT/HUGEINT -> DECIMAL wide enough for the full unsigned range.
-_TYPE_MAP = {
-    "TINYINT": "TINYINT", "INT1": "TINYINT",
-    "SMALLINT": "SMALLINT", "INT2": "SMALLINT", "SHORT": "SMALLINT",
-    "INTEGER": "INT", "INT": "INT", "INT4": "INT", "SIGNED": "INT",
-    "BIGINT": "BIGINT", "INT8": "BIGINT", "LONG": "BIGINT",
-    "HUGEINT": "DECIMAL(38,0)",
-    "UTINYINT": "SMALLINT", "USMALLINT": "INT", "UINTEGER": "BIGINT",
-    "UBIGINT": "DECIMAL(20,0)",
-    "FLOAT": "FLOAT", "FLOAT4": "FLOAT", "REAL": "FLOAT",
-    "DOUBLE": "DOUBLE", "FLOAT8": "DOUBLE",
-    "VARCHAR": "STRING", "TEXT": "STRING", "STRING": "STRING",
-    "CHAR": "STRING", "BPCHAR": "STRING", "JSON": "STRING",
-    "UUID": "STRING", "TIME": "STRING", "TIMETZ": "STRING",
-    "INTERVAL": "STRING",
-    "BOOLEAN": "BOOLEAN", "BOOL": "BOOLEAN", "LOGICAL": "BOOLEAN",
-    "DATE": "DATE",
-    "TIMESTAMP": "TIMESTAMP", "DATETIME": "TIMESTAMP",
-    "TIMESTAMPTZ": "TIMESTAMP",
-    "BLOB": "BINARY", "BYTEA": "BINARY", "BINARY": "BINARY",
-}
-
-_DECIMAL = re.compile(r"^(DECIMAL|NUMERIC)\s*\(\s*\d+\s*(?:,\s*\d+\s*)?\)$", re.I)
+# Spark has no column type for these: a structure field of one of them
+# holds DuckDB's text (NULL: nothing) as STRING (documented divergence;
+# the DDL's TIME is microsecond BIGINT, which json text never is)
+_TEXT_TYPES = ("TIME", "TIMETZ", "INTERVAL", "NULL")
 
 
 def _ddl(s) -> str:
+    """Spark DDL of a structure document: from_json's schema and the
+    transform UDF's return type."""
     if isinstance(s, dict):
         inner = ", ".join(f"`{k}`: {_ddl(v)}" for k, v in s.items())
         return f"STRUCT<{inner}>"
@@ -215,12 +198,15 @@ def _ddl(s) -> str:
         if len(s) != 1:
             raise ValueError(f"array structure needs exactly one element: {s!r}")
         return f"ARRAY<{_ddl(s[0])}>"
-    name = str(s).strip().upper()
-    if name in _TYPE_MAP:
-        return _TYPE_MAP[name]
-    if _DECIMAL.match(name):
-        return name.replace("NUMERIC", "DECIMAL")
-    raise ValueError(f"unknown DuckDB type in json structure: {s!r}")
+    name = _canon_scalar(s)
+    if name in _TEXT_TYPES:
+        return "STRING"
+    if name.startswith("TIMESTAMP"):
+        # the converters return naive datetimes (offsets folded to UTC)
+        return "TIMESTAMP_NTZ"
+    if typenames.lookup(name) is None:
+        raise ValueError(f"unknown DuckDB type in json structure: {s!r}")
+    return typenames.spark_ddl(name)
 
 
 def structure_to_ddl(structure_json: str) -> tuple[str, bool]:
@@ -247,50 +233,6 @@ def structure_to_ddl(structure_json: str) -> tuple[str, bool]:
 
 from decimal import ROUND_HALF_EVEN, ROUND_HALF_UP, Decimal, InvalidOperation
 
-_INT_RANGES = {
-    "TINYINT": (-(2 ** 7), 2 ** 7 - 1),
-    "SMALLINT": (-(2 ** 15), 2 ** 15 - 1),
-    "INTEGER": (-(2 ** 31), 2 ** 31 - 1),
-    "BIGINT": (-(2 ** 63), 2 ** 63 - 1),
-    "HUGEINT": (-(2 ** 127 - 1), 2 ** 127 - 1),
-    "UTINYINT": (0, 2 ** 8 - 1),
-    "USMALLINT": (0, 2 ** 16 - 1),
-    "UINTEGER": (0, 2 ** 32 - 1),
-    "UBIGINT": (0, 2 ** 64 - 1),
-    "UHUGEINT": (0, 2 ** 128 - 1),
-}
-
-_TYPE_ALIASES = {
-    "INT1": "TINYINT", "INT2": "SMALLINT", "SHORT": "SMALLINT",
-    "INT": "INTEGER", "INT4": "INTEGER", "SIGNED": "INTEGER",
-    "INT8": "BIGINT", "LONG": "BIGINT",
-    "FLOAT4": "FLOAT", "REAL": "FLOAT", "FLOAT8": "DOUBLE",
-    "TEXT": "VARCHAR", "STRING": "VARCHAR", "CHAR": "VARCHAR",
-    "BPCHAR": "VARCHAR",
-    "BOOL": "BOOLEAN", "LOGICAL": "BOOLEAN",
-    "DATETIME": "TIMESTAMP", "NUMERIC": "DECIMAL",
-    "BYTEA": "BINARY", "BLOB": "BINARY",
-}
-
-# structure type name -> the UDF's Spark return DDL (differs from
-# _TYPE_MAP: naive timestamps return as TIMESTAMP_NTZ python datetimes)
-_UDF_DDL = {
-    "TINYINT": "TINYINT", "SMALLINT": "SMALLINT", "INTEGER": "INT",
-    "BIGINT": "BIGINT",
-    "UTINYINT": "SMALLINT", "USMALLINT": "INT", "UINTEGER": "BIGINT",
-    "UBIGINT": "DECIMAL(20,0)", "HUGEINT": "DECIMAL(38,0)",
-    "UHUGEINT": "DECIMAL(38,0)",
-    "FLOAT": "FLOAT", "DOUBLE": "DOUBLE",
-    "VARCHAR": "STRING", "JSON": "STRING", "UUID": "STRING",
-    "TIME": "STRING", "TIMETZ": "STRING", "INTERVAL": "STRING",
-    "NULL": "STRING",
-    "BOOLEAN": "BOOLEAN", "BINARY": "BINARY", "DATE": "DATE",
-    "TIMESTAMP": "TIMESTAMP_NTZ", "TIMESTAMP_S": "TIMESTAMP_NTZ",
-    "TIMESTAMP_MS": "TIMESTAMP_NTZ", "TIMESTAMP_NS": "TIMESTAMP_NTZ",
-    "TIMESTAMPTZ": "TIMESTAMP",
-}
-
-_DEC_SPEC = re.compile(r"^DECIMAL\s*(?:\(\s*(\d+)\s*(?:,\s*(\d+)\s*)?\))?$")
 _UUID_RE = re.compile(
     r"^[0-9a-fA-F]{8}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-"
     r"[0-9a-fA-F]{4}-[0-9a-fA-F]{12}$"
@@ -303,9 +245,10 @@ class _TransformError(ValueError):
     """Raised by strict transforms (json_transform_strict) on cast failure."""
 
 
-def _canon_scalar(name: str) -> str:
-    up = str(name).strip().upper()
-    return _TYPE_ALIASES.get(up, up)
+def _canon_scalar(name) -> str:
+    """DuckDB's name for a structure type spelling (typenames.canonical:
+    ``INT`` → ``INTEGER``, ``NUMERIC`` → ``DECIMAL(18,3)``)."""
+    return typenames.canonical(str(name).upper())
 
 
 def _dumps(v) -> str:
@@ -399,14 +342,9 @@ def compile_transform(structure, strict: bool):
         return _obj
 
     name = _canon_scalar(structure)
-    mdec = _DEC_SPEC.fullmatch(name)
-    if mdec:
-        prec = int(mdec.group(1)) if mdec.group(1) else 18
-        scale = int(mdec.group(2)) if mdec.group(2) is not None else (
-            3 if not mdec.group(1) else 0
-        )
-        if prec < 1 or prec > 38 or scale > prec:
-            raise ValueError(f"invalid DECIMAL spec: {structure!r}")
+    row = typenames.lookup(name)
+    if name.startswith("DECIMAL("):
+        prec, scale = typenames.numeric_precision(name)
         q = Decimal(1).scaleb(-scale)
         limit = Decimal(10) ** (prec - scale)
 
@@ -433,9 +371,9 @@ def compile_transform(structure, strict: bool):
 
         return _dec
 
-    if name in _INT_RANGES:
-        lo, hi = _INT_RANGES[name]
-        wide = name in ("UBIGINT", "HUGEINT", "UHUGEINT")
+    if row and row.range:
+        lo, hi = row.range
+        wide = row.spark.startswith("DECIMAL")
 
         def _int(v):
             if v is None:
@@ -514,7 +452,7 @@ def compile_transform(structure, strict: bool):
     if name == "NULL":
         return lambda v: None
 
-    if name == "BINARY":
+    if name == "BLOB":
         def _blob(v):
             if v is None:
                 return None
@@ -551,7 +489,7 @@ def compile_transform(structure, strict: bool):
         return _d
 
     if name in ("TIMESTAMP", "TIMESTAMP_S", "TIMESTAMP_MS", "TIMESTAMP_NS",
-                "TIMESTAMPTZ"):
+                "TIMESTAMP WITH TIME ZONE"):
         unit = name
 
         def _ts(v):
@@ -597,27 +535,6 @@ def compile_transform(structure, strict: bool):
     raise ValueError(f"unknown type in json structure: {structure!r}")
 
 
-def _udf_ddl(structure) -> str:
-    if isinstance(structure, dict):
-        inner = ", ".join(f"`{k}`: {_udf_ddl(v)}" for k, v in structure.items())
-        return f"STRUCT<{inner}>"
-    if isinstance(structure, list):
-        return f"ARRAY<{_udf_ddl(structure[0])}>"
-    name = _canon_scalar(structure)
-    if name in _UDF_DDL:
-        return _UDF_DDL[name]
-    m = _DEC_SPEC.fullmatch(name)
-    if m:
-        prec = int(m.group(1)) if m.group(1) else 18
-        scale = int(m.group(2)) if m.group(2) is not None else (
-            3 if not m.group(1) else 0
-        )
-        if prec < 1 or prec > 38 or scale > prec:
-            raise ValueError(f"invalid DECIMAL spec: {structure!r}")
-        return f"DECIMAL({prec},{scale})"
-    raise ValueError(f"unknown type in json structure: {structure!r}")
-
-
 # translate() populates this; the SQL front door registers the UDFs it
 # finds referenced in the translated text. name -> (structure_doc, strict)
 TRANSFORM_SPECS: dict[str, tuple[str, bool]] = {}
@@ -631,7 +548,7 @@ def make_transform_spec(structure_doc: str, strict: bool) -> tuple[str, str, boo
 
     parsed = json.loads(structure_doc)
     compile_transform(parsed, strict)  # validate types now, at "bind" time
-    ddl = _udf_ddl(parsed)
+    ddl = _ddl(parsed)
     h = hashlib.md5(
         (("S" if strict else "N") + structure_doc).encode()
     ).hexdigest()[:10]
@@ -1114,7 +1031,7 @@ def register_marked_udfs(spark, translated: str) -> None:
         doc, strict = TRANSFORM_SPECS[name]
         parsed = json.loads(doc)
         fn = compile_transform(parsed, strict)
-        ddl = _udf_ddl(parsed)
+        ddl = _ddl(parsed)
 
         def _mk_apply(fn, strict):
             def _apply(x):

@@ -47,7 +47,8 @@ def _c(x) -> Column:
 # --- string (reference src/core_functions/scalar/string/, src/function/scalar/string/) ---
 _reg("upper", "ucase")(lambda s: F.upper(_c(s)))
 _reg("lower", "lcase")(lambda s: F.lower(_c(s)))
-_reg("concat")(lambda *cs: F.concat(*[_c(x) for x in cs]))
+# DuckDB's concat skips NULLs (Spark's concat propagates them)
+_reg("concat")(lambda *cs: F.concat_ws("", *[_c(x) for x in cs]))
 _reg("concat_ws")(lambda sep, *cs: F.concat_ws(sep, *[_c(x) for x in cs]))
 _reg("contains")(lambda s, t: _c(s).contains(t))
 _reg("starts_with", "prefix")(lambda s, p: _c(s).startswith(p))
@@ -239,7 +240,8 @@ _reg("mod")(lambda a, b: _c(a) % _c(b))
 _reg("fmod")(lambda a, b: _c(a) % _c(b))
 _reg("pi")(lambda: F.lit(3.141592653589793))
 _reg("atan2")(lambda y, x: F.atan2(_c(y), _c(x)))
-_reg("log")(lambda b, x=None: F.log(_c(b)) if x is None else F.log(float(b), _c(x)))
+# one-argument log is base 10 in DuckDB; log(b, x) is base b
+_reg("log")(lambda b, x=None: F.log10(_c(b)) if x is None else F.log(float(b), _c(x)))
 def _missing(name: str):
     def raiser(*_a, **_k):
         raise NotImplementedError(
@@ -273,7 +275,10 @@ _reg("list_value", "list_pack", "array_value")(lambda *cs: F.array(*[_c(x) for x
 _reg("list_extract", "list_element", "array_extract", "element_at")(
     lambda l, i: F.element_at(_c(l), i)
 )
-_reg("array_slice", "list_slice")(lambda l, a, b: F.slice(_c(l), a, b))
+# DuckDB's bounds are 1-based and inclusive; Spark's slice takes a length
+_reg("array_slice", "list_slice")(
+    lambda l, a, b: F.slice(_c(l), _c(a), _c(b) - _c(a) + 1)
+)
 _reg("list_concat", "list_cat", "array_concat")(lambda *ls: F.concat(*[_c(x) for x in ls]))
 _reg("list_contains", "array_contains", "list_has")(lambda l, v: F.array_contains(_c(l), v))
 _reg("list_position", "list_indexof", "array_position")(lambda l, v: F.array_position(_c(l), v))
@@ -289,11 +294,21 @@ _reg("list_filter", "array_filter")(lambda l, f: F.filter(_c(l), f))
 _reg("list_reduce", "array_reduce", "reduce")(
     lambda l, f, init=None: F.aggregate(_c(l), _c(init) if init is not None else F.lit(None), f)
 )
-_reg("list_aggregate", "list_aggr", "aggregate")(
-    lambda l, aggname: F.expr(f"aggregate({_sql(l)}, CAST(0 AS DOUBLE), (a, x) -> a + x)")
-    if aggname == "sum"
-    else F.array_max(_c(l)) if aggname == "max" else F.array_min(_c(l))
-)
+def _list_aggregate_col(l, aggname: str) -> Column:
+    nn = f"filter({_sql(l)}, x -> x IS NOT NULL)"
+    total = f"aggregate({{}}, CAST(0 AS DOUBLE), (a, x) -> a + x)"
+    exprs = {
+        "sum": total.format(_sql(l)),
+        "min": f"array_min({_sql(l)})",
+        "max": f"array_max({_sql(l)})",
+        "avg": f"try_divide({total.format(nn)}, size({nn}))",
+    }
+    if aggname not in exprs:
+        raise ValueError(f"list_aggregate: unsupported aggregate {aggname!r}")
+    return F.expr(exprs[aggname])
+
+
+_reg("list_aggregate", "list_aggr", "aggregate")(_list_aggregate_col)
 _reg("list_zip", "array_zip")(lambda *ls: F.arrays_zip(*[_c(x) for x in ls]))
 _reg("list_resize")(lambda l, n, v=None: F.expr(
     f"transform(sequence(1, {n}), i -> if(i <= size({_sql(l)}), {_sql(l)}[i-1], {('NULL' if v is None else repr(v))}))"

@@ -25,6 +25,8 @@ from __future__ import annotations
 
 import re
 
+from myduckdb_spark.functions import typenames
+
 # user-created schemas (beyond the main/information_schema/pg_catalog
 # baseline) in catalog 'memory': name -> oid. Oids are assigned once at
 # creation and never reused (pg_namespace.test: an entry's oid must not
@@ -72,16 +74,6 @@ TYPE_ALIASES: dict[str, str] = {}
 
 _BASE_SCHEMAS = ("information_schema", "main", "pg_catalog")
 _BASE_CATALOGS = ("memory", "system", "temp")
-
-# duck type name -> information_schema numeric precision/scale
-NUM_PRECISION: dict[str, tuple[int, int]] = {
-    "TINYINT": (8, 0), "SMALLINT": (16, 0), "INTEGER": (32, 0),
-    "BIGINT": (64, 0), "HUGEINT": (128, 0),
-    "UTINYINT": (8, 0), "USMALLINT": (16, 0), "UINTEGER": (32, 0),
-    "UBIGINT": (64, 0), "UHUGEINT": (128, 0),
-    "FLOAT": (24, 0), "DOUBLE": (53, 0), "REAL": (24, 0),
-}
-
 
 def reset() -> None:
     SCHEMAS.clear()
@@ -166,24 +158,25 @@ def register_columns(key: str, cols: list[dict]) -> None:
     COLUMN_META[key.lower()] = cols
 
 
-_SPARK2DUCK = {"INT": "INTEGER", "STRING": "VARCHAR", "BINARY": "BLOB",
-               "TIMESTAMP_NTZ": "TIMESTAMP"}
-
-
 def column_row(name: str, ordinal: int, dtype: str,
                nullable: bool = True, default=None) -> dict:
-    """Build one column-metadata record from a duck-spelled type name."""
-    dt = dtype.strip().upper()
-    dt = _SPARK2DUCK.get(dt, dt)
-    if dt.startswith(("DECIMAL(", "NUMERIC(")):
-        p, s = (int(x) for x in dt[dt.index("(") + 1 : -1].split(","))
-        dt = f"DECIMAL({p},{s})"
-    else:
-        p, s = NUM_PRECISION.get(dt, (None, None))
+    """Build one column-metadata record from a DuckDB type name in any
+    spelling DuckDB accepts (``INT`` and ``STRING`` record as ``INTEGER``
+    and ``VARCHAR``)."""
+    dt = typenames.canonical(dtype)
+    p, s = typenames.numeric_precision(dt)
     return {
         "name": name, "ordinal": ordinal, "dtype": dt, "prec": p,
         "scale": s, "nullable": nullable, "default": default,
     }
+
+
+def column_types(key: str, fields) -> list[str]:
+    """DuckDB type names of object ``key``'s Spark fields: the declared
+    name this registry keeps first (typenames.column_type)."""
+    declared = {c["name"].lower(): c["dtype"] for c in COLUMN_META.get(key.lower(), [])}
+    return [typenames.column_type(declared.get(f.name.lower()), f.dataType.simpleString())
+            for f in fields]
 
 
 def drop_object(key: str) -> None:

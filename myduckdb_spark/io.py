@@ -34,6 +34,8 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from myduckdb_spark.functions import typenames
+
 _DELIMS = [",", "|", ";", "\t"]
 _QUOTES = ['"', "'"]
 _MAX_SKIP = 8
@@ -333,32 +335,9 @@ def sniff_csv(
     }
 
 
-# duck type name → Spark DDL type, for explicit read_csv columns=/types=
-_DUCK2SPARK = {
-    "VARCHAR": "STRING", "TEXT": "STRING", "CHAR": "STRING",
-    "BPCHAR": "STRING", "UUID": "STRING", "JSON": "STRING",
-    "INTEGER": "INT", "INT": "INT", "INT4": "INT", "SIGNED": "INT",
-    "BIGINT": "BIGINT", "INT8": "BIGINT", "LONG": "BIGINT",
-    "SMALLINT": "SMALLINT", "INT2": "SMALLINT", "SHORT": "SMALLINT",
-    "TINYINT": "TINYINT", "INT1": "TINYINT",
-    "HUGEINT": "DECIMAL(38,0)", "UHUGEINT": "DECIMAL(38,0)",
-    "UTINYINT": "SMALLINT", "USMALLINT": "INT", "UINTEGER": "BIGINT",
-    "UBIGINT": "DECIMAL(20,0)",
-    "DOUBLE": "DOUBLE", "FLOAT8": "DOUBLE", "FLOAT": "FLOAT",
-    "FLOAT4": "FLOAT", "REAL": "FLOAT",
-    "BOOLEAN": "BOOLEAN", "BOOL": "BOOLEAN",
-    "DATE": "DATE", "TIMESTAMP": "TIMESTAMP_NTZ",
-    "DATETIME": "TIMESTAMP_NTZ", "TIMESTAMPTZ": "TIMESTAMP_LTZ",
-    "BLOB": "BINARY", "BYTEA": "BINARY",
-}
-
-
-def _duck2spark_type(t: str) -> str:
-    t = t.strip().upper()
-    if t.startswith(("DECIMAL", "NUMERIC")):
-        return t.replace("NUMERIC", "DECIMAL") if "(" in t \
-            else "DECIMAL(18,3)"
-    return _DUCK2SPARK.get(t, t)
+# explicit column types of a file scan (read_csv/read_json columns=,
+# types=): TIME text reads as Spark's TIME, not the DDL's microsecond BIGINT
+SCAN_TYPES = {"TIME": "TIME"}
 
 
 # SQL keywords (libpg_query grammar, duckdb_keywords()): normalize_names
@@ -461,7 +440,8 @@ def read_csv(
         # explicit name->type map (read_csv columns=): fixed schema, no
         # type inference — exactly the reference's explicit-columns path
         schema = ", ".join(
-            f"`{n}` {_duck2spark_type(t)}" for n, t in columns.items()
+            f"`{n}` {typenames.spark_ddl(t, SCAN_TYPES)}"
+            for n, t in columns.items()
         )
         if len(columns) == 1 and "sep" not in options:
             # a declared single-column file reads whole lines (the
@@ -619,7 +599,7 @@ def read_csv(
             for c, t in pairs:
                 c = low.get(c.lower(), c)
                 df = df.withColumn(c, F.col(f"`{c}`").cast(
-                    _duck2spark_type(t)
+                    typenames.spark_ddl(t, SCAN_TYPES)
                 ))
         if normalize_names:
             df = df.toDF(*[_normalize_csv_name(c) for c in df.columns])

@@ -50,7 +50,9 @@ from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from myduckdb_spark import infoschema as ischema
 from myduckdb_spark.catalog import TABLES, register_views
+from myduckdb_spark.functions import typenames
 
 # ------------------------------------------------------------------ lexer
 #
@@ -430,18 +432,19 @@ _NAME_RULES = {
     "regexp_matches": "rlike",
 }
 
-# type aliases renamed by translate(). 128-bit widths widen to the
-# engine's carriers (SURVEY §3 type map). Unsigned types are handled
-# inside the cast rewrite with RANGE GUARDS — a bare rename would silently
-# accept out-of-range values; TIMESTAMP_NS/_MS/_S stay unmapped (their
-# precision semantics aren't a rename).
-_TYPE_ALIASES = {
-    "int1": "tinyint", "int2": "smallint", "int4": "int",
-    "int8": "bigint", "float4": "float", "float8": "double",
-    "logical": "boolean", "bytea": "binary", "blob": "binary",
-    "varbinary": "binary",
-    "hugeint": "decimal(38,0)", "uhugeint": "decimal(38,0)",
+# DuckDB type spellings translate() renames to their Spark type as bare
+# words. 128-bit widths widen to the engine's carriers. Unsigned types are
+# handled inside the cast rewrite with RANGE GUARDS — a bare rename would
+# silently accept out-of-range values. Spellings that double as column
+# names (TEXT, JSON, LONG, ...) are left alone.
+_TYPE_RENAMES = {
+    t: typenames.spark_ddl(t).lower()
+    for t in ("int1", "int2", "int4", "int8", "float4", "float8", "logical",
+              "bytea", "blob", "varbinary", "hugeint", "uhugeint")
 }
+_TYPE_RENAME_RE = re.compile(
+    rf"\b({'|'.join(_TYPE_RENAMES)})\b(?!\s*\()", re.I
+)
 
 _LISTY = re.compile(
     r"^\s*\[|\b(split|string_split\w*|string_to_array|regexp_extract_all|sequence|"
@@ -838,30 +841,18 @@ def _operand_end(text: str, start: int, mask: bytearray) -> int:
         i += m.end()
 
 
-# duck types whose Spark CARRIER erases the declared name (unsigned →
-# wider signed int, HUGEINT → DECIMAL(38,0), JSON/UUID → STRING): the
-# catalog registry keeps the declared dtype; typeof() binds against it
-# and COPY TO parquet persists it as field metadata so a file scan
-# round-trips the name (reference parquet writer keeps its own logical
-# types natively)
-_CARRIER_ERASED_DTYPES = {
-    "UTINYINT", "USMALLINT", "UINTEGER", "UBIGINT",
-    "HUGEINT", "UHUGEINT", "JSON", "UUID",
-}
-# dtypes the typeof()/scan registry bind accepts beyond the DDL set:
-# TIME only arises from the CSV sniffer's STRING-carrier demotion
-# (io.py _fix_time_columns), never from DDL (where TIME is the µs-BIGINT
-# convention), so it must not join _CARRIER_ERASED_DTYPES itself
-_SCAN_REGISTRY_DTYPES = _CARRIER_ERASED_DTYPES | {"TIME"}
+# Names the typeof()/scan registry bind accepts: the types whose Spark
+# carrier erases the declared name (typenames.ERASED), plus TIME, which
+# reaches a scan only from the CSV sniffer's STRING-carrier demotion
+# (io.py _fix_time_columns); DDL TIME is the µs-BIGINT convention.
+# COPY TO parquet persists these names as field metadata so a file scan
+# round-trips them (the reference parquet writer keeps its own logical
+# types natively).
+_REGISTRY_BOUND = typenames.ERASED | {"TIME"}
 
-# Spark typeof() spellings for UNION member bind-time type matching
-_SPARK_TYPEOF = {
-    "STRING": "string", "BOOLEAN": "boolean", "INT": "int",
-    "BIGINT": "bigint", "SMALLINT": "smallint", "TINYINT": "tinyint",
-    "FLOAT": "float", "DOUBLE": "double", "DATE": "date",
-    "BINARY": "binary", "TIMESTAMP": "timestamp",
-    "TIMESTAMP_NTZ": "timestamp_ntz", "TIMESTAMP_LTZ": "timestamp",
-}
+
+# DuckDB name -> Spark typeof() name, for UNION member bind-time matching
+_TYPEOF_NAMES = {v: k for k, v in typenames.SPARK_NAMES.items()}
 
 
 def _rewrite_union_casts(text: str) -> str:
@@ -886,8 +877,9 @@ def _rewrite_union_casts(text: str) -> str:
             if not pm:
                 ok = False
                 break
-            dt = pm.group(2).strip().upper()
-            members.append((pm.group(1), _DDL_TYPES.get(dt, dt)))
+            members.append(
+                (pm.group(1), typenames.spark_ddl(pm.group(2).strip().upper()))
+            )
         if not ok or not members:
             return text  # not a UNION type spec after all
         if m.group(1).strip() == "::":
@@ -946,11 +938,8 @@ def _union_cast_expr(operand: str, members: list[tuple[str, str]]) -> str:
         )
         return f"named_struct('tag', '{cm.group(1)}', {fields})"
     # arbitrary operand: bind the member whose Spark type matches
-    conds = [
-        f"typeof({operand}) = '{_SPARK_TYPEOF[t]}'" if t in _SPARK_TYPEOF
-        else None
-        for _, t in members
-    ]
+    spellings = [_TYPEOF_NAMES.get(typenames.duck_name(t)) for _, t in members]
+    conds = [f"typeof({operand}) = '{s}'" if s else None for s in spellings]
     tag_whens = " ".join(
         f"WHEN {c} THEN '{n}'"
         for (n, _), c in zip(members, conds) if c
@@ -1577,23 +1566,21 @@ def _rewrite_window_filter(text: str) -> str:
 # JSON dot-syntax member chain: .key / ."quoted key" / [n] / [#-n]
 _DOT_CHAIN = r'((?:\s*(?:\.\s*(?:\w+|"[^"]+")|\[\s*#?\s*-?\d+\s*\]))+)'
 
-_INT_CAST_TYPES = {
-    "tinyint", "smallint", "int", "integer", "bigint", "hugeint",
-    "int1", "int2", "int4", "int8", "signed", "long", "short",
-    "utinyint", "usmallint", "uinteger", "ubigint",
+# integer type spellings -> typenames row: casts to them round like the
+# reference's. Unsigned casts also range-guard into their wider Spark
+# carrier (numeric_cast.hpp bounds); out-of-range is NULL under TRY_CAST
+# and an error under CAST, exactly like the reference. The bit-width
+# spellings (INT32, ...) are left to Spark, and so is UHUGEINT: its
+# DECIMAL(38,0) carrier cannot hold its range.
+_INT_CASTS = {
+    s.lower(): r
+    for r in typenames.TYPES if r.range and r.name != "UHUGEINT"
+    for s in (r.name, *r.aliases) if not re.fullmatch(r"INT\d\d+", s)
 }
-# unsigned widths: (lo, hi, widened Spark carrier) — casts range-guard
-# (numeric_cast.hpp bounds); out-of-range is NULL under TRY_CAST and an
-# error under CAST, exactly like the reference
-_UNSIGNED_RANGES = {
-    "utinyint": (0, 255, "SMALLINT"),
-    "usmallint": (0, 65535, "INT"),
-    "uinteger": (0, 4294967295, "BIGINT"),
-    "ubigint": (0, 18446744073709551615, "DECIMAL(20,0)"),
-}
+_UNSIGNED = {s: r for s, r in _INT_CASTS.items() if r.range[0] == 0}
 _COLON_INT = re.compile(
-    r"::\s*(tinyint|smallint|integer|int[1248]?|bigint|hugeint|signed|long|short"
-    r"|utinyint|usmallint|uinteger|ubigint|varchar|text|bpchar|decimal|numeric)\b(?!\s*\()",
+    rf"::\s*({'|'.join(_INT_CASTS)}|varchar|text|bpchar|decimal|numeric)"
+    r"\b(?!\s*\()",
     re.I,
 )
 
@@ -1772,8 +1759,9 @@ def _rewrite_int_casts(text: str) -> str:
                 f"WHEN '-Infinity' THEN '-inf' ELSE {base} END)"
                 + rest
             )
-        if am and am.group(2).lower() in _UNSIGNED_RANGES:
-            lo, hi, wide = _UNSIGNED_RANGES[am.group(2).lower()]
+        urow = _UNSIGNED.get(am.group(2).lower()) if am else None
+        if urow:
+            (lo, hi), wide = urow.range, urow.spark
             r = _round_cast(am.group(1), wide, "TRY_CAST")
             if kw == "TRY_CAST":
                 return (
@@ -1793,7 +1781,7 @@ def _rewrite_int_casts(text: str) -> str:
             )
         if (
             am
-            and am.group(2).lower() in _INT_CAST_TYPES
+            and am.group(2).lower() in _INT_CASTS
             # integer literals round to themselves — and MUST stay bare
             # casts (Spark window frame bounds reject wrapped expressions)
             and not re.fullmatch(r"\s*[+-]?\d+\s*", am.group(1))
@@ -1818,8 +1806,8 @@ def _rewrite_postfix_int_casts(text: str) -> str:
                 # leave `5::int8` (pure integer literal) as a postfix cast:
                 # rounding is identity and frame bounds need bare literals
                 if not (
-                    c.group(1).lower() in _INT_CAST_TYPES
-                    and c.group(1).lower() not in _UNSIGNED_RANGES
+                    c.group(1).lower() in _INT_CASTS
+                    and c.group(1).lower() not in _UNSIGNED
                     and re.search(r"(?<![\w.])\d+\s*$", text[: c.start()])
                 )
             ),
@@ -1876,8 +1864,6 @@ _BLOB_COLS: list[set] = [set()]
 
 
 def _statement_touches_blobs(text: str) -> bool:
-    from myduckdb_spark import infoschema as ischema
-
     cols = set()
     for t in re.findall(r"\bFROM\s+\"?(\w+)\"?", text, re.I):
         for c in ischema.COLUMN_META.get(t.lower(), []):
@@ -2991,9 +2977,7 @@ def _bind_type_aliases(text: str) -> str:
     generic type rules, so e.g. `1::test_type` with test_type AS int32
     binds like `1::INT32` (catalog/comment_on.test). Reads the session's
     aliases each time it runs."""
-    from myduckdb_spark import infoschema
-
-    for alias, base in infoschema.TYPE_ALIASES.items():
+    for alias, base in ischema.TYPE_ALIASES.items():
         al = re.escape(alias)
         if not re.search(rf"\b{al}\b", text, re.I):
             continue
@@ -3121,14 +3105,12 @@ def _bind_registry_typeof(text: str) -> str:
     copy/parquet/writer/parquet_write_unsigned). Narrow bind:
     bare-identifier argument, no same-named differently-typed column in
     scope. Reads the session's column registry each time it runs."""
-    from myduckdb_spark import infoschema
-
     declared: dict[str, str] = {}
     ambiguous: set[str] = set()
     for t in re.findall(r"\bFROM\s+\"?([A-Za-z_]\w*)\"?", text, re.I):
-        for c in infoschema.COLUMN_META.get(t.lower(), []):
+        for c in ischema.COLUMN_META.get(t.lower(), []):
             nm = c["name"].lower()
-            if c["dtype"] in _SCAN_REGISTRY_DTYPES:
+            if c["dtype"].replace("[]", "") in _REGISTRY_BOUND:
                 if nm in declared and declared[nm] != c["dtype"]:
                     ambiguous.add(nm)
                 declared[nm] = c["dtype"]
@@ -3141,9 +3123,30 @@ def _bind_registry_typeof(text: str) -> str:
     return _rewrite_calls(text, "typeof", partial(_declared_typeof, declared))
 
 
+def _scan_columns(fields) -> list[dict]:
+    """Catalog-registry rows for scanned Spark fields: the ``duck_type``
+    a COPY TO parquet footer carries for a registry-bound name, else the
+    Spark type rendered."""
+    return [
+        ischema.column_row(
+            f.name, i + 1,
+            f.metadata["duck_type"]
+            if f.metadata.get("duck_type") in _REGISTRY_BOUND
+            else typenames.duck_name(f.dataType.simpleString()),
+        )
+        for i, f in enumerate(fields)
+    ]
+
+
 def _declared_typeof(declared: dict[str, str], a: list[str]) -> str | None:
     col = a[0].strip().strip('"').split(".")[-1].strip('"').lower()
     return f"'{declared[col]}'" if len(a) == 1 and col in declared else None
+
+
+# Spark typeof() name -> DuckDB name, as a SQL map literal
+_TYPEOF_MAP = "map(" + ",".join(
+    f"'{k}','{v}'" for k, v in typenames.SPARK_NAMES.items()
+) + ")"
 
 
 def _typeof_names(a: list[str]) -> str | None:
@@ -3154,17 +3157,6 @@ def _typeof_names(a: list[str]) -> str | None:
     if len(a) != 1:
         return None
     t = f"typeof({a[0]})"
-    m = (
-        "map('int','INTEGER','bigint','BIGINT','smallint','SMALLINT',"
-        "'tinyint','TINYINT','string','VARCHAR','double','DOUBLE',"
-        "'float','FLOAT','boolean','BOOLEAN','date','DATE',"
-        # session timestampType=NTZ: naive values are timestamp_ntz
-        # (duck TIMESTAMP); Spark's instant kind only arises from
-        # tz-aware sources = duck TIMESTAMP WITH TIME ZONE
-        "'timestamp_ntz','TIMESTAMP',"
-        "'timestamp','TIMESTAMP WITH TIME ZONE',"
-        "'binary','BLOB','void','\"NULL\"','variant','JSON')"
-    )
     # compound names (struct/map/array/decimal) need the recursive
     # DuckDB rendering (STRUCT(k1 VARCHAR, ...), VARCHAR[], ...) —
     # routed through the __duck_typename helper (functions/typenames.py)
@@ -3172,7 +3164,7 @@ def _typeof_names(a: list[str]) -> str | None:
         f"CASE WHEN {t} LIKE '%<%' THEN __duck_typename({t}) "
         # Spark TIME carries precision (time(6)); DuckDB prints TIME
         f"WHEN {t} LIKE 'time(%' THEN 'TIME' "
-        f"ELSE coalesce(element_at({m}, {t}), upper({t})) END"
+        f"ELSE coalesce(element_at({_TYPEOF_MAP}, {t}), upper({t})) END"
     )
 
 
@@ -3337,10 +3329,12 @@ def _rename_timestamptz(text: str) -> str:
 # unary minus on an UNSIGNED-cast chain wraps modulo 2^N (verified live:
 # -42::TINYINT::UTINYINT = 214, -1::INTEGER::UINTEGER = 4294967295 —
 # modular negate, numeric_cast semantics)
-_UMOD = {"UTINYINT": ("256", "SMALLINT"),
-         "USMALLINT": ("65536", "INT"),
-         "UINTEGER": ("4294967296", "BIGINT"),
-         "UBIGINT": ("18446744073709551616", "DECIMAL(20,0)")}
+_NEG_UNSIGNED = re.compile(
+    r"(?<![\w)'\"])-\s*("
+    r"(?:\w+|'(?:[^']|'')*'|\([^()]*\))(?:\s*::\s*\w+)*\s*::\s*"
+    rf"({'|'.join(_UNSIGNED)}))\b(?!\s*::)",
+    re.I,
+)
 
 
 def _neg_dispatch(text: str, mm: "re.Match[str]") -> str:
@@ -3362,16 +3356,14 @@ def _neg_dispatch(text: str, mm: "re.Match[str]") -> str:
                 "VALUES", "AS", "IN", "CASE", "DISTINCT",
             ):
                 return mm.group(0)
-    pow2, carrier = _UMOD[mm.group(2).upper()]
-    return f"CAST(({pow2} - ({mm.group(1)})) % {pow2} AS {carrier})"
+    row = _UNSIGNED[mm.group(2).lower()]
+    pow2 = row.range[1] + 1
+    return f"CAST(({pow2} - ({mm.group(1)})) % {pow2} AS {row.spark})"
 
 
 def _rewrite_negated_unsigned(text: str) -> str:
     return _sub_code(
-        r"(?<![\w)'\"])-\s*("
-        r"(?:\w+|'(?:[^']|'')*'|\([^()]*\))(?:\s*::\s*\w+)*\s*::\s*"
-        r"(UTINYINT|USMALLINT|UINTEGER|UBIGINT))\b(?!\s*::)",
-        lambda mm: _neg_dispatch(text, mm), text, re.I,
+        _NEG_UNSIGNED, lambda mm: _neg_dispatch(text, mm), text,
     )
 
 
@@ -5063,8 +5055,7 @@ def _rename_type_aliases(text: str) -> str:
     """DuckDB numeric type aliases Spark's parser rejects (postgres-style
     intN/floatN names) — applies to both ::casts and CAST(... AS t)."""
     return _sub_code(
-        rf"\b({'|'.join(_TYPE_ALIASES)})\b(?!\s*\()",
-        lambda mm: _TYPE_ALIASES[mm.group(1).lower()], text, re.I,
+        _TYPE_RENAME_RE, lambda mm: _TYPE_RENAMES[mm.group(1).lower()], text,
     )
 
 
@@ -5607,8 +5598,6 @@ def reset_dml_state(spark: SparkSession) -> None:
     _SEQUENCES = None
     _TXN = None
     _PREPARED.clear()
-    from myduckdb_spark import infoschema as ischema
-
     ischema.reset()
     SETTINGS.pop("search_path", None)
     SETTINGS.pop("current_database", None)
@@ -5756,23 +5745,6 @@ _CREATE_INDEX = re.compile(
 )
 _DROP_INDEX = re.compile(r"^\s*DROP\s+INDEX\s+(?:IF\s+EXISTS\s+)?\"?(\w+)\"?\s*;?\s*$", re.I)
 
-# DuckDB column types Spark's DDL parser doesn't know (beyond the intN
-# aliases translate() already maps)
-_DDL_TYPES = {
-    "INTEGER": "INT", "SIGNED": "INT", "LONG": "BIGINT",
-    "INT1": "TINYINT", "INT2": "SMALLINT", "INT4": "INT", "INT8": "BIGINT",
-    "FLOAT4": "FLOAT", "FLOAT8": "DOUBLE", "SHORT": "SMALLINT",
-    "HUGEINT": "DECIMAL(38,0)", "UHUGEINT": "DECIMAL(38,0)",
-    "UTINYINT": "SMALLINT", "USMALLINT": "INT", "UINTEGER": "BIGINT",
-    "UBIGINT": "DECIMAL(20,0)", "REAL": "FLOAT", "TEXT": "STRING",
-    "VARCHAR": "STRING", "BPCHAR": "STRING", "BLOB": "BINARY",
-    "BYTEA": "BINARY", "VARBINARY": "BINARY",
-    "NUMERIC": "DECIMAL(18,3)", "DATETIME": "TIMESTAMP", "UUID": "STRING",
-    "BOOL": "BOOLEAN", "TIME": "BIGINT",  # µs-since-midnight convention
-    "TIMESTAMPTZ": "TIMESTAMP_LTZ",
-}
-
-
 def _parse_column_defs(
     body: str,
     declared_out: dict[str, str] | None = None,
@@ -5785,7 +5757,9 @@ def _parse_column_defs(
     (comparison semantics, reference bind_comparison_expression.cpp
     PushCollation); CHECK / NOT NULL / FOREIGN KEY land in `extras` as
     {ctype, columns, text} records for the information_schema registry —
-    the managed layer stores data, it does not enforce them."""
+    the managed layer stores data, it does not enforce them. Column types
+    come back as Spark DDL; ``declared_out`` receives each column's
+    declared DuckDB name (typenames.declared_name)."""
     cols: list[tuple[str, str]] = []
     key: list[str] = []
     uniques: list[list[str]] = []
@@ -5837,18 +5811,11 @@ def _parse_column_defs(
         name, typ, brackets, rest = (
             m.group(1).strip('"'), m.group(2), m.group(3), m.group(4),
         )
-        base = re.sub(r"\s*\(.*", "", typ).upper()
-        if declared_out is not None and not brackets \
-                and base in _CARRIER_ERASED_DTYPES:
-            declared_out[name.lower()] = base
-        if base in _DDL_TYPES and "(" not in typ:
-            typ = _DDL_TYPES[base]
-        elif base in ("VARCHAR", "CHAR", "BPCHAR"):
-            typ = "STRING"  # DuckDB ignores VARCHAR length caps
         # DuckDB postfix list types: INT[] / VARCHAR[][] / fixed INT[3]
         # (bounds drop — Spark arrays are unbounded)
-        for _ in range(brackets.count("[")):
-            typ = f"ARRAY<{typ}>"
+        if declared_out is not None:
+            declared_out[name.lower()] = typenames.declared_name(typ + brackets)
+        typ = typenames.spark_ddl(typ + brackets)
         if re.search(r"\bPRIMARY\s+KEY\b", rest, re.I):
             key.append(name)
         elif re.search(r"\bUNIQUE\b", rest, re.I):
@@ -6024,16 +5991,14 @@ def _alter_table(spark: SparkSession, exists_ok: str | None, name: str, act: str
         if name.lower() in _COLUMN_COLLATIONS:
             _COLUMN_COLLATIONS[new.lower()] = _COLUMN_COLLATIONS.pop(name.lower())
         # COMMENT ON entries follow the rename (comment_on.test)
-        from myduckdb_spark import infoschema as _isch_r
-
-        for (k, kk) in list(_isch_r.COMMENTS):
+        for (k, kk) in list(ischema.COMMENTS):
             if k == "table" and kk == name.lower():
-                _isch_r.COMMENTS[(k, new.lower())] = \
-                    _isch_r.COMMENTS.pop((k, kk))
+                ischema.COMMENTS[(k, new.lower())] = \
+                    ischema.COMMENTS.pop((k, kk))
             elif k == "column" and kk.startswith(name.lower() + "."):
-                _isch_r.COMMENTS[
+                ischema.COMMENTS[
                     (k, new.lower() + kk[len(name):])
-                ] = _isch_r.COMMENTS.pop((k, kk))
+                ] = ischema.COMMENTS.pop((k, kk))
         try:
             spark.catalog.dropTempView(name)
         except Exception:
@@ -6056,13 +6021,11 @@ def _alter_table(spark: SparkSession, exists_ok: str | None, name: str, act: str
         ]
         tbl.alter(stage)
         tbl.remap_constraint_cols({src: new})
-        from myduckdb_spark import infoschema as _isch_rc
-
         ck = ("column", f"{name.lower()}.{src.lower()}")
-        if ck in _isch_rc.COMMENTS:
-            _isch_rc.COMMENTS[
+        if ck in ischema.COMMENTS:
+            ischema.COMMENTS[
                 ("column", f"{name.lower()}.{new.lower()}")
-            ] = _isch_rc.COMMENTS.pop(ck)
+            ] = ischema.COMMENTS.pop(ck)
         _refresh_view(spark, name)
         return _count_df(spark, 0)
 
@@ -6302,12 +6265,10 @@ def _copy_statement(spark: SparkSession, target: str, direction: str,
                 # in the parquet footer schema, so a later file scan can
                 # rebind typeof()/casts to the declared type
                 # (copy/parquet/writer/parquet_write_unsigned.test)
-                from myduckdb_spark import infoschema as ischema
-
                 dmap = {
                     c["name"]: c["dtype"]
                     for c in ischema.COLUMN_META.get(name.lower(), [])
-                    if c["dtype"] in _CARRIER_ERASED_DTYPES
+                    if c["dtype"] in typenames.ERASED
                 }
                 if dmap:
                     def _out_col(c: str):
@@ -6859,8 +6820,6 @@ def _schema_of(name: str) -> tuple[str, str]:
     engine object name (CREATE SCHEMA front door). Longest registered
     flat-schema prefix wins — attached-catalog schemas register as
     ``alias__schema`` and their objects as ``alias__schema__table``."""
-    from myduckdb_spark import infoschema as ischema
-
     if "__" in name:
         low = name.lower()
         for s in sorted(ischema.SCHEMAS, key=len, reverse=True):
@@ -6901,8 +6860,6 @@ def _flatten_schema_refs(text: str) -> str:
     the implicit ``main.`` qualifier; resolve bare table names through
     SET search_path (path schemas first, then main — set_search_path
     semantics in the reference binder)."""
-    from myduckdb_spark import infoschema as ischema
-
     # qualifier strip is POSITIONAL: only table-reference positions
     # (after FROM/JOIN/TABLE/VIEW/... keywords) and schema-qualified
     # function calls (``main.my_macro(..)``). A blanket strip rewrites
@@ -7076,8 +7033,6 @@ def _comment_on(spark: SparkSession, m: "re.Match[str]") -> DataFrame:
     """COMMENT ON <kind> <name> IS '<text>'|NULL (reference
     src/parser/statement + catalog_entry comment field; surfaced via the
     duckdb_*() TVFs — test/sql/catalog/comment_on.test)."""
-    from myduckdb_spark import infoschema as ischema
-
     kind = re.sub(r"\s+", " ", m.group(1).upper())
     name = m.group(2).strip().strip('"')
     val = m.group(3).strip().rstrip(";").strip()
@@ -7206,8 +7161,6 @@ def _dml_statement(spark: SparkSession, text: str) -> DataFrame | None:
     import tempfile
 
     from myduckdb_spark import storage
-    from myduckdb_spark import infoschema as ischema
-
     m = _CREATE_SCHEMA.match(text)
     if m:
         flat = _flat_schema_name(m.group(2), m.group(3))
@@ -7262,13 +7215,12 @@ def _dml_statement(spark: SparkSession, text: str) -> DataFrame | None:
                           r"(\s*\[\s*\])*", d):
             # simple alias (reference type_catalog_entry: CREATE TYPE x
             # AS int32) — translate() rewrites ::x to the base spelling.
-            # Bit-width spellings normalize to names every later rule
-            # knows (duck INT16/INT32/INT64/INT128 aliases).
-            base = {
-                "int16": "SMALLINT", "int32": "INTEGER",
-                "int64": "BIGINT", "int128": "HUGEINT",
-            }.get(d.lower(), d)
-            ischema.TYPE_ALIASES[key] = base
+            # Bit-width spellings normalize to DuckDB's name (INT32 →
+            # INTEGER), which every later rule knows.
+            ischema.TYPE_ALIASES[key] = (
+                typenames.canonical(d) if re.fullmatch(r"INT\d+", d, re.I)
+                else d
+            )
         else:
             raise ValueError(
                 f"CREATE TYPE: unsupported type definition {d!r}"
@@ -7374,22 +7326,9 @@ def _dml_statement(spark: SparkSession, text: str) -> DataFrame | None:
         # carrier-erased duck types survive CTAS through field metadata
         # (e.g. the CSV sniffer's TIME demotion, io.py _fix_time_columns)
         # — register them so typeof() binds the declared name
-        try:
-            fields = _MANAGED[name].scan().schema.fields
-            if any(f.metadata.get("duck_type") in _SCAN_REGISTRY_DTYPES
-                   for f in fields):
-                ischema.register_columns(name, [
-                    ischema.column_row(
-                        f.name, i + 1,
-                        f.metadata["duck_type"]
-                        if f.metadata.get("duck_type")
-                        in _SCAN_REGISTRY_DTYPES
-                        else f.dataType.simpleString(),
-                    )
-                    for i, f in enumerate(fields)
-                ])
-        except Exception:
-            pass
+        fields = _MANAGED[name].scan().schema.fields
+        if any(f.metadata.get("duck_type") in _REGISTRY_BOUND for f in fields):
+            ischema.register_columns(name, _scan_columns(fields))
         return _count_df(spark, _MANAGED[name].count())
     m = _CREATE_TBL.match(text)
     if m and not _CTAS.match(text):
@@ -7458,11 +7397,11 @@ def _dml_statement(spark: SparkSession, text: str) -> DataFrame | None:
                    if x["ctype"] == "NOT NULL"}
         ischema.register_columns(name, [
             ischema.column_row(
-                n, i, declared.get(n.lower(), t),
+                n, i, declared[n.lower()],
                 nullable=n not in (key or []) and n.lower() not in notnull,
                 default=defaults.get(n.lower()) if defaults else None,
             )
-            for i, (n, t) in enumerate(cols, 1)
+            for i, (n, _t) in enumerate(cols, 1)
         ])
         if key:
             ischema.CONSTRAINTS.append({
@@ -7651,10 +7590,8 @@ def _dml_statement(spark: SparkSession, text: str) -> DataFrame | None:
         # into scans/sorts (copy/parquet/writer/parquet_write_uuid.test)
         _tcols = tbl.scan().columns
         if len(src_df.columns) == len(_tcols):
-            from myduckdb_spark import infoschema as _isch2
-
             _dt = {c["name"].lower(): c["dtype"]
-                   for c in _isch2.COLUMN_META.get(name.lower(), [])}
+                   for c in ischema.COLUMN_META.get(name.lower(), [])}
             _uuid_idx = [i for i, c in enumerate(_tcols)
                          if _dt.get(c.lower()) == "UUID"]
             if _uuid_idx:
@@ -7841,14 +7778,7 @@ def _dml_statement(spark: SparkSession, text: str) -> DataFrame | None:
         # snapshot the view's column layout: the reference freezes it at
         # CREATE (a later base-table rename is NOT reflected in
         # duckdb_columns — table_function/duckdb_columns.test)
-        try:
-            ischema.register_columns(name, [
-                ischema.column_row(f.name, i + 1,
-                                   f.dataType.simpleString())
-                for i, f in enumerate(df.schema.fields)
-            ])
-        except Exception:
-            pass
+        ischema.register_columns(name, _scan_columns(df.schema.fields))
         ischema.VIEW_SQL[name.lower()] = text.strip().rstrip(";")
         return _count_df(spark, 0)
     m = _DROP_VIEW.match(text)
@@ -8112,9 +8042,7 @@ def _catalog_names(spark: SparkSession) -> list[str]:
 
 
 def _duck_field_type(f) -> str:
-    from myduckdb_spark.functions.typenames import duck_typename_py
-
-    return duck_typename_py(f.dataType.simpleString())
+    return typenames.duck_name(f.dataType.simpleString())
 
 
 def _describe_statement(spark: SparkSession, text: str) -> DataFrame | None:
@@ -8137,8 +8065,6 @@ def _describe_statement(spark: SparkSession, text: str) -> DataFrame | None:
             [(n,) for n in _catalog_names(spark)], "name string"
         )
     if re.match(r"^\s*SHOW\s+DATABASES\s*;?\s*$", text, re.I):
-        from myduckdb_spark import infoschema as ischema
-
         return _rows_df(
             spark,
             sorted((r[0],) for r in ischema.database_rows() if not r[1]),
@@ -8158,7 +8084,7 @@ def _describe_statement(spark: SparkSession, text: str) -> DataFrame | None:
                 (
                     "memory", "main", n,
                     [f.name for f in sch.fields],
-                    [_duck_field_type(f) for f in sch.fields],
+                    ischema.column_types(n, sch.fields),
                     False,
                 )
             )
@@ -8206,23 +8132,16 @@ def _describe_statement(spark: SparkSession, text: str) -> DataFrame | None:
         else:
             raise ValueError(f"Table with name {name} does not exist!")
         rows = []
-        for f in sch.fields:
+        for f, dt in zip(sch.fields, ischema.column_types(name, sch.fields)):
             key = "PRI" if f.name in pri else ("UNI" if f.name in uni else None)
             null = "NO" if (f.name in pri or not f.nullable) else "YES"
             dflt = dflts.get(f.name)
             rows.append(
-                (f.name, _duck_field_type(f), null, key,
+                (f.name, dt, null, key,
                  str(dflt) if dflt is not None else None, None)
             )
         return _rows_df(spark, rows, _DESCRIBE_SCHEMA)
     return None
-
-
-_NUM_PRECISION = {
-    "TINYINT": (8, 0), "SMALLINT": (16, 0), "INTEGER": (32, 0),
-    "BIGINT": (64, 0), "HUGEINT": (128, 0), "FLOAT": (24, 0),
-    "DOUBLE": (53, 0),
-}
 
 
 _IS_VIEWS = (
@@ -8240,8 +8159,6 @@ def _bind_information_schema(spark: SparkSession, text: str) -> str:
     harness state-mirroring populate it: declared types, schemas, temp
     catalog, constraint structure) with a live-catalog fallback for
     session views created outside the front door."""
-    from myduckdb_spark import infoschema as ischema
-
     used = {
         m.group(1).lower()
         for m in re.finditer(
@@ -8310,23 +8227,14 @@ def _bind_information_schema(spark: SparkSession, text: str) -> str:
             "is_typed string, commit_action string",
         ).createOrReplaceTempView("__is_tables")
     if "columns" in used:
-        crows = []
-        done = set()
+        objs = {}  # key -> (catalog, schema, name, column rows)
         for key, cols in ischema.COLUMN_META.items():
             m = ischema.TABLE_META.get(key) or {
                 "catalog": "memory", "schema": "main", "name": key,
             }
-            done.add(key)
-            for c in cols:
-                crows.append(
-                    (m["catalog"], m["schema"], m["name"], c["name"],
-                     c["ordinal"],
-                     str(c["default"]) if c["default"] is not None else None,
-                     "YES" if c["nullable"] else "NO", c["dtype"],
-                     c["prec"], c["scale"])
-                )
+            objs[key] = (m["catalog"], m["schema"], m["name"], cols)
         for n in live:
-            if n.lower() in done:
+            if n.lower() in objs:
                 continue
             try:
                 tbl = _MANAGED.get(n) or _MANAGED.get(n.lower())
@@ -8335,18 +8243,17 @@ def _bind_information_schema(spark: SparkSession, text: str) -> str:
                 continue  # dropped concurrently; registry objects never
                 # hit this path (wide managed tables are registry-first)
             dflts = tbl.defaults if tbl else {}
-            for i, f in enumerate(sch.fields, 1):
-                dt = _duck_field_type(f)
-                if dt.startswith("DECIMAL("):
-                    p, s = (int(x) for x in dt[8:-1].split(","))
-                else:
-                    p, s = _NUM_PRECISION.get(dt, (None, None))
-                dflt = dflts.get(f.name)
-                crows.append(
-                    ("memory", "main", n, f.name, i,
-                     str(dflt) if dflt is not None else None,
-                     "YES" if f.nullable else "NO", dt, p, s)
-                )
+            objs[n.lower()] = ("memory", "main", n, [
+                ischema.column_row(f.name, i, _duck_field_type(f),
+                                   f.nullable, dflts.get(f.name))
+                for i, f in enumerate(sch.fields, 1)
+            ])
+        crows = [
+            (cat, sch, tname, c["name"], c["ordinal"],
+             str(c["default"]) if c["default"] is not None else None,
+             "YES" if c["nullable"] else "NO", c["dtype"], c["prec"], c["scale"])
+            for cat, sch, tname, cols in objs.values() for c in cols
+        ]
         _rows_df(
             spark,
             crows,
@@ -8398,8 +8305,6 @@ def _bind_pg_catalog(spark: SparkSession, text: str) -> str:
     """pg_catalog compatibility views (reference default_views.cpp
     pg_catalog section), computed from the same catalog-metadata
     registry as information_schema."""
-    from myduckdb_spark import infoschema as ischema
-
     used = {
         m.group(1).lower()
         for m in re.finditer(
@@ -8442,7 +8347,6 @@ def _bind_duckdb_tvfs(spark: SparkSession, text: str) -> str:
     oracle. OIDs are synthetic but CONSISTENT across the views in one
     statement, so pg_description joins (classoid=database_oid AND
     objoid=<x>_oid, catalog/comment_on_pg_description.test) line up."""
-    from myduckdb_spark import infoschema as ischema
     from myduckdb_spark.functions import macros as _macros
 
     text = re.sub(r"\bpg_catalog\s*\.\s*pg_description\b",
@@ -8539,8 +8443,12 @@ def _bind_duckdb_tvfs(spark: SparkSession, text: str) -> str:
             db, schn, bare, _tmp = _obj_meta(n)
             for i, f in enumerate(sch.fields):
                 cm = cmeta.get(f.name.lower(), {})
-                dt = cm.get("dtype") or _duck_field_type(f)
-                prec, scale = cm.get("prec"), cm.get("scale")
+                dt = typenames.column_type(cm.get("dtype"),
+                                           f.dataType.simpleString())
+                prec, scale = (
+                    (cm["prec"], cm["scale"]) if dt == cm.get("dtype")
+                    else typenames.numeric_precision(dt)
+                )
                 radix = (10 if dt.startswith(("DECIMAL", "NUMERIC"))
                          else 2) if prec is not None else None
                 dflt = cm.get("default")
@@ -8762,8 +8670,6 @@ def _statement_command(spark: SparkSession, text: str) -> DataFrame | None:
         return _count_df(spark, 0)
     m = _USE_STMT.match(text)
     if m:
-        from myduckdb_spark import infoschema as ischema
-
         q, name = m.group(1), m.group(2)
         if q:  # USE db.schema
             flat = _flat_schema_name(q, name)
@@ -8798,8 +8704,6 @@ def _statement_command(spark: SparkSession, text: str) -> DataFrame | None:
                 [(name, raw)], "name string, value string"
             )
         if name.lower() in ("search_path", "schema"):
-            from myduckdb_spark import infoschema as ischema
-
             inner = m.group(2).strip().strip("'")
             if inner.count('"') % 2:
                 raise ValueError(
@@ -8856,8 +8760,10 @@ def _statement_command(spark: SparkSession, text: str) -> DataFrame | None:
     if m:
         fields = spark.table(m.group(1)).schema.fields
         rows = [
-            (i, f.name, f.dataType.simpleString(), not f.nullable, None, False)
-            for i, f in enumerate(fields)
+            (i, f.name, dt, not f.nullable, None, False)
+            for i, (f, dt) in enumerate(
+                zip(fields, ischema.column_types(m.group(1), fields))
+            )
         ]
         return _rows_df(
             spark,
@@ -9206,13 +9112,11 @@ def _bind_file_scans(spark: SparkSession, text: str) -> str:
                     # with the given duck types (read_json.cpp bind) —
                     # an unmapped/structured type (UNION…) leaves the
                     # call unbound (skip, never wrong values)
-                    from myduckdb_spark.io import _duck2spark_type
-
                     if any(re.match(r"\s*UNION\s*\(", t, re.I)
                            for t in jcols.values()):
                         return None
                     ddl = ", ".join(
-                        f"`{c}` {_duck2spark_type(t)}"
+                        f"`{c}` {typenames.spark_ddl(t, _io.SCAN_TYPES)}"
                         for c, t in jcols.items()
                     )
                     df = _io.read_json(spark, path, schema=ddl)
@@ -9235,23 +9139,8 @@ def _bind_file_scans(spark: SparkSession, text: str) -> str:
             # duck_type field metadata written by COPY TO parquet
             # round-trips through the Spark parquet footer — rebind the
             # declared (carrier-erased) type names for typeof()
-            try:
-                from myduckdb_spark import infoschema as ischema
-
-                cols = [
-                    ischema.column_row(
-                        f.name, i + 1,
-                        f.metadata["duck_type"]
-                        if f.metadata.get("duck_type")
-                        in _SCAN_REGISTRY_DTYPES
-                        else f.dataType.simpleString(),
-                    )
-                    for i, f in enumerate(df.schema.fields)
-                ]
-                if any(f.metadata.get("duck_type") for f in df.schema.fields):
-                    ischema.register_columns(view, cols)
-            except Exception:
-                pass
+            if any(f.metadata.get("duck_type") for f in df.schema.fields):
+                ischema.register_columns(view, _scan_columns(df.schema.fields))
         except Exception:
             return None
         return view

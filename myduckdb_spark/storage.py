@@ -776,40 +776,23 @@ class SequenceStore:
 # ---------------------------------------------------------------------------
 
 
-_SPARK_TO_DUCK = {
-    "bigint": "BIGINT",
-    "int": "INTEGER",
-    "smallint": "SMALLINT",
-    "tinyint": "TINYINT",
-    "double": "DOUBLE",
-    "float": "FLOAT",
-    "string": "VARCHAR",
-    "boolean": "BOOLEAN",
-    "date": "DATE",
-    "timestamp": "TIMESTAMP",
-    "timestamp_ntz": "TIMESTAMP",
-    "binary": "BLOB",
-}
-
-
-def _duck_type(spark_type: str) -> str:
-    if spark_type.startswith("decimal"):
-        return spark_type.upper()
-    if spark_type.startswith("array<"):
-        return _duck_type(spark_type[6:-1]) + "[]"
-    return _SPARK_TO_DUCK.get(spark_type, spark_type.upper())
-
-
 def export_database(spark: SparkSession, out_dir: str, tables: dict[str, DataFrame]) -> None:
     """EXPORT DATABASE 'dir' (FORMAT PARQUET): one parquet dir per table
     plus schema.sql / load.sql, the reference's export layout
-    (physical_export.cpp writes schema.sql + load.sql + data files)."""
+    (physical_export.cpp writes schema.sql + load.sql + data files).
+    schema.sql carries DuckDB type names: each column's declared name
+    from the catalog registry (``infoschema.COLUMN_META``), else its Spark
+    type rendered (``infoschema.column_types``), so DuckDB can run it and
+    load the parquet files into the declared types."""
+    from myduckdb_spark import infoschema
+
     os.makedirs(out_dir, exist_ok=True)
     schema_lines, load_lines = [], []
     for name, df in tables.items():
         path = os.path.join(out_dir, f"{name}.parquet")
         df.write.mode("overwrite").parquet(path)
-        cols = ", ".join(f"{c} {_duck_type(t)}" for c, t in df.dtypes)
+        types = infoschema.column_types(name, df.schema.fields)
+        cols = ", ".join(f"{c} {t}" for c, t in zip(df.columns, types))
         schema_lines.append(f"CREATE TABLE {name} ({cols});")
         # Spark writes a directory of part files; DuckDB COPY reads globs
         load_lines.append(f"COPY {name} FROM '{path}/*.parquet' (FORMAT PARQUET);")

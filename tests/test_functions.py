@@ -69,6 +69,32 @@ def test_function_matches_duckdb(spark, duck, name, args, ducksql):
         assert sg == sw or got == want
 
 
+# registry entries whose formula must match the SQL front door's and
+# DuckDB's (log10, 1-based inclusive list_slice, NULL-skipping concat,
+# list_aggregate by name)
+FRONT_DOOR_CASES = [
+    ("log", lambda: [F.lit(100.0)], "log(100.0)"),
+    ("list_slice", lambda: [F.array(*map(F.lit, [1, 2, 3, 4])), 2, 3],
+     "list_slice([1, 2, 3, 4], 2, 3)"),
+    ("list_aggregate", lambda: [F.array(*map(F.lit, [1, 2, 3])), "avg"],
+     "list_aggregate([1, 2, 3], 'avg')"),
+    ("concat", lambda: [F.lit("a"), F.lit(None).cast("string"), F.lit("b")],
+     "concat('a', NULL, 'b')"),
+]
+
+
+@pytest.mark.parametrize("name,args,ducksql", FRONT_DOOR_CASES,
+                         ids=[c[0] for c in FRONT_DOOR_CASES])
+def test_registry_matches_front_door_and_duckdb(spark, duck, name, args, ducksql):
+    got = spark.range(1).select(fn(name)(*args()).alias("v")).collect()[0]["v"]
+    assert got == duck.sql(f"SELECT {ducksql}").fetchone()[0]
+
+
+def test_list_aggregate_rejects_unsupported_name():
+    with pytest.raises(ValueError, match="unsupported aggregate"):
+        fn("list_aggregate")(F.array(F.lit(1)), "no_such_agg")
+
+
 def test_registry_breadth():
     # the reference registers 382 names (function_list.cpp); we cover the
     # practically-used surface — keep a floor so regressions are caught

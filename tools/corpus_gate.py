@@ -17,9 +17,12 @@ the FULL gate before it is allowed into the end-of-round snapshot.
 
 from __future__ import annotations
 
+import os
 import re
 import subprocess
 import sys
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def main() -> int:
@@ -29,7 +32,7 @@ def main() -> int:
         "tests/test_slt_corpus.py", "-q", "--no-header", "-p", "no:warnings",
     ] + args
     proc = subprocess.run(
-        cmd, cwd="/root/repo", capture_output=True, text=True,
+        cmd, cwd=ROOT, capture_output=True, text=True,
         timeout=2 * 60 * 60,
     )
     out = proc.stdout + proc.stderr

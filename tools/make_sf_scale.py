@@ -18,8 +18,10 @@ Usage: python tools/make_sf_scale.py [copies] [out_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SRC = "/root/testdata/sf0.1"
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -42,7 +44,7 @@ SMALL_DIMS = ("region", "nation")  # copied once, never replicated
 
 def main() -> None:
     copies = int(sys.argv[1]) if len(sys.argv) > 1 else 10
-    out_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/testdata_sf1"
+    out_dir = sys.argv[2] if len(sys.argv) > 2 else os.path.join(ROOT, "testdata_sf1")
 
     from pyspark.sql import functions as F
 
@@ -82,5 +84,5 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     main()

@@ -826,14 +826,14 @@ def _resync_from_duck(spark, con) -> None:
     # typeof()/ingest-normalization binds against the registry
     try:
         from myduckdb_spark import infoschema as ischema
-        from myduckdb_spark.sql import _CARRIER_ERASED_DTYPES
+        from myduckdb_spark.functions.typenames import ERASED
 
         trows = con.execute(
             "SELECT table_name, column_name, data_type "
             "FROM information_schema.columns WHERE table_schema = 'main'"
         ).fetchall()
         for tname, cname, dt in trows:
-            if dt.upper() not in _CARRIER_ERASED_DTYPES:
+            if dt.upper() not in ERASED:
                 continue
             for c in ischema.COLUMN_META.get(tname.lower(), []):
                 if c["name"].lower() == cname.lower():
