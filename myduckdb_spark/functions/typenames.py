@@ -11,11 +11,12 @@ Spark type as DuckDB names it, and SQL typeof() reaches it through the
 
 Declared name first: the catalog registry (``infoschema.COLUMN_META``)
 keeps each declared column's name, and every surface that names a
-column's type (typeof, DESCRIBE, PRAGMA table_info, information_schema,
-duckdb_columns(), EXPORT DATABASE) reads it before it renders the Spark
-type. TIME is the microsecond convention: stored as BIGINT µs since
-midnight, it reports BIGINT everywhere. INTERVAL, STRUCT(...) and
-MAP(...) have no row; declaring a column with them fails.
+column's type (typeof, and through ``infoschema.column_records`` DESCRIBE,
+PRAGMA table_info, information_schema, duckdb_columns(), EXPORT DATABASE)
+reads it before it renders the Spark type. TIME is the microsecond
+convention: stored as BIGINT µs since midnight, it reports BIGINT
+everywhere. INTERVAL, STRUCT(...) and MAP(...) have no row; declaring a
+column with them fails.
 """
 
 from __future__ import annotations
@@ -66,6 +67,13 @@ TYPES: tuple[DuckType, ...] = (
 )
 
 _BY_SPELLING = {s: r for r in TYPES for s in (r.name, *r.aliases)}
+
+# multi-word spellings as one regex alternation, longest first: a
+# column-definition parser tries them before it reads a one-word type
+MULTI_WORD = "|".join(
+    r"\s+".join(s.split())
+    for s in sorted((s for s in _BY_SPELLING if " " in s), key=len, reverse=True)
+)
 
 # the names whose storage type loses them: only these need the registry
 ERASED: frozenset[str] = frozenset(r.name for r in TYPES if r.erased)

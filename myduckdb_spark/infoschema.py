@@ -5,18 +5,27 @@ view definitions), duckdb_constraints()/duckdb_views() table functions,
 and Postgres-compatible constraint naming (<table>_<cols>_pkey/_key/
 _check/_fkey).
 
-The engine keeps a catalog-metadata registry here:
+Every surface that lists columns (DESCRIBE, SHOW ALL TABLES, PRAGMA
+table_info, information_schema.columns, duckdb_columns(), pg_description,
+EXPORT DATABASE) renders ``column_records``, which reads each column fact
+from the one store that owns it, as the reference reads one catalog entry
+per table (duck_table_entry.cpp):
 
-* engine DDL (CREATE SCHEMA, CREATE TABLE column defs) populates it;
-* the sqllogictest harness MIRRORS DuckDB state into it per file, the
-  same state-mirroring pattern as column collations (tools/slt.py
-  _snapshot) — the engine then COMPUTES every information_schema row
-  itself (schema membership, constraint names, usage expansion).
+* column set, order and storage type: the live Spark schema
+  (``ManagedTable.scan()`` or ``spark.table``);
+* declared DuckDB type name: ``COLUMN_META`` (``declare``) — the catalog
+  remembers what the user wrote where the Spark carrier erases it
+  (HUGEINT stored as DECIMAL(38,0) still reports HUGEINT);
+* NOT NULL: ``CONSTRAINTS`` plus the table's primary key;
+* DEFAULT and PRI/UNI: the ManagedTable manifest (``defaults``,
+  ``key()``/``keys()``).
 
-Column metadata records the DECLARED types (e.g. HUGEINT with numeric
-precision 128) — the catalog remembers what the user wrote even where
-the engine's Spark carrier widens (DECIMAL(38,0)); that is what the
-reference's information_schema reports and what a user introspects.
+``COLUMN_META`` rows are the whole record only for objects the engine
+does not store: a view's CREATE-time snapshot, a file scan's footer
+types, and DuckDB state the sqllogictest harness mirrors per file
+(``mirror_duckdb``, tools/slt.py). The engine then computes every
+information_schema row itself (schema membership, constraint names,
+usage expansion).
 
 At scale this surface is driver-side metadata only — no executor work.
 """
@@ -46,8 +55,10 @@ def create_schema(name: str) -> int:
 # {catalog, schema, name, type}  type: BASE TABLE | VIEW | LOCAL TEMPORARY
 TABLE_META: dict[str, dict] = {}
 
-# lowercase object key -> [{name, ordinal, dtype, prec, scale, nullable,
-# default}] with dtype spelled in duck type names
+# lowercase object key -> column rows with dtype spelled in duck type
+# names: [{name, dtype}] declared names of an engine-stored table, or the
+# whole [{name, ordinal, dtype, prec, scale, nullable, default}] record of
+# an object the engine does not store
 COLUMN_META: dict[str, list[dict]] = {}
 
 # [{catalog, schema, table, ctype, text, columns}]
@@ -171,18 +182,155 @@ def column_row(name: str, ordinal: int, dtype: str,
     }
 
 
-def column_types(key: str, fields) -> list[str]:
-    """DuckDB type names of object ``key``'s Spark fields: the declared
-    name this registry keeps first (typenames.column_type)."""
-    declared = {c["name"].lower(): c["dtype"] for c in COLUMN_META.get(key.lower(), [])}
-    return [typenames.column_type(declared.get(f.name.lower()), f.dataType.simpleString())
-            for f in fields]
+def declare(key: str, cols: list[tuple[str, str]]) -> None:
+    """Record the declared DuckDB types of (name, type) columns of the
+    engine-stored table ``key`` (CREATE TABLE, ADD COLUMN, ALTER TYPE);
+    the rest of each record is read where it is owned (column_records)."""
+    names = {n.lower() for n, _t in cols}
+    rows = [r for r in COLUMN_META.get(key.lower(), [])
+            if r["name"].lower() not in names]
+    COLUMN_META[key.lower()] = rows + [
+        {"name": n, "dtype": typenames.canonical(t)} for n, t in cols
+    ]
+
+
+def declared_types(key: str) -> dict[str, str]:
+    """Lowercase column name -> declared DuckDB type of object ``key``."""
+    return {r["name"].lower(): r["dtype"] for r in COLUMN_META.get(key.lower(), [])}
+
+
+def constraints_of(key: str) -> list[dict]:
+    m = TABLE_META.get(key.lower())
+    schema, bare = (m["schema"], m["name"]) if m else ("main", key)
+    return [c for c in CONSTRAINTS if c["schema"] == schema and c["table"] == bare]
+
+
+def not_null(key: str) -> set[str]:
+    """Lowercase names of the columns a NOT NULL constraint covers."""
+    return {c["columns"][0].lower() for c in constraints_of(key)
+            if c["ctype"] == "NOT NULL" and c["columns"]}
+
+
+def column_records(key: str, fields=None, table=None) -> list[dict]:
+    """Column records of catalog object ``key``: {name, ordinal, dtype,
+    prec, scale, nullable, default, key (PRI/UNI/None)}, what every
+    introspection surface renders. ``fields`` is the object's live Spark
+    schema, None for an object the engine does not store (its registry
+    rows are the whole record); ``table`` is the ManagedTable that stores
+    it, owning defaults and keys (a table's nullability is its
+    constraints, not its Spark carrier's). PRI/UNI of an object no
+    ManagedTable stores come from its registered constraints."""
+    if table is not None:
+        pk = set(table.key() or [])
+        uni = {c for ks in table.keys() for c in ks}
+    else:
+        cons = constraints_of(key)
+        pk = {x for c in cons if c["ctype"] == "PRIMARY KEY" for x in c["columns"]}
+        uni = {x for c in cons if c["ctype"] == "UNIQUE" for x in c["columns"]}
+
+    def key_of(name: str) -> str | None:
+        return "PRI" if name in pk else "UNI" if name in uni else None
+
+    if fields is None:
+        return [{**r, "key": key_of(r["name"])} for r in COLUMN_META.get(key.lower(), [])]
+    declared = declared_types(key)
+    dflt = table.defaults if table else {}
+    nn = not_null(key)
+    out = []
+    for i, f in enumerate(fields, 1):
+        low = f.name.lower()
+        r = column_row(
+            f.name, i,
+            typenames.column_type(declared.get(low), f.dataType.simpleString()),
+            nullable=(table is not None or f.nullable)
+            and f.name not in pk and low not in nn,
+            default=dflt.get(low),
+        )
+        r["key"] = key_of(f.name)
+        out.append(r)
+    return out
+
+
+def rename_column(key: str, old: str, new: str) -> None:
+    """RENAME COLUMN: the declared type, constraint columns and comment
+    follow the column (duckdb_table_entry.cpp RenameColumn)."""
+    for r in COLUMN_META.get(key.lower(), []):
+        if r["name"].lower() == old.lower():
+            r["name"] = new
+    for c in constraints_of(key):
+        c["columns"] = [new if x.lower() == old.lower() else x for x in c["columns"]]
+        if c["ctype"] in ("PRIMARY KEY", "UNIQUE"):
+            c["text"] = f"{c['ctype']}({', '.join(c['columns'])})"
+    ck = ("column", f"{key.lower()}.{old.lower()}")
+    if ck in COMMENTS:
+        COMMENTS[("column", f"{key.lower()}.{new.lower()}")] = COMMENTS.pop(ck)
+
+
+def add_constraint(key: str, ctype: str, columns: list[str],
+                   text: str | None = None) -> None:
+    """Record a constraint of object ``key``; PRIMARY KEY / UNIQUE / NOT
+    NULL spell their own text."""
+    m = TABLE_META.get(key.lower(), {})
+    CONSTRAINTS.append({
+        "catalog": m.get("catalog", "memory"), "schema": m.get("schema", "main"),
+        "table": m.get("name", key), "ctype": ctype, "columns": columns,
+        "text": text or (ctype if ctype == "NOT NULL"
+                         else f"{ctype}({', '.join(columns)})"),
+    })
+
+
+def set_not_null(key: str, col: str, on: bool) -> None:
+    """ALTER COLUMN SET / DROP NOT NULL."""
+    drop = [c for c in constraints_of(key) if c["ctype"] == "NOT NULL"
+            and [x.lower() for x in c["columns"]] == [col.lower()]]
+    CONSTRAINTS[:] = [c for c in CONSTRAINTS if c not in drop]
+    if on:
+        add_constraint(key, "NOT NULL", [col])
+
+
+def drop_column(key: str, col: str) -> None:
+    """DROP COLUMN: the column's declared type, NOT NULL constraint and
+    comment go with it."""
+    COLUMN_META[key.lower()] = [r for r in COLUMN_META.get(key.lower(), [])
+                                if r["name"].lower() != col.lower()]
+    set_not_null(key, col, False)
+    COMMENTS.pop(("column", f"{key.lower()}.{col.lower()}"), None)
+
+
+def rename_object(old: str, new: str) -> None:
+    """ALTER TABLE RENAME TO: the registry rows of ``old`` move to ``new``."""
+    o, n = old.lower(), new.lower()
+    for c in constraints_of(old):
+        c["table"] = new
+    if o in TABLE_META:
+        TABLE_META[n] = {**TABLE_META.pop(o), "name": new}
+    if o in COLUMN_META:
+        COLUMN_META[n] = COLUMN_META.pop(o)
+    for k, kk in list(COMMENTS):
+        if k == "table" and kk == o:
+            COMMENTS[(k, n)] = COMMENTS.pop((k, kk))
+        elif k == "column" and kk.startswith(o + "."):
+            COMMENTS[(k, n + kk[len(o):])] = COMMENTS.pop((k, kk))
+    for v in INDEXES.values():
+        if v["table"].lower() == o:
+            v["table"] = new
 
 
 def drop_object(key: str) -> None:
-    TABLE_META.pop(key.lower(), None)
-    COLUMN_META.pop(key.lower(), None)
-    VIEW_SQL.pop(key.lower(), None)
+    """Forget object ``key``: its rows, constraints, comments and indexes."""
+    k = key.lower()
+    drop = constraints_of(key)
+    CONSTRAINTS[:] = [c for c in CONSTRAINTS if c not in drop]
+    TABLE_META.pop(k, None)
+    COLUMN_META.pop(k, None)
+    VIEW_SQL.pop(k, None)
+    for c in list(COMMENTS):
+        if c[1] == k and c[0] in ("table", "view") or \
+                c[0] == "column" and c[1].startswith(k + "."):
+            COMMENTS.pop(c)
+    for n in [n for n, v in INDEXES.items() if v["table"].lower() == k]:
+        INDEXES.pop(n)
+        COMMENTS.pop(("index", n), None)
 
 
 def drop_schema(schema: str) -> list[str]:

@@ -1866,9 +1866,7 @@ _BLOB_COLS: list[set] = [set()]
 def _statement_touches_blobs(text: str) -> bool:
     cols = set()
     for t in re.findall(r"\bFROM\s+\"?(\w+)\"?", text, re.I):
-        for c in ischema.COLUMN_META.get(t.lower(), []):
-            if c["dtype"] == "BLOB":
-                cols.add(c["name"].lower())
+        cols |= {c for c, dt in ischema.declared_types(t).items() if dt == "BLOB"}
     _BLOB_COLS[0] = cols
     if cols:
         return True
@@ -3108,12 +3106,11 @@ def _bind_registry_typeof(text: str) -> str:
     declared: dict[str, str] = {}
     ambiguous: set[str] = set()
     for t in re.findall(r"\bFROM\s+\"?([A-Za-z_]\w*)\"?", text, re.I):
-        for c in ischema.COLUMN_META.get(t.lower(), []):
-            nm = c["name"].lower()
-            if c["dtype"].replace("[]", "") in _REGISTRY_BOUND:
-                if nm in declared and declared[nm] != c["dtype"]:
+        for nm, dt in ischema.declared_types(t).items():
+            if dt.replace("[]", "") in _REGISTRY_BOUND:
+                if nm in declared and declared[nm] != dt:
                     ambiguous.add(nm)
-                declared[nm] = c["dtype"]
+                declared[nm] = dt
             else:
                 ambiguous.add(nm)
     for nm in ambiguous:
@@ -5801,7 +5798,8 @@ def _parse_column_defs(
         if re.match(r"^(UNIQUE|CHECK|FOREIGN)\b", p, re.I):
             continue
         m = re.match(
-            r'^("?[\w]+"?)\s+(\w+(?:\s*\(\s*\d+\s*(?:,\s*\d+\s*)?\))?)'
+            rf'^("?[\w]+"?)\s+((?:(?i:{typenames.MULTI_WORD})\b|\w+)'
+            r'(?:\s*\(\s*\d+\s*(?:,\s*\d+\s*)?\))?)'
             r'((?:\s*\[\s*\d*\s*\])*)(.*)$',
             p,
             re.S,
@@ -5969,7 +5967,9 @@ _ALTER = re.compile(
 def _alter_table(spark: SparkSession, exists_ok: str | None, name: str, act: str):
     """ALTER TABLE dispatch (reference parser: src/parser/statement/
     alter_statement.cpp; executor: duckdb_table_entry.cpp). Schema changes
-    land as metadata-only projection stages on the managed table."""
+    land as metadata-only projection stages on the managed table; the
+    catalog registry only carries the declared types, constraints and
+    comments along (column facts are read live, infoschema.column_records)."""
     if name not in _MANAGED:
         if exists_ok:
             return _count_df(spark, 0)
@@ -5990,15 +5990,8 @@ def _alter_table(spark: SparkSession, exists_ok: str | None, name: str, act: str
         _MANAGED[new] = _MANAGED.pop(name)
         if name.lower() in _COLUMN_COLLATIONS:
             _COLUMN_COLLATIONS[new.lower()] = _COLUMN_COLLATIONS.pop(name.lower())
-        # COMMENT ON entries follow the rename (comment_on.test)
-        for (k, kk) in list(ischema.COMMENTS):
-            if k == "table" and kk == name.lower():
-                ischema.COMMENTS[(k, new.lower())] = \
-                    ischema.COMMENTS.pop((k, kk))
-            elif k == "column" and kk.startswith(name.lower() + "."):
-                ischema.COMMENTS[
-                    (k, new.lower() + kk[len(name):])
-                ] = ischema.COMMENTS.pop((k, kk))
+        # registry rows and COMMENT ON entries follow (comment_on.test)
+        ischema.rename_object(name, new)
         try:
             spark.catalog.dropTempView(name)
         except Exception:
@@ -6020,12 +6013,8 @@ def _alter_table(spark: SparkSession, exists_ok: str | None, name: str, act: str
             (new if c == src else c, f"`{c}`", None) for c in cols
         ]
         tbl.alter(stage)
-        tbl.remap_constraint_cols({src: new})
-        ck = ("column", f"{name.lower()}.{src.lower()}")
-        if ck in ischema.COMMENTS:
-            ischema.COMMENTS[
-                ("column", f"{name.lower()}.{new.lower()}")
-            ] = ischema.COMMENTS.pop(ck)
+        tbl.remap_columns({src: new})
+        ischema.rename_column(name, src, new)
         _refresh_view(spark, name)
         return _count_df(spark, 0)
 
@@ -6035,8 +6024,9 @@ def _alter_table(spark: SparkSession, exists_ok: str | None, name: str, act: str
     if m and not re.match(r"ADD\s+(PRIMARY|UNIQUE|CHECK|FOREIGN)", act, re.I):
         soft, coldef = m.group(1), m.group(2).strip()
         dm = re.search(r"\bDEFAULT\s+(.+)$", coldef, re.I | re.S)
-        default = translate(dm.group(1).strip()) if dm else None
-        parsed, _k, _u, _cc, _dd, _x = _parse_column_defs(coldef)
+        default = dm.group(1).strip() if dm else None
+        declared: dict[str, str] = {}
+        parsed, _k, _u, _cc, _dd, _x = _parse_column_defs(coldef, declared)
         if len(parsed) != 1:
             raise ValueError(f"ALTER TABLE ADD: cannot parse {coldef!r}")
         cname, ctype = parsed[0]
@@ -6044,8 +6034,11 @@ def _alter_table(spark: SparkSession, exists_ok: str | None, name: str, act: str
             if soft:
                 return _count_df(spark, 0)
             raise ValueError(f"ALTER TABLE: column {cname} already exists")
-        stage = passthrough() + [(cname, default or "NULL", ctype)]
+        stage = passthrough() + [(cname, translate(default) if default else "NULL", ctype)]
         tbl.alter(stage)
+        if default:
+            tbl.set_defaults({**tbl.defaults, cname.lower(): default})
+        ischema.declare(name, [(cname, declared[cname.lower()])])
         _refresh_view(spark, name)
         return _count_df(spark, 0)
 
@@ -6071,6 +6064,8 @@ def _alter_table(spark: SparkSession, exists_ok: str | None, name: str, act: str
             )
         src = low[cname.lower()]
         tbl.alter([(c, f"`{c}`", None) for c in cols if c != src])
+        tbl.set_defaults({c: d for c, d in tbl.defaults.items() if c != src.lower()})
+        ischema.drop_column(name, src)
         _refresh_view(spark, name)
         return _count_df(spark, 0)
 
@@ -6085,7 +6080,8 @@ def _alter_table(spark: SparkSession, exists_ok: str | None, name: str, act: str
         if cname.lower() not in low:
             raise KeyError(f"ALTER TABLE: column {cname} does not exist")
         src = low[cname.lower()]
-        parsed, _k, _u, _cc, _dd, _x = _parse_column_defs(f"{src} {typetext}")
+        declared = {}
+        parsed, _k, _u, _cc, _dd, _x = _parse_column_defs(f"{src} {typetext}", declared)
         _n, ctype = parsed[0]
         expr = translate(using.strip()) if using else f"`{src}`"
         stage = [
@@ -6093,6 +6089,7 @@ def _alter_table(spark: SparkSession, exists_ok: str | None, name: str, act: str
             for c in cols
         ]
         tbl.alter(stage)
+        ischema.declare(name, [(src, declared[src.lower()])])
         _refresh_view(spark, name)
         return _count_df(spark, 0)
 
@@ -6117,20 +6114,7 @@ def _alter_table(spark: SparkSession, exists_ok: str | None, name: str, act: str
                 dfl.pop(src.lower(), None)
             tbl.set_defaults(dfl)
         else:
-            cat, sch, bare = _cat_schema_of(name)
-            ischema.CONSTRAINTS[:] = [
-                c for c in ischema.CONSTRAINTS
-                if not (c["ctype"] == "NOT NULL" and c["table"] == bare
-                        and c["schema"] == sch
-                        and [x.lower() for x in c["columns"]]
-                        == [src.lower()])
-            ]
-            if verb.upper() == "SET":
-                ischema.CONSTRAINTS.append({
-                    "catalog": cat, "schema": sch, "table": bare,
-                    "ctype": "NOT NULL", "text": "NOT NULL",
-                    "columns": [src],
-                })
+            ischema.set_not_null(name, src, verb.upper() == "SET")
         return _count_df(spark, 0)
     raise ValueError(f"ALTER TABLE: unsupported action {act!r}")
 
@@ -6266,13 +6250,12 @@ def _copy_statement(spark: SparkSession, target: str, direction: str,
                 # rebind typeof()/casts to the declared type
                 # (copy/parquet/writer/parquet_write_unsigned.test)
                 dmap = {
-                    c["name"]: c["dtype"]
-                    for c in ischema.COLUMN_META.get(name.lower(), [])
-                    if c["dtype"] in typenames.ERASED
+                    c: dt for c, dt in ischema.declared_types(name).items()
+                    if dt in typenames.ERASED
                 }
                 if dmap:
                     def _out_col(c: str):
-                        dt = dmap.get(c)
+                        dt = dmap.get(c.lower())
                         if dt in ("HUGEINT", "UHUGEINT"):
                             # parquet has no int128 — the reference's
                             # writer degrades HUGEINT to DOUBLE
@@ -7319,16 +7302,17 @@ def _dml_statement(spark: SparkSession, text: str) -> DataFrame | None:
         _MANAGED[name] = storage.ManagedTable.create(spark, root, spark.sql(translate(select)))
         _refresh_view(spark, name)
         cat, sch, bare = _cat_schema_of(name)
+        ischema.drop_object(name)
         ischema.register_table(
             name, "temp" if is_temp else cat, sch, bare,
             "LOCAL TEMPORARY" if is_temp else "BASE TABLE",
         )
         # carrier-erased duck types survive CTAS through field metadata
         # (e.g. the CSV sniffer's TIME demotion, io.py _fix_time_columns)
-        # — register them so typeof() binds the declared name
+        # — declare them so typeof() binds the declared name
         fields = _MANAGED[name].scan().schema.fields
         if any(f.metadata.get("duck_type") in _REGISTRY_BOUND for f in fields):
-            ischema.register_columns(name, _scan_columns(fields))
+            ischema.declare(name, [(c["name"], c["dtype"]) for c in _scan_columns(fields)])
         return _count_df(spark, _MANAGED[name].count())
     m = _CREATE_TBL.match(text)
     if m and not _CTAS.match(text):
@@ -7386,37 +7370,22 @@ def _dml_statement(spark: SparkSession, text: str) -> DataFrame | None:
         else:
             _COLUMN_COLLATIONS.pop(name.lower(), None)
         _refresh_view(spark, name)
-        # catalog-metadata registry: declared columns + key constraints
-        # feed information_schema (myduckdb_spark.infoschema)
+        # catalog-metadata registry: declared types + constraints feed
+        # information_schema (myduckdb_spark.infoschema)
         cat, sch, bare = _cat_schema_of(name)
+        ischema.drop_object(name)
         ischema.register_table(
             name, "temp" if is_temp else cat, sch, bare,
             "LOCAL TEMPORARY" if is_temp else "BASE TABLE",
         )
-        notnull = {x["columns"][0].lower() for x in extras
-                   if x["ctype"] == "NOT NULL"}
-        ischema.register_columns(name, [
-            ischema.column_row(
-                n, i, declared[n.lower()],
-                nullable=n not in (key or []) and n.lower() not in notnull,
-                default=defaults.get(n.lower()) if defaults else None,
-            )
-            for i, (n, _t) in enumerate(cols, 1)
-        ])
+        ischema.declare(name, [(n, declared[n.lower()]) for n, _t in cols])
         if key:
-            ischema.CONSTRAINTS.append({
-                "catalog": cat, "schema": sch, "table": bare,
-                "ctype": "PRIMARY KEY",
-                "text": f"PRIMARY KEY({', '.join(key)})", "columns": key,
-            })
+            ischema.add_constraint(name, "PRIMARY KEY", key)
         # live oracle adds an implicit NOT NULL row per PRIMARY KEY column
         nn_seen = set()
         for c in (key or []):
             nn_seen.add(c.lower())
-            ischema.CONSTRAINTS.append({
-                "catalog": cat, "schema": sch, "table": bare,
-                "ctype": "NOT NULL", "text": "NOT NULL", "columns": [c],
-            })
+            ischema.add_constraint(name, "NOT NULL", [c])
         for x in extras:
             if x["ctype"] == "NOT NULL":
                 if x["columns"][0].lower() in nn_seen:
@@ -7431,16 +7400,9 @@ def _dml_statement(spark: SparkSession, text: str) -> DataFrame | None:
                         re.findall(r'"?(\w+)"?', x.get("expression", ""))
                     ) if w.lower() in names
                 ]
-            ischema.CONSTRAINTS.append({
-                "catalog": cat, "schema": sch, "table": bare,
-                **{k: x[k] for k in ("ctype", "text", "columns")},
-            })
+            ischema.add_constraint(name, x["ctype"], x["columns"], x["text"])
         for u in uniques:
-            ischema.CONSTRAINTS.append({
-                "catalog": cat, "schema": sch, "table": bare,
-                "ctype": "UNIQUE", "text": f"UNIQUE({', '.join(u)})",
-                "columns": u,
-            })
+            ischema.add_constraint(name, "UNIQUE", u)
         return _count_df(spark, 0)
     m = _CREATE_INDEX.match(text)
     if m:
@@ -7590,8 +7552,7 @@ def _dml_statement(spark: SparkSession, text: str) -> DataFrame | None:
         # into scans/sorts (copy/parquet/writer/parquet_write_uuid.test)
         _tcols = tbl.scan().columns
         if len(src_df.columns) == len(_tcols):
-            _dt = {c["name"].lower(): c["dtype"]
-                   for c in ischema.COLUMN_META.get(name.lower(), [])}
+            _dt = ischema.declared_types(name)
             _uuid_idx = [i for i, c in enumerate(_tcols)
                          if _dt.get(c.lower()) == "UUID"]
             if _uuid_idx:
@@ -7722,17 +7683,13 @@ def _dml_statement(spark: SparkSession, text: str) -> DataFrame | None:
                     raise ValueError(
                         f'Constraint Error: Duplicate key "{keyval}" violates primary key constraint.'
                     )
-            # NOT NULL enforcement (physical_insert.cpp): a registered
-            # NOT NULL / PRIMARY KEY column rejects NULL rows
-            _sch, _bare = _schema_of(name)
-            nn_cols = [
-                c["columns"][0] for c in ischema.CONSTRAINTS
-                if c["ctype"] == "NOT NULL" and c["table"] == _bare
-                and c["schema"] == _sch and c["columns"]
-                and c["columns"][0] in src_df.columns
-            ]
-            if nn_cols:
-                bad = src_df.filter(
+            # NOT NULL enforcement (physical_insert.cpp): a NOT NULL /
+            # PRIMARY KEY column rejects NULL rows; source columns bind to
+            # the table's by position, as tbl.insert binds them
+            nn = ischema.not_null(name) | {c.lower() for c in tbl.key() or []}
+            nn_cols = [c for c in _tcols if c.lower() in nn]
+            if nn_cols and len(src_df.columns) == len(_tcols):
+                bad = src_df.toDF(*_tcols).filter(
                     " OR ".join(f"`{c}` IS NULL" for c in nn_cols)
                 ).limit(1).collect()
                 if bad:
@@ -7787,12 +7744,6 @@ def _dml_statement(spark: SparkSession, text: str) -> DataFrame | None:
         if name in _VIEWS:
             _VIEWS.pop(name)
             ischema.drop_object(name)
-            for k in list(ischema.COMMENTS):
-                if (k[0] == "view" and k[1] == name.lower()) or (
-                    k[0] == "column"
-                    and k[1].startswith(name.lower() + ".")
-                ):
-                    ischema.COMMENTS.pop(k)
             try:
                 spark.catalog.dropTempView(name)
             except Exception:
@@ -7830,23 +7781,8 @@ def _dml_statement(spark: SparkSession, text: str) -> DataFrame | None:
         if name in _MANAGED:
             _MANAGED.pop(name)
             _COLUMN_COLLATIONS.pop(name.lower(), None)
-            ischema.drop_object(name)
-            _sch, _bare = _schema_of(name)
-            ischema.CONSTRAINTS[:] = [
-                c for c in ischema.CONSTRAINTS
-                if not (c["schema"] == _sch and c["table"] == _bare)
-            ]
             # a re-created same-named table must not inherit comments
-            for k in list(ischema.COMMENTS):
-                if (k[0] == "table" and k[1] == name.lower()) or (
-                    k[0] == "column"
-                    and k[1].startswith(name.lower() + ".")
-                ):
-                    ischema.COMMENTS.pop(k)
-            for n in [n for n, v in ischema.INDEXES.items()
-                      if v["table"].lower() == name.lower()]:
-                ischema.INDEXES.pop(n)
-                ischema.COMMENTS.pop(("index", n), None)
+            ischema.drop_object(name)
             spark.catalog.dropTempView(name)
         elif not m.group(1):
             raise KeyError(f"DROP TABLE: unknown table {name}")
@@ -8033,16 +7969,35 @@ _DESCRIBE_SCHEMA = (
 )
 
 
-def _catalog_names(spark: SparkSession) -> list[str]:
-    """Engine catalog listing: managed tables + CREATE VIEW views (the
-    reference's main-schema tables/views; Spark-side ephemeral temp views
-    that back them are implementation detail, not catalog entries)."""
-    names = set(_MANAGED) | set(_VIEWS)
-    return sorted(names)
+def _catalog_objects() -> list[tuple[str, dict]]:
+    """Every catalog object as (engine name, registry row {catalog,
+    schema, name, type}) in (catalog, schema, name) order: the registry's
+    objects plus any managed table or front-door view it does not hold.
+    The one list behind SHOW [ALL] TABLES, information_schema.tables/
+    columns and duckdb_tables()/columns(); Spark-side temp views that back
+    them are implementation detail, not catalog entries."""
+    engine = {n.lower(): n for n in (*_MANAGED, *_VIEWS)}
+    objs = {k: (engine.get(k, k), m) for k, m in ischema.TABLE_META.items()}
+    for k, n in engine.items():
+        objs.setdefault(k, (n, {
+            "catalog": "memory", "schema": "main", "name": n,
+            "type": "BASE TABLE" if n in _MANAGED else "VIEW",
+        }))
+    return sorted(objs.values(),
+                  key=lambda o: (o[1]["catalog"], o[1]["schema"], o[1]["name"]))
 
 
-def _duck_field_type(f) -> str:
-    return typenames.duck_name(f.dataType.simpleString())
+def _columns(spark: SparkSession, name: str) -> list[dict]:
+    """Column records of object ``name`` (infoschema.column_records): a
+    managed table's from its scan and manifest, a view's CREATE-time
+    snapshot and mirrored DuckDB state from the registry, any other Spark
+    table's from its schema."""
+    tbl = _MANAGED.get(name) or _MANAGED.get(name.lower())
+    if tbl is not None:
+        return ischema.column_records(name, tbl.scan().schema.fields, tbl)
+    if name in _VIEWS or name.lower() in ischema.TABLE_META:
+        return ischema.column_records(name)
+    return ischema.column_records(name, spark.table(name).schema.fields)
 
 
 def _describe_statement(spark: SparkSession, text: str) -> DataFrame | None:
@@ -8055,14 +8010,16 @@ def _describe_statement(spark: SparkSession, text: str) -> DataFrame | None:
     * ``DESCRIBE SELECT …`` / ``SHOW SELECT …`` → same shape, YES nulls
     * ``DESCRIBE`` / ``SHOW ALL TABLES``  → database, schema, name,
       column_names, column_types, temporary
-    * ``SHOW TABLES``                     → name
+    * ``SHOW TABLES``                     → name (main schema)
     """
     from pyspark.sql import types as T
 
     if _SHOW_TABLES.match(text):
         return _rows_df(
             spark,
-            [(n,) for n in _catalog_names(spark)], "name string"
+            sorted((m["name"],) for _n, m in _catalog_objects()
+                   if m["schema"] == "main" and m["catalog"] in ("memory", "temp")),
+            "name string",
         )
     if re.match(r"^\s*SHOW\s+DATABASES\s*;?\s*$", text, re.I):
         return _rows_df(
@@ -8072,22 +8029,13 @@ def _describe_statement(spark: SparkSession, text: str) -> DataFrame | None:
         )
     if _DESCRIBE_ALL.match(text) or _SHOW_ALL_TABLES.match(text):
         rows = []
-        for n in _catalog_names(spark):
-            try:
-                sch = (
-                    _MANAGED[n].scan().schema
-                    if n in _MANAGED else spark.table(n).schema
-                )
-            except Exception:
-                continue
-            rows.append(
-                (
-                    "memory", "main", n,
-                    [f.name for f in sch.fields],
-                    ischema.column_types(n, sch.fields),
-                    False,
-                )
-            )
+        for n, m in _catalog_objects():
+            cols = _columns(spark, n)
+            rows.append((
+                m["catalog"], m["schema"], m["name"],
+                [c["name"] for c in cols], [c["dtype"] for c in cols],
+                m["catalog"] == "temp",
+            ))
         return _rows_df(
             spark,
             rows,
@@ -8110,7 +8058,8 @@ def _describe_statement(spark: SparkSession, text: str) -> DataFrame | None:
     if m:
         df = sql(spark, m.group(1))
         rows = [
-            (f.name, _duck_field_type(f), "YES", None, None, None)
+            (f.name, typenames.duck_name(f.dataType.simpleString()), "YES",
+             None, None, None)
             for f in df.schema.fields
         ]
         return _rows_df(spark, rows, _DESCRIBE_SCHEMA)
@@ -8120,26 +8069,14 @@ def _describe_statement(spark: SparkSession, text: str) -> DataFrame | None:
         text, re.I,
     ):
         name = m.group(2).strip()
-        tbl = _MANAGED.get(name) or _MANAGED.get(name.lower())
-        if tbl is not None:
-            sch = tbl.scan().schema
-            pri = set(tbl.key() or [])
-            uni = {c for ks in tbl._manifest().get("unique", []) for c in ks}
-            dflts = tbl.defaults
-        elif name in _VIEWS or spark.catalog.tableExists(name):
-            sch = spark.table(name).schema
-            pri, uni, dflts = set(), set(), {}
-        else:
+        if name not in _MANAGED and name.lower() not in _MANAGED \
+                and not spark.catalog.tableExists(name):
             raise ValueError(f"Table with name {name} does not exist!")
-        rows = []
-        for f, dt in zip(sch.fields, ischema.column_types(name, sch.fields)):
-            key = "PRI" if f.name in pri else ("UNI" if f.name in uni else None)
-            null = "NO" if (f.name in pri or not f.nullable) else "YES"
-            dflt = dflts.get(f.name)
-            rows.append(
-                (f.name, dt, null, key,
-                 str(dflt) if dflt is not None else None, None)
-            )
+        rows = [
+            (c["name"], c["dtype"], "YES" if c["nullable"] else "NO",
+             c["key"], c["default"], None)
+            for c in _columns(spark, name)
+        ]
         return _rows_df(spark, rows, _DESCRIBE_SCHEMA)
     return None
 
@@ -8157,8 +8094,8 @@ def _bind_information_schema(spark: SparkSession, text: str) -> str:
     temp views and substituted into the query. Rows come from the
     catalog-metadata registry (myduckdb_spark.infoschema — engine DDL and
     harness state-mirroring populate it: declared types, schemas, temp
-    catalog, constraint structure) with a live-catalog fallback for
-    session views created outside the front door."""
+    catalog, constraint structure); tables and columns list the catalog
+    objects (_catalog_objects) and their column records (_columns)."""
     used = {
         m.group(1).lower()
         for m in re.finditer(
@@ -8197,28 +8134,15 @@ def _bind_information_schema(spark: SparkSession, text: str) -> str:
             r"\bduckdb_databases\b(?!_)", "__duckdb_databases",
             text, flags=re.I,
         )
-    live = list(_catalog_names(spark))
+    objs = _catalog_objects()
     if "tables" in used:
-        rows = []
-        seen = set()
-        for key, m in ischema.TABLE_META.items():
-            seen.add(key)
-            rows.append((m["catalog"], m["schema"], m["name"], m["type"],
-                         None, None, None, None, None,
-                         "NO" if m["type"] == "VIEW" else "YES", "NO",
-                         None))
-        for n in live:
-            if n.lower() in seen:
-                continue
-            rows.append(
-                ("memory", "main", n,
-                 "VIEW" if n in _VIEWS and n not in _MANAGED
-                 else "BASE TABLE",
-                 None, None, None, None, None, "YES", "NO", None)
-            )
         _rows_df(
             spark,
-            rows,
+            [(m["catalog"], m["schema"], m["name"], m["type"],
+              None, None, None, None, None,
+              "NO" if m["type"] == "VIEW" else "YES", "NO", None)
+             # DuckDB lists views after every table here
+             for _n, m in sorted(objs, key=lambda o: o[1]["type"] == "VIEW")],
             "table_catalog string, table_schema string, table_name string,"
             " table_type string, self_referencing_column_name string, "
             "reference_generation string, user_defined_type_catalog "
@@ -8227,36 +8151,12 @@ def _bind_information_schema(spark: SparkSession, text: str) -> str:
             "is_typed string, commit_action string",
         ).createOrReplaceTempView("__is_tables")
     if "columns" in used:
-        objs = {}  # key -> (catalog, schema, name, column rows)
-        for key, cols in ischema.COLUMN_META.items():
-            m = ischema.TABLE_META.get(key) or {
-                "catalog": "memory", "schema": "main", "name": key,
-            }
-            objs[key] = (m["catalog"], m["schema"], m["name"], cols)
-        for n in live:
-            if n.lower() in objs:
-                continue
-            try:
-                tbl = _MANAGED.get(n) or _MANAGED.get(n.lower())
-                sch = tbl.scan().schema if tbl else spark.table(n).schema
-            except Exception:
-                continue  # dropped concurrently; registry objects never
-                # hit this path (wide managed tables are registry-first)
-            dflts = tbl.defaults if tbl else {}
-            objs[n.lower()] = ("memory", "main", n, [
-                ischema.column_row(f.name, i, _duck_field_type(f),
-                                   f.nullable, dflts.get(f.name))
-                for i, f in enumerate(sch.fields, 1)
-            ])
-        crows = [
-            (cat, sch, tname, c["name"], c["ordinal"],
-             str(c["default"]) if c["default"] is not None else None,
-             "YES" if c["nullable"] else "NO", c["dtype"], c["prec"], c["scale"])
-            for cat, sch, tname, cols in objs.values() for c in cols
-        ]
         _rows_df(
             spark,
-            crows,
+            [(m["catalog"], m["schema"], m["name"], c["name"], c["ordinal"],
+              c["default"], "YES" if c["nullable"] else "NO", c["dtype"],
+              c["prec"], c["scale"])
+             for n, m in objs for c in _columns(spark, n)],
             "table_catalog string, table_schema string, table_name string, "
             "column_name string, ordinal_position int, column_default "
             "string, is_nullable string, data_type string, "
@@ -8359,10 +8259,13 @@ def _bind_duckdb_tvfs(spark: SparkSession, text: str) -> str:
         return text
     C = ischema.COMMENTS
     _DB_OID = 1000
-    t_oid = {n.lower(): 2000 + i
-             for i, n in enumerate(sorted(_MANAGED, key=str.lower))}
-    v_oid = {n.lower(): 3000 + i
-             for i, n in enumerate(sorted(_VIEWS, key=str.lower))}
+    objs = _catalog_objects()
+    meta = dict(objs)
+    name_of = {n.lower(): n for n, _m in objs}
+    t_oid = {n.lower(): 2000 + i for i, (n, _m) in
+             enumerate(o for o in objs if o[1]["type"] != "VIEW")}
+    v_oid = {n.lower(): 3000 + i for i, (n, _m) in
+             enumerate(o for o in objs if o[1]["type"] == "VIEW")}
     i_oid = {n: 4000 + i for i, n in enumerate(sorted(ischema.INDEXES))}
     s_oid = {n.lower(): 5000 + i
              for i, n in enumerate(sorted(_seq_store()._seqs,
@@ -8373,28 +8276,6 @@ def _bind_duckdb_tvfs(spark: SparkSession, text: str) -> str:
              for i, n in enumerate(sorted(_macros.macro_names(),
                                           key=str.lower))}
 
-    def _colnames(n: str) -> list[str]:
-        try:
-            if n in _MANAGED:
-                return _MANAGED[n].scan().columns
-            return spark.table(n).columns
-        except Exception:
-            return []
-
-    def _obj_meta(n: str) -> tuple[str, str, str, bool]:
-        """(database_name, schema_name, bare_name, temporary) — engine
-        keys flatten schema-qualified objects to `<schema>__<name>`; the
-        registry keeps the real split (duckdb_views.test)."""
-        meta = ischema.TABLE_META.get(n.lower(), {})
-        temp = meta.get("type") == "LOCAL TEMPORARY" \
-            or meta.get("catalog") == "temp"
-        return (
-            "temp" if temp else meta.get("catalog", "memory"),
-            meta.get("schema", "main"),
-            meta.get("name", n),
-            temp,
-        )
-
     def _reg_view(name: str, rows: list[tuple], ddl: str) -> None:
         _rows_df(spark, rows, ddl).createOrReplaceTempView(
             f"__{name}"
@@ -8402,25 +8283,21 @@ def _bind_duckdb_tvfs(spark: SparkSession, text: str) -> str:
 
     if "duckdb_tables" in used:
         rows = []
-        for n, tbl in sorted(_MANAGED.items()):
-            try:
-                sch = tbl.scan().schema
-                est = tbl.count()
-            except Exception:
+        for n, m in objs:
+            if m["type"] == "VIEW":
                 continue
-            keyed = bool(tbl.keys())
-            checks = sum(
-                1 for c in ischema.CONSTRAINTS
-                if c["ctype"] == "CHECK" and c["table"].lower() == n.lower()
-            )
+            tbl = _MANAGED.get(n)
+            cons = [c["ctype"] for c in ischema.constraints_of(n)]
             idxs = sum(1 for v in ischema.INDEXES.values()
                        if v["table"].lower() == n.lower())
-            db, schn, bare, temp = _obj_meta(n)
             rows.append((
-                db, _DB_OID, schn, 1001, bare, t_oid[n.lower()],
-                C.get(("table", n.lower())), {}, False, temp, keyed,
-                est, len(sch.fields), idxs + (1 if keyed else 0), checks,
-                f"CREATE TABLE {bare}(...);",
+                m["catalog"], _DB_OID, m["schema"], 1001, m["name"],
+                t_oid[n.lower()], C.get(("table", n.lower())), {}, False,
+                m["catalog"] == "temp",
+                "PRIMARY KEY" in cons or bool(tbl and tbl.key()),
+                tbl.count() if tbl else 0, len(_columns(spark, n)),
+                idxs + cons.count("PRIMARY KEY") + cons.count("UNIQUE"),
+                cons.count("CHECK"), f"CREATE TABLE {m['name']}(...);",
             ))
         _reg_view(
             "duckdb_tables", rows,
@@ -8433,65 +8310,17 @@ def _bind_duckdb_tvfs(spark: SparkSession, text: str) -> str:
         )
     if "duckdb_columns" in used:
         rows = []
-        for n, tbl in sorted(_MANAGED.items()):
-            try:
-                sch = tbl.scan().schema
-            except Exception:
-                continue
-            cmeta = {c["name"].lower(): c
-                     for c in ischema.COLUMN_META.get(n.lower(), [])}
-            db, schn, bare, _tmp = _obj_meta(n)
-            for i, f in enumerate(sch.fields):
-                cm = cmeta.get(f.name.lower(), {})
-                dt = typenames.column_type(cm.get("dtype"),
-                                           f.dataType.simpleString())
-                prec, scale = (
-                    (cm["prec"], cm["scale"]) if dt == cm.get("dtype")
-                    else typenames.numeric_precision(dt)
-                )
-                radix = (10 if dt.startswith(("DECIMAL", "NUMERIC"))
-                         else 2) if prec is not None else None
-                dflt = cm.get("default")
+        for n, m in objs:
+            oid = (v_oid if m["type"] == "VIEW" else t_oid)[n.lower()]
+            for c in _columns(spark, n):
+                radix = None if c["prec"] is None else (
+                    10 if c["dtype"].startswith(("DECIMAL", "NUMERIC")) else 2)
                 rows.append((
-                    db, _DB_OID, schn, 1001, bare,
-                    t_oid[n.lower()], f.name, i + 1,
-                    C.get(("column", f"{n.lower()}.{f.name.lower()}")),
-                    False,
-                    str(dflt) if dflt is not None else None,
-                    cm.get("nullable", f.nullable), dt, 0, None,
-                    prec, radix, scale,
-                ))
-        for n in sorted(_VIEWS):
-            db, schn, bare, _tmp = _obj_meta(n)
-            cmeta = ischema.COLUMN_META.get(n.lower())
-            if cmeta:
-                # the CREATE-time snapshot (base-table renames don't
-                # propagate into view metadata, matching the reference)
-                for c in cmeta:
-                    rows.append((
-                        db, _DB_OID, schn, 1001, bare,
-                        v_oid[n.lower()], c["name"], c["ordinal"],
-                        C.get(("column",
-                               f"{n.lower()}.{c['name'].lower()}")),
-                        False, None, c["nullable"], c["dtype"], 0,
-                        None, c["prec"],
-                        (10 if str(c["dtype"]).startswith(
-                            ("DECIMAL", "NUMERIC")) else 2)
-                        if c["prec"] is not None else None,
-                        c["scale"],
-                    ))
-                continue
-            try:
-                sch = spark.table(n).schema
-            except Exception:
-                continue
-            for i, f in enumerate(sch.fields):
-                rows.append((
-                    db, _DB_OID, schn, 1001, bare,
-                    v_oid[n.lower()], f.name, i + 1,
-                    C.get(("column", f"{n.lower()}.{f.name.lower()}")),
-                    False, None, f.nullable, _duck_field_type(f), 0,
-                    None, None, None, None,
+                    m["catalog"], _DB_OID, m["schema"], 1001, m["name"], oid,
+                    c["name"], c["ordinal"],
+                    C.get(("column", f"{n.lower()}.{c['name'].lower()}")),
+                    False, c["default"], c["nullable"], c["dtype"], 0, None,
+                    c["prec"], radix, c["scale"],
                 ))
         _reg_view(
             "duckdb_columns", rows,
@@ -8506,11 +8335,12 @@ def _bind_duckdb_tvfs(spark: SparkSession, text: str) -> str:
     if "duckdb_views" in used:
         rows = []
         for n, (sel, _cols) in sorted(_VIEWS.items()):
-            db, schn, bare, temp = _obj_meta(n)
+            m = meta[n]
             rows.append(
-                (db, _DB_OID, schn, 1001, bare, v_oid[n.lower()],
-                 C.get(("view", n.lower())), {}, False, temp,
-                 None, f"CREATE VIEW {bare} AS {sel};")
+                (m["catalog"], _DB_OID, m["schema"], 1001, m["name"],
+                 v_oid[n.lower()], C.get(("view", n.lower())), {}, False,
+                 m["catalog"] == "temp", None,
+                 f"CREATE VIEW {m['name']} AS {sel};")
             )
         _reg_view(
             "duckdb_views", rows,
@@ -8601,11 +8431,11 @@ def _bind_duckdb_tvfs(spark: SparkSession, text: str) -> str:
             elif kind == "column":
                 tblk, colk = key.rsplit(".", 1)
                 oid = t_oid.get(tblk, v_oid.get(tblk))
-                names = [c.lower() for c in _colnames(
-                    next((n for n in list(_MANAGED) + list(_VIEWS)
-                          if n.lower() == tblk), tblk))]
-                if oid is not None and colk in names:
-                    rows.append((oid, _DB_OID, names.index(colk) + 1, txt))
+                col = oid is not None and next(
+                    (c for c in _columns(spark, name_of[tblk])
+                     if c["name"].lower() == colk), None)
+                if col:
+                    rows.append((oid, _DB_OID, col["ordinal"], txt))
             elif kind == "index" and key in i_oid:
                 rows.append((i_oid[key], _DB_OID, 0, txt))
             elif kind == "sequence" and key in s_oid:
@@ -8758,12 +8588,10 @@ def _statement_command(spark: SparkSession, text: str) -> DataFrame | None:
         return d
     m = _PRAGMA_TI.match(text)
     if m:
-        fields = spark.table(m.group(1)).schema.fields
         rows = [
-            (i, f.name, dt, not f.nullable, None, False)
-            for i, (f, dt) in enumerate(
-                zip(fields, ischema.column_types(m.group(1), fields))
-            )
+            (c["ordinal"] - 1, c["name"], c["dtype"], not c["nullable"],
+             c["default"], c["key"] == "PRI")
+            for c in _columns(spark, m.group(1))
         ]
         return _rows_df(
             spark,

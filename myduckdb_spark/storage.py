@@ -218,12 +218,17 @@ class ManagedTable:
         _atomic_write_json(self._manifest_path(cur["version"]), cur)
         _atomic_write_json(self._manifest_path(), cur)
 
-    def remap_constraint_cols(self, mapping: dict[str, str]) -> None:
-        """RENAME COLUMN follows the reference in carrying constraints to
-        the new name (duckdb_table_entry.cpp RenameColumn rewrites index
-        column lists)."""
+    def remap_columns(self, mapping: dict[str, str]) -> None:
+        """RENAME COLUMN follows the reference in carrying constraints and
+        defaults to the new name (duckdb_table_entry.cpp RenameColumn
+        rewrites index column lists)."""
         cur = self._manifest()
         changed = False
+        if cur.get("defaults"):
+            low = {k.lower(): v.lower() for k, v in mapping.items()}
+            nd = {low.get(c, c): d for c, d in cur["defaults"].items()}
+            changed = nd != cur["defaults"]
+            cur["defaults"] = nd
         if cur.get("key"):
             nk = [mapping.get(c, c) for c in cur["key"]]
             changed = changed or nk != cur["key"]
@@ -780,10 +785,10 @@ def export_database(spark: SparkSession, out_dir: str, tables: dict[str, DataFra
     """EXPORT DATABASE 'dir' (FORMAT PARQUET): one parquet dir per table
     plus schema.sql / load.sql, the reference's export layout
     (physical_export.cpp writes schema.sql + load.sql + data files).
-    schema.sql carries DuckDB type names: each column's declared name
-    from the catalog registry (``infoschema.COLUMN_META``), else its Spark
-    type rendered (``infoschema.column_types``), so DuckDB can run it and
-    load the parquet files into the declared types."""
+    schema.sql carries each column's DuckDB type name from its column
+    record (``infoschema.column_records``: the declared name where the
+    Spark type erases it), so DuckDB can run it and load the parquet files
+    into the declared types."""
     from myduckdb_spark import infoschema
 
     os.makedirs(out_dir, exist_ok=True)
@@ -791,8 +796,8 @@ def export_database(spark: SparkSession, out_dir: str, tables: dict[str, DataFra
     for name, df in tables.items():
         path = os.path.join(out_dir, f"{name}.parquet")
         df.write.mode("overwrite").parquet(path)
-        types = infoschema.column_types(name, df.schema.fields)
-        cols = ", ".join(f"{c} {t}" for c, t in zip(df.columns, types))
+        cols = ", ".join(f"{c['name']} {c['dtype']}"
+                         for c in infoschema.column_records(name, df.schema.fields))
         schema_lines.append(f"CREATE TABLE {name} ({cols});")
         # Spark writes a directory of part files; DuckDB COPY reads globs
         load_lines.append(f"COPY {name} FROM '{path}/*.parquet' (FORMAT PARQUET);")

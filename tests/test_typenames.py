@@ -19,6 +19,7 @@ TYPES = [
     "UUID", "JSON",
     "INTEGER[]", "VARCHAR[]", "TIMESTAMPTZ[]", "UTINYINT[]",
     "INT8", "REAL", "TEXT", "BYTEA", "DATETIME", "NUMERIC",
+    "TIMESTAMP WITH TIME ZONE",
 ]
 
 

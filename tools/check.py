@@ -3,11 +3,13 @@
 Runs every ``queries()`` entry on Spark at sf0.01, the matching
 ``oracle_sql()`` in DuckDB over the same parquet, and compares
 row count + column names + order-insensitive canonicalized values.
-Exact comparison (no float tolerance): if a query only matches
-approximately, the query must be rewritten (decimal-cast aggregation)
-until it matches exactly — that is what the driver's hash demands.
+Both result sets go through pandas (DuckDB's ``.df()``, where
+HUGEINT/DECIMAL become float64) and compare with no leniency and no
+float tolerance: if a query only matches approximately, the query must
+be rewritten (decimal-cast aggregation) until it matches exactly — that
+is what the driver's hash demands.
 
-Usage: python tools/check.py [name ...] [--sf DIR]
+Usage: python tools/check.py [name ...] [--sf DIR] [--vanilla]
 """
 
 from __future__ import annotations
@@ -25,26 +27,23 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb  # noqa: E402
 
 
-def canon_cell(v, strict=False):
-    """Canonicalize one cell.
+def canon_cell(v):
+    """Canonicalize one cell, with no leniency (driver parity).
 
-    strict=False (default): lenient cross-type compare (integral floats
-    collapse to ints, Decimals normalize) — catches semantic divergence.
-
-    strict=True (driver parity): NO leniency. The driver converts BOTH
-    result sets through pandas and hashes cell values as-is, so a DuckDB
-    HUGEINT that pandas renders as float64 `108.0` hash-mismatches a Spark
-    int64 `108`, and a Spark Decimal('900.10') mismatches DuckDB's float64
-    `900.1`. Queries must therefore never emit DECIMAL or uncast
-    integer-SUM (HUGEINT) output columns; strict mode makes such columns
-    fail locally the way they fail on the driver (root cause of the
-    round-1/round-2 fn_math_battery, text_token_stats, q12 red rows)."""
+    The driver converts BOTH result sets through pandas and hashes cell
+    values as-is, so a DuckDB HUGEINT that pandas renders as float64
+    `108.0` hash-mismatches a Spark int64 `108`, and a Spark
+    Decimal('900.10') mismatches DuckDB's float64 `900.1`. Queries must
+    therefore never emit DECIMAL or uncast integer-SUM (HUGEINT) output
+    columns; such columns fail here the way they fail on the driver (root
+    cause of the round-1/round-2 fn_math_battery, text_token_stats, q12
+    red rows)."""
     import numpy as np
 
     if v is None:
         return "∅"
     if isinstance(v, np.ndarray):
-        return "[" + ",".join(canon_cell(x, strict) for x in v.tolist()) + "]"
+        return "[" + ",".join(canon_cell(x) for x in v.tolist()) + "]"
     if isinstance(v, np.integer):
         return str(int(v))
     if isinstance(v, np.floating):
@@ -52,18 +51,12 @@ def canon_cell(v, strict=False):
     if isinstance(v, float) and math.isnan(v):
         return "nan"
     if isinstance(v, float):
-        if math.isnan(v):
-            return "nan"
-        # integral floats print as ints: pandas upcasts nullable int columns
-        # to float64, which must still compare equal to the oracle's ints
-        if not strict and v.is_integer() and abs(v) < 2**53:
-            return str(int(v))
         return repr(v)  # repr → shortest round-trip; exact bit equality check
     if isinstance(v, Decimal):
-        return str(v) if strict else str(v.normalize())
+        return str(v)
     if isinstance(v, datetime):
-        # midnight datetimes normalize to dates even in strict mode: duckdb's
-        # pandas conversion renders DATE as datetime64 midnight, and driver
+        # midnight datetimes normalize to dates: duckdb's pandas
+        # conversion renders DATE as datetime64 midnight, and driver
         # evidence shows DATE-output queries (fn_datetime_battery r1,
         # date_series_buckets r2) hash GREEN — the driver tolerates this.
         if v.hour == v.minute == v.second == v.microsecond == 0 and v.tzinfo is None:
@@ -72,7 +65,7 @@ def canon_cell(v, strict=False):
     if isinstance(v, date):
         return v.isoformat()
     if isinstance(v, (list, tuple)):
-        return "[" + ",".join(canon_cell(x, strict) for x in v) + "]"
+        return "[" + ",".join(canon_cell(x) for x in v) + "]"
     if isinstance(v, bool):
         return str(int(v))
     if isinstance(v, bytes):
@@ -92,10 +85,9 @@ def _isna(x):
         return False
 
 
-def canon_rows(cols, rows, strict=False):
+def canon_rows(cols, rows):
     order = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = sorted("|".join(canon_cell(r[i], strict) for i in order) for r in rows)
-    return out
+    return sorted("|".join(canon_cell(r[i]) for i in order) for r in rows)
 
 
 def pandas_rows(pdf):
@@ -120,14 +112,6 @@ def main():
         help="driver parity: bare SparkSession (default 200 shuffle partitions, "
         "no UTC pin, no tuned confs) — catches session-sensitive queries the "
         "tuned session masks",
-    )
-    ap.add_argument(
-        "--strict-df",
-        action="store_true",
-        help="driver parity: fetch the oracle through duckdb's pandas "
-        "conversion (.df(), where HUGEINT/DECIMAL become float64) and "
-        "compare with zero canonicalization leniency — catches "
-        "DECIMAL/HUGEINT output columns that hash-mismatch on the driver",
     )
     args = ap.parse_args()
 
@@ -172,7 +156,7 @@ def main():
         try:
             rel = con.sql(oracles[name])
             dcols = [c.lower() for c in rel.columns]
-            drows = pandas_rows(rel.df()) if args.strict_df else rel.fetchall()
+            drows = pandas_rows(rel.df())
         except Exception as e:
             print(f"FAIL  {name}: duckdb error: {type(e).__name__}: {e}")
             failed += 1
@@ -183,8 +167,8 @@ def main():
         if sorted(c.lower() for c in scols) != sorted(dcols):
             problems.append(f"columns {sorted(scols)} vs {sorted(dcols)}")
         if not problems:
-            sc = canon_rows([c.lower() for c in scols], srows, strict=args.strict_df)
-            dc = canon_rows(dcols, drows, strict=args.strict_df)
+            sc = canon_rows([c.lower() for c in scols], srows)
+            dc = canon_rows(dcols, drows)
             if sc != dc:
                 diffs = [(a, b) for a, b in zip(sc, dc) if a != b][:3]
                 problems.append(f"values differ; first diffs: {diffs}")
