@@ -205,10 +205,13 @@ def constraints_of(key: str) -> list[dict]:
     return [c for c in CONSTRAINTS if c["schema"] == schema and c["table"] == bare]
 
 
-def not_null(key: str) -> set[str]:
-    """Lowercase names of the columns a NOT NULL constraint covers."""
-    return {c["columns"][0].lower() for c in constraints_of(key)
-            if c["ctype"] == "NOT NULL" and c["columns"]}
+def not_null(key: str, table=None) -> set[str]:
+    """Lowercase names of the columns a NOT NULL constraint covers, plus
+    the PRIMARY KEY columns of ``table`` (the ManagedTable storing it)."""
+    pk = table.key() if table is not None else None
+    return {c.lower() for c in pk or []} | {
+        c["columns"][0].lower() for c in constraints_of(key)
+        if c["ctype"] == "NOT NULL" and c["columns"]}
 
 
 def column_records(key: str, fields=None, table=None) -> list[dict]:

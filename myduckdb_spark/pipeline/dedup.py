@@ -41,22 +41,31 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
 # Shingling / n-grams
 # ---------------------------------------------------------------------------
 
-def char_shingles_expr(text_col: str, k: int = 3, distinct: bool = True) -> Column:
-    """SQL-expression form of char k-gram shingling (JVM codegen, no UDF)."""
-    inner = (
-        f"transform(sequence(1, greatest(length({text_col}) - {k - 1}, 0)),"
-        f" i -> substring({text_col}, i, {k}))"
+def _windows_sql(n_sql: str, width: int, item_sql: str) -> str:
+    """One `item_sql` per window start i in 1..n-width+1, as an array.
+    Input shorter than the window has none, as in DuckDB's
+    generate_series: Spark's sequence(1, 0) counts down to [1, 0]."""
+    return (
+        f"CASE WHEN {n_sql} < {width} THEN CAST(array() AS array<string>)"
+        f" ELSE transform(sequence(1, {n_sql} - {width - 1}), i -> {item_sql}) END"
     )
+
+
+def char_shingles_expr(text_col: str, k: int = 3, distinct: bool = True) -> Column:
+    """SQL-expression form of char k-gram shingling (JVM codegen, no UDF).
+    Text shorter than k has no shingle."""
+    inner = _windows_sql(f"length({text_col})", k, f"substring({text_col}, i, {k})")
     if distinct:
         inner = f"array_distinct({inner})"
     return F.expr(inner)
 
 
 def word_ngrams_expr(text_col: str, n: int = 3) -> Column:
-    """Word n-grams via split + slice (JVM-side)."""
+    """Word n-grams via split + slice (JVM-side); none for text of fewer
+    than n words."""
+    words = f"split({text_col}, ' ')"
     return F.expr(
-        f"transform(sequence(1, greatest(size(split({text_col}, ' ')) - {n - 1}, 0)),"
-        f" i -> array_join(slice(split({text_col}, ' '), i, {n}), ' '))"
+        _windows_sql(f"size({words})", n, f"array_join(slice({words}, i, {n}), ' ')")
     )
 
 

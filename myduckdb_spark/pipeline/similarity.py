@@ -13,8 +13,10 @@ Dot-product scoring has two output-identical kernels: pure JVM
 expressions (zip_with + aggregate) for small pair counts, and an
 Arrow-batched numpy kernel (guide §4.2) that computes the SAME
 scaled-integer dots bit-for-bit once the expected pair count crosses
-`_NUMPY_SCORE_MIN_PAIRS` (the interpreted HOF is ~1M element-ops/s/core;
-numpy is two orders faster on whole batches). A legacy float-matmul
+`_NUMPY_SCORE_MIN_PAIRS_PER_CORE` × `defaultParallelism` (the
+interpreted HOF costs per pair per core, ~47 µs per 64-dim pair; numpy
+is two orders faster on whole batches and pays a fixed premium per
+statement, so the floor scales with the cores). A legacy float-matmul
 variant (`numpy_topk_per_partition`) remains for wide vectors where
 bit-parity with the SQL formulation is not required.
 """
@@ -51,14 +53,22 @@ def dot_scaled_long_expr(a: str, b: str) -> F.Column:
 # 64 dims → 32 MB at the cap). Above it (or on probes without one shared
 # dimension) the pure-JVM HOF path runs.
 _NUMPY_SCORE_MAX_PROBES = 65536
-# ... and a FLOOR on the expected pair count: the numpy path pays a fixed
-# ~0.3-0.5s (probe-collect job + Python worker spin-up + Arrow traffic),
-# so tiny workloads keep the JVM HOF (measured at dim 64: 80k pairs →
-# HOF wins 0.62s vs 0.97s; 8M pairs → numpy wins 2.7s vs 17.0s; the
-# compute crossover is ~200k pairs — 500k adds margin for cold workers).
-# Callers pass the corpus row count from parquet footers; without a hint
-# the pair count is unknown and the JVM path (prior behaviour) runs.
-_NUMPY_SCORE_MIN_PAIRS = 500_000
+# ... and a FLOOR on the expected pair count, per core: the HOF's cost
+# is per pair per core (~47 µs per 64-dim pair per core), while the numpy
+# path pays a fixed ~0.3-0.5s per statement (probe-collect job + Python
+# worker spin-up + Arrow traffic), so the crossover grows with the cores
+# and a total-pair floor only fits the box it was measured on. Measured
+# HOF vs numpy at dim 64 (statement build+plan+noop):
+#   32 cores: 80k pairs → 0.62s vs 0.97s; 8M pairs → 17.0s vs 2.7s;
+#             crossover ~200k pairs (~6k per core).
+#   4 cores:  10k → 0.84s vs 0.89s; 20k → 0.85s vs 0.78s;
+#             40k → 1.15s vs 0.82s; 80k → 1.71s vs 0.83s;
+#             160k → 2.95s vs 0.96s; crossover ~15-20k (~4-5k per core).
+# 15_625 per core (500k on 32 cores) keeps ~2.5-3× margin over the
+# crossover for cold workers on either box. Callers pass the corpus row
+# count from parquet footers; without a hint the pair count is unknown
+# and the JVM path (prior behaviour) runs.
+_NUMPY_SCORE_MIN_PAIRS_PER_CORE = 15_625
 
 
 def _numpy_pair_dots(c: DataFrame, probe_rows, dim: int) -> DataFrame:
@@ -168,7 +178,8 @@ def brute_force_topk(
     kernels:
 
     * numpy path (when the caller's `n_corpus_hint` — a parquet-footer
-      row count — promises ≥ `_NUMPY_SCORE_MIN_PAIRS` pairs and the probe
+      row count — promises ≥ `_NUMPY_SCORE_MIN_PAIRS_PER_CORE` pairs per
+      core of `defaultParallelism` and the probe
       set fits the driver cap): one `mapInArrow` over the corpus computes
       the scaled-integer dots as whole-batch matrix math (guide §4.2 —
       the interpreted zip_with HOF was ~95% of the sf1 query: 14-16s of
@@ -183,6 +194,7 @@ def brute_force_topk(
     paths; the norm division, round(·, 6) and the top-k window are the
     same JVM operators either way."""
     par = corpus.sparkSession.sparkContext.defaultParallelism
+    min_pairs = _NUMPY_SCORE_MIN_PAIRS_PER_CORE * par
     p = probes.select(
         F.col(id_col).alias("probe_id"),
         F.col(vec_col).alias("pv"),
@@ -200,13 +212,13 @@ def brute_force_topk(
         n_corpus_hint is not None
         and n_probes_hint is not None
         and 0 < n_probes_hint <= _NUMPY_SCORE_MAX_PROBES
-        and n_probes_hint * n_corpus_hint >= _NUMPY_SCORE_MIN_PAIRS
+        and n_probes_hint * n_corpus_hint >= min_pairs
     )
     probe_rows = p.limit(_NUMPY_SCORE_MAX_PROBES + 1).collect() if want_numpy else []
     dims = {len(r["pv"]) for r in probe_rows if r["pv"] is not None}
     if (
         0 < len(probe_rows) <= _NUMPY_SCORE_MAX_PROBES
-        and len(probe_rows) * (n_corpus_hint or 0) >= _NUMPY_SCORE_MIN_PAIRS
+        and len(probe_rows) * (n_corpus_hint or 0) >= min_pairs
         and len(dims) == 1
         and all(r["pv"] is not None and r["p_norm"] is not None for r in probe_rows)
     ):

@@ -5752,9 +5752,11 @@ def _parse_column_defs(
     UNIQUE become arbiter key sets (the reference builds ART indexes for
     both); a column-level COLLATE lands in the collation registry
     (comparison semantics, reference bind_comparison_expression.cpp
-    PushCollation); CHECK / NOT NULL / FOREIGN KEY land in `extras` as
-    {ctype, columns, text} records for the information_schema registry —
-    the managed layer stores data, it does not enforce them. Column types
+    PushCollation). `extras` lists every constraint as a {ctype, columns,
+    text} record for the information_schema registry, in declaration
+    order (a column's clauses in their textual order); the PRIMARY KEY
+    record's columns are the final `key`. The managed layer stores
+    CHECK / FOREIGN KEY, it does not enforce them. Column types
     come back as Spark DDL; ``declared_out`` receives each column's
     declared DuckDB name (typenames.declared_name)."""
     cols: list[tuple[str, str]] = []
@@ -5770,10 +5772,12 @@ def _parse_column_defs(
         m = re.match(r"^PRIMARY\s+KEY\s*\(([^)]*)\)$", p, re.I)
         if m:
             key = [c.strip().strip('"') for c in m.group(1).split(",")]
+            extras.append({"ctype": "PRIMARY KEY", "columns": key})
             continue
         m = re.match(r"^UNIQUE\s*\(([^)]*)\)$", p, re.I)
         if m:
             uniques.append([c.strip().strip('"') for c in m.group(1).split(",")])
+            extras.append({"ctype": "UNIQUE", "columns": uniques[-1]})
             continue
         m = re.match(
             r"^FOREIGN\s+KEY\s*\(([^)]*)\)\s*"
@@ -5814,10 +5818,14 @@ def _parse_column_defs(
         if declared_out is not None:
             declared_out[name.lower()] = typenames.declared_name(typ + brackets)
         typ = typenames.spark_ddl(typ + brackets)
-        if re.search(r"\bPRIMARY\s+KEY\b", rest, re.I):
+        found: list[tuple[int, dict]] = []  # (clause position, record)
+        km = re.search(r"\bPRIMARY\s+KEY\b", rest, re.I)
+        if km:
             key.append(name)
-        elif re.search(r"\bUNIQUE\b", rest, re.I):
+            found.append((km.start(), {"ctype": "PRIMARY KEY", "columns": key}))
+        elif km := re.search(r"\bUNIQUE\b", rest, re.I):
             uniques.append([name])
+            found.append((km.start(), {"ctype": "UNIQUE", "columns": [name]}))
         cm = re.search(r"\bCOLLATE\s+([\w.]+)", rest, re.I)
         if cm and cm.group(1).lower() not in ("binary", "c", "posix"):
             collations[name.lower()] = cm.group(1)
@@ -5827,24 +5835,25 @@ def _parse_column_defs(
         )
         if dm:
             defaults[name.lower()] = dm.group(1).strip()
-        if re.search(r"\bNOT\s+NULL\b", rest, re.I):
-            extras.append({"ctype": "NOT NULL", "columns": [name],
-                           "text": "NOT NULL"})
+        km = re.search(r"\bNOT\s+NULL\b", rest, re.I)
+        if km:
+            found.append((km.start(), {"ctype": "NOT NULL", "columns": [name]}))
         km = re.search(
             r'\bREFERENCES\s+("?[\w.]+"?(?:\s*\([^)]*\))?)', rest, re.I,
         )
         if km:
-            extras.append({
+            found.append((km.start(), {
                 "ctype": "FOREIGN KEY", "columns": [name],
                 "text": f"FOREIGN KEY ({name}) REFERENCES {km.group(1)}",
-            })
+            }))
         km = re.search(r"\bCHECK\s*\((.*)\)", rest, re.I | re.S)
         if km:
-            extras.append({
+            found.append((km.start(), {
                 "ctype": "CHECK", "columns": [name],
                 "text": f"CHECK({km.group(1).strip()})",
                 "expression": km.group(1).strip(),
-            })
+            }))
+        extras += [x for _pos, x in sorted(found, key=lambda f: f[0])]
         cols.append((name, typ))
     return cols, key, uniques, collations, defaults, extras
 
@@ -7379,14 +7388,14 @@ def _dml_statement(spark: SparkSession, text: str) -> DataFrame | None:
             "LOCAL TEMPORARY" if is_temp else "BASE TABLE",
         )
         ischema.declare(name, [(n, declared[n.lower()]) for n, _t in cols])
-        if key:
-            ischema.add_constraint(name, "PRIMARY KEY", key)
-        # live oracle adds an implicit NOT NULL row per PRIMARY KEY column
+        # declaration order, one PRIMARY KEY row however it was spelled
         nn_seen = set()
-        for c in (key or []):
-            nn_seen.add(c.lower())
-            ischema.add_constraint(name, "NOT NULL", [c])
+        pk_seen = False
         for x in extras:
+            if x["ctype"] == "PRIMARY KEY":
+                if pk_seen:
+                    continue
+                pk_seen = True
             if x["ctype"] == "NOT NULL":
                 if x["columns"][0].lower() in nn_seen:
                     continue
@@ -7400,9 +7409,12 @@ def _dml_statement(spark: SparkSession, text: str) -> DataFrame | None:
                         re.findall(r'"?(\w+)"?', x.get("expression", ""))
                     ) if w.lower() in names
                 ]
-            ischema.add_constraint(name, x["ctype"], x["columns"], x["text"])
-        for u in uniques:
-            ischema.add_constraint(name, "UNIQUE", u)
+            ischema.add_constraint(name, x["ctype"], list(x["columns"]), x.get("text"))
+        # live oracle appends an implicit NOT NULL row per PRIMARY KEY
+        # column that declares none
+        for c in key:
+            if c.lower() not in nn_seen:
+                ischema.add_constraint(name, "NOT NULL", [c])
         return _count_df(spark, 0)
     m = _CREATE_INDEX.match(text)
     if m:
@@ -7686,7 +7698,7 @@ def _dml_statement(spark: SparkSession, text: str) -> DataFrame | None:
             # NOT NULL enforcement (physical_insert.cpp): a NOT NULL /
             # PRIMARY KEY column rejects NULL rows; source columns bind to
             # the table's by position, as tbl.insert binds them
-            nn = ischema.not_null(name) | {c.lower() for c in tbl.key() or []}
+            nn = ischema.not_null(name, tbl)
             nn_cols = [c for c in _tcols if c.lower() in nn]
             if nn_cols and len(src_df.columns) == len(_tcols):
                 bad = src_df.toDF(*_tcols).filter(
@@ -7839,16 +7851,22 @@ def _dml_statement(spark: SparkSession, text: str) -> DataFrame | None:
             for c, e in assignments.items()
         }
         assignments = {c: translate(e) for c, e in assignments.items()}
+        # NOT NULL enforcement (physical_update.cpp): an assigned NOT NULL
+        # / PRIMARY KEY column rejects a NULL new value
+        tbl = _MANAGED[name]
+        nn = ischema.not_null(name, tbl)
+        not_null = {c: f"{name}.{c}" for c in assignments if c.lower() in nn}
         if fromtext:
-            n = _MANAGED[name].update_from(
+            n = tbl.update_from(
                 assignments,
                 translate(fromtext),
                 translate(pred) if pred else None,
                 upd_alias or name,
+                not_null=not_null,
             )
         else:
-            n = _MANAGED[name].update(
-                assignments, translate(pred) if pred else "true"
+            n = tbl.update(
+                assignments, translate(pred) if pred else "true", not_null=not_null
             )
         _refresh_view(spark, name)
         return _count_df(spark, n)

@@ -479,20 +479,42 @@ class ManagedTable:
 
     # -- DML ----------------------------------------------------------------
 
-    def _touched_files(self, pred: str, alias: str | None = None) -> dict[str, int]:
+    def _touched_files(
+        self,
+        pred: str,
+        alias: str | None = None,
+        not_null: dict[str, str] | None = None,
+    ) -> dict[str, int]:
         """Distributed touched-file discovery: pushdown scan projecting
         only input_file_name(), one aggregate counting the matching rows
-        per file; the driver receives ≤ one row per file."""
+        per file; the driver receives ≤ one row per file. ``not_null``
+        maps a constraint's name (``t1.c``) to a SQL value that must not
+        be NULL on any matching row; the same aggregate counts the NULLs
+        and a violation raises DuckDB's constraint error."""
+        checks = list((not_null or {}).items())
         scan = self.scan()
         if alias:
             scan = scan.alias(alias)
         rows = (
             scan.filter(F.expr(pred))
-            .select(F.input_file_name().alias("f"))
+            .select(
+                F.input_file_name().alias("f"),
+                *[F.expr(f"({v}) IS NULL").alias(f"__null{i}")
+                  for i, (_, v) in enumerate(checks)],
+            )
             .groupBy("f")
-            .count()
+            .agg(
+                F.count(F.lit(1)).alias("count"),
+                *[F.count_if(f"__null{i}").alias(f"__null{i}")
+                  for i in range(len(checks))],
+            )
             .collect()
         )
+        for i, (label, _) in enumerate(checks):
+            if any(r[f"__null{i}"] for r in rows):
+                raise ValueError(
+                    f"Constraint Error: NOT NULL constraint failed: {label}"
+                )
         # input_file_name returns a URI (file:///...); manifest holds paths
         return {re.sub(r"^file:/+", "/", r["f"]): r["count"] for r in rows}
 
@@ -535,14 +557,29 @@ class ManagedTable:
         m = self._manifest(version)
         _atomic_write_json(self._manifest_path(), m)
 
-    def update(self, assignments: dict[str, str], pred: str = "true") -> int:
+    def update(
+        self,
+        assignments: dict[str, str],
+        pred: str = "true",
+        not_null: dict[str, str] | None = None,
+    ) -> int:
         """UPDATE t SET col = expr[, ...] WHERE pred. Returns #rows
         updated. Expressions are SQL over the row's columns; assigned
         columns are cast back to their original type (reference UPDATE
-        binder casts RHS to the column type, physical_update.cpp)."""
+        binder casts RHS to the column type, physical_update.cpp).
+        ``not_null`` maps each assigned NOT NULL column to the name its
+        constraint error reports; a NULL new value raises before any
+        file is written."""
         self._materialize_projection()
         cur = self._manifest()
-        touched = self._touched_files(pred)
+        checks = {}
+        if not_null:
+            col_types = dict(self.scan().dtypes)
+            checks = {
+                label: f"CAST(({assignments[c]}) AS {col_types[c]})"
+                for c, label in not_null.items()
+            }
+        touched = self._touched_files(pred, not_null=checks)
         if not touched:
             return 0
         keep = [f for f in cur["files"] if f["path"] not in touched]
@@ -572,11 +609,12 @@ class ManagedTable:
         from_clause: str,
         pred: str | None,
         alias: str,
+        not_null: dict[str, str] | None = None,
     ) -> int:
         """UPDATE t SET ... FROM src [, ...] WHERE pred (reference
         planner joins the target to the FROM sources; one ARBITRARY
         matching source row feeds each target row's assignments, Postgres
-        semantics).
+        semantics). ``not_null`` is as in ``update``.
 
         Implementation: stamp every target row with a row id and
         MATERIALIZE the stamped scan (monotonically_increasing_id is
@@ -630,7 +668,20 @@ class ManagedTable:
                     for c in target.columns
                 ]
             )
-            n_updated = matched.count()
+            # the matched-row count also counts each NOT NULL column's
+            # NULL new values: one aggregate, checked before the write
+            checks = list((not_null or {}).items())
+            counts = matched.agg(
+                F.count(F.lit(1)).alias("n"),
+                *[F.count_if(F.expr(f"CAST(__new.`{c}` AS {types[c]}) IS NULL"))
+                  .alias(f"__null{i}") for i, (c, _) in enumerate(checks)],
+            ).first()
+            for i, (_, label) in enumerate(checks):
+                if counts[f"__null{i}"]:
+                    raise ValueError(
+                        f"Constraint Error: NOT NULL constraint failed: {label}"
+                    )
+            n_updated = counts["n"]
             new = self._write_snapshot(new_df)
             self._commit(cur["version"] + 1, new)
         finally:

@@ -1,7 +1,8 @@
 """Catalog-metadata registry (myduckdb_spark/infoschema.py): constraint
 naming parity vs live DuckDB, schema oid stability, mirror round-trip,
-every introspection surface tracking ALTER TABLE as DuckDB does, and NOT
-NULL enforced on every INSERT form."""
+every introspection surface tracking ALTER TABLE as DuckDB does, NOT
+NULL enforced on every INSERT and UPDATE form, and duckdb_constraints()
+numbered as DuckDB numbers it."""
 
 import duckdb
 import pytest
@@ -184,6 +185,69 @@ def test_not_null_rejects_every_insert_form(spark, renamed, insert):
         assert S.sql(spark, f"SELECT count(*) FROM {t}").collect()[0][0] == 0
     finally:
         _drop_t12(spark)
+
+
+@pytest.mark.parametrize("stmt", [
+    "UPDATE t1 SET c = NULL",
+    "UPDATE t1 SET b = NULL, c = NULL WHERE a = 2",
+    "UPDATE t1 SET c = s.v FROM s WHERE t1.a = s.k",
+    "UPDATE t1 SET c = NULL WHERE a = 99",
+    "UPDATE t1 SET b = NULL",
+])
+def test_update_enforces_not_null_like_duckdb(spark, stmt):
+    setup = [_STEPS[0], "INSERT INTO t1 VALUES (1, 2, 3, 'x'), (2, 3, 4, 'y')",
+             "CREATE TABLE s (k INTEGER, v INTEGER)", "INSERT INTO s VALUES (1, NULL)"]
+    con = duckdb.connect()
+    _drop_t12(spark)
+    S.sql(spark, "DROP TABLE IF EXISTS s")
+    try:
+        for q in setup:
+            con.execute(q)
+            S.sql(spark, q).collect()
+        try:
+            want = _rows(con.execute(stmt).fetchall())
+        except duckdb.ConstraintException as e:
+            want = str(e)
+        try:
+            got = _rows(S.sql(spark, stmt).collect())
+        except ValueError as e:
+            got = str(e)
+        assert got == want
+        q = "SELECT * FROM t1 ORDER BY a"
+        assert _rows(S.sql(spark, q).collect()) == con.execute(q).fetchall()
+    finally:
+        _drop_t12(spark)
+        S.sql(spark, "DROP TABLE IF EXISTS s")
+
+
+def test_duckdb_constraints_order_like_duckdb(spark):
+    """duckdb_constraints() numbers a table's constraints in declaration
+    order, a column's clauses in their textual order, then one implicit
+    NOT NULL per PRIMARY KEY column that declares none."""
+    names = ("c1", "c2", "c3", "c4")
+    stmts = [
+        _STEPS[0].replace("t1", "c1"),
+        "CREATE TABLE c2 (a INT, b INT NOT NULL, c INT CHECK (c > 0),"
+        " PRIMARY KEY (a, b), UNIQUE (c))",
+        "CREATE TABLE c3 (a INT NOT NULL PRIMARY KEY, b INT UNIQUE NOT NULL)",
+        "CREATE TABLE c4 (x INT, a INT UNIQUE NOT NULL CHECK (a > 1),"
+        " b INT PRIMARY KEY CHECK (b > 0), c INT NOT NULL)",
+    ]
+    # a CHECK's text is DuckDB's deparsed expression (CHECK((c > 0))),
+    # which the engine does not reproduce; its position is compared
+    q = ("SELECT table_name, constraint_index, constraint_type,"
+         " CASE WHEN constraint_type <> 'CHECK' THEN constraint_text END,"
+         " constraint_column_names FROM duckdb_constraints()"
+         f" WHERE table_name IN {names} ORDER BY constraint_index")
+    con = duckdb.connect()
+    try:
+        for s in stmts:
+            con.execute(s)
+            S.sql(spark, s).collect()
+        assert _rows(S.sql(spark, q).collect()) == _rows(con.execute(q).fetchall())
+    finally:
+        for t in names:
+            S.sql(spark, f"DROP TABLE IF EXISTS {t}")
 
 
 def test_add_column_default_fills_later_inserts_like_duckdb(spark):

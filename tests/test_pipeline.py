@@ -52,10 +52,32 @@ def test_shingles_and_jaccard(spark):
     assert row["j"] == pytest.approx(0.5)
 
 
+@pytest.mark.parametrize("texts", [
+    ["ab", "ab", "x", "x", "hello world", "hello world!", ""],
+    ["ab", "ab", "x", ""],  # no doc has a shingle: the n_vocab == 0 return
+], ids=["mixed", "all-short"])
+def test_short_docs_have_no_shingle_like_duckdb(spark, texts):
+    """Text shorter than k has no shingle, so two equal short docs are
+    not a Jaccard-1.0 pair: both pair finders equal the DuckDB oracle."""
+    import duckdb
+
+    from myduckdb_spark.queries.pipeline_ops import _EXACT_JACCARD_PAIRS_SQL
+
+    rows = list(enumerate(texts))
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    want = con.execute(_EXACT_JACCARD_PAIRS_SQL.format(thr=0.7)).fetchall()
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    for pairs in (ngram_jaccard_pairs(docs, k=3, threshold=0.7),
+                  minhash_lsh_pairs(docs, k=3, threshold=0.7)):
+        assert sorted(map(tuple, pairs.collect())) == want
+
+
 def test_word_ngrams(spark):
-    df = spark.createDataFrame([("a b c d",)], "t string")
-    row = df.select(word_ngrams_expr("t", 2).alias("g")).collect()[0]
-    assert row["g"] == ["a b", "b c", "c d"]
+    df = spark.createDataFrame([("a b c d",), ("a",)], "t string")
+    rows = df.select(word_ngrams_expr("t", 2).alias("g")).collect()
+    assert [r["g"] for r in rows] == [["a b", "b c", "c d"], []]
 
 
 def test_minhash_lsh_finds_exact_pairs(docs):
@@ -186,7 +208,7 @@ def test_brute_force_numpy_path_bit_exact(spark, sf_dir, monkeypatch):
     probes = emb.filter(F.col("vec_id") % 50 == 0)
     n = table_row_count(sf_dir, "embeddings")
     hints = {"n_corpus_hint": n, "n_probes_hint": None if n is None else n // 50 + 1}
-    monkeypatch.setattr(S, "_NUMPY_SCORE_MIN_PAIRS", 1)  # force numpy
+    monkeypatch.setattr(S, "_NUMPY_SCORE_MIN_PAIRS_PER_CORE", 1)  # force numpy
     via_numpy_df = S.brute_force_topk(probes, emb, k=5, **hints)
     assert "MapInArrow" in (  # prove the numpy path actually ran
         via_numpy_df._jdf.queryExecution().executedPlan().toString()
@@ -197,6 +219,25 @@ def test_brute_force_numpy_path_bit_exact(spark, sf_dir, monkeypatch):
         tuple(r) for r in S.brute_force_topk(probes, emb, k=5, **hints).collect()
     )
     assert via_numpy == via_hof and via_numpy
+
+
+def test_brute_force_numpy_gate_scales_with_cores(spark):
+    """The numpy kernel's pair floor is per core: one pair short of
+    `_NUMPY_SCORE_MIN_PAIRS_PER_CORE` × defaultParallelism keeps the JVM
+    HOF, the floor itself takes the numpy kernel."""
+    from myduckdb_spark.pipeline import similarity as S
+
+    rows = [(i, [float(i % 7) - 3.0, 1.0, 0.5 * i]) for i in range(20)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    probes = emb.filter(F.col("vec_id") == 0)
+    floor = S._NUMPY_SCORE_MIN_PAIRS_PER_CORE * spark.sparkContext.defaultParallelism
+
+    def plan(n_corpus):
+        df = brute_force_topk(probes, emb, k=3, n_corpus_hint=n_corpus, n_probes_hint=1)
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    assert "MapInArrow" not in plan(floor - 1)
+    assert "MapInArrow" in plan(floor)
 
 
 def test_brute_force_numpy_path_null_and_ragged_vectors(spark):

@@ -174,13 +174,11 @@ def test_plan_sweep_gate(spark, sf_dir):
     """tools/plan_sweep.py as a CI gate (VERDICT r9 #6): every registered
     query's physical plan must stay free of scale anti-patterns —
     zero row-at-a-time Python (BatchEvalPython), zero CartesianProduct,
-    Arrow/pandas nodes only at the 3 intended sites, and a bounded
-    shuffle-exchange count (a shuffle-count regression fails here, not
-    in a later bench run)."""
-    import re
-
+    Python-worker nodes (MapInArrow included) only at the ARROW_OK sites,
+    and a bounded shuffle-exchange count (a shuffle-count regression
+    fails here, not in a later bench run)."""
     from myduckdb_spark.queries import queries
-    from tools.plan_sweep import shuffle_exchanges
+    from tools.plan_sweep import python_nodes, shuffle_exchanges
 
     ARROW_OK = {
         "fn_json_battery", "tableinout_normalize", "multimodal_features",
@@ -208,9 +206,7 @@ def test_plan_sweep_gate(spark, sf_dir):
             bad.append((name, "BatchEvalPython"))
         if "CartesianProduct" in plan:
             bad.append((name, "CartesianProduct"))
-        if name not in ARROW_OK and re.search(
-            r"ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas", plan
-        ):
+        if name not in ARROW_OK and python_nodes(plan):
             bad.append((name, "unexpected Python boundary"))
         n_ex = shuffle_exchanges(plan)
         if n_ex > MAX_EXCHANGES:

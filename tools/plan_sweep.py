@@ -5,6 +5,8 @@ except builders' own bounded probes) and scans the formatted physical
 plan for scale anti-patterns:
 
 * BatchEvalPython            — row-at-a-time Python UDF (guide §4.1)
+* Python-worker nodes        — every node that ships rows to Python,
+                               counted by ``python_nodes``
 * CartesianProduct           — accidental cross product (guide §3.4)
 * BroadcastNestedLoopJoin    — flagged for review (legit for small-side
                                theta joins; fatal when both sides scale)
@@ -35,9 +37,23 @@ SHUFFLE_RE = re.compile(
 )
 
 
+# every node that hands rows to a Python worker, row-at-a-time or Arrow
+# batched (the same pattern the perfbench trace counts)
+PYTHON_RE = re.compile(
+    r"\b(BatchEvalPython|ArrowEvalPython|(?:Python)?MapInArrow|(?:Python)?MapInPandas|"
+    r"FlatMapGroupsInPandas|FlatMapCoGroupsInPandas|AggregateInPandas|WindowInPandas|"
+    r"BatchEvalPythonUDTF|ArrowEvalPythonUDTF)\b"
+)
+
+
 def shuffle_exchanges(executed_plan: str) -> int:
     """Shuffle exchanges in ``executedPlan().toString()`` text."""
     return len(SHUFFLE_RE.findall(executed_plan))
+
+
+def python_nodes(executed_plan: str) -> int:
+    """Python-worker nodes in ``executedPlan().toString()`` text."""
+    return len(PYTHON_RE.findall(executed_plan))
 
 
 def main() -> None:
@@ -65,7 +81,7 @@ def main() -> None:
             "exchanges": shuffle_exchanges(executed),
             "broadcast_exchanges": len(re.findall(r"BroadcastExchange", plan)),
             "batch_eval_python": len(re.findall(r"BatchEvalPython", plan)),
-            "arrow_eval_python": len(re.findall(r"ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas", plan)),
+            "python_nodes": python_nodes(executed),
             "cartesian": len(re.findall(r"CartesianProduct", plan)),
             "bnlj": len(re.findall(r"BroadcastNestedLoopJoin", plan)),
             "smj": len(re.findall(r"SortMergeJoin", plan)),
@@ -84,7 +100,7 @@ def main() -> None:
         mark = " ".join(flags)
         print(
             f"ok   {name}: ex={rec['exchanges']} bx={rec['broadcast_exchanges']}"
-            f" scans={rec['scans']} py={rec['batch_eval_python']}/{rec['arrow_eval_python']}"
+            f" scans={rec['scans']} py={rec['batch_eval_python']}/{rec['python_nodes']}"
             f" {mark}",
             file=sys.stderr,
             flush=True,
