@@ -6,8 +6,8 @@ needs, built Spark-first:
 
 * ``dedup`` — exact, MinHash+LSH, SimHash, n-gram Jaccard, embedding
   cosine near-duplicate detection,
-* ``similarity`` — brute-force and LSH-bucketed approximate nearest
-  neighbors over embedding columns,
+* ``similarity`` — exact brute-force, LSH-bucketed and IVF approximate
+  nearest neighbors over embedding columns,
 * ``textstats`` — language ID, quality scoring, token counting,
   fingerprinting,
 * ``multimodal`` — binary-column conventions and decode/feature plumbing

@@ -484,8 +484,9 @@ def dot_dec_expr(a: str, b: str, scale: int = 15) -> Column:
     exact decimal sum are therefore identical too.
 
     NOTE: higher-order-function aggregation is interpreted (no codegen)
-    — ~ms per 256-dim eval. Fine per-vector; for per-PAIR hot paths use
-    the explode→join→sum formulation (similarity.brute_force_topk)."""
+    — ~ms per 256-dim eval. Fine per-vector; per-PAIR hot paths use the
+    scaled-BIGINT dot (similarity.dot_scaled_long_expr) or its numpy
+    kernel (similarity.brute_force_topk)."""
     p = 18
     return F.expr(
         f"CAST(aggregate(zip_with({a}, {b}, (x, y) -> CAST(CAST(x AS DOUBLE) * CAST(y AS DOUBLE) AS DECIMAL({p},{scale}))),"

@@ -1,24 +1,22 @@
 """Similarity search over embedding columns (array<float>).
 
-Two paths, same output contract (probe_id, neighbor_id, cos_sim, rank):
+Three searches, same output contract (probe_id, neighbor_id, cos_sim, rank):
 
 * ``brute_force_topk`` — exact: probe × corpus dot products, per-probe
   top-k via window. O(P·N); correct baseline, fine when P is small or N
   fits a broadcast.
-* ``lsh_bucketed_topk`` — scale path: random-hyperplane signatures bucket
-  the corpus (one shuffle on bucket key); probes only score their bucket
-  (and optional multi-probe neighbors). Approximate, tunable recall.
+* ``lsh_bucketed_topk`` — random-hyperplane signatures bucket the
+  corpus; probes only score their bucket. Approximate, tunable recall.
+* ``ivf_topk`` — probes only score the k-means inverted lists nearest to
+  them: the sublinear path on clustered corpora.
 
-Dot-product scoring has two output-identical kernels: pure JVM
-expressions (zip_with + aggregate) for small pair counts, and an
-Arrow-batched numpy kernel (guide §4.2) that computes the SAME
-scaled-integer dots bit-for-bit once the expected pair count crosses
-`_NUMPY_SCORE_MIN_PAIRS_PER_CORE` × `defaultParallelism` (the
-interpreted HOF costs per pair per core, ~47 µs per 64-dim pair; numpy
-is two orders faster on whole batches and pays a fixed premium per
-statement, so the floor scales with the cores). A legacy float-matmul
-variant (`numpy_topk_per_partition`) remains for wide vectors where
-bit-parity with the SQL formulation is not required.
+Filter-then-verify: the approximate searches only generate candidate
+pairs, and all three verify pairs with the same `_vectors`, `_cos_sim`
+and `_top_k` steps, so each gives a pair the same cos_sim.
+
+Brute force picks one of two output-identical dot kernels, the JVM
+zip_with HOF or an Arrow-batched numpy kernel, by a per-core pair floor
+(see `brute_force_topk`); LSH and IVF candidates take the JVM kernel.
 """
 
 from __future__ import annotations
@@ -26,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from myduckdb_spark.pipeline.dedup import dot_dec_expr, norm_sq_dec_expr
+from myduckdb_spark.pipeline.dedup import norm_sq_dec_expr
 
 
 def dot_scaled_long_expr(a: str, b: str) -> F.Column:
@@ -46,6 +44,44 @@ def dot_scaled_long_expr(a: str, b: str) -> F.Column:
         "CAST(round(CAST(x AS DOUBLE) * CAST(y AS DOUBLE) * 1e15) AS BIGINT)), "
         "0L, (acc, v) -> acc + v) / 1e15"
     )
+
+
+def _vectors(df: DataFrame, id_col: str, vec_col: str, side: str) -> DataFrame:
+    """One side of a scoring join: probe side ``"p"`` → (probe_id, pv,
+    p_norm), corpus side ``"c"`` → (neighbor_id, cv, c_norm). The norm is
+    decimal-exact, one eval per VECTOR (P+N evals, not P·N)."""
+    return df.select(
+        F.col(id_col).alias("probe_id" if side == "p" else "neighbor_id"),
+        F.col(vec_col).alias(f"{side}v"),
+        F.sqrt(norm_sq_dec_expr(vec_col)).alias(f"{side}_norm"),
+    )
+
+
+def _cos_sim(dot: F.Column) -> F.Column:
+    """cos_sim of a pair row carrying p_norm and c_norm: the division and
+    round(·, 6) every search (and the DuckDB oracle) applies to the dot."""
+    return F.round(dot / (F.col("p_norm") * F.col("c_norm")), 6).alias("cos_sim")
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """Per-probe top-k window: cos_sim descending, ties by neighbor_id."""
+    w = Window.partitionBy("probe_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def _score_candidates(
+    cands: DataFrame, probes: DataFrame, corpus: DataFrame, k: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """Verify step of the approximate searches: top-k of id-only
+    (probe_id, neighbor_id) candidates. The corpus vector joins once per
+    candidate (one shuffle on neighbor_id), the probe vectors broadcast;
+    one interpreted dot per pair (`dot_scaled_long_expr`), no ×dim explode."""
+    scored = (
+        cands.join(_vectors(corpus, id_col, vec_col, "c"), "neighbor_id")
+        .join(F.broadcast(_vectors(probes, id_col, vec_col, "p")), "probe_id")
+        .select("probe_id", "neighbor_id", _cos_sim(dot_scaled_long_expr("pv", "cv")))
+    )
+    return _top_k(scored, k)
 
 
 # Probe-count cap for the Arrow/numpy scoring path: probes are collected
@@ -174,40 +210,28 @@ def brute_force_topk(
     """Exact top-k cosine neighbors for each probe (excluding self).
 
     The P·N dot products run PAIR-level — no ×dim explode, no P·N·dim
-    join+aggregate. Two physically different, output-identical scoring
-    kernels:
+    join+aggregate — on one of two output-identical kernels; only the
+    `dot` column differs, the filter, `_cos_sim` and `_top_k` are shared:
 
     * numpy path (when the caller's `n_corpus_hint` — a parquet-footer
       row count — promises ≥ `_NUMPY_SCORE_MIN_PAIRS_PER_CORE` pairs per
-      core of `defaultParallelism` and the probe
-      set fits the driver cap): one `mapInArrow` over the corpus computes
-      the scaled-integer dots as whole-batch matrix math (guide §4.2 —
-      the interpreted zip_with HOF was ~95% of the sf1 query: 14-16s of
-      16s measured; numpy does the same 0.5G float ops in well under a
-      second). Bit-equality with the HOF argued at `_numpy_pair_dots`
-      and asserted by test_pipeline.
+      core of `defaultParallelism` and the probe set fits the driver
+      cap): one `mapInArrow` over the corpus computes the scaled-integer
+      dots as whole-batch matrix math (guide §4.2 — the interpreted
+      zip_with HOF was ~95% of the sf1 query: 14-16s of 16s measured;
+      numpy does the same 0.5G float ops in well under a second).
+      Bit-equality with the HOF argued at `_numpy_pair_dots` and asserted
+      by test_pipeline.
     * JVM HOF path (small workloads / no hint / over the probe cap /
-      fixed-dim violation): the r9 corpus × broadcast(probes) nested
-      loop with one interpreted zip_with/aggregate dot per pair.
-
-    Norms are decimal-exact per VECTOR (P+N HOF evals, not P·N) on both
-    paths; the norm division, round(·, 6) and the top-k window are the
-    same JVM operators either way."""
+      fixed-dim violation): corpus × broadcast(probes) nested loop with
+      one interpreted zip_with/aggregate dot per pair."""
     par = corpus.sparkSession.sparkContext.defaultParallelism
     min_pairs = _NUMPY_SCORE_MIN_PAIRS_PER_CORE * par
-    p = probes.select(
-        F.col(id_col).alias("probe_id"),
-        F.col(vec_col).alias("pv"),
-        F.sqrt(norm_sq_dec_expr(vec_col)).alias("p_norm"),
-    )
-    c = corpus.repartition(par).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        F.sqrt(norm_sq_dec_expr(vec_col)).alias("c_norm"),
-    )
+    p = _vectors(probes, id_col, vec_col, "p")
+    c = _vectors(corpus.repartition(par), id_col, vec_col, "c")
     # the probe collect is itself a job — only pay it when BOTH hints
-    # promise the numpy path will be taken (small workloads skip straight
-    # to the JVM HOF with zero extra jobs, the r9 plan exactly)
+    # promise the numpy path will be taken (small workloads go straight
+    # to the JVM HOF with zero extra jobs)
     want_numpy = (
         n_corpus_hint is not None
         and n_probes_hint is not None
@@ -223,37 +247,14 @@ def brute_force_topk(
         and all(r["pv"] is not None and r["p_norm"] is not None for r in probe_rows)
     ):
         pairs = _numpy_pair_dots(c, probe_rows, dim=next(iter(dims)))
-        scored = (
-            pairs.filter(F.col("probe_id") != F.col("neighbor_id"))
-            .select(
-                "probe_id",
-                "neighbor_id",
-                F.round(
-                    (F.col("dot") / F.lit(1e15))
-                    / (F.col("p_norm") * F.col("c_norm")),
-                    6,
-                ).alias("cos_sim"),
-            )
-        )
+        dot = F.col("dot") / 1e15
     else:
-        scored = (
-            c.crossJoin(F.broadcast(p))
-            .filter(F.col("probe_id") != F.col("neighbor_id"))
-            .select(
-                "probe_id",
-                "neighbor_id",
-                F.round(
-                    dot_scaled_long_expr("pv", "cv")
-                    / (F.col("p_norm") * F.col("c_norm")),
-                    6,
-                ).alias("cos_sim"),
-            )
-        )
-    w = Window.partitionBy("probe_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        pairs = c.crossJoin(F.broadcast(p))
+        dot = dot_scaled_long_expr("pv", "cv")
+    scored = pairs.filter(F.col("probe_id") != F.col("neighbor_id")).select(
+        "probe_id", "neighbor_id", _cos_sim(dot)
     )
+    return _top_k(scored, k)
 
 
 def hyperplane_signature(vec_col: str, planes: int = 16, dim: int = 64, seed: int = 42) -> F.Column:
@@ -275,37 +276,21 @@ def hyperplane_signature(vec_col: str, planes: int = 16, dim: int = 64, seed: in
     )
 
 
-def lsh_bucketed_topk(
+def lsh_candidates(
     probes: DataFrame,
     corpus: DataFrame,
-    k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     planes: int = 12,
     dim: int = 64,
     tables: int = 1,
 ) -> DataFrame:
-    """Approximate top-k: equi-join probe and corpus on hyperplane
-    buckets, score ONLY the candidate pairs, window top-k.
-
-    Scale design (the 100 TB path — brute force is P·N dot products):
-
-    * The bucket self-join carries ONLY ids — never vectors. A vector
-      payload through the bucket join multiplies the shuffle by the
-      candidate fan-out (measured 30×/100× on this repo's other pair
-      pipelines before the same fix).
-    * Candidate scoring is the same pair-level formulation as
-      ``brute_force_topk``: attach the corpus vector once per candidate
-      (one shuffle on neighbor_id), broadcast-join the probe vectors on
-      probe_id, and evaluate one zip_with/aggregate dot per pair
-      (`dot_scaled_long_expr`) — no ×dim explode through the join.
-    * Recall is tuned by OR-amplification: ``tables`` independent
-      hyperplane sets (seeded xxhash64, no stored model) union their
-      candidates. P(candidate) = 1-(1-p^planes)^tables for per-plane
-      agreement p — more tables → higher recall, proportionally more
-      candidates; fewer planes → bigger buckets. Measure with
-      ``recall_at_k`` (registered as the sim_lsh_recall query).
-    """
+    """(probe_id, neighbor_id) pairs that share a hyperplane bucket in at
+    least one of ``tables`` signature tables, self-pairs excluded, each
+    pair once. The bucket self-join carries ONLY ids — never vectors: a
+    vector payload through it multiplies the shuffle by the candidate
+    fan-out (measured 30×/100× on this repo's other pair pipelines
+    before the same fix)."""
     par = probes.sparkSession.sparkContext.defaultParallelism
 
     def sigs(df: DataFrame, idn: str) -> DataFrame:
@@ -320,45 +305,39 @@ def lsh_bucketed_topk(
             F.col(id_col).alias(idn), F.explode(F.array(*tbl)).alias("b")
         ).select(idn, F.col("b.tbl").alias("tbl"), F.col("b.sig").alias("sig"))
 
-    p_sig = sigs(probes.repartition(par), "probe_id")
-    c_sig = sigs(corpus.repartition(par), "neighbor_id")
     cands = (
-        p_sig.join(c_sig, ["tbl", "sig"])
+        sigs(probes.repartition(par), "probe_id")
+        .join(sigs(corpus.repartition(par), "neighbor_id"), ["tbl", "sig"])
         .filter(F.col("probe_id") != F.col("neighbor_id"))
         .select("probe_id", "neighbor_id")
     )
     if tables > 1:  # a pair colliding in several tables must score once
         cands = cands.dropDuplicates(["probe_id", "neighbor_id"])
+    return cands
 
-    # norms ride along the vector rows (one decimal-exact eval per
-    # vector); scoring is one pair-level interpreted dot per candidate —
-    # see dot_scaled_long_expr for the measured case against the ×dim
-    # explode+join+aggregate formulation.
-    pvec = probes.select(
-        F.col(id_col).alias("probe_id"),
-        F.col(vec_col).alias("pv"),
-        F.sqrt(norm_sq_dec_expr(vec_col)).alias("p_norm"),
-    )
-    cvec = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        F.sqrt(norm_sq_dec_expr(vec_col)).alias("c_norm"),
-    )
-    scored = (
-        cands.join(cvec, "neighbor_id")
-        .join(F.broadcast(pvec), "probe_id")
-        .select(
-            "probe_id",
-            "neighbor_id",
-            F.round(
-                dot_scaled_long_expr("pv", "cv")
-                / (F.col("p_norm") * F.col("c_norm")),
-                6,
-            ).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("probe_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+def lsh_bucketed_topk(
+    probes: DataFrame,
+    corpus: DataFrame,
+    k: int = 5,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    planes: int = 12,
+    dim: int = 64,
+    tables: int = 1,
+) -> DataFrame:
+    """Approximate top-k: equi-join probe and corpus on hyperplane
+    buckets (`lsh_candidates`), score ONLY the candidate pairs
+    (`_score_candidates`), window top-k.
+
+    Recall is tuned by OR-amplification: ``tables`` independent
+    hyperplane sets (seeded xxhash64, no stored model) union their
+    candidates. P(candidate) = 1-(1-p^planes)^tables for per-plane
+    agreement p — more tables → higher recall, proportionally more
+    candidates; fewer planes → bigger buckets. Measure with
+    ``recall_at_k`` (registered as the sim_lsh_recall query)."""
+    cands = lsh_candidates(probes, corpus, id_col, vec_col, planes, dim, tables)
+    return _score_candidates(cands, probes, corpus, k, id_col, vec_col)
 
 
 def recall_at_k(approx: DataFrame, exact: DataFrame, k: int = 5) -> DataFrame:
@@ -380,47 +359,6 @@ def recall_at_k(approx: DataFrame, exact: DataFrame, k: int = 5) -> DataFrame:
         "n_exact",
         "n_hit",
         F.round(F.col("n_hit") / F.col("n_exact"), 6).alias("recall"),
-    )
-
-
-def numpy_topk_per_partition(
-    probes: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Arrow-batched exact top-k: the corpus is broadcast as a numpy
-    matrix; each probe partition computes a matmul per Arrow batch.
-    The Pandas-UDF escape hatch for wide vectors where per-element
-    SQL expressions dominate."""
-    import numpy as np
-
-    corpus_rows = corpus.select(id_col, vec_col).collect()
-    ids = np.array([r[0] for r in corpus_rows], dtype=np.int64)
-    mat = np.array([r[1] for r in corpus_rows], dtype=np.float64)
-    norms = np.linalg.norm(mat, axis=1)
-    sc = probes.sparkSession.sparkContext
-    b_ids, b_mat, b_norms = sc.broadcast(ids), sc.broadcast(mat), sc.broadcast(norms)
-
-    def score(iterator):
-        import pandas as pd
-
-        for pdf in iterator:
-            out = []
-            for pid, vec in zip(pdf[id_col], pdf[vec_col]):
-                v = np.asarray(vec, dtype=np.float64)
-                sims = (b_mat.value @ v) / (b_norms.value * np.linalg.norm(v) + 1e-300)
-                mask = b_ids.value != pid
-                cand_idx = np.argsort(-sims[mask])[:k]
-                cids = b_ids.value[mask][cand_idx]
-                csims = sims[mask][cand_idx]
-                for rank, (nid, s) in enumerate(zip(cids, csims), 1):
-                    out.append((pid, int(nid), round(float(s), 6), rank))
-            yield pd.DataFrame(out, columns=["probe_id", "neighbor_id", "cos_sim", "rank"])
-
-    return probes.select(id_col, vec_col).mapInPandas(
-        score, schema="probe_id long, neighbor_id long, cos_sim double, rank int"
     )
 
 
@@ -510,8 +448,8 @@ def ivf_topk(
 ) -> DataFrame:
     """IVF ANN top-k: corpus vectors are assigned to their nearest
     centroid's inverted list (1 list each); each probe searches its
-    ``nprobe`` nearest lists only. Candidates carry ids; scoring reuses
-    the pair-level scaled-long dot of ``lsh_bucketed_topk``. Candidate
+    ``nprobe`` nearest lists only. Candidates carry ids; scoring is
+    `_score_candidates`, as for ``lsh_bucketed_topk``. Candidate
     fraction ≈ nprobe/n_centroids of the corpus per probe on clustered
     data — the sublinear path when locality exists (LSH with coarse
     buckets covers the near-random regime)."""
@@ -528,30 +466,4 @@ def ivf_topk(
         .select("probe_id", "neighbor_id")
         .distinct()
     )
-    # norms ride along the vector rows; scoring is one pair-level
-    # interpreted dot per candidate — see dot_scaled_long_expr.
-    pvec = probes.select(
-        F.col(id_col).alias("probe_id"),
-        F.col(vec_col).alias("pv"),
-        F.sqrt(norm_sq_dec_expr(vec_col)).alias("p_norm"),
-    )
-    cvec = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        F.sqrt(norm_sq_dec_expr(vec_col)).alias("c_norm"),
-    )
-    scored = (
-        cands.join(cvec, "neighbor_id")
-        .join(F.broadcast(pvec), "probe_id")
-        .select(
-            "probe_id",
-            "neighbor_id",
-            F.round(
-                dot_scaled_long_expr("pv", "cv")
-                / (F.col("p_norm") * F.col("c_norm")),
-                6,
-            ).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("probe_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _score_candidates(cands, probes, corpus, k, id_col, vec_col)

@@ -91,7 +91,12 @@ _EXACT_JACCARD_PAIRS_SQL = f"""
 def dedup_exact(spark, sf_dir):
     """Exact dedup: one representative (min id) per distinct text."""
     docs = load_table(spark, sf_dir, "documents")
-    return exact_dedup(docs).select("doc_id", "text", "n_copies").orderBy("doc_id")
+    # at most one row per document (footer count): single-partition sort,
+    # no range exchange re-running the dedup aggregate (§2.4)
+    return sorted_small(
+        exact_dedup(docs).select("doc_id", "text", "n_copies"), "doc_id",
+        est_rows=table_row_count(sf_dir, "documents"),
+    )
 
 
 @register(
@@ -222,20 +227,38 @@ def dedup_embedding_cosine(spark, sf_dir):
 )
 def sim_topk_bruteforce(spark, sf_dir):
     """Brute-force cosine top-5 for 1-in-50 probes — the exact ANN
-    baseline. JVM-side dot products (zip_with+aggregate), window top-k."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    probes = emb.filter(F.col("vec_id") % 50 == 0)
+    baseline. Pair-level scaled-integer dot products (the numpy kernel
+    once the footer pair count passes its gate, else the JVM
+    zip_with+aggregate HOF), window top-k."""
+    _probes, n_probes, exact = _sim_probes(sf_dir, load_table(spark, sf_dir, "embeddings"))
     # k rows per probe (footer-estimated): single-partition sort skips the
     # range exchange's bounds sampling, which re-runs the whole top-k
     # window stage over the P×N scored pairs (§2.4)
-    n_emb = table_row_count(sf_dir, "embeddings")
     return sorted_small(
-        brute_force_topk(
-            probes, emb, k=5, n_corpus_hint=n_emb,
-            n_probes_hint=None if n_emb is None else n_emb // 50 + 1,
-        ),
-        "probe_id", "rank",
-        est_rows=None if n_emb is None else (n_emb // 50 + 1) * 5,
+        exact, "probe_id", "rank", est_rows=None if n_probes is None else n_probes * 5
+    )
+
+
+def _sim_probes(sf_dir, emb):
+    """The sim_* queries' shared inputs over corpus ``emb``: the 1-in-50
+    probes, their count estimated from the parquet footers (None without
+    one), and the exact top-5 baseline, hinted so its kernel gate sees
+    the pair count."""
+    probes = emb.filter(F.col("vec_id") % 50 == 0)
+    n_emb = table_row_count(sf_dir, "embeddings")
+    n_probes = None if n_emb is None else n_emb // 50 + 1
+    exact = brute_force_topk(probes, emb, k=5, n_corpus_hint=n_emb, n_probes_hint=n_probes)
+    return probes, n_probes, exact
+
+
+def _shared_embeddings(spark, sf_dir):
+    """The corpus of the self-check builders. Their approx + exact +
+    check plans re-derive signatures/norms from the corpus repeatedly —
+    without a cache that is ~12 parquet scans of embeddings per run
+    (plan-sweep finding); persist the one narrow projection they all
+    share (computed fresh per invocation)."""
+    return persist_tracked(
+        load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     )
 
 
@@ -276,8 +299,9 @@ _TOPK_CHECK_ORACLE = """
 
 @register("sim_topk_lsh", oracle=_TOPK_CHECK_ORACLE, tags=("similarity", "lsh"))
 def sim_topk_lsh(spark, sf_dir):
-    """Hyperplane-LSH bucketed top-k (approximate; ids-only bucket join +
-    codegen candidate scoring instead of P×N — the scale path). The
+    """Hyperplane-LSH bucketed top-k (approximate; ids-only bucket join,
+    then the exact path's pair scoring on the candidates only — the
+    interpreted zip_with HOF, not P×N). The
     driver-checked output is the self-check projection (_topk_selfcheck):
     per-probe completeness + recall@5 ≥ 0.9 vs the exact baseline
     (measured 0.98 at sf0.01 and sf0.1).
@@ -288,24 +312,10 @@ def sim_topk_lsh(spark, sf_dir):
     On a clustered corpus (neighbor cos ≥ 0.9, the realistic regime)
     fine buckets (planes≈10-12) prune aggressively at the same recall —
     proven in tests/test_pipeline.py::test_lsh_clustered_corpus."""
-    # approx + exact + selfcheck re-derive signatures/norms from the
-    # corpus repeatedly — without a cache that is ~12 parquet scans of
-    # embeddings per run (plan-sweep finding); persist the one narrow
-    # projection they all share (computed fresh per invocation).
-    emb = persist_tracked(
-        load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    )
-    probes = emb.filter(F.col("vec_id") % 50 == 0)
-    n_emb = table_row_count(sf_dir, "embeddings")
+    emb = _shared_embeddings(spark, sf_dir)
+    probes, n_probes, exact = _sim_probes(sf_dir, emb)
     approx = lsh_bucketed_topk(probes, emb, k=5, planes=2, tables=8)
-    exact = brute_force_topk(
-        probes, emb, k=5, n_corpus_hint=n_emb,
-        n_probes_hint=None if n_emb is None else n_emb // 50 + 1,
-    )
-    return _topk_selfcheck(
-        approx, exact, k=5, recall_floor=0.9,
-        est_rows=None if n_emb is None else n_emb // 50 + 1,
-    )
+    return _topk_selfcheck(approx, exact, k=5, recall_floor=0.9, est_rows=n_probes)
 
 
 @register("sim_topk_ivf", oracle=_TOPK_CHECK_ORACLE, tags=("similarity", "ivf"))
@@ -318,21 +328,10 @@ def sim_topk_ivf(spark, sf_dir):
     nprobe/n_centroids = 12/16 bounds recall on this near-random corpus).
     Clustered-corpus recall floor asserted in
     tests/test_pipeline.py::test_ivf_clustered_corpus."""
-    # shared-projection persist: see sim_topk_lsh (same ~12-scan finding)
-    emb = persist_tracked(
-        load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    )
-    probes = emb.filter(F.col("vec_id") % 50 == 0)
-    n_emb = table_row_count(sf_dir, "embeddings")
+    emb = _shared_embeddings(spark, sf_dir)
+    probes, n_probes, exact = _sim_probes(sf_dir, emb)
     approx = ivf_topk(probes, emb, k=5, n_centroids=16, nprobe=12)
-    exact = brute_force_topk(
-        probes, emb, k=5, n_corpus_hint=n_emb,
-        n_probes_hint=None if n_emb is None else n_emb // 50 + 1,
-    )
-    return _topk_selfcheck(
-        approx, exact, k=5, recall_floor=0.8,
-        est_rows=None if n_emb is None else n_emb // 50 + 1,
-    )
+    return _topk_selfcheck(approx, exact, k=5, recall_floor=0.8, est_rows=n_probes)
 
 
 @register(
@@ -352,17 +351,9 @@ def sim_lsh_recall(spark, sf_dir):
     pass = recall ≥ 0.9): a recall regression flips `pass` and the
     driver row hash-fails. The raw recall number is asserted in
     tests/test_pipeline.py."""
-    # shared-projection persist: see sim_topk_lsh (same ~12-scan finding)
-    emb = persist_tracked(
-        load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    )
-    probes = emb.filter(F.col("vec_id") % 50 == 0)
+    emb = _shared_embeddings(spark, sf_dir)
+    probes, _n_probes, exact = _sim_probes(sf_dir, emb)
     approx = lsh_bucketed_topk(probes, emb, k=5, planes=2, tables=8)
-    n_emb = table_row_count(sf_dir, "embeddings")
-    exact = brute_force_topk(
-        probes, emb, k=5, n_corpus_hint=n_emb,
-        n_probes_hint=None if n_emb is None else n_emb // 50 + 1,
-    )
     return recall_at_k(approx, exact, k=5).select(
         F.col("k").cast("int").alias("k"),
         F.col("n_probes").cast("bigint").alias("n_probes"),

@@ -20,9 +20,10 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from myduckdb_spark.catalog import load_table
+from myduckdb_spark.catalog import load_table, table_row_count
 from myduckdb_spark.catalog import maybe_broadcast as _mb
 from myduckdb_spark.functions.compat import DEC, davg_sql, dsum, dsum_sql, revenue_col
+from myduckdb_spark.operators.ordering import sorted_small
 from myduckdb_spark.queries import register
 
 _REV_SQL = "l_extendedprice * (1 - l_discount)"
@@ -643,15 +644,17 @@ def q20_excess_inventory_suppliers(spark, sf_dir):
         .agg(F.sum(F.col("l_quantity").cast(DEC)).cast("double").alias("__sq"))
         .filter(F.col("__sq") > 50)
     )
-    return (
+    out = (
         sup.join(_mb(nat, sf_dir, "nation"), F.col("s_nationkey") == F.col("n_nationkey"))
         # qualifying has ≤ |supplier| rows (grouped by l_suppkey, 2 narrow
         # columns) → gate the hint on the supplier table's on-disk size;
         # above the cap AQE decides (guide §3.1)
         .join(_mb(qualifying, sf_dir, "supplier"), F.col("s_suppkey") == F.col("l_suppkey"), "left_semi")
         .select("s_name", F.col("s_acctbal").alias("acctbal"))
-        .orderBy("s_name")
     )
+    # at most one row per supplier (footer count): single-partition sort,
+    # no range exchange re-running the semi-join stage (§2.4)
+    return sorted_small(out, "s_name", est_rows=table_row_count(sf_dir, "supplier"))
 
 
 @register(

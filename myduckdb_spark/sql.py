@@ -3095,14 +3095,13 @@ def _rewrite_integer_division(text: str) -> str:
     return _sub_code(r"(?<![/:])//(?!/)", " div ", text)
 
 
-def _bind_registry_typeof(text: str) -> str:
-    """Logical types whose Spark CARRIER erases the duck type name (JSON →
-    STRING, unsigned ints → wider signed, HUGEINT → DECIMAL(38,0)):
-    typeof(col) on a declared column of a FROM table resolves from the
-    catalog registry at translate time (json/test_json_persistence,
-    copy/parquet/writer/parquet_write_unsigned). Narrow bind:
-    bare-identifier argument, no same-named differently-typed column in
-    scope. Reads the session's column registry each time it runs."""
+def _registry_declared(text: str) -> dict[str, str]:
+    """Lowercase column name -> declared DuckDB type, for the columns of
+    ``text``'s FROM tables whose Spark CARRIER erases the duck type name
+    (JSON → STRING, unsigned ints → wider signed, HUGEINT →
+    DECIMAL(38,0)). Narrow bind: a name that another FROM table declares
+    differently, or declares with a type its carrier keeps, is left out.
+    Reads the session's column registry each time it runs."""
     declared: dict[str, str] = {}
     ambiguous: set[str] = set()
     for t in re.findall(r"\bFROM\s+\"?([A-Za-z_]\w*)\"?", text, re.I):
@@ -3115,9 +3114,45 @@ def _bind_registry_typeof(text: str) -> str:
                 ambiguous.add(nm)
     for nm in ambiguous:
         declared.pop(nm, None)
+    return declared
+
+
+def _bind_registry_typeof(text: str) -> str:
+    """typeof(col) on a declared column of a FROM table resolves from the
+    catalog registry at translate time (json/test_json_persistence,
+    copy/parquet/writer/parquet_write_unsigned): bare-identifier
+    argument, name bound by `_registry_declared`."""
+    declared = _registry_declared(text)
     if not declared:
         return text
     return _rewrite_calls(text, "typeof", partial(_declared_typeof, declared))
+
+
+# one SELECT-list item that is a bare column: [qualifier.]column or
+# [qualifier.]*, with an optional [AS] alias
+_BARE_ITEM = re.compile(
+    r'(?:"?\w+"?\.)?(?:"?(\w+)"?|(\*))(?:\s+(?:AS\s+)?"?(\w+)"?)?', re.I
+)
+
+
+def _bare_items(query: str) -> dict[str, str]:
+    """Output name -> source column (lowercase) of each bare column item
+    in ``query``'s top-level SELECT list; a ``*`` item maps "*" to "*"."""
+    mask = _code_mask(query)
+    depth = _depth_profile(query, mask)
+    top = [m for m in _code_matches(r"\b(?:(SELECT(?:\s+(?:DISTINCT|ALL))?)|FROM)\b",
+                                    query, re.I, mask=mask) if depth[m.start()] == 0]
+    span = next(((a.end(), b.start()) for a, b in zip(top, top[1:])
+                 if a.group(1) and not b.group(1)), None)
+    if span is None:
+        return {}
+    out = {}
+    for item in _split_args(query[span[0]:span[1]]):
+        m = _BARE_ITEM.fullmatch(item.strip())
+        if m:
+            col = (m.group(1) or m.group(2)).lower()
+            out[(m.group(3) or col).lower()] = col
+    return out
 
 
 def _scan_columns(fields) -> list[dict]:
@@ -8075,11 +8110,17 @@ def _describe_statement(spark: SparkSession, text: str) -> DataFrame | None:
     m = _DESCRIBE_SEL.match(text)
     if m:
         df = sql(spark, m.group(1))
-        rows = [
-            (f.name, typenames.duck_name(f.dataType.simpleString()), "YES",
-             None, None, None)
-            for f in df.schema.fields
-        ]
+        # a carrier-erased declared type survives as COPY TO parquet's
+        # duck_type metadata, or on a bare column item of a FROM table
+        # (the typeof() bind); computed columns render the Spark type
+        declared, bare = _registry_declared(m.group(1)), _bare_items(m.group(1))
+        rows = []
+        for f in df.schema.fields:
+            dtype = f.metadata.get("duck_type")
+            if dtype not in _REGISTRY_BOUND:
+                src = bare.get(f.name.lower(), f.name.lower() if "*" in bare else None)
+                dtype = typenames.column_type(declared.get(src), f.dataType.simpleString())
+            rows.append((f.name, dtype, "YES", None, None, None))
         return _rows_df(spark, rows, _DESCRIBE_SCHEMA)
     m = _DESCRIBE_TBL.match(text)
     if m and not re.match(

@@ -333,3 +333,27 @@ def test_mirrored_state_renders_like_duckdb(spark):
     finally:
         for v in views:
             spark.catalog.dropTempView(v)
+
+
+def test_describe_select_reports_declared_type_like_duckdb(spark, tmp_path):
+    """DESCRIBE SELECT reports a bare column's declared type (UTINYINT
+    stored as SMALLINT), and the type COPY TO parquet records. Computed
+    columns are left out: DuckDB types `c + 1` as UTINYINT by its literal
+    typing, which the engine does not model."""
+    con = duckdb.connect()
+    S.sql(spark, "DROP TABLE IF EXISTS f4")
+    try:
+        for s in ("CREATE TABLE f4 (c UTINYINT, d INTEGER)",
+                  "INSERT INTO f4 VALUES (1, 2)"):
+            con.execute(s)
+            S.sql(spark, s).collect()
+        for side, run in (("duck", con.execute), ("spark", lambda q: S.sql(spark, q))):
+            run(f"COPY f4 TO '{tmp_path}/{side}.parquet' (FORMAT PARQUET)")
+        for q in ("DESCRIBE SELECT c, d FROM f4", "DESCRIBE SELECT * FROM f4",
+                  "DESCRIBE SELECT d AS x, f4.c AS y FROM f4",
+                  "DESCRIBE SELECT * FROM '{}/{}.parquet'"):
+            want = con.execute(q.format(tmp_path, "duck")).fetchall()
+            got = _rows(S.sql(spark, q.format(tmp_path, "spark")).collect())
+            assert got == want, q
+    finally:
+        S.sql(spark, "DROP TABLE IF EXISTS f4")

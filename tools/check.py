@@ -102,6 +102,53 @@ def pandas_rows(pdf):
     ]
 
 
+def duck_connect(sf_dir: str):
+    """A DuckDB connection with one view per catalog table of ``sf_dir``."""
+    from myduckdb_spark.catalog import TABLES
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
+
+
+def compare(spark, con, name: str, sf_dir: str) -> tuple[int | None, list[str]]:
+    """Run registered query ``name`` on Spark and its oracle on DuckDB
+    ``con``: (Spark row count, problems). No problems is a strict match;
+    the row count is None when the Spark side failed. A query without an
+    oracle has no problems and is only run."""
+    from myduckdb_spark import queries as q
+
+    try:
+        sdf = q.queries()[name](spark, sf_dir)
+        scols = sdf.columns
+        # pandas represents SQL NULL as NaN/NaT — normalize to None
+        srows = pandas_rows(sdf.toPandas())
+    except Exception as e:
+        return None, [f"spark error: {type(e).__name__}: {e}"]
+    oracle = q.oracle_sql().get(name)
+    if oracle is None:
+        return len(srows), []
+    try:
+        rel = con.sql(oracle)
+        dcols = [c.lower() for c in rel.columns]
+        drows = pandas_rows(rel.df())
+    except Exception as e:
+        return len(srows), [f"duckdb error: {type(e).__name__}: {e}"]
+    problems = []
+    if len(srows) != len(drows):
+        problems.append(f"rowcount {len(srows)} vs {len(drows)}")
+    if sorted(c.lower() for c in scols) != sorted(dcols):
+        problems.append(f"columns {sorted(scols)} vs {sorted(dcols)}")
+    if not problems:
+        sc = canon_rows([c.lower() for c in scols], srows)
+        dc = canon_rows(dcols, drows)
+        if sc != dc:
+            diffs = [(a, b) for a, b in zip(sc, dc) if a != b][:3]
+            problems.append(f"values differ; first diffs: {diffs}")
+    return len(srows), problems
+
+
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="*")
@@ -118,7 +165,6 @@ def main():
     from pyspark.sql import SparkSession
 
     from myduckdb_spark import queries as q
-    from myduckdb_spark.catalog import TABLES
     from myduckdb_spark.session import get_spark
 
     if args.vanilla:
@@ -130,53 +176,22 @@ def main():
         )
     else:
         spark = get_spark("check")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{args.sf}/{t}.parquet'")
+    con = duck_connect(args.sf)
 
-    all_q = q.queries()
     oracles = q.oracle_sql()
-    names = args.names or list(all_q)
+    names = args.names or list(q.queries())
     passed = failed = weak = 0
     for name in names:
         t0 = time.time()
-        try:
-            sdf = all_q[name](spark, args.sf)
-            scols = sdf.columns
-            # pandas represents SQL NULL as NaN/NaT — normalize to None
-            srows = pandas_rows(sdf.toPandas())
-        except Exception as e:
-            print(f"FAIL  {name}: spark error: {type(e).__name__}: {e}")
-            failed += 1
-            continue
-        if name not in oracles:
-            print(f"weak  {name}: rows={len(srows)} (no oracle) [{time.time()-t0:.1f}s]")
-            weak += 1
-            continue
-        try:
-            rel = con.sql(oracles[name])
-            dcols = [c.lower() for c in rel.columns]
-            drows = pandas_rows(rel.df())
-        except Exception as e:
-            print(f"FAIL  {name}: duckdb error: {type(e).__name__}: {e}")
-            failed += 1
-            continue
-        problems = []
-        if len(srows) != len(drows):
-            problems.append(f"rowcount {len(srows)} vs {len(drows)}")
-        if sorted(c.lower() for c in scols) != sorted(dcols):
-            problems.append(f"columns {sorted(scols)} vs {sorted(dcols)}")
-        if not problems:
-            sc = canon_rows([c.lower() for c in scols], srows)
-            dc = canon_rows(dcols, drows)
-            if sc != dc:
-                diffs = [(a, b) for a, b in zip(sc, dc) if a != b][:3]
-                problems.append(f"values differ; first diffs: {diffs}")
+        n_rows, problems = compare(spark, con, name, args.sf)
         if problems:
             print(f"FAIL  {name}: {'; '.join(problems)} [{time.time()-t0:.1f}s]")
             failed += 1
+        elif name not in oracles:
+            print(f"weak  {name}: rows={n_rows} (no oracle) [{time.time()-t0:.1f}s]")
+            weak += 1
         else:
-            print(f"ok    {name}: rows={len(srows)} [{time.time()-t0:.1f}s]")
+            print(f"ok    {name}: rows={n_rows} [{time.time()-t0:.1f}s]")
             passed += 1
     print(f"\n{passed} ok, {weak} weak, {failed} FAILED of {len(names)}")
     sys.exit(1 if failed else 0)
