@@ -41,31 +41,28 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
 # Shingling / n-grams
 # ---------------------------------------------------------------------------
 
-def _windows_sql(n_sql: str, width: int, item_sql: str) -> str:
-    """One `item_sql` per window start i in 1..n-width+1, as an array.
-    Input shorter than the window has none, as in DuckDB's
-    generate_series: Spark's sequence(1, 0) counts down to [1, 0]."""
-    return (
-        f"CASE WHEN {n_sql} < {width} THEN CAST(array() AS array<string>)"
-        f" ELSE transform(sequence(1, {n_sql} - {width - 1}), i -> {item_sql}) END"
-    )
-
-
 def char_shingles_expr(text_col: str, k: int = 3, distinct: bool = True) -> Column:
-    """SQL-expression form of char k-gram shingling (JVM codegen, no UDF).
-    Text shorter than k has no shingle."""
-    inner = _windows_sql(f"length({text_col})", k, f"substring({text_col}, i, {k})")
-    if distinct:
-        inner = f"array_distinct({inner})"
-    return F.expr(inner)
+    """Char k-gram shingling as one codegen'd regex pass (no UDF, no
+    lambda): a lookahead capture at every code-point start yields the
+    overlapping windows ``substring(text, i, k)`` gives, and ``(?s)`` lets
+    ``.`` match line terminators. Java's matcher steps one UTF-16 unit
+    after a zero-width match, so the negative lookahead skips starts at a
+    low surrogate (the second half of an emoji). Text shorter than k has
+    no shingle; NULL text gives NULL."""
+    pattern = r"(?s)(?![\x{DC00}-\x{DFFF}])(?=(.{%d}))" % k
+    sh = F.regexp_extract_all(F.expr(text_col), F.lit(pattern), F.lit(1))
+    return F.array_distinct(sh) if distinct else sh
 
 
 def word_ngrams_expr(text_col: str, n: int = 3) -> Column:
     """Word n-grams via split + slice (JVM-side); none for text of fewer
-    than n words."""
+    than n words, as in DuckDB's generate_series: Spark's sequence(1, 0)
+    counts down to [1, 0]."""
     words = f"split({text_col}, ' ')"
     return F.expr(
-        _windows_sql(f"size({words})", n, f"array_join(slice({words}, i, {n}), ' ')")
+        f"CASE WHEN size({words}) < {n} THEN CAST(array() AS array<string>)"
+        f" ELSE transform(sequence(1, size({words}) - {n - 1}),"
+        f" i -> array_join(slice({words}, i, {n}), ' ')) END"
     )
 
 
@@ -171,7 +168,8 @@ def minhash_lsh_pairs(
     slower; do not regress to it.)
 
     Pipeline: repartition docs (single-file inputs otherwise put all
-    per-row work in one task) → explode+hash → sig (one narrow shuffle)
+    per-row work in one task) → per-doc shingle arrays (regex pass,
+    cached: one row per doc) → explode+hash → sig (one narrow shuffle)
     → band keys → self-join on (band, key) → distinct candidate pairs →
     signature-estimate prefilter → exact-Jaccard verify ≥ threshold.
     With b bands × r rows the catch probability at s=threshold is
@@ -215,19 +213,18 @@ def minhash_lsh_pairs(
     # (column-pruned, parquet row-group stats when docs is a bare scan).
     if n_docs is None:
         n_docs = docs.count()
-    # Only the EXPLODED (id, shingle) rows are cached — every downstream
-    # branch (vocab probe, bitmap build, signatures, hashed-array verify)
-    # derives from them. Caching the pre-explode shingle ARRAYS as well
-    # (the r8 layout) doubled the cache writes for no reader. (Measured
-    # alternative: skipping this persist on the bitmap path makes the
-    # probe 0.35s cheaper but the re-explode costs 0.3s more at exec —
-    # net loss.)
-    exploded = persist_tracked(
+    # Only the per-document shingle ARRAYS are cached (one row per doc);
+    # every downstream branch (vocab probe, bitmap build, signatures,
+    # hashed-array verify) explodes from that one cache. The explode is a
+    # cheap codegen'd generator; caching the exploded (id, shingle) rows
+    # instead (712,778 rows against 5,000 at sf0.1) measured slower, and
+    # so did no cache at all.
+    shingled = persist_tracked(
         docs.repartition(par).select(
-            F.col(id_col).alias("id"),
-            F.explode(char_shingles_expr(text_col, k)).alias("s"),
+            F.col(id_col).alias("id"), char_shingles_expr(text_col, k).alias("sh")
         )
     )
+    exploded = shingled.select("id", F.explode("sh").alias("s"))
     # pair verification re-attaches per-doc payloads to the candidate
     # list; the lookup side is |docs| rows, broadcastable only while the
     # corpus is small. Above budget use plain shuffle joins — at 100 TB

@@ -280,5 +280,9 @@ def amus_theta_join(spark, sf_dir):
     nation = load_table(spark, sf_dir, "nation")
     region = load_table(spark, sf_dir, "region")
     out = amus_join(nation, region, F.col("n_regionkey") != F.col("r_regionkey"))
-    # nation×region — both enum-scale dims (§2.4)
-    return sorted_tiny(out.select("n_name", "r_name"), "n_name", "r_name")
+    # no exchange sits below the join, so sorted_tiny's coalesce(1) would
+    # pull the nation scan into the one sort task; at most nation×region
+    # rows (footer counts) take the single-partition exchange instead
+    n_nat, n_reg = (table_row_count(sf_dir, t) for t in ("nation", "region"))
+    est = None if n_nat is None or n_reg is None else n_nat * n_reg
+    return sorted_small(out.select("n_name", "r_name"), "n_name", "r_name", est_rows=est)

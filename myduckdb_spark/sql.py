@@ -48,6 +48,7 @@ import os
 import re
 from functools import partial
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from myduckdb_spark import infoschema as ischema
@@ -5616,16 +5617,10 @@ def reset_dml_state(spark: SparkSession) -> None:
     global _SEQUENCES, _TXN
     for name in list(_MANAGED):
         _MANAGED.pop(name)
-        try:
-            spark.catalog.dropTempView(name)
-        except Exception:
-            pass
+        spark.catalog.dropTempView(name)
     for name in list(_VIEWS):
         _VIEWS.pop(name)
-        try:
-            spark.catalog.dropTempView(name)
-        except Exception:
-            pass
+        spark.catalog.dropTempView(name)
     _COLUMN_COLLATIONS.clear()
     _SEQUENCES = None
     _TXN = None
@@ -5645,10 +5640,8 @@ def reset_dml_state(spark: SparkSession) -> None:
     from myduckdb_spark import catalog
 
     catalog.FRONT_DOOR_ZONE = None
-    try:  # a corpus file's SET TimeZone must not leak into the next file
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-    except Exception:
-        pass
+    # a corpus file's SET TimeZone must not leak into the next file
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
 # ---------------------------------------------------------------------------
@@ -5692,10 +5685,7 @@ def _txn_rollback(spark: SparkSession) -> None:
     txn, _TXN = _TXN, None
     for name in set(_MANAGED) - set(txn["tables"]):  # created during txn
         _MANAGED.pop(name)
-        try:
-            spark.catalog.dropTempView(name)
-        except Exception:
-            pass
+        spark.catalog.dropTempView(name)
     for name, (tbl, version) in txn["tables"].items():
         _MANAGED[name] = tbl  # resurrect tables dropped during the txn
         if tbl.version != version:
@@ -6036,10 +6026,7 @@ def _alter_table(spark: SparkSession, exists_ok: str | None, name: str, act: str
             _COLUMN_COLLATIONS[new.lower()] = _COLUMN_COLLATIONS.pop(name.lower())
         # registry rows and COMMENT ON entries follow (comment_on.test)
         ischema.rename_object(name, new)
-        try:
-            spark.catalog.dropTempView(name)
-        except Exception:
-            pass
+        spark.catalog.dropTempView(name)
         _refresh_view(spark, new)
         return _count_df(spark, 0)
 
@@ -7213,10 +7200,7 @@ def _dml_statement(spark: SparkSession, text: str) -> DataFrame | None:
         for k in ischema.drop_schema(name):
             _MANAGED.pop(k, None)
             _VIEWS.pop(k, None)
-            try:
-                spark.catalog.dropTempView(k)
-            except Exception:
-                pass
+            spark.catalog.dropTempView(k)
         return _count_df(spark, 0)
     m = _COMMENT_ON.match(text)
     if m:
@@ -7791,10 +7775,7 @@ def _dml_statement(spark: SparkSession, text: str) -> DataFrame | None:
         if name in _VIEWS:
             _VIEWS.pop(name)
             ischema.drop_object(name)
-            try:
-                spark.catalog.dropTempView(name)
-            except Exception:
-                pass
+            spark.catalog.dropTempView(name)
         elif not m.group(1):
             raise KeyError(f"DROP VIEW: view {name} does not exist")
         return _count_df(spark, 0)
@@ -9414,7 +9395,7 @@ def sql(
             if retry != out:
                 try:
                     return spark.sql(retry)
-                except Exception:
+                except AnalysisException:
                     pass
             lateral = _insert_join_lateral(out)
             if lateral == out:

@@ -52,15 +52,55 @@ def test_shingles_and_jaccard(spark):
     assert row["j"] == pytest.approx(0.5)
 
 
+_SHINGLE_TEXTS = [
+    "the quick brown fox", "line one\nline two", "crlf\r\nend",
+    "para\u2028sep", "café crème brûlée", "😀 starts", "mid 😀 dle",
+    "ends 😀", "😀😀😀😀😀😀", "ab😀cd", "abc", "ab", "", None,
+]
+
+
+def _substring_shingles_sql(col: str, k: int, distinct: bool) -> str:
+    """Reference: the interpreted-lambda shingling that the regex pass
+    replaced, one substring per code-point window start."""
+    sql = (
+        f"CASE WHEN length({col}) < {k} THEN CAST(array() AS array<string>)"
+        f" ELSE transform(sequence(1, length({col}) - {k - 1}),"
+        f" i -> substring({col}, i, {k})) END"
+    )
+    return f"array_distinct({sql})" if distinct else sql
+
+
+@pytest.mark.parametrize("distinct", [True, False])
+@pytest.mark.parametrize("k", [2, 3, 5])
+def test_char_shingles_match_substring_windows(spark, k, distinct):
+    """The regex shingles equal the substring windows, element for
+    element and in order: line terminators, U+2028, accents, emoji
+    (surrogate pairs) anywhere, text of exactly k, fewer than k, empty
+    and NULL."""
+    texts = _SHINGLE_TEXTS + ["x" * k, "é" * k, "😀" * k]
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i int, t string")
+    rows = df.select(
+        "i",
+        char_shingles_expr("t", k, distinct).alias("got"),
+        F.expr(_substring_shingles_sql("t", k, distinct)).alias("want"),
+    ).orderBy("i").collect()
+    assert [(r["i"], r["got"]) for r in rows] == [(r["i"], r["want"]) for r in rows]
+
+
 @pytest.mark.parametrize("texts", [
     ["ab", "ab", "x", "x", "hello world", "hello world!", ""],
     ["ab", "ab", "x", ""],  # no doc has a shingle: the n_vocab == 0 return
-], ids=["mixed", "all-short"])
-def test_short_docs_have_no_shingle_like_duckdb(spark, texts):
+    ["ab😀cd", "ab😀cd!", "😀😀😀😀", "😀😀😀😀😀", "x😀", "x😀", "😀 hi 😀"],
+], ids=["mixed", "all-short", "emoji"])
+def test_short_docs_have_no_shingle_like_duckdb(spark, texts, monkeypatch):
     """Text shorter than k has no shingle, so two equal short docs are
-    not a Jaccard-1.0 pair: both pair finders equal the DuckDB oracle."""
+    not a Jaccard-1.0 pair, and an emoji is one character: the exact
+    pair finder and every minhash_lsh_pairs plan (all-pairs bitmap,
+    banded with bitmap verify, banded with hashed-array verify) equal
+    the DuckDB oracle."""
     import duckdb
 
+    from myduckdb_spark.pipeline import dedup as D
     from myduckdb_spark.queries.pipeline_ops import _EXACT_JACCARD_PAIRS_SQL
 
     rows = list(enumerate(texts))
@@ -69,8 +109,16 @@ def test_short_docs_have_no_shingle_like_duckdb(spark, texts):
     con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
     want = con.execute(_EXACT_JACCARD_PAIRS_SQL.format(thr=0.7)).fetchall()
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    for pairs in (ngram_jaccard_pairs(docs, k=3, threshold=0.7),
-                  minhash_lsh_pairs(docs, k=3, threshold=0.7)):
+
+    def minhash():
+        return minhash_lsh_pairs(docs, k=3, threshold=0.7, num_hashes=128, bands=32)
+
+    results = [ngram_jaccard_pairs(docs, k=3, threshold=0.7), minhash()]
+    monkeypatch.setattr(D, "_ALLPAIRS_MAX_DOCS", 0)  # force banded LSH
+    results.append(minhash())
+    monkeypatch.setattr(D, "_BITMAP_VOCAB_MAX", 0)  # force array verify
+    results.append(minhash())
+    for pairs in results:
         assert sorted(map(tuple, pairs.collect())) == want
 
 

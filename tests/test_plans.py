@@ -63,6 +63,21 @@ def test_hot_path_stays_in_codegen(spark):
     assert "*(1) HashAggregate" in plan and "*(1) Filter" in plan
 
 
+def test_dedup_shingling_stays_in_codegen(spark, sf_dir):
+    """dedup_minhash_lsh shingles every document with one regex pass: a
+    higher-order-function lambda (transform over sequence) runs on
+    Catalyst's interpreted eval path, and regressing to it more than
+    doubles the shingle build."""
+    from myduckdb_spark.queries import queries
+
+    df = queries()["dedup_minhash_lsh"](spark, sf_dir)
+    # the cached shingle projection shows inside the InMemoryRelation
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    spark.catalog.clearCache()
+    assert "regexp_extract_all" in plan
+    assert "lambdafunction" not in plan.lower()
+
+
 def test_group_join_rewrite_prunes_probe_shuffle(spark):
     orders = load_table(spark, SF, "orders")
     li = load_table(spark, SF, "lineitem")
@@ -175,10 +190,11 @@ def test_plan_sweep_gate(spark, sf_dir):
     query's physical plan must stay free of scale anti-patterns —
     zero row-at-a-time Python (BatchEvalPython), zero CartesianProduct,
     Python-worker nodes (MapInArrow included) only at the ARROW_OK sites,
-    and a bounded shuffle-exchange count (a shuffle-count regression
-    fails here, not in a later bench run)."""
+    no ``Coalesce 1`` (sorted_tiny) reaching a scan without an exchange
+    between them, and a bounded shuffle-exchange count (a shuffle-count
+    regression fails here, not in a later bench run)."""
     from myduckdb_spark.queries import queries
-    from tools.plan_sweep import python_nodes, shuffle_exchanges
+    from tools.plan_sweep import coalesced_scans, python_nodes, shuffle_exchanges
 
     ARROW_OK = {
         "fn_json_battery", "tableinout_normalize", "multimodal_features",
@@ -208,6 +224,8 @@ def test_plan_sweep_gate(spark, sf_dir):
             bad.append((name, "CartesianProduct"))
         if name not in ARROW_OK and python_nodes(plan):
             bad.append((name, "unexpected Python boundary"))
+        if coalesced_scans(plan):
+            bad.append((name, "single-task scan under Coalesce 1"))
         n_ex = shuffle_exchanges(plan)
         if n_ex > MAX_EXCHANGES:
             bad.append((name, f"{n_ex} shuffle exchanges"))

@@ -12,6 +12,8 @@ plan for scale anti-patterns:
                                theta joins; fatal when both sides scale)
 * Shuffle-exchange count     — shuffles per query (guide §2.1), counted
                                on the executed plan by ``shuffle_exchanges``
+* ``Coalesce 1`` over a scan    — a single-task scan stage, counted by
+                               ``coalesced_scans``
 * scans without ReadSchema pruning (heuristic: scan emits >24 columns)
 
 Output: one JSON line per query on stdout; human summary on stderr.
@@ -56,6 +58,29 @@ def python_nodes(executed_plan: str) -> int:
     return len(PYTHON_RE.findall(executed_plan))
 
 
+def coalesced_scans(executed_plan: str) -> int:
+    """Scans that a ``Coalesce 1`` reaches with no exchange between them
+    in ``executedPlan().toString()`` text: the whole scan stage would run
+    as one task (``sorted_tiny`` belongs above an aggregate's exchange)."""
+    hits, ancestors = 0, []  # (indent, node) path from the root
+    for line in executed_plan.splitlines():
+        node = line.lstrip(" :+-")
+        indent = len(line) - len(node)
+        while ancestors and ancestors[-1][0] >= indent:
+            ancestors.pop()
+        node = re.sub(r"^\*\(\d+\) ", "", node)  # codegen stage id
+        head = node.split(" ", 1)[0]
+        if "Scan" in head and head != "LocalTableScan":
+            for _, above in reversed(ancestors):
+                if "Exchange" in above.split(" ", 1)[0]:
+                    break
+                if above == "Coalesce 1":
+                    hits += 1
+                    break
+        ancestors.append((indent, node))
+    return hits
+
+
 def main() -> None:
     from myduckdb_spark import queries as q
     from myduckdb_spark.session import get_spark
@@ -82,6 +107,7 @@ def main() -> None:
             "broadcast_exchanges": len(re.findall(r"BroadcastExchange", plan)),
             "batch_eval_python": len(re.findall(r"BatchEvalPython", plan)),
             "python_nodes": python_nodes(executed),
+            "coalesced_scans": coalesced_scans(executed),
             "cartesian": len(re.findall(r"CartesianProduct", plan)),
             "bnlj": len(re.findall(r"BroadcastNestedLoopJoin", plan)),
             "smj": len(re.findall(r"SortMergeJoin", plan)),
