@@ -11,9 +11,13 @@ reference TABLE_SCAN (src/function/table/table_scan.cpp:45-147).
 
 from __future__ import annotations
 
+import json
 import os
+from dataclasses import dataclass, replace
+from stat import S_ISDIR
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = [
     "region",
@@ -28,43 +32,89 @@ TABLES = [
     "embeddings",
 ]
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Inferred parquet schema per (path, mtime): plain spark.read.parquet()
-# re-lists the path and re-reads a footer on EVERY call (~65 ms/table of
-# driver-side metadata work — ~0.4s of every 6-table query build).
-# Passing the cached schema skips inference; the mtime in the key
-# invalidates on rewrite. METADATA only — execution still reads parquet.
-_SCHEMA_CACHE: dict = {}
-
-
-def _table_mtime(path: str) -> float:
-    """Cache-invalidation stamp for a table path. For a DIRECTORY table,
-    rewriting a part file in place does not change the directory mtime —
-    so take the max mtime over the directory and every contained file
-    (ADVICE r9: a stale footer row count would mis-gate the dedup
-    broadcast/all-pairs policies)."""
-    m = os.path.getmtime(path)
-    if os.path.isdir(path):
-        for dp, _dirs, fs in os.walk(path):
-            for f in fs:
-                try:
-                    m = max(m, os.path.getmtime(os.path.join(dp, f)))
-                except OSError:
-                    pass
-    return m
+def _nullable(d: dict) -> dict:
+    """JSON hook for Spark's ``asNullable``: file sources read every field,
+    array element and map value as nullable, whatever the footer says."""
+    for k in ("nullable", "containsNull", "valueContainsNull"):
+        if k in d:
+            d[k] = True
+    return d
 
 
-def _table_schema(spark: SparkSession, path: str):
+def read_footer(path: str) -> tuple[int, StructType] | None:
+    """Row count and Spark schema of one parquet file from its footer, with
+    no Spark job (about 1 ms; a warm inference job takes 0.1-0.2 s). The
+    schema is the one Spark infers: its own row metadata when Spark wrote
+    the file (keeps ``duck_type`` field metadata and TIMESTAMP_LTZ), else
+    the Arrow schema with naive timestamps as TIMESTAMP_NTZ and ns ones as
+    BIGINT (``nanosAsLong``). None where pyarrow cannot open the footer
+    (Spark's VARIANT is newer than this pyarrow)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
     try:
-        key = (path, _table_mtime(path))
+        meta = pq.read_metadata(path)
     except OSError:
-        key = (path, None)
-    sch = _SCHEMA_CACHE.get(key)
-    if sch is None:
-        sch = spark.read.parquet(path).schema
-        _SCHEMA_CACHE[key] = sch
-    return sch
+        return None
+    text = (meta.metadata or {}).get(b"org.apache.spark.sql.parquet.row.metadata")
+    if text is None:
+        arrow = pa.schema(
+            f.with_type(pa.int64()) if pa.types.is_timestamp(f.type) and f.type.unit == "ns" else f
+            for f in meta.schema.to_arrow_schema()
+        )
+        text = from_arrow_schema(arrow, prefer_timestamp_ntz=True).json()
+    return meta.num_rows, StructType.fromJson(json.loads(text, object_hook=_nullable))
+
+
+@dataclass(frozen=True)
+class TableFacts:
+    """One table path as the file system and its footers describe it.
+    ``mtime``: newest of the path and every file under it (an in-place
+    part rewrite leaves the directory's alone). ``bytes``: every file
+    under it. ``schema``: the first data file's (see ``table_facts``).
+    ``rows``: the exact footer count (``df.count()`` of a bare scan), or
+    None when a data file lacks the ``.parquet`` suffix or has an
+    unreadable footer, as an undercount would loosen the size gates."""
+
+    mtime: float
+    schema: StructType | None
+    rows: int | None
+    bytes: int
+
+
+# TableFacts per (path, mtime); rewriting a table changes its key.
+_FACTS: dict = {}
+
+
+def table_facts(path: str, spark: SparkSession | None = None) -> TableFacts:
+    """The record of one table path (a parquet file or a directory of
+    parts): one walk gives mtime and bytes, and the footers are read once
+    per (path, mtime). Where no footer gives the schema (no ``.parquet``
+    data file, or one pyarrow cannot open) it stays None until a caller
+    passes its session; Spark then infers it once, raising as a plain read
+    would. Raises OSError when the path is missing."""
+    top = os.stat(path)
+    files, stats = [path], [top]
+    if S_ISDIR(top.st_mode):
+        files = sorted(os.path.join(dp, f) for dp, _dirs, fs in os.walk(path) for f in fs)
+        stats = [os.stat(f) for f in files]
+    key = (path, max([top.st_mtime, *(st.st_mtime for st in stats)]))
+    facts = _FACTS.get(key)
+    if facts is None:
+        # Spark skips hidden ('_', '.') files and reads every other one
+        data = [f for f in files if not os.path.basename(f).startswith(("_", "."))]
+        footers = [read_footer(f) for f in data if f.endswith(".parquet")]
+        facts = _FACTS[key] = TableFacts(
+            key[1],
+            footers[0][1] if footers and footers[0] else None,
+            sum(f[0] for f in footers) if len(footers) == len(data) and all(footers) else None,
+            sum(st.st_size for st in stats),
+        )
+    if facts.schema is None and spark is not None:
+        facts = _FACTS[key] = replace(facts, schema=spark.read.parquet(path).schema)
+    return facts
 
 
 # Zone set through the front door's ``SET TimeZone``; None pins UTC.
@@ -99,7 +149,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     _pin_session(spark, name == "events")
     p = f"{sf_dir}/{name}.parquet"
-    df = spark.read.schema(_table_schema(spark, p)).parquet(p)
+    df = spark.read.schema(table_facts(p, spark).schema).parquet(p)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         from pyspark.sql import functions as F
 
@@ -122,66 +172,23 @@ BROADCAST_HINT_CAP_BYTES = 256 << 20
 
 
 def source_bytes(sf_dir: str, name: str) -> int:
-    """On-disk bytes of one catalog table (file or directory of parts)."""
-    p = f"{sf_dir}/{name}.parquet"
+    """On-disk bytes of every file under one catalog table's path."""
     try:
-        if os.path.isdir(p):
-            return sum(
-                os.path.getsize(os.path.join(dp, f))
-                for dp, _dirs, fs in os.walk(p)
-                for f in fs
-            )
-        return os.path.getsize(p)
+        return table_facts(f"{sf_dir}/{name}.parquet").bytes
     except OSError:
         return 1 << 60  # unknown size → never hint
 
 
-# Exact row count per (path, mtime), read from parquet footers on the
-# driver (no Spark job). Same invalidation rule as _SCHEMA_CACHE.
-_ROWCOUNT_CACHE: dict = {}
-
-
 def table_row_count(sf_dir: str, name: str) -> int | None:
-    """Exact row count of one catalog table from parquet footer metadata.
-
-    Parquet footers record num_rows exactly, so for a bare table scan this
-    equals ``df.count()`` — without launching a Spark job (the count job on
-    a 1-file table is ~0.2s of scheduling for one number). Used by POLICY
-    decisions (e.g. dedup's all-pairs-vs-LSH gate) that only need the
-    corpus scale before building the plan. Returns None when the path is
-    missing or unreadable — callers must fall back to ``df.count()``.
-    """
-    p = f"{sf_dir}/{name}.parquet"
+    """Exact row count of one catalog table from its record (``df.count()``
+    of a bare scan, with no Spark job) for the POLICY gates that need the
+    scale before the plan exists (dedup's all-pairs-vs-LSH gate, the
+    single-partition sorts). None when the path is missing or the record
+    has no count; callers then run ``df.count()``."""
     try:
-        key = (p, _table_mtime(p))
+        return table_facts(f"{sf_dir}/{name}.parquet").rows
     except OSError:
         return None
-    n = _ROWCOUNT_CACHE.get(key)
-    if n is None:
-        try:
-            import pyarrow.parquet as pq
-
-            if os.path.isdir(p):
-                # Spark's reader ingests every non-hidden file regardless
-                # of extension (only '_'/'.' prefixes are skipped). If a
-                # data file lacks the .parquet suffix we cannot read its
-                # footer here — return None so callers fall back to
-                # df.count() instead of undercounting (ADVICE r9: an
-                # undercount loosens the broadcast/all-pairs safety gates).
-                n = 0
-                for dp, _dirs, fs in os.walk(p):
-                    for f in fs:
-                        if f.startswith(("_", ".")):
-                            continue
-                        if not f.endswith(".parquet"):
-                            return None
-                        n += pq.ParquetFile(os.path.join(dp, f)).metadata.num_rows
-            else:
-                n = pq.ParquetFile(p).metadata.num_rows
-        except Exception:
-            return None
-        _ROWCOUNT_CACHE[key] = n
-    return n
 
 
 def maybe_broadcast(df: DataFrame, sf_dir: str, name: str) -> DataFrame:
@@ -199,7 +206,7 @@ def maybe_broadcast(df: DataFrame, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-# (session, sf_dir, name) → (_table_mtime, the JVM temp-view relation
+# (session, sf_dir, name) → (the table's mtime, the JVM temp-view relation
 # register_views created for that name).
 _REGISTERED: dict = {}
 
@@ -209,10 +216,12 @@ def register_views(spark: SparkSession, sf_dir: str, tables: list[str] | None = 
     same names the DuckDB oracle uses.
 
     Memoised per session and ``sf_dir``: a name is registered again only
-    when its parquet changed (``_table_mtime``), its view is missing, or
-    its view is no longer the relation this function registered. One JVM
-    lookup per name decides that, with no analysis and no file listing, so
-    a warm call costs milliseconds, not a rebuild of every view.
+    when its parquet changed (``table_facts``' mtime), its view is
+    missing, or its view is no longer the relation this function
+    registered. One JVM lookup and one walk of the table path per name
+    decide that, with no analysis, so a warm call costs milliseconds, not
+    a rebuild of every view. A cold call reads each schema from the
+    table's footer record, so neither starts a Spark job.
 
     Shadowing rule: every name in ``tables`` that is not this function's
     view is re-pointed at the catalog parquet, so a user's
@@ -227,7 +236,7 @@ def register_views(spark: SparkSession, sf_dir: str, tables: list[str] | None = 
     jcat = spark._jsparkSession.sessionState().catalog()
     for name in names:
         try:
-            mtime = _table_mtime(f"{sf_dir}/{name}.parquet")
+            mtime = table_facts(f"{sf_dir}/{name}.parquet").mtime
         except OSError:
             mtime = None  # load_table raises the missing path
         key = (spark, sf_dir, name)

@@ -77,8 +77,7 @@ def bench_queries() -> dict[str, tuple[Builder, str | None]]:
     its registered exact pair. Correctness always runs the exact pair."""
     _load_all()
     out = {}
-    for n in _ordered_names():
-        q = REGISTRY[n]
+    for n, q in REGISTRY.items():
         if "float_bench" in q.tags:
             out[n] = (_float_builder(q.builder), float_sql(q.oracle))
         else:
@@ -86,57 +85,14 @@ def bench_queries() -> dict[str, tuple[Builder, str | None]]:
     return out
 
 
-# The correctness driver verifies a 50-query window of the registry in
-# registration order, so queries() yields highest-priority entries first:
-# queries needing a (re-)verification this round — entries whose
-# implementation or oracle changed since their last green row, then the
-# queries whose last green driver row is oldest so every registered
-# query re-verifies on a rotating schedule.
-R10_PRIORITY = (
-    # the 19 query paths TOUCHED by round-10 optimizations (single-
-    # partition final sorts, size-gated derived-set broadcast hints,
-    # tracked-cache persists) — every one must re-prove strict-green
-    "q01_pricing_summary", "q05_local_supplier_volume",
-    "groupjoin_order_items", "amus_theta_join",
-    "agg_distinct_and_filter", "agg_rollup", "agg_cube",
-    "agg_grouping_sets", "join_range_theta", "win_qualify_topk",
-    "dedup_minhash_lsh", "sim_topk_bruteforce", "sim_topk_lsh",
-    "sim_topk_ivf", "sim_lsh_recall", "text_token_stats",
-    "q16_supplier_part_counts", "q17_small_quantity_revenue",
-    "q20_excess_inventory_suppliers",
-    # then the queries whose last green driver row is OLDEST (the r8
-    # window; r9 verified the other half) — 31 of them fit the 50 slots,
-    # ordered with the TPC-H/pipeline paths first; the 12 that overflow
-    # are untouched-code r8-green rows that age one more round
-    "q02_best_supplier_per_nation", "q04_order_priority_check",
-    "q07_volume_shipping", "q08_market_share", "q09_product_type_profit",
-    "q11_important_parts", "q13_customer_order_distribution",
-    "q14_promo_effect", "q15_top_supplier", "q18_large_volume_customers",
-    "q19_discounted_revenue", "q21_waiting_suppliers",
-    "q22_global_sales_opportunity",
-    "join_asof_purchase_click", "dedup_exact", "dedup_ngram_jaccard",
-    "dedup_simhash", "dedup_embedding_cosine", "decontam_ngram_overlap",
-    "pii_scrub_counts", "text_quality_scores", "text_lang_id_confusion",
-    "text_fingerprint", "text_repetition_stats", "multimodal_features",
-    "fn_datetime_battery", "fn_json_battery", "fn_list_battery",
-    "fn_timetz_battery", "fn_union_battery", "dml_roundtrip",
-)
-
-
-def _ordered_names() -> list[str]:
-    names = list(REGISTRY)
-    prio = [n for n in R10_PRIORITY if n in names]
-    return prio + [n for n in names if n not in set(prio)]
-
-
 def queries() -> dict[str, Builder]:
     _load_all()
-    return {n: REGISTRY[n].builder for n in _ordered_names()}
+    return {n: q.builder for n, q in REGISTRY.items()}
 
 
 def oracle_sql() -> dict[str, str]:
     _load_all()
-    return {n: REGISTRY[n].oracle for n in _ordered_names() if REGISTRY[n].oracle is not None}
+    return {n: q.oracle for n, q in REGISTRY.items() if q.oracle is not None}
 
 
 _LOADED = False

@@ -49,6 +49,7 @@ import re
 from functools import partial
 
 from pyspark.errors import AnalysisException
+from pyspark.errors.exceptions.captured import CapturedException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from myduckdb_spark import infoschema as ischema
@@ -5735,9 +5736,14 @@ def _rebind_views(spark: SparkSession) -> None:
             df = sql(spark, sel)
             if cols:
                 df = df.toDF(*cols)
-            df.createOrReplaceTempView(v)
-        except Exception:
-            pass  # a dropped dependency: the view errors on next use
+        except CapturedException:
+            # a dropped table or column, or a column list that no longer
+            # fits the SELECT: unbind the view so that its next use errors,
+            # as DuckDB's late binding does; the next refresh after the
+            # dependency returns binds it again
+            spark.catalog.dropTempView(v)
+            continue
+        df.createOrReplaceTempView(v)
 
 
 def _refresh_view(spark: SparkSession, name: str) -> None:

@@ -33,10 +33,10 @@ file — the copy-on-write pattern used by Delta Lake / Iceberg:
    remain scannable — snapshot reads fall out of copy-on-write for free.
 4. Every read of a table's files pins the schema of its probe file (the
    first file written with the table's current physical schema), taken
-   from ``catalog._table_schema``'s (path, mtime) cache. Files are
-   immutable, so the schema is inferred once per probe instead of by a
-   Spark job on every scan, and the field order cannot drift between
-   reads. Commits keep the probe until a schema change rewrites the data.
+   from the probe's footer record (``catalog.table_facts``). No read
+   starts a Spark inference job, and the field order cannot drift
+   between reads. Commits keep the probe until a schema change rewrites
+   the data. Per-file row counts come from the same footer reader.
 
 Sequences are driver-side counters persisted with the same atomic-swap
 discipline — exactly the single point of serialization the reference
@@ -60,7 +60,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from myduckdb_spark.catalog import _table_schema
+from myduckdb_spark.catalog import read_footer, table_facts
 from myduckdb_spark.operators.joins import _number_rows
 
 _MANIFEST = "manifest.json"
@@ -73,25 +73,15 @@ def _atomic_write_json(path: str, obj) -> None:
     os.replace(tmp, path)
 
 
-def _part_files(snapshot_dir: str) -> list[dict]:
-    """List the parquet part files Spark wrote, with per-file row counts
-    read from parquet footers (metadata-only, O(#files))."""
-    import pyarrow.parquet as pq
-
+def _part_files(spark: SparkSession, snapshot_dir: str) -> list[dict]:
+    """The parquet part files Spark wrote, with per-file row counts from
+    their footers; Spark counts a file whose footer pyarrow cannot open."""
     out = []
     for name in sorted(os.listdir(snapshot_dir)):
-        if not name.endswith(".parquet") or name.startswith("_"):
-            continue
-        p = os.path.join(snapshot_dir, name)
-        try:
-            rows = pq.ParquetFile(p).metadata.num_rows
-        except OSError:
-            # footer logical types newer than this pyarrow (e.g. Spark's
-            # VARIANT) — count through Spark instead (still footer-only)
-            from pyspark.sql import SparkSession
-
-            rows = SparkSession.getActiveSession().read.parquet(p).count()
-        out.append({"path": p, "rows": rows})
+        if name.endswith(".parquet") and not name.startswith("_"):
+            p = os.path.join(snapshot_dir, name)
+            footer = read_footer(p)
+            out.append({"path": p, "rows": footer[0] if footer else spark.read.parquet(p).count()})
     return out
 
 
@@ -134,7 +124,7 @@ class ManagedTable:
         probe = self._manifest().get("schema_probe")
         if not probe:
             raise ValueError("empty table with no schema probe")
-        return self.spark.read.schema(_table_schema(self.spark, probe))
+        return self.spark.read.schema(table_facts(probe, self.spark).schema)
 
     def scan(self, version: int | None = None) -> DataFrame:
         """DataFrame over the live files (or a retained prior version)."""
@@ -180,7 +170,7 @@ class ManagedTable:
     def _write_snapshot(self, df: DataFrame) -> list[dict]:
         out = os.path.join(self.root, "data", uuid.uuid4().hex)
         df.write.mode("overwrite").parquet(out)
-        return _part_files(out)
+        return _part_files(self.spark, out)
 
     def _commit(self, version: int, files: list[dict]) -> None:
         cur = self._manifest() if os.path.exists(self._manifest_path()) else {}

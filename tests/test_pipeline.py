@@ -1,6 +1,8 @@
 """Pipeline operators: dedup recall, similarity ranking, text stats,
 multimodal plumbing."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -219,6 +221,121 @@ def test_table_row_count_directory_rules(spark, tmp_path):
     # (a) an unsuffixed data file makes the footer count unreliable
     (d / "extra-data-file").write_bytes(b"not parquet")
     assert table_row_count(str(tmp_path), "t") is None
+
+
+@pytest.mark.parametrize("scale", ["sf0.001", "sf0.01", "sf0.1"])
+def test_footer_schema_matches_spark_inference(spark, scale):
+    """The table record's footer schema is the schema Spark infers, for
+    every catalog table at each fixture scale."""
+    from myduckdb_spark.catalog import TABLES, table_facts
+
+    d = f"/root/testdata/{scale}"
+    if not os.path.isdir(d):
+        pytest.skip(f"fixture directory {d} is absent")
+    for t in TABLES:
+        p = f"{d}/{t}.parquet"
+        assert table_facts(p).schema == spark.read.parquet(p).schema, t
+
+
+def test_footer_schema_of_spark_written_directory(spark, sf_dir, tmp_path):
+    """A directory of Spark-written parts, like the tables
+    tools/make_sf_scale.py writes: schema and rows equal Spark's."""
+    from myduckdb_spark.catalog import table_facts
+
+    p = str(tmp_path / "events.parquet")
+    spark.read.parquet(f"{sf_dir}/events.parquet").repartition(3).write.parquet(p)
+    facts = table_facts(p)
+    df = spark.read.parquet(p)
+    assert facts.schema == df.schema
+    assert facts.rows == df.count()
+
+
+def test_footer_schema_of_storage_probe(spark, tmp_path):
+    """A managed table's probe keeps field metadata (``duck_type``), the
+    TIMESTAMP_LTZ type and nested types as Spark infers them, with every
+    field nullable."""
+    from pyspark.sql.types import TimestampType
+
+    from myduckdb_spark.catalog import table_facts
+    from myduckdb_spark.storage import ManagedTable
+
+    df = spark.sql(
+        "SELECT id, CAST(id AS TINYINT) AS b, TIMESTAMP_LTZ '2024-01-02 03:04:05' AS ts, "
+        "named_struct('x', id, 'y', array(id)) AS st, map('k', id) AS m FROM range(3)"
+    ).withMetadata("id", {"duck_type": "UBIGINT"})
+    t = ManagedTable.create(spark, str(tmp_path / "t"), df)
+    probe = t._manifest()["schema_probe"]
+    got = table_facts(probe).schema
+    assert got == spark.read.parquet(probe).schema
+    assert got["id"].metadata == {"duck_type": "UBIGINT"}
+    assert isinstance(got["ts"].dataType, TimestampType)
+    assert all(f.nullable for f in got.fields)
+
+
+def test_footer_schema_of_variant_falls_back_to_spark(spark, tmp_path):
+    """pyarrow cannot open a VARIANT footer: the record has no row count,
+    Spark infers its schema only when a session is passed, and a managed
+    table's part still gets Spark's exact count."""
+    import pyarrow.parquet as pq
+
+    from myduckdb_spark.catalog import read_footer, table_facts
+    from myduckdb_spark.storage import ManagedTable
+
+    df = spark.sql("SELECT id, parse_json('{\"a\": 1}') AS v FROM range(4)").coalesce(1)
+    d = str(tmp_path / "v")
+    df.write.parquet(d)
+    p = next(f"{d}/{n}" for n in sorted(os.listdir(d)) if n.endswith(".parquet"))
+    with pytest.raises(OSError):
+        pq.read_metadata(p)
+    assert read_footer(p) is None
+    assert table_facts(p).schema is None and table_facts(p).rows is None
+    assert table_facts(p, spark).schema == spark.read.parquet(p).schema
+    t = ManagedTable.create(spark, str(tmp_path / "t"), df)
+    assert t.count() == 4 and t.scan().count() == 4
+
+
+def test_table_facts_schema_without_parquet_footer(spark, tmp_path):
+    """A directory whose only data file lacks the ``.parquet`` suffix:
+    Spark reads the file, so the schema is Spark's inference, not an empty
+    one. An empty directory fails as a plain Spark read does."""
+    from pyspark.errors import AnalysisException
+
+    from myduckdb_spark.catalog import load_table, table_facts
+
+    d = tmp_path / "t.parquet"
+    spark.range(5).coalesce(1).write.parquet(str(d))
+    part = next(p for p in d.iterdir() if p.name.endswith(".parquet"))
+    part.rename(d / "part-data")
+    assert table_facts(str(d)).schema is None and table_facts(str(d)).rows is None
+    df = load_table(spark, str(tmp_path), "t")
+    assert df.schema == spark.read.parquet(str(d)).schema
+    assert df.count() == 5
+    (tmp_path / "e.parquet").mkdir()
+    with pytest.raises(AnalysisException, match="UNABLE_TO_INFER_SCHEMA"):
+        load_table(spark, str(tmp_path), "e")
+
+
+def test_cold_register_views_starts_no_spark_job(spark, sf_dir, tmp_path):
+    """Registering the catalog on a fresh copy of the fixture reads each
+    table's schema from its footer: no schema-inference job."""
+    import shutil
+    import uuid
+
+    from myduckdb_spark import catalog
+
+    d = str(tmp_path / "sf")
+    shutil.copytree(sf_dir, d)
+    sc = spark.sparkContext
+    gid = f"test-{uuid.uuid4().hex}"
+    sc.setJobGroup(gid, gid)
+    try:
+        catalog.register_views(spark, d)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = list(sc.statusTracker().getJobIdsForGroup(gid))
+        catalog.register_views(spark, sf_dir)
+    assert jobs == []
 
 
 def test_simhash_pairs(docs):

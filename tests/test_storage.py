@@ -624,3 +624,58 @@ def test_front_door_create_view(spark):
     run_sql(spark, "DROP VIEW IF EXISTS nope_view")
     for s in ("DROP VIEW v_named", "DROP VIEW v_big", "DROP TABLE t_v"):
         run_sql(spark, s)
+
+
+def test_view_over_dropped_table_errors_after_refresh(spark):
+    """A view whose base table was dropped: the next DML statement's view
+    refresh succeeds, and the view errors on its next use, as in DuckDB
+    (which binds a view when it is used)."""
+    from pyspark.errors import AnalysisException
+
+    con = duckdb.connect()
+    _dual(spark, con, [
+        "CREATE OR REPLACE TABLE t_gone(i INTEGER)",
+        "CREATE OR REPLACE TABLE t_kept(i INTEGER)",
+        "INSERT INTO t_gone VALUES (1)",
+        "CREATE VIEW v_gone AS SELECT i FROM t_gone",
+        "DROP TABLE t_gone",
+        "INSERT INTO t_kept VALUES (2)",
+    ])
+    _compare(spark, con, "t_kept", "i")
+    with pytest.raises(duckdb.CatalogException):
+        con.sql("SELECT * FROM v_gone")
+    with pytest.raises(AnalysisException):
+        run_sql(spark, "SELECT * FROM v_gone").collect()
+    for s in ("DROP VIEW v_gone", "DROP TABLE t_kept"):
+        run_sql(spark, s)
+
+
+def test_view_column_list_after_alter_errors_on_use(spark):
+    """A view with a column list over ``SELECT *``: ALTER TABLE ADD COLUMN
+    leaves it one alias short. The ALTER and later DML on other tables
+    succeed, and the view errors on use, as in DuckDB; once the column is
+    dropped again the view reads as before."""
+    from pyspark.errors import AnalysisException
+
+    con = duckdb.connect()
+    _dual(spark, con, [
+        "CREATE OR REPLACE TABLE t_al(a INTEGER, b INTEGER)",
+        "CREATE OR REPLACE TABLE t_other(i INTEGER)",
+        "INSERT INTO t_al VALUES (1, 2)",
+        "CREATE VIEW v_al(p, q) AS SELECT * FROM t_al",
+        "ALTER TABLE t_al ADD COLUMN k INTEGER",
+        "INSERT INTO t_other VALUES (1)",
+        "UPDATE t_other SET i = 2",
+    ])
+    _compare(spark, con, "t_other", "i")
+    with pytest.raises(duckdb.BinderException):
+        con.sql("SELECT * FROM v_al")
+    with pytest.raises(AnalysisException):
+        run_sql(spark, "SELECT * FROM v_al").collect()
+    _dual(spark, con, [
+        "ALTER TABLE t_al DROP COLUMN k",
+        "DELETE FROM t_other",
+    ])
+    _compare(spark, con, "v_al", "p")
+    for s in ("DROP VIEW v_al", "DROP TABLE t_al", "DROP TABLE t_other"):
+        run_sql(spark, s)
