@@ -65,7 +65,8 @@ COLUMN_META: dict[str, list[dict]] = {}
 # ctype: PRIMARY KEY | UNIQUE | CHECK | FOREIGN KEY | NOT NULL
 CONSTRAINTS: list[dict] = []
 
-# lowercase object key -> CREATE VIEW sql text
+# lowercase object key -> the view's text as DuckDB renders it, read by
+# duckdb_views(), pg_views and information_schema.views
 VIEW_SQL: dict[str, str] = {}
 
 # COMMENT ON registry (reference src/parser/statement/
@@ -163,6 +164,11 @@ def register_table(key: str, catalog: str, schema: str, name: str,
     TABLE_META[key.lower()] = {
         "catalog": catalog, "schema": schema, "name": name, "type": ttype,
     }
+
+
+def views() -> list[str]:
+    """Keys of the registered views, front-door or mirrored."""
+    return [k for k, m in TABLE_META.items() if m["type"] == "VIEW"]
 
 
 def register_columns(key: str, cols: list[dict]) -> None:

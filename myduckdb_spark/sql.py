@@ -47,9 +47,9 @@ from __future__ import annotations
 import os
 import re
 from functools import partial
+from importlib import import_module
 
 from pyspark.errors import AnalysisException
-from pyspark.errors.exceptions.captured import CapturedException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from myduckdb_spark import infoschema as ischema
@@ -5616,12 +5616,9 @@ def reset_dml_state(spark: SparkSession) -> None:
     — a fresh in-memory database, as the reference's test runner opens
     per .test file (sqllogic_test_runner.hpp LoadDatabase)."""
     global _SEQUENCES, _TXN
-    for name in list(_MANAGED):
-        _MANAGED.pop(name)
+    for name in [*_MANAGED, *ischema.views()]:
         spark.catalog.dropTempView(name)
-    for name in list(_VIEWS):
-        _VIEWS.pop(name)
-        spark.catalog.dropTempView(name)
+    _MANAGED.clear()
     _COLUMN_COLLATIONS.clear()
     _SEQUENCES = None
     _TXN = None
@@ -5723,32 +5720,72 @@ def _count_df(spark: SparkSession, n: int) -> DataFrame:
     return _rows_df(spark, [(n,)], "Count bigint")
 
 
-# name → (duckdb-dialect SELECT text, optional column aliases). Views
-# re-resolve against CURRENT table state (reference: a view stores its
-# parse tree and binds at query time, view_catalog_entry.cpp) — realized
-# by re-registering every view's lazy plan after any DML refresh.
-_VIEWS: dict[str, tuple[str, list[str] | None]] = {}
-
-
-def _rebind_views(spark: SparkSession) -> None:
-    for v, (sel, cols) in _VIEWS.items():
-        try:
-            df = sql(spark, sel)
-            if cols:
-                df = df.toDF(*cols)
-        except CapturedException:
-            # a dropped table or column, or a column list that no longer
-            # fits the SELECT: unbind the view so that its next use errors,
-            # as DuckDB's late binding does; the next refresh after the
-            # dependency returns binds it again
-            spark.catalog.dropTempView(v)
-            continue
-        df.createOrReplaceTempView(v)
-
-
+# A front-door view is a Spark SQL-text temp view of its translated
+# SELECT (CREATE VIEW below), so Spark's analyzer binds the base tables by
+# name each time the view is used, as DuckDB binds a view's stored parse
+# tree at query time (view_catalog_entry.cpp). DML therefore only
+# re-points the managed table's own temp view.
 def _refresh_view(spark: SparkSession, name: str) -> None:
     _MANAGED[name].scan().createOrReplaceTempView(name)
-    _rebind_views(spark)
+
+
+# the helper relations that the catalog binders re-register per statement
+_SHARED_RELATION = re.compile(r"\b__(is|pg|duckdb|desc)_\w+")
+_SHARED_FORMS = {"is": "information_schema", "pg": "pg_catalog",
+                 "duckdb": "duckdb_*()", "desc": "DESCRIBE / SHOW / SUMMARIZE"}
+
+
+def _create_view(spark: SparkSession, replace, temp, name: str,
+                 collist: str | None, sel: str) -> DataFrame:
+    """CREATE [OR REPLACE] [TEMP] VIEW: a Spark temp view of sel's Spark
+    text, which Spark binds by name each time the view is used. As in
+    DuckDB (bind_create_view), a prefix column list keeps sel's own names
+    for the rest, and a view whose ``*`` gains a column raises "Contents
+    of view were altered": Spark maps view columns by name and drops
+    extras, so an empty UNION ALL branch of the CREATE-time arity guards.
+    Refused bodies, whose rows sit in helper relations that later
+    statements replace: information_schema and pg_catalog views,
+    duckdb_*() table functions, DESCRIBE / SHOW / SUMMARIZE subqueries,
+    and (by Spark) WITH RECURSIVE … UNION (distinct)."""
+    if name.lower() in ischema.views() and not replace:
+        raise ValueError(f"CREATE VIEW: view {name} already exists")
+    out, df = _select_to_spark(spark, sel)
+    shared = next(_code_matches(_SHARED_RELATION, out), None)
+    if shared:
+        raise ValueError(
+            f"Not implemented Error: CREATE VIEW over {_SHARED_FORMS[shared[1]]}:"
+            " its rows live in a helper relation that later statements replace"
+        )
+    cols = [c.strip().strip('"') for c in collist.split(",")] if collist else []
+    if len(cols) > len(df.columns):
+        raise ValueError(
+            "Binder Error: More VIEW aliases than columns in query result")
+    df = df.toDF(*cols, *df.columns[len(cols):])
+    # Spark needs distinct view names where DuckDB repeats them (SELECT *
+    # FROM t a, t b): a repeated name gets its position as a suffix
+    low = [c.lower() for c in df.columns]
+    names = ", ".join(
+        "`" + (f"{c}_{i}" if low[i] in low[:i] else c).replace("`", "``") + "`"
+        for i, c in enumerate(df.columns))
+    spark.sql(
+        f"CREATE OR REPLACE TEMP VIEW `{name}` ({names}) AS "
+        f"SELECT * FROM (\n{out}\n) "
+        f"UNION ALL SELECT {', '.join(['NULL'] * len(df.columns))} WHERE false"
+    )
+    cat, sch, bare = _cat_schema_of(name)
+    ischema.register_table(name, "temp" if temp else cat, sch, bare, "VIEW")
+    # snapshot the view's column layout: the reference freezes it at
+    # CREATE (a later base-table rename is NOT reflected in
+    # duckdb_columns — table_function/duckdb_columns.test)
+    ischema.register_columns(name, _scan_columns(df.schema.fields))
+    # DuckDB's text (CreateViewInfo::ToString)
+    head = f"TEMPORARY VIEW {bare}" if temp else (
+        f"VIEW {bare}" if sch == "main" else f"VIEW {sch}.{bare}")
+    if cols:
+        head += " (" + ", ".join(
+            c if re.fullmatch(r"[A-Za-z_]\w*", c) else f'"{c}"' for c in cols) + ")"
+    ischema.VIEW_SQL[name.lower()] = f"CREATE {head} AS {sel.strip()};"
+    return _count_df(spark, 0)
 
 
 _CTAS = re.compile(r"^\s*CREATE\s+(OR\s+REPLACE\s+)?TABLE\s+(\w+)\s+AS\s+(.+?);?\s*$", re.I | re.S)
@@ -5991,7 +6028,7 @@ def _inject_column_collations(text: str) -> str:
 
 
 _CREATE_VIEW = re.compile(
-    r"^\s*CREATE\s+(OR\s+REPLACE\s+)?(?:TEMP(?:ORARY)?\s+)?VIEW\s+"
+    r"^\s*CREATE\s+(OR\s+REPLACE\s+)?(TEMP(?:ORARY)?\s+)?VIEW\s+"
     r"(?:IF\s+NOT\s+EXISTS\s+)?\"?(\w+)\"?\s*(?:\(([^()]*)\))?\s+AS\s+(.+?);?\s*$",
     re.I | re.S,
 )
@@ -7067,7 +7104,7 @@ def _comment_on(spark: SparkSession, m: "re.Match[str]") -> DataFrame:
         )
     key = name.lower()
     low_managed = {k.lower() for k in _MANAGED}
-    low_views = {k.lower() for k in _VIEWS}
+    low_views = set(ischema.views())
 
     def _resolve(k: str, pool: set[str]) -> str | None:
         """Bare object name → flattened key via the session search path
@@ -7111,11 +7148,8 @@ def _comment_on(spark: SparkSession, m: "re.Match[str]") -> DataFrame:
             cols = {c.lower() for c in
                     next(v for k, v in _MANAGED.items()
                          if k.lower() == tbl).scan().columns}
-        elif tbl in low_views:
-            try:
-                cols = {c.lower() for c in spark.table(tbl).columns}
-            except Exception:
-                cols = set()
+        elif tbl in low_views:  # the names bound at CREATE VIEW
+            cols = {c["name"].lower() for c in ischema.column_records(tbl)}
         else:
             raise ValueError(
                 f"Catalog Error: Table with name {tbl} does not exist!"
@@ -7205,7 +7239,6 @@ def _dml_statement(spark: SparkSession, text: str) -> DataFrame | None:
             )
         for k in ischema.drop_schema(name):
             _MANAGED.pop(k, None)
-            _VIEWS.pop(k, None)
             spark.catalog.dropTempView(k)
         return _count_df(spark, 0)
     m = _COMMENT_ON.match(text)
@@ -7744,42 +7777,11 @@ def _dml_statement(spark: SparkSession, text: str) -> DataFrame | None:
         return _count_df(spark, 0)
     m = _CREATE_VIEW.match(text)
     if m:
-        replace, name, collist, sel = m.groups()
-        if name in _VIEWS and not replace:
-            raise ValueError(f"CREATE VIEW: view {name} already exists")
-        cols = (
-            [c.strip().strip('"') for c in collist.split(",")] if collist else None
-        )
-        df = sql(spark, sel)
-        if cols:
-            # the alias list may name a PREFIX of the columns; the rest
-            # keep their own names (reference bind_create_view —
-            # CREATE VIEW v1 (a, b) AS SELECT i, j, k → a, b, k)
-            if len(cols) < len(df.columns):
-                cols = cols + df.columns[len(cols):]
-            df = df.toDF(*cols)
-        df.createOrReplaceTempView(name)
-        _VIEWS[name] = (sel, cols)
-        cat, sch, bare = _cat_schema_of(name)
-        _is_temp_view = bool(re.match(
-            r"^\s*CREATE\s+(?:OR\s+REPLACE\s+)?TEMP(?:ORARY)?\s+VIEW",
-            text, re.I,
-        ))
-        ischema.register_table(
-            name, "temp" if _is_temp_view else cat, sch, bare,
-            "VIEW",
-        )
-        # snapshot the view's column layout: the reference freezes it at
-        # CREATE (a later base-table rename is NOT reflected in
-        # duckdb_columns — table_function/duckdb_columns.test)
-        ischema.register_columns(name, _scan_columns(df.schema.fields))
-        ischema.VIEW_SQL[name.lower()] = text.strip().rstrip(";")
-        return _count_df(spark, 0)
+        return _create_view(spark, *m.groups())
     m = _DROP_VIEW.match(text)
     if m:
         name = m.group(2)
-        if name in _VIEWS:
-            _VIEWS.pop(name)
+        if name.lower() in ischema.views():
             ischema.drop_object(name)
             spark.catalog.dropTempView(name)
         elif not m.group(1):
@@ -8016,13 +8018,11 @@ def _catalog_objects() -> list[tuple[str, dict]]:
     The one list behind SHOW [ALL] TABLES, information_schema.tables/
     columns and duckdb_tables()/columns(); Spark-side temp views that back
     them are implementation detail, not catalog entries."""
-    engine = {n.lower(): n for n in (*_MANAGED, *_VIEWS)}
+    engine = {n.lower(): n for n in _MANAGED}
     objs = {k: (engine.get(k, k), m) for k, m in ischema.TABLE_META.items()}
     for k, n in engine.items():
-        objs.setdefault(k, (n, {
-            "catalog": "memory", "schema": "main", "name": n,
-            "type": "BASE TABLE" if n in _MANAGED else "VIEW",
-        }))
+        objs.setdefault(k, (n, {"catalog": "memory", "schema": "main",
+                                "name": n, "type": "BASE TABLE"}))
     return sorted(objs.values(),
                   key=lambda o: (o[1]["catalog"], o[1]["schema"], o[1]["name"]))
 
@@ -8035,7 +8035,7 @@ def _columns(spark: SparkSession, name: str) -> list[dict]:
     tbl = _MANAGED.get(name) or _MANAGED.get(name.lower())
     if tbl is not None:
         return ischema.column_records(name, tbl.scan().schema.fields, tbl)
-    if name in _VIEWS or name.lower() in ischema.TABLE_META:
+    if name.lower() in ischema.TABLE_META:
         return ischema.column_records(name)
     return ischema.column_records(name, spark.table(name).schema.fields)
 
@@ -8306,7 +8306,6 @@ def _bind_duckdb_tvfs(spark: SparkSession, text: str) -> str:
     C = ischema.COMMENTS
     _DB_OID = 1000
     objs = _catalog_objects()
-    meta = dict(objs)
     name_of = {n.lower(): n for n, _m in objs}
     t_oid = {n.lower(): 2000 + i for i, (n, _m) in
              enumerate(o for o in objs if o[1]["type"] != "VIEW")}
@@ -8379,15 +8378,11 @@ def _bind_duckdb_tvfs(spark: SparkSession, text: str) -> str:
             "numeric_precision_radix int, numeric_scale int",
         )
     if "duckdb_views" in used:
-        rows = []
-        for n, (sel, _cols) in sorted(_VIEWS.items()):
-            m = meta[n]
-            rows.append(
-                (m["catalog"], _DB_OID, m["schema"], 1001, m["name"],
+        rows = [(m["catalog"], _DB_OID, m["schema"], 1001, m["name"],
                  v_oid[n.lower()], C.get(("view", n.lower())), {}, False,
-                 m["catalog"] == "temp", None,
-                 f"CREATE VIEW {m['name']} AS {sel};")
-            )
+                 m["catalog"] == "temp", len(_columns(spark, n)),
+                 ischema.VIEW_SQL.get(n.lower()))
+                for n, m in objs if m["type"] == "VIEW"]
         _reg_view(
             "duckdb_views", rows,
             "database_name string, database_oid bigint, schema_name "
@@ -9312,7 +9307,7 @@ def sql(
     if sf_dir:
         # front-door tables and views shadow catalog names of the same
         # spelling (the rule is documented in catalog.register_views)
-        held = {n.lower() for n in (*_MANAGED, *_VIEWS)}
+        held = {n.lower() for n in _MANAGED}.union(ischema.views())
         register_views(spark, sf_dir, [t for t in TABLES if t not in held])
     parts = _split_statements(text)
     if len(parts) > 1:
@@ -9338,6 +9333,29 @@ def sql(
     cmd = _statement_command(spark, text)
     if cmd is not None:
         return cmd
+    return _select_to_spark(spark, text, args)[1]
+
+
+# (trigger in the Spark text, functions module, registrar) of the Python
+# UDFs the front door registers when a statement first names them
+_ON_DEMAND_UDFS = (
+    (r"\bjson_(?:structure|type)\s*\(", "jsonx", "register_json_udfs"),
+    (r"(?i)\b(?:jaro_winkler_similarity|jaro_similarity|damerau_levenshtein)"
+     r"\s*\(", "udf", "register_string_metrics"),
+    (r"(?i)\bnextafter\s*\(", "udf", "register_numeric_udfs"),
+    (r"__duck_split_regex", "udf", "register_split_regex"),
+    (r"__blob_str", "udf", "register_blob_render"),
+    (r"__blob_parse", "udf", "register_blob_parse"),
+    (r"__duck_typename", "typenames", "register_typename_udf"),
+)
+
+
+def _select_to_spark(spark: SparkSession, text: str,
+                     args: dict | list | None = None) -> tuple[str, DataFrame]:
+    """The front door's query step: bind the catalog surfaces and file
+    scans, translate, register the UDFs the Spark text names, and analyse
+    it. Returns the Spark SQL text that analysed with its DataFrame;
+    ``sql()`` runs the DataFrame and CREATE VIEW stores the text."""
     if not re.match(r"\s*(CREATE|DROP|ALTER)\b", text, re.I):
         text = _bind_information_schema(spark, text)
         text = _bind_pg_catalog(spark, text)
@@ -9346,51 +9364,22 @@ def sql(
             text = _bind_describe_subqueries(spark, text)
             cmd = _statement_command(spark, text)
             if cmd is not None:  # e.g. a bare parenthesized DESCRIBE
-                return cmd
+                return text, cmd
     text = _bind_file_scans(spark, text)
     if re.search(r"\bNATURAL\s+(?:LEFT\s+|RIGHT\s+|FULL\s+|INNER\s+|"
                  r"OUTER\s+)*JOIN\b", text, re.I):
         text = _bind_natural_joins(spark, text)
     out = translate(_inject_column_collations(text))
-    if re.search(r"\bjson_(structure|type)\s*\(", out):
-        from myduckdb_spark.functions.jsonx import register_json_udfs
-
-        register_json_udfs(spark)
     if "__jt_" in out or "__jx_" in out or "__json_" in out:
         from myduckdb_spark.functions.jsonx import register_marked_udfs
 
         register_marked_udfs(spark, out)
-    if re.search(
-        r"\b(jaro_winkler_similarity|jaro_similarity|damerau_levenshtein)\s*\(",
-        out,
-        re.I,
-    ):
-        from myduckdb_spark.functions.udf import register_string_metrics
-
-        register_string_metrics(spark)
-    if re.search(r"\bnextafter\s*\(", out, re.I):
-        from myduckdb_spark.functions.udf import register_numeric_udfs
-
-        register_numeric_udfs(spark)
-    if "__duck_split_regex" in out:
-        from myduckdb_spark.functions.udf import register_split_regex
-
-        register_split_regex(spark)
-    if "__blob_str" in out:
-        from myduckdb_spark.functions.udf import register_blob_render
-
-        register_blob_render(spark)
-    if "__blob_parse" in out:
-        from myduckdb_spark.functions.udf import register_blob_parse
-
-        register_blob_parse(spark)
-    if "__duck_typename" in out:
-        from myduckdb_spark.functions.typenames import register_typename_udf
-
-        register_typename_udf(spark)
+    for trigger, module, name in _ON_DEMAND_UDFS:
+        if re.search(trigger, out):
+            getattr(import_module(f"myduckdb_spark.functions.{module}"), name)(spark)
     if args is None:
         try:
-            return spark.sql(out)
+            return out, spark.sql(out)
         except Exception as e:
             # the reference binds SELECT-list aliases in WHERE/HAVING
             # (binder/select_binder.cpp lateral alias binding); Spark
@@ -9400,14 +9389,14 @@ def sql(
             retry = _inline_select_aliases(out)
             if retry != out:
                 try:
-                    return spark.sql(retry)
+                    return retry, spark.sql(retry)
                 except AnalysisException:
                     pass
             lateral = _insert_join_lateral(out)
             if lateral == out:
                 raise
             try:
-                return spark.sql(lateral)
+                return lateral, spark.sql(lateral)
             except Exception:
                 raise e
     bound = _sub_code(
@@ -9419,4 +9408,4 @@ def sql(
         out = bound
         if isinstance(args, (list, tuple)):
             args = {f"p{i}": v for i, v in enumerate(args, 1)}
-    return spark.sql(out, args=args)
+    return out, spark.sql(out, args=args)

@@ -10,10 +10,13 @@ SF_DIR = "/root/testdata/sf0.001"
 
 
 @pytest.fixture(scope="session")
-def spark():
+def spark(tmp_path_factory):
     from myduckdb_spark.session import get_spark
 
-    s = get_spark("tests", cpus=8)
+    # saveAsTable writes under the warehouse dir, which defaults to the cwd
+    warehouse = tmp_path_factory.mktemp("spark-warehouse")
+    s = get_spark("tests", cpus=8,
+                  extra_conf={"spark.sql.warehouse.dir": str(warehouse)})
     yield s
 
 

@@ -296,6 +296,33 @@ def test_object_listings_share_duckdb_order(spark):
             S.sql(spark, s)
 
 
+def test_view_text_matches_duckdb(spark):
+    """duckdb_views() and pg_views render a view as DuckDB does: column
+    list and TEMPORARY kept, a closing semicolon (bodies that DuckDB's
+    deparser leaves unchanged)."""
+    stmts = ["CREATE TABLE vt (i INTEGER, j INTEGER)",
+             "CREATE VIEW vv (p, q) AS SELECT i, j FROM vt",
+             "CREATE TEMPORARY VIEW vtmp AS SELECT i FROM vt"]
+    queries = [
+        "SELECT database_name, schema_name, view_name, temporary,"
+        " column_count, sql FROM duckdb_views() WHERE NOT internal"
+        " ORDER BY view_name",
+        "SELECT * FROM pg_views WHERE viewname IN ('vv', 'vtmp')"
+        " ORDER BY viewname",
+    ]
+    con = duckdb.connect()
+    try:
+        for s in stmts:
+            con.execute(s)
+            S.sql(spark, s).collect()
+        for q in queries:
+            assert _rows(S.sql(spark, q).collect()) == con.execute(q).fetchall(), q
+    finally:
+        for s in ("DROP VIEW IF EXISTS vv", "DROP VIEW IF EXISTS vtmp",
+                  "DROP TABLE IF EXISTS vt"):
+            S.sql(spark, s)
+
+
 def test_mirrored_state_renders_like_duckdb(spark):
     """Objects the engine does not store (DuckDB state the sqllogictest
     harness mirrors) render from their registry rows on every surface."""

@@ -7,6 +7,8 @@ dimensions broadcast, hot paths stay inside whole-stage codegen, and
 pre-aggregation runs map-side before the shuffle.
 """
 
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -153,6 +155,14 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
         spark.sql("DROP TABLE IF EXISTS bk_a")
         spark.sql("DROP TABLE IF EXISTS bk_b")
+
+
+def test_session_warehouse_is_outside_the_checkout(spark):
+    """The bucketed tables above are saved under the session's warehouse
+    dir, which the test session keeps out of the checkout."""
+    repo = Path(__file__).resolve().parents[1]
+    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    assert not Path(warehouse).resolve().is_relative_to(repo), warehouse
 
 
 def test_limit_percent_no_full_cache(spark, sf_dir):

@@ -594,16 +594,26 @@ def test_front_door_copy_column_list(spark, tmp_path):
 
 
 def test_front_door_create_view(spark):
-    """CREATE VIEW stores the definition and re-resolves against CURRENT
-    table state after DML (reference view_catalog_entry.cpp binds the
-    stored parse tree at query time)."""
+    """CREATE VIEW stores the SELECT's Spark text as a Spark temp view, so
+    each use binds the base tables by name and sees the CURRENT table
+    state after DML (reference view_catalog_entry.cpp binds the stored
+    parse tree at query time). A prefix column list names the first
+    columns; the rest keep their own names. Repeated column names read
+    as in DuckDB."""
     con = duckdb.connect()
     _dual(spark, con, [
         "CREATE OR REPLACE TABLE t_v(i INTEGER, v VARCHAR)",
         "INSERT INTO t_v VALUES (1,'a'), (2,'b'), (3,'c')",
         "CREATE VIEW v_big AS SELECT i, upper(v) AS uv FROM t_v WHERE i > 1",
+        "CREATE VIEW v_pre(a, b) AS SELECT i, v, i * 10 AS k FROM t_v",
+        "CREATE VIEW v_dup AS SELECT * FROM t_v a, t_v b WHERE a.i = b.i",
     ])
     _compare(spark, con, "v_big", "i")
+    _compare(spark, con, "v_pre", "a")
+    _compare(spark, con, "v_dup", "i")
+    assert spark.table("v_pre").columns == ["a", "b", "k"]
+    assert [tuple(r) for r in run_sql(spark, "DESCRIBE v_dup").collect()] == \
+        con.sql("DESCRIBE v_dup").fetchall()
     # view reflects subsequent DML on the base table
     _dual(spark, con, [
         "INSERT INTO t_v VALUES (4,'d')",
@@ -611,6 +621,8 @@ def test_front_door_create_view(spark):
         "DELETE FROM t_v WHERE i = 3",
     ])
     _compare(spark, con, "v_big", "i")
+    _compare(spark, con, "v_pre", "a")
+    _compare(spark, con, "v_dup", "i")
     # column-alias list form + view-on-view
     _dual(spark, con, [
         "CREATE VIEW v_named (k, s) AS SELECT i, uv FROM v_big",
@@ -622,8 +634,59 @@ def test_front_door_create_view(spark):
     with pytest.raises(Exception):
         run_sql(spark, "DROP VIEW nope_view")
     run_sql(spark, "DROP VIEW IF EXISTS nope_view")
-    for s in ("DROP VIEW v_named", "DROP VIEW v_big", "DROP TABLE t_v"):
+    for s in ("DROP VIEW v_named", "DROP VIEW v_big", "DROP VIEW v_pre",
+              "DROP VIEW v_dup", "DROP TABLE t_v"):
         run_sql(spark, s)
+
+
+def test_view_calling_on_demand_udf_reads_after_dml(spark):
+    """The front door registers jaro_winkler_similarity as a Python UDF
+    when a statement first names it; a view over it resolves the UDF by
+    name on each use, after DML as before."""
+    con = duckdb.connect()
+    _dual(spark, con, [
+        "CREATE OR REPLACE TABLE t_jw(i INTEGER, s VARCHAR)",
+        "INSERT INTO t_jw VALUES (1, 'martha'), (2, 'dixon')",
+        "CREATE VIEW v_jw AS SELECT i,"
+        " round(jaro_winkler_similarity(s, 'marhta'), 6) AS sim FROM t_jw",
+    ])
+    _compare(spark, con, "v_jw", "i")
+    _dual(spark, con, ["INSERT INTO t_jw VALUES (3, 'jellyfish')"])
+    _compare(spark, con, "v_jw", "i")
+    for s in ("DROP VIEW v_jw", "DROP TABLE t_jw"):
+        run_sql(spark, s)
+
+
+def test_dml_translates_no_view(spark, monkeypatch):
+    """Views bind when they are used, so a DML statement translates its
+    own text once, however many views read the table."""
+    from myduckdb_spark import sql as S
+
+    run_sql(spark, "CREATE OR REPLACE TABLE t_cnt(i INTEGER)")
+    for n in range(3):
+        run_sql(spark, f"CREATE VIEW v_cnt{n} AS SELECT i + {n} AS j FROM t_cnt")
+    calls = []
+    translate = S.translate
+    monkeypatch.setattr(S, "translate",
+                        lambda *a, **k: calls.append(a) or translate(*a, **k))
+    run_sql(spark, "INSERT INTO t_cnt VALUES (1)")
+    monkeypatch.undo()
+    assert len(calls) == 1, calls
+    assert [tuple(r) for r in spark.table("v_cnt2").collect()] == [(3,)]
+    for s in ("DROP VIEW v_cnt0", "DROP VIEW v_cnt1", "DROP VIEW v_cnt2",
+              "DROP TABLE t_cnt"):
+        run_sql(spark, s)
+
+
+def test_view_over_helper_relation_is_refused(spark):
+    """information_schema rows live in a helper relation that the next
+    statement naming it replaces; a late-bound view over it would read
+    that statement's rows, so CREATE VIEW refuses and names the form."""
+    with pytest.raises(ValueError, match="over information_schema"):
+        run_sql(spark, "CREATE VIEW v_is AS SELECT table_name"
+                       " FROM information_schema.tables")
+    with pytest.raises(KeyError):
+        run_sql(spark, "DROP VIEW v_is")
 
 
 def test_view_over_dropped_table_errors_after_refresh(spark):
@@ -678,4 +741,30 @@ def test_view_column_list_after_alter_errors_on_use(spark):
     ])
     _compare(spark, con, "v_al", "p")
     for s in ("DROP VIEW v_al", "DROP TABLE t_al", "DROP TABLE t_other"):
+        run_sql(spark, s)
+
+
+def test_view_column_list_after_drop_and_add_errors_on_use(spark):
+    """``SELECT *`` under a column list, then DROP COLUMN k and ADD COLUMN
+    z: the column count is unchanged but the names are not, and the view
+    errors on use, as DuckDB's "Contents of view were altered" does,
+    instead of reading z as r."""
+    from pyspark.errors import AnalysisException
+
+    con = duckdb.connect()
+    _dual(spark, con, [
+        "CREATE OR REPLACE TABLE t_dz(i INTEGER, j INTEGER, k INTEGER)",
+        "INSERT INTO t_dz VALUES (1, 2, 3)",
+        "CREATE VIEW w_dz(p, q, r) AS SELECT * FROM t_dz",
+    ])
+    _compare(spark, con, "w_dz", "p")
+    _dual(spark, con, [
+        "ALTER TABLE t_dz DROP COLUMN k",
+        "ALTER TABLE t_dz ADD COLUMN z INTEGER",
+    ])
+    with pytest.raises(duckdb.BinderException):
+        con.sql("SELECT * FROM w_dz")
+    with pytest.raises(AnalysisException):
+        run_sql(spark, "SELECT * FROM w_dz").collect()
+    for s in ("DROP VIEW w_dz", "DROP TABLE t_dz"):
         run_sql(spark, s)
