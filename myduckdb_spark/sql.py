@@ -46,15 +46,17 @@ from __future__ import annotations
 
 import os
 import re
+import tempfile
 from functools import partial
 from importlib import import_module
+from typing import Callable, NamedTuple
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from myduckdb_spark import infoschema as ischema
+from myduckdb_spark import infoschema as ischema, storage
 from myduckdb_spark.catalog import TABLES, register_views
-from myduckdb_spark.functions import typenames
+from myduckdb_spark.functions import macros as _macros, typenames
 
 # ------------------------------------------------------------------ lexer
 #
@@ -5098,10 +5100,8 @@ def _qualify_attached_tables(text: str) -> str:
     view ATTACH registered (storage.attach; Spark temp views are
     single-part names). Reads the session's attachments each time it
     runs."""
-    from myduckdb_spark.storage import attached_aliases
-
     views: dict[str, str] = {}
-    for alias, tables in attached_aliases().items():
+    for alias, tables in storage.attached_aliases().items():
         for tbl, view in tables.items():
             views.setdefault(f"{alias}.{tbl}".lower(), view)
     if not views:
@@ -5605,9 +5605,7 @@ _SEQUENCES = None  # lazy SequenceStore
 def _seq_store():
     global _SEQUENCES
     if _SEQUENCES is None:
-        from myduckdb_spark.storage import SequenceStore
-
-        _SEQUENCES = SequenceStore()
+        _SEQUENCES = storage.SequenceStore()
     return _SEQUENCES
 
 
@@ -5626,13 +5624,9 @@ def reset_dml_state(spark: SparkSession) -> None:
     ischema.reset()
     SETTINGS.pop("search_path", None)
     SETTINGS.pop("current_database", None)
-    from myduckdb_spark.storage import _ATTACH_PATHS, _ATTACH_READONLY, _ATTACHED
-
-    _ATTACHED.clear()
-    _ATTACH_PATHS.clear()
-    _ATTACH_READONLY.clear()
-    from myduckdb_spark.functions import macros as _macros
-
+    storage._ATTACHED.clear()
+    storage._ATTACH_PATHS.clear()
+    storage._ATTACH_READONLY.clear()
     for n in _macros.macro_names():
         _macros.drop_macro(n)
     from myduckdb_spark import catalog
@@ -5656,7 +5650,7 @@ def reset_dml_state(spark: SparkSession) -> None:
 _TXN: dict | None = None
 
 
-def _txn_begin() -> None:
+def _txn_begin(spark: SparkSession, m: "re.Match[str]") -> DataFrame:
     global _TXN
     if _TXN is not None:
         raise ValueError("TransactionContext Error: cannot start a transaction within a transaction")
@@ -5667,16 +5661,18 @@ def _txn_begin() -> None:
         "seqs": copy.deepcopy(_seq_store()._seqs) if _SEQUENCES is not None else None,
         "prepared": dict(_PREPARED),
     }
+    return _count_df(spark, 0)
 
 
-def _txn_end(commit: bool) -> None:
+def _txn_commit(spark: SparkSession, m: "re.Match[str]") -> DataFrame:
     global _TXN
     if _TXN is None:
         raise ValueError("TransactionContext Error: cannot commit - no transaction is active")
     _TXN = None
+    return _count_df(spark, 0)
 
 
-def _txn_rollback(spark: SparkSession) -> None:
+def _txn_rollback(spark: SparkSession, m: "re.Match[str]") -> DataFrame:
     global _TXN
     if _TXN is None:
         raise ValueError("TransactionContext Error: cannot rollback - no transaction is active")
@@ -5693,6 +5689,7 @@ def _txn_rollback(spark: SparkSession) -> None:
         _seq_store()._seqs = txn["seqs"]
     _PREPARED.clear()
     _PREPARED.update(txn["prepared"])
+    return _count_df(spark, 0)
 
 
 def _rows_df(spark: SparkSession, rows: list[tuple], schema) -> DataFrame:
@@ -5735,8 +5732,8 @@ _SHARED_FORMS = {"is": "information_schema", "pg": "pg_catalog",
                  "duckdb": "duckdb_*()", "desc": "DESCRIBE / SHOW / SUMMARIZE"}
 
 
-def _create_view(spark: SparkSession, replace, temp, name: str,
-                 collist: str | None, sel: str) -> DataFrame:
+def _create_view(spark: SparkSession, name: str, rest: "re.Match[str]",
+                 flags: _DDLFlags) -> DataFrame:
     """CREATE [OR REPLACE] [TEMP] VIEW: a Spark temp view of sel's Spark
     text, which Spark binds by name each time the view is used. As in
     DuckDB (bind_create_view), a prefix column list keeps sel's own names
@@ -5747,8 +5744,7 @@ def _create_view(spark: SparkSession, replace, temp, name: str,
     statements replace: information_schema and pg_catalog views,
     duckdb_*() table functions, DESCRIBE / SHOW / SUMMARIZE subqueries,
     and (by Spark) WITH RECURSIVE … UNION (distinct)."""
-    if name.lower() in ischema.views() and not replace:
-        raise ValueError(f"CREATE VIEW: view {name} already exists")
+    temp, collist, sel = flags.temp, rest["cols"], rest["body"]
     out, df = _select_to_spark(spark, sel)
     shared = next(_code_matches(_SHARED_RELATION, out), None)
     if shared:
@@ -5788,11 +5784,6 @@ def _create_view(spark: SparkSession, replace, temp, name: str,
     return _count_df(spark, 0)
 
 
-_CTAS = re.compile(r"^\s*CREATE\s+(OR\s+REPLACE\s+)?TABLE\s+(\w+)\s+AS\s+(.+?);?\s*$", re.I | re.S)
-_CREATE_TBL = re.compile(
-    r"^\s*CREATE\s+(OR\s+REPLACE\s+)?TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?(\w+)\s*\((.+)\)\s*;?\s*$",
-    re.I | re.S,
-)
 _INSERT = re.compile(
     r"^\s*INSERT\s+(?:OR\s+(REPLACE|IGNORE)\s+)?INTO\s+(\w+)"
     r"(?:\s+AS\s+(\w+))?\s*(?:\(([^()]*)\))?\s*(.+?);?\s*$",
@@ -5803,12 +5794,6 @@ _ON_CONFLICT_CLAUSE = re.compile(
     r"DO\s+(NOTHING|UPDATE)\s*(?:SET\s+(.+?))?(?:\s+WHERE\s+(.+?))?\s*$",
     re.I | re.S,
 )
-_CREATE_INDEX = re.compile(
-    r"^\s*CREATE\s+(UNIQUE\s+)?INDEX\s+(?:IF\s+NOT\s+EXISTS\s+)?"
-    r'("?[\w]+"?)\s+ON\s+(\w+)\s*(?:USING\s+\w+\s*)?\((.+)\)\s*;?\s*$',
-    re.I | re.S,
-)
-_DROP_INDEX = re.compile(r"^\s*DROP\s+INDEX\s+(?:IF\s+EXISTS\s+)?\"?(\w+)\"?\s*;?\s*$", re.I)
 
 def _parse_column_defs(
     body: str,
@@ -5952,12 +5937,6 @@ def _qualify_excluded(
 # runner. Only settings that change QUERY SEMANTICS live here.
 SETTINGS: dict[str, str] = {"default_null_order": "nulls_last"}
 
-_SET_SETTING = re.compile(
-    r"^\s*SET\s+(?:GLOBAL\s+|SESSION\s+)?(default_null_order|default_order)"
-    r"\s*=\s*'?([\w]+)'?\s*;?\s*$",
-    re.I,
-)
-
 
 # table(lower) → {column(lower) → collation}: column-level collations from
 # CREATE TABLE ... COLLATE (and the test snapshotter, tools/slt.py).
@@ -5973,7 +5952,7 @@ def _inject_column_collations(text: str) -> str:
     COLLATE folding then turns them into JVM key expressions. Injection is
     name-based (no full binder): it applies only when a registered table
     name appears in the statement."""
-    if not _COLUMN_COLLATIONS or re.match(r"\s*(CREATE|ALTER)\b", text, re.I):
+    if not _COLUMN_COLLATIONS:
         return text
     cols: dict[str, str] = {}
     lowered = text.lower()
@@ -6027,31 +6006,21 @@ def _inject_column_collations(text: str) -> str:
     return text
 
 
-_CREATE_VIEW = re.compile(
-    r"^\s*CREATE\s+(OR\s+REPLACE\s+)?(TEMP(?:ORARY)?\s+)?VIEW\s+"
-    r"(?:IF\s+NOT\s+EXISTS\s+)?\"?(\w+)\"?\s*(?:\(([^()]*)\))?\s+AS\s+(.+?);?\s*$",
-    re.I | re.S,
-)
-_DROP_VIEW = re.compile(
-    r"^\s*DROP\s+VIEW\s+(IF\s+EXISTS\s+)?\"?(\w+)\"?\s*;?\s*$", re.I
-)
-
 _ALTER = re.compile(
     r"^\s*ALTER\s+TABLE\s+(IF\s+EXISTS\s+)?\"?(\w+)\"?\s+(.+?);?\s*$", re.I | re.S
 )
 
 
-def _alter_table(spark: SparkSession, exists_ok: str | None, name: str, act: str):
+def _alter_table(spark: SparkSession, m: "re.Match[str]") -> DataFrame:
     """ALTER TABLE dispatch (reference parser: src/parser/statement/
     alter_statement.cpp; executor: duckdb_table_entry.cpp). Schema changes
     land as metadata-only projection stages on the managed table; the
     catalog registry only carries the declared types, constraints and
     comments along (column facts are read live, infoschema.column_records)."""
-    if name not in _MANAGED:
-        if exists_ok:
-            return _count_df(spark, 0)
-        raise KeyError(f"ALTER TABLE: unknown table {name}")
-    tbl = _MANAGED[name]
+    exists_ok, name, act = m.groups()
+    if name not in _MANAGED and exists_ok:
+        return _count_df(spark, 0)
+    tbl = _managed(name)
     cols = tbl.scan().columns
     low = {c.lower(): c for c in cols}
     keyset = {c.lower() for k in ([tbl.key() or []] + tbl.keys()) for c in k}
@@ -6269,8 +6238,7 @@ def _apply_copy_schema(reader, target_df, collist, as_string=()):
     return reader.option("inferSchema", "true")
 
 
-def _copy_statement(spark: SparkSession, target: str, direction: str,
-                    path: str, opts_text: str | None):
+def _copy_statement(spark: SparkSession, m: "re.Match[str]") -> DataFrame:
     """COPY ... TO / FROM (reference src/execution/operator/persistent/
     physical_copy_to_file.cpp, physical_copy_from_file.cpp — here Spark's
     own distributed writers/readers).
@@ -6280,8 +6248,26 @@ def _copy_statement(spark: SparkSession, target: str, direction: str,
     tree, fully parallel writers) — that path never coalesces."""
     import glob as _glob
     import shutil as _shutil
-    import tempfile as _tempfile
 
+    target, direction, path = m.group(1), m.group(2), m.group(3)
+    opts_text = m.group(4)
+    if opts_text is None and m.group(5):
+        # PG-style bare options: DELIMITER '|' CSV HEADER NULL 'x' —
+        # normalize into the parenthesized key-value form (a quoted
+        # or numeric token is the preceding keyword's value)
+        toks = re.findall(r"'(?:[^']|'')*'|\S+", m.group(5))
+        parts, i = [], 0
+        while i < len(toks):
+            if i + 1 < len(toks) and (
+                toks[i + 1].startswith("'")
+                or toks[i + 1].replace(".", "").isdigit()
+            ):
+                parts.append(f"{toks[i]} {toks[i + 1]}")
+                i += 2
+            else:
+                parts.append(toks[i])
+                i += 1
+        opts_text = ", ".join(parts)
     opts = _parse_copy_options(opts_text)
     fmt = _copy_format(path, opts)
     delim = (
@@ -6410,7 +6396,7 @@ def _copy_statement(spark: SparkSession, target: str, direction: str,
                 part_dirs = list(hp.values())
             else:
                 part_dirs = list(part_by)
-            tmpd = _tempfile.mkdtemp(prefix="copypart_")
+            tmpd = tempfile.mkdtemp(prefix="copypart_")
             wdir = os.path.join(tmpd, "w")
             writer = out.write.mode("overwrite").partitionBy(*part_dirs)
             if fmt == "csv":
@@ -6450,7 +6436,7 @@ def _copy_statement(spark: SparkSession, target: str, direction: str,
             return _count_df(spark, n)
         # single-file DuckDB parity: write a one-part directory, then move
         # the part onto the exact path
-        tmp = _tempfile.mkdtemp(prefix="copyto_")
+        tmp = tempfile.mkdtemp(prefix="copyto_")
         out_dir = os.path.join(tmp, "out")
         if fmt == "csv" and opts.get("QUOTE") == "":
             # quote '' disables quoting entirely (reference
@@ -6767,7 +6753,6 @@ def _copy_statement(spark: SparkSession, target: str, direction: str,
     return _count_df(spark, n)
 
 
-_DROP_TBL = re.compile(r"^\s*DROP\s+TABLE\s+(IF\s+EXISTS\s+)?(\w+)\s*(CASCADE\s*)?;?\s*$", re.I)
 _TRUNCATE = re.compile(r"^\s*TRUNCATE\s+(?:TABLE\s+)?(\w+)\s*;?\s*$", re.I)
 _BEGIN = re.compile(r"^\s*(?:BEGIN|START)(?:\s+TRANSACTION)?\s*;?\s*$", re.I)
 _COMMIT = re.compile(r"^\s*COMMIT\s*;?\s*$", re.I)
@@ -6784,8 +6769,6 @@ _UPDATE = re.compile(
     r"(?:\s+FROM\s+(.+?))?(?:\s+WHERE\s+(.+?))?;?\s*$",
     re.I | re.S,
 )
-_CREATE_SEQ = re.compile(r"^\s*CREATE\s+(OR\s+REPLACE\s+)?(TEMP(?:ORARY)?\s+)?SEQUENCE\s+(?:IF\s+NOT\s+EXISTS\s+)?(\w+)(.*?);?\s*$", re.I | re.S)
-_DROP_SEQ = re.compile(r"^\s*DROP\s+SEQUENCE\s+(?:IF\s+EXISTS\s+)?(\w+)\s*;?\s*$", re.I)
 _SEQ_VAL = re.compile(r"^\s*SELECT\s+((?:next|curr)val\s*\(\s*'\w+'\s*\)\s*(?:AS\s+\w+\s*)?(?:,\s*(?:next|curr)val\s*\(\s*'\w+'\s*\)\s*(?:AS\s+\w+\s*)?)*);?\s*$", re.I)
 _EXPORT_DB = re.compile(r"^\s*EXPORT\s+DATABASE\s+'([^']+)'\s*(?:\(.*?\))?\s*;?\s*$", re.I)
 _IMPORT_DB = re.compile(r"^\s*IMPORT\s+DATABASE\s+'([^']+)'\s*;?\s*$", re.I)
@@ -6905,9 +6888,7 @@ def _cat_schema_of(name: str) -> tuple[str, str, str]:
 
 
 def _attached_lower() -> set[str]:
-    from myduckdb_spark.storage import _ATTACHED
-
-    return {a.lower() for a in _ATTACHED}
+    return {a.lower() for a in storage._ATTACHED}
 
 
 def _flatten_schema_refs(text: str) -> str:
@@ -6979,9 +6960,7 @@ def _flatten_schema_refs(text: str) -> str:
         # the alias's schemas (reference binder catalog search,
         # src/catalog/catalog.cpp::LookupEntry) — existing object wins,
         # else the alias's default 'main' schema (creation target)
-        from myduckdb_spark.storage import attached_aliases
-
-        amap = attached_aliases()
+        amap = storage.attached_aliases()
         sp = [e for e in SETTINGS.get("search_path", "").split(",") if e]
 
         def _alias_sub(mm: "re.Match[str]") -> str:
@@ -7034,21 +7013,8 @@ def _flatten_schema_refs(text: str) -> str:
     return text
 
 
-_CREATE_SCHEMA = re.compile(
-    r"^\s*CREATE\s+SCHEMA\s+(IF\s+NOT\s+EXISTS\s+)?"
-    r"(?:\"?(\w+)\"?\s*\.\s*)?\"?(\w+)\"?\s*;?\s*$",
-    re.I,
-)
-_DROP_SCHEMA = re.compile(
-    r"^\s*DROP\s+SCHEMA\s+(IF\s+EXISTS\s+)?"
-    r"(?:\"?(\w+)\"?\s*\.\s*)?\"?(\w+)\"?\s*"
-    r"(CASCADE|RESTRICT)?\s*;?\s*$",
-    re.I,
-)
-
-
 def _flat_schema_name(qualifier: str | None, name: str) -> str:
-    """CREATE/DROP/USE schema target → flattened engine schema name.
+    """CREATE / DROP / USE target → flattened engine name.
     A qualifier naming an attached catalog prefixes (``db1.s1`` →
     ``db1__s1``, src/main/attached_database.cpp schema entries); the
     default catalog 'memory' is a no-op prefix."""
@@ -7066,23 +7032,6 @@ _COMMENT_ON = re.compile(
     r"(TABLE|COLUMN|VIEW|INDEX|SEQUENCE|TYPE|MACRO\s+TABLE|MACRO|"
     r"FUNCTION|SCHEMA|DATABASE)\s+([\w.\"]+)\s+IS\s+(.+?);?\s*$",
     re.I | re.S,
-)
-_CREATE_TYPE = re.compile(
-    r"^\s*CREATE\s+(OR\s+REPLACE\s+)?TYPE\s+\"?(\w+)\"?\s+AS\s+(.+?);?\s*$",
-    re.I | re.S,
-)
-_DROP_TYPE = re.compile(
-    r"^\s*DROP\s+TYPE\s+(IF\s+EXISTS\s+)?\"?(\w+)\"?\s*;?\s*$", re.I,
-)
-_CREATE_MACRO = re.compile(
-    r"^\s*CREATE\s+(OR\s+REPLACE\s+)?(?:TEMP(?:ORARY)?\s+)?"
-    r"(?:MACRO|FUNCTION)\s+\"?(\w+)\"?\s*\(([^()]*)\)\s+AS\s+(.+?);?\s*$",
-    re.I | re.S,
-)
-_DROP_MACRO = re.compile(
-    r"^\s*DROP\s+(MACRO|FUNCTION)\s+(?:TABLE\s+)?(IF\s+EXISTS\s+)?"
-    r"\"?(\w+)\"?\s*;?\s*$",
-    re.I,
 )
 
 
@@ -7187,8 +7136,6 @@ def _comment_on(spark: SparkSession, m: "re.Match[str]") -> DataFrame:
             )
         ischema.COMMENTS[("type", key)] = comment
     elif kind in ("MACRO", "MACRO TABLE", "FUNCTION"):
-        from myduckdb_spark.functions import macros as _macros
-
         if key not in {n.lower() for n in _macros.macro_names()}:
             # reference: commenting on a built-in is rejected
             raise ValueError(
@@ -7211,187 +7158,482 @@ def _comment_on(spark: SparkSession, m: "re.Match[str]") -> DataFrame:
     return _count_df(spark, 0)
 
 
-def _dml_statement(spark: SparkSession, text: str) -> DataFrame | None:
-    import tempfile
+class CatalogError(KeyError, ValueError):
+    """DuckDB's Catalog Error for a missing or duplicate entry, with its
+    text. Both a KeyError and a ValueError, the two types these errors
+    had before they shared one policy."""
 
-    from myduckdb_spark import storage
-    m = _CREATE_SCHEMA.match(text)
-    if m:
-        flat = _flat_schema_name(m.group(2), m.group(3))
-        if flat in ischema.SCHEMAS and not m.group(1):
-            raise ValueError(f"schema {flat} already exists")
-        ischema.create_schema(flat)
-        return _count_df(spark, 0)
-    m = _DROP_SCHEMA.match(text)
-    if m:
-        name = _flat_schema_name(m.group(2), m.group(3))
-        if name not in ischema.SCHEMAS:
-            if m.group(1):
-                return _count_df(spark, 0)
-            raise KeyError(f"DROP SCHEMA: unknown schema {name}")
-        members = [
-            k for k, t in ischema.TABLE_META.items()
-            if t["schema"] == name or k.startswith(name.lower() + "__")
-        ]
-        if members and (m.group(4) or "").upper() != "CASCADE":
-            raise ValueError(
-                f"DROP SCHEMA: schema {name} is not empty (use CASCADE)"
-            )
-        for k in ischema.drop_schema(name):
-            _MANAGED.pop(k, None)
-            spark.catalog.dropTempView(k)
-        return _count_df(spark, 0)
-    m = _COMMENT_ON.match(text)
-    if m:
-        return _comment_on(spark, m)
-    m = _CREATE_TYPE.match(text)
-    if m:
-        replace, tname, deftext = bool(m.group(1)), m.group(2), m.group(3)
-        key = tname.lower()
-        if key in ischema.TYPE_ALIASES and not replace:
-            raise ValueError(
-                f"Catalog Error: Type with name \"{tname}\" already exists!"
-            )
-        d = deftext.strip().rstrip(";").strip()
-        em = re.match(r"ENUM\s*\(\s*(.*)\s*\)\s*$", d, re.I | re.S)
-        if em:
-            vals = [v.strip()[1:-1].replace("''", "'")
-                    for v in _split_args(em.group(1)) if v.strip()]
-            from myduckdb_spark.functions.registry import create_enum
+    __str__ = BaseException.__str__
 
-            create_enum(tname, vals)
-            ischema.TYPE_ALIASES[key] = "VARCHAR"
-        elif re.fullmatch(r"[\w ]+(\s*\(\s*\d+\s*(?:,\s*\d+\s*)?\))?"
-                          r"(\s*\[\s*\])*", d):
-            # simple alias (reference type_catalog_entry: CREATE TYPE x
-            # AS int32) — translate() rewrites ::x to the base spelling.
-            # Bit-width spellings normalize to DuckDB's name (INT32 →
-            # INTEGER), which every later rule knows.
-            ischema.TYPE_ALIASES[key] = (
-                typenames.canonical(d) if re.fullmatch(r"INT\d+", d, re.I)
-                else d
-            )
-        else:
-            raise ValueError(
-                f"CREATE TYPE: unsupported type definition {d!r}"
-            )
-        return _count_df(spark, 0)
-    m = _DROP_TYPE.match(text)
-    if m:
-        key = m.group(2).lower()
-        if key not in ischema.TYPE_ALIASES:
-            if m.group(1):
-                return _count_df(spark, 0)
-            raise ValueError(
-                f"Catalog Error: Type with name {m.group(2)} does not exist!"
-            )
-        ischema.TYPE_ALIASES.pop(key, None)
-        ischema.COMMENTS.pop(("type", key), None)
-        return _count_df(spark, 0)
-    m = _CREATE_MACRO.match(text)
-    if m:
-        from myduckdb_spark.functions import macros as _macros
 
-        replace, mname, params_text, body = (
-            bool(m.group(1)), m.group(2), m.group(3) or "", m.group(4),
-        )
-        if not replace and mname.lower() in {
-            n.lower() for n in _macros.macro_names()
-        }:
-            raise ValueError(
-                f"Catalog Error: Macro with name \"{mname}\" already exists!"
-            )
-        params, defaults = [], {}
-        for p in _split_args(params_text):
-            p = p.strip()
-            if not p:
-                continue
-            dm = re.match(r"(\w+)\s*:?=\s*(.+)$", p, re.S)
-            if dm:
-                params.append(dm.group(1))
-                defaults[dm.group(1)] = dm.group(2).strip()
-            else:
-                params.append(p.strip('"'))
-        body = body.strip().rstrip(";").strip()
-        tm2 = re.match(r"TABLE\s+(.+)$", body, re.I | re.S)
-        if tm2:
-            _macros.create_table_macro(mname, params, tm2.group(1))
-        else:
-            _macros.create_macro(mname, params, body, **defaults)
-        return _count_df(spark, 0)
-    m = _DROP_MACRO.match(text)
-    if m:
-        from myduckdb_spark.functions import macros as _macros
+def _managed(name: str):
+    """The managed table ``name``, or DuckDB's Catalog Error."""
+    if name not in _MANAGED:
+        raise CatalogError(f"Catalog Error: Table with name {name} does not exist!")
+    return _MANAGED[name]
 
-        key = m.group(3)
-        if key.lower() not in {n.lower() for n in _macros.macro_names()}:
-            if m.group(2):
-                return _count_df(spark, 0)
-            raise ValueError(
-                f"Catalog Error: Macro Function with name {key} does not exist!"
-            )
-        _macros.drop_macro(key)
-        ischema.COMMENTS.pop(("macro", key.lower()), None)
-        ischema.COMMENTS.pop(("function", key.lower()), None)
-        return _count_df(spark, 0)
-    text = _flatten_schema_refs(text)
-    # temporary tables: same managed storage, catalog 'temp' in the
-    # registry. `CREATE TABLE temp.x` without TEMPORARY is an error;
-    # ON COMMIT PRESERVE ROWS is the only supported commit action.
-    is_temp = False
-    tm = re.match(
-        r"^\s*CREATE\s+(OR\s+REPLACE\s+)?TEMP(?:ORARY)?\s+TABLE\s+(.*)$",
-        text, re.I | re.S,
+
+def _insert(spark: SparkSession, m: "re.Match[str]") -> DataFrame:
+    or_action, name, ins_alias, collist, source = (
+        (m.group(1) or "").upper(), m.group(2), m.group(3), m.group(4), m.group(5),
     )
-    if tm:
-        is_temp = True
-        text = f"CREATE {tm.group(1) or ''}TABLE {tm.group(2)}"
-        text = re.sub(r"\s+ON\s+COMMIT\s+PRESERVE\s+ROWS", "", text,
-                      flags=re.I)
-        text = re.sub(
-            r"^(\s*CREATE\s+(?:OR\s+REPLACE\s+)?TABLE\s+"
-            r"(?:IF\s+NOT\s+EXISTS\s+)?)temp\s*\.\s*",
-            r"\1", text, flags=re.I,
-        )
-    elif re.match(r"^\s*CREATE\s+(OR\s+REPLACE\s+)?TABLE\s+"
-                  r"(?:IF\s+NOT\s+EXISTS\s+)?temp\s*\.", text, re.I):
+    tbl = _managed(name)
+    if collist is not None and not re.match(
+        r'^\s*"?\w+"?(\s*,\s*"?\w+"?)*\s*$', collist
+    ):
+        # `INSERT INTO t (SELECT ...)` — parenthesized source, not a
+        # column list (the reference's binder makes the same call)
+        source, collist = f"({collist}) {source}", None
+    source, conflict = _split_off_on_conflict(source)
+    source = re.sub(r",\s*$", "", source)  # fork files: VALUES (..),
+    if or_action and conflict is not None:
         raise ValueError(
-            'Invalid Input Error: Only TEMPORARY table names can use the '
-            '"temp" catalog'
+            "Parser Error: You can not provide both OR REPLACE|IGNORE "
+            "and an ON CONFLICT clause"
         )
-    m = _CTAS.match(text)
-    if m:
-        replace, name, select = bool(m.group(1)), m.group(2), m.group(3)
-        if name in _MANAGED and not replace:
-            raise ValueError(f"table {name} already exists")
-        root = tempfile.mkdtemp(prefix=f"mdbs_tbl_{name}_")
-        select = _bind_file_scans(spark, select)
-        _MANAGED[name] = storage.ManagedTable.create(spark, root, spark.sql(translate(select)))
-        _refresh_view(spark, name)
-        cat, sch, bare = _cat_schema_of(name)
-        ischema.drop_object(name)
-        ischema.register_table(
-            name, "temp" if is_temp else cat, sch, bare,
-            "LOCAL TEMPORARY" if is_temp else "BASE TABLE",
+    if ins_alias and ins_alias.lower() == "excluded":
+        raise ValueError(
+            'Binder Error: INSERT alias cannot be "excluded" '
+            "(reserved for the ON CONFLICT incoming row)"
         )
-        # carrier-erased duck types survive CTAS through field metadata
-        # (e.g. the CSV sniffer's TIME demotion, io.py _fix_time_columns)
-        # — declare them so typeof() binds the declared name
-        fields = _MANAGED[name].scan().schema.fields
-        if any(f.metadata.get("duck_type") in _REGISTRY_BOUND for f in fields):
-            ischema.declare(name, [(c["name"], c["dtype"]) for c in _scan_columns(fields)])
-        return _count_df(spark, _MANAGED[name].count())
-    m = _CREATE_TBL.match(text)
-    if m and not _CTAS.match(text):
-        replace, name, body = bool(m.group(1)), m.group(2), m.group(3)
+    if re.match(r"\s*VALUES\b", source, re.I) and re.search(
+        r"\bDEFAULT\b", source, re.I
+    ):
+        # positional DEFAULT keyword inside VALUES tuples resolves to
+        # the target column's default (or typed NULL)
+        _tdtypes = dict(tbl.scan().dtypes)
+        _order = ([c.strip().strip('"') for c in collist.split(",")]
+                  if collist else list(_tdtypes))
+        _dfl = tbl.defaults
+        vm = re.match(r"\s*VALUES\s*(.*?);?\s*$", source, re.I | re.S)
+        newt = []
+        for tup in _split_args(vm.group(1)):
+            t = tup.strip()
+            if not (t.startswith("(") and t.endswith(")")):
+                newt.append(t)
+                continue
+            items = _split_args(t[1:-1])
+            for i, it in enumerate(items):
+                if re.fullmatch(r"\s*DEFAULT\s*", it, re.I):
+                    cname = _order[i] if i < len(_order) else None
+                    if cname and cname.lower() in _dfl:
+                        items[i] = f"({_dfl[cname.lower()]})"
+                    else:
+                        items[i] = (
+                            f"CAST(NULL AS {_tdtypes.get(cname, 'STRING')})"
+                            if cname else "NULL"
+                        )
+            newt.append("(" + ", ".join(x.strip() for x in items) + ")")
+        source = "VALUES " + ", ".join(newt)
+    src_df = _select_to_spark(spark, source)[1]
+    if collist is not None:
+        names = [c.strip().strip('"') for c in collist.split(",")]
+        if len(names) != len(src_df.columns):
+            raise ValueError("INSERT column list arity mismatch")
+        table_cols = tbl.scan().columns
+        unknown = [c for c in names if c not in table_cols]
+        if unknown:
+            raise ValueError(f"INSERT into unknown column(s): {unknown}")
+        by_name = dict(zip(names, src_df.columns))
+        dflt = tbl.defaults
+        seq_cols: dict[str, str] = {}
+
+        def _fill(c):
+            if c in by_name:
+                return F.col(by_name[c]).alias(c)
+            if c.lower() in dflt:
+                sm = re.fullmatch(
+                    r"\s*\(?\s*nextval\s*\(\s*'(\w+)'\s*\)\s*\)?\s*",
+                    dflt[c.lower()], re.I,
+                )
+                if sm:
+                    # sequence defaults: one counter reservation per
+                    # batch, values assigned below
+                    seq_cols[c] = sm.group(1)
+                    return F.lit(None).cast("bigint").alias(c)
+                return F.expr(translate(dflt[c.lower()])).alias(c)
+            return F.lit(None).alias(c)
+
+        src_df = src_df.select(*[_fill(c) for c in table_cols])
+        for c, sname in seq_cols.items():
+            seq = _seq_store().get(sname)
+            n_rows = src_df.count()
+            if n_rows:
+                base = seq.reserve(n_rows)
+                inc = _seq_store()._seqs[sname]["increment"]
+                from pyspark.sql import Window as _W
+
+                w = _W.orderBy(F.monotonically_increasing_id())
+                src_df = src_df.withColumn(
+                    c,
+                    (F.row_number().over(w) - 1) * F.lit(inc)
+                    + F.lit(base),
+                )
+    # UUID columns normalize their text forms on ingest the way the
+    # reference's UUID cast does (uuid.cpp FromString: braces
+    # stripped, case folded, dashes canonical) — the carrier is
+    # STRING, so without this the raw literal spelling would leak
+    # into scans/sorts (copy/parquet/writer/parquet_write_uuid.test)
+    _tcols = tbl.scan().columns
+    if len(src_df.columns) == len(_tcols):
+        _dt = ischema.declared_types(name)
+        _uuid_idx = [i for i, c in enumerate(_tcols)
+                     if _dt.get(c.lower()) == "UUID"]
+        if _uuid_idx:
+            _sel = list(src_df.columns)
+            for i in _uuid_idx:
+                sc = _sel[i]
+                t = (f"lower(regexp_replace(CAST(`{sc}` AS STRING), "
+                     f"'[{{}}]', ''))")
+                _sel[i] = F.expr(
+                    f"CASE WHEN {t} RLIKE '^[0-9a-f]{{32}}$' THEN "
+                    f"concat(substr({t},1,8),'-',substr({t},9,4),'-',"
+                    f"substr({t},13,4),'-',substr({t},17,4),'-',"
+                    f"substr({t},21,12)) ELSE {t} END"
+                ).alias(sc)
+            src_df = src_df.select(*[
+                x if not isinstance(x, str) else F.col(f"`{x}`")
+                for x in _sel
+            ])
+        # BLOB columns: a STRING source binds through the reference's
+        # VARCHAR→BLOB cast, which decodes \xNN escapes
+        # (blob.cpp TryCastToBlob). Spark's STRING→BINARY cast keeps
+        # the raw characters, so `INSERT INTO blobs VALUES ('\x00')`
+        # would store 4 bytes instead of one NUL
+        # (index/art/scan/test_art_null_bytes.test).
+        _blob_idx = [
+            i for i, c in enumerate(_tcols)
+            if _dt.get(c.lower()) == "BLOB"
+            and dict(src_df.dtypes)[src_df.columns[i]] == "string"
+        ]
+        if _blob_idx:
+            from myduckdb_spark.functions.udf import register_blob_parse
+
+            register_blob_parse(spark)
+            src_df = src_df.select(*[
+                F.expr(f"__blob_parse(`{c}`)").alias(c)
+                if i in _blob_idx else F.col(f"`{c}`")
+                for i, c in enumerate(src_df.columns)
+            ])
+    if or_action or conflict is not None:
+        all_keys = tbl.keys()
+        key = all_keys[0] if all_keys else None
+        if or_action == "REPLACE":
+            if not key:
+                raise ValueError("INSERT OR REPLACE requires a table key")
+            if len(all_keys) > 1:
+                raise ValueError(
+                    "INSERT OR REPLACE with multiple UNIQUE/PRIMARY KEY "
+                    "constraints is unsupported"
+                )
+            table_cols = tbl.scan().columns
+            assignments = {
+                c: f"__exc_{c}" for c in table_cols if c not in key
+            }
+            n = tbl.upsert(src_df, key, "update", assignments)
+        elif or_action == "IGNORE":
+            if not key:
+                raise ValueError("INSERT OR IGNORE requires a table key")
+            n = tbl.upsert(src_df, key, "nothing")
+        else:
+            cm = _ON_CONFLICT_CLAUSE.match(conflict)
+            if not cm:
+                raise ValueError(f"cannot parse ON CONFLICT clause: {conflict!r}")
+            target, arb_where, act, settext, wheretext = cm.groups()
+            key_cols = (
+                # dedup repeated target columns (DuckDB accepts
+                # `ON CONFLICT (key, key)`, binding the set)
+                list(dict.fromkeys(c.strip().strip('"') for c in target.split(",")))
+                if target
+                else key
+            )
+            if not key_cols:
+                raise ValueError("ON CONFLICT requires a conflict target or table key")
+            # the conflict target must name a UNIQUE/PRIMARY KEY set
+            # (Binder Error in the reference, bind_insert.cpp)
+            if all_keys and not any(set(key_cols) == set(k) for k in all_keys):
+                raise ValueError(
+                    "Binder Error: The specified columns as conflict target "
+                    "are not referenced by a UNIQUE/PRIMARY KEY CONSTRAINT"
+                )
+            arb = (
+                translate(_qualify_excluded(arb_where, name, src_df.columns, ins_alias))
+                if arb_where
+                else None
+            )
+            if act.upper() == "NOTHING":
+                n = tbl.upsert(src_df, key_cols, "nothing", arbiter_where=arb)
+            else:
+                assignments = {
+                    c: translate(_qualify_excluded(e, name, src_df.columns, ins_alias))
+                    for c, e in _split_assignments(settext or "").items()
+                }
+                # assigning a conflict-target / key column is a Binder
+                # Error in the reference (it would re-violate the index)
+                banned = set(key_cols) & set(assignments)
+                if banned:
+                    raise ValueError(
+                        f"Binder Error: Can not assign to column '{sorted(banned)[0]}' "
+                        f"because it has a UNIQUE/PRIMARY KEY constraint"
+                    )
+                where = (
+                    translate(_qualify_excluded(wheretext, name, src_df.columns, ins_alias))
+                    if wheretext
+                    else None
+                )
+                n = tbl.upsert(
+                    src_df, key_cols, "update", assignments, where,
+                    arbiter_where=arb,
+                )
+    else:
+        keysets = tbl.keys()
+        for key in keysets:
+            # plain INSERT into a keyed table enforces the constraint
+            # (reference: ART index check in physical_insert.cpp)
+            table_cols = tbl.scan().columns
+            probe = src_df.select(
+                *[
+                    F.col(src_df.columns[table_cols.index(k)]).alias(k)
+                    for k in key
+                ]
+            )
+            clash = probe.join(tbl.scan().select(*key), key, "left_semi").limit(1).collect()
+            dup = probe.groupBy(*key).count().filter("count > 1").limit(1).collect()
+            if clash or dup:
+                row = (clash or dup)[0]
+                keyval = ", ".join(f"{k}: {row[k]}" for k in key)
+                raise ValueError(
+                    f'Constraint Error: Duplicate key "{keyval}" violates primary key constraint.'
+                )
+        # NOT NULL enforcement (physical_insert.cpp): a NOT NULL /
+        # PRIMARY KEY column rejects NULL rows; source columns bind to
+        # the table's by position, as tbl.insert binds them
+        nn = ischema.not_null(name, tbl)
+        nn_cols = [c for c in _tcols if c.lower() in nn]
+        if nn_cols and len(src_df.columns) == len(_tcols):
+            bad = src_df.toDF(*_tcols).filter(
+                " OR ".join(f"`{c}` IS NULL" for c in nn_cols)
+            ).limit(1).collect()
+            if bad:
+                col = next(c for c in nn_cols if bad[0][c] is None)
+                raise ValueError(
+                    f"Constraint Error: NOT NULL constraint failed: "
+                    f"{name}.{col}"
+                )
+        n = tbl.insert(src_df)
+    _refresh_view(spark, name)
+    return _count_df(spark, n)
+
+
+def _truncate(spark: SparkSession, m: "re.Match[str]") -> DataFrame:
+    name = m.group(1)
+    n = _managed(name).truncate()
+    _refresh_view(spark, name)
+    return _count_df(spark, n)
+
+
+def _delete(spark: SparkSession, m: "re.Match[str]") -> DataFrame:
+    name, alias, using, pred = m.group(1), m.group(2), m.group(3), m.group(4)
+    tbl = _managed(name)
+    if using:
+        # DELETE ... USING (reference physical_delete.cpp semi-join
+        # plan): delete rows for which ANY joined combination of the
+        # USING sources satisfies WHERE -> a correlated EXISTS over
+        # the aliased scan; Catalyst plans it as a (broadcastable)
+        # left-semi join against the touched files only
+        body = translate(
+            f"SELECT 1 FROM {using} WHERE {pred}" if pred else f"SELECT 1 FROM {using}"
+        )
+        n = tbl.delete(f"EXISTS ({body})", alias=alias or name)
+    else:
+        n = tbl.delete(
+            translate(pred) if pred else "true", alias=alias or name
+        )
+    _refresh_view(spark, name)
+    return _count_df(spark, n)
+
+
+def _update(spark: SparkSession, m: "re.Match[str]") -> DataFrame:
+    name, upd_alias, settext, fromtext, pred = m.groups()
+    tbl = _managed(name)
+    assignments = _expand_tuple_assignment(settext)
+    # SET col = DEFAULT resolves the column's default (or NULL)
+    _udfl = tbl.defaults
+    assignments = {
+        c: (_udfl.get(c.lower(), "NULL")
+            if re.fullmatch(r"\s*DEFAULT\s*", e, re.I) else e)
+        for c, e in assignments.items()
+    }
+    assignments = {c: translate(e) for c, e in assignments.items()}
+    # NOT NULL enforcement (physical_update.cpp): an assigned NOT NULL
+    # / PRIMARY KEY column rejects a NULL new value
+    nn = ischema.not_null(name, tbl)
+    not_null = {c: f"{name}.{c}" for c in assignments if c.lower() in nn}
+    if fromtext:
+        n = tbl.update_from(
+            assignments,
+            translate(fromtext),
+            translate(pred) if pred else None,
+            upd_alias or name,
+            not_null=not_null,
+        )
+    else:
+        n = tbl.update(
+            assignments, translate(pred) if pred else "true", not_null=not_null
+        )
+    _refresh_view(spark, name)
+    return _count_df(spark, n)
+
+
+def _seq_val(spark: SparkSession, m: "re.Match[str]") -> DataFrame:
+    cols, vals = [], []
+    for cm in re.finditer(r"(next|curr)val\s*\(\s*'(\w+)'\s*\)\s*(?:AS\s+(\w+))?", m.group(1), re.I):
+        kind, sname, alias = cm.group(1).lower(), cm.group(2), cm.group(3)
+        seq = _seq_store().get(sname)
+        vals.append(seq.nextval() if kind == "next" else seq.currval())
+        cols.append(alias or f"{kind}val('{sname}')")
+    return _rows_df(spark, [tuple(vals)], ", ".join(f"`{c}` bigint" for c in cols))
+
+
+def _export_db(spark: SparkSession, m: "re.Match[str]") -> DataFrame:
+    if not _MANAGED:
+        raise ValueError("EXPORT DATABASE: no managed tables to export")
+    storage.export_database(
+        spark, m.group(1), {n: t.scan() for n, t in _MANAGED.items()}
+    )
+    return _count_df(spark, len(_MANAGED))
+
+
+def _import_db(spark: SparkSession, m: "re.Match[str]") -> DataFrame:
+    return _count_df(spark, len(storage.import_database(spark, m.group(1))))
+
+
+def _attach(spark: SparkSession, m: "re.Match[str]") -> DataFrame:
+    path, alias, opts = m.group(1), m.group(2), m.group(3) or ""
+    if not alias:
+        # default alias: the file stem (attached_database.cpp)
+        alias = re.sub(r"\.[^.]*$", "", os.path.basename(path)) or path
+    n = len(storage.attach(spark, path, alias))
+    if re.search(r"\bREAD_?ONLY\b", opts, re.I):
+        storage.attached_readonly()[alias] = True
+    return _count_df(spark, n)
+
+
+def _detach(spark: SparkSession, m: "re.Match[str]") -> DataFrame:
+    storage.detach(spark, m.group(1))
+    return _count_df(spark, 0)
+
+
+# ---------------------------------------------------------------------------
+# CREATE and DROP. Every catalog kind shares one head parse and one
+# existence policy, as in DuckDB: each CreateInfo carries one
+# OnCreateConflict (error, ignore or replace), each DropInfo one
+# if_not_found and one cascade, and the catalog applies them in one place
+# (catalog_set.cpp CreateEntry / DropEntry). A kind's handler gets the
+# object's name, the match of what follows the name, and the flags, and
+# does only that kind's work.
+# ---------------------------------------------------------------------------
+
+_DDL_HEAD = re.compile(
+    r"^\s*(?P<verb>CREATE|DROP)\s+(?P<replace>OR\s+REPLACE\s+)?"
+    r"(?P<temp>TEMP(?:ORARY)?\s+)?(?P<unique>UNIQUE\s+)?"
+    r"(?P<kind>TABLE|VIEW|SCHEMA|SEQUENCE|TYPE|MACRO\s+TABLE|MACRO|FUNCTION|"
+    r"INDEX)\b(?:\s+(?P<ine>IF\s+NOT\s+EXISTS\s+)?(?P<ie>IF\s+EXISTS\s+)?"
+    r"(?:\"?(?P<qual>\w+)\"?\s*\.\s*)?\"?(?P<name>\w+)\"?(?P<rest>.*?))?"
+    r"\s*;?\s*$",
+    re.I | re.S,
+)
+# what follows the name: one pattern per kind for CREATE, one for DROP
+_DROP_REST = re.compile(r"(?:\s+(?P<behavior>CASCADE|RESTRICT))?", re.I)
+_TABLE_REST = re.compile(
+    r"(?:\s+ON\s+COMMIT\s+PRESERVE\s+ROWS)?\s+AS\s+(?P<body>.+)"
+    r"|\s*\((?P<cols>.+)\)(?:\s+ON\s+COMMIT\s+PRESERVE\s+ROWS)?",
+    re.I | re.S,
+)
+_VIEW_REST = re.compile(
+    r"\s*(?:\((?P<cols>[^()]*)\))?\s+AS\s+(?P<body>.+)", re.I | re.S)
+_SEQUENCE_REST = re.compile(r"(?P<opts>.*)", re.S)
+_TYPE_REST = re.compile(r"\s+AS\s+(?P<body>.+)", re.I | re.S)
+_MACRO_REST = re.compile(
+    r"\s*\((?P<params>[^()]*)\)\s+AS\s+(?P<body>.+)", re.I | re.S)
+_INDEX_REST = re.compile(
+    r"\s+ON\s+(?P<table>\w+)\s*(?:USING\s+\w+\s*)?\((?P<cols>.+)\)",
+    re.I | re.S,
+)
+
+
+class _DDLFlags(NamedTuple):
+    replace: bool  # OR REPLACE
+    temp: bool     # TEMP / TEMPORARY
+    unique: bool   # CREATE UNIQUE INDEX
+    cascade: bool  # DROP … CASCADE
+
+
+def _existence_policy(label: str, name: str, head: "re.Match[str]",
+                      exists: bool) -> bool:
+    """DuckDB's policy for one CREATE or DROP, from one existence lookup:
+    True to go on (OR REPLACE replaces), False to do nothing (IF NOT
+    EXISTS over an existing entry, IF EXISTS over a missing one), or a
+    Catalog Error."""
+    if head["verb"].upper() == "CREATE" and exists:
+        if not (head["ine"] or head["replace"]):
+            raise CatalogError(
+                f'Catalog Error: {label} with name "{name}" already exists!')
+        return not head["ine"]
+    if head["verb"].upper() == "DROP" and not exists:
+        if not head["ie"]:
+            raise CatalogError(
+                f"Catalog Error: {label} with name {name} does not exist!")
+        return False
+    return True
+
+
+def _ddl(spark: SparkSession, head: "re.Match[str]") -> DataFrame:
+    """Run one CREATE or DROP of a catalog kind. A statement whose head
+    names a kind but whose rest that kind cannot parse is a Parser Error;
+    it never reaches Spark's own DDL."""
+    verb = head["verb"].upper()
+    word = " ".join(head["kind"].upper().split())
+    kind = _DDL_KINDS[word]
+    create = verb == "CREATE"
+    if head["replace"] and head["ine"]:
+        raise ValueError('Parser Error: syntax error at or near "NOT"')
+    misplaced = head["ie"] if create else (
+        head["ine"] or head["replace"] or head["temp"] or head["unique"])
+    rest = None if head["name"] is None or misplaced \
+        or head["unique"] and word != "INDEX" \
+        else (kind.rest if create else _DROP_REST).fullmatch(head["rest"])
+    if rest is None:
+        raise ValueError(f"Parser Error: syntax error in {verb} {word}")
+    qual = head["qual"]
+    if create and not head["temp"] and (qual or "").lower() == "temp":
+        raise ValueError('Parser Error: Only TEMPORARY table names can use '
+                         'the "temp" catalog')
+    try:
+        name = _flat_schema_name(qual, head["name"])
+    except ValueError:
+        if head["ie"]:  # a missing catalog holds no entry
+            return _count_df(spark, 0)
+        raise
+    if not _existence_policy(kind.label, head["name"], head,
+                             kind.exists(name, rest)):
+        return _count_df(spark, 0)
+    flags = _DDLFlags(
+        bool(head["replace"]), bool(head["temp"]), bool(head["unique"]),
+        (rest.groupdict().get("behavior") or "").upper() == "CASCADE")
+    return (kind.create if create else kind.drop)(spark, name, rest, flags)
+
+
+def _create_table(spark: SparkSession, name: str, rest: "re.Match[str]",
+                  flags: _DDLFlags) -> DataFrame:
+    """CREATE TABLE … AS <query> or (<column defs>): a managed table. A
+    TEMP table keeps the same storage and sits in catalog 'temp'."""
+    if rest["body"] is not None:
+        df = _select_to_spark(spark, rest["body"])[1]
+    else:
         declared: dict[str, str] = {}
         cols, key, uniques, collations, defaults, extras = \
-            _parse_column_defs(body, declared_out=declared)
-        if name in _MANAGED:
-            if "IF NOT EXISTS" in text.upper():
-                return _count_df(spark, 0)
-            if not replace:
-                raise ValueError(f"table {name} already exists")
+            _parse_column_defs(rest["cols"], declared_out=declared)
         # DEFAULT expressions must be scalar: no aggregates, no window
         # functions, no references to other columns (bound_default.cpp)
         _colnames = {n.lower() for n, _t in cols}
@@ -7421,576 +7663,290 @@ def _dml_statement(spark: SparkSession, text: str) -> DataFrame | None:
                         "Binder Error: DEFAULT expressions cannot "
                         "reference other columns"
                     )
-        empty = spark.sql(
+        df = spark.sql(
             "SELECT " + ", ".join(f"CAST(NULL AS {t}) AS {n}" for n, t in cols)
         ).limit(0)
-        root = tempfile.mkdtemp(prefix=f"mdbs_tbl_{name}_")
-        _MANAGED[name] = storage.ManagedTable.create(spark, root, empty)
+    root = tempfile.mkdtemp(prefix=f"mdbs_tbl_{name}_")
+    tbl = _MANAGED[name] = storage.ManagedTable.create(spark, root, df)
+    if rest["cols"] is not None:
         if key:
-            _MANAGED[name].set_key(key)
+            tbl.set_key(key)
         for u in uniques:
-            _MANAGED[name].add_unique(u)
+            tbl.add_unique(u)
         if defaults:
-            _MANAGED[name].set_defaults(defaults)
+            tbl.set_defaults(defaults)
         if collations:
             _COLUMN_COLLATIONS[name.lower()] = collations
         else:
             _COLUMN_COLLATIONS.pop(name.lower(), None)
-        _refresh_view(spark, name)
-        # catalog-metadata registry: declared types + constraints feed
-        # information_schema (myduckdb_spark.infoschema)
-        cat, sch, bare = _cat_schema_of(name)
-        ischema.drop_object(name)
-        ischema.register_table(
-            name, "temp" if is_temp else cat, sch, bare,
-            "LOCAL TEMPORARY" if is_temp else "BASE TABLE",
-        )
-        ischema.declare(name, [(n, declared[n.lower()]) for n, _t in cols])
-        # declaration order, one PRIMARY KEY row however it was spelled
-        nn_seen = set()
-        pk_seen = False
-        for x in extras:
-            if x["ctype"] == "PRIMARY KEY":
-                if pk_seen:
-                    continue
-                pk_seen = True
-            if x["ctype"] == "NOT NULL":
-                if x["columns"][0].lower() in nn_seen:
-                    continue
-                nn_seen.add(x["columns"][0].lower())
-            if x["ctype"] == "CHECK" and not x["columns"]:
-                # table-level CHECK: referenced columns = identifiers in
-                # the expression that name declared columns
-                names = {n.lower(): n for n, _t in cols}
-                x["columns"] = [
-                    names[w.lower()] for w in dict.fromkeys(
-                        re.findall(r'"?(\w+)"?', x.get("expression", ""))
-                    ) if w.lower() in names
-                ]
-            ischema.add_constraint(name, x["ctype"], list(x["columns"]), x.get("text"))
-        # live oracle appends an implicit NOT NULL row per PRIMARY KEY
-        # column that declares none
-        for c in key:
-            if c.lower() not in nn_seen:
-                ischema.add_constraint(name, "NOT NULL", [c])
-        return _count_df(spark, 0)
-    m = _CREATE_INDEX.match(text)
-    if m:
-        unique, _iname, name, icols = m.groups()
-        if name not in _MANAGED:
-            raise KeyError(f"CREATE INDEX: unknown table {name}")
-        # indexes on attached-catalog tables key by their flat schema
-        # prefix so the same index name can exist per catalog/schema
-        # (catalog/comment_on_extended.test); memory-catalog indexes
-        # keep bare names (status quo for DROP INDEX by name)
-        _icat, _isch, _ibare = _cat_schema_of(name)
-        _ikey = _iname.strip('"').lower()
-        if _icat not in ("memory", "temp"):
-            _ikey = f"{name[: len(name) - len(_ibare) - 2]}__{_ikey}".lower()
-        ischema.INDEXES[_ikey] = {
-            "table": name, "unique": bool(unique),
-            "columns": [c.strip().strip('"')
-                        for c in _split_args(icols)],
-        }
-        if unique:
-            # a unique index is an ON CONFLICT arbiter + INSERT constraint
-            # (reference: ART index, physical_insert.cpp); non-unique
-            # indexes have no semantic effect in this engine (scan pruning
-            # is parquet zone maps) and are accepted as no-ops
-            cols = [
-                re.sub(r'^"(.*)"$', r"\1", c.strip())
-                for c in icols.split(",")
+    _refresh_view(spark, name)
+    # catalog-metadata registry: declared types + constraints feed
+    # information_schema (myduckdb_spark.infoschema)
+    cat, sch, bare = _cat_schema_of(name)
+    ischema.drop_object(name)
+    ischema.register_table(
+        name, "temp" if flags.temp else cat, sch, bare,
+        "LOCAL TEMPORARY" if flags.temp else "BASE TABLE",
+    )
+    if rest["body"] is not None:
+        # carrier-erased duck types survive CTAS through field metadata
+        # (e.g. the CSV sniffer's TIME demotion, io.py _fix_time_columns)
+        # — declare them so typeof() binds the declared name
+        fields = tbl.scan().schema.fields
+        if any(f.metadata.get("duck_type") in _REGISTRY_BOUND for f in fields):
+            ischema.declare(name, [(c["name"], c["dtype"]) for c in _scan_columns(fields)])
+        return _count_df(spark, tbl.count())
+    ischema.declare(name, [(n, declared[n.lower()]) for n, _t in cols])
+    # declaration order, one PRIMARY KEY row however it was spelled
+    nn_seen = set()
+    pk_seen = False
+    for x in extras:
+        if x["ctype"] == "PRIMARY KEY":
+            if pk_seen:
+                continue
+            pk_seen = True
+        if x["ctype"] == "NOT NULL":
+            if x["columns"][0].lower() in nn_seen:
+                continue
+            nn_seen.add(x["columns"][0].lower())
+        if x["ctype"] == "CHECK" and not x["columns"]:
+            # table-level CHECK: referenced columns = identifiers in
+            # the expression that name declared columns
+            names = {n.lower(): n for n, _t in cols}
+            x["columns"] = [
+                names[w.lower()] for w in dict.fromkeys(
+                    re.findall(r'"?(\w+)"?', x.get("expression", ""))
+                ) if w.lower() in names
             ]
-            if any(not re.fullmatch(r"\w+", c) for c in cols):
-                raise ValueError("CREATE UNIQUE INDEX: expression indexes unsupported")
-            _MANAGED[name].add_unique(cols)
-        return _count_df(spark, 0)
-    dm_ix = _DROP_INDEX.match(text)
-    if dm_ix:
-        _dk = dm_ix.group(1).lower()
-        if ischema.INDEXES.pop(_dk, None) is None:
-            # qualified (attached-catalog) index keys: drop by suffix
-            # when the bare name is unambiguous
-            _cands = [k for k in ischema.INDEXES
-                      if k.rsplit("__", 1)[-1] == _dk]
-            if len(_cands) == 1:
-                ischema.INDEXES.pop(_cands[0])
-        return _count_df(spark, 0)  # unique sets are kept — conservative
-    m = _INSERT.match(text)
-    if m and m.group(2) in _MANAGED:
-        or_action, name, ins_alias, collist, source = (
-            (m.group(1) or "").upper(), m.group(2), m.group(3), m.group(4), m.group(5),
-        )
-        if collist is not None and not re.match(
-            r'^\s*"?\w+"?(\s*,\s*"?\w+"?)*\s*$', collist
-        ):
-            # `INSERT INTO t (SELECT ...)` — parenthesized source, not a
-            # column list (the reference's binder makes the same call)
-            source, collist = f"({collist}) {source}", None
-        source, conflict = _split_off_on_conflict(source)
-        source = re.sub(r",\s*$", "", source)  # fork files: VALUES (..),
-        if or_action and conflict is not None:
-            raise ValueError(
-                "Parser Error: You can not provide both OR REPLACE|IGNORE "
-                "and an ON CONFLICT clause"
-            )
-        if ins_alias and ins_alias.lower() == "excluded":
-            raise ValueError(
-                'Binder Error: INSERT alias cannot be "excluded" '
-                "(reserved for the ON CONFLICT incoming row)"
-            )
-        tbl = _MANAGED[name]
-        if re.match(r"\s*VALUES\b", source, re.I) and re.search(
-            r"\bDEFAULT\b", source, re.I
-        ):
-            # positional DEFAULT keyword inside VALUES tuples resolves to
-            # the target column's default (or typed NULL)
-            _tdtypes = dict(tbl.scan().dtypes)
-            _order = ([c.strip().strip('"') for c in collist.split(",")]
-                      if collist else list(_tdtypes))
-            _dfl = tbl.defaults
-            vm = re.match(r"\s*VALUES\s*(.*?);?\s*$", source, re.I | re.S)
-            newt = []
-            for tup in _split_args(vm.group(1)):
-                t = tup.strip()
-                if not (t.startswith("(") and t.endswith(")")):
-                    newt.append(t)
-                    continue
-                items = _split_args(t[1:-1])
-                for i, it in enumerate(items):
-                    if re.fullmatch(r"\s*DEFAULT\s*", it, re.I):
-                        cname = _order[i] if i < len(_order) else None
-                        if cname and cname.lower() in _dfl:
-                            items[i] = f"({_dfl[cname.lower()]})"
-                        else:
-                            items[i] = (
-                                f"CAST(NULL AS {_tdtypes.get(cname, 'STRING')})"
-                                if cname else "NULL"
-                            )
-                newt.append("(" + ", ".join(x.strip() for x in items) + ")")
-            source = "VALUES " + ", ".join(newt)
-        src_df = spark.sql(translate(_bind_file_scans(spark, source)))
-        if collist is not None:
-            names = [c.strip().strip('"') for c in collist.split(",")]
-            if len(names) != len(src_df.columns):
-                raise ValueError("INSERT column list arity mismatch")
-            table_cols = tbl.scan().columns
-            unknown = [c for c in names if c not in table_cols]
-            if unknown:
-                raise ValueError(f"INSERT into unknown column(s): {unknown}")
-            by_name = dict(zip(names, src_df.columns))
-            from pyspark.sql import functions as _F
+        ischema.add_constraint(name, x["ctype"], list(x["columns"]), x.get("text"))
+    # live oracle appends an implicit NOT NULL row per PRIMARY KEY
+    # column that declares none
+    for c in key:
+        if c.lower() not in nn_seen:
+            ischema.add_constraint(name, "NOT NULL", [c])
+    return _count_df(spark, 0)
 
-            dflt = tbl.defaults
-            seq_cols: dict[str, str] = {}
 
-            def _fill(c):
-                if c in by_name:
-                    return _F.col(by_name[c]).alias(c)
-                if c.lower() in dflt:
-                    sm = re.fullmatch(
-                        r"\s*\(?\s*nextval\s*\(\s*'(\w+)'\s*\)\s*\)?\s*",
-                        dflt[c.lower()], re.I,
-                    )
-                    if sm:
-                        # sequence defaults: one counter reservation per
-                        # batch, values assigned below
-                        seq_cols[c] = sm.group(1)
-                        return _F.lit(None).cast("bigint").alias(c)
-                    return _F.expr(translate(dflt[c.lower()])).alias(c)
-                return _F.lit(None).alias(c)
+def _drop_relation(spark: SparkSession, name: str, rest, flags) -> DataFrame:
+    """DROP TABLE / DROP VIEW."""
+    _MANAGED.pop(name, None)
+    _COLUMN_COLLATIONS.pop(name.lower(), None)
+    # a re-created same-named object must not inherit comments
+    ischema.drop_object(name)
+    spark.catalog.dropTempView(name)
+    return _count_df(spark, 0)
 
-            src_df = src_df.select(*[_fill(c) for c in table_cols])
-            for c, sname in seq_cols.items():
-                seq = _seq_store().get(sname)
-                n_rows = src_df.count()
-                if n_rows:
-                    base = seq.reserve(n_rows)
-                    inc = _seq_store()._seqs[sname]["increment"]
-                    from pyspark.sql import Window as _W
 
-                    w = _W.orderBy(_F.monotonically_increasing_id())
-                    src_df = src_df.withColumn(
-                        c,
-                        (_F.row_number().over(w) - 1) * _F.lit(inc)
-                        + _F.lit(base),
-                    )
-        # UUID columns normalize their text forms on ingest the way the
-        # reference's UUID cast does (uuid.cpp FromString: braces
-        # stripped, case folded, dashes canonical) — the carrier is
-        # STRING, so without this the raw literal spelling would leak
-        # into scans/sorts (copy/parquet/writer/parquet_write_uuid.test)
-        _tcols = tbl.scan().columns
-        if len(src_df.columns) == len(_tcols):
-            _dt = ischema.declared_types(name)
-            _uuid_idx = [i for i, c in enumerate(_tcols)
-                         if _dt.get(c.lower()) == "UUID"]
-            if _uuid_idx:
-                _sel = list(src_df.columns)
-                for i in _uuid_idx:
-                    sc = _sel[i]
-                    t = (f"lower(regexp_replace(CAST(`{sc}` AS STRING), "
-                         f"'[{{}}]', ''))")
-                    _sel[i] = F.expr(
-                        f"CASE WHEN {t} RLIKE '^[0-9a-f]{{32}}$' THEN "
-                        f"concat(substr({t},1,8),'-',substr({t},9,4),'-',"
-                        f"substr({t},13,4),'-',substr({t},17,4),'-',"
-                        f"substr({t},21,12)) ELSE {t} END"
-                    ).alias(sc)
-                src_df = src_df.select(*[
-                    x if not isinstance(x, str) else F.col(f"`{x}`")
-                    for x in _sel
-                ])
-            # BLOB columns: a STRING source binds through the reference's
-            # VARCHAR→BLOB cast, which decodes \xNN escapes
-            # (blob.cpp TryCastToBlob). Spark's STRING→BINARY cast keeps
-            # the raw characters, so `INSERT INTO blobs VALUES ('\x00')`
-            # would store 4 bytes instead of one NUL
-            # (index/art/scan/test_art_null_bytes.test).
-            _blob_idx = [
-                i for i, c in enumerate(_tcols)
-                if _dt.get(c.lower()) == "BLOB"
-                and dict(src_df.dtypes)[src_df.columns[i]] == "string"
-            ]
-            if _blob_idx:
-                from myduckdb_spark.functions.udf import register_blob_parse
+def _create_schema(spark: SparkSession, name: str, rest, flags) -> DataFrame:
+    ischema.create_schema(name)
+    return _count_df(spark, 0)
 
-                register_blob_parse(spark)
-                src_df = src_df.select(*[
-                    F.expr(f"__blob_parse(`{c}`)").alias(c)
-                    if i in _blob_idx else F.col(f"`{c}`")
-                    for i, c in enumerate(src_df.columns)
-                ])
-        if or_action or conflict is not None:
-            all_keys = tbl.keys()
-            key = all_keys[0] if all_keys else None
-            if or_action == "REPLACE":
-                if not key:
-                    raise ValueError("INSERT OR REPLACE requires a table key")
-                if len(all_keys) > 1:
-                    raise ValueError(
-                        "INSERT OR REPLACE with multiple UNIQUE/PRIMARY KEY "
-                        "constraints is unsupported"
-                    )
-                table_cols = tbl.scan().columns
-                assignments = {
-                    c: f"__exc_{c}" for c in table_cols if c not in key
-                }
-                n = tbl.upsert(src_df, key, "update", assignments)
-            elif or_action == "IGNORE":
-                if not key:
-                    raise ValueError("INSERT OR IGNORE requires a table key")
-                n = tbl.upsert(src_df, key, "nothing")
-            else:
-                cm = _ON_CONFLICT_CLAUSE.match(conflict)
-                if not cm:
-                    raise ValueError(f"cannot parse ON CONFLICT clause: {conflict!r}")
-                target, arb_where, act, settext, wheretext = cm.groups()
-                key_cols = (
-                    # dedup repeated target columns (DuckDB accepts
-                    # `ON CONFLICT (key, key)`, binding the set)
-                    list(dict.fromkeys(c.strip().strip('"') for c in target.split(",")))
-                    if target
-                    else key
-                )
-                if not key_cols:
-                    raise ValueError("ON CONFLICT requires a conflict target or table key")
-                # the conflict target must name a UNIQUE/PRIMARY KEY set
-                # (Binder Error in the reference, bind_insert.cpp)
-                if all_keys and not any(set(key_cols) == set(k) for k in all_keys):
-                    raise ValueError(
-                        "Binder Error: The specified columns as conflict target "
-                        "are not referenced by a UNIQUE/PRIMARY KEY CONSTRAINT"
-                    )
-                arb = (
-                    translate(_qualify_excluded(arb_where, name, src_df.columns, ins_alias))
-                    if arb_where
-                    else None
-                )
-                if act.upper() == "NOTHING":
-                    n = tbl.upsert(src_df, key_cols, "nothing", arbiter_where=arb)
-                else:
-                    assignments = {
-                        c: translate(_qualify_excluded(e, name, src_df.columns, ins_alias))
-                        for c, e in _split_assignments(settext or "").items()
-                    }
-                    # assigning a conflict-target / key column is a Binder
-                    # Error in the reference (it would re-violate the index)
-                    banned = set(key_cols) & set(assignments)
-                    if banned:
-                        raise ValueError(
-                            f"Binder Error: Can not assign to column '{sorted(banned)[0]}' "
-                            f"because it has a UNIQUE/PRIMARY KEY constraint"
-                        )
-                    where = (
-                        translate(_qualify_excluded(wheretext, name, src_df.columns, ins_alias))
-                        if wheretext
-                        else None
-                    )
-                    n = tbl.upsert(
-                        src_df, key_cols, "update", assignments, where,
-                        arbiter_where=arb,
-                    )
-        else:
-            keysets = tbl.keys()
-            for key in keysets:
-                # plain INSERT into a keyed table enforces the constraint
-                # (reference: ART index check in physical_insert.cpp)
-                from pyspark.sql import functions as _F
 
-                table_cols = tbl.scan().columns
-                probe = src_df.select(
-                    *[
-                        _F.col(src_df.columns[table_cols.index(k)]).alias(k)
-                        for k in key
-                    ]
-                )
-                clash = probe.join(tbl.scan().select(*key), key, "left_semi").limit(1).collect()
-                dup = probe.groupBy(*key).count().filter("count > 1").limit(1).collect()
-                if clash or dup:
-                    row = (clash or dup)[0]
-                    keyval = ", ".join(f"{k}: {row[k]}" for k in key)
-                    raise ValueError(
-                        f'Constraint Error: Duplicate key "{keyval}" violates primary key constraint.'
-                    )
-            # NOT NULL enforcement (physical_insert.cpp): a NOT NULL /
-            # PRIMARY KEY column rejects NULL rows; source columns bind to
-            # the table's by position, as tbl.insert binds them
-            nn = ischema.not_null(name, tbl)
-            nn_cols = [c for c in _tcols if c.lower() in nn]
-            if nn_cols and len(src_df.columns) == len(_tcols):
-                bad = src_df.toDF(*_tcols).filter(
-                    " OR ".join(f"`{c}` IS NULL" for c in nn_cols)
-                ).limit(1).collect()
-                if bad:
-                    col = next(c for c in nn_cols if bad[0][c] is None)
-                    raise ValueError(
-                        f"Constraint Error: NOT NULL constraint failed: "
-                        f"{name}.{col}"
-                    )
-            n = tbl.insert(src_df)
-        _refresh_view(spark, name)
-        return _count_df(spark, n)
-    m = _SET_SETTING.match(text)
-    if m:
-        SETTINGS[m.group(1).lower()] = m.group(2).lower()
-        return _count_df(spark, 0)
-    m = _CREATE_VIEW.match(text)
-    if m:
-        return _create_view(spark, *m.groups())
-    m = _DROP_VIEW.match(text)
-    if m:
-        name = m.group(2)
-        if name.lower() in ischema.views():
-            ischema.drop_object(name)
-            spark.catalog.dropTempView(name)
-        elif not m.group(1):
-            raise KeyError(f"DROP VIEW: view {name} does not exist")
-        return _count_df(spark, 0)
-    m = _ALTER.match(text)
-    if m:
-        return _alter_table(spark, m.group(1), m.group(2), m.group(3))
-    m = _COPY.match(text)
-    if m:
-        opts_text = m.group(4)
-        if opts_text is None and m.group(5):
-            # PG-style bare options: DELIMITER '|' CSV HEADER NULL 'x' —
-            # normalize into the parenthesized key-value form (a quoted
-            # or numeric token is the preceding keyword's value)
-            toks = re.findall(r"'(?:[^']|'')*'|\S+", m.group(5))
-            parts, i = [], 0
-            while i < len(toks):
-                if i + 1 < len(toks) and (
-                    toks[i + 1].startswith("'")
-                    or toks[i + 1].replace(".", "").isdigit()
-                ):
-                    parts.append(f"{toks[i]} {toks[i + 1]}")
-                    i += 2
-                else:
-                    parts.append(toks[i])
-                    i += 1
-            opts_text = ", ".join(parts)
-        return _copy_statement(spark, m.group(1), m.group(2), m.group(3), opts_text)
-    m = _DROP_TBL.match(text)
-    if m:
-        name = m.group(2)
-        if name in _MANAGED:
-            _MANAGED.pop(name)
-            _COLUMN_COLLATIONS.pop(name.lower(), None)
-            # a re-created same-named table must not inherit comments
-            ischema.drop_object(name)
-            spark.catalog.dropTempView(name)
-        elif not m.group(1):
-            raise KeyError(f"DROP TABLE: unknown table {name}")
-        return _count_df(spark, 0)
-    m = _TRUNCATE.match(text)
-    if m:
-        name = m.group(1)
-        if name not in _MANAGED:
-            raise KeyError(f"TRUNCATE: unknown table {name}")
-        n = _MANAGED[name].truncate()
-        _refresh_view(spark, name)
-        return _count_df(spark, n)
-    if _BEGIN.match(text):
-        _txn_begin()
-        return _count_df(spark, 0)
-    if _COMMIT.match(text):
-        _txn_end(commit=True)
-        return _count_df(spark, 0)
-    if _ROLLBACK.match(text):
-        _txn_rollback(spark)
-        return _count_df(spark, 0)
-    m = _DELETE.match(text)
-    if m:
-        name, alias, using, pred = m.group(1), m.group(2), m.group(3), m.group(4)
-        if name not in _MANAGED:
-            raise ValueError(f"DELETE: {name} is not a managed table (CREATE TABLE ... AS first)")
-        if using:
-            # DELETE ... USING (reference physical_delete.cpp semi-join
-            # plan): delete rows for which ANY joined combination of the
-            # USING sources satisfies WHERE -> a correlated EXISTS over
-            # the aliased scan; Catalyst plans it as a (broadcastable)
-            # left-semi join against the touched files only
-            body = translate(
-                f"SELECT 1 FROM {using} WHERE {pred}" if pred else f"SELECT 1 FROM {using}"
-            )
-            n = _MANAGED[name].delete(f"EXISTS ({body})", alias=alias or name)
-        else:
-            n = _MANAGED[name].delete(
-                translate(pred) if pred else "true", alias=alias or name
-            )
-        _refresh_view(spark, name)
-        return _count_df(spark, n)
-    m = _UPDATE.match(text)
-    if m:
-        name, upd_alias, settext, fromtext, pred = m.groups()
-        if name not in _MANAGED:
-            raise ValueError(f"UPDATE: {name} is not a managed table (CREATE TABLE ... AS first)")
-        assignments = _expand_tuple_assignment(settext)
-        # SET col = DEFAULT resolves the column's default (or NULL)
-        _udfl = _MANAGED[name].defaults
-        assignments = {
-            c: (_udfl.get(c.lower(), "NULL")
-                if re.fullmatch(r"\s*DEFAULT\s*", e, re.I) else e)
-            for c, e in assignments.items()
-        }
-        assignments = {c: translate(e) for c, e in assignments.items()}
-        # NOT NULL enforcement (physical_update.cpp): an assigned NOT NULL
-        # / PRIMARY KEY column rejects a NULL new value
-        tbl = _MANAGED[name]
-        nn = ischema.not_null(name, tbl)
-        not_null = {c: f"{name}.{c}" for c in assignments if c.lower() in nn}
-        if fromtext:
-            n = tbl.update_from(
-                assignments,
-                translate(fromtext),
-                translate(pred) if pred else None,
-                upd_alias or name,
-                not_null=not_null,
-            )
-        else:
-            n = tbl.update(
-                assignments, translate(pred) if pred else "true", not_null=not_null
-            )
-        _refresh_view(spark, name)
-        return _count_df(spark, n)
-    m = _CREATE_SEQ.match(text)
-    if m:
-        replace, name, opts = bool(m.group(1)), m.group(3), m.group(4) or ""
-        kw: dict = {"replace": replace, "temp": bool(m.group(2))}
-        # each sequence clause may appear at most once, counting the NO
-        # form (NO MAXVALUE MAXVALUE 2 / START 13 START WITH 3 both error)
-        for clause in ("MINVALUE", "MAXVALUE", "CYCLE", "START",
-                       "INCREMENT"):
-            if len(re.findall(rf"\b{clause}\b", opts, re.I)) > 1:
+def _drop_schema(spark: SparkSession, name: str, rest,
+                 flags: _DDLFlags) -> DataFrame:
+    members = [
+        k for k, t in ischema.TABLE_META.items()
+        if t["schema"] == name or k.startswith(name.lower() + "__")
+    ]
+    if members and not flags.cascade:
+        raise ValueError(f"DROP SCHEMA: schema {name} is not empty (use CASCADE)")
+    for k in ischema.drop_schema(name):
+        _MANAGED.pop(k, None)
+        spark.catalog.dropTempView(k)
+    return _count_df(spark, 0)
+
+
+def _create_sequence(spark: SparkSession, name: str, rest: "re.Match[str]",
+                     flags: _DDLFlags) -> DataFrame:
+    opts = rest["opts"]
+    kw: dict = {"replace": flags.replace, "temp": flags.temp}
+    # each sequence clause may appear at most once, counting the NO
+    # form (NO MAXVALUE MAXVALUE 2 / START 13 START WITH 3 both error)
+    for clause in ("MINVALUE", "MAXVALUE", "CYCLE", "START",
+                   "INCREMENT"):
+        if len(re.findall(rf"\b{clause}\b", opts, re.I)) > 1:
+            raise ValueError(f"Parser Error: {clause} should be passed at most once")
+    om = re.search(r"\bSTART\s+(?:WITH\s+)?(-?\d+)", opts, re.I)
+    if om:
+        kw["start"] = int(om.group(1))
+    om = re.search(r"\bINCREMENT\s+(?:BY\s+)?(-?\d+)", opts, re.I)
+    if om:
+        kw["increment"] = int(om.group(1))
+    om = re.search(r"\bMINVALUE\s+(-?\d+)", opts, re.I)
+    if om:
+        kw["minvalue"] = int(om.group(1))
+    om = re.search(r"\bMAXVALUE\s+(-?\d+)", opts, re.I)
+    if om:
+        kw["maxvalue"] = int(om.group(1))
+    if re.search(r"(?<!NO\s)\bCYCLE\b", opts, re.I):
+        kw["cycle"] = True
+    _seq_store().create(name, **kw)
+    return _count_df(spark, 0)
+
+
+def _drop_sequence(spark: SparkSession, name: str, rest,
+                   flags: _DDLFlags) -> DataFrame:
+    # dependency check (duckdb dependency manager): a table whose
+    # column DEFAULT calls nextval on this sequence blocks the drop
+    for tname, t in () if flags.cascade else _MANAGED.items():
+        for dexpr in t.defaults.values():
+            if re.search(rf"nextval\s*\(\s*'(?:\w+\.)?{re.escape(name)}'", str(dexpr), re.I):
                 raise ValueError(
-                    f"Parser Error: {clause} should be passed at most once"
+                    f'Dependency Error: Cannot drop entry "{name}" because there are '
+                    f'entries that depend on it. table "{tname}" depends on "{name}".'
                 )
-        om = re.search(r"\bSTART\s+(?:WITH\s+)?(-?\d+)", opts, re.I)
-        if om:
-            kw["start"] = int(om.group(1))
-        om = re.search(r"\bINCREMENT\s+(?:BY\s+)?(-?\d+)", opts, re.I)
-        if om:
-            kw["increment"] = int(om.group(1))
-        om = re.search(r"\bMINVALUE\s+(-?\d+)", opts, re.I)
-        if om:
-            kw["minvalue"] = int(om.group(1))
-        om = re.search(r"\bMAXVALUE\s+(-?\d+)", opts, re.I)
-        if om:
-            kw["maxvalue"] = int(om.group(1))
-        if re.search(r"(?<!NO\s)\bCYCLE\b", opts, re.I):
-            kw["cycle"] = True
-        if "IF NOT EXISTS" in text.upper() and name in _seq_store()._seqs:
-            return _count_df(spark, 0)
-        _seq_store().create(name, **kw)
-        return _count_df(spark, 0)
-    m = _DROP_SEQ.match(text)
-    if m:
-        if m.group(1) in _seq_store()._seqs:
-            # dependency check (duckdb dependency manager): a table whose
-            # column DEFAULT calls nextval on this sequence blocks the drop
-            if "CASCADE" not in text.upper():
-                for tname, t in _MANAGED.items():
-                    for dexpr in t.defaults.values():
-                        if re.search(
-                            rf"nextval\s*\(\s*'(?:\w+\.)?{re.escape(m.group(1))}'",
-                            str(dexpr), re.I,
-                        ):
-                            raise ValueError(
-                                f"Dependency Error: Cannot drop entry "
-                                f'"{m.group(1)}" because there are entries '
-                                f"that depend on it. table \"{tname}\" "
-                                f"depends on \"{m.group(1)}\"."
-                            )
-            _seq_store().drop(m.group(1))
-        elif "IF EXISTS" not in text.upper():
-            raise KeyError(f"unknown sequence: {m.group(1)}")
-        return _count_df(spark, 0)
-    m = _SEQ_VAL.match(text)
-    if m:
-        cols, vals = [], []
-        for cm in re.finditer(r"(next|curr)val\s*\(\s*'(\w+)'\s*\)\s*(?:AS\s+(\w+))?", m.group(1), re.I):
-            kind, sname, alias = cm.group(1).lower(), cm.group(2), cm.group(3)
-            seq = _seq_store().get(sname)
-            vals.append(seq.nextval() if kind == "next" else seq.currval())
-            cols.append(alias or f"{kind}val('{sname}')")
-        return _rows_df(spark, [tuple(vals)], ", ".join(f"`{c}` bigint" for c in cols))
-    m = _EXPORT_DB.match(text)
-    if m:
-        if not _MANAGED:
-            raise ValueError("EXPORT DATABASE: no managed tables to export")
-        storage.export_database(
-            spark, m.group(1), {n: t.scan() for n, t in _MANAGED.items()}
+    _seq_store().drop(name)
+    return _count_df(spark, 0)
+
+
+def _create_type(spark: SparkSession, name: str, rest: "re.Match[str]",
+                 flags) -> DataFrame:
+    key = name.lower()
+    d = rest["body"].strip()
+    em = re.match(r"ENUM\s*\(\s*(.*)\s*\)\s*$", d, re.I | re.S)
+    if em:
+        vals = [v.strip()[1:-1].replace("''", "'")
+                for v in _split_args(em.group(1)) if v.strip()]
+        from myduckdb_spark.functions.registry import create_enum
+
+        create_enum(name, vals)
+        ischema.TYPE_ALIASES[key] = "VARCHAR"
+    elif re.fullmatch(r"[\w ]+(\s*\(\s*\d+\s*(?:,\s*\d+\s*)?\))?"
+                      r"(\s*\[\s*\])*", d):
+        # simple alias (reference type_catalog_entry: CREATE TYPE x
+        # AS int32) — translate() rewrites ::x to the base spelling.
+        # Bit-width spellings normalize to DuckDB's name (INT32 →
+        # INTEGER), which every later rule knows.
+        ischema.TYPE_ALIASES[key] = (
+            typenames.canonical(d) if re.fullmatch(r"INT\d+", d, re.I)
+            else d
         )
-        return _count_df(spark, len(_MANAGED))
-    m = _IMPORT_DB.match(text)
-    if m:
-        return _count_df(spark, len(storage.import_database(spark, m.group(1))))
-    m = _ATTACH.match(text)
-    if m:
-        path, alias, opts = m.group(1), m.group(2), m.group(3) or ""
-        if not alias:
-            # default alias: the file stem (attached_database.cpp)
-            alias = re.sub(r"\.[^.]*$", "", os.path.basename(path)) or path
-        n = len(storage.attach(spark, path, alias))
-        if re.search(r"\bREAD_?ONLY\b", opts, re.I):
-            storage.attached_readonly()[alias] = True
-        return _count_df(spark, n)
-    m = _DETACH.match(text)
-    if m:
-        storage.detach(spark, m.group(1))
-        return _count_df(spark, 0)
-    return None
+    else:
+        raise ValueError(f"CREATE TYPE: unsupported type definition {d!r}")
+    return _count_df(spark, 0)
 
 
-_SET_STMT = re.compile(r"^\s*SET\s+(\w[\w.]*)\s*(?:=|TO)\s*(.+?)\s*;?\s*$", re.I)
+def _drop_type(spark: SparkSession, name: str, rest, flags) -> DataFrame:
+    ischema.TYPE_ALIASES.pop(name.lower(), None)
+    ischema.COMMENTS.pop(("type", name.lower()), None)
+    return _count_df(spark, 0)
+
+
+def _create_macro(spark: SparkSession, name: str, rest: "re.Match[str]",
+                  flags) -> DataFrame:
+    params, defaults = [], {}
+    for p in _split_args(rest["params"]):
+        p = p.strip()
+        if not p:
+            continue
+        dm = re.match(r"(\w+)\s*:?=\s*(.+)$", p, re.S)
+        if dm:
+            params.append(dm.group(1))
+            defaults[dm.group(1)] = dm.group(2).strip()
+        else:
+            params.append(p.strip('"'))
+    body = rest["body"].strip()
+    tm = re.match(r"TABLE\s+(.+)$", body, re.I | re.S)
+    if tm:
+        _macros.create_table_macro(name, params, tm.group(1))
+    else:
+        _macros.create_macro(name, params, body, **defaults)
+    return _count_df(spark, 0)
+
+
+def _drop_macro(spark: SparkSession, name: str, rest, flags) -> DataFrame:
+    _macros.drop_macro(name)
+    ischema.COMMENTS.pop(("macro", name.lower()), None)
+    ischema.COMMENTS.pop(("function", name.lower()), None)
+    return _count_df(spark, 0)
+
+
+def _index_key(name: str, rest: "re.Match[str]") -> str | None:
+    """The catalog key of index ``name``: on CREATE, prefixed by an
+    attached catalog table's flat schema (one index name per catalog and
+    schema, catalog/comment_on_extended.test); on DROP, the bare key or
+    the one qualified key ending in it."""
+    key = name.lower()
+    if "table" in rest.re.groupindex:
+        table = rest["table"]
+        cat, _sch, bare = _cat_schema_of(table)
+        if cat in ("memory", "temp"):
+            return key
+        return f"{table[: len(table) - len(bare) - 2]}__{key}".lower()
+    if key in ischema.INDEXES:
+        return key
+    cands = [k for k in ischema.INDEXES if k.rsplit("__", 1)[-1] == key]
+    return cands[0] if len(cands) == 1 else None
+
+
+def _create_index(spark: SparkSession, name: str, rest: "re.Match[str]",
+                  flags: _DDLFlags) -> DataFrame:
+    table, icols = rest["table"], rest["cols"]
+    tbl = _managed(table)
+    ischema.INDEXES[_index_key(name, rest)] = {
+        "table": table, "unique": flags.unique,
+        "columns": [c.strip().strip('"') for c in _split_args(icols)],
+    }
+    if flags.unique:
+        # a unique index is an ON CONFLICT arbiter + INSERT constraint
+        # (reference: ART index, physical_insert.cpp); non-unique
+        # indexes have no semantic effect in this engine (scan pruning
+        # is parquet zone maps) and are accepted as no-ops
+        cols = [
+            re.sub(r'^"(.*)"$', r"\1", c.strip())
+            for c in icols.split(",")
+        ]
+        if any(not re.fullmatch(r"\w+", c) for c in cols):
+            raise ValueError("CREATE UNIQUE INDEX: expression indexes unsupported")
+        tbl.add_unique(cols)
+    return _count_df(spark, 0)
+
+
+def _drop_index(spark: SparkSession, name: str, rest, flags) -> DataFrame:
+    ischema.INDEXES.pop(_index_key(name, rest))
+    return _count_df(spark, 0)  # unique sets are kept — conservative
+
+
+class _Kind(NamedTuple):
+    label: str  # the kind's name in DuckDB's catalog errors
+    exists: Callable[[str, "re.Match[str]"], bool]
+    rest: re.Pattern  # what follows the name in CREATE
+    create: Callable
+    drop: Callable
+
+
+_MACRO = (lambda n, r: n.lower() in {x.lower() for x in _macros.macro_names()},
+          _MACRO_REST, _create_macro, _drop_macro)
+_DDL_KINDS: dict[str, _Kind] = {
+    "TABLE": _Kind("Table", lambda n, r: n in _MANAGED, _TABLE_REST,
+                   _create_table, _drop_relation),
+    "VIEW": _Kind("View", lambda n, r: n.lower() in ischema.views(),
+                  _VIEW_REST, _create_view, _drop_relation),
+    "SCHEMA": _Kind("Schema", lambda n, r: n in ischema.SCHEMAS,
+                    re.compile(""), _create_schema, _drop_schema),
+    "SEQUENCE": _Kind("Sequence", lambda n, r: n in _seq_store()._seqs,
+                      _SEQUENCE_REST, _create_sequence, _drop_sequence),
+    "TYPE": _Kind("Type", lambda n, r: n.lower() in ischema.TYPE_ALIASES,
+                  _TYPE_REST, _create_type, _drop_type),
+    "MACRO": _Kind("Macro Function", *_MACRO),
+    "FUNCTION": _Kind("Macro Function", *_MACRO),
+    "MACRO TABLE": _Kind("Table Macro Function", *_MACRO),
+    "INDEX": _Kind("Index", lambda n, r: _index_key(n, r) in ischema.INDEXES,
+                   _INDEX_REST, _create_index, _drop_index),
+}
+
+
+_SET_STMT = re.compile(
+    r"^\s*SET\s+(?:(?:GLOBAL|SESSION|LOCAL)\s+)?(\w[\w.]*)\s*(?:=|TO)\s*(.+?)\s*;?\s*$",
+    re.I,
+)
 # USE db | USE schema | USE db.schema (reference: SET schema / catalog
 # sugar, src/parser/statement/set_statement.cpp USE path)
 _USE_STMT = re.compile(
     r"^\s*USE\s+(?:\"?(\w+)\"?\s*\.\s*)?\"?(\w+)\"?\s*;?\s*$", re.I,
 )
 _PRAGMA_TI = re.compile(r"^\s*PRAGMA\s+table_info\s*\(\s*'([\w.]+)'\s*\)\s*;?\s*$", re.I)
-_EXPLAIN = re.compile(r"^\s*EXPLAIN\s+(.*)$", re.I | re.S)
+_EXPLAIN = re.compile(r"^\s*EXPLAIN\s+(?!ANALYZE\b)(\S.*)$", re.I | re.S)
 
 
 _DESCRIBE_SEL = re.compile(
@@ -7999,11 +7955,13 @@ _DESCRIBE_SEL = re.compile(
     re.I | re.S,
 )
 _DESCRIBE_TBL = re.compile(
-    r'^\s*(?:DESCRIBE|SHOW)\s+(?:TABLE\s+)?("?)([\w ]+)\1\s*;?\s*$', re.I
+    r"^\s*(?:DESCRIBE|SHOW(?!\s+(?:TABLES|DATABASES|SCHEMAS|FUNCTIONS|VARIABLES|ALL)\b))"
+    r'\s+(?:TABLE\s+)?("?)([\w ]+)\1\s*;?\s*$',
+    re.I,
 )
-_DESCRIBE_ALL = re.compile(r"^\s*DESCRIBE\s*;?\s*$", re.I)
+_DESCRIBE_ALL = re.compile(r"^\s*(?:DESCRIBE|SHOW\s+ALL\s+TABLES)\s*;?\s*$", re.I)
 _SHOW_TABLES = re.compile(r"^\s*SHOW\s+TABLES\s*;?\s*$", re.I)
-_SHOW_ALL_TABLES = re.compile(r"^\s*SHOW\s+ALL\s+TABLES\s*;?\s*$", re.I)
+_SHOW_DATABASES = re.compile(r"^\s*SHOW\s+DATABASES\s*;?\s*$", re.I)
 
 _DESCRIBE_SCHEMA = (
     "column_name string, column_type string, null string, key string, "
@@ -8040,91 +7998,72 @@ def _columns(spark: SparkSession, name: str) -> list[dict]:
     return ischema.column_records(name, spark.table(name).schema.fields)
 
 
-def _describe_statement(spark: SparkSession, text: str) -> DataFrame | None:
-    """DESCRIBE / SHOW introspection (reference DescribeRelation /
-    duckdb_tables(): shell metadata surfaced as plain result sets —
-    column layout verified against live DuckDB):
+# DESCRIBE / SHOW introspection (reference DescribeRelation /
+# duckdb_tables()): shell metadata as plain result sets, in the column
+# layout of live DuckDB. DESCRIBE tbl and DESCRIBE SELECT … give one row
+# per column; DESCRIBE / SHOW ALL TABLES one row per table.
 
-    * ``DESCRIBE tbl`` / ``SHOW tbl``     → column_name, column_type,
-      null (YES/NO), key (PRI/UNI), default, extra
-    * ``DESCRIBE SELECT …`` / ``SHOW SELECT …`` → same shape, YES nulls
-    * ``DESCRIBE`` / ``SHOW ALL TABLES``  → database, schema, name,
-      column_names, column_types, temporary
-    * ``SHOW TABLES``                     → name (main schema)
-    """
-    from pyspark.sql import types as T
 
-    if _SHOW_TABLES.match(text):
-        return _rows_df(
-            spark,
-            sorted((m["name"],) for _n, m in _catalog_objects()
-                   if m["schema"] == "main" and m["catalog"] in ("memory", "temp")),
-            "name string",
-        )
-    if re.match(r"^\s*SHOW\s+DATABASES\s*;?\s*$", text, re.I):
-        return _rows_df(
-            spark,
-            sorted((r[0],) for r in ischema.database_rows() if not r[1]),
-            "database_name string",
-        )
-    if _DESCRIBE_ALL.match(text) or _SHOW_ALL_TABLES.match(text):
-        rows = []
-        for n, m in _catalog_objects():
-            cols = _columns(spark, n)
-            rows.append((
-                m["catalog"], m["schema"], m["name"],
-                [c["name"] for c in cols], [c["dtype"] for c in cols],
-                m["catalog"] == "temp",
-            ))
-        return _rows_df(
-            spark,
-            rows,
-            T.StructType(
-                [
-                    T.StructField("database", T.StringType()),
-                    T.StructField("schema", T.StringType()),
-                    T.StructField("name", T.StringType()),
-                    T.StructField(
-                        "column_names", T.ArrayType(T.StringType())
-                    ),
-                    T.StructField(
-                        "column_types", T.ArrayType(T.StringType())
-                    ),
-                    T.StructField("temporary", T.BooleanType()),
-                ]
-            ),
-        )
-    m = _DESCRIBE_SEL.match(text)
-    if m:
-        df = sql(spark, m.group(1))
-        # a carrier-erased declared type survives as COPY TO parquet's
-        # duck_type metadata, or on a bare column item of a FROM table
-        # (the typeof() bind); computed columns render the Spark type
-        declared, bare = _registry_declared(m.group(1)), _bare_items(m.group(1))
-        rows = []
-        for f in df.schema.fields:
-            dtype = f.metadata.get("duck_type")
-            if dtype not in _REGISTRY_BOUND:
-                src = bare.get(f.name.lower(), f.name.lower() if "*" in bare else None)
-                dtype = typenames.column_type(declared.get(src), f.dataType.simpleString())
-            rows.append((f.name, dtype, "YES", None, None, None))
-        return _rows_df(spark, rows, _DESCRIBE_SCHEMA)
-    m = _DESCRIBE_TBL.match(text)
-    if m and not re.match(
-        r"\s*SHOW\s+(TABLES|DATABASES|SCHEMAS|FUNCTIONS|VARIABLES|ALL)\b",
-        text, re.I,
-    ):
-        name = m.group(2).strip()
-        if name not in _MANAGED and name.lower() not in _MANAGED \
-                and not spark.catalog.tableExists(name):
-            raise ValueError(f"Table with name {name} does not exist!")
-        rows = [
-            (c["name"], c["dtype"], "YES" if c["nullable"] else "NO",
-             c["key"], c["default"], None)
-            for c in _columns(spark, name)
-        ]
-        return _rows_df(spark, rows, _DESCRIBE_SCHEMA)
-    return None
+def _show_tables(spark: SparkSession, m: "re.Match[str]") -> DataFrame:
+    return _rows_df(
+        spark,
+        sorted((o["name"],) for _n, o in _catalog_objects()
+               if o["schema"] == "main" and o["catalog"] in ("memory", "temp")),
+        "name string",
+    )
+
+
+def _show_databases(spark: SparkSession, m: "re.Match[str]") -> DataFrame:
+    return _rows_df(
+        spark,
+        sorted((r[0],) for r in ischema.database_rows() if not r[1]),
+        "database_name string",
+    )
+
+
+def _describe_all(spark: SparkSession, m: "re.Match[str]") -> DataFrame:
+    rows = []
+    for n, o in _catalog_objects():
+        cols = _columns(spark, n)
+        rows.append((
+            o["catalog"], o["schema"], o["name"],
+            [c["name"] for c in cols], [c["dtype"] for c in cols],
+            o["catalog"] == "temp",
+        ))
+    return _rows_df(
+        spark, rows, "database string, schema string, name string, "
+        "column_names array<string>, column_types array<string>, "
+        "temporary boolean",
+    )
+
+
+def _describe_select(spark: SparkSession, m: "re.Match[str]") -> DataFrame:
+    df = sql(spark, m.group(1))
+    # a carrier-erased declared type survives as COPY TO parquet's
+    # duck_type metadata, or on a bare column item of a FROM table
+    # (the typeof() bind); computed columns render the Spark type
+    declared, bare = _registry_declared(m.group(1)), _bare_items(m.group(1))
+    rows = []
+    for f in df.schema.fields:
+        dtype = f.metadata.get("duck_type")
+        if dtype not in _REGISTRY_BOUND:
+            src = bare.get(f.name.lower(), f.name.lower() if "*" in bare else None)
+            dtype = typenames.column_type(declared.get(src), f.dataType.simpleString())
+        rows.append((f.name, dtype, "YES", None, None, None))
+    return _rows_df(spark, rows, _DESCRIBE_SCHEMA)
+
+
+def _describe_table(spark: SparkSession, m: "re.Match[str]") -> DataFrame:
+    name = m.group(2).strip()
+    if name not in _MANAGED and name.lower() not in _MANAGED \
+            and not spark.catalog.tableExists(name):
+        raise ValueError(f"Table with name {name} does not exist!")
+    rows = [
+        (c["name"], c["dtype"], "YES" if c["nullable"] else "NO",
+         c["key"], c["default"], None)
+        for c in _columns(spark, name)
+    ]
+    return _rows_df(spark, rows, _DESCRIBE_SCHEMA)
 
 
 _IS_VIEWS = (
@@ -8293,8 +8232,6 @@ def _bind_duckdb_tvfs(spark: SparkSession, text: str) -> str:
     oracle. OIDs are synthetic but CONSISTENT across the views in one
     statement, so pg_description joins (classoid=database_oid AND
     objoid=<x>_oid, catalog/comment_on_pg_description.test) line up."""
-    from myduckdb_spark.functions import macros as _macros
-
     text = re.sub(r"\bpg_catalog\s*\.\s*pg_description\b",
                   "pg_description", text, flags=re.I)
     used = {
@@ -8499,7 +8436,7 @@ def _bind_duckdb_tvfs(spark: SparkSession, text: str) -> str:
 def _bind_describe_subqueries(spark: SparkSession, text: str) -> str:
     """``FROM (DESCRIBE …)`` / ``(SHOW …)`` — the reference treats
     introspection statements as table expressions (DescribeRelation is a
-    relation). Evaluate the inner statement via _describe_statement,
+    relation). Evaluate the inner statement through the statement table,
     register the result as a temp view, substitute the view name."""
     import hashlib
 
@@ -8515,7 +8452,7 @@ def _bind_describe_subqueries(spark: SparkSession, text: str) -> str:
             return text
         inner = text[m.start() + 1: close].strip()
         try:
-            df = _describe_statement(spark, inner)
+            df = _run_statement(spark, inner)
         except Exception:
             df = None
         if df is None:  # not an evaluable introspection statement
@@ -8524,136 +8461,6 @@ def _bind_describe_subqueries(spark: SparkSession, text: str) -> str:
         view = "__desc_" + hashlib.md5(inner.encode()).hexdigest()[:12]
         df.createOrReplaceTempView(view)
         text = text[: m.start()] + f"(SELECT * FROM {view})" + text[close + 1:]
-
-
-def _statement_command(spark: SparkSession, text: str) -> DataFrame | None:
-    """Client-config / introspection statements the reference serves from
-    its shell (SET: settings.cpp; PRAGMA table_info; EXPLAIN). Returns a
-    DataFrame result, or None if ``text`` is a plain query."""
-    m = _PREPARE.match(text)
-    if m:
-        _PREPARED[m.group(1).lower()] = m.group(2)
-        return _count_df(spark, 0)
-    m = _DEALLOCATE.match(text)
-    if m:
-        if _PREPARED.pop(m.group(1).lower(), None) is None:
-            raise KeyError(f"DEALLOCATE: unknown prepared statement {m.group(1)}")
-        return _count_df(spark, 0)
-    m = _USE_STMT.match(text)
-    if m:
-        q, name = m.group(1), m.group(2)
-        if q:  # USE db.schema
-            flat = _flat_schema_name(q, name)
-            if flat not in ischema.SCHEMAS and name.lower() != "main":
-                raise ValueError(
-                    f"Catalog Error: SET schema: No catalog + schema "
-                    f'named "{q}.{name}" found.'
-                )
-            SETTINGS["current_database"] = q
-            SETTINGS["search_path"] = "" if name.lower() == "main" else flat
-        elif name.lower() in ("memory", "temp") \
-                or name.lower() in _attached_lower():
-            SETTINGS["current_database"] = name
-            SETTINGS["search_path"] = ""
-        elif name in ischema.SCHEMAS:
-            SETTINGS["search_path"] = name
-        else:
-            raise ValueError(
-                f"Catalog Error: SET schema: No catalog + schema named "
-                f'"{name}" found.'
-            )
-        return _count_df(spark, 0)
-    m = _SET_STMT.match(text)
-    if m:
-        name, raw = m.group(1), m.group(2).strip().strip("'\"")
-        if name.lower() in ("default_null_order", "default_order"):
-            # session ordering defaults live in SETTINGS (translate()
-            # consults them for ORDER BY ALL and window null pinning)
-            SETTINGS[name.lower()] = raw.lower()
-            return _rows_df(
-                spark,
-                [(name, raw)], "name string, value string"
-            )
-        if name.lower() in ("search_path", "schema"):
-            inner = m.group(2).strip().strip("'")
-            if inner.count('"') % 2:
-                raise ValueError(
-                    "Parser Error: invalid quoted string list"
-                )
-            entries = [e.strip().strip('"').strip()
-                       for e in inner.split(",") if e.strip()]
-            if name.lower() == "schema" and len(entries) != 1:
-                raise ValueError(
-                    'Parser Error: SET schema expected a single entry'
-                )
-            entries = [
-                e.replace(".", "__")
-                if "." in e
-                and e.split(".")[0].lower() in _attached_lower()
-                else e
-                for e in entries
-            ]
-            for e in entries:
-                if e != "main" and e not in ischema.SCHEMAS:
-                    raise ValueError(
-                        f'Catalog Error: SET {name}: No catalog + schema '
-                        f'named "{e}" found.'
-                    )
-            SETTINGS["search_path"] = ",".join(entries)
-            return _rows_df(
-                spark,
-                [(name, ",".join(entries))], "name string, value string"
-            )
-        if name.lower() == "timezone":
-            # the reference's SET TimeZone drives naive<->instant casts;
-            # Spark's session timeZone is the same knob. The catalog's
-            # session pin keeps it (reset_dml_state restores the UTC
-            # default between corpus files)
-            from myduckdb_spark import catalog
-
-            spark.conf.set("spark.sql.session.timeZone", raw)
-            catalog.FRONT_DOOR_ZONE = raw
-            return _rows_df(
-                spark,
-                [(name, raw)], "name string, value string"
-            )
-        if "." in name:  # dotted → Spark conf (e.g. spark.sql.shuffle.partitions)
-            spark.conf.set(name, raw)
-        else:
-            from myduckdb_spark.config import set_option
-
-            set_option(name, raw)
-        return _rows_df(spark, [(name, raw)], "name string, value string")
-    d = _describe_statement(spark, text)
-    if d is not None:
-        return d
-    m = _PRAGMA_TI.match(text)
-    if m:
-        rows = [
-            (c["ordinal"] - 1, c["name"], c["dtype"], not c["nullable"],
-             c["default"], c["key"] == "PRI")
-            for c in _columns(spark, m.group(1))
-        ]
-        return _rows_df(
-            spark,
-            rows, "cid int, name string, type string, notnull boolean, "
-            "dflt_value string, pk boolean"
-        )
-    dml = _dml_statement(spark, text)
-    if dml is not None:
-        return dml
-    m = _EXPLAIN.match(text)
-    if m and not m.group(1).lstrip().upper().startswith("ANALYZE"):
-        plan = (
-            spark.sql(translate(m.group(1)))
-            ._jdf.queryExecution()
-            .explainString(spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-        )
-        return _rows_df(
-            spark,
-            [("physical_plan", plan)], "explain_key string, explain_value string"
-        )
-    return None
 
 
 _UNPIVOT_IN = re.compile(
@@ -9286,6 +9093,198 @@ def _bind_natural_joins(spark: SparkSession, text: str) -> str:
     return text
 
 
+# ---------------------------------------------------------------------------
+# The statement table. DuckDB's Transformer dispatches on the statement
+# type (transformer.cpp TransformStatementInternal); here sql() reads a
+# statement's first keyword once and tries only that keyword's rows, in
+# order. The first row whose pattern matches runs handler(spark, match);
+# a statement no row claims is a query, for _select_to_spark.
+# ---------------------------------------------------------------------------
+
+
+def _prepare(spark: SparkSession, m: "re.Match[str]") -> DataFrame:
+    _PREPARED[m.group(1).lower()] = m.group(2)
+    return _count_df(spark, 0)
+
+
+def _execute(spark: SparkSession, m: "re.Match[str]") -> DataFrame:
+    """EXECUTE rebinds the stored statement with these literal values and
+    runs it through the full front door (queries and DML)."""
+    stored = _PREPARED.get(m.group(1).lower())
+    if stored is None:
+        raise ValueError(
+            f'Binder Error: Prepared statement "{m.group(1)}" does not exist')
+    return sql(spark, _bind_prepared(stored, m.group(2)))
+
+
+def _deallocate(spark: SparkSession, m: "re.Match[str]") -> DataFrame:
+    if _PREPARED.pop(m.group(1).lower(), None) is None:
+        raise KeyError(f"DEALLOCATE: unknown prepared statement {m.group(1)}")
+    return _count_df(spark, 0)
+
+
+def _use(spark: SparkSession, m: "re.Match[str]") -> DataFrame:
+    q, name = m.group(1), m.group(2)
+    if q:  # USE db.schema
+        flat = _flat_schema_name(q, name)
+        if flat not in ischema.SCHEMAS and name.lower() != "main":
+            raise ValueError(
+                f"Catalog Error: SET schema: No catalog + schema "
+                f'named "{q}.{name}" found.'
+            )
+        SETTINGS["current_database"] = q
+        SETTINGS["search_path"] = "" if name.lower() == "main" else flat
+    elif name.lower() in ("memory", "temp") \
+            or name.lower() in _attached_lower():
+        SETTINGS["current_database"] = name
+        SETTINGS["search_path"] = ""
+    elif name in ischema.SCHEMAS:
+        SETTINGS["search_path"] = name
+    else:
+        raise ValueError(
+            f"Catalog Error: SET schema: No catalog + schema named "
+            f'"{name}" found.'
+        )
+    return _count_df(spark, 0)
+
+
+def _set(spark: SparkSession, m: "re.Match[str]") -> DataFrame:
+    """SET [GLOBAL|SESSION|LOCAL] name = value (reference settings.cpp).
+    Returns one (name, value) row."""
+    name, raw = m.group(1), m.group(2).strip().strip("'\"")
+    if name.lower() in ("default_null_order", "default_order"):
+        # session ordering defaults live in SETTINGS (translate()
+        # consults them for ORDER BY ALL and window null pinning)
+        SETTINGS[name.lower()] = raw.lower()
+    elif name.lower() in ("search_path", "schema"):
+        inner = m.group(2).strip().strip("'")
+        if inner.count('"') % 2:
+            raise ValueError("Parser Error: invalid quoted string list")
+        entries = [e.strip().strip('"').strip()
+                   for e in inner.split(",") if e.strip()]
+        if name.lower() == "schema" and len(entries) != 1:
+            raise ValueError('Parser Error: SET schema expected a single entry')
+        entries = [
+            e.replace(".", "__")
+            if "." in e
+            and e.split(".")[0].lower() in _attached_lower()
+            else e
+            for e in entries
+        ]
+        for e in entries:
+            if e != "main" and e not in ischema.SCHEMAS:
+                raise ValueError(
+                    f'Catalog Error: SET {name}: No catalog + schema '
+                    f'named "{e}" found.'
+                )
+        raw = ",".join(entries)
+        SETTINGS["search_path"] = raw
+    elif name.lower() == "timezone":
+        # the reference's SET TimeZone drives naive<->instant casts;
+        # Spark's session timeZone is the same knob. The catalog's
+        # session pin keeps it (reset_dml_state restores the UTC
+        # default between corpus files)
+        from myduckdb_spark import catalog
+
+        spark.conf.set("spark.sql.session.timeZone", raw)
+        catalog.FRONT_DOOR_ZONE = raw
+    elif "." in name:  # dotted → Spark conf (e.g. spark.sql.shuffle.partitions)
+        spark.conf.set(name, raw)
+    else:
+        from myduckdb_spark.config import set_option
+
+        set_option(name, raw)
+    return _rows_df(spark, [(name, raw)], "name string, value string")
+
+
+def _pragma_table_info(spark: SparkSession, m: "re.Match[str]") -> DataFrame:
+    rows = [
+        (c["ordinal"] - 1, c["name"], c["dtype"], not c["nullable"],
+         c["default"], c["key"] == "PRI")
+        for c in _columns(spark, m.group(1))
+    ]
+    return _rows_df(spark, rows, "cid int, name string, type string, "
+                    "notnull boolean, dflt_value string, pk boolean")
+
+
+def _explain(spark: SparkSession, m: "re.Match[str]") -> DataFrame:
+    plan = (
+        _select_to_spark(spark, m.group(1))[1]
+        ._jdf.queryExecution()
+        .explainString(spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    )
+    return _rows_df(spark, [("physical_plan", plan)],
+                    "explain_key string, explain_value string")
+
+
+class _Stmt(NamedTuple):
+    keyword: str  # the statement's first word; "A|B" for either
+    pattern: re.Pattern
+    handler: Callable[[SparkSession, "re.Match[str]"], DataFrame]
+
+
+_STATEMENTS: tuple[_Stmt, ...] = (
+    _Stmt("CREATE|DROP", _DDL_HEAD, _ddl),
+    _Stmt("ALTER", _ALTER, _alter_table),
+    _Stmt("INSERT", _INSERT, _insert),
+    _Stmt("UPDATE", _UPDATE, _update),
+    _Stmt("DELETE", _DELETE, _delete),
+    _Stmt("TRUNCATE", _TRUNCATE, _truncate),
+    _Stmt("COPY", _COPY, _copy_statement),
+    _Stmt("COMMENT", _COMMENT_ON, _comment_on),
+    _Stmt("BEGIN|START", _BEGIN, _txn_begin),
+    _Stmt("COMMIT", _COMMIT, _txn_commit),
+    _Stmt("ROLLBACK|ABORT", _ROLLBACK, _txn_rollback),
+    _Stmt("SELECT", _SEQ_VAL, _seq_val),
+    _Stmt("SET", _SET_STMT, _set),
+    _Stmt("USE", _USE_STMT, _use),
+    _Stmt("PRAGMA", _PRAGMA_TI, _pragma_table_info),
+    _Stmt("EXPLAIN", _EXPLAIN, _explain),
+    _Stmt("SHOW", _SHOW_TABLES, _show_tables),
+    _Stmt("SHOW", _SHOW_DATABASES, _show_databases),
+    _Stmt("DESCRIBE|SHOW", _DESCRIBE_ALL, _describe_all),
+    _Stmt("DESCRIBE|SHOW", _DESCRIBE_SEL, _describe_select),
+    _Stmt("DESCRIBE|SHOW", _DESCRIBE_TBL, _describe_table),
+    _Stmt("PREPARE", _PREPARE, _prepare),
+    _Stmt("EXECUTE", _EXECUTE, _execute),
+    _Stmt("DEALLOCATE", _DEALLOCATE, _deallocate),
+    _Stmt("EXPORT", _EXPORT_DB, _export_db),
+    _Stmt("IMPORT", _IMPORT_DB, _import_db),
+    _Stmt("ATTACH", _ATTACH, _attach),
+    _Stmt("DETACH", _DETACH, _detach),
+)
+
+
+def _index(entries) -> dict[str, list[_Stmt]]:
+    """Statement-table rows by first keyword, in table order."""
+    out: dict[str, list[_Stmt]] = {}
+    for e in entries:
+        for kw in e.keyword.split("|"):
+            out.setdefault(kw, []).append(e)
+    return out
+
+
+_BY_KEYWORD = _index(_STATEMENTS)
+_FIRST_WORD = re.compile(r"\s*([A-Za-z]+)")
+
+
+def _claim(text: str) -> tuple[_Stmt, "re.Match[str]"] | None:
+    """The first row of the statement table that claims ``text``, with
+    its match; None for a query."""
+    word = _FIRST_WORD.match(text)
+    for entry in _BY_KEYWORD.get(word.group(1).upper(), ()) if word else ():
+        m = entry.pattern.match(text)
+        if m:
+            return entry, m
+    return None
+
+
+def _run_statement(spark: SparkSession, text: str) -> DataFrame | None:
+    """Run ``text`` through the statement table; None if it is a query."""
+    hit = _claim(text)
+    return hit[0].handler(spark, hit[1]) if hit else None
+
+
 def sql(
     spark: SparkSession,
     text: str,
@@ -9318,21 +9317,15 @@ def sql(
         for p in parts:
             df = sql(spark, p, None, args)
         return df
-    m = _EXECUTE.match(text)
-    if m and m.group(1).lower() in _PREPARED:
-        # EXECUTE rebinds the stored statement with these literal values
-        # and runs it through the full front door (queries AND DML).
-        text = _bind_prepared(_PREPARED[m.group(1).lower()], m.group(2))
     text = _expand_columns_star(spark, text)
     text = _fix_unpivot_case(spark, text)
     rec = _recursive_union_distinct(spark, text)
     if rec is not None:
         return rec
-    if not re.match(r"\s*(CREATE|DROP)\s+SCHEMA\b", text, re.I):
-        text = _flatten_schema_refs(text)
-    cmd = _statement_command(spark, text)
-    if cmd is not None:
-        return cmd
+    text = _flatten_schema_refs(text)
+    df = _run_statement(spark, text)
+    if df is not None:
+        return df
     return _select_to_spark(spark, text, args)[1]
 
 
@@ -9356,15 +9349,11 @@ def _select_to_spark(spark: SparkSession, text: str,
     scans, translate, register the UDFs the Spark text names, and analyse
     it. Returns the Spark SQL text that analysed with its DataFrame;
     ``sql()`` runs the DataFrame and CREATE VIEW stores the text."""
-    if not re.match(r"\s*(CREATE|DROP|ALTER)\b", text, re.I):
-        text = _bind_information_schema(spark, text)
-        text = _bind_pg_catalog(spark, text)
-        text = _bind_duckdb_tvfs(spark, text)
-        if re.search(r"\(\s*(DESCRIBE|SHOW|SUMMARIZE)\b", text, re.I):
-            text = _bind_describe_subqueries(spark, text)
-            cmd = _statement_command(spark, text)
-            if cmd is not None:  # e.g. a bare parenthesized DESCRIBE
-                return text, cmd
+    text = _bind_information_schema(spark, text)
+    text = _bind_pg_catalog(spark, text)
+    text = _bind_duckdb_tvfs(spark, text)
+    if re.search(r"\(\s*(DESCRIBE|SHOW|SUMMARIZE)\b", text, re.I):
+        text = _bind_describe_subqueries(spark, text)
     text = _bind_file_scans(spark, text)
     if re.search(r"\bNATURAL\s+(?:LEFT\s+|RIGHT\s+|FULL\s+|INNER\s+|"
                  r"OUTER\s+)*JOIN\b", text, re.I):

@@ -245,3 +245,116 @@ def test_dml_counts_match_duckdb(spark, sf_dir):
         assert _rows(spark, q, sf_dir) == con.sql(q).fetchall()
     finally:
         S.sql(spark, "DROP TABLE IF EXISTS cnt_t")
+
+
+# ------------------------------------------------------------ dispatch
+
+# sample statements per statement-table handler
+_CLAIMS = {
+    "_ddl": ["CREATE TABLE t (i INTEGER)", "DROP VIEW IF EXISTS v"],
+    "_alter_table": ["ALTER TABLE t ADD COLUMN j INTEGER"],
+    "_insert": ["INSERT INTO t VALUES (1)"],
+    "_update": ["UPDATE t SET i = 2 WHERE i = 1"],
+    "_delete": ["DELETE FROM t WHERE i = 1"],
+    "_truncate": ["TRUNCATE t"],
+    "_copy_statement": ["COPY t TO 'out.csv' (HEADER)"],
+    "_comment_on": ["COMMENT ON TABLE t IS 'x'"],
+    "_txn_begin": ["BEGIN TRANSACTION", "START TRANSACTION"],
+    "_txn_commit": ["COMMIT"],
+    "_txn_rollback": ["ROLLBACK", "ABORT"],
+    "_seq_val": ["SELECT nextval('s') AS v"],
+    "_set": ["SET default_null_order = 'nulls_first'",
+             "SET GLOBAL default_null_order = 'nulls_first'"],
+    "_use": ["USE memory"],
+    "_pragma_table_info": ["PRAGMA table_info('t')"],
+    "_explain": ["EXPLAIN SELECT 1"],
+    "_show_tables": ["SHOW TABLES"],
+    "_show_databases": ["SHOW DATABASES"],
+    "_describe_all": ["DESCRIBE", "SHOW ALL TABLES"],
+    "_describe_select": ["DESCRIBE SELECT 1 AS a", "SHOW (SELECT 1)"],
+    "_describe_table": ["DESCRIBE t", "SHOW TABLE t"],
+    "_prepare": ["PREPARE p AS SELECT ?"],
+    "_execute": ["EXECUTE p(1)"],
+    "_deallocate": ["DEALLOCATE p"],
+    "_export_db": ["EXPORT DATABASE 'out'"],
+    "_import_db": ["IMPORT DATABASE 'out'"],
+    "_attach": ["ATTACH 'x.db' AS x"],
+    "_detach": ["DETACH x"],
+}
+# one sample per CREATE / DROP kind
+_KINDS = {
+    "TABLE": "CREATE TEMP TABLE IF NOT EXISTS t AS SELECT 1",
+    "VIEW": "CREATE OR REPLACE VIEW v (a) AS SELECT 1",
+    "SCHEMA": "DROP SCHEMA IF EXISTS s CASCADE",
+    "SEQUENCE": "CREATE SEQUENCE s START 3",
+    "TYPE": "CREATE TYPE ty AS INTEGER",
+    "MACRO": "CREATE MACRO m(x) AS x + 1",
+    "FUNCTION": "DROP FUNCTION f",
+    "MACRO TABLE": "DROP MACRO TABLE tm",
+    "INDEX": "CREATE UNIQUE INDEX ix ON t (i)",
+}
+_QUERIES = ["SELECT 1", "WITH a AS (SELECT 1) SELECT * FROM a", "VALUES (1)",
+            "FROM t", "(SELECT 1)", "SHOW FUNCTIONS", "EXPLAIN ANALYZE SELECT 1"]
+
+
+def test_statement_table_claims_each_sample():
+    """Each sample is claimed by its row, every row and every DDL kind
+    has a sample (a row no sample reaches fails), and a query is claimed
+    by none. No Spark is needed: dispatch reads only the text."""
+    reached = set()
+    for handler, samples in _CLAIMS.items():
+        for text in samples:
+            entry, _m = S._claim(text)
+            assert entry.handler.__name__ == handler, text
+            reached.add(entry)
+    assert reached == set(S._STATEMENTS)
+    for kind, text in _KINDS.items():
+        entry, m = S._claim(text)
+        assert entry.handler is S._ddl
+        assert " ".join(m["kind"].upper().split()) == kind, text
+    assert set(_KINDS) == set(S._DDL_KINDS)
+    for text in _QUERIES:
+        assert S._claim(text) is None, text
+
+
+class _Counted:
+    def __init__(self, pattern, calls):
+        self.pattern, self.calls = pattern, calls
+
+    def match(self, text):
+        self.calls.append(self)
+        return self.pattern.match(text)
+
+
+def test_query_tries_only_select_rows(monkeypatch):
+    """A query is tested only against the SELECT-keyed rows (nextval /
+    currval), never against a DDL or DML pattern."""
+    calls = []
+    counted = [e._replace(pattern=_Counted(e.pattern, calls)) for e in S._STATEMENTS]
+    monkeypatch.setattr(S, "_BY_KEYWORD", S._index(counted))
+    select_rows = {id(e.pattern) for e in counted if e.keyword == "SELECT"}
+    for text, tries in [("SELECT 1", len(select_rows)), ("WITH a AS (SELECT 1) "
+                        "SELECT * FROM a", 0), ("VALUES (1)", 0), ("FROM t", 0)]:
+        calls.clear()
+        assert S._claim(text) is None
+        assert len(calls) == tries, text
+        assert {id(c) for c in calls} <= select_rows
+
+
+@pytest.mark.parametrize("text", [
+    "CREATE OR REPLACE VIEW IF NOT EXISTS v AS SELECT 1",
+    "CREATE TABLE IF EXISTS t (i INTEGER)",
+    "DROP TABLE IF NOT EXISTS t",
+    "DROP TEMP TABLE t",
+    "CREATE UNIQUE VIEW v AS SELECT 1",
+    "CREATE TABLE",
+    "CREATE TABLE t",
+    "CREATE VIEW v",
+    "DROP VIEW v w",
+])
+def test_unparsable_ddl_is_a_parser_error(text):
+    """A CREATE or DROP of a known kind that its row cannot parse is a
+    Parser Error, raised before any catalog lookup; it never reaches
+    Spark's own DDL."""
+    with pytest.raises(ValueError, match="^Parser Error"):
+        S._run_statement(None, text)

@@ -180,6 +180,32 @@ def test_set_spark_conf(spark):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
+@pytest.mark.parametrize("scope", ["", "GLOBAL "])
+@pytest.mark.parametrize("query", [
+    "SELECT x FROM (VALUES (2), (NULL), (1)) t(x) ORDER BY x",
+    "SELECT x FROM (VALUES (2), (NULL), (1)) t(x) ORDER BY ALL DESC",
+])
+def test_set_default_null_order_matches_duckdb(spark, scope, query):
+    """SET with or without a scope keyword sets the session null order
+    and returns the same (name, value) row; NULLs then sort where
+    DuckDB puts them."""
+    import duckdb
+
+    from myduckdb_spark.sql import SETTINGS
+
+    stmt = f"SET {scope}default_null_order = 'nulls_first'"
+    con = duckdb.connect()
+    con.execute(stmt)
+    try:
+        out = [tuple(r) for r in sql(spark, stmt).collect()]
+        assert out == [("default_null_order", "nulls_first")]
+        assert SETTINGS["default_null_order"] == "nulls_first"
+        assert [tuple(r) for r in sql(spark, query).collect()] == \
+            con.execute(query).fetchall()
+    finally:
+        sql(spark, "SET default_null_order = 'nulls_last'")
+
+
 def test_set_unknown_option_raises(spark):
     with pytest.raises(KeyError):
         sql(spark, "SET not_a_real_option = 1")

@@ -768,3 +768,121 @@ def test_view_column_list_after_drop_and_add_errors_on_use(spark):
         run_sql(spark, "SELECT * FROM w_dz").collect()
     for s in ("DROP VIEW w_dz", "DROP TABLE t_dz"):
         run_sql(spark, s)
+
+
+def _outcome(run):
+    """The rows a statement returns, or "error" if it raises. A DDL
+    statement's empty result reads as DuckDB's: no rows."""
+    try:
+        rows = [tuple(r) for r in run()]
+    except Exception:
+        return "error"
+    return [] if rows == [(0,)] else rows
+
+
+_EXQ_TABLES = ("SELECT table_catalog, table_name, table_type"
+               " FROM information_schema.tables"
+               " WHERE table_name LIKE 'exq%' ORDER BY ALL")
+
+
+@pytest.mark.parametrize("stmts, checks, teardown", [
+    pytest.param(
+        ["CREATE TABLE IF NOT EXISTS exq_c AS SELECT i FROM exq_t",
+         "CREATE TABLE IF NOT EXISTS exq_c AS SELECT j FROM exq_t"],
+        ["SELECT * FROM exq_c ORDER BY ALL", _EXQ_TABLES],
+        ["DROP TABLE exq_c"], id="ctas_if_not_exists"),
+    pytest.param(
+        ["CREATE TEMP TABLE IF NOT EXISTS exq_tt AS SELECT 1 AS x",
+         "CREATE TEMP TABLE IF NOT EXISTS exq_tt AS SELECT 2 AS x"],
+        ["SELECT * FROM exq_tt", _EXQ_TABLES],
+        ["DROP TABLE exq_tt"], id="temp_ctas_if_not_exists"),
+    pytest.param(
+        ["CREATE MACRO IF NOT EXISTS exq_m(x) AS x + 1",
+         "CREATE MACRO IF NOT EXISTS exq_m(x) AS x + 2",
+         "CREATE MACRO exq_m(x) AS x + 3"],
+        ["SELECT exq_m(1) AS v"],
+        ["DROP MACRO exq_m"], id="macro_if_not_exists"),
+    pytest.param(
+        ["CREATE VIEW exq_v AS SELECT i FROM exq_t",
+         "CREATE VIEW IF NOT EXISTS exq_v AS SELECT j FROM exq_t",
+         "CREATE VIEW exq_v AS SELECT j FROM exq_t"],
+        ["SELECT * FROM exq_v ORDER BY ALL", _EXQ_TABLES],
+        ["DROP VIEW exq_v"], id="view_if_not_exists"),
+    pytest.param(
+        ["CREATE INDEX exq_ix ON exq_t (i)",
+         "CREATE UNIQUE INDEX IF NOT EXISTS exq_ix ON exq_t (j)",
+         "CREATE INDEX exq_ix ON exq_t (j)",
+         "INSERT INTO exq_t VALUES (5, 2)"],
+        ["SELECT * FROM exq_t ORDER BY ALL",
+         "SELECT index_name, table_name, is_unique FROM duckdb_indexes()"
+         " WHERE index_name LIKE 'exq%'"],
+        ["DROP INDEX exq_ix"], id="unique_index_if_not_exists"),
+    pytest.param(
+        ["DROP INDEX exq_nope", "DROP INDEX IF EXISTS exq_nope",
+         "DROP TABLE exq_nope", "DROP SEQUENCE exq_nope"],
+        [], [], id="drop_missing"),
+    pytest.param(
+        ["CREATE VIEW exq_v2 AS SELECT 1 AS a",
+         "DROP VIEW IF EXISTS exq_v2 RESTRICT",
+         "DROP VIEW IF EXISTS exq_v2 CASCADE"],
+        [_EXQ_TABLES], [], id="drop_view_restrict"),
+    pytest.param(
+        ["CREATE OR REPLACE VIEW IF NOT EXISTS exq_v3 AS SELECT 1 AS a",
+         "CREATE OR REPLACE TABLE IF NOT EXISTS exq_t3 (i INTEGER)"],
+        [_EXQ_TABLES], [], id="or_replace_if_not_exists"),
+])
+def test_existence_clauses_match_duckdb(spark, stmts, checks, teardown):
+    """IF [NOT] EXISTS and OR REPLACE follow DuckDB for every catalog
+    kind: each statement returns what DuckDB returns or raises where it
+    raises, and the catalog state read back afterwards is the same."""
+    con = duckdb.connect()
+    setup = ["CREATE OR REPLACE TABLE exq_t(i INTEGER, j INTEGER)",
+             "INSERT INTO exq_t VALUES (1, 2), (3, 4)"]
+    try:
+        _dual(spark, con, setup)
+        for s in stmts + checks:
+            want = _outcome(lambda: con.execute(s).fetchall())
+            assert _outcome(lambda: run_sql(spark, s).collect()) == want, s
+        for s in teardown:
+            _dual(spark, con, [s])
+    finally:
+        run_sql(spark, "DROP TABLE IF EXISTS exq_t")
+
+
+_QB_BODIES = {
+    "information_schema": ("(table_name VARCHAR)",
+                           "SELECT table_name FROM information_schema.tables"
+                           " WHERE table_name = 'qb_src'"),
+    "on_demand_udf": ("(i INTEGER, sim DOUBLE)",
+                      "SELECT i, round(jaro_winkler_similarity(s, 'marhta'), 6)"
+                      " AS sim FROM qb_src"),
+    "alias_in_where": ("(k INTEGER)", "SELECT i AS k FROM qb_src WHERE k > 1"),
+}
+
+
+@pytest.mark.parametrize("form", ["ctas", "insert", "explain"])
+@pytest.mark.parametrize("body", list(_QB_BODIES))
+def test_query_body_runs_the_query_step(spark, form, body):
+    """A query inside CTAS, INSERT … SELECT or EXPLAIN binds as the same
+    query does alone: the catalog binders, the on-demand UDFs and the
+    select-list alias retry all apply."""
+    cols, query = _QB_BODIES[body]
+    con = duckdb.connect()
+    setup = ["CREATE OR REPLACE TABLE qb_src(i INTEGER, s VARCHAR)",
+             "INSERT INTO qb_src VALUES (1, 'martha'), (2, 'dixon'), (3, 'x')"]
+    try:
+        _dual(spark, con, setup)
+        if form == "explain":
+            out = run_sql(spark, f"EXPLAIN {query}").collect()
+            assert out[0]["explain_key"] == "physical_plan"
+            return
+        stmts = ([f"CREATE OR REPLACE TABLE qb_out AS {query}"] if form == "ctas"
+                 else [f"CREATE OR REPLACE TABLE qb_out {cols}",
+                       f"INSERT INTO qb_out {query}"])
+        _dual(spark, con, stmts)
+        got = [tuple(r) for r in run_sql(spark, "SELECT * FROM qb_out ORDER BY ALL").collect()]
+        assert got == con.sql("SELECT * FROM qb_out ORDER BY ALL").fetchall()
+        assert got
+    finally:
+        run_sql(spark, "DROP TABLE IF EXISTS qb_out")
+        run_sql(spark, "DROP TABLE IF EXISTS qb_src")

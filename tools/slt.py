@@ -550,7 +550,7 @@ def run_file(spark, path: str, con=None, strict: bool = False, max_queries: int 
     con = con if con is not None else duckdb.connect()
     res = RunResult()
     dirty = True
-    from myduckdb_spark.sql import SETTINGS, _SET_SETTING
+    from myduckdb_spark.sql import _SET_STMT, SETTINGS
 
     SETTINGS["default_null_order"] = "nulls_last"  # fresh-connection default
     try:
@@ -567,9 +567,10 @@ def run_file(spark, path: str, con=None, strict: bool = False, max_queries: int 
         if rec.kind in ("statement_ok", "statement_maybe"):
             if re.match(r"\s*PRAGMA", rec.sql, re.I):
                 continue  # engine pragmas (enable_verification) are no-ops here
-            sm = _SET_SETTING.match(rec.sql)
-            if sm:  # semantic session settings apply to BOTH engines
-                SETTINGS[sm.group(1).lower()] = sm.group(2).lower()
+            sm = _SET_STMT.match(rec.sql)
+            if sm and sm.group(1).lower() in ("default_null_order", "default_order"):
+                # semantic session settings apply to BOTH engines
+                SETTINGS[sm.group(1).lower()] = sm.group(2).strip("'\"").lower()
             tm = re.match(
                 r"^\s*SET\s+TimeZone\s*=\s*'([^']+)'\s*;?\s*$", rec.sql, re.I
             )
@@ -692,7 +693,7 @@ def run_file(spark, path: str, con=None, strict: bool = False, max_queries: int 
 # Dual-state DML runner: the reference's insert/update/delete/upsert test
 # dirs exercise STORAGE, so unlike run_file (state lives in DuckDB only,
 # snapshotted into Spark views) every statement here runs through BOTH
-# engines — ours via the storage front door (sql.py _dml_statement over
+# engines — ours via the storage front door (sql.py's statement table over
 # storage.ManagedTable) and DuckDB — and every query compares each
 # engine's OWN state. When the engines diverge on a statement (e.g.
 # BEGIN/ROLLBACK: transactions are declared out of scope), the engine
